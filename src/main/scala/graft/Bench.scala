@@ -1,30 +1,8 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      // the cluster-deployment config: measured plans get the TopKPerKey
-      // rewrite + graft_* functions, exactly as spark-submit would
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      // Spark's generated-class cache holds 100 entries by default — a
-      // multi-query session (456-key inventory here; any production
-      // dashboard/report session elsewhere) evicts the whole cache many
-      // times over per pass, so EVERY query re-runs janino on EVERY
-      // invocation. The cache is driver-side (a few KB of class bytes per
-      // entry); 4096 entries is tens of MB and is not a function of data
-      // scale, so the same value is right on a cluster. Static conf —
-      // must be set at session build. Env-overridable for A/B runs.
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "4096"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.builder().getOrCreate()
     // JVM/codegen warmup so the first measured query doesn't absorb
     // classloading + first-codegen cost (it would otherwise dominate its
     // own timing by ~2s regardless of which query runs first). The parquet

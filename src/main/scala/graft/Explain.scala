@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: print the formatted physical plan of one or more query keys —
   * the feedback loop for the scale discipline (check PushedFilters /
   * ReadSchema / join strategies / WholeStageCodegen spans).
@@ -11,17 +9,7 @@ import org.apache.spark.sql.SparkSession
 object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      // deployed-parity: show the plans Bench/Verify actually measure
-      // (TopKRewrite + graft_* functions), not the vanilla-session ones
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.builder().getOrCreate()
     val keys =
       if (args.drop(1).isEmpty || args(1) == "all") SparkEntry.queries.keys.toSeq.sorted
       else args.drop(1).toSeq

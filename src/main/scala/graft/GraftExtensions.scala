@@ -12,7 +12,7 @@ import graft.functions.DotProduct
   *
   * {{{
   *   spark-submit --conf spark.sql.extensions=graft.GraftExtensions ...
-  *   // or: SparkSession.builder().withExtensions(new GraftExtensions)
+  *   // or, in process: graft.GraftSession.builder().getOrCreate()
   * }}}
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Synthetic scale-up: inflate an SF directory ~N× by unioning N
@@ -37,14 +37,7 @@ object Inflate {
   def main(args: Array[String]): Unit = {
     val (src, out) = (args(0), args(1))
     val n = if (args.length > 2) args(2).toInt else 10
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.builder().getOrCreate()
 
     def copies(base: DataFrame)(remap: (DataFrame, Int) => DataFrame): DataFrame =
       (0 until n).map(i => remap(base, i)).reduce(_.unionByName(_))

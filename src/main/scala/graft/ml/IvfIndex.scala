@@ -1,7 +1,6 @@
 package graft.ml
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.operators.DedupOps.dot
 
@@ -253,9 +252,10 @@ object IvfIndex {
   // [[search]]/[[simSearchIvf]]/[[simSearchIvfServe]], pinned row-for-row
   // in IvfIndexSpec. IVF floor = 3/10 (round 12): at nprobe=4 of 16
   // cells recall@10 measured 4/5/6/9 across sf0.001/0.01/0.1/sf≈1
-  // (BoundProbe), so floor = obs_min − 1 — it BINDS (a cell-assignment
-  // bug degrading recall below 4 now fails the DuckDB gate, where the
-  // old nprobe=2 floor of 1 only caught total collapse).
+  // (BASELINE.md, "ANN recall floors re-sized"), so floor = obs_min − 1
+  // — it BINDS (a cell-assignment bug degrading recall below 4 now fails
+  // the DuckDB gate, where the old nprobe=2 floor of 1 only caught total
+  // collapse).
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "sim_search_ivf" -> ((s: SparkSession, d: String) =>
       graft.operators.SimilarityOps.annInvariant(s, d,

@@ -469,10 +469,10 @@ object PqIndex {
   // Driver-contract keys return the annInvariant summary (round 11) so
   // the trained indexes meet the DuckDB gate; the search surfaces are the
   // functions above, pinned row-for-row in PqIndexSpec. Floors =
-  // obs_min − 1 from the round-12 BoundProbe sweep over all four gate
-  // scales: PQ exact-rerank stays 10/10 everywhere (floor 9 — one
-  // borderline-rank swap of headroom); IVF-PQ's nprobe-pruned shortlist
-  // measured 7/7/5/9 (floor 4).
+  // obs_min − 1 from the round-12 recall sweep over all four gate scales
+  // (BASELINE.md, "ANN recall floors re-sized"): PQ exact-rerank stays
+  // 10/10 everywhere (floor 9 — one borderline-rank swap of headroom);
+  // IVF-PQ's nprobe-pruned shortlist measured 7/7/5/9 (floor 4).
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "sim_search_pq" -> ((s: SparkSession, d: String) =>
       graft.operators.SimilarityOps.annInvariant(s, d,

@@ -43,13 +43,6 @@ object MiningOps {
         col("value"), unix_micros(col("ts")).as("us"),
         to_date(col("ts")).as("day"))
 
-  /** Distinct (order, part) basket relation shared by assoc_rules and
-    * graph_triangles. */
-  private def baskets(spark: SparkSession, dir: String): DataFrame =
-    Tables.lineitem(spark, dir)
-      .select(col("l_orderkey").as("o"), col("l_partkey").as("p"))
-      .distinct()
-
   // ── market-basket association rules: for every part pair co-occurring
   // in ≥ 2 orders, support count, directional confidences, and lift.
   // Pair generation joins the basket relation with itself ON THE ORDER

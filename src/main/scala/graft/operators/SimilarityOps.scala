@@ -119,8 +119,9 @@ object SimilarityOps {
     *    not real cosines;
     *  - `recall_ok`: ≥ `minOverlap` of the k results are in the
     *    brute-force top-k, counted over DISTINCT matched ids. Floors are
-    *    per-family at obs_min − 1 from the round-12 BoundProbe sweep
-    *    across sf0.001/0.01/0.1/sf≈1: IVF at nprobe=4/16 measured
+    *    per-family at obs_min − 1 from the round-12 recall sweep
+    *    (BASELINE.md, "ANN recall floors re-sized") across
+    *    sf0.001/0.01/0.1/sf≈1: IVF at nprobe=4/16 measured
     *    4/5/6/9 — floor 3; PQ rescoring stays 10/10 — floor 9; IVF-PQ
     *    measured 7/7/5/9 — floor 4. The informative recall EVALUATION
     *    lives in eval_ann_recall (oracled) and the Ivf/Pq specs; this

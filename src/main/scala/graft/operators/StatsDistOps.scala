@@ -1,8 +1,7 @@
 package graft.operators
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.functions.GramMatrixAgg
 import graft.sources.Tables
 
 /** Distribution shape, inequality, histograms, privacy and data-quality reports — one of the [[StatsOps]] family traits (split from

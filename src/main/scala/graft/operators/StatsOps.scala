@@ -1,10 +1,5 @@
 package graft.operators
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.functions._
-import graft.functions.GramMatrixAgg
-import graft.sources.Tables
-
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Statistical / time-series operators: the numeric-analysis layer the
   * reference's dashboard (`/root/reference/app.py:80-84` recomputes

@@ -2,7 +2,6 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.functions.GramMatrixAgg
 import graft.sources.Tables
 
 /** Shared devices of the [[StatsOps]] family traits: table loaders,

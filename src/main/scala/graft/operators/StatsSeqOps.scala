@@ -238,7 +238,6 @@ private[operators] trait StatsSeqOps extends StatsOpsBase {
     val counts = e.join(broadcast(edges), "event_type")
       .groupBy(col("event_type"), col("is_ref"), bucket.as("b"))
       .agg(count(lit(1)).as("c"))
-    val tot = Window.partitionBy(col("event_type"), col("is_ref"))
     // dense (type, bucket) grid so buckets empty on ONE side still pair
     val grid = counts.select(col("event_type")).distinct()
       .crossJoin(spark.range(0, 10).select(col("id").cast("int").as("b")))

@@ -1,9 +1,7 @@
 package graft.operators
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.functions.GramMatrixAgg
-import graft.sources.Tables
 
 /** Hypothesis tests, effect sizes and confidence intervals — one of the [[StatsOps]] family traits (split from
   * the former single-file StatsOps with zero behavior change;

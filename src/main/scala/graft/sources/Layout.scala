@@ -17,11 +17,15 @@ object Layout {
 
   /** Write events day-partitioned and sorted by (event_type, ts) within
     * each file. `repartition` by the partition column keeps one writer task
-    * per day (no small-file explosion — the classic partitionBy footgun). */
+    * per day (no small-file explosion — the classic partitionBy footgun).
+    * The explicit partition count keeps AQE from coalescing the small
+    * shuffle into one task, which would write every day on one core. */
   def writeEventsByDay(events: DataFrame, path: String): Unit =
     events
       .withColumn("day", to_date(col("ts")))
-      .repartition(col("day"))
+      .repartition(
+        events.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt,
+        col("day"))
       // the writer REQUIRES ordering to start with the partition column;
       // leading with (event_type, ts) alone would make Spark insert its own
       // day-sort on top, wasting the first sort and leaving the within-file

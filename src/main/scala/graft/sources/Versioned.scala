@@ -2,7 +2,6 @@ package graft.sources
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 
 /** Minimal snapshot-versioned parquet store: manifest-pointer time travel.
   *

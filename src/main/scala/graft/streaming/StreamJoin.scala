@@ -23,8 +23,6 @@ import graft.sources.Tables
   */
 object StreamJoin {
 
-  private val LagUs = 30L * 60 * 1000000 // attribution window: 30 min
-
   /** Purchase↔click pairs within the attribution window. Both inputs need
     * (user_id, event_id, ts); works on batch or streaming frames. */
   def pairs(purchases: DataFrame, clicks: DataFrame): DataFrame = {

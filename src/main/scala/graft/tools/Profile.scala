@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev profiler: split one key's wall time into DataFrame construction +
   * analysis, optimize+physical-planning, and execution, per iteration.
   * The split tells a regression hunt whether time went to Catalyst (rule
@@ -14,15 +12,7 @@ object Profile {
     val keys = args(0).split(",") // one key, or several in one JVM/session
     val iters = if (args.length > 1) args(1).toInt else 6
     val sfDir = if (args.length > 2) args(2) else "/root/testdata/sf0.1"
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.builder().getOrCreate()
     // GRAFT_DEBUG_JOBS=1: per-job wall time + inter-job driver gap — the
     // split that tells construction-time driver loops (fit/train/rounds)
     // where their fixed cost per tiny job goes

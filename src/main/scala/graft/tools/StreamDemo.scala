@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.streaming.{IngestPipeline, KafkaWire}
 
@@ -50,15 +50,7 @@ object StreamDemo {
     val latest = s"$base/latest"      // the engine's upsert upgrade
     new java.io.File(spool).mkdirs()
 
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    import spark.implicits._
+    val spark = graft.GraftSession.builder().getOrCreate()
 
     // ── 1. the poll loop: 3 cycles, 15 min apart, one spool file per
     // cycle (producer.py polls every city per cycle and sends each

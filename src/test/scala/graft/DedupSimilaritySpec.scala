@@ -198,16 +198,17 @@ class DedupSimilaritySpec extends SparkSuite {
       $"p_name".as("name"))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy($"dirty_id").orderBy(desc("score"), $"clean_id")
-    val naive = dirty.join(clean,
+    val naive = windowReference(dirty.join(clean,
         substring($"dname", 1, 2) === substring($"name", 1, 2) &&
           abs(length($"dname") - length($"name")) <= 2)
       .select($"dirty_id", $"clean_id",
         (round(graft.functions.JaroWinkler($"dname", $"name"), 6)
           + lit(0.0d)).as("score"))
       .filter($"score" >= 0.9)
-      .withColumn("rn", row_number().over(w)).filter($"rn" === 1)
-      .select($"dirty_id", $"clean_id", $"score")
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
+      .withColumn("rn", row_number().over(w))
+      .filter($"rn" <= 1 && $"rn" > 0)
+      .select($"dirty_id", $"clean_id", $"score"))
+      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
       .sortBy(_._1)
     assert(out.toSeq === naive.toSeq)
   }

@@ -8,7 +8,6 @@ import graft.operators.Eager
   * round 9. Each test guards a behavior that a Spark upgrade or a
   * refactor of GraftSqlBridge could silently break. */
 class EagerSpec extends SparkSuite {
-  import spark.implicits._
 
   test("an Eager frame can be SELF-UNIONED (originConstraints stripped)") {
     // Dataset.localCheckpoint copies the pre-checkpoint plan's

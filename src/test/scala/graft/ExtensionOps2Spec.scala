@@ -84,7 +84,6 @@ class ExtensionOps2Spec extends SparkSuite {
 
   test("bounded_distinct: exact under cap, null past cap, across partitions") {
     import spark.implicits._
-    import org.apache.spark.sql.functions._
     // key "big" has 12 distinct values, "small" has 3, "dup" has 1 (many dups)
     val rows = (1 to 12).map(i => ("big", i.toLong)) ++
       Seq(("small", 1L), ("small", 2L), ("small", 3L)) ++

@@ -1,25 +1,21 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.funsuite.AnyFunSuite
+/** graft_dot and the other graft_* functions registered via
+  * SparkSessionExtensions are callable from SQL on the shared session. */
+class GraftExtensionsSpec extends SparkSuite {
 
-/** graft_dot registered via SparkSessionExtensions is callable from SQL.
-  * Own session (not SparkSuite's): extensions bind at builder time. */
-class GraftExtensionsSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = {
-    // getOrCreate would return another suite's session and silently skip
-    // the extensions; clear the handles so the builder makes a fresh
-    // session (reusing the JVM's single SparkContext is fine)
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    SparkSession.builder()
-      .master("local[2]")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .withExtensions(new GraftExtensions)
-      .getOrCreate()
+  test("the shared suite session is the engine's GraftSession") {
+    // every suite runs on this session; a builder that drifts from the one
+    // Bench and Verify measure fails here instead of silently
+    assert(spark.sql("SELECT graft_dot(array(2.0D), array(3.0D))")
+      .head().getDouble(0) === 6.0)
+    val state = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sessionState
+    assert(state.optimizer.batches.flatMap(_.rules)
+      .contains(graft.plans.TopKRewriteRule))
+    assert(spark.conf.get("spark.sql.codegen.cache.maxEntries") === "4096")
+    assert(spark.conf.get("spark.sql.session.timeZone") === "UTC")
+    assert(spark.conf.get("spark.sql.legacy.parquet.nanosAsLong") === "true")
   }
 
   test("SELECT graft_dot(...) works like a built-in") {
@@ -206,7 +202,6 @@ class GraftExtensionsSpec extends AnyFunSuite {
     // set-equality with the un-rewritten window computation on the events
     // table (rank consumed AND not consumed), with a repartitioned input
     // so the partial stage genuinely merges across partitions
-    import org.apache.spark.sql.functions._
     val ev = graft.sources.Tables.events(spark, "/root/testdata/sf0.001")
       .select("event_type", "event_id", "value").repartition(7)
     for (fn <- Seq("rank", "dense_rank")) {

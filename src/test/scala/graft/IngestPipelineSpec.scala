@@ -107,7 +107,7 @@ class IngestPipelineSpec extends SparkSuite {
       .option("checkpointLocation", ckpt)
       .format("parquet").start(out)
 
-    val q1 = stream.addData(rec("a", 1), rec("b", 2))
+    stream.addData(rec("a", 1), rec("b", 2))
     val run1 = start()
     run1.processAllAvailable(); run1.stop()
 

@@ -69,11 +69,12 @@ class LakehouseOpsSpec extends SparkSuite {
     val native = AnalyticsOps.dedupLatest(spark, sf0001).collect()
     val w = Window.partitionBy(col("user_id"), col("event_type"))
       .orderBy(desc("us"), desc("event_id"))
-    val window = Tables.events(spark, sf0001)
+    val window = windowReference(Tables.events(spark, sf0001)
       .select(col("user_id"), col("event_type"), col("event_id"),
         unix_micros(col("ts")).as("us"), col("value"))
-      .withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
-      .drop("rn").orderBy("user_id", "event_type").collect()
+      .withColumn("rn", row_number().over(w))
+      .filter(col("rn") <= 1 && col("rn") > 0)
+      .drop("rn").orderBy("user_id", "event_type"))
     assert(native.length === window.length)
     native.zip(window).foreach { case (a, b) => assert(a === b) }
   }

@@ -30,6 +30,18 @@ class LayoutSpec extends SparkSuite {
     assert(days > 10) // the corpus spans ~30 days — pruning is meaningful
   }
 
+  test("day-partitioned write leaves exactly one parquet file per day") {
+    val dir = Files.createTempDirectory("graft_layout_files").toString
+    Layout.writeEventsByDay(Tables.events(spark, sf0001), dir)
+    val dayDirs = new java.io.File(dir).listFiles()
+      .filter(f => f.isDirectory && f.getName.startsWith("day=")).toSeq
+    assert(dayDirs.size > 10)
+    dayDirs.foreach { d =>
+      val parts = d.listFiles().map(_.getName).filter(_.endsWith(".parquet"))
+      assert(parts.length === 1, s"${d.getName}: ${parts.mkString(", ")}")
+    }
+  }
+
   test("bucketed tables join with ZERO exchanges (co-located join)") {
     // the 100 TB join answer: bucket both facts on the join key at write
     // time and the shuffle disappears from every subsequent join

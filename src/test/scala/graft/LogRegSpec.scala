@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.functions._
 import graft.ml.LogReg
 
 /** IRLS logistic regression: convergence, solver correctness, and

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.functions._
 import graft.ml.Pca
 
 /** PCA invariants: Gram-aggregate correctness vs a driver-side

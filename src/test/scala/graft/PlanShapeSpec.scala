@@ -562,7 +562,6 @@ class PlanShapeSpec extends SparkSuite {
     // self-join re-scanning parquet with different pushed filters is the
     // normal Spark idiom, on a cluster too — the bug is re-running a
     // shuffle stage per consumer.
-    import org.apache.spark.sql.catalyst.plans.logical._
     // EXACT canonical equality (exprIds → ordinals, otherwise identical
     // trees) is the right bar: two equal subtrees are literally the same
     // stage executed twice — zero false positives by construction.

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.ml.{IvfIndex, PqIndex}
+import graft.ml.PqIndex
 
 /** Product-quantization invariants: code bounds, encode determinism
   * under repartitioning, the ADC = reconstructed-distance identity, and

@@ -50,10 +50,10 @@ class PropertySpec extends SparkSuite {
       val idiom = df.withColumn("rn", row_number().over(w))
         .filter($"rn" <= k).drop("rn")
       assert(idiom.queryExecution.executedPlan.toString.contains("FinalTopK"))
-      val viaWindow = df.withColumn("rn", row_number().over(w))
-        .filter($"rn" <= k).select($"key", $"id", $"v", $"rn") // keeps window
+      val viaWindow = windowReference(df.withColumn("rn", row_number().over(w))
+        .filter($"rn" <= k && $"rn" > 0).drop("rn"))
       assert(idiom.collect().map(_.toSeq).toSet ===
-        viaWindow.drop("rn").collect().map(_.toSeq).toSet, s"k=$k")
+        viaWindow.map(_.toSeq).toSet, s"k=$k")
     }
     df.unpersist()
   }
@@ -96,8 +96,8 @@ class PropertySpec extends SparkSuite {
       .select($"event_type", $"event_id", $"value")
     val w = Window.partitionBy($"event_type").orderBy(desc("value"), $"event_id")
     for (k <- Seq(1, 3, 17)) {
-      val windowed = events.withColumn("rn", row_number().over(w))
-        .filter($"rn" <= k).drop("rn").collect().map(_.toSeq).toSet
+      val windowed = windowReference(events.withColumn("rn", row_number().over(w))
+        .filter($"rn" <= k && $"rn" > 0).drop("rn")).map(_.toSeq).toSet
       val native = graft.plans.TopK.perKey(events, Seq($"event_type"),
         Seq(desc("value"), $"event_id"), k).collect().map(_.toSeq).toSet
       assert(native === windowed, s"k=$k")

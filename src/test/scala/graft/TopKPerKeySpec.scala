@@ -14,9 +14,9 @@ class TopKPerKeySpec extends SparkSuite {
   test("equals the row_number window form on real data") {
     import org.apache.spark.sql.expressions.Window
     val w = Window.partitionBy($"event_type").orderBy(desc("value"), $"event_id")
-    val windowed = events.withColumn("rn", row_number().over(w))
-      .filter($"rn" <= 5).drop("rn")
-      .collect().map(_.toSeq).toSet
+    val windowed = windowReference(events.withColumn("rn", row_number().over(w))
+      .filter($"rn" <= 5 && $"rn" > 0).drop("rn"))
+      .map(_.toSeq).toSet
     val native = TopK.perKey(events, Seq($"event_type"),
         Seq(desc("value"), $"event_id"), 5)
       .collect().map(_.toSeq).toSet
@@ -32,8 +32,8 @@ class TopKPerKeySpec extends SparkSuite {
       .toDF("event_type", "event_id", "value").repartition(3)
     val w = Window.partitionBy($"event_type").orderBy(desc("value"))
     def windowed(fn: org.apache.spark.sql.Column) =
-      tied.withColumn("r", fn.over(w)).filter($"r" <= 2).drop("r")
-        .collect().map(_.toSeq).toSet
+      windowReference(tied.withColumn("r", fn.over(w))
+        .filter($"r" <= 2 && $"r" > 0).drop("r")).map(_.toSeq).toSet
     val nativeRank = TopK.perKey(tied, Seq($"event_type"),
         Seq(desc("value")), 2, TopKMode.Rank)
       .collect().map(_.toSeq).toSet
@@ -103,9 +103,8 @@ class TopKPerKeySpec extends SparkSuite {
     assert(!plan.contains("Window"), plan.take(1500))
     assert(!plan.contains("Sort"), plan.take(1500))
     // result set identical to the un-rewritten window form
-    val base = TopK.perKey(events, Seq($"event_type"),
-        Seq(desc("value"), $"event_id"), 5)
-      .collect().map(_.toSeq).toSet
+    val base = windowReference(events.withColumn("rn", row_number().over(w))
+      .filter($"rn" <= 5 && $"rn" > 0).drop("rn")).map(_.toSeq).toSet
     assert(idiom.collect().map(_.toSeq).toSet === base)
   }
 
