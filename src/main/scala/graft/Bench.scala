@@ -2,6 +2,11 @@ package graft
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    // micro mode (dev): `runMain graft.Bench <key>[,<key>...] [iters]` times
+    // those keys repeatedly — separates per-session constants (codegen,
+    // cache fill) from steady-state cost. No args = the driver's
+    // full-inventory mode. Unknown names fail here, before any work.
+    val selected = args.headOption.map(a => SparkEntry.lookup(a.split(",").toSeq))
     val spark = GraftSession.builder().getOrCreate()
     // JVM/codegen warmup so the first measured query doesn't absorb
     // classloading + first-codegen cost (it would otherwise dominate its
@@ -17,69 +22,29 @@ object Bench {
         .groupBy(col("event_type")).count().collect()
       spark.catalog.clearCache()
     }
-    // serving-path preconditions, not warmup tricks: sim_search_ivf_serve
-    // queries a model that an OFFLINE train job built (that train cost is
-    // what sim_search_ivf itself measures), and join_bucketed reads tables
-    // an offline layout job wrote bucketed (the write-time shuffle is the
-    // one-time cost the layout exists to amortize). Build each store here
-    // so those keys time the steady-state query, as a deployed cluster
-    // would — but only when the run will actually touch the key: a micro
+    // serving-path preconditions, not warmup tricks: a key that reads an
+    // offline store (a trained index, a bucketed or re-laid-out table)
+    // declares the job that builds it as its prep, and a deployed cluster
+    // runs that job before serving — so build each store here and time
+    // the steady-state query. Only the selected keys' preps run: a micro
     // invocation on an unrelated key must not pay a k-means train plus two
     // bucketed fact-table writes at startup.
-    val selected = if (args.nonEmpty) Some(args(0).split(",").toSet) else None
-    def runsKey(k: String) = selected.forall(_.contains(k))
-    if (runsKey("sim_search_ivf_serve")) graft.ml.IvfIndex.persistModel(spark, sfDir)
-    if (runsKey("sim_search_pq_serve")) graft.ml.PqIndex.persistModel(spark, sfDir)
-    if (runsKey("sim_search_ivfpq_serve")) graft.ml.PqIndex.persistIvfPqModel(spark, sfDir)
-    if (runsKey("join_bucketed") || runsKey("agg_bucketed"))
-      graft.sources.Bucketed.ensure(spark, sfDir)
-    if (runsKey("scan_pruned_day") || runsKey("scan_pruned_dpp"))
-      graft.sources.Layout.ensureEventsByDay(spark, sfDir)
-    if (runsKey("scan_zorder"))
-      graft.sources.Layout.ensureEventsZOrdered(spark, sfDir)
-    if (runsKey("scan_jsonl"))
-      graft.sources.Layout.ensureEventsJsonl(spark, sfDir)
-    if (runsKey("scan_orc"))
-      graft.sources.Layout.ensureEventsOrc(spark, sfDir)
-    if (runsKey("scan_delete_vectors"))
-      graft.sources.Layout.ensureEventsMor(spark, sfDir)
-    if (runsKey("scan_bloom_skip"))
-      graft.sources.Layout.ensureEventsBloomIdx(spark, sfDir)
-    if (runsKey("scan_minmax_skip"))
-      graft.sources.Layout.ensureEventsMinMax(spark, sfDir)
-    if (runsKey("scan_partition_evolution"))
-      graft.sources.Layout.ensureEventsPartEvo(spark, sfDir,
-        graft.operators.RelationalOps.TtSplitUs)
-    if (runsKey("scan_corrupt_tolerant"))
-      graft.sources.Layout.ensureEventsCorrupt(spark, sfDir)
-    if (runsKey("scan_csv"))
-      graft.sources.Layout.ensureEventsCsv(spark, sfDir)
-    if (runsKey("scan_schema_evolution"))
-      graft.sources.Layout.ensureEventsSchemaEvolution(
-        spark, sfDir, graft.operators.RelationalOps.TtSplitUs)
-    if (runsKey("scan_time_travel") || runsKey("scan_snapshot_diff"))
-      // pre-commit both snapshots (shared versioned store)
-      graft.operators.RelationalOps.queries("scan_time_travel")(spark, sfDir).count()
-    if (runsKey("ivm_refresh"))
-      // pre-persist the v1 aggregate partials (the offline maintenance
-      // job); the measured key is the refresh, not the initial build
-      graft.operators.RelationalOps.queries("ivm_refresh")(spark, sfDir).count()
+    selected.getOrElse(SparkEntry.keys).flatMap(_.prep).distinct
+      .foreach(_(spark, sfDir))
     spark.catalog.clearCache()
-    // micro mode (dev): `runMain graft.Bench <key> [iters]` times one key
-    // repeatedly — separates per-session constants (codegen, cache fill)
-    // from steady-state cost. No args = the driver's full-inventory mode.
-    if (args.nonEmpty) {
-      val keys = args(0).split(",") // one key, or a comma-joined session mix
-      val iters = if (args.length > 1) args(1).toInt else 3
-      (1 to iters).foreach { i =>
-        keys.foreach { key =>
-          val t0 = System.nanoTime()
-          SparkEntry.queries(key)(spark, sfDir).count()
-          println(f"[micro] $key iter $i: ${(System.nanoTime() - t0) / 1e9}%.2f s")
+    selected match {
+      case Some(keys) =>
+        val iters = if (args.length > 1) args(1).toInt else 3
+        (1 to iters).foreach { i =>
+          keys.foreach { key =>
+            val t0 = System.nanoTime()
+            key.run(spark, sfDir).count()
+            println(f"[micro] ${key.name} iter $i: ${(System.nanoTime() - t0) / 1e9}%.2f s")
+          }
         }
-      }
-      spark.stop()
-      return
+        spark.stop()
+        return
+      case None =>
     }
     var failed = List.empty[String]
     // median-of-3 per key: BASELINE.md documents 58-95s run-to-run swings on

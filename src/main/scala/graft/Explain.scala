@@ -9,13 +9,13 @@ package graft
 object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = GraftSession.builder().getOrCreate()
     val keys =
-      if (args.drop(1).isEmpty || args(1) == "all") SparkEntry.queries.keys.toSeq.sorted
-      else args.drop(1).toSeq
+      if (args.drop(1).isEmpty || args(1) == "all") SparkEntry.keys.sortBy(_.name)
+      else SparkEntry.lookup(args.drop(1).toSeq)
+    val spark = GraftSession.builder().getOrCreate()
     keys.foreach { k =>
-      println(s"\n========== $k ==========")
-      SparkEntry.queries(k)(spark, sfDir).explain("formatted")
+      println(s"\n========== ${k.name} ==========")
+      k.run(spark, sfDir).explain("formatted")
     }
     spark.stop()
   }

@@ -3,12 +3,15 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.operators._
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
+/** Driver contract — see SURVEY.md §7.
   *
-  * The engine's public surface: one entry per operator key in SURVEY.md §2
-  * (reference surface), §2.4/§2.6 (relational completions) and §2.10
-  * (LLM-pipeline extensions). Each key has a matching DuckDB oracle in
-  * [[oracleSql]] unless marked *(no oracle)* in SURVEY.md.
+  * [[keys]] is the one registry. Each operator module declares its keys
+  * (SURVEY.md §2 reference surface, §2.4/§2.6 relational completions,
+  * §2.10 LLM-pipeline extensions) as a `Seq[Key]`, and the list below is
+  * the only place the modules are named. A new key is one `Key` in its
+  * module. [[queries]] and [[oracleSql]] are views of the registry in the
+  * shape the driver reads; a key without an oracle is rows-only, pinned
+  * by its specs instead of DuckDB.
   */
 object SparkEntry {
   /** Flagship query (SURVEY §7.2): revenue per region over the full
@@ -16,27 +19,32 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     CoreOps.flagshipRevenue(spark, "/root/testdata/sf0.001")
 
-  /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
-    CoreOps.queries ++ RelationalOps.queries ++ TextOps.queries ++
-      DedupOps.queries ++ SimilarityOps.queries ++ MultimodalOps.queries ++
-      AdvancedOps.queries ++ SqlSurfaceOps.queries ++ AnalyticsOps.queries ++
-      StatsOps.queries ++ MiningOps.queries ++
-      graft.streaming.IngestPipeline.queries ++
-      graft.streaming.StreamJoin.queries ++
-      graft.streaming.StreamEwma.queries ++
-      graft.ml.IvfIndex.queries ++ graft.ml.PqIndex.queries ++
-      graft.ml.Pca.queries ++ graft.ml.LogReg.queries ++ graft.ml.Bpe.queries
+  lazy val keys: Seq[Key] =
+    CoreOps.keys ++ RelationalOps.keys ++ TextOps.keys ++ DedupOps.keys ++
+      SimilarityOps.keys ++ MultimodalOps.keys ++ AdvancedOps.keys ++
+      SqlSurfaceOps.keys ++ AnalyticsOps.keys ++ StatsOps.keys ++
+      MiningOps.keys ++ graft.streaming.IngestPipeline.keys ++
+      graft.streaming.StreamJoin.keys ++ graft.streaming.StreamEwma.keys ++
+      graft.ml.IvfIndex.keys ++ graft.ml.PqIndex.keys ++ graft.ml.Pca.keys ++
+      graft.ml.LogReg.keys ++ graft.ml.Bpe.keys
 
-  /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omit for non-SQL-expressible ops. */
-  def oracleSql: Map[String, String] =
-    CoreOps.oracles ++ RelationalOps.oracles ++ TextOps.oracles ++
-      DedupOps.oracles ++ SimilarityOps.oracles ++ MultimodalOps.oracles ++
-      AdvancedOps.oracles ++ SqlSurfaceOps.oracles ++ AnalyticsOps.oracles ++
-      StatsOps.oracles ++ MiningOps.oracles ++
-      graft.streaming.IngestPipeline.oracles ++
-      graft.streaming.StreamJoin.oracles ++
-      graft.streaming.StreamEwma.oracles ++
-      graft.ml.IvfIndex.oracles ++ graft.ml.PqIndex.oracles
+  /** Every key's Spark implementation, by name. */
+  lazy val queries: Map[String, (SparkSession, String) => DataFrame] =
+    keys.map(k => k.name -> k.run).toMap
+
+  /** For each key that has one, the equivalent SQL DuckDB runs on the
+    * same parquet tables. */
+  lazy val oracleSql: Map[String, String] =
+    keys.flatMap(k => k.oracle.map(k.name -> _)).toMap
+
+  private lazy val byName: Map[String, Key] = keys.map(k => k.name -> k).toMap
+
+  /** The keys `names` asks for, in that order; throws naming every name
+    * that is not registered, so a typo fails before any work starts. */
+  def lookup(names: Seq[String]): Seq[Key] = {
+    val unknown = names.filterNot(byName.contains)
+    if (unknown.nonEmpty) throw new IllegalArgumentException(
+      s"unknown key(s): ${unknown.mkString(", ")}")
+    names.map(byName)
+  }
 }

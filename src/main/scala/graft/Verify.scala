@@ -1,5 +1,7 @@
 package graft
 import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
+import com.fasterxml.jackson.databind.ObjectMapper
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -8,7 +10,8 @@ object Verify {
     // optional third arg: comma-separated key subset (dev iteration only;
     // the driver always runs the full inventory with two args)
     val only: Option[Set[String]] =
-      if (args.length > 2) Some(args(2).split(",").toSet) else None
+      if (args.length > 2) Some(SparkEntry.lookup(args(2).split(",").toSeq)
+        .map(_.name).toSet) else None
     val spark = GraftSession.builder().getOrCreate()
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
@@ -20,21 +23,12 @@ object Verify {
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), oracleJson)
     spark.stop()
   }
+
+  /** [[SparkEntry.oracleSql]] as a JSON object, keys sorted so dumps
+    * diff cleanly. */
+  def oracleJson: String = new ObjectMapper().writeValueAsString(
+    new java.util.TreeMap[String, String](SparkEntry.oracleSql.asJava))
 }

@@ -2,6 +2,7 @@ package graft.ml
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Key
 
 /** Byte-pair-encoding vocabulary training — the TRAIN half of the BPE
   * tokenizer (apply lives in [[graft.functions.BpeEncode]], a native
@@ -104,7 +105,5 @@ object Bpe {
       .orderBy("doc_id")
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "text_bpe" -> textBpe _,
-  )
+  val keys: Seq[Key] = Seq(Key("text_bpe", textBpe))
 }

@@ -2,6 +2,7 @@ package graft.ml
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Key
 import graft.operators.DedupOps.dot
 
 /** IVF (inverted-file) index over an embedding column: a deterministic
@@ -256,18 +257,15 @@ object IvfIndex {
   // — it BINDS (a cell-assignment bug degrading recall below 4 now fails
   // the DuckDB gate, where the old nprobe=2 floor of 1 only caught total
   // collapse).
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "sim_search_ivf" -> ((s: SparkSession, d: String) =>
+  val keys: Seq[Key] = Seq(
+    Key("sim_search_ivf", (s, d) =>
       graft.operators.SimilarityOps.annInvariant(s, d,
-        simSearchIvf(s, d), minOverlap = 3)),
-    "sim_search_ivf_serve" -> ((s: SparkSession, d: String) =>
+        simSearchIvf(s, d), minOverlap = 3),
+      Some(graft.operators.SimilarityOps.annInvariantOracle)),
+    Key("sim_search_ivf_serve", (s, d) =>
       graft.operators.SimilarityOps.annInvariant(s, d,
-        simSearchIvfServe(s, d), minOverlap = 3)),
-  )
-
-  val oracles: Map[String, String] = Map(
-    "sim_search_ivf" -> graft.operators.SimilarityOps.annInvariantOracle,
-    "sim_search_ivf_serve" ->
-      graft.operators.SimilarityOps.annInvariantOracle,
+        simSearchIvfServe(s, d), minOverlap = 3),
+      Some(graft.operators.SimilarityOps.annInvariantOracle),
+      prep = Some((s, d) => persistModel(s, d))),
   )
 }

@@ -2,6 +2,7 @@ package graft.ml
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Key
 
 /** Distributed logistic-regression quality classifier — the trainable half
   * of the corpus-quality story (TextOps.text_quality is the hand-weighted
@@ -215,7 +216,5 @@ object LogReg {
       .orderBy("doc_id")
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "quality_lr_score" -> qualityLrScore _,
-  )
+  val keys: Seq[Key] = Seq(Key("quality_lr_score", qualityLrScore))
 }

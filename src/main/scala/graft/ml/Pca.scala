@@ -2,6 +2,7 @@ package graft.ml
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Key
 import graft.operators.DedupOps.dot
 
 /** Distributed PCA over the embedding column — the projection/whitening
@@ -206,8 +207,5 @@ object Pca {
       .orderBy("vec_id")
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "embed_pca"    -> embedPca _,
-    "embed_whiten" -> embedWhiten _,
-  )
+  val keys: Seq[Key] = Seq(Key("embed_pca", embedPca), Key("embed_whiten", embedWhiten))
 }

@@ -2,6 +2,7 @@ package graft.ml
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Key
 import graft.operators.DedupOps.dot
 
 /** Product quantization (PQ) over the embedding column — the memory-side
@@ -473,24 +474,17 @@ object PqIndex {
   // (BASELINE.md, "ANN recall floors re-sized"): PQ exact-rerank stays
   // 10/10 everywhere (floor 9 — one borderline-rank swap of headroom);
   // IVF-PQ's nprobe-pruned shortlist measured 7/7/5/9 (floor 4).
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "sim_search_pq" -> ((s: SparkSession, d: String) =>
-      graft.operators.SimilarityOps.annInvariant(s, d,
-        simSearchPq(s, d), minOverlap = 9)),
-    "sim_search_pq_serve" -> ((s: SparkSession, d: String) =>
-      graft.operators.SimilarityOps.annInvariant(s, d,
-        simSearchPqServe(s, d), minOverlap = 9)),
-    "sim_search_ivfpq" -> ((s: SparkSession, d: String) =>
-      graft.operators.SimilarityOps.annInvariant(s, d,
-        simSearchIvfPq(s, d), minOverlap = 4)),
-    "sim_search_ivfpq_serve" -> ((s: SparkSession, d: String) =>
-      graft.operators.SimilarityOps.annInvariant(s, d,
-        simSearchIvfPqServe(s, d), minOverlap = 4)),
-  )
-
-  val oracles: Map[String, String] = {
-    val o = graft.operators.SimilarityOps.annInvariantOracle
-    Map("sim_search_pq" -> o, "sim_search_pq_serve" -> o,
-      "sim_search_ivfpq" -> o, "sim_search_ivfpq_serve" -> o)
+  val keys: Seq[Key] = {
+    val o = Some(graft.operators.SimilarityOps.annInvariantOracle)
+    def ann(search: (SparkSession, String) => DataFrame, minOverlap: Int) =
+      (s: SparkSession, d: String) => graft.operators.SimilarityOps
+        .annInvariant(s, d, search(s, d), minOverlap)
+    Seq(
+      Key("sim_search_pq", ann(simSearchPq, 9), o),
+      Key("sim_search_pq_serve", ann(simSearchPqServe, 9), o,
+        prep = Some((s, d) => persistModel(s, d))),
+      Key("sim_search_ivfpq", ann(simSearchIvfPq, 4), o),
+      Key("sim_search_ivfpq_serve", ann(simSearchIvfPqServe, 4), o,
+        prep = Some((s, d) => persistIvfPqModel(s, d))))
   }
 }

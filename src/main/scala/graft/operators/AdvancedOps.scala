@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.Key
 import graft.sources.Tables
 
 /** Operators beyond the reference and beyond plain relational algebra that
@@ -1158,51 +1159,8 @@ object AdvancedOps {
       .orderBy("entry_type", "exit_type")
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "sessions_entry_exit" -> sessionsEntryExit _,
-    "lead_time_stats"  -> leadTimeStats _,
-    "stats_corr"       -> statsCorr _,
-    "cube_agg"         -> cubeAgg _,
-    "window_lead_lag"  -> windowLeadLag _,
-    "sessionize"       -> sessionize _,
-    "resample_daily"   -> resampleDaily _,
-    "resample_ffill"   -> resampleFfill _,
-    "asof_join"        -> asofJoin _,
-    "asof_join_tolerance" -> asofJoinTolerance _,
-    "asof_join_nearest" -> asofJoinNearest _,
-    "sessions_concurrent" -> sessionsConcurrent _,
-    "sessions_coverage" -> sessionsCoverage _,
-    "join_interval_overlap" -> joinIntervalOverlap _,
-    "rollup_agg"       -> rollupAgg _,
-    "distinct_agg"     -> distinctAgg _,
-    "salted_agg"       -> saltedAgg _,
-    "tpch_q1"          -> tpchQ1 _,
-    "tpch_q3"          -> tpchQ3 _,
-    "tpch_q6"          -> tpchQ6 _,
-    "tpch_q12"         -> tpchQ12 _,
-    "tpch_q14"         -> tpchQ14 _,
-    "tpch_q5"          -> tpchQ5 _,
-    "tpch_q10"         -> tpchQ10 _,
-    "tpch_q18"         -> tpchQ18 _,
-    "tpch_q4"          -> tpchQ4 _,
-    "tpch_q13"         -> tpchQ13 _,
-    "tpch_q17"         -> tpchQ17 _,
-    "tpch_q22"         -> tpchQ22 _,
-    "tpch_q7"          -> tpchQ7 _,
-    "tpch_q8"          -> tpchQ8 _,
-    "tpch_q9"          -> tpchQ9 _,
-    "tpch_q15"         -> tpchQ15 _,
-    "tpch_q16"         -> tpchQ16 _,
-    "tpch_q19"         -> tpchQ19 _,
-    "tpch_q21"         -> tpchQ21 _,
-    "tpch_q2"          -> tpchQ2 _,
-    "tpch_q11"         -> tpchQ11 _,
-    "tpch_q20"         -> tpchQ20 _,
-    "join_skew_salted" -> joinSkewSalted _,
-  )
-
-  val oracles: Map[String, String] = Map(
-    "sessions_entry_exit" ->
+  val keys: Seq[Key] = Seq(
+    Key("sessions_entry_exit", sessionsEntryExit, Some(
       """WITH seq AS (
         |  SELECT event_id, user_id, event_type,
         |    epoch_us(CAST(ts AS TIMESTAMP)) AS us FROM events),
@@ -1239,8 +1197,8 @@ object AdvancedOps {
         |  round(CAST(sum(n) AS DOUBLE) / count(*), 6) + 0.0 AS avg_events,
         |  round(CAST(sum(dur) AS DOUBLE) / count(*) / 1000000, 6) + 0.0
         |    AS avg_duration_s
-        |FROM agg GROUP BY 1, 2 ORDER BY entry_type, exit_type""".stripMargin,
-    "lead_time_stats" ->
+        |FROM agg GROUP BY 1, 2 ORDER BY entry_type, exit_type""".stripMargin)),
+    Key("lead_time_stats", leadTimeStats, Some(
       """WITH l AS (
         |  SELECT o.o_orderpriority,
         |    CAST(CAST(l.l_shipdate AS DATE) - CAST(o.o_orderdate AS DATE)
@@ -1252,10 +1210,10 @@ object AdvancedOps {
         |  round(quantile_cont(lead_days, 0.5), 6) + 0.0 AS p50_days,
         |  round(quantile_cont(lead_days, 0.9), 6) + 0.0 AS p90_days,
         |  max(lead_days) AS max_days
-        |FROM l GROUP BY 1 ORDER BY o_orderpriority""".stripMargin,
+        |FROM l GROUP BY 1 ORDER BY o_orderpriority""".stripMargin)),
     // the identical day-clamped sweep — integer µs arithmetic replays
     // bit-for-bit; unnest(generate_series) is Spark's explode(sequence)
-    "sessions_coverage" ->
+    Key("sessions_coverage", sessionsCoverage, Some(
       """WITH seq AS (
         |  SELECT event_id, user_id, epoch_us(CAST(ts AS TIMESTAMP)) AS us FROM events),
         |flags AS (
@@ -1289,8 +1247,8 @@ object AdvancedOps {
         |  SELECT dayno, greatest(0, e - greatest(s, pmax)) AS c FROM sw)
         |SELECT dayno, CAST(sum(c) AS BIGINT) AS covered_us,
         |  round(CAST(sum(c) AS DOUBLE) / 86400000000, 6) AS coverage
-        |FROM cov GROUP BY dayno ORDER BY dayno""".stripMargin,
-    "sessionize" ->
+        |FROM cov GROUP BY dayno ORDER BY dayno""".stripMargin)),
+    Key("sessionize", sessionize, Some(
       """WITH seq AS (
         |  SELECT event_id, user_id, epoch_us(CAST(ts AS TIMESTAMP)) AS us FROM events),
         |flags AS (
@@ -1306,8 +1264,8 @@ object AdvancedOps {
         |SELECT user_id, session_id, count(*) AS n_events,
         |  min(us) AS start_us, max(us) AS end_us
         |FROM sess GROUP BY user_id, session_id
-        |ORDER BY user_id, session_id""".stripMargin,
-    "resample_daily" ->
+        |ORDER BY user_id, session_id""".stripMargin)),
+    Key("resample_daily", resampleDaily, Some(
       """WITH daily AS (
         |  SELECT user_id, CAST(ts AS DATE) AS day, count(*) AS cnt
         |  FROM events GROUP BY 1, 2),
@@ -1319,8 +1277,8 @@ object AdvancedOps {
         |SELECT g.user_id AS user_id, strftime(g.day, '%Y-%m-%d') AS day_s,
         |  COALESCE(d.cnt, 0) AS cnt
         |FROM grid g LEFT JOIN daily d ON g.user_id = d.user_id AND g.day = d.day
-        |ORDER BY g.user_id, day_s""".stripMargin,
-    "resample_ffill" ->
+        |ORDER BY g.user_id, day_s""".stripMargin)),
+    Key("resample_ffill", resampleFfill, Some(
       """WITH daily AS (
         |  SELECT user_id, CAST(ts AS DATE) AS day,
         |    CAST(sum(CAST("value" AS DECIMAL(18,2))) AS DOUBLE) / count("value") AS avg_v
@@ -1336,8 +1294,8 @@ object AdvancedOps {
         |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW), 6) AS avg_value,
         |  d.avg_v IS NULL AS is_gap
         |FROM grid g LEFT JOIN daily d ON g.user_id = d.user_id AND g.day = d.day
-        |ORDER BY user_id, day_s""".stripMargin,
-    "join_interval_overlap" ->
+        |ORDER BY user_id, day_s""".stripMargin)),
+    Key("join_interval_overlap", joinIntervalOverlap, Some(
       """WITH seq AS (
         |  SELECT event_id, user_id, epoch_us(CAST(ts AS TIMESTAMP)) AS us FROM events),
         |flags AS (
@@ -1363,8 +1321,8 @@ object AdvancedOps {
         |  CAST(count(DISTINCT sa.user_id) AS BIGINT) AS n_users
         |FROM sa JOIN promos
         |  ON sa.start_us < promos.p1 AND promos.p0 <= sa.end_us
-        |GROUP BY 1 ORDER BY promo_day""".stripMargin,
-    "asof_join_tolerance" ->
+        |GROUP BY 1 ORDER BY promo_day""".stripMargin)),
+    Key("asof_join_tolerance", asofJoinTolerance, Some(
       """WITH seq AS (
         |  SELECT event_id, user_id, event_type,
         |    epoch_us(CAST(ts AS TIMESTAMP)) AS us
@@ -1379,11 +1337,11 @@ object AdvancedOps {
         |  CASE WHEN us - lc <= 3600000000 THEN lc END AS click_us_1h,
         |  CASE WHEN us - lc <= 3600000000 THEN us - lc END AS lag_us
         |FROM marked WHERE event_type = 'purchase'
-        |ORDER BY purchase_id""".stripMargin,
+        |ORDER BY purchase_id""".stripMargin)),
     // sessionize's CTEs + a STRAIGHT global running sum over the delta
     // timeline — the affordable-at-oracle-scale form whose equality
     // proves the engine's day-partitioned prefix decomposition exact
-    "sessions_concurrent" ->
+    Key("sessions_concurrent", sessionsConcurrent, Some(
       """WITH seq AS (
         |  SELECT event_id, user_id, epoch_us(CAST(ts AS TIMESTAMP)) AS us FROM events),
         |flags AS (
@@ -1418,8 +1376,8 @@ object AdvancedOps {
         |SELECT day, max(conc) AS max_concurrent,
         |  CAST(sum(CASE WHEN delta = 1 THEN 1 ELSE 0 END) AS BIGINT)
         |    AS sessions_started
-        |FROM r GROUP BY day ORDER BY day""".stripMargin,
-    "asof_join_nearest" ->
+        |FROM r GROUP BY day ORDER BY day""".stripMargin)),
+    Key("asof_join_nearest", asofJoinNearest, Some(
       """WITH seq AS (
         |  SELECT event_id, user_id, event_type,
         |    epoch_us(CAST(ts AS TIMESTAMP)) AS us
@@ -1442,8 +1400,8 @@ object AdvancedOps {
         |  FROM marked WHERE event_type = 'purchase')
         |SELECT event_id AS purchase_id, user_id, click_us,
         |  us - click_us AS delta_us
-        |FROM n ORDER BY purchase_id""".stripMargin,
-    "asof_join" ->
+        |FROM n ORDER BY purchase_id""".stripMargin)),
+    Key("asof_join", asofJoin, Some(
       """WITH seq AS (
         |  SELECT event_id, user_id, event_type,
         |    epoch_us(CAST(ts AS TIMESTAMP)) AS us
@@ -1456,8 +1414,8 @@ object AdvancedOps {
         |  FROM seq)
         |SELECT event_id AS purchase_id, user_id, last_click_us
         |FROM marked WHERE event_type = 'purchase'
-        |ORDER BY purchase_id""".stripMargin,
-    "stats_corr" ->
+        |ORDER BY purchase_id""".stripMargin)),
+    Key("stats_corr", statsCorr, Some(
       """SELECT l_returnflag,
         |  CASE WHEN (nd * sxx - sx * sx) * (nd * syy - sy * sy) > 0
         |       THEN round((nd * sxy - sx * sy) /
@@ -1478,8 +1436,8 @@ object AdvancedOps {
         |    CAST(sum(CAST(l_tax AS DECIMAL(9,4))) AS DOUBLE) AS sv,
         |    CAST(sum(CAST(l_discount AS DECIMAL(9,4)) * CAST(l_tax AS DECIMAL(9,4))) AS DOUBLE) AS suv
         |  FROM lineitem GROUP BY l_returnflag) t
-        |ORDER BY l_returnflag""".stripMargin,
-    "cube_agg" ->
+        |ORDER BY l_returnflag""".stripMargin)),
+    Key("cube_agg", cubeAgg, Some(
       """SELECT COALESCE(l_returnflag, '<all>') AS returnflag,
         |  COALESCE(l_linestatus, '<all>') AS linestatus,
         |  count(*) AS cnt,
@@ -1487,21 +1445,21 @@ object AdvancedOps {
         |  CAST(grouping(l_returnflag) AS INTEGER) AS g_rf,
         |  CAST(grouping(l_linestatus) AS INTEGER) AS g_ls
         |FROM lineitem GROUP BY CUBE (l_returnflag, l_linestatus)
-        |ORDER BY g_rf, g_ls, returnflag, linestatus""".stripMargin,
-    "window_lead_lag" ->
+        |ORDER BY g_rf, g_ls, returnflag, linestatus""".stripMargin)),
+    Key("window_lead_lag", windowLeadLag, Some(
       """SELECT event_id, user_id, "value",
         |  lag("value", 1) OVER w AS prev_value,
         |  lead("value", 1) OVER w AS next_value
         |FROM events WINDOW w AS (PARTITION BY user_id ORDER BY event_id)
-        |ORDER BY event_id""".stripMargin,
-    "tpch_q12" ->
+        |ORDER BY event_id""".stripMargin)),
+    Key("tpch_q12", tpchQ12, Some(
       """SELECT l_returnflag,
         |  count(*) FILTER (WHERE o_orderpriority IN ('1-URGENT', '2-HIGH')) AS high_line_count,
         |  count(*) FILTER (WHERE o_orderpriority NOT IN ('1-URGENT', '2-HIGH')) AS low_line_count
         |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
         |WHERE l_shipdate >= TIMESTAMP '1997-01-01' AND l_shipdate < TIMESTAMP '1998-01-01'
-        |GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
-    "tpch_q14" ->
+        |GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin)),
+    Key("tpch_q14", tpchQ14, Some(
       """SELECT round(promo_numer / total_revenue, 6) AS promo_pct, total_revenue, n_items FROM (
         |  SELECT
         |    CAST(100 * sum(CASE WHEN p_type = 'PROMO'
@@ -1510,8 +1468,8 @@ object AdvancedOps {
         |    CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2)) * (1 - CAST(l_discount AS DECIMAL(18,4)))) AS DOUBLE) AS total_revenue,
         |    count(*) AS n_items
         |  FROM lineitem JOIN part ON l_partkey = p_partkey
-        |  WHERE l_shipdate >= TIMESTAMP '1997-09-01' AND l_shipdate < TIMESTAMP '1997-10-01') t""".stripMargin,
-    "tpch_q5" ->
+        |  WHERE l_shipdate >= TIMESTAMP '1997-09-01' AND l_shipdate < TIMESTAMP '1997-10-01') t""".stripMargin)),
+    Key("tpch_q5", tpchQ5, Some(
       """SELECT n_name,
         |  CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2)) * (1 - CAST(l_discount AS DECIMAL(18,4)))) AS DOUBLE) AS revenue
         |FROM lineitem
@@ -1523,8 +1481,8 @@ object AdvancedOps {
         |WHERE r_name = 'ASIA'
         |  AND o_orderdate >= TIMESTAMP '1996-01-01'
         |  AND o_orderdate < TIMESTAMP '1997-01-01'
-        |GROUP BY n_name ORDER BY revenue DESC, n_name""".stripMargin,
-    "tpch_q10" ->
+        |GROUP BY n_name ORDER BY revenue DESC, n_name""".stripMargin)),
+    Key("tpch_q10", tpchQ10, Some(
       """SELECT c_custkey, c_name, n_name,
         |  CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2)) * (1 - CAST(l_discount AS DECIMAL(18,4)))) AS DOUBLE) AS revenue
         |FROM lineitem
@@ -1535,8 +1493,8 @@ object AdvancedOps {
         |  AND o_orderdate >= TIMESTAMP '1996-10-01'
         |  AND o_orderdate < TIMESTAMP '1997-01-01'
         |GROUP BY c_custkey, c_name, n_name
-        |ORDER BY revenue DESC, c_custkey LIMIT 20""".stripMargin,
-    "tpch_q18" ->
+        |ORDER BY revenue DESC, c_custkey LIMIT 20""".stripMargin)),
+    Key("tpch_q18", tpchQ18, Some(
       """WITH big AS (
         |  SELECT l_orderkey,
         |    CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS total_qty
@@ -1547,8 +1505,8 @@ object AdvancedOps {
         |FROM big
         |JOIN orders ON l_orderkey = o_orderkey
         |JOIN customer ON o_custkey = c_custkey
-        |ORDER BY o_totalprice DESC, orderdate, o_orderkey LIMIT 100""".stripMargin,
-    "tpch_q7" ->
+        |ORDER BY o_totalprice DESC, orderdate, o_orderkey LIMIT 100""".stripMargin)),
+    Key("tpch_q7", tpchQ7, Some(
       """SELECT supp_nation, cust_nation, l_year,
         |  CAST(sum(vol) AS DOUBLE) AS revenue
         |FROM (
@@ -1566,8 +1524,8 @@ object AdvancedOps {
         |    AND l_shipdate >= TIMESTAMP '1996-01-01'
         |    AND l_shipdate < TIMESTAMP '1998-01-01') t
         |GROUP BY supp_nation, cust_nation, l_year
-        |ORDER BY supp_nation, cust_nation, l_year""".stripMargin,
-    "tpch_q8" ->
+        |ORDER BY supp_nation, cust_nation, l_year""".stripMargin)),
+    Key("tpch_q8", tpchQ8, Some(
       """SELECT o_year, round(nation_volume / total_volume, 6) AS mkt_share,
         |  total_volume
         |FROM (
@@ -1588,8 +1546,8 @@ object AdvancedOps {
         |    AND o_orderdate >= TIMESTAMP '1996-01-01'
         |    AND o_orderdate < TIMESTAMP '1998-01-01'
         |  GROUP BY o_year) t
-        |ORDER BY o_year""".stripMargin,
-    "tpch_q9" ->
+        |ORDER BY o_year""".stripMargin)),
+    Key("tpch_q9", tpchQ9, Some(
       """SELECT nation, o_year, rev - 0.5 * retail AS sum_profit
         |FROM (
         |  SELECT n_name AS nation, CAST(year(o_orderdate) AS INTEGER) AS o_year,
@@ -1602,8 +1560,8 @@ object AdvancedOps {
         |  JOIN orders ON l_orderkey = o_orderkey
         |  WHERE p_name LIKE '%widget%'
         |  GROUP BY 1, 2) t
-        |ORDER BY nation, o_year DESC""".stripMargin,
-    "tpch_q15" ->
+        |ORDER BY nation, o_year DESC""".stripMargin)),
+    Key("tpch_q15", tpchQ15, Some(
       """WITH rev AS (
         |  SELECT l_suppkey,
         |    CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2)) * (1 - CAST(l_discount AS DECIMAL(18,4)))) AS DOUBLE) AS total_revenue
@@ -1614,24 +1572,24 @@ object AdvancedOps {
         |SELECT s_suppkey, s_name, total_revenue
         |FROM rev JOIN supplier ON l_suppkey = s_suppkey
         |WHERE total_revenue = (SELECT max(total_revenue) FROM rev)
-        |ORDER BY s_suppkey""".stripMargin,
-    "tpch_q16" ->
+        |ORDER BY s_suppkey""".stripMargin)),
+    Key("tpch_q16", tpchQ16, Some(
       """SELECT p_brand, p_type, p_size,
         |  count(DISTINCT l_suppkey) AS supplier_cnt
         |FROM lineitem JOIN part ON l_partkey = p_partkey
         |WHERE p_brand <> 'Brand#1' AND p_type <> 'PROMO'
         |  AND p_size IN (1, 5, 10, 15, 20, 25, 30, 35, 40, 45, 50)
         |GROUP BY p_brand, p_type, p_size
-        |ORDER BY supplier_cnt DESC, p_brand, p_type, p_size""".stripMargin,
-    "tpch_q19" ->
+        |ORDER BY supplier_cnt DESC, p_brand, p_type, p_size""".stripMargin)),
+    Key("tpch_q19", tpchQ19, Some(
       """SELECT
         |  CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2)) * (1 - CAST(l_discount AS DECIMAL(18,4)))) AS DOUBLE) AS revenue,
         |  count(*) AS n_items
         |FROM lineitem JOIN part ON l_partkey = p_partkey
         |WHERE (p_brand = 'Brand#11' AND l_quantity BETWEEN 1 AND 11 AND p_size BETWEEN 1 AND 5)
         |   OR (p_brand = 'Brand#22' AND l_quantity BETWEEN 10 AND 20 AND p_size BETWEEN 1 AND 10)
-        |   OR (p_brand = 'Brand#33' AND l_quantity BETWEEN 20 AND 30 AND p_size BETWEEN 1 AND 15)""".stripMargin,
-    "tpch_q21" ->
+        |   OR (p_brand = 'Brand#33' AND l_quantity BETWEEN 20 AND 30 AND p_size BETWEEN 1 AND 15)""".stripMargin)),
+    Key("tpch_q21", tpchQ21, Some(
       """SELECT s_suppkey, s_name, count(*) AS numwait
         |FROM lineitem l1
         |JOIN orders ON l1.l_orderkey = o_orderkey
@@ -1646,8 +1604,8 @@ object AdvancedOps {
         |                    AND l3.l_suppkey <> l1.l_suppkey
         |                    AND l3.l_shipdate > o_orderdate + INTERVAL 30 DAY)
         |GROUP BY s_suppkey, s_name
-        |ORDER BY numwait DESC, s_suppkey LIMIT 20""".stripMargin,
-    "tpch_q2" ->
+        |ORDER BY numwait DESC, s_suppkey LIMIT 20""".stripMargin)),
+    Key("tpch_q2", tpchQ2, Some(
       """WITH ps AS (
         |  SELECT l_partkey AS p_partkey, l_suppkey, p_name, p_size,
         |    min(l_extendedprice / l_quantity) AS supplycost
@@ -1667,8 +1625,8 @@ object AdvancedOps {
         |SELECT s_acctbal, s_name, n_name, p_partkey, p_name, p_size,
         |  round(supplycost, 2) AS supplycost
         |FROM j WHERE rn = 1
-        |ORDER BY s_acctbal DESC, n_name, s_name, p_partkey LIMIT 100""".stripMargin,
-    "tpch_q11" ->
+        |ORDER BY s_acctbal DESC, n_name, s_name, p_partkey LIMIT 100""".stripMargin)),
+    Key("tpch_q11", tpchQ11, Some(
       """WITH sn AS (
         |  SELECT s_suppkey FROM supplier
         |  JOIN nation ON s_nationkey = n_nationkey
@@ -1682,8 +1640,8 @@ object AdvancedOps {
         |FROM pp
         |WHERE value_dec * 10000 >
         |  (SELECT CAST(sum(value_dec) AS DECIMAL(28,6)) FROM pp)
-        |ORDER BY value DESC, p_partkey""".stripMargin,
-    "tpch_q20" ->
+        |ORDER BY value DESC, p_partkey""".stripMargin)),
+    Key("tpch_q20", tpchQ20, Some(
       """WITH x AS (
         |  SELECT l_suppkey,
         |    sum(CASE WHEN l_shipdate >= TIMESTAMP '1997-01-01'
@@ -1698,8 +1656,8 @@ object AdvancedOps {
         |FROM supplier JOIN nation ON s_nationkey = n_nationkey
         |WHERE n_name = 'NATION_18'
         |  AND s_suppkey IN (SELECT l_suppkey FROM x WHERE q97 > qall - q97)
-        |ORDER BY s_suppkey""".stripMargin,
-    "tpch_q4" ->
+        |ORDER BY s_suppkey""".stripMargin)),
+    Key("tpch_q4", tpchQ4, Some(
       """SELECT o_orderpriority, count(*) AS order_count
         |FROM orders o
         |WHERE o_orderdate >= TIMESTAMP '1997-01-01'
@@ -1707,14 +1665,14 @@ object AdvancedOps {
         |  AND EXISTS (SELECT 1 FROM lineitem
         |              WHERE l_orderkey = o.o_orderkey
         |                AND l_shipdate > o.o_orderdate + INTERVAL 30 DAY)
-        |GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin,
-    "tpch_q13" ->
+        |GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin)),
+    Key("tpch_q13", tpchQ13, Some(
       """SELECT c_count, count(*) AS custdist FROM (
         |  SELECT c_custkey, count(o_orderkey) AS c_count
         |  FROM customer LEFT JOIN orders ON c_custkey = o_custkey
         |  GROUP BY c_custkey) t
-        |GROUP BY c_count ORDER BY custdist DESC, c_count DESC""".stripMargin,
-    "tpch_q17" ->
+        |GROUP BY c_count ORDER BY custdist DESC, c_count DESC""".stripMargin)),
+    Key("tpch_q17", tpchQ17, Some(
       """WITH pb AS (SELECT p_partkey FROM part WHERE p_brand = 'Brand#23'),
         |li AS (SELECT l_partkey, l_quantity, l_extendedprice
         |       FROM lineitem JOIN pb ON l_partkey = p_partkey),
@@ -1725,8 +1683,8 @@ object AdvancedOps {
         |SELECT CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) / 7.0
         |  AS avg_yearly
         |FROM li JOIN th USING (l_partkey)
-        |WHERE l_quantity < qty_thresh""".stripMargin,
-    "tpch_q22" ->
+        |WHERE l_quantity < qty_thresh""".stripMargin)),
+    Key("tpch_q22", tpchQ22, Some(
       """WITH cs AS (SELECT c_custkey, c_mktsegment, c_acctbal FROM customer
         |            WHERE c_mktsegment IN ('AUTOMOBILE', 'BUILDING', 'MACHINERY')),
         |ab AS (SELECT CAST(sum(CAST(c_acctbal AS DECIMAL(18,2))) AS DOUBLE)
@@ -1739,8 +1697,8 @@ object AdvancedOps {
         |  AND NOT EXISTS (SELECT 1 FROM orders
         |                  WHERE o_custkey = c_custkey
         |                    AND o_orderdate >= TIMESTAMP '2000-01-01')
-        |GROUP BY c_mktsegment ORDER BY c_mktsegment""".stripMargin,
-    "tpch_q3" ->
+        |GROUP BY c_mktsegment ORDER BY c_mktsegment""".stripMargin)),
+    Key("tpch_q3", tpchQ3, Some(
       """SELECT l_orderkey, strftime(o_orderdate, '%Y-%m-%d') AS orderdate,
         |  o_orderpriority,
         |  CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2)) * (1 - CAST(l_discount AS DECIMAL(18,4)))) AS DOUBLE) AS revenue
@@ -1751,16 +1709,16 @@ object AdvancedOps {
         |  AND o_orderdate < TIMESTAMP '1998-06-01'
         |  AND l_shipdate > TIMESTAMP '1998-06-01'
         |GROUP BY l_orderkey, o_orderdate, o_orderpriority
-        |ORDER BY revenue DESC, l_orderkey LIMIT 10""".stripMargin,
-    "tpch_q6" ->
+        |ORDER BY revenue DESC, l_orderkey LIMIT 10""".stripMargin)),
+    Key("tpch_q6", tpchQ6, Some(
       """SELECT CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2)) * CAST(l_discount AS DECIMAL(18,4))) AS DOUBLE) AS revenue,
         |  count(*) AS n_items
         |FROM lineitem
         |WHERE l_shipdate >= TIMESTAMP '1997-01-01'
         |  AND l_shipdate < TIMESTAMP '1998-01-01'
         |  AND l_discount BETWEEN 0.05 AND 0.07
-        |  AND l_quantity < 24""".stripMargin,
-    "tpch_q1" ->
+        |  AND l_quantity < 24""".stripMargin)),
+    Key("tpch_q1", tpchQ1, Some(
       """SELECT l_returnflag, l_linestatus,
         |  CAST(sum(CAST(l_quantity AS DECIMAL(12,2))) AS DOUBLE) AS sum_qty,
         |  CAST(sum(CAST(l_extendedprice AS DECIMAL(12,2))) AS DOUBLE) AS sum_base_price,
@@ -1772,20 +1730,20 @@ object AdvancedOps {
         |FROM lineitem
         |WHERE l_shipdate < TIMESTAMP '1998-09-02'
         |GROUP BY l_returnflag, l_linestatus
-        |ORDER BY l_returnflag, l_linestatus""".stripMargin,
-    "join_skew_salted" ->
+        |ORDER BY l_returnflag, l_linestatus""".stripMargin)),
+    Key("join_skew_salted", joinSkewSalted, Some(
       """SELECT user_id % 5 AS segment, count(*) AS cnt,
         |  CAST(sum(CAST("value" AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
-        |FROM events GROUP BY user_id % 5 ORDER BY segment""".stripMargin,
-    "distinct_agg" ->
+        |FROM events GROUP BY user_id % 5 ORDER BY segment""".stripMargin)),
+    Key("distinct_agg", distinctAgg, Some(
       """SELECT event_type, count(DISTINCT user_id) AS n_users,
         |  count(*) AS n_events
-        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin,
-    "salted_agg" ->
+        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin)),
+    Key("salted_agg", saltedAgg, Some(
       """SELECT event_type, count(*) AS cnt,
         |  CAST(sum(CAST("value" AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
-        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin,
-    "rollup_agg" ->
+        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin)),
+    Key("rollup_agg", rollupAgg, Some(
       """SELECT COALESCE(l_returnflag, '<all>') AS returnflag,
         |  COALESCE(l_linestatus, '<all>') AS linestatus,
         |  count(*) AS cnt,
@@ -1793,6 +1751,6 @@ object AdvancedOps {
         |  CAST(grouping(l_returnflag) AS INTEGER) AS g_rf,
         |  CAST(grouping(l_linestatus) AS INTEGER) AS g_ls
         |FROM lineitem GROUP BY ROLLUP (l_returnflag, l_linestatus)
-        |ORDER BY g_rf, g_ls, returnflag, linestatus""".stripMargin,
+        |ORDER BY g_rf, g_ls, returnflag, linestatus""".stripMargin)),
   )
 }

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.Key
 import graft.sources.Tables
 
 /** Event-analytics and data-management operators a production engine is
@@ -960,36 +961,6 @@ object AnalyticsOps {
         Tables.customer(spark, dir), "c_nationkey", "c_mktsegment"))
       .orderBy("fd")
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "dq_fd_violations" -> dqFdViolations _,
-    "graph_hits"       -> graphHits _,
-    "ab_srm_check"     -> abSrmCheck _,
-    "stats_wilcoxon_signed" -> statsWilcoxonSigned _,
-    "stats_kendall_tau" -> statsKendallTau _,
-    "funnel_time_to_convert" -> funnelTimeToConvert _,
-    "stats_spearman"   -> statsSpearman _,
-    "cohort_ltv"       -> cohortLtv _,
-    "dedup_latest"     -> dedupLatest _,
-    "merge_into"       -> mergeInto _,
-    "dq_profile"       -> dqProfile _,
-    "dq_referential"   -> dqReferential _,
-    "join_scd2_asof"   -> joinScd2Asof _,
-    "cohort_retention" -> cohortRetention _,
-    "funnel_steps"     -> funnelSteps _,
-    "anomaly_mad"      -> anomalyMad _,
-    "graph_pagerank"   -> graphPagerank _,
-    "graph_eigencentrality" -> graphEigenCentrality _,
-    "ab_power_mde"     -> abPowerMde _,
-    "ab_sprt"          -> abSprt _,
-    "dq_duplicate_rows" -> dqDuplicateRows _,
-    "dq_out_of_order"  -> dqOutOfOrder _,
-    "graph_label_prop" -> graphLabelProp _,
-    "graph_modularity" -> graphModularity _,
-    "attribution"      -> attribution _,
-    "cdc_scd2"         -> cdcScd2 _,
-    "rolling_active_users" -> rollingActiveUsers _,
-  )
-
   private val prIterSql: String = {
     // unrolled iterations: it0 = uniform PrScale; it{k} from it{k-1}
     val iters = (1 to PrIters).map { k =>
@@ -1110,8 +1081,8 @@ object AnalyticsOps {
   private[operators] def matCtes(sql: String): String =
     OracleSql.matCtes(sql)
 
-  val oracles: Map[String, String] = Map(
-    "dq_fd_violations" ->
+  val keys: Seq[Key] = Seq(
+    Key("dq_fd_violations", dqFdViolations, Some(
       (s"""SELECT fd, n_keys, n_violating_keys, n_rows, g3_rows,
           |  round(CAST(n_violating_keys AS DOUBLE) / n_keys, 6) + 0.0
           |    AS key_violation_rate,
@@ -1126,8 +1097,8 @@ object AnalyticsOps {
           "o_custkey", "o_orderpriority") + "\nUNION ALL\n" +
         duckFd("customer.c_nationkey->c_mktsegment", "customer",
           "c_nationkey", "c_mktsegment") +
-        "\n) ORDER BY fd"),
-    "dq_duplicate_rows" ->
+        "\n) ORDER BY fd"))),
+    Key("dq_duplicate_rows", dqDuplicateRows, Some(
       """WITH g AS (
         |  SELECT user_id, epoch_us(CAST(ts AS TIMESTAMP)) AS us,
         |    event_type, "value" AS v, CAST(count(*) AS BIGINT) AS c
@@ -1143,8 +1114,8 @@ object AnalyticsOps {
         |SELECT n_rows, n_distinct, n_dup_classes, n_dup_rows,
         |  max_multiplicity,
         |  round(CAST(n_dup_rows AS DOUBLE) / n_rows, 6) + 0.0 AS dup_rate
-        |FROM a""".stripMargin,
-    "dq_out_of_order" ->
+        |FROM a""".stripMargin)),
+    Key("dq_out_of_order", dqOutOfOrder, Some(
       """WITH e AS (SELECT user_id, event_id,
         |    epoch_us(CAST(ts AS TIMESTAMP)) AS us
         |  FROM events),
@@ -1169,8 +1140,8 @@ object AnalyticsOps {
         |       ELSE 'ge_1h' END AS lateness,
         |  n_events,
         |  round(CAST(n_events AS DOUBLE) / t, 6) + 0.0 AS share
-        |FROM b CROSS JOIN t ORDER BY bucket_id""".stripMargin,
-    "ab_sprt" ->
+        |FROM b CROSS JOIN t ORDER BY bucket_id""".stripMargin)),
+    Key("ab_sprt", abSprt, Some(
       """WITH daily AS (
         |  SELECT CAST(CAST(ts AS TIMESTAMP) AS DATE) AS day,
         |    CAST(count(*) AS BIGINT) AS m,
@@ -1201,8 +1172,8 @@ object AnalyticsOps {
         |  CASE WHEN llr6 >= 2.944439 THEN 'accept_lift'
         |       WHEN llr6 <= -2.944439 THEN 'accept_null'
         |       ELSE 'continue' END AS decision
-        |FROM c ORDER BY day""".stripMargin,
-    "ab_power_mde" ->
+        |FROM c ORDER BY day""".stripMargin)),
+    Key("ab_power_mde", abPowerMde, Some(
       """WITH u AS (SELECT user_id,
         |    max(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END)
         |      AS conv
@@ -1226,8 +1197,8 @@ object AnalyticsOps {
         |    * ((1.959964 + 0.841621) * (1.959964 + 0.841621))
         |    / ((0.05 * p) * (0.05 * p))) AS BIGINT)
         |    AS n_per_arm_5pct_lift
-        |FROM f""".stripMargin,
-    "ab_srm_check" ->
+        |FROM f""".stripMargin)),
+    Key("ab_srm_check", abSrmCheck, Some(
       """WITH u AS (SELECT DISTINCT user_id FROM events),
         |a AS (SELECT ((user_id % 2147483648) * 2654435761)
         |        % 2147483648 % 2 AS arm FROM u),
@@ -1240,8 +1211,8 @@ object AnalyticsOps {
         |    AS chi2,
         |  CAST((n0 - n1) * (n0 - n1) AS DOUBLE) / n_users > 3.841
         |    AS srm_flag
-        |FROM c""".stripMargin,
-    "stats_wilcoxon_signed" ->
+        |FROM c""".stripMargin)),
+    Key("stats_wilcoxon_signed", statsWilcoxonSigned, Some(
       """WITH daily AS (
         |  SELECT CAST(CAST(ts AS TIMESTAMP) AS DATE) AS day,
         |    CAST(sum(CAST("value" AS DECIMAL(18,2))) * 100 AS BIGINT)
@@ -1264,8 +1235,8 @@ object AnalyticsOps {
         |    / sqrt(CAST(2 * n * (n + 1) * (2 * n + 1) - tsum AS DOUBLE)
         |      / 3),
         |    6) + 0.0 AS z
-        |FROM w, tt""".stripMargin,
-    "stats_kendall_tau" ->
+        |FROM w, tt""".stripMargin)),
+    Key("stats_kendall_tau", statsKendallTau, Some(
       """WITH daily AS (
         |  SELECT CAST(CAST(ts AS TIMESTAMP) AS DATE) AS day,
         |    count(CASE WHEN event_type = 'click' THEN 1 END) AS c,
@@ -1285,8 +1256,8 @@ object AnalyticsOps {
         |  round(CAST(conc - disc AS DOUBLE)
         |    / sqrt(CAST(n0 - n1 AS DOUBLE) * (n0 - n2)), 6) + 0.0
         |    AS tau_b
-        |FROM t""".stripMargin,
-    "funnel_time_to_convert" ->
+        |FROM t""".stripMargin)),
+    Key("funnel_time_to_convert", funnelTimeToConvert, Some(
       """WITH e AS (SELECT user_id, event_type,
         |    epoch_us(CAST(ts AS TIMESTAMP)) AS us FROM events),
         |v AS (SELECT user_id, min(us) AS tv FROM e
@@ -1301,9 +1272,9 @@ object AnalyticsOps {
         |    / 1000000, 6) AS median_s,
         |  round(percentile_cont(0.9) WITHIN GROUP (ORDER BY lat_us)
         |    / 1000000, 6) AS p90_s
-        |FROM lat""".stripMargin,
+        |FROM lat""".stripMargin)),
     // doubled average ranks are exact integers; ρ is Pearson on them
-    "stats_spearman" ->
+    Key("stats_spearman", statsSpearman, Some(
       """WITH daily AS (
         |  SELECT CAST(CAST(ts AS TIMESTAMP) AS DATE) AS day,
         |    count(CASE WHEN event_type = 'click' THEN 1 END) AS c,
@@ -1323,8 +1294,8 @@ object AnalyticsOps {
         |    / sqrt(CAST(n * sxx - sx * sx AS DOUBLE)
         |      * (n * syy - sy * sy)),
         |    6) + 0.0 AS rho
-        |FROM t""".stripMargin,
-    "cohort_ltv" ->
+        |FROM t""".stripMargin)),
+    Key("cohort_ltv", cohortLtv, Some(
       """WITH e AS (
         |  SELECT user_id, CAST(CAST(ts AS TIMESTAMP) AS DATE) AS day,
         |    event_type, "value" FROM events),
@@ -1343,8 +1314,8 @@ object AnalyticsOps {
         |  CAST(cum_rev AS DOUBLE) AS cum_revenue,
         |  round(CAST(cum_rev AS DOUBLE) / s.users, 6) + 0.0
         |    AS ltv_per_user
-        |FROM g JOIN s USING (cohort) ORDER BY cohort, age_d""".stripMargin,
-    "dedup_latest" ->
+        |FROM g JOIN s USING (cohort) ORDER BY cohort, age_d""".stripMargin)),
+    Key("dedup_latest", dedupLatest, Some(
       """SELECT user_id, event_type, event_id, us, "value" FROM (
         |  SELECT user_id, event_type, event_id,
         |    epoch_us(CAST(ts AS TIMESTAMP)) AS us, "value",
@@ -1352,8 +1323,8 @@ object AnalyticsOps {
         |      ORDER BY epoch_us(CAST(ts AS TIMESTAMP)) DESC,
         |        event_id DESC) AS rn
         |  FROM events) WHERE rn = 1
-        |ORDER BY user_id, event_type""".stripMargin,
-    "merge_into" ->
+        |ORDER BY user_id, event_type""".stripMargin)),
+    Key("merge_into", mergeInto, Some(
       """WITH target AS (
         |  SELECT o_orderkey, o_orderstatus, o_totalprice FROM orders),
         |src AS (
@@ -1378,8 +1349,8 @@ object AnalyticsOps {
         |       ELSE 'kept' END AS action
         |FROM target t FULL OUTER JOIN src s ON t.o_orderkey = s.k
         |WHERE s.act IS NULL OR s.act <> 'D'
-        |ORDER BY o_orderkey""".stripMargin,
-    "dq_referential" ->
+        |ORDER BY o_orderkey""".stripMargin)),
+    Key("dq_referential", dqReferential, Some(
       """WITH fko AS (SELECT 'fk_orders_custkey' AS check_,
         |    CAST((SELECT count(*) FROM orders o WHERE NOT EXISTS
         |      (SELECT 1 FROM customer c WHERE c.c_custkey = o.o_custkey))
@@ -1439,8 +1410,8 @@ object AnalyticsOps {
         |  UNION ALL SELECT * FROM pks)
         |SELECT check_ AS "check", n_bad, n_total,
         |  round(CAST(n_bad AS DOUBLE) / n_total, 6) + 0.0 AS bad_rate
-        |FROM u ORDER BY check_""".stripMargin,
-    "dq_profile" ->
+        |FROM u ORDER BY check_""".stripMargin)),
+    Key("dq_profile", dqProfile, Some(
       """WITH li AS (
         |  SELECT
         |    CAST(sum(CASE WHEN l_quantity IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS null_qty,
@@ -1470,15 +1441,15 @@ object AnalyticsOps {
         |  UNION ALL SELECT 'events_null_value', null_value FROM ev
         |  UNION ALL SELECT 'documents_empty', empty_docs FROM docs
         |  UNION ALL SELECT 'documents_n_chars_mismatch', n_chars_mismatch FROM docs)
-        |ORDER BY chk""".stripMargin,
-    "cohort_retention" ->
+        |ORDER BY chk""".stripMargin)),
+    Key("cohort_retention", cohortRetention, Some(
       """WITH e AS (SELECT user_id, CAST(ts AS DATE) AS day FROM events),
         |c AS (SELECT user_id, min(day) AS cohort FROM e GROUP BY 1)
         |SELECT c.cohort, CAST(e.day - c.cohort AS BIGINT) AS offset_d,
         |  count(DISTINCT e.user_id) AS users
         |FROM e JOIN c USING (user_id)
-        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-    "funnel_steps" ->
+        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin)),
+    Key("funnel_steps", funnelSteps, Some(
       """WITH tl AS (
         |  SELECT user_id, event_type,
         |    epoch_us(CAST(ts AS TIMESTAMP)) AS us, event_id
@@ -1511,8 +1482,8 @@ object AnalyticsOps {
         |  SELECT '1_view' AS step, u1 AS users FROM tot
         |  UNION ALL SELECT '2_view_click', u2 FROM tot
         |  UNION ALL SELECT '3_view_click_purchase', u3 FROM tot)
-        |ORDER BY step""".stripMargin,
-    "anomaly_mad" ->
+        |ORDER BY step""".stripMargin)),
+    Key("anomaly_mad", anomalyMad, Some(
       """WITH med AS (
         |  SELECT event_type,
         |    round(quantile_cont("value", 0.5), 6) AS med
@@ -1528,8 +1499,8 @@ object AnalyticsOps {
         |  count(*) AS n_total,
         |  any_value(m.med) AS med, any_value(m.mad) AS mad
         |FROM events e JOIN mad m USING (event_type)
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-    "graph_hits" ->
+        |GROUP BY 1 ORDER BY 1""".stripMargin)),
+    Key("graph_hits", graphHits, Some(
       """WITH e AS (
         |  SELECT DISTINCT o_custkey AS cust, l_suppkey AS supp
         |  FROM orders JOIN lineitem ON l_orderkey = o_orderkey),
@@ -1557,12 +1528,12 @@ object AnalyticsOps {
         |r AS (SELECT *, row_number() OVER (PARTITION BY side
         |        ORDER BY score DESC, node) AS rnk FROM bo)
         |SELECT side, node, score, CAST(rnk AS INTEGER) AS rnk FROM r
-        |WHERE rnk <= 10 ORDER BY side, rnk""".stripMargin,
-    "graph_pagerank" -> prIterSql,
-    "graph_eigencentrality" -> ecIterSql,
-    "graph_label_prop" -> lpIterSql,
-    "graph_modularity" -> modularitySql,
-    "attribution" ->
+        |WHERE rnk <= 10 ORDER BY side, rnk""".stripMargin)),
+    Key("graph_pagerank", graphPagerank, Some(prIterSql)),
+    Key("graph_eigencentrality", graphEigenCentrality, Some(ecIterSql)),
+    Key("graph_label_prop", graphLabelProp, Some(lpIterSql)),
+    Key("graph_modularity", graphModularity, Some(modularitySql)),
+    Key("attribution", attribution, Some(
       """WITH e AS (
         |  SELECT event_id, user_id, event_type, "value",
         |    epoch_us(CAST(ts AS TIMESTAMP)) AS us
@@ -1588,8 +1559,8 @@ object AnalyticsOps {
         |  SELECT 'last_touch', COALESCE(last_touch, '(none)'), count(*),
         |    CAST(sum(CAST("value" AS DECIMAL(18,2))) AS DOUBLE)
         |  FROM p GROUP BY 2)
-        |ORDER BY model, touch_type""".stripMargin,
-    "rolling_active_users" ->
+        |ORDER BY model, touch_type""".stripMargin)),
+    Key("rolling_active_users", rollingActiveUsers, Some(
       """WITH act AS (
         |  SELECT DISTINCT user_id,
         |    CAST(CAST(ts AS TIMESTAMP) AS DATE) AS day FROM events),
@@ -1602,8 +1573,8 @@ object AnalyticsOps {
         |SELECT d.day, d.dau, w.wau7,
         |  round(CAST(d.dau AS DOUBLE) / w.wau7, 6) + 0.0 AS stickiness
         |FROM dau d JOIN wau w ON w.cday = d.day
-        |ORDER BY d.day""".stripMargin,
-    "join_scd2_asof" ->
+        |ORDER BY d.day""".stripMargin)),
+    Key("join_scd2_asof", joinScd2Asof, Some(
       """WITH base AS (
         |  SELECT o_orderkey, o_orderstatus, o_totalprice,
         |    CAST(o_orderdate AS DATE) AS eff
@@ -1632,8 +1603,8 @@ object AnalyticsOps {
         |WHERE h.valid_from <= p.ship_day
         |  AND (h.valid_to IS NULL OR p.ship_day < h.valid_to)
         |ORDER BY l_orderkey, l_linenumber, ship_day, version"""
-        .stripMargin,
-    "cdc_scd2" ->
+        .stripMargin)),
+    Key("cdc_scd2", cdcScd2, Some(
       """WITH base AS (
         |  SELECT o_orderkey, o_orderstatus, o_totalprice,
         |    CAST(o_orderdate AS DATE) AS eff
@@ -1652,11 +1623,12 @@ object AnalyticsOps {
         |SELECT o_orderkey, 2, o_orderstatus, o_totalprice, eff,
         |  CAST(NULL AS DATE), TRUE
         |FROM changes
-        |ORDER BY o_orderkey, version""".stripMargin,
-  ).map { case (k, v) =>
+        |ORDER BY o_orderkey, version""".stripMargin)),
+  ).map { k =>
     // the graph family's unrolled iterative oracles must replay with
     // materialized rounds (see matCtes) -- applied uniformly here so a
     // future graph key cannot ship an inlining-vulnerable oracle
-    if (k.startsWith("graph_")) (k, matCtes(v)) else (k, v)
+    if (k.name.startsWith("graph_")) k.copy(oracle = k.oracle.map(matCtes))
+    else k
   }
 }

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Key
 import graft.functions.Exact._
 import graft.sources.Tables
 
@@ -276,36 +277,13 @@ object CoreOps {
     p.select(cols: _*).orderBy("day")
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "pivot_multi"      -> pivotMulti _,
-    "scan_events"      -> scanEvents _,
-    "json_flatten"     -> jsonFlatten _,
-    "null_filter"      -> nullFilter _,
-    "local_time"       -> localTime _,
-    "string_funcs"     -> stringFuncs _,
-    "range_filter"     -> rangeFilter _,
-    "isin_filter"      -> isinFilter _,
-    "lookup_join"      -> lookupJoin _,
-    "summary_stats"    -> summaryStats _,
-    "value_counts"     -> valueCounts _,
-    "groupby_avg"      -> groupbyAvg _,
-    "max_ts"           -> maxTs _,
-    "cast_round"       -> castRound _,
-    "parse_timestamp"  -> parseTimestamp _,
-    "distinct_sorted"  -> distinctSorted _,
-    "pivot_matrix"     -> pivotMatrix _,
-    "project_rename"   -> projectRename _,
-    "describe_stats"   -> describeStats _,
-    "flagship_revenue" -> flagshipRevenue _,
-  )
-
-  val oracles: Map[String, String] = Map(
+  val keys: Seq[Key] = Seq(
     // with the EXPLICIT pivot value list the output columns are fixed, so
     // the pivot is oracle-able as conditional aggregation with matching
     // column names (closing the §7.4 "pivot has no oracle" compromise);
     // avgMoney per cell = decimal sum / count, NULL when the cell is empty
     // in both engines
-    "pivot_multi" -> {
+    Key("pivot_multi", pivotMulti, Some {
       val cells = Seq("click", "error", "purchase", "signup", "view")
         .map { t =>
           s"""CAST(sum(CAST("value" AS DECIMAL(18,2)))
@@ -316,8 +294,8 @@ object CoreOps {
       s"""SELECT CAST(CAST(ts AS TIMESTAMP) AS DATE) AS day,
          |$cells
          |FROM events GROUP BY 1 ORDER BY day""".stripMargin
-    },
-    "pivot_matrix" -> {
+    }),
+    Key("pivot_matrix", pivotMatrix, Some {
       val cells = Seq("click", "error", "purchase", "signup", "view").map { t =>
         s"""CAST(sum(CAST("value" AS DECIMAL(18,2))) FILTER (WHERE event_type = '$t') AS DOUBLE)
            | / count("value") FILTER (WHERE event_type = '$t') AS $t""".stripMargin
@@ -325,43 +303,43 @@ object CoreOps {
       s"""SELECT user_id % 10 AS user_bucket,
          |$cells
          |FROM events GROUP BY 1 ORDER BY user_bucket""".stripMargin
-    },
-    "scan_events" ->
+    }),
+    Key("scan_events", scanEvents, Some(
       s"""SELECT event_id, strftime(ts, '$DuckTsFmt') AS ts_s, user_id, event_type, "value", props
-         |FROM events ORDER BY event_id""".stripMargin,
-    "json_flatten" ->
+         |FROM events ORDER BY event_id""".stripMargin)),
+    Key("json_flatten", jsonFlatten, Some(
       """SELECT event_id, event_type,
         |  CASE WHEN json_valid(props) THEN TRY_CAST(json_extract_string(props, '$.k') AS INTEGER) END AS k,
         |  COALESCE(CASE WHEN json_valid(props) THEN TRY_CAST(json_extract_string(props, '$.k') AS INTEGER) END, -1) AS k_or_default
-        |FROM events ORDER BY event_id""".stripMargin,
-    "null_filter" ->
+        |FROM events ORDER BY event_id""".stripMargin)),
+    Key("null_filter", nullFilter, Some(
       """SELECT event_id, event_type, "value" FROM events
         |WHERE "value" IS NOT NULL AND event_type IS NOT NULL AND ts IS NOT NULL
-        |ORDER BY event_id""".stripMargin,
-    "local_time" ->
+        |ORDER BY event_id""".stripMargin)),
+    Key("local_time", localTime, Some(
       s"""SELECT event_id, strftime(ts + INTERVAL 7 HOUR, '$DuckTsFmt') AS local_time
-         |FROM events ORDER BY event_id""".stripMargin,
-    "string_funcs" ->
+         |FROM events ORDER BY event_id""".stripMargin)),
+    Key("string_funcs", stringFuncs, Some(
       """SELECT doc_id, upper(source) AS src_upper,
         |  string_split_regex(trim(text), '\s+')[1] AS first_tok,
         |  substring(text, 1, 10) AS prefix10,
         |  CAST(length(trim(text)) AS INTEGER) AS trimmed_len
-        |FROM documents ORDER BY doc_id""".stripMargin,
-    "range_filter" ->
+        |FROM documents ORDER BY doc_id""".stripMargin)),
+    Key("range_filter", rangeFilter, Some(
       """SELECT event_id, event_type, "value" FROM events
         |WHERE ts >= TIMESTAMP '2024-01-05 00:00:00' AND ts < TIMESTAMP '2024-01-20 00:00:00'
-        |ORDER BY event_id""".stripMargin,
-    "isin_filter" ->
+        |ORDER BY event_id""".stripMargin)),
+    Key("isin_filter", isinFilter, Some(
       """SELECT event_id, event_type, "value" FROM events
-        |WHERE event_type IN ('signup', 'purchase') ORDER BY event_id""".stripMargin,
-    "lookup_join" ->
+        |WHERE event_type IN ('signup', 'purchase') ORDER BY event_id""".stripMargin)),
+    Key("lookup_join", lookupJoin, Some(
       """SELECT c_custkey, c_name,
         |  COALESCE(n_name, 'Lainnya') AS n_name, COALESCE(r_name, 'Lainnya') AS r_name
         |FROM customer
         |LEFT JOIN nation ON c_nationkey = n_nationkey
         |LEFT JOIN region ON n_regionkey = r_regionkey
-        |ORDER BY c_custkey""".stripMargin,
-    "summary_stats" ->
+        |ORDER BY c_custkey""".stripMargin)),
+    Key("summary_stats", summaryStats, Some(
       """SELECT count(*) AS n,
         |  CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) / count(l_quantity) AS qty_mean,
         |  min(l_quantity) AS qty_min, max(l_quantity) AS qty_max,
@@ -369,34 +347,34 @@ object CoreOps {
         |  CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) / count(l_extendedprice) AS price_mean,
         |  min(l_extendedprice) AS price_min, max(l_extendedprice) AS price_max
         |FROM lineitem
-        |WHERE l_shipdate >= TIMESTAMP '1996-01-01' AND l_shipdate < TIMESTAMP '1997-01-01'""".stripMargin,
-    "value_counts" ->
+        |WHERE l_shipdate >= TIMESTAMP '1996-01-01' AND l_shipdate < TIMESTAMP '1997-01-01'""".stripMargin)),
+    Key("value_counts", valueCounts, Some(
       """SELECT event_type, count(*) AS cnt FROM events
-        |GROUP BY event_type ORDER BY cnt DESC, event_type""".stripMargin,
-    "groupby_avg" ->
+        |GROUP BY event_type ORDER BY cnt DESC, event_type""".stripMargin)),
+    Key("groupby_avg", groupbyAvg, Some(
       """SELECT l_returnflag,
         |  CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) / count(l_quantity) AS avg_qty,
         |  count(*) AS cnt
-        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
-    "max_ts" ->
-      s"SELECT strftime(max(ts), '$DuckTsFmt') AS max_ts FROM events",
-    "cast_round" ->
+        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin)),
+    Key("max_ts", maxTs, Some(
+      s"SELECT strftime(max(ts), '$DuckTsFmt') AS max_ts FROM events")),
+    Key("cast_round", castRound, Some(
       """SELECT l_orderkey, l_linenumber,
         |  CAST(trunc(l_quantity) AS INTEGER) AS qty_int,
         |  CAST(floor(l_extendedprice) AS BIGINT) AS price_floor,
         |  CAST(ceil(l_extendedprice) AS BIGINT) AS price_ceil,
         |  CAST(l_discount AS VARCHAR) AS disc_str
-        |FROM lineitem ORDER BY l_orderkey, l_linenumber""".stripMargin,
-    "parse_timestamp" ->
+        |FROM lineitem ORDER BY l_orderkey, l_linenumber""".stripMargin)),
+    Key("parse_timestamp", parseTimestamp, Some(
       s"""SELECT event_id,
          |  strftime(strptime(strftime(ts, '%Y-%m-%d %H:%M'), '%Y-%m-%d %H:%M'), '$DuckTsFmt') AS reparsed
-         |FROM events ORDER BY event_id""".stripMargin,
-    "distinct_sorted" ->
-      "SELECT DISTINCT event_type FROM events ORDER BY event_type",
-    "project_rename" ->
+         |FROM events ORDER BY event_id""".stripMargin)),
+    Key("distinct_sorted", distinctSorted, Some(
+      "SELECT DISTINCT event_type FROM events ORDER BY event_type")),
+    Key("project_rename", projectRename, Some(
       """SELECT doc_id AS id, lang AS language, source AS src, n_chars AS chars
-        |FROM documents ORDER BY id""".stripMargin,
-    "describe_stats" ->
+        |FROM documents ORDER BY id""".stripMargin)),
+    Key("describe_stats", describeStats, Some(
       """SELECT count(l_quantity) AS qty_count,
         |  CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) / count(l_quantity) AS qty_mean,
         |  round(stddev_samp(l_quantity), 6) AS qty_std,
@@ -407,8 +385,8 @@ object CoreOps {
         |  max(l_quantity) AS qty_max,
         |  round(stddev_samp(l_discount), 6) AS disc_std,
         |  round(quantile_cont(l_discount, 0.5), 6) AS disc_p50
-        |FROM lineitem""".stripMargin,
-    "flagship_revenue" ->
+        |FROM lineitem""".stripMargin)),
+    Key("flagship_revenue", flagshipRevenue, Some(
       """SELECT r_name,
         |  CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2)) * (1 - CAST(l_discount AS DECIMAL(18,4)))) AS DOUBLE) AS revenue,
         |  count(*) AS n_items
@@ -417,6 +395,6 @@ object CoreOps {
         |JOIN customer ON o_custkey = c_custkey
         |JOIN nation   ON c_nationkey = n_nationkey
         |JOIN region   ON n_regionkey = r_regionkey
-        |GROUP BY r_name ORDER BY r_name""".stripMargin,
+        |GROUP BY r_name ORDER BY r_name""".stripMargin)),
   )
 }

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.Key
 import graft.sources.Tables
 
 /** Deduplication suite for the LLM-training-data pipeline (SURVEY.md §2.10
@@ -948,29 +949,6 @@ object DedupOps {
            |    || substr(p_name, 3, 1) || substr(p_name, 5)
            |  ELSE p_name END""".stripMargin)
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "eval_dedup_pr" -> evalDedupPr _,
-    "eval_dedup_pr_sampled" -> evalDedupPrSampled _,
-    "eval_lsh_curve" -> evalLshCurve _,
-    "record_linkage" -> recordLinkage _,
-    "dedup_canonical" -> dedupCanonical _,
-    "dedup_pipeline"     -> dedupPipeline _,
-    "dedup_cluster"      -> dedupCluster _,
-    "dedup_edit"         -> dedupEdit _,
-    "dedup_exact"        -> dedupExact _,
-    "dedup_near"         -> dedupNear _,
-    "dedup_incremental"  -> dedupIncremental _,
-    "dedup_ngram"        -> dedupNgram _,
-    "eval_dedup_threshold" -> evalDedupThreshold _,
-    "text_shingle_stats" -> textShingleStats _,
-    "dedup_containment"  -> dedupContainment _,
-    "dedup_minhash"      -> dedupMinhash _,
-    "dedup_minhash_fast" -> dedupMinhashFast _,
-    "dedup_simhash"      -> dedupSimhash _,
-    "dedup_embed"        -> dedupEmbed _,
-    "dedup_embed_ivf"    -> dedupEmbedIvf _,
-  )
-
   /** Shared DuckDB CTE prefix: shingles and their dense ids. RECURSIVE is
     * declared unconditionally — harmless for the non-recursive oracles,
     * required by dedup_cluster's reachability CTE, and it keeps this one
@@ -1076,18 +1054,18 @@ object DedupOps {
         |        ELSE 0.0 END, 6) + 0.0 AS f1
         |FROM pr""".stripMargin
 
-  // Every oracle below runs through OracleSql.matCtesSkip (map-wide, at
-  // the bottom of this file): the shared shingle/candidate CTEs are
+  // Every oracle below runs through OracleSql.matCtesSkip (the map at
+  // the end of the list): the shared shingle/candidate CTEs are
   // referenced 4-5× each, and DuckDB re-INLINES every reference — at
   // sf≈1 the round-11 gate measured the un-materialized forms spilling
   // >200 GB across the family (same blowup class as round 10's
   // graph_bfs). `reach` is excluded: a recursive head cannot take AS
   // MATERIALIZED.
-  private val rawOracles: Map[String, String] = Map(
+  val keys: Seq[Key] = Seq(
     // cluster assignment + text_quality's scoring CTE + per-cluster
     // argmax — the composed canonical-selection semantics, re-derived
     // end to end by the oracle
-    "dedup_canonical" -> (duckShingles + duckCandInter + duckClusterComp +
+    Key("dedup_canonical", dedupCanonical, Some(duckShingles + duckCandInter + duckClusterComp +
       ",\n" + TextOps.duckQualityCte +
       """
         |,r AS (SELECT cl.cluster_id, cl.doc_id, q.quality,
@@ -1096,7 +1074,7 @@ object DedupOps {
         |        count(*) OVER (PARTITION BY cl.cluster_id) AS n_members
         |      FROM cl JOIN q USING (doc_id))
         |SELECT cluster_id, doc_id AS kept_doc, quality, n_members
-        |FROM r WHERE rn = 1 ORDER BY cluster_id""".stripMargin),
+        |FROM r WHERE rn = 1 ORDER BY cluster_id""".stripMargin)),
     // rebuilds the corrupted feed, blocks, scores with DuckDB's OWN
     // jaro_winkler_similarity (byte semantics pinned in
     // graft.functions.JaroWinkler's scaladoc), and re-derives the same
@@ -1108,7 +1086,7 @@ object DedupOps {
     // store repeats every p_name across 10 key-shifted copies (>50 GB of
     // DuckDB spill); with duplicate names the min-clean_id rank makes
     // the two forms value-identical
-    "record_linkage" ->
+    Key("record_linkage", recordLinkage, Some(
       """WITH dirty AS (
         |  SELECT p_partkey AS dirty_id,
         |    CASE CAST(p_partkey % 3 AS INT)
@@ -1132,11 +1110,11 @@ object DedupOps {
         |  FROM cand WHERE score >= 0.9)
         |SELECT dirty_id, clean_id, score
         |FROM dirty JOIN r USING (dname) WHERE rn = 1
-        |ORDER BY dirty_id""".stripMargin,
+        |ORDER BY dirty_id""".stripMargin)),
     // composite: the three pair sets from the SAME shingle CTEs, unioned
     // with method labels (CTE names suffixed to avoid colliding with the
     // shared cand/inter fragment)
-    "dedup_pipeline" -> (duckShingles + duckCandInter +
+    Key("dedup_pipeline", dedupPipeline, Some(duckShingles + duckCandInter +
       """,
         |ng AS (SELECT doc_a, doc_b
         |       FROM inter JOIN sizes za ON doc_a = za.doc_id
@@ -1178,14 +1156,14 @@ object DedupOps {
         |SELECT doc_a, doc_b,
         |  array_to_string(list_sort(list(DISTINCT method)), ',') AS methods,
         |  CAST(len(list(DISTINCT method)) AS INTEGER) AS n_methods
-        |FROM lab GROUP BY doc_a, doc_b ORDER BY doc_a, doc_b""".stripMargin),
+        |FROM lab GROUP BY doc_a, doc_b ORDER BY doc_a, doc_b""".stripMargin)),
     // transitive closure in SQL: WITH RECURSIVE reachability from every
     // edge endpoint, component id = min reached node — integer-exact, so
     // it hash-matches the Spark label-propagation fixpoint.
-    "dedup_cluster" -> (duckShingles + duckCandInter + duckClusterComp +
+    Key("dedup_cluster", dedupCluster, Some(duckShingles + duckCandInter + duckClusterComp +
       """
-        |SELECT doc_id, cluster_id FROM cl ORDER BY doc_id""".stripMargin),
-    "dedup_containment" -> (duckShingles + duckCandInter +
+        |SELECT doc_id, cluster_id FROM cl ORDER BY doc_id""".stripMargin)),
+    Key("dedup_containment", dedupContainment, Some(duckShingles + duckCandInter +
       """
         |SELECT doc_a, doc_b,
         |  round(CAST(i AS DOUBLE) / least(za.n, zb.n), 6) AS containment,
@@ -1193,8 +1171,8 @@ object DedupOps {
         |FROM inter JOIN sizes za ON doc_a = za.doc_id
         |           JOIN sizes zb ON doc_b = zb.doc_id
         |WHERE round(CAST(i AS DOUBLE) / least(za.n, zb.n), 6) >= 0.9
-        |ORDER BY doc_a, doc_b""".stripMargin),
-    "dedup_edit" -> (duckShingles + duckCandInter +
+        |ORDER BY doc_a, doc_b""".stripMargin)),
+    Key("dedup_edit", dedupEdit, Some(duckShingles + duckCandInter +
       """,
         |surv AS (SELECT doc_a, doc_b,
         |           round(CAST(i AS DOUBLE) / (za.n + zb.n - i), 6) AS jaccard
@@ -1206,20 +1184,20 @@ object DedupOps {
         |FROM surv JOIN documents da ON doc_a = da.doc_id
         |          JOIN documents db ON doc_b = db.doc_id
         |WHERE levenshtein(da.text, db.text) <= 25
-        |ORDER BY doc_a, doc_b""".stripMargin),
-    "dedup_exact" ->
+        |ORDER BY doc_a, doc_b""".stripMargin)),
+    Key("dedup_exact", dedupExact, Some(
       """SELECT doc_id, lang, source, n_chars FROM (
         |  SELECT *, row_number() OVER (PARTITION BY text ORDER BY doc_id) AS rn
         |  FROM documents) t
-        |WHERE rn = 1 ORDER BY doc_id""".stripMargin,
-    "dedup_near" ->
+        |WHERE rn = 1 ORDER BY doc_id""".stripMargin)),
+    Key("dedup_near", dedupNear, Some(
       """SELECT doc_id, lang, n_chars FROM (
         |  SELECT *, row_number() OVER (
         |    PARTITION BY trim(regexp_replace(regexp_replace(lower(text), '[^a-z0-9 ]', '', 'g'), '\s+', ' ', 'g'))
         |    ORDER BY doc_id) AS rn
         |  FROM documents) t
-        |WHERE rn = 1 ORDER BY doc_id""".stripMargin,
-    "dedup_incremental" ->
+        |WHERE rn = 1 ORDER BY doc_id""".stripMargin)),
+    Key("dedup_incremental", dedupIncremental, Some(
       """WITH f AS (SELECT doc_id, lang, source, n_chars,
         |    sha256(trim(regexp_replace(regexp_replace(lower(text), '[^a-z0-9 ]', '', 'g'), '\s+', ' ', 'g'))) AS fp
         |  FROM documents),
@@ -1228,8 +1206,8 @@ object DedupOps {
         |SELECT doc_id, lang, source, n_chars FROM shard
         |WHERE rn = 1
         |  AND fp NOT IN (SELECT fp FROM f WHERE doc_id % 10 <> 0)
-        |ORDER BY doc_id""".stripMargin,
-    "eval_dedup_threshold" -> (duckShingles + duckCandInter +
+        |ORDER BY doc_id""".stripMargin)),
+    Key("eval_dedup_threshold", evalDedupThreshold, Some(duckShingles + duckCandInter +
       """,
         |pj AS (SELECT doc_a, doc_b,
         |    round(CAST(i AS DOUBLE) / (za.n + zb.n - i), 6) AS jaccard
@@ -1247,8 +1225,8 @@ object DedupOps {
         |SELECT threshold, n_pairs, docs_removed,
         |  round(CAST(docs_removed AS DOUBLE) / n_docs, 6)
         |    AS removal_rate
-        |FROM g CROSS JOIN nd ORDER BY threshold""".stripMargin),
-    "text_shingle_stats" ->
+        |FROM g CROSS JOIN nd ORDER BY threshold""".stripMargin)),
+    Key("text_shingle_stats", textShingleStats, Some(
       """WITH t AS (SELECT doc_id,
         |    string_split_regex(trim(lower(text)), '\s+') AS toks
         |  FROM documents),
@@ -1272,18 +1250,18 @@ object DedupOps {
         |    AS avg_shingles_per_doc,
         |  round(CAST(n_rows AS DOUBLE) / n_distinct_shingles, 6)
         |    AS dup_factor
-        |FROM a CROSS JOIN tt""".stripMargin,
-    "dedup_ngram" -> (duckShingles + duckCandInter +
+        |FROM a CROSS JOIN tt""".stripMargin)),
+    Key("dedup_ngram", dedupNgram, Some(duckShingles + duckCandInter +
       """
         |SELECT doc_a, doc_b,
         |  round(CAST(i AS DOUBLE) / (za.n + zb.n - i), 6) AS jaccard
         |FROM inter JOIN sizes za ON doc_a = za.doc_id JOIN sizes zb ON doc_b = zb.doc_id
         |WHERE round(CAST(i AS DOUBLE) / (za.n + zb.n - i), 6) >= 0.3
-        |ORDER BY doc_a, doc_b""".stripMargin),
-    "eval_dedup_pr" -> duckPr("documents"),
-    "eval_dedup_pr_sampled" -> duckPr(
-      s"(SELECT * FROM documents WHERE $SampleAdmissionDuck)"),
-    "eval_lsh_curve" -> (duckShingles +
+        |ORDER BY doc_a, doc_b""".stripMargin)),
+    Key("eval_dedup_pr", evalDedupPr, Some(duckPr("documents"))),
+    Key("eval_dedup_pr_sampled", evalDedupPrSampled, Some(duckPr(
+      s"(SELECT * FROM documents WHERE $SampleAdmissionDuck)"))),
+    Key("eval_lsh_curve", evalLshCurve, Some(duckShingles +
       """,
         |hashed AS (SELECT doc_id, i, ((2*i + 1) * sid + 17*i + 7) % 2147483647 AS h
         |           FROM ws, (SELECT unnest(range(0, 32)) AS i)),
@@ -1319,8 +1297,8 @@ object DedupOps {
         |    AS capture_rate,
         |  round(1.0 - pow(1.0 - pow(mid, 2.0), 16.0), 6) + 0.0
         |    AS theory_rate
-        |FROM g ORDER BY bucket""".stripMargin),
-    "dedup_minhash" -> (duckShingles +
+        |FROM g ORDER BY bucket""".stripMargin)),
+    Key("dedup_minhash", dedupMinhash, Some(duckShingles +
       """,
         |hashed AS (SELECT doc_id, i, ((2*i + 1) * sid + 17*i + 7) % 2147483647 AS h
         |           FROM ws, (SELECT unnest(range(0, 32)) AS i)),
@@ -1341,8 +1319,9 @@ object DedupOps {
         |  round(CAST(i AS DOUBLE) / (za.n + zb.n - i), 6) AS jaccard
         |FROM inter JOIN sizes za ON doc_a = za.doc_id JOIN sizes zb ON doc_b = zb.doc_id
         |WHERE round(CAST(i AS DOUBLE) / (za.n + zb.n - i), 6) >= 0.3
-        |ORDER BY doc_a, doc_b""".stripMargin),
-    "dedup_simhash" -> (duckShingles +
+        |ORDER BY doc_a, doc_b""".stripMargin)),
+    Key("dedup_minhash_fast", dedupMinhashFast),
+    Key("dedup_simhash", dedupSimhash, Some(duckShingles +
       """,
         |hb AS (SELECT doc_id, (sid * 1103515245 + 12345) % 2147483647 AS sh_hash FROM ws),
         |bits AS (SELECT doc_id, b,
@@ -1359,18 +1338,15 @@ object DedupOps {
         |              AND a.doc_id < b.doc_id)
         |SELECT doc_a, doc_b, CAST(bit_count(xor(fp_a, fp_b)) AS INTEGER) AS hamming
         |FROM cand WHERE bit_count(xor(fp_a, fp_b)) <= 3
-        |ORDER BY doc_a, doc_b""".stripMargin),
-    "dedup_embed" ->
+        |ORDER BY doc_a, doc_b""".stripMargin)),
+    Key("dedup_embed", dedupEmbed, Some(
       """WITH e AS (SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS v FROM embeddings)
         |SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
         |  round(list_cosine_similarity(a.v, b.v), 6) AS cos_sim
         |FROM e a JOIN e b ON a.label = b.label AND a.vec_id < b.vec_id
         |WHERE list_cosine_similarity(a.v, b.v) >= 0.4
-        |ORDER BY vec_a, vec_b""".stripMargin,
-  )
-
-  val oracles: Map[String, String] =
-    rawOracles.map { case (k, v) =>
-      (k, OracleSql.matCtesSkip(v, skip = Set("reach")))
-    }
+        |ORDER BY vec_a, vec_b""".stripMargin)),
+    Key("dedup_embed_ivf", dedupEmbedIvf),
+  ).map(k => k.copy(oracle =
+    k.oracle.map(OracleSql.matCtesSkip(_, skip = Set("reach")))))
 }

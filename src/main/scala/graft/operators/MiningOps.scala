@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.Key
 import graft.functions.Exact
 import graft.sources.Tables
 
@@ -1033,35 +1034,6 @@ object MiningOps {
           .as("perplexity"))
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "eval_recsys_hitrate"    -> evalRecsysHitrate _,
-    "graph_closeness"        -> graphCloseness _,
-    "markov_entropy"         -> markovEntropy _,
-    "eval_recsys_coverage"   -> evalRecsysCoverage _,
-    "feature_lag_matrix"     -> featureLagMatrix _,
-    "graph_path_counts"      -> graphPathCounts _,
-    "feature_target_encode"  -> featureTargetEncode _,
-    "feature_woe"            -> featureWoe _,
-    "graph_rich_club"        -> graphRichClub _,
-    "graph_degree_dist"      -> graphDegreeDist _,
-    "graph_common_neighbors" -> graphCommonNeighbors _,
-    "graph_assortativity"    -> graphAssortativity _,
-    "graph_clustering_coeff" -> graphClusteringCoeff _,
-    "recsys_item_knn"        -> recsysItemKnn _,
-    "graph_bfs"          -> graphBfs _,
-    "skyline_2d"         -> skyline2d _,
-    "pareto_abc"         -> paretoAbc _,
-    "budget_waterfall"   -> budgetWaterfall _,
-    "feature_split_gain" -> featureSplitGain _,
-    "graph_kcore"        -> graphKcore _,
-    "assoc_rules"        -> assocRules _,
-    "markov_transitions" -> markovTransitions _,
-    "session_paths"      -> sessionPaths _,
-    "graph_triangles"    -> graphTriangles _,
-    "rfm_segments"       -> rfmSegments _,
-    "seasonal_dow"       -> seasonalDow _,
-  )
-
 
   // CTE materialization for graph oracles lives in [[OracleSql.matCtes]]
   // (shared with AnalyticsOps; see its scaladoc for the DuckDB inlining
@@ -1069,8 +1041,8 @@ object MiningOps {
   private[operators] def matCtes(sql: String): String =
     OracleSql.matCtes(sql)
 
-  val oracles: Map[String, String] = Map(
-    "graph_closeness" ->
+  val keys: Seq[Key] = Seq(
+    Key("graph_closeness", graphCloseness, Some(
       """WITH op AS (
         |  SELECT DISTINCT l_orderkey AS o, l_partkey AS p FROM lineitem),
         |und AS (SELECT DISTINCT a.p AS u, b.p AS v
@@ -1109,8 +1081,8 @@ object MiningOps {
         |    + CAST(n_hop3 AS DOUBLE) / 3, 6) + 0.0 AS harmonic_3,
         |  round(CAST(n_hop1 + n_hop2 + n_hop3 AS DOUBLE) / (n_nodes - 1),
         |    6) + 0.0 AS reach_share_3
-        |FROM h, nn ORDER BY seed""".stripMargin,
-    "markov_entropy" ->
+        |FROM h, nn ORDER BY seed""".stripMargin)),
+    Key("markov_entropy", markovEntropy, Some(
       """WITH e AS (
         |  SELECT user_id, event_type,
         |    epoch_us(CAST(ts AS TIMESTAMP)) AS us, event_id
@@ -1132,8 +1104,8 @@ object MiningOps {
         |    AS entropy_rate_nats,
         |  round(exp(-CAST(hs AS DOUBLE) / n_transitions), 6) + 0.0
         |    AS perplexity
-        |FROM a""".stripMargin,
-    "eval_recsys_coverage" ->
+        |FROM a""".stripMargin)),
+    Key("eval_recsys_coverage", evalRecsysCoverage, Some(
       """WITH op AS (SELECT DISTINCT l_orderkey AS o, l_partkey AS p
         |           FROM lineitem),
         |cnt AS (SELECT p AS item, count(*) AS n FROM op GROUP BY 1),
@@ -1166,8 +1138,8 @@ object MiningOps {
         |    AS coverage_active,
         |  round(2.0 * srx / (CAST(nr AS DOUBLE) * sx)
         |    - CAST(nr + 1 AS DOUBLE) / nr, 6) + 0.0 AS exposure_gini
-        |FROM g CROSS JOIN cat CROSS JOIN act""".stripMargin,
-    "feature_lag_matrix" ->
+        |FROM g CROSS JOIN cat CROSS JOIN act""".stripMargin)),
+    Key("feature_lag_matrix", featureLagMatrix, Some(
       """WITH daily AS (
         |  SELECT user_id, CAST(CAST(ts AS TIMESTAMP) AS DATE) AS day,
         |    CAST(sum(CAST("value" AS DECIMAL(18,2))) * 100 AS BIGINT)
@@ -1187,8 +1159,8 @@ object MiningOps {
         |  CAST(sum(rev_c) OVER (w RANGE BETWEEN 1 FOLLOWING
         |    AND 1 FOLLOWING) AS BIGINT) AS target_next_c
         |FROM d WINDOW w AS (PARTITION BY user_id ORDER BY dayno)
-        |ORDER BY user_id, day""".stripMargin,
-    "graph_path_counts" ->
+        |ORDER BY user_id, day""".stripMargin)),
+    Key("graph_path_counts", graphPathCounts, Some(
       """WITH op AS (
         |  SELECT DISTINCT l_orderkey AS o, l_partkey AS p FROM lineitem),
         |und AS (SELECT DISTINCT a.p AS u, b.p AS v
@@ -1216,8 +1188,8 @@ object MiningOps {
         |SELECT hop, CAST(count(*) AS BIGINT) AS n_nodes,
         |  CAST(sum(sigma) AS BIGINT) AS n_paths,
         |  CAST(max(sigma) AS BIGINT) AS max_paths
-        |FROM s3 GROUP BY 1 ORDER BY hop""".stripMargin,
-    "feature_target_encode" ->
+        |FROM s3 GROUP BY 1 ORDER BY hop""".stripMargin)),
+    Key("feature_target_encode", featureTargetEncode, Some(
       """WITH rows_ AS (
         |  SELECT event_type,
         |    ((event_id % 2147483648) * 2654435761 % 2147483648) % 5
@@ -1239,8 +1211,8 @@ object MiningOps {
         |  pos_cat - pos_cf AS pos_oof,
         |  round((pos_cat - pos_cf + 20 * (CAST(pt AS DOUBLE) / nt))
         |    / (n_cat - n_cf + 20), 6) + 0.0 AS enc
-        |FROM w ORDER BY event_type, fold""".stripMargin,
-    "feature_woe" ->
+        |FROM w ORDER BY event_type, fold""".stripMargin)),
+    Key("feature_woe", featureWoe, Some(
       """WITH binned AS (
         |  SELECT CAST(floor("value" / 50) AS BIGINT) AS bin,
         |    CAST(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END
@@ -1264,8 +1236,8 @@ object MiningOps {
         |  FROM t)
         |SELECT bin, n, pos, neg, round(woe9, 6) + 0.0 AS woe,
         |  round(CAST(ivs AS DOUBLE), 6) + 0.0 AS iv_total
-        |FROM iv ORDER BY bin""".stripMargin,
-    "eval_recsys_hitrate" ->
+        |FROM iv ORDER BY bin""".stripMargin)),
+    Key("eval_recsys_hitrate", evalRecsysHitrate, Some(
       """WITH op AS (SELECT DISTINCT l_orderkey AS o, l_partkey AS p
         |           FROM lineitem),
         |held AS (SELECT o, max(p) AS held,
@@ -1301,8 +1273,8 @@ object MiningOps {
         |      GROUP BY 1)
         |SELECT basket_size, n_orders, n_hits,
         |  round(CAST(n_hits AS DOUBLE) / n_orders, 6) + 0.0 AS hit_rate
-        |FROM g ORDER BY basket_size""".stripMargin,
-    "recsys_item_knn" ->
+        |FROM g ORDER BY basket_size""".stripMargin)),
+    Key("recsys_item_knn", recsysItemKnn, Some(
       """WITH op AS (SELECT DISTINCT l_orderkey AS o, l_partkey AS p
         |           FROM lineitem),
         |cnt AS (SELECT p AS item, count(*) AS n FROM op GROUP BY 1),
@@ -1319,8 +1291,8 @@ object MiningOps {
         |                ORDER BY cos DESC, v) AS rn FROM sc)
         |SELECT u AS item, CAST(rn AS INT) AS rn, v AS neighbor,
         |  CAST(c AS BIGINT) AS cooc, cos
-        |FROM r WHERE rn <= 3 ORDER BY item, rn""".stripMargin,
-    "graph_clustering_coeff" ->
+        |FROM r WHERE rn <= 3 ORDER BY item, rn""".stripMargin)),
+    Key("graph_clustering_coeff", graphClusteringCoeff, Some(
       """WITH op AS (SELECT DISTINCT l_orderkey AS o, l_partkey AS p
         |           FROM lineitem),
         |und AS (SELECT DISTINCT a.p AS u, b.p AS v
@@ -1350,8 +1322,8 @@ object MiningOps {
         |  round(2.0 * COALESCE(tc.tri, 0) / (deg.d * (deg.d - 1)), 6)
         |    + 0.0 AS coeff
         |FROM deg LEFT JOIN tc USING (node)
-        |WHERE deg.d >= 2 ORDER BY node""".stripMargin,
-    "graph_rich_club" ->
+        |WHERE deg.d >= 2 ORDER BY node""".stripMargin)),
+    Key("graph_rich_club", graphRichClub, Some(
       """WITH op AS (SELECT DISTINCT l_orderkey AS o, l_partkey AS p
         |           FROM lineitem),
         |und AS (SELECT DISTINCT a.p AS u, b.p AS v
@@ -1372,8 +1344,8 @@ object MiningOps {
         |  round(CASE WHEN n_club >= 2 THEN
         |      CAST(2 * COALESCE(e_club, 0) AS DOUBLE)
         |      / (n_club * (n_club - 1)) END, 6) + 0.0 AS phi
-        |FROM nk LEFT JOIN ek ON nk.k = ek.k ORDER BY nk.k""".stripMargin,
-    "graph_degree_dist" ->
+        |FROM nk LEFT JOIN ek ON nk.k = ek.k ORDER BY nk.k""".stripMargin)),
+    Key("graph_degree_dist", graphDegreeDist, Some(
       """WITH op AS (SELECT DISTINCT l_orderkey AS o, l_partkey AS p
         |           FROM lineitem),
         |und AS (SELECT DISTINCT a.p AS u, b.p AS v
@@ -1390,8 +1362,8 @@ object MiningOps {
         |t AS (SELECT CAST(sum(n_nodes) AS BIGINT) AS total FROM b)
         |SELECT log2_bin, n_nodes, min_deg, max_deg, sum_deg,
         |  round(CAST(n_nodes AS DOUBLE) / total, 6) + 0.0 AS share
-        |FROM b CROSS JOIN t ORDER BY log2_bin""".stripMargin,
-    "graph_assortativity" ->
+        |FROM b CROSS JOIN t ORDER BY log2_bin""".stripMargin)),
+    Key("graph_assortativity", graphAssortativity, Some(
       """WITH op AS (SELECT DISTINCT l_orderkey AS o, l_partkey AS p
         |           FROM lineitem),
         |und AS (SELECT DISTINCT a.p AS u, b.p AS v
@@ -1412,8 +1384,8 @@ object MiningOps {
         |        sqrt((CAST(n AS DOUBLE) * sxx - CAST(sx AS DOUBLE) * sx) *
         |             (CAST(n AS DOUBLE) * syy - CAST(sy AS DOUBLE) * sy)),
         |        6) + 0.0 AS assortativity
-        |FROM m""".stripMargin,
-    "graph_common_neighbors" ->
+        |FROM m""".stripMargin)),
+    Key("graph_common_neighbors", graphCommonNeighbors, Some(
       """WITH op AS (SELECT DISTINCT l_orderkey AS o, l_partkey AS p
         |           FROM lineitem),
         |und AS (SELECT DISTINCT a.p AS u, b.p AS v
@@ -1437,10 +1409,10 @@ object MiningOps {
         |  du.d AS du, dv.d AS dv
         |FROM nonedge n
         |JOIN deg du ON n.u = du.node JOIN deg dv ON n.v = dv.node
-        |ORDER BY cn DESC, n.u, n.v LIMIT 50""".stripMargin,
+        |ORDER BY cn DESC, n.u, n.v LIMIT 50""".stripMargin)),
     // the same 3 frontier rounds unrolled; min(hop) relaxation makes
     // every round partitioning-independent
-    "graph_bfs" ->
+    Key("graph_bfs", graphBfs, Some(
       """WITH op AS (
         |  SELECT DISTINCT l_orderkey AS o, l_partkey AS p FROM lineitem),
         |und AS (SELECT DISTINCT a.p AS u, b.p AS v
@@ -1465,10 +1437,10 @@ object MiningOps {
         |        SELECT e.v AS node, d2.hop + 1 AS hop
         |        FROM edges e JOIN d2 ON e.u = d2.node) x GROUP BY 1)
         |SELECT CAST(hop AS BIGINT) AS hop, count(*) AS n_parts
-        |FROM d3 GROUP BY 1 ORDER BY hop""".stripMargin,
+        |FROM d3 GROUP BY 1 ORDER BY hop""".stripMargin)),
     // the naive single-window skyline sweep; the banded prefix max
     // equals it because integer cost bands are order-monotone
-    "skyline_2d" ->
+    Key("skyline_2d", skyline2d, Some(
       """WITH pp AS (
         |  SELECT l_partkey,
         |    CAST(min(CAST(l_extendedprice AS DECIMAL(18,2))) * 100
@@ -1482,8 +1454,8 @@ object MiningOps {
         |  FROM pr)
         |SELECT CAST(cost_c AS DOUBLE) / 100 AS min_cost, qty, n_parts
         |FROM s WHERE pmax IS NULL OR qty > pmax
-        |ORDER BY min_cost""".stripMargin,
-    "budget_waterfall" ->
+        |ORDER BY min_cost""".stripMargin)),
+    Key("budget_waterfall", budgetWaterfall, Some(
       """WITH rev AS (
         |  SELECT l_partkey,
         |    CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))
@@ -1501,11 +1473,11 @@ object MiningOps {
         |  count(*) AS n_parts,
         |  CAST(sum(CAST(revc AS HUGEINT)) AS DOUBLE) / 1000000
         |    AS class_revenue
-        |FROM c, t GROUP BY 1 ORDER BY status""".stripMargin,
+        |FROM c, t GROUP BY 1 ORDER BY status""".stripMargin)),
     // the NAIVE single-window cumsum — the banded two-level prefix sum
     // equals it exactly (floor-banding is monotone, DECIMAL sums are
     // associative), which is the point of the oracle
-    "pareto_abc" ->
+    Key("pareto_abc", paretoAbc, Some(
       """WITH rev AS (
         |  SELECT l_partkey,
         |    CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))
@@ -1523,10 +1495,10 @@ object MiningOps {
         |  count(*) AS n_parts,
         |  CAST(sum(CAST(revc AS HUGEINT)) AS DOUBLE) / 1000000
         |    AS class_revenue
-        |FROM c, t GROUP BY 1 ORDER BY cls""".stripMargin,
+        |FROM c, t GROUP BY 1 ORDER BY cls""".stripMargin)),
     // HUGEINT prefix sums cast to BIGINT/DOUBLE at the boundary; the
     // gain expression is op-for-op the Spark form
-    "feature_split_gain" ->
+    Key("feature_split_gain", featureSplitGain, Some(
       """WITH li AS (
         |  SELECT CASE WHEN l_returnflag = 'R' THEN 1 ELSE 0 END AS y,
         |    CAST(l_quantity AS INTEGER) AS qty,
@@ -1555,10 +1527,10 @@ object MiningOps {
         |      FROM gg)
         |SELECT feature, bin AS split_bin, CAST(nl AS BIGINT) AS n_left,
         |  CAST(nr AS BIGINT) AS n_right, gain
-        |FROM r WHERE rn = 1 ORDER BY feature""".stripMargin,
+        |FROM r WHERE rn = 1 ORDER BY feature""".stripMargin)),
     // the same three peeling rounds unrolled; K = lower-median degree
     // via the explicit middle-row rule
-    "graph_kcore" ->
+    Key("graph_kcore", graphKcore, Some(
       // every CTE is MATERIALIZED: each peel round references the
       // previous round's frames more than once (the two endpoint joins
       // plus the count subqueries), and DuckDB inlines multi-referenced
@@ -1607,8 +1579,8 @@ object MiningOps {
         |SELECT CAST(3 AS BIGINT), kk.k,
         |  (SELECT count(*) FROM k2) - (SELECT count(*) FROM k3),
         |  (SELECT count(*) FROM k3) FROM kk
-        |ORDER BY round""".stripMargin,
-    "assoc_rules" ->
+        |ORDER BY round""".stripMargin)),
+    Key("assoc_rules", assocRules, Some(
       """WITH op AS (SELECT DISTINCT l_orderkey AS o, l_partkey AS p FROM lineitem),
         |n AS (SELECT count(DISTINCT o) AS n_orders FROM op),
         |ic AS (SELECT p, count(*) AS cnt FROM op GROUP BY 1),
@@ -1625,8 +1597,8 @@ object MiningOps {
         |JOIN ic ca ON pr.part_a = ca.p
         |JOIN ic cb ON pr.part_b = cb.p
         |CROSS JOIN n
-        |ORDER BY part_a, part_b""".stripMargin,
-    "markov_transitions" ->
+        |ORDER BY part_a, part_b""".stripMargin)),
+    Key("markov_transitions", markovTransitions, Some(
       """WITH e AS (
         |  SELECT user_id, event_type, event_id,
         |    epoch_us(CAST(ts AS TIMESTAMP)) AS us
@@ -1640,8 +1612,8 @@ object MiningOps {
         |SELECT src, dst, n,
         |  round(CAST(n AS DOUBLE) / sum(n) OVER (PARTITION BY src), 6) + 0.0
         |    AS prob
-        |FROM c ORDER BY src, dst""".stripMargin,
-    "session_paths" ->
+        |FROM c ORDER BY src, dst""".stripMargin)),
+    Key("session_paths", sessionPaths, Some(
       """WITH e AS (
         |  SELECT user_id, event_type, event_id,
         |    epoch_us(CAST(ts AS TIMESTAMP)) AS us
@@ -1653,8 +1625,8 @@ object MiningOps {
         |      WINDOW w AS (PARTITION BY user_id ORDER BY us, event_id))
         |SELECT a || '>' || b || '>' || c AS path, count(*) AS n
         |FROM t WHERE c IS NOT NULL
-        |GROUP BY 1 ORDER BY n DESC, path""".stripMargin,
-    "graph_triangles" ->
+        |GROUP BY 1 ORDER BY n DESC, path""".stripMargin)),
+    Key("graph_triangles", graphTriangles, Some(
       """WITH op AS (SELECT DISTINCT l_orderkey AS o, l_partkey AS p FROM lineitem),
         |und AS (
         |  SELECT DISTINCT a.p AS u, b.p AS v
@@ -1682,8 +1654,8 @@ object MiningOps {
         |SELECT (SELECT count(*) FROM deg) AS nodes,
         |       (SELECT count(*) FROM und) AS edges,
         |       tri.triangles
-        |FROM tri""".stripMargin,
-    "rfm_segments" ->
+        |FROM tri""".stripMargin)),
+    Key("rfm_segments", rfmSegments, Some(
       """WITH o AS (
         |  SELECT o_custkey, CAST(o_orderdate AS DATE) AS d, o_totalprice
         |  FROM orders),
@@ -1731,8 +1703,8 @@ object MiningOps {
         |    + CAST(monetary > m3 AS BIGINT) + CAST(monetary > m4 AS BIGINT)
         |    AS VARCHAR) AS segment
         |FROM rfm CROSS JOIN cuts
-        |ORDER BY o_custkey""".stripMargin,
-    "seasonal_dow" ->
+        |ORDER BY o_custkey""".stripMargin)),
+    Key("seasonal_dow", seasonalDow, Some(
       """WITH e AS (
         |  SELECT event_type,
         |    dayofweek(CAST(CAST(ts AS TIMESTAMP) AS DATE)) + 1 AS dow,
@@ -1746,11 +1718,12 @@ object MiningOps {
         |  round((CAST(sv AS DOUBLE) / n) /
         |        (CAST(sum(sv) OVER (PARTITION BY event_type) AS DOUBLE) /
         |         sum(n) OVER (PARTITION BY event_type)), 6) + 0.0 AS idx
-        |FROM c ORDER BY event_type, dow""".stripMargin,
-  ).map { case (k, v) =>
+        |FROM c ORDER BY event_type, dow""".stripMargin)),
+  ).map { k =>
     // the graph family's unrolled iterative oracles must replay with
     // materialized rounds (see matCtes) -- applied uniformly here so a
     // future graph key cannot ship an inlining-vulnerable oracle
-    if (k.startsWith("graph_")) (k, matCtes(v)) else (k, v)
+    if (k.name.startsWith("graph_")) k.copy(oracle = k.oracle.map(matCtes))
+    else k
   }
 }

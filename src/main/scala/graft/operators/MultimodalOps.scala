@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.Key
 import graft.sources.Tables
 
 /** Multimodal-column plumbing (north star: "treat image/audio/video as
@@ -368,19 +369,6 @@ object MultimodalOps {
       .orderBy("reason")
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "multimodal_res_buckets"  -> multimodalResBuckets _,
-    "multimodal_quality_gate" -> multimodalQualityGate _,
-    "multimodal_caption_manifest" -> multimodalCaptionManifest _,
-    "multimodal_audio_energy" -> multimodalAudioEnergy _,
-    "multimodal_scene_cut" -> multimodalSceneCut _,
-    "multimodal_phash"    -> multimodalPhash _,
-    "multimodal_decode"   -> multimodalDecode _,
-    "multimodal_features" -> multimodalFeatures _,
-    "multimodal_frames"   -> multimodalFrames _,
-    "multimodal_dedup"    -> multimodalDedup _,
-  )
-
   /** Shared pseudo-dimension oracle CTE (mirrors [[pseudoDims]]). */
   private val duckPseudoDims: String =
     """WITH pd AS (
@@ -393,8 +381,8 @@ object MultimodalOps {
       |  FROM documents WHERE length(text) >= 4),
       |""".stripMargin
 
-  val oracles: Map[String, String] = Map(
-    "multimodal_res_buckets" -> (duckPseudoDims +
+  val keys: Seq[Key] = Seq(
+    Key("multimodal_res_buckets", multimodalResBuckets, Some(duckPseudoDims +
       """b AS (SELECT *, (100 * w) // h AS ar100,
         |        CASE WHEN (100 * w) // h < 80 THEN 'portrait'
         |             WHEN (100 * w) // h <= 125 THEN 'square'
@@ -412,8 +400,8 @@ object MultimodalOps {
         |    AS fill,
         |  round(1 - CAST(px AS DOUBLE) / (n_items * pad_w * pad_h), 6)
         |    + 0.0 AS pad_waste
-        |FROM g ORDER BY bucket""".stripMargin),
-    "multimodal_quality_gate" -> (duckPseudoDims +
+        |FROM g ORDER BY bucket""".stripMargin)),
+    Key("multimodal_quality_gate", multimodalQualityGate, Some(duckPseudoDims +
       """b0 AS (SELECT doc_id, w, h, byte_len, md5(text) AS dg FROM pd),
         |bt AS (SELECT * FROM b0
         |       UNION ALL
@@ -436,8 +424,8 @@ object MultimodalOps {
         |SELECT reason, CAST(count(*) AS BIGINT) AS n_items,
         |  CAST(sum(byte_len) AS BIGINT) AS bytes
         |FROM r WHERE reason IS NOT NULL GROUP BY 1
-        |ORDER BY reason""".stripMargin),
-    "multimodal_caption_manifest" ->
+        |ORDER BY reason""".stripMargin)),
+    Key("multimodal_caption_manifest", multimodalCaptionManifest, Some(
       """WITH d AS (
         |  SELECT doc_id, lang,
         |    len(string_split_regex(trim(lower(text)), '\s+')) AS n_toks,
@@ -455,10 +443,10 @@ object MultimodalOps {
         |  FROM embeddings)
         |SELECT ds.doc_id, ds.lang, ds.n_toks, v.label, v.emb_norm,
         |  ds.split
-        |FROM ds JOIN v USING (doc_id) ORDER BY doc_id""".stripMargin,
+        |FROM ds JOIN v USING (doc_id) ORDER BY doc_id""".stripMargin)),
     // the identical integer byte sampling; list_sum/list_transform are
     // the aggregate/sequence twins
-    "multimodal_audio_energy" ->
+    Key("multimodal_audio_energy", multimodalAudioEnergy, Some(
       """WITH d AS (
         |  SELECT doc_id, text AS s, length(text) AS n FROM documents
         |  WHERE length(text) >= 64),
@@ -473,8 +461,8 @@ object MultimodalOps {
         |  FROM e)
         |SELECT doc_id, CAST(seg AS BIGINT) AS seg, energy,
         |  energy < 160 AS is_quiet
-        |FROM g ORDER BY doc_id, seg""".stripMargin,
-    "multimodal_scene_cut" ->
+        |FROM g ORDER BY doc_id, seg""".stripMargin)),
+    Key("multimodal_scene_cut", multimodalSceneCut, Some(
       """WITH d AS (
         |  SELECT doc_id, text AS s, length(text) AS n FROM documents
         |  WHERE length(text) >= 64),
@@ -495,10 +483,10 @@ object MultimodalOps {
         |SELECT doc_id,
         |  CAST(count(CASE WHEN jump > 160 THEN 1 END) AS BIGINT) AS n_cuts,
         |  max(jump) AS max_jump
-        |FROM l GROUP BY doc_id ORDER BY doc_id""".stripMargin,
+        |FROM l GROUP BY doc_id ORDER BY doc_id""".stripMargin)),
     // the identical dHash (hex-slice byte comparisons, same sampled
     // positions, same bit weights) + the same 15-bit banding and radius
-    "multimodal_phash" ->
+    Key("multimodal_phash", multimodalPhash, Some(
       """WITH base AS (SELECT doc_id, text AS s FROM documents),
         |twins AS (
         |  SELECT doc_id + 1099511627776 AS doc_id,
@@ -530,11 +518,11 @@ object MultimodalOps {
         |  FROM bb a JOIN bb c ON a.b = c.b AND a.bv = c.bv
         |    AND a.doc_id < c.doc_id)
         |SELECT doc_a, doc_b, hamming FROM p WHERE hamming <= 6
-        |ORDER BY doc_a, doc_b""".stripMargin,
-    "multimodal_decode" ->
+        |ORDER BY doc_a, doc_b""".stripMargin)),
+    Key("multimodal_decode", multimodalDecode, Some(
       """SELECT doc_id, CAST(octet_length(CAST(text AS BLOB)) AS INTEGER) AS byte_len,
         |  md5(text) AS digest, 'fake/rgb8' AS format
-        |FROM documents ORDER BY doc_id""".stripMargin,
+        |FROM documents ORDER BY doc_id""".stripMargin)),
     // FakeDecoder replay: the same (s·31 + byte) fold in HUGEINT with an
     // explicit mod-2^64 wrap, mapped back to signed int64 at the end;
     // |c/7| = |c|//7 because truncated division commutes with abs. The
@@ -542,7 +530,7 @@ object MultimodalOps {
     // ASCII-only (verified; a non-ASCII corpus would need encode()+BLOB
     // byte access, which DuckDB lacks per-byte — the Scala side is
     // byte-true either way).
-    "multimodal_features" ->
+    Key("multimodal_features", multimodalFeatures, Some(
       """WITH u AS (
         |  SELECT doc_id, CAST(length(text) AS INTEGER) AS byte_len,
         |    list_reduce(
@@ -565,8 +553,8 @@ object MultimodalOps {
         |  CAST(64 + absc % 512 AS INTEGER) AS width,
         |  CAST(64 + (absc // 7) % 512 AS INTEGER) AS height,
         |  CAST(c AS BIGINT) AS checksum
-        |FROM s ORDER BY doc_id""".stripMargin,
-    "multimodal_dedup" ->
+        |FROM s ORDER BY doc_id""".stripMargin)),
+    Key("multimodal_dedup", multimodalDedup, Some(
       """WITH m AS (SELECT doc_id, text,
         |             md5(substring(hex(encode(text)), 1, 512)) AS head
         |           FROM documents),
@@ -576,8 +564,8 @@ object MultimodalOps {
         |  min(doc_id) AS canonical, count(*) AS n_copies,
         |  any_value(n_prefix) AS n_prefix
         |FROM m JOIN c USING (head)
-        |GROUP BY 1, 2 ORDER BY canonical, digest""".stripMargin,
-    "multimodal_frames" ->
+        |GROUP BY 1, 2 ORDER BY canonical, digest""".stripMargin)),
+    Key("multimodal_frames", multimodalFrames, Some(
       """WITH m AS (SELECT doc_id, hex(encode(text)) AS hx,
         |             octet_length(encode(text)) AS len FROM documents),
         |f AS (SELECT doc_id, hx,
@@ -586,6 +574,6 @@ object MultimodalOps {
         |SELECT doc_id, CAST(frame_no AS BIGINT) AS frame_no,
         |  CAST(length(substring(hx, CAST(frame_no * 512 + 1 AS BIGINT), 512)) / 2 AS INTEGER) AS frame_bytes,
         |  md5(substring(hx, CAST(frame_no * 512 + 1 AS BIGINT), 512)) AS digest
-        |FROM f ORDER BY doc_id, frame_no""".stripMargin,
+        |FROM f ORDER BY doc_id, frame_no""".stripMargin)),
   )
 }

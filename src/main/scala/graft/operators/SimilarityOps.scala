@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.Key
 import graft.sources.Tables
 
 /** Similarity search over the `embeddings` table (SURVEY.md §2.10 + north
@@ -763,28 +764,6 @@ object SimilarityOps {
       .orderBy("k")
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "embed_knn_classify" -> embedKnnClassify _,
-    "eval_knn_sweep"     -> evalKnnSweep _,
-    "eval_roc_points"    -> evalRocPoints _,
-    "eval_lift"          -> evalLift _,
-    "eval_auc"           -> evalAuc _,
-    "eval_calibration"   -> evalCalibration _,
-    "eval_brier_decomp"  -> evalBrierDecomp _,
-    "eval_ece"           -> evalEce _,
-    "eval_ann_recall"    -> evalAnnRecall _,
-    "embed_triplet_mine" -> embedTripletMine _,
-    "embed_dim_stats" -> embedDimStats _,
-    "embed_outlier" -> embedOutlier _,
-    "embed_align"    -> embedAlign _,
-    "embed_knn_graph" -> embedKnnGraph _,
-    "sim_search"     -> simSearch _,
-    "sim_search_ann" -> simSearchAnn _,
-    "sim_search_lsh" -> simSearchLsh _,
-    "embed_centroid" -> embedCentroid _,
-    "embed_quantize" -> embedQuantize _,
-  )
-
   /** Shared oracle prelude for the centroid-probe classifier keys: 6-dp
     * class-0 centroid cosine + binary truth, mirroring
     * [[centroidScored]]. */
@@ -822,8 +801,8 @@ object SimilarityOps {
       |       FROM e, cv),
       |""".stripMargin
 
-  val oracles: Map[String, String] = Map(
-    "eval_roc_points" -> (duckCentroidScored +
+  val keys: Seq[Key] = Seq(
+    Key("eval_roc_points", evalRocPoints, Some(duckCentroidScored +
       """mb AS (SELECT y,
         |         least((CAST(CAST(cos6 AS DECIMAL(9,6)) * 1000000
         |           AS BIGINT) + 1000000) // 200000, 9) AS bin
@@ -848,8 +827,8 @@ object SimilarityOps {
         |  round(CAST(tp AS DOUBLE) / (tp + fp), 6) + 0.0 AS precision,
         |  round(CAST(2 * tp AS DOUBLE) / (2 * tp + fp + (np - tp)), 6)
         |    + 0.0 AS f1
-        |FROM c, tot ORDER BY threshold_bin DESC""".stripMargin),
-    "eval_lift" -> (duckCentroidScored +
+        |FROM c, tot ORDER BY threshold_bin DESC""".stripMargin)),
+    Key("eval_lift", evalLift, Some(duckCentroidScored +
       """g AS (SELECT cos6, CAST(count(*) AS BIGINT) AS t,
         |        CAST(sum(y) AS BIGINT) AS p
         |      FROM sc GROUP BY 1),
@@ -891,8 +870,8 @@ object SimilarityOps {
         |  round(CAST(cum_pos AS DOUBLE) / np, 6) + 0.0 AS gain,
         |  round((CAST(cum_pos AS DOUBLE) / np)
         |    / (CAST(cum_rows AS DOUBLE) / n), 6) + 0.0 AS lift
-        |FROM c ORDER BY decile""".stripMargin),
-    "eval_auc" -> (duckCentroidScored +
+        |FROM c ORDER BY decile""".stripMargin)),
+    Key("eval_auc", evalAuc, Some(duckCentroidScored +
       """g AS (SELECT cos6, CAST(sum(y) AS BIGINT) AS a,
         |        CAST(sum(1 - y) AS BIGINT) AS b,
         |        sum(CAST((CAST(cos6 AS DECIMAL(9,6)) + 1 - 2 * y)
@@ -921,8 +900,8 @@ object SimilarityOps {
         |  round(auc0 * 2 - 1, 6) + 0.0 AS gini,
         |  round(CAST(brier_num AS DOUBLE) / (4 * (n_pos + n_neg)), 6)
         |    + 0.0 AS brier
-        |FROM u""".stripMargin),
-    "eval_calibration" -> (duckCentroidScored +
+        |FROM u""".stripMargin)),
+    Key("eval_calibration", evalCalibration, Some(duckCentroidScored +
       """mb AS (SELECT y,
         |         CAST(CAST(cos6 AS DECIMAL(9,6)) * 1000000 AS BIGINT)
         |           AS m
@@ -936,8 +915,8 @@ object SimilarityOps {
         |  round(CAST(sum(y) AS DOUBLE) / count(*), 6) + 0.0 AS frac_pos,
         |  round(CAST(sum(m + 1000000) AS DOUBLE) / (2000000 * count(*))
         |    - CAST(sum(y) AS DOUBLE) / count(*), 6) + 0.0 AS gap
-        |FROM bb GROUP BY 1 ORDER BY 1""".stripMargin),
-    "eval_brier_decomp" -> (duckCentroidScored +
+        |FROM bb GROUP BY 1 ORDER BY 1""".stripMargin)),
+    Key("eval_brier_decomp", evalBrierDecomp, Some(duckCentroidScored +
       """mb AS (SELECT y,
         |         CAST(CAST(cos6 AS DECIMAL(9,6)) * 1000000 AS BIGINT)
         |           AS m
@@ -971,8 +950,8 @@ object SimilarityOps {
         |  round((CAST(rel_s AS DOUBLE) - CAST(res_s AS DOUBLE)) / nt
         |    + (CAST(npt AS DOUBLE) / nt)
         |    * (1.0 - CAST(npt AS DOUBLE) / nt), 6) + 0.0 AS brier_binned
-        |FROM s""".stripMargin),
-    "eval_ece" -> (duckCentroidScored +
+        |FROM s""".stripMargin)),
+    Key("eval_ece", evalEce, Some(duckCentroidScored +
       """mb AS (SELECT y,
         |         CAST(CAST(cos6 AS DECIMAL(9,6)) * 1000000 AS BIGINT)
         |           AS m
@@ -996,8 +975,8 @@ object SimilarityOps {
         |SELECT n_bins, nt AS n,
         |  round(CAST(ece_s AS DOUBLE) / nt, 6) + 0.0 AS ece,
         |  round(mx, 6) + 0.0 AS mce
-        |FROM s""".stripMargin),
-    "embed_knn_classify" -> (duckKnnTop5 +
+        |FROM s""".stripMargin)),
+    Key("embed_knn_classify", embedKnnClassify, Some(duckKnnTop5 +
       """v AS (SELECT a_id, a_label, label, CAST(count(*) AS BIGINT) AS c,
         |        min(rn) AS best
         |      FROM top5 GROUP BY 1, 2, 3),
@@ -1006,8 +985,8 @@ object SimilarityOps {
         |      FROM v)
         |SELECT a_id AS anchor_id, a_label AS true_label,
         |  label AS pred_label, c AS n_votes, label = a_label AS correct
-        |FROM p WHERE pick = 1 ORDER BY anchor_id""".stripMargin),
-    "eval_knn_sweep" -> (duckKnnTop5 +
+        |FROM p WHERE pick = 1 ORDER BY anchor_id""".stripMargin)),
+    Key("eval_knn_sweep", evalKnnSweep, Some(duckKnnTop5 +
       """ks AS (SELECT unnest([1, 3, 5]) AS k),
         |f AS (SELECT ks.k, t.a_id, t.a_label, t.label, t.rn
         |      FROM top5 t, ks WHERE t.rn <= ks.k),
@@ -1025,8 +1004,8 @@ object SimilarityOps {
         |SELECT k, n_anchors, n_correct,
         |  round(CAST(n_correct AS DOUBLE) / n_anchors, 6) + 0.0
         |    AS accuracy
-        |FROM w ORDER BY k""".stripMargin),
-    "eval_ann_recall" ->
+        |FROM w ORDER BY k""".stripMargin)),
+    Key("eval_ann_recall", evalAnnRecall, Some(
       """WITH e AS (SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS v
         |           FROM embeddings),
         |a AS (SELECT vec_id AS a_id, label AS a_label, v AS a_v FROM e
@@ -1062,8 +1041,8 @@ object SimilarityOps {
         |  round(COALESCE(mrr0, 0.0), 6) + 0.0 AS mrr,
         |  round(CAST(dcg AS DOUBLE) / CAST(idcg AS DOUBLE), 6) + 0.0
         |    AS ndcg_at_10
-        |FROM g CROSS JOIN i ORDER BY anchor_id""".stripMargin,
-    "embed_triplet_mine" ->
+        |FROM g CROSS JOIN i ORDER BY anchor_id""".stripMargin)),
+    Key("embed_triplet_mine", embedTripletMine, Some(
       """WITH e AS (SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS v
         |           FROM embeddings),
         |a AS (SELECT vec_id AS a_id, label AS a_label, v AS a_v FROM e
@@ -1088,8 +1067,8 @@ object SimilarityOps {
         |FROM a
         |LEFT JOIN hp ON hp.a_id = a.a_id AND hp.rn = 1
         |LEFT JOIN hn ON hn.a_id = a.a_id AND hn.rn = 1
-        |ORDER BY anchor_id""".stripMargin,
-    "embed_dim_stats" ->
+        |ORDER BY anchor_id""".stripMargin)),
+    Key("embed_dim_stats", embedDimStats, Some(
       """WITH e AS (SELECT CAST(embedding AS DOUBLE[]) AS v
         |           FROM embeddings),
         |ex AS (SELECT CAST(generate_subscripts(v, 1) - 1 AS INTEGER)
@@ -1104,8 +1083,8 @@ object SimilarityOps {
         |SELECT pos, n, dim_min, dim_max,
         |  round(sx / n, 6) + 0.0 AS dim_mean,
         |  round(sqrt((sxx - sx * sx / n) / (n - 1)), 6) + 0.0 AS dim_std
-        |FROM m ORDER BY pos""".stripMargin,
-    "embed_outlier" ->
+        |FROM m ORDER BY pos""".stripMargin)),
+    Key("embed_outlier", embedOutlier, Some(
       """WITH e AS (SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
         |ex AS (SELECT label, generate_subscripts(v, 1) - 1 AS pos, unnest(v) AS x FROM e),
         |comp AS (
@@ -1120,8 +1099,8 @@ object SimilarityOps {
         |        PARTITION BY label ORDER BY cos_sim, vec_id) AS INTEGER) AS rn
         |      FROM s)
         |SELECT label, vec_id, cos_sim, rn FROM r WHERE rn <= 5
-        |ORDER BY label, rn""".stripMargin,
-    "embed_knn_graph" ->
+        |ORDER BY label, rn""".stripMargin)),
+    Key("embed_knn_graph", embedKnnGraph, Some(
       """WITH e AS (SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
         |s AS (SELECT a.vec_id AS src, b.vec_id AS dst,
         |        round(list_cosine_similarity(a.v, b.v), 6) + 0.0 AS cos_sim
@@ -1130,8 +1109,8 @@ object SimilarityOps {
         |        PARTITION BY src ORDER BY cos_sim DESC, dst) AS INTEGER) AS rn
         |      FROM s)
         |SELECT src, dst, cos_sim, rn FROM r WHERE rn <= 3
-        |ORDER BY src, rn""".stripMargin,
-    "embed_align" ->
+        |ORDER BY src, rn""".stripMargin)),
+    Key("embed_align", embedAlign, Some(
       """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
         |p AS (SELECT vec_id AS p_id, v AS p_v FROM e
         |      WHERE vec_id % 2 = 0 AND vec_id < 100),
@@ -1141,11 +1120,11 @@ object SimilarityOps {
         |r AS (SELECT *, row_number() OVER (PARTITION BY p_id
         |        ORDER BY cos_sim DESC, vec_id) AS rn FROM s)
         |SELECT p_id, vec_id AS match_id, cos_sim FROM r WHERE rn = 1
-        |ORDER BY p_id""".stripMargin,
+        |ORDER BY p_id""".stripMargin)),
     // posexplode twin: generate_subscripts(v, 1) unnests in lockstep with
     // unnest(v) (the Postgres-style parallel unnest), so the oracle tracks
     // the ACTUAL vector length instead of hardcoding the fixture dimension
-    "embed_centroid" ->
+    Key("embed_centroid", embedCentroid, Some(
       """WITH e AS (SELECT label, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
         |ex AS (SELECT label, generate_subscripts(v, 1) - 1 AS pos, unnest(v) AS x FROM e),
         |comp AS (
@@ -1154,8 +1133,8 @@ object SimilarityOps {
         |  FROM ex GROUP BY label, pos)
         |SELECT label,
         |  array_to_string(list(CAST(CAST(round(c, 6) AS DECIMAL(18,6)) AS VARCHAR) ORDER BY pos), ',') AS centroid
-        |FROM comp GROUP BY label ORDER BY label""".stripMargin,
-    "embed_quantize" ->
+        |FROM comp GROUP BY label ORDER BY label""".stripMargin)),
+    Key("embed_quantize", embedQuantize, Some(
       """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
         |s AS (SELECT vec_id, v,
         |        CASE WHEN list_aggregate(list_transform(v, x -> abs(x)), 'max') = 0.0
@@ -1165,22 +1144,22 @@ object SimilarityOps {
         |      FROM e)
         |SELECT vec_id, round(scale, 6) AS scale_r,
         |  array_to_string(list_transform(v, x -> CAST(CAST(round(x * scale) AS INTEGER) AS VARCHAR)), ',') AS q
-        |FROM s ORDER BY vec_id""".stripMargin,
-    "sim_search" ->
+        |FROM s ORDER BY vec_id""".stripMargin)),
+    Key("sim_search", simSearch, Some(
       """WITH e AS (SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
         |p AS (SELECT vec_id AS p_id, v AS p_v FROM e WHERE vec_id = 0)
         |SELECT e.vec_id, e.label, round(list_cosine_similarity(e.v, p.p_v), 6) + 0.0 AS cos_sim
         |FROM e, p WHERE e.vec_id <> p.p_id
-        |ORDER BY cos_sim DESC, e.vec_id LIMIT 10""".stripMargin,
-    "sim_search_ann" ->
+        |ORDER BY cos_sim DESC, e.vec_id LIMIT 10""".stripMargin)),
+    Key("sim_search_ann", simSearchAnn, Some(
       """WITH e AS (SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
         |p AS (SELECT vec_id AS p_id, label AS p_label, v AS p_v FROM e WHERE vec_id = 0)
         |SELECT e.vec_id, e.label, round(list_cosine_similarity(e.v, p.p_v), 6) + 0.0 AS cos_sim
         |FROM e, p WHERE e.label = p.p_label AND e.vec_id <> p.p_id
-        |ORDER BY cos_sim DESC, e.vec_id LIMIT 10""".stripMargin,
+        |ORDER BY cos_sim DESC, e.vec_id LIMIT 10""".stripMargin)),
     // the hyperplanes are rebuilt from the same integer recipe as
     // planeLit: ((p*131 + d) * 2654435761) % 1000 / 500.0 - 1.0
-    "sim_search_lsh" ->
+    Key("sim_search_lsh", simSearchLsh, Some(
       """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
         |b AS (SELECT vec_id, v,
         |    (CASE WHEN list_dot_product(v, [((0*131 + d) * 2654435761) % 1000 / 500.0 - 1.0 FOR d IN range(0, 64)]) > 0 THEN 1 ELSE 0 END)
@@ -1191,6 +1170,6 @@ object SimilarityOps {
         |p AS (SELECT vec_id AS p_id, v AS p_v, bucket AS p_bucket FROM b WHERE vec_id = 0)
         |SELECT b.vec_id, b.bucket, round(list_cosine_similarity(b.v, p.p_v), 6) + 0.0 AS cos_sim
         |FROM b, p WHERE b.bucket = p.p_bucket AND b.vec_id <> p.p_id
-        |ORDER BY cos_sim DESC, b.vec_id LIMIT 10""".stripMargin,
+        |ORDER BY cos_sim DESC, b.vec_id LIMIT 10""".stripMargin)),
   )
 }

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.Key
 import graft.functions.Exact._
 import graft.sources.Tables
 
@@ -1123,50 +1124,6 @@ object SqlSurfaceOps {
       .orderBy(coalesce(col("attr"), lit("(null)")))
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "join_null_safe"     -> joinNullSafe _,
-    "sample_pps"         -> samplePps _,
-    "sample_systematic"  -> sampleSystematic _,
-    "sample_class_balance" -> sampleClassBalance _,
-    "sample_kfold"       -> sampleKfold _,
-    "window_rank_family" -> windowRankFamily _,
-    "window_rank_family_scaled" -> windowRankFamilyScaled _,
-    "array_funcs"        -> arrayFuncs _,
-    "variant_json"      -> variantJson _,
-    "unpivot_stack"     -> unpivotStack _,
-    "percentile_group"  -> percentileGroup _,
-    "percentile_group_approx" -> percentileGroupApprox _,
-    "width_bucket_hist" -> widthBucketHist _,
-    "grouping_sets"   -> groupingSetsAgg _,
-    "set_intersect"   -> setIntersect _,
-    "set_except"      -> setExcept _,
-    "set_except_all"  -> setExceptAll _,
-    "set_intersect_all" -> setIntersectAll _,
-    "join_full_outer" -> joinFullOuter _,
-    "join_range"      -> joinRange _,
-    "window_cumsum"   -> windowCumsum _,
-    "window_ratio_to_report" -> windowRatioToReport _,
-    "privacy_rr_counts" -> privacyRrCounts _,
-    "window_rolling_median" -> windowRollingMedian _,
-    "window_ntile"    -> windowNtile _,
-    "conditional_agg" -> conditionalAgg _,
-    "string_agg"      -> stringAgg _,
-    "sample_horvitz_thompson" -> sampleHorvitzThompson _,
-    "sample_hash"     -> sampleHash _,
-    "sample_stratified" -> sampleStratified _,
-    "sample_weighted"   -> sampleWeighted _,
-    "sample_negatives"  -> sampleNegatives _,
-    "sample_mixture"    -> sampleMixture _,
-    "sample_temperature" -> sampleTemperature _,
-    "split_train_eval"  -> splitTrainEval _,
-    "sample_epoch_shuffle" -> sampleEpochShuffle _,
-    "approx_distinct" -> approxDistinct _,
-    "approx_distinct_merge" -> approxDistinctMerge _,
-    "percentile_store_merge" -> percentileStoreMerge _,
-    "regexp_funcs"    -> regexpFuncs _,
-    "map_funcs"       -> mapFuncs _,
-  )
-
   /** Shared by window_rank_family and its _scaled twin — identical oracle
     * = machine-checked equivalence of the distributed rewrite. */
   private val rankFamilyOracle =
@@ -1179,8 +1136,8 @@ object SqlSurfaceOps {
       |  cume_dist() OVER (PARTITION BY event_type ORDER BY "value", event_id) AS cume
       |FROM events ORDER BY event_type, event_id""".stripMargin
 
-  val oracles: Map[String, String] = Map(
-    "join_null_safe" ->
+  val keys: Seq[Key] = Seq(
+    Key("join_null_safe", joinNullSafe, Some(
       """WITH e AS (SELECT user_id, event_type,
         |    epoch_us(CAST(ts AS TIMESTAMP)) AS us
         |  FROM events),
@@ -1209,8 +1166,8 @@ object SqlSurfaceOps {
         |  COALESCE(n_h1, 0) AS n_h1, COALESCE(n_h2, 0) AS n_h2,
         |  COALESCE(n_h2, 0) - COALESCE(n_h1, 0) AS delta
         |FROM g1 FULL JOIN g2 ON g1.a1 IS NOT DISTINCT FROM g2.a2
-        |ORDER BY COALESCE(COALESCE(a1, a2), '(null)')""".stripMargin,
-    "sample_pps" ->
+        |ORDER BY COALESCE(COALESCE(a1, a2), '(null)')""".stripMargin)),
+    Key("sample_pps", samplePps, Some(
       """WITH d AS (SELECT doc_id, n_chars FROM documents),
         |t AS (SELECT CAST(sum(n_chars) AS BIGINT) AS t FROM d),
         |c AS (SELECT doc_id, n_chars,
@@ -1229,8 +1186,8 @@ object SqlSurfaceOps {
         |  CAST(hi - lo AS BIGINT) AS n_hits,
         |  round(CAST(n_chars AS DOUBLE) * 20 / t, 6) + 0.0
         |    AS expected_hits
-        |FROM h WHERE hi - lo >= 1 ORDER BY doc_id""".stripMargin,
-    "sample_systematic" ->
+        |FROM h WHERE hi - lo >= 1 ORDER BY doc_id""".stripMargin)),
+    Key("sample_systematic", sampleSystematic, Some(
       """WITH u AS (SELECT user_id, CAST(count(*) AS BIGINT) AS n_events,
         |    sum(CAST("value" AS DECIMAL(18,2))) AS sp
         |  FROM events GROUP BY 1),
@@ -1243,8 +1200,8 @@ object SqlSurfaceOps {
         |SELECT user_id, n_events,
         |  round(CAST(sp AS DOUBLE), 6) + 0.0 AS spend,
         |  rn AS rank_in_frame
-        |FROM r WHERE (rn - 1) % 20 = 0 ORDER BY user_id""".stripMargin,
-    "sample_class_balance" ->
+        |FROM r WHERE (rn - 1) % 20 = 0 ORDER BY user_id""".stripMargin)),
+    Key("sample_class_balance", sampleClassBalance, Some(
       """WITH d AS (SELECT doc_id, lang, n_chars,
         |    (doc_id % 2147483648) * 2654435761 % 2147483648 AS u
         |  FROM documents),
@@ -1258,8 +1215,8 @@ object SqlSurfaceOps {
         |    AS BIGINT) AS n_kept,
         |  CAST(sum(CASE WHEN rn <= minc.cap THEN n_chars ELSE 0 END)
         |    AS BIGINT) AS kept_chars
-        |FROM r, minc GROUP BY 1, 3 ORDER BY lang""".stripMargin,
-    "sample_kfold" ->
+        |FROM r, minc GROUP BY 1, 3 ORDER BY lang""".stripMargin)),
+    Key("sample_kfold", sampleKfold, Some(
       """WITH d AS (SELECT *,
         |    (doc_id % 2147483648) * 2654435761 % 2147483648 % 5 AS fold
         |  FROM documents),
@@ -1273,8 +1230,9 @@ object SqlSurfaceOps {
         |  round((n_docs - CAST(nn AS DOUBLE) / 5)
         |    * (n_docs - CAST(nn AS DOUBLE) / 5)
         |    / (CAST(nn AS DOUBLE) / 5), 6) + 0.0 AS chi2_term
-        |FROM f, tot ORDER BY fold""".stripMargin,
-    "sample_negatives" ->
+        |FROM f, tot ORDER BY fold""".stripMargin)),
+    Key("sample_negatives", sampleNegatives,
+      prep = Some(graft.sources.Bucketed.prep), oracle = Some(
       """WITH np AS (SELECT count(*) AS np FROM part),
         |purchased AS (
         |  SELECT DISTINCT o_custkey AS c, l_partkey AS p
@@ -1297,9 +1255,9 @@ object SqlSurfaceOps {
         |          ORDER BY i, p_cand) AS INTEGER) AS neg_rank
         |      FROM neg)
         |SELECT c_custkey, p_partkey, neg_rank FROM r WHERE neg_rank <= 5
-        |ORDER BY c_custkey, neg_rank""".stripMargin,
-    "window_rank_family_scaled" -> rankFamilyOracle,
-    "window_rank_family" ->
+        |ORDER BY c_custkey, neg_rank""".stripMargin)),
+    Key("window_rank_family_scaled", windowRankFamilyScaled, Some(rankFamilyOracle)),
+    Key("window_rank_family", windowRankFamily, Some(
       """SELECT event_type, event_id, "value",
         |  first("value") OVER (PARTITION BY event_type ORDER BY "value", event_id
         |    ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING) AS min_in_type,
@@ -1307,8 +1265,8 @@ object SqlSurfaceOps {
         |    ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING) AS max_in_type,
         |  percent_rank() OVER (PARTITION BY event_type ORDER BY "value", event_id) AS pct_rank,
         |  cume_dist() OVER (PARTITION BY event_type ORDER BY "value", event_id) AS cume
-        |FROM events ORDER BY event_type, event_id""".stripMargin,
-    "array_funcs" ->
+        |FROM events ORDER BY event_type, event_id""".stripMargin)),
+    Key("array_funcs", arrayFuncs, Some(
       """WITH t AS (
         |  SELECT user_id, list_sort(list(DISTINCT event_type)) AS types_arr
         |  FROM events GROUP BY user_id)
@@ -1317,37 +1275,37 @@ object SqlSurfaceOps {
         |  CAST(len(types_arr) AS INTEGER) AS n_types,
         |  list_contains(types_arr, 'purchase') AS has_purchase,
         |  array_to_string(list_sort(list_filter(types_arr, x -> x NOT IN ('click', 'view'))), ',') AS non_browse
-        |FROM t ORDER BY user_id""".stripMargin,
-    "variant_json" ->
+        |FROM t ORDER BY user_id""".stripMargin)),
+    Key("variant_json", variantJson, Some(
       """SELECT event_type, count(*) AS cnt,
         |  CAST(sum(CAST(json_extract(props, '$.k') AS BIGINT)) AS BIGINT) AS sum_k,
         |  CAST(min(CAST(json_extract(props, '$.k') AS INTEGER)) AS INTEGER) AS min_k,
         |  CAST(max(CAST(json_extract(props, '$.k') AS INTEGER)) AS INTEGER) AS max_k
-        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin,
-    "unpivot_stack" ->
+        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin)),
+    Key("unpivot_stack", unpivotStack, Some(
       """SELECT l_orderkey, l_linenumber, metric, val FROM (
         |  SELECT l_orderkey, l_linenumber, 'l_quantity' AS metric, l_quantity AS val FROM lineitem
         |  UNION ALL
         |  SELECT l_orderkey, l_linenumber, 'l_extendedprice', l_extendedprice FROM lineitem
         |  UNION ALL
         |  SELECT l_orderkey, l_linenumber, 'l_discount', l_discount FROM lineitem) t
-        |ORDER BY l_orderkey, l_linenumber, metric""".stripMargin,
-    "percentile_group" ->
+        |ORDER BY l_orderkey, l_linenumber, metric""".stripMargin)),
+    Key("percentile_group", percentileGroup, Some(
       """SELECT l_returnflag,
         |  round(percentile_cont(0.5) WITHIN GROUP (ORDER BY l_quantity), 6) AS p50_qty,
         |  round(percentile_cont(0.9) WITHIN GROUP (ORDER BY l_quantity), 6) AS p90_qty,
         |  round(percentile_cont(0.5) WITHIN GROUP (ORDER BY l_extendedprice), 6) AS p50_price
-        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
+        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin)),
     // ── invariant oracles (round 11): the approx value is engine-specific
     // but its error BOUND is a boolean DuckDB can assert — the exact
     // columns are verified exactly, and the Spark side's bound booleans
     // must come out TRUE or the hash compare fails. ──
-    "approx_distinct" ->
+    Key("approx_distinct", approxDistinct, Some(
       """SELECT event_type,
         |  CAST(count(DISTINCT user_id) AS BIGINT) AS exact_users,
         |  TRUE AS approx_ok
-        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin,
-    "approx_distinct_merge" ->
+        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin)),
+    Key("approx_distinct_merge", approxDistinctMerge, Some(
       """SELECT
         |  CAST(count(DISTINCT CAST(CAST(ts AS TIMESTAMP) AS DATE)) AS BIGINT) AS n_days,
         |  (SELECT CAST(sum(c) AS BIGINT) FROM (
@@ -1355,26 +1313,26 @@ object SqlSurfaceOps {
         |     GROUP BY CAST(CAST(ts AS TIMESTAMP) AS DATE)) d) AS sum_daily_exact,
         |  CAST(count(DISTINCT user_id) AS BIGINT) AS exact_total_users,
         |  TRUE AS union_ok
-        |FROM events""".stripMargin,
-    "percentile_group_approx" ->
+        |FROM events""".stripMargin)),
+    Key("percentile_group_approx", percentileGroupApprox, Some(
       """SELECT l_returnflag, CAST(count(*) AS BIGINT) AS n_rows,
         |  TRUE AS p50_qty_ok, TRUE AS p90_qty_ok, TRUE AS p50_price_ok
-        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
-    "percentile_store_merge" ->
+        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin)),
+    Key("percentile_store_merge", percentileStoreMerge, Some(
       """SELECT event_type,
         |  CAST(count(DISTINCT CAST(CAST(ts AS TIMESTAMP) AS DATE)) AS BIGINT) AS n_days,
         |  TRUE AS p50_ok, TRUE AS p90_ok
-        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin,
+        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin)),
     // DuckDB has no width_bucket; this spells out Spark's exact formula
     // (bucketSize = (hi-lo)/n, bucket = floor((x-lo)/bucketSize)+1, with
     // the out-of-range rails) so the arithmetic is IEEE-identical
-    "width_bucket_hist" ->
+    Key("width_bucket_hist", widthBucketHist, Some(
       """SELECT CASE WHEN o_totalprice < 0.0 THEN 0
         |            WHEN o_totalprice >= 600000.0 THEN 13
         |            ELSE CAST(floor(o_totalprice / 50000.0) AS BIGINT) + 1 END AS bucket,
         |  count(*) AS cnt
-        |FROM orders GROUP BY bucket ORDER BY bucket""".stripMargin,
-    "grouping_sets" ->
+        |FROM orders GROUP BY bucket ORDER BY bucket""".stripMargin)),
+    Key("grouping_sets", groupingSetsAgg, Some(
       """SELECT COALESCE(l_returnflag, '<all>') AS returnflag,
         |  COALESCE(l_linestatus, '<all>') AS linestatus,
         |  count(*) AS cnt,
@@ -1382,31 +1340,31 @@ object SqlSurfaceOps {
         |  CAST(grouping(l_returnflag) AS INTEGER) AS g_rf,
         |  CAST(grouping(l_linestatus) AS INTEGER) AS g_ls
         |FROM lineitem GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus))
-        |ORDER BY g_rf, g_ls, returnflag, linestatus""".stripMargin,
-    "set_except_all" ->
+        |ORDER BY g_rf, g_ls, returnflag, linestatus""".stripMargin)),
+    Key("set_except_all", setExceptAll, Some(
       """SELECT user_id, event_type, count(*) AS cnt FROM (
         |  SELECT user_id, event_type FROM events
         |  EXCEPT ALL
         |  SELECT DISTINCT user_id, event_type FROM events) t
         |GROUP BY user_id, event_type
-        |ORDER BY user_id, event_type""".stripMargin,
-    "set_intersect_all" ->
+        |ORDER BY user_id, event_type""".stripMargin)),
+    Key("set_intersect_all", setIntersectAll, Some(
       """SELECT user_id, count(*) AS cnt FROM (
         |  SELECT user_id FROM events WHERE event_type = 'click'
         |  INTERSECT ALL
         |  SELECT user_id FROM events WHERE event_type = 'view') t
-        |GROUP BY user_id ORDER BY user_id""".stripMargin,
-    "set_intersect" ->
+        |GROUP BY user_id ORDER BY user_id""".stripMargin)),
+    Key("set_intersect", setIntersect, Some(
       """SELECT user_id FROM events WHERE event_type = 'click'
         |INTERSECT
         |SELECT user_id FROM events WHERE event_type = 'purchase'
-        |ORDER BY user_id""".stripMargin,
-    "set_except" ->
+        |ORDER BY user_id""".stripMargin)),
+    Key("set_except", setExcept, Some(
       """SELECT user_id FROM events WHERE event_type = 'click'
         |EXCEPT
         |SELECT user_id FROM events WHERE event_type = 'purchase'
-        |ORDER BY user_id""".stripMargin,
-    "join_full_outer" ->
+        |ORDER BY user_id""".stripMargin)),
+    Key("join_full_outer", joinFullOuter, Some(
       """SELECT COALESCE(c.nationkey, s.nationkey) AS nationkey,
         |  COALESCE(c.n_customers, 0) AS n_customers,
         |  COALESCE(s.n_suppliers, 0) AS n_suppliers
@@ -1415,8 +1373,8 @@ object SqlSurfaceOps {
         |FULL OUTER JOIN (SELECT s_nationkey AS nationkey, count(*) AS n_suppliers
         |      FROM supplier GROUP BY 1) s
         |USING (nationkey)
-        |ORDER BY nationkey""".stripMargin,
-    "join_range" ->
+        |ORDER BY nationkey""".stripMargin)),
+    Key("join_range", joinRange, Some(
       """WITH ev AS (
         |  SELECT event_id, user_id, event_type, epoch_ns(ts) // 1000 AS us
         |  FROM events)
@@ -1425,14 +1383,14 @@ object SqlSurfaceOps {
         |LEFT JOIN ev c ON c.user_id = e.user_id AND c.event_type = 'click'
         |  AND c.us BETWEEN e.us - 60000000 AND e.us
         |WHERE e.event_type = 'error'
-        |GROUP BY e.event_id ORDER BY e.event_id""".stripMargin,
-    "window_cumsum" ->
+        |GROUP BY e.event_id ORDER BY e.event_id""".stripMargin)),
+    Key("window_cumsum", windowCumsum, Some(
       """SELECT o_custkey, o_orderkey,
         |  CAST(sum(CAST(o_totalprice AS DECIMAL(18,2)))
         |    OVER (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey)
         |    AS DOUBLE) AS revenue_to_date
-        |FROM orders ORDER BY o_custkey, o_orderkey""".stripMargin,
-    "privacy_rr_counts" ->
+        |FROM orders ORDER BY o_custkey, o_orderkey""".stripMargin)),
+    Key("privacy_rr_counts", privacyRrCounts, Some(
       """WITH b AS (
         |  SELECT event_type,
         |    CASE WHEN "value" > 100 THEN 1 ELSE 0 END AS y,
@@ -1445,57 +1403,57 @@ object SqlSurfaceOps {
         |  CAST(sum(rep) AS BIGINT) AS r,
         |  round((CAST(sum(rep) AS DOUBLE) / count(*) - 0.25) / 0.5, 6)
         |    + 0.0 AS estimate
-        |FROM f GROUP BY event_type ORDER BY event_type""".stripMargin,
-    "window_ratio_to_report" ->
+        |FROM f GROUP BY event_type ORDER BY event_type""".stripMargin)),
+    Key("window_ratio_to_report", windowRatioToReport, Some(
       """SELECT event_id, event_type, "value",
         |  round("value" /
         |    CAST(sum(CAST("value" AS DECIMAL(18,2)))
         |      OVER (PARTITION BY event_type) AS DOUBLE), 9) AS share
-        |FROM events ORDER BY event_id""".stripMargin,
-    "window_rolling_median" ->
+        |FROM events ORDER BY event_id""".stripMargin)),
+    Key("window_rolling_median", windowRollingMedian, Some(
       """SELECT event_id,
         |  round(quantile_cont("value", 0.5) OVER (
         |    PARTITION BY event_type
         |    ORDER BY epoch_us(CAST(ts AS TIMESTAMP)), event_id
         |    ROWS BETWEEN 49 PRECEDING AND CURRENT ROW), 6) + 0.0 AS med
-        |FROM events ORDER BY event_id""".stripMargin,
-    "window_ntile" ->
+        |FROM events ORDER BY event_id""".stripMargin)),
+    Key("window_ntile", windowNtile, Some(
       """SELECT o_orderkey, o_totalprice,
         |  CAST(ntile(4) OVER (ORDER BY o_totalprice DESC, o_orderkey)
         |    AS INTEGER) AS quartile
-        |FROM orders ORDER BY o_orderkey""".stripMargin,
-    "conditional_agg" ->
+        |FROM orders ORDER BY o_orderkey""".stripMargin)),
+    Key("conditional_agg", conditionalAgg, Some(
       """SELECT l_returnflag, count(*) AS cnt,
         |  count(*) FILTER (WHERE l_discount > 0.05) AS cnt_discounted,
         |  CAST(COALESCE(sum(CAST(l_extendedprice AS DECIMAL(18,2)))
         |    FILTER (WHERE l_discount > 0.05), 0) AS DOUBLE) AS rev_discounted,
         |  count(*) FILTER (WHERE l_quantity >= 25) AS cnt_bulk
-        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
-    "string_agg" ->
+        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin)),
+    Key("string_agg", stringAgg, Some(
       """SELECT r_name, string_agg(n_name, ',' ORDER BY n_name) AS nations
         |FROM nation JOIN region ON n_regionkey = r_regionkey
-        |GROUP BY r_name ORDER BY r_name""".stripMargin,
-    "sample_hash" ->
+        |GROUP BY r_name ORDER BY r_name""".stripMargin)),
+    Key("sample_hash", sampleHash, Some(
       """SELECT l_returnflag, count(*) AS cnt,
         |  CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_price
         |FROM lineitem WHERE l_orderkey % 20 = 0
-        |GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
-    "sample_stratified" ->
+        |GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin)),
+    Key("sample_stratified", sampleStratified, Some(
       """SELECT l_returnflag, count(*) AS cnt,
         |  CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_price,
         |  CASE l_returnflag WHEN 'A' THEN 2 WHEN 'N' THEN 5 ELSE 10 END AS rate_denom
         |FROM lineitem
         |WHERE (l_orderkey * 8 + l_linenumber) %
         |  (CASE l_returnflag WHEN 'A' THEN 2 WHEN 'N' THEN 5 ELSE 10 END) = 0
-        |GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
-    "sample_weighted" ->
+        |GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin)),
+    Key("sample_weighted", sampleWeighted, Some(
       """SELECT doc_id, n_chars,
         |  round(pow(((doc_id % 2147483648) * 2654435761 % 2147483648 + 1)
         |              / 2147483649.0,
         |            1.0 / GREATEST(n_chars, 1)), 9) AS es_key
         |FROM documents
-        |ORDER BY es_key DESC, doc_id LIMIT 50""".stripMargin,
-    "sample_horvitz_thompson" ->
+        |ORDER BY es_key DESC, doc_id LIMIT 50""".stripMargin)),
+    Key("sample_horvitz_thompson", sampleHorvitzThompson, Some(
       """WITH e AS (
         |  SELECT event_type, "value",
         |    CASE event_type WHEN 'purchase' THEN 800000
@@ -1526,8 +1484,8 @@ object SqlSurfaceOps {
         |  CAST(sum(sv_true) AS DOUBLE) AS true_revenue,
         |  round(CAST(sum(rev_term) AS DOUBLE)
         |    / CAST(sum(sv_true) AS DOUBLE) - 1.0, 6) + 0.0 AS rev_rel_err
-        |FROM t""".stripMargin,
-    "sample_mixture" ->
+        |FROM t""".stripMargin)),
+    Key("sample_mixture", sampleMixture, Some(
       """WITH w AS (SELECT * FROM (VALUES ('en', 4), ('de', 2), ('fr', 2),
         |             ('es', 1), ('zh', 1)) AS t(lang, wt)),
         |c AS (SELECT lang, count(*) AS available FROM documents GROUP BY 1),
@@ -1546,8 +1504,8 @@ object SqlSurfaceOps {
         |         GROUP BY 1)
         |SELECT lang, available, weight, target_n, accept_ppm,
         |  COALESCE(kept_n, 0) AS kept_n, COALESCE(kept_chars, 0) AS kept_chars
-        |FROM tgt LEFT JOIN kept USING (lang) ORDER BY lang""".stripMargin,
-    "split_train_eval" ->
+        |FROM tgt LEFT JOIN kept USING (lang) ORDER BY lang""".stripMargin)),
+    Key("split_train_eval", splitTrainEval, Some(
       """WITH d AS (
         |  SELECT lang, n_chars,
         |    ((doc_id % 2147483648) * 2654435761 % 2147483648) % 1000000 AS u
@@ -1556,8 +1514,8 @@ object SqlSurfaceOps {
         |            WHEN u < 990000 THEN 'val' ELSE 'test' END AS split,
         |  count(*) AS n_docs, CAST(sum(n_chars) AS BIGINT) AS n_chars,
         |  CAST(count(DISTINCT lang) AS BIGINT) AS n_langs
-        |FROM d GROUP BY 1 ORDER BY split""".stripMargin,
-    "sample_epoch_shuffle" ->
+        |FROM d GROUP BY 1 ORDER BY split""".stripMargin)),
+    Key("sample_epoch_shuffle", sampleEpochShuffle, Some(
       """WITH e AS (SELECT unnest([1, 2]) AS epoch),
         |u AS (
         |  SELECT e.epoch, d.doc_id,
@@ -1568,8 +1526,8 @@ object SqlSurfaceOps {
         |  CAST(row_number() OVER (PARTITION BY epoch, u // 268435456
         |    ORDER BY u, doc_id) AS INTEGER) AS pos,
         |  doc_id
-        |FROM u ORDER BY epoch, shard, pos""".stripMargin,
-    "sample_temperature" ->
+        |FROM u ORDER BY epoch, shard, pos""".stripMargin)),
+    Key("sample_temperature", sampleTemperature, Some(
       """WITH c AS (SELECT lang, count(*) AS available FROM documents GROUP BY 1),
         |w AS (SELECT lang, available,
         |        CAST(floor(sqrt(available) * 1000000) AS BIGINT) AS wppm
@@ -1592,14 +1550,14 @@ object SqlSurfaceOps {
         |         GROUP BY 1)
         |SELECT lang, available, wppm, target_n, accept_ppm,
         |  COALESCE(kept_n, 0) AS kept_n, COALESCE(kept_chars, 0) AS kept_chars
-        |FROM a LEFT JOIN kept USING (lang) ORDER BY lang""".stripMargin,
-    "regexp_funcs" ->
+        |FROM a LEFT JOIN kept USING (lang) ORDER BY lang""".stripMargin)),
+    Key("regexp_funcs", regexpFuncs, Some(
       """SELECT COALESCE(regexp_extract(text, '^([A-Za-z]+)', 1), '') AS first_word,
         |  count(*) AS cnt
-        |FROM documents GROUP BY 1 ORDER BY cnt DESC, first_word""".stripMargin,
-    "map_funcs" ->
+        |FROM documents GROUP BY 1 ORDER BY cnt DESC, first_word""".stripMargin)),
+    Key("map_funcs", mapFuncs, Some(
       """SELECT user_id, event_type, count(*) AS cnt
         |FROM events GROUP BY user_id, event_type
-        |ORDER BY user_id, event_type""".stripMargin,
+        |ORDER BY user_id, event_type""".stripMargin)),
   )
 }

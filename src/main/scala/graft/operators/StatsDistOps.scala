@@ -2,6 +2,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.Key
 import graft.sources.Tables
 
 /** Distribution shape, inequality, histograms, privacy and data-quality reports — one of the [[StatsOps]] family traits (split from
@@ -745,35 +746,8 @@ private[operators] trait StatsDistOps extends StatsOpsBase {
       .orderBy("event_type", "dow")
   }
 
-  protected val distQueries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "dist_palma" -> distPalma _,
-    "dist_quintile_shares" -> distQuintileShares _,
-    "privacy_dp_mean" -> privacyDpMean _,
-    "privacy_suppression" -> privacySuppression _,
-    "dq_gap_scan" -> dqGapScan _,
-    "dist_theil" -> distTheil _,
-    "dist_atkinson" -> distAtkinson _,
-    "sample_neyman_alloc" -> sampleNeymanAlloc _,
-    "privacy_dp_counts" -> privacyDpCounts _,
-    "privacy_t_closeness" -> privacyTCloseness _,
-    "dist_hhi" -> distHhi _,
-    "privacy_l_diversity" -> privacyLDiversity _,
-    "hist_2d" -> hist2d _,
-    "dq_freshness" -> dqFreshness _,
-    "dist_lorenz" -> distLorenz _,
-    "dq_volume_anomaly" -> dqVolumeAnomaly _,
-    "backlog_curve" -> backlogCurve _,
-    "sample_ess" -> sampleEss _,
-    "session_gap_hist" -> sessionGapHist _,
-    "privacy_kanon" -> privacyKanon _,
-    "hist_kde" -> histKde _,
-    "weighted_median" -> weightedMedian _,
-    "group_entropy" -> groupEntropy _,
-    "hist_equidepth" -> histEquidepth _,
-  )
-
-  protected val distOracles: Map[String, String] = Map(
-    "privacy_dp_mean" ->
+  protected val distKeys: Seq[Key] = Seq(
+    Key("privacy_dp_mean", privacyDpMean, Some(
       """WITH c AS (
         |  SELECT event_type, CAST(count(*) AS BIGINT) AS c,
         |    CAST(sum(CASE WHEN CAST("value" AS DECIMAL(18,2)) < 0
@@ -805,8 +779,8 @@ private[operators] trait StatsDistOps extends StatsOpsBase {
         |  round(noisy_sum, 6) + 0.0 AS noisy_sum,
         |  round(noisy_n, 6) + 0.0 AS noisy_count,
         |  round(noisy_sum / noisy_n, 6) + 0.0 AS dp_mean
-        |FROM n ORDER BY event_type""".stripMargin,
-    "privacy_suppression" ->
+        |FROM n ORDER BY event_type""".stripMargin)),
+    Key("privacy_suppression", privacySuppression, Some(
       """WITH cells AS (
         |  SELECT event_type,
         |    (CAST(CAST(ts AS TIMESTAMP) AS DATE) - DATE '1970-01-01')
@@ -832,8 +806,8 @@ private[operators] trait StatsDistOps extends StatsOpsBase {
         |SELECT event_type, CAST(dow AS BIGINT) AS dow,
         |  CASE WHEN NOT suppressed THEN n END AS released_n,
         |  suppressed, primary_sup AS is_primary
-        |FROM f ORDER BY event_type, dow""".stripMargin,
-    "dq_gap_scan" -> (duckDailyTyped +
+        |FROM f ORDER BY event_type, dow""".stripMargin)),
+    Key("dq_gap_scan", dqGapScan, Some(duckDailyTyped +
       """g AS (SELECT event_type, day,
         |    day - lag(day, 1) OVER (PARTITION BY event_type
         |      ORDER BY day) AS gap
@@ -849,8 +823,8 @@ private[operators] trait StatsDistOps extends StatsOpsBase {
         |  CAST(last_day - first_day + 1 AS BIGINT) AS span_days,
         |  CAST(last_day - first_day + 1 - n_days AS BIGINT) AS n_missing,
         |  n_gaps, longest_gap
-        |FROM a ORDER BY event_type""".stripMargin),
-    "dist_theil" -> (duckUserSpendPos +
+        |FROM a ORDER BY event_type""".stripMargin)),
+    Key("dist_theil", distTheil, Some(duckUserSpendPos +
       """t AS (SELECT n, mu,
         |        CAST(round(xc / mu * ln(xc / mu), 9) AS DECIMAL(18,9))
         |          AS tt,
@@ -859,8 +833,8 @@ private[operators] trait StatsDistOps extends StatsOpsBase {
         |SELECT n AS n_users, round(mu, 6) + 0.0 AS mean_cents,
         |  round(CAST(sum(tt) AS DOUBLE) / n, 6) + 0.0 AS theil_t,
         |  round(CAST(sum(tl) AS DOUBLE) / n, 6) + 0.0 AS theil_l
-        |FROM t GROUP BY n, mu""".stripMargin),
-    "dist_atkinson" -> (duckUserSpendPos +
+        |FROM t GROUP BY n, mu""".stripMargin)),
+    Key("dist_atkinson", distAtkinson, Some(duckUserSpendPos +
       """t AS (SELECT n, mu,
         |        CAST(round(sqrt(xc / mu), 9) AS DECIMAL(18,9)) AS th,
         |        CAST(round(ln(CAST(xc AS DOUBLE)), 9) AS DECIMAL(18,9))
@@ -874,8 +848,8 @@ private[operators] trait StatsDistOps extends StatsOpsBase {
         |    AS a_eps_1,
         |  round(1 - CAST(n AS DOUBLE) / CAST(sum(tr) AS DOUBLE), 6)
         |    + 0.0 AS a_eps_2
-        |FROM t GROUP BY n, mu""".stripMargin),
-    "sample_neyman_alloc" ->
+        |FROM t GROUP BY n, mu""".stripMargin)),
+    Key("sample_neyman_alloc", sampleNeymanAlloc, Some(
       """WITH s AS (
         |  SELECT event_type, CAST(count(*) AS BIGINT) AS nh,
         |    CAST(sum(CAST(CAST("value" AS DECIMAL(18,2)) * 100
@@ -907,8 +881,8 @@ private[operators] trait StatsDistOps extends StatsOpsBase {
         |  n_base + CASE WHEN rk <= rem THEN 1 ELSE 0 END AS n_alloc,
         |  CAST(round(1000 * CAST(nh AS DOUBLE) / tn, 0) AS BIGINT)
         |    AS n_proportional
-        |FROM rk ORDER BY event_type""".stripMargin,
-    "privacy_dp_counts" ->
+        |FROM rk ORDER BY event_type""".stripMargin)),
+    Key("privacy_dp_counts", privacyDpCounts, Some(
       """WITH c AS (SELECT event_type, CAST(count(*) AS BIGINT) AS c,
         |    CAST(row_number() OVER (ORDER BY event_type) AS BIGINT) AS j
         |  FROM events GROUP BY event_type),
@@ -921,8 +895,8 @@ private[operators] trait StatsDistOps extends StatsOpsBase {
         |  FROM u)
         |SELECT event_type, CAST(1.0 AS DOUBLE) AS epsilon,
         |  round(c + noise, 6) + 0.0 AS noisy_count
-        |FROM n ORDER BY event_type""".stripMargin,
-    "privacy_t_closeness" ->
+        |FROM n ORDER BY event_type""".stripMargin)),
+    Key("privacy_t_closeness", privacyTCloseness, Some(
       """WITH cells AS (
         |  SELECT ((CAST(ts AS DATE) - DATE '1970-01-01') % 7 + 7) % 7
         |      AS dow,
@@ -954,8 +928,8 @@ private[operators] trait StatsDistOps extends StatsOpsBase {
         |    AS rows_gt_02,
         |  round(CAST(sum(CASE WHEN t > 0.2 THEN ng ELSE 0 END) AS DOUBLE)
         |    / sum(ng), 6) + 0.0 AS pct_rows_gt_02
-        |FROM s""".stripMargin,
-    "dist_hhi" ->
+        |FROM s""".stripMargin)),
+    Key("dist_hhi", distHhi, Some(
       """WITH r AS (
         |  SELECT p.p_brand, l.l_suppkey,
         |    CAST(sum(CAST(l.l_extendedprice AS DECIMAL(18,2)))
@@ -973,8 +947,8 @@ private[operators] trait StatsDistOps extends StatsOpsBase {
         |  CAST(sq AS DOUBLE)
         |    / (CAST(tot AS DOUBLE) * CAST(tot AS DOUBLE)) > 0.25
         |    AS concentrated
-        |FROM g ORDER BY p_brand""".stripMargin,
-    "privacy_l_diversity" ->
+        |FROM g ORDER BY p_brand""".stripMargin)),
+    Key("privacy_l_diversity", privacyLDiversity, Some(
       """WITH g AS (
         |  SELECT (CAST(CAST(ts AS TIMESTAMP) AS DATE)
         |      - DATE '1970-01-01') % 7 AS dow,
@@ -995,8 +969,8 @@ private[operators] trait StatsDistOps extends StatsOpsBase {
         |    AS rows_lt_3,
         |  round(CAST(sum(CASE WHEN l < 3 THEN k ELSE 0 END) AS DOUBLE)
         |    / sum(k), 6) + 0.0 AS pct_rows_lt_3
-        |FROM g""".stripMargin,
-    "hist_2d" ->
+        |FROM g""".stripMargin)),
+    Key("hist_2d", hist2d, Some(
       """WITH e AS (SELECT
         |    (epoch_us(CAST(ts AS TIMESTAMP)) // 86400000000 + 4) % 7 + 1
         |      AS dow,
@@ -1007,8 +981,8 @@ private[operators] trait StatsDistOps extends StatsOpsBase {
         |t AS (SELECT CAST(sum(cnt) AS BIGINT) AS total FROM g)
         |SELECT dow, hr, cnt,
         |  round(CAST(cnt AS DOUBLE) / total, 6) + 0.0 AS share
-        |FROM g CROSS JOIN t ORDER BY dow, hr""".stripMargin,
-    "dq_freshness" ->
+        |FROM g CROSS JOIN t ORDER BY dow, hr""".stripMargin)),
+    Key("dq_freshness", dqFreshness, Some(
       """WITH e AS (SELECT event_type,
         |    epoch_us(CAST(ts AS TIMESTAMP)) AS us FROM events),
         |w AS (SELECT max(us) AS wm FROM e)
@@ -1019,9 +993,9 @@ private[operators] trait StatsDistOps extends StatsOpsBase {
         |    AS BIGINT) AS n_last_24h,
         |  (any_value(wm) - max(us)) // 60000000 >= 60 AS is_stale
         |FROM e CROSS JOIN w
-        |GROUP BY event_type ORDER BY event_type""".stripMargin,
+        |GROUP BY event_type ORDER BY event_type""".stripMargin)),
     // the stats_chi2 grid + V from the ROUNDED chi2,
-    "weighted_median" ->
+    Key("weighted_median", weightedMedian, Some(
       """WITH li AS (
         |  SELECT l_returnflag AS g,
         |    CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * 100 AS BIGINT)
@@ -1037,10 +1011,10 @@ private[operators] trait StatsDistOps extends StatsOpsBase {
         |  FROM c JOIN t ON c.g = t.g WHERE 2 * cum >= tw)
         |SELECT g AS l_returnflag, CAST(pc AS DOUBLE) / 100 AS med_price,
         |  CAST(tw AS BIGINT) AS total_weight
-        |FROM q WHERE rn = 1 ORDER BY l_returnflag""".stripMargin,
+        |FROM q WHERE rn = 1 ORDER BY l_returnflag""".stripMargin)),
     // HUGEINT power sums = Spark's DECIMAL(38,0) (both exact 128-bit);
     // the double combination below is op-for-op the Spark expression,
-    "dist_lorenz" ->
+    Key("dist_lorenz", distLorenz, Some(
       """WITH spend AS (SELECT user_id,
         |    sum(CAST("value" AS DECIMAL(18,2))) AS v
         |  FROM events GROUP BY 1),
@@ -1058,8 +1032,8 @@ private[operators] trait StatsDistOps extends StatsOpsBase {
         |  round(CAST(sum(spend) OVER (ORDER BY decile
         |          ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
         |        AS DOUBLE) / CAST(tot AS DOUBLE), 6) + 0.0 AS cum_share
-        |FROM g ORDER BY decile""".stripMargin,
-    "dist_palma" ->
+        |FROM g ORDER BY decile""".stripMargin)),
+    Key("dist_palma", distPalma, Some(
       """WITH spend AS (SELECT user_id,
         |    sum(CAST("value" AS DECIMAL(18,2))) AS v
         |  FROM events GROUP BY 1),
@@ -1078,8 +1052,8 @@ private[operators] trait StatsDistOps extends StatsOpsBase {
         |    AS bot40_share,
         |  round(CAST(top10 AS DOUBLE) / CAST(bot40 AS DOUBLE), 6) + 0.0
         |    AS palma_ratio
-        |FROM a""".stripMargin,
-    "dist_quintile_shares" ->
+        |FROM a""".stripMargin)),
+    Key("dist_quintile_shares", distQuintileShares, Some(
       """WITH spend AS (SELECT user_id,
         |    sum(CAST("value" AS DECIMAL(18,2))) AS v
         |  FROM events GROUP BY 1),
@@ -1101,8 +1075,8 @@ private[operators] trait StatsDistOps extends StatsOpsBase {
         |        AS DOUBLE)
         |    / CAST(max(CASE WHEN quintile = 1 THEN spend END) OVER ()
         |        AS DOUBLE), 6) + 0.0 AS s80_s20
-        |FROM g ORDER BY quintile""".stripMargin,
-    "dq_volume_anomaly" ->
+        |FROM g ORDER BY quintile""".stripMargin)),
+    Key("dq_volume_anomaly", dqVolumeAnomaly, Some(
       """WITH c AS (SELECT CAST(CAST(ts AS TIMESTAMP) AS DATE) AS day,
         |    CAST(count(*) AS DOUBLE) AS cnt FROM events GROUP BY 1),
         |mr AS (SELECT cnt, row_number() OVER (ORDER BY cnt) AS rn,
@@ -1119,8 +1093,8 @@ private[operators] trait StatsDistOps extends StatsOpsBase {
         |  round(med.med, 6) + 0.0 AS med, round(mad.mad, 6) + 0.0 AS mad,
         |  abs(c.cnt - med.med) > round(3.5 * mad.mad, 6) + 0.0
         |    AS is_anomaly
-        |FROM c CROSS JOIN med CROSS JOIN mad ORDER BY day""".stripMargin,
-    "backlog_curve" ->
+        |FROM c CROSS JOIN med CROSS JOIN mad ORDER BY day""".stripMargin)),
+    Key("backlog_curve", backlogCurve, Some(
       """WITH li AS (
         |  SELECT CAST(l.l_shipdate AS DATE) AS ship_d,
         |         CAST(o.o_orderdate AS DATE) AS ord_d
@@ -1139,8 +1113,8 @@ private[operators] trait StatsDistOps extends StatsOpsBase {
         |FROM j
         |WINDOW w AS (ORDER BY day
         |             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-        |ORDER BY day""".stripMargin,
-    "sample_ess" ->
+        |ORDER BY day""".stripMargin)),
+    Key("sample_ess", sampleEss, Some(
       """WITH c AS (SELECT event_type, count(*) AS ct
         |           FROM events GROUP BY 1),
         |tot AS (SELECT CAST(sum(ct) AS BIGINT) AS n, count(*) AS k
@@ -1156,8 +1130,8 @@ private[operators] trait StatsDistOps extends StatsOpsBase {
         |    AS ess_clipped,
         |  round(sum(ct * w) * sum(ct * w) / sum(ct * w * w) / n, 6) + 0.0
         |    AS ess_frac
-        |FROM w2 GROUP BY n, k""".stripMargin,
-    "session_gap_hist" ->
+        |FROM w2 GROUP BY n, k""".stripMargin)),
+    Key("session_gap_hist", sessionGapHist, Some(
       """WITH e AS (
         |  SELECT user_id, event_id,
         |    epoch_us(CAST(ts AS TIMESTAMP)) AS us
@@ -1180,8 +1154,8 @@ private[operators] trait StatsDistOps extends StatsOpsBase {
         |         WHEN 4 THEN 'lt_1h' ELSE 'ge_1h' END AS bucket,
         |  cnt,
         |  round(cnt / CAST(sum(cnt) OVER () AS DOUBLE), 6) + 0.0 AS share
-        |FROM c ORDER BY b""".stripMargin,
-    "privacy_kanon" ->
+        |FROM c ORDER BY b""".stripMargin)),
+    Key("privacy_kanon", privacyKanon, Some(
       """WITH g AS (
         |  SELECT event_type,
         |    CAST(((CAST(ts AS DATE) - DATE '1970-01-01') % 7 + 7) % 7
@@ -1202,8 +1176,8 @@ private[operators] trait StatsDistOps extends StatsOpsBase {
         |    AS rows_lt_10,
         |  round(sum(CASE WHEN k < 10 THEN k ELSE 0 END)
         |        / CAST(sum(k) AS DOUBLE), 6) + 0.0 AS pct_rows_lt_10
-        |FROM g""".stripMargin,
-    "hist_kde" ->
+        |FROM g""".stripMargin)),
+    Key("hist_kde", histKde, Some(
       """WITH st AS (
         |  SELECT CAST(min("value") AS DOUBLE) AS lo,
         |    CAST(max("value") AS DOUBLE) AS hi, count(*) AS n,
@@ -1227,8 +1201,8 @@ private[operators] trait StatsDistOps extends StatsOpsBase {
         |        (CAST(n AS DOUBLE) * h *
         |         CAST('2.5066282746310002' AS DOUBLE)), 6) + 0.0
         |    AS density
-        |FROM terms GROUP BY j, gx, n, h ORDER BY grid_id""".stripMargin,
-    "group_entropy" ->
+        |FROM terms GROUP BY j, gx, n, h ORDER BY grid_id""".stripMargin)),
+    Key("group_entropy", groupEntropy, Some(
       """WITH c AS (
         |  SELECT source, lang, count(*) AS cnt FROM documents GROUP BY 1, 2),
         |t AS (SELECT *, sum(cnt) OVER (PARTITION BY source) AS tot FROM c)
@@ -1236,14 +1210,14 @@ private[operators] trait StatsDistOps extends StatsOpsBase {
         |  CAST(any_value(tot) AS BIGINT) AS n_docs,
         |  round(-sum((cnt / CAST(tot AS DOUBLE)) *
         |             ln(cnt / CAST(tot AS DOUBLE))), 6) + 0.0 AS entropy
-        |FROM t GROUP BY source ORDER BY source""".stripMargin,
-    "hist_equidepth" ->
+        |FROM t GROUP BY source ORDER BY source""".stripMargin)),
+    Key("hist_equidepth", histEquidepth, Some(
       """SELECT event_type, bucket, min("value") AS lo, max("value") AS hi,
         |  count(*) AS cnt
         |FROM (SELECT event_type, "value", event_id,
         |        ntile(10) OVER (PARTITION BY event_type
         |                        ORDER BY "value", event_id) AS bucket
         |      FROM events)
-        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
+        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin)),
   )
 }

@@ -2,6 +2,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.Key
 import graft.sources.Tables
 
 /** Forecasting, smoothing and seasonal decomposition — one of the [[StatsOps]] family traits (split from
@@ -583,24 +584,8 @@ private[operators] trait StatsForecastOps extends StatsOpsBase {
       .orderBy("event_type")
   }
 
-  protected val forecastQueries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "forecast_drift" -> forecastDrift _,
-    "forecast_sba" -> forecastSba _,
-    "stats_stl_strength" -> statsStlStrength _,
-    "forecast_ar2" -> forecastAr2 _,
-    "forecast_theta" -> forecastTheta _,
-    "forecast_damped" -> forecastDamped _,
-    "forecast_croston" -> forecastCroston _,
-    "forecast_ses_grid" -> forecastSesGrid _,
-    "forecast_mase" -> forecastMase _,
-    "anomaly_seasonal" -> anomalySeasonal _,
-    "forecast_holt" -> forecastHolt _,
-    "forecast_holt_winters" -> forecastHoltWinters _,
-    "seasonal_decompose" -> seasonalDecompose _,
-  )
-
-  protected val forecastOracles: Map[String, String] = Map(
-    "forecast_ar2" ->
+  protected val forecastKeys: Seq[Key] = Seq(
+    Key("forecast_ar2", forecastAr2, Some(
       """WITH daily AS (
         |  SELECT event_type, CAST(CAST(ts AS TIMESTAMP) AS DATE) AS day,
         |    sum(CAST("value" AS DECIMAL(18,2))) AS v
@@ -658,8 +643,8 @@ private[operators] trait StatsForecastOps extends StatsOpsBase {
         |   AND (round(phi1, 6) + 0.0) + (round(phi2, 6) + 0.0) < 1.0
         |   AND (round(phi2, 6) + 0.0) - (round(phi1, 6) + 0.0) < 1.0)
         |    AS stationary
-        |FROM f ORDER BY event_type""".stripMargin,
-    "forecast_theta" ->
+        |FROM f ORDER BY event_type""".stripMargin)),
+    Key("forecast_theta", forecastTheta, Some(
       """WITH RECURSIVE d AS (
         |  SELECT event_type, CAST(CAST(ts AS TIMESTAMP) AS DATE) AS day,
         |    CAST(sum(CAST("value" AS DECIMAL(18,2))) * 100 AS BIGINT)
@@ -699,8 +684,8 @@ private[operators] trait StatsForecastOps extends StatsOpsBase {
         |  round(l / 100, 6) + 0.0 AS ses_level,
         |  round((0.5 * (ac + bc * (n + 7)) + 0.5 * l) / 100, 6) + 0.0
         |    AS forecast_7
-        |FROM rec WHERE t = n ORDER BY event_type""".stripMargin,
-    "forecast_damped" ->
+        |FROM rec WHERE t = n ORDER BY event_type""".stripMargin)),
+    Key("forecast_damped", forecastDamped, Some(
       s"""WITH RECURSIVE d AS (
         |  SELECT event_type, CAST(CAST(ts AS TIMESTAMP) AS DATE) AS day,
         |    CAST(sum(CAST("value" AS DECIMAL(18,2))) AS DOUBLE) AS y
@@ -728,8 +713,8 @@ private[operators] trait StatsForecastOps extends StatsOpsBase {
         |  round(l, 6) + 0.0 AS level, round(b, 6) + 0.0 AS trend,
         |  round(l + b * CAST('$DampSum7' AS DOUBLE), 6)
         |    + 0.0 AS forecast_7
-        |FROM rec WHERE t = n ORDER BY event_type""".stripMargin,
-    "forecast_croston" ->
+        |FROM rec WHERE t = n ORDER BY event_type""".stripMargin)),
+    Key("forecast_croston", forecastCroston, Some(
       s"""WITH RECURSIVE dem AS (
          |  SELECT l_partkey AS part,
          |    CAST(CAST(o_orderdate AS DATE) - DATE '1970-01-01'
@@ -766,8 +751,8 @@ private[operators] trait StatsForecastOps extends StatsOpsBase {
          |    round(z / p, 6) + 0.0 AS rate_per_day
          |  FROM rec WHERE t = n)
          |SELECT part, n_points, z_size, p_interval, rate_per_day
-         |FROM fin ORDER BY n_points DESC, part LIMIT 50""".stripMargin,
-    "forecast_sba" ->
+         |FROM fin ORDER BY n_points DESC, part LIMIT 50""".stripMargin)),
+    Key("forecast_sba", forecastSba, Some(
       s"""WITH RECURSIVE dem AS (
          |  SELECT l_partkey AS part,
          |    CAST(CAST(o_orderdate AS DATE) - DATE '1970-01-01'
@@ -825,8 +810,8 @@ private[operators] trait StatsForecastOps extends StatsOpsBase {
          |         THEN 'intermittent'
          |       WHEN mean_interval < 1.32 THEN 'erratic'
          |       ELSE 'lumpy' END AS demand_class
-         |FROM fin ORDER BY n_points DESC, part LIMIT 50""".stripMargin,
-    "forecast_drift" ->
+         |FROM fin ORDER BY n_points DESC, part LIMIT 50""".stripMargin)),
+    Key("forecast_drift", forecastDrift, Some(
       """WITH daily AS (
         |  SELECT event_type, CAST(CAST(ts AS TIMESTAMP) AS DATE) AS day,
         |    sum(CAST("value" AS DECIMAL(18,2))) AS v
@@ -856,8 +841,8 @@ private[operators] trait StatsForecastOps extends StatsOpsBase {
         |  round(CAST(sn AS DOUBLE) / n_eval, 6) + 0.0 AS mae_naive,
         |  round(CAST(sd AS DOUBLE) / CAST(sn AS DOUBLE), 6) + 0.0
         |    AS rel_mae
-        |FROM g ORDER BY event_type""".stripMargin,
-    "forecast_ses_grid" ->
+        |FROM g ORDER BY event_type""".stripMargin)),
+    Key("forecast_ses_grid", forecastSesGrid, Some(
       """WITH RECURSIVE d AS (
         |  SELECT CAST(CAST(ts AS TIMESTAMP) AS DATE) AS day,
         |    CAST(sum(CAST("value" AS DECIMAL(18,2))) AS DOUBLE) AS y
@@ -886,8 +871,8 @@ private[operators] trait StatsForecastOps extends StatsOpsBase {
         |rk AS (SELECT *, row_number() OVER (ORDER BY rmse, alpha) AS rn
         |       FROM fin)
         |SELECT alpha, n_days, level, rmse, rn = 1 AS is_best
-        |FROM rk ORDER BY alpha""".stripMargin,
-    "forecast_holt" ->
+        |FROM rk ORDER BY alpha""".stripMargin)),
+    Key("forecast_holt", forecastHolt, Some(
       """WITH RECURSIVE d AS (
         |  SELECT event_type, CAST(CAST(ts AS TIMESTAMP) AS DATE) AS day,
         |    CAST(sum(CAST("value" AS DECIMAL(18,2))) AS DOUBLE) AS y
@@ -916,12 +901,12 @@ private[operators] trait StatsForecastOps extends StatsOpsBase {
         |SELECT event_type, CAST(n AS BIGINT) AS n_days,
         |  round(l, 6) + 0.0 AS level, round(b, 6) + 0.0 AS trend,
         |  round(l + 7.0 * b, 6) + 0.0 AS forecast_7
-        |FROM rec WHERE t = n ORDER BY event_type""".stripMargin,
+        |FROM rec WHERE t = n ORDER BY event_type""".stripMargin)),
     // the triple-smoothing recursion replayed with the 7 seasonal slots
     // carried as columns; slot = epoch-day mod 7 (engine-neutral), init
     // left-associates the first-week mean exactly like the Spark fold,
     // arg_min pins the first-week slot value to the FIRST observation,
-    "forecast_holt_winters" ->
+    Key("forecast_holt_winters", forecastHoltWinters, Some(
       """WITH RECURSIVE d AS (
         |  SELECT event_type, CAST(CAST(ts AS TIMESTAMP) AS DATE) AS day,
         |    CAST(sum(CAST("value" AS DECIMAL(18,2))) AS DOUBLE) AS y
@@ -998,11 +983,11 @@ private[operators] trait StatsForecastOps extends StatsOpsBase {
         |      - least(r.s1, r.s2, r.s3, r.s4, r.s5, r.s6, r.s7), 6) + 0.0
         |    AS amplitude
         |FROM rec r JOIN last l2 ON r.event_type = l2.event_type
-        |WHERE r.t = r.n ORDER BY r.event_type""".stripMargin,
+        |WHERE r.t = r.n ORDER BY r.event_type""".stripMargin)),
     // explicit middle-pair median on both sides — no engine quantile
     // implementation in the loop; the intercept pass reuses the
     // UNROUNDED slope exactly as the Spark plan does,
-    "forecast_mase" ->
+    Key("forecast_mase", forecastMase, Some(
       """WITH daily AS (
         |  SELECT event_type, CAST(CAST(ts AS TIMESTAMP) AS DATE) AS day,
         |    sum(CAST("value" AS DECIMAL(18,2))) AS v
@@ -1020,8 +1005,8 @@ private[operators] trait StatsForecastOps extends StatsOpsBase {
         |    AS mae_snaive,
         |  round(CAST(sum(abs(v - v7)) AS DOUBLE) /
         |        CAST(sum(abs(v - v1)) AS DOUBLE), 6) + 0.0 AS mase
-        |FROM j GROUP BY 1 ORDER BY 1""".stripMargin,
-    "anomaly_seasonal" ->
+        |FROM j GROUP BY 1 ORDER BY 1""".stripMargin)),
+    Key("anomaly_seasonal", anomalySeasonal, Some(
       """WITH daily AS (
         |  SELECT CAST(CAST(ts AS TIMESTAMP) AS DATE) AS day,
         |    sum(CAST("value" AS DECIMAL(18,2))) AS vd
@@ -1055,8 +1040,8 @@ private[operators] trait StatsForecastOps extends StatsOpsBase {
         |SELECT day, v, round(trend + seasonal, 6) + 0.0 AS expected, resid,
         |  round(abs(resid - med) / nullif(mad, 0), 6) + 0.0 AS score,
         |  abs(resid - med) / nullif(mad, 0) > 3.5 AS is_anomaly
-        |FROM r0, med, mad ORDER BY day""".stripMargin,
-    "stats_stl_strength" ->
+        |FROM r0, med, mad ORDER BY day""".stripMargin)),
+    Key("stats_stl_strength", statsStlStrength, Some(
       """WITH daily AS (
         |  SELECT event_type, CAST(CAST(ts AS TIMESTAMP) AS DATE) AS day,
         |    sum(CAST("value" AS DECIMAL(18,2))) AS vd
@@ -1124,8 +1109,8 @@ private[operators] trait StatsForecastOps extends StatsOpsBase {
         |        - CAST(s_det AS DOUBLE) * CAST(s_det AS DOUBLE))
         |       / (CAST(n AS DOUBLE) * (n - 1)))), 6) + 0.0
         |    AS seasonal_strength
-        |FROM m ORDER BY event_type""".stripMargin,
-    "seasonal_decompose" ->
+        |FROM m ORDER BY event_type""".stripMargin)),
+    Key("seasonal_decompose", seasonalDecompose, Some(
       """WITH daily AS (
         |  SELECT CAST(CAST(ts AS TIMESTAMP) AS DATE) AS day,
         |    sum(CAST("value" AS DECIMAL(18,2))) AS vd
@@ -1144,6 +1129,6 @@ private[operators] trait StatsForecastOps extends StatsOpsBase {
         |      FROM f GROUP BY 1)
         |SELECT day, CAST(vd AS DOUBLE) AS v, CAST(trend6 AS DOUBLE) AS trend,
         |  seasonal, round(CAST(det AS DOUBLE) - seasonal, 6) + 0.0 AS resid
-        |FROM f JOIN s USING (dow) ORDER BY day""".stripMargin,
+        |FROM f JOIN s USING (dow) ORDER BY day""".stripMargin)),
   )
 }

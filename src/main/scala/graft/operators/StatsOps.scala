@@ -1,5 +1,5 @@
 package graft.operators
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.Key
 
 /** Statistical / time-series operators: the numeric-analysis layer the
   * reference's dashboard (`/root/reference/app.py:80-84` recomputes
@@ -29,11 +29,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 object StatsOps extends StatsTestOps with StatsSeqOps
     with StatsWindowOps with StatsForecastOps with StatsDistOps {
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] =
-    testQueries ++ seqQueries ++ windowQueries ++ forecastQueries ++
-      distQueries
-
-  val oracles: Map[String, String] =
-    testOracles ++ seqOracles ++ windowOracles ++ forecastOracles ++
-      distOracles
+  val keys: Seq[Key] =
+    testKeys ++ seqKeys ++ windowKeys ++ forecastKeys ++ distKeys
 }

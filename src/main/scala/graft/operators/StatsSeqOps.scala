@@ -2,6 +2,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.Key
 import graft.functions.GramMatrixAgg
 import graft.sources.Tables
 
@@ -1983,64 +1984,8 @@ private[operators] trait StatsSeqOps extends StatsOpsBase {
         (col("w2s") > expr("CAST(0.126 AS DOUBLE)")).as("normal_rejected"))
       .orderBy("event_type")
 
-  protected val seqQueries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "stats_anderson_darling" -> statsAndersonDarling _,
-    "stats_cvm" -> statsCvm _,
-    "stats_pacf" -> statsPacf _,
-    "stats_lilliefors" -> statsLilliefors _,
-    "stats_rmst" -> statsRmst _,
-    "stats_life_table" -> statsLifeTable _,
-    "stats_kendall_w" -> statsKendallW _,
-    "stats_theil_u" -> statsTheilU _,
-    "stats_cusum_chart" -> statsCusumChart _,
-    "stats_page_hinkley" -> statsPageHinkley _,
-    "stats_cpk" -> statsCpk _,
-    "stats_xbar_chart" -> statsXbarChart _,
-    "stats_hurst" -> statsHurst _,
-    "stats_sample_entropy" -> statsSampleEntropy _,
-    "stats_weibull_fit" -> statsWeibullFit _,
-    "stats_negbin_fit" -> statsNegbinFit _,
-    "stats_wasserstein" -> statsWasserstein _,
-    "stats_mann_kendall" -> statsMannKendall _,
-    "stats_pettitt" -> statsPettitt _,
-    "stats_qq_normal" -> statsQqNormal _,
-    "stats_grubbs" -> statsGrubbs _,
-    "stats_breusch_pagan" -> statsBreuschPagan _,
-    "stats_nelson_aalen" -> statsNelsonAalen _,
-    "stats_overdispersion" -> statsOverdispersion _,
-    "stats_lincoln_petersen" -> statsLincolnPetersen _,
-    "anomaly_pot" -> anomalyPot _,
-    "stats_hill_tail" -> statsHillTail _,
-    "stats_page_trend" -> statsPageTrend _,
-    "stats_kaplan_meier" -> statsKaplanMeier _,
-    "stats_logrank" -> statsLogrank _,
-    "stats_circular" -> statsCircular _,
-    "stats_influence" -> statsInfluence _,
-    "stats_ols_multi" -> statsOlsMulti _,
-    "stats_mutual_info" -> statsMutualInfo _,
-    "stats_granger" -> statsGranger _,
-    "stats_ecdf" -> statsEcdf _,
-    "stats_partial_corr" -> statsPartialCorr _,
-    "stats_changepoint" -> statsChangepoint _,
-    "stats_qq" -> statsQq _,
-    "stats_jsd" -> statsJsd _,
-    "stats_ljung_box" -> statsLjungBox _,
-    "stats_jarque_bera" -> statsJarqueBera _,
-    "stats_dw" -> statsDw _,
-    "stats_runs" -> statsRuns _,
-    "stats_moments" -> statsMoments _,
-    "stats_theilsen" -> statsTheilSen _,
-    "rolling_corr" -> rollingCorr _,
-    "stats_benford" -> statsBenford _,
-    "stats_psi" -> statsPsi _,
-    "stats_acf" -> statsAcf _,
-    "stats_corr_matrix" -> statsCorrMatrix _,
-    "regr_trend" -> regrTrend _,
-    "resample_interp" -> resampleInterp _,
-  )
-
-  protected val seqOracles: Map[String, String] = Map(
-    "stats_lilliefors" -> (duckDailyTyped +
+  protected val seqKeys: Seq[Key] = Seq(
+    Key("stats_lilliefors", statsLilliefors, Some(duckDailyTyped +
       s"""mo AS (SELECT event_type, CAST(count(*) AS BIGINT) AS n,
          |    CAST(sum(revc) AS BIGINT) AS s1,
          |    sum(CAST(revc AS DECIMAL(28,0)) * revc) AS s2
@@ -2068,8 +2013,9 @@ private[operators] trait StatsSeqOps extends StatsOpsBase {
          |  (round(greatest(d_plus, d_minus), 6) + 0.0) >
          |    (round(CAST(0.886 AS DOUBLE) / sqrt(CAST(n_days AS DOUBLE)),
          |      6) + 0.0) AS normal_rejected
-         |FROM ag ORDER BY event_type""".stripMargin),
-    "stats_anderson_darling" -> (duckDailyTyped + duckNormalityFrame +
+         |FROM ag ORDER BY event_type""".stripMargin)),
+    Key("stats_anderson_darling", statsAndersonDarling, Some(
+      duckDailyTyped + duckNormalityFrame +
       s"""tt AS (SELECT event_type, n,
          |    CAST(round((2 * rn - 1) * ln(phi)
          |      + (2 * (n - rn) + 1) * ln(1.0 - phi), 9) AS DECIMAL(28,9))
@@ -2089,8 +2035,8 @@ private[operators] trait StatsSeqOps extends StatsOpsBase {
          |  (round(a2 * (1.0 + 0.75 / n_days
          |    + 2.25 / (CAST(n_days AS DOUBLE) * n_days)), 6) + 0.0)
          |    > CAST(0.752 AS DOUBLE) AS normal_rejected
-         |FROM f ORDER BY event_type""".stripMargin),
-    "stats_cvm" -> (duckDailyTyped + duckNormalityFrame +
+         |FROM f ORDER BY event_type""".stripMargin)),
+    Key("stats_cvm", statsCvm, Some(duckDailyTyped + duckNormalityFrame +
       s"""tt AS (SELECT event_type, n,
          |    CAST(round((phi - (2 * rn - 1) / (2.0 * n))
          |      * (phi - (2 * rn - 1) / (2.0 * n)), 9) AS DECIMAL(28,9))
@@ -2107,8 +2053,8 @@ private[operators] trait StatsSeqOps extends StatsOpsBase {
          |  CAST(0.126 AS DOUBLE) AS crit_05,
          |  (round(w2 * (1.0 + 0.5 / n_days), 6) + 0.0)
          |    > CAST(0.126 AS DOUBLE) AS normal_rejected
-         |FROM f ORDER BY event_type""".stripMargin),
-    "stats_pacf" ->
+         |FROM f ORDER BY event_type""".stripMargin)),
+    Key("stats_pacf", statsPacf, Some(
       """WITH daily AS (
         |  SELECT CAST(CAST(ts AS TIMESTAMP) AS DATE) AS day,
         |    CAST(sum(CAST("value" AS DECIMAL(18,2))) AS DOUBLE) AS v
@@ -2160,8 +2106,8 @@ private[operators] trait StatsSeqOps extends StatsOpsBase {
         |    round(phi33, 6) + 0.0, band FROM dl3)
         |SELECT lag, n_days, acf, pacf, band AS band_95,
         |  abs(pacf) > band AS significant
-        |FROM rows3 ORDER BY lag""".stripMargin,
-    "stats_kendall_w" ->
+        |FROM rows3 ORDER BY lag""".stripMargin)),
+    Key("stats_kendall_w", statsKendallW, Some(
       """WITH rev AS (
         |  SELECT CAST(CAST(ts AS TIMESTAMP) AS DATE) AS day, event_type,
         |    CAST(sum(CAST("value" AS DECIMAL(18,2))) * 100 AS BIGINT)
@@ -2195,8 +2141,8 @@ private[operators] trait StatsSeqOps extends StatsOpsBase {
         |    AS w,
         |  round(CAST(3 * s2c * (k - 1) AS DOUBLE)
         |    / (m * (k * k * k - k) - tt), 6) + 0.0 AS chi2
-        |FROM s2 CROSS JOIN tt""".stripMargin,
-    "stats_theil_u" ->
+        |FROM s2 CROSS JOIN tt""".stripMargin)),
+    Key("stats_theil_u", statsTheilU, Some(
       """WITH j AS (SELECT lang, source, CAST(count(*) AS BIGINT) AS c
         |  FROM documents GROUP BY 1, 2),
         |rt AS (SELECT lang, CAST(sum(c) AS BIGINT) AS r FROM j GROUP BY 1),
@@ -2219,8 +2165,8 @@ private[operators] trait StatsSeqOps extends StatsOpsBase {
         |  round(mi_nats / h_lang, 6) + 0.0 AS u_lang_given_source,
         |  round(mi_nats / h_source, 6) + 0.0 AS u_source_given_lang,
         |  round(2 * mi_nats / (h_lang + h_source), 6) + 0.0 AS u_symmetric
-        |FROM nn CROSS JOIN mi CROSS JOIN hl CROSS JOIN hs""".stripMargin,
-    "stats_rmst" ->
+        |FROM nn CROSS JOIN mi CROSS JOIN hl CROSS JOIN hs""".stripMargin)),
+    Key("stats_rmst", statsRmst, Some(
       s"""$survCtes,
          |sg AS (SELECT *, ((user_id % 2147483648) * 2654435761
          |         % 2147483648) % 2 AS g FROM s),
@@ -2261,8 +2207,8 @@ private[operators] trait StatsSeqOps extends StatsOpsBase {
          |    AS rmst_hours,
          |  round(CAST(least(t1, tau) + area_ev AS DOUBLE) / tau, 6) + 0.0
          |    AS rmst_frac
-         |FROM ar JOIN grp ON ar.g = grp.g ORDER BY ar.g""".stripMargin,
-    "stats_life_table" ->
+         |FROM ar JOIN grp ON ar.g = grp.g ORDER BY ar.g""".stripMargin)),
+    Key("stats_life_table", statsLifeTable, Some(
       s"""$survCtes,
          |byi AS (SELECT t // 168 AS wk,
          |    CAST(sum(observed) AS BIGINT) AS d,
@@ -2289,8 +2235,8 @@ private[operators] trait StatsSeqOps extends StatsOpsBase {
          |  round(CASE WHEN extinct = 1 THEN 0.0
          |    WHEN cuml IS NULL THEN 1.0
          |    ELSE exp(CAST(cuml AS DOUBLE)) END, 6) + 0.0 AS surv_start
-         |FROM cm ORDER BY interval_wk""".stripMargin,
-    "stats_cusum_chart" -> ("WITH RECURSIVE " + duckDailyTyped.drop(5) +
+         |FROM cm ORDER BY interval_wk""".stripMargin)),
+    Key("stats_cusum_chart", statsCusumChart, Some("WITH RECURSIVE " + duckDailyTyped.drop(5) +
       duckZSeries +
       """rec AS (
         |  SELECT event_type, n, rn,
@@ -2321,8 +2267,9 @@ private[operators] trait StatsSeqOps extends StatsOpsBase {
         |  round(cp, 6) + 0.0 AS cusum_pos,
         |  round(cn, 6) + 0.0 AS cusum_neg,
         |  CAST(al AS BIGINT) AS n_alarms
-        |FROM rec WHERE rn = n ORDER BY event_type""".stripMargin),
-    "stats_page_hinkley" -> ("WITH RECURSIVE " + duckDailyTyped.drop(5) +
+        |FROM rec WHERE rn = n ORDER BY event_type""".stripMargin)),
+    Key("stats_page_hinkley", statsPageHinkley, Some(
+      "WITH RECURSIVE " + duckDailyTyped.drop(5) +
       duckZSeries +
       """rec AS (
         |  SELECT event_type, n, rn, CAST(1 AS BIGINT) AS i,
@@ -2348,8 +2295,8 @@ private[operators] trait StatsSeqOps extends StatsOpsBase {
         |  round(m - mn, 6) + 0.0 AS ph_stat,
         |  round(m - mn, 6) + 0.0 > 5.0 AS drift_flag,
         |  al AS n_alarm_days
-        |FROM rec WHERE rn = n ORDER BY event_type""".stripMargin),
-    "stats_cpk" ->
+        |FROM rec WHERE rn = n ORDER BY event_type""".stripMargin)),
+    Key("stats_cpk", statsCpk, Some(
       """WITH g AS (
         |  SELECT event_type, CAST(count(*) AS BIGINT) AS n,
         |    CAST(sum(CAST("value" AS DECIMAL(18,2))) AS DOUBLE) AS s1,
@@ -2368,8 +2315,8 @@ private[operators] trait StatsSeqOps extends StatsOpsBase {
         |  round(sd, 6) + 0.0 AS sd,
         |  round((190.0 - 10.0) / (6 * sd), 6) + 0.0 AS cp,
         |  cpk6 AS cpk, cpk6 >= 1.33 AS capable
-        |FROM c ORDER BY event_type""".stripMargin,
-    "stats_xbar_chart" ->
+        |FROM c ORDER BY event_type""".stripMargin)),
+    Key("stats_xbar_chart", statsXbarChart, Some(
       """WITH daily AS (
         |  SELECT event_type, CAST(CAST(ts AS TIMESTAMP) AS DATE) AS day,
         |    CAST(count(*) AS BIGINT) AS nd,
@@ -2399,8 +2346,8 @@ private[operators] trait StatsSeqOps extends StatsOpsBase {
         |  round(zz.xbar, 6) + 0.0 AS xbar, zz.z6 AS z,
         |  zz.violation, t.n_days, t.n_violations
         |FROM zz JOIN t USING (event_type)
-        |ORDER BY zz.event_type, zz.day""".stripMargin,
-    "stats_hurst" -> (duckDailyTyped +
+        |ORDER BY zz.event_type, zz.day""".stripMargin)),
+    Key("stats_hurst", statsHurst, Some(duckDailyTyped +
       """dr AS (SELECT event_type, revc AS yc,
         |    CAST(row_number() OVER (PARTITION BY event_type
         |      ORDER BY day) AS BIGINT) AS rn
@@ -2441,8 +2388,8 @@ private[operators] trait StatsSeqOps extends StatsOpsBase {
         |FROM (SELECT * FROM rs WHERE sz = 8) p16
         |JOIN (SELECT * FROM rs WHERE sz = 16) p32
         |  USING (event_type)
-        |ORDER BY event_type""".stripMargin),
-    "stats_sample_entropy" -> (duckDailyTyped +
+        |ORDER BY event_type""".stripMargin)),
+    Key("stats_sample_entropy", statsSampleEntropy, Some(duckDailyTyped +
       """dr AS (SELECT event_type, revc AS yc,
         |    CAST(row_number() OVER w AS BIGINT) AS rn,
         |    lead(revc, 1) OVER w AS y1, lead(revc, 2) OVER w AS y2
@@ -2475,8 +2422,8 @@ private[operators] trait StatsSeqOps extends StatsOpsBase {
         |    THEN -ln(CAST(a_pairs AS DOUBLE) / b_pairs) END, 6) + 0.0
         |    AS sampen
         |FROM c JOIN tol USING (event_type)
-        |ORDER BY event_type""".stripMargin),
-    "stats_weibull_fit" ->
+        |ORDER BY event_type""".stripMargin)),
+    Key("stats_weibull_fit", statsWeibullFit, Some(
       """WITH e AS (SELECT user_id,
         |    epoch_us(CAST(ts AS TIMESTAMP)) AS us, event_type, "value"
         |  FROM events),
@@ -2530,8 +2477,8 @@ private[operators] trait StatsSeqOps extends StatsOpsBase {
         |SELECT n_points, round(kk, 6) + 0.0 AS shape_k,
         |  round(exp(-aa / kk), 6) + 0.0 AS scale_hours,
         |  round(aa, 6) + 0.0 AS intercept
-        |FROM a""".stripMargin,
-    "stats_negbin_fit" ->
+        |FROM a""".stripMargin)),
+    Key("stats_negbin_fit", statsNegbinFit, Some(
       """WITH u AS (SELECT event_type, user_id,
         |    CAST(count(*) AS BIGINT) AS k
         |  FROM events GROUP BY 1, 2),
@@ -2550,8 +2497,8 @@ private[operators] trait StatsSeqOps extends StatsOpsBase {
         |  round(CASE WHEN v > m THEN m * m / (v - m) END, 6) + 0.0
         |    AS r_fit,
         |  round(CASE WHEN v > m THEN m / v END, 6) + 0.0 AS p_fit
-        |FROM m ORDER BY event_type""".stripMargin,
-    "stats_wasserstein" ->
+        |FROM m ORDER BY event_type""".stripMargin)),
+    Key("stats_wasserstein", statsWasserstein, Some(
       """WITH g AS (
         |  SELECT "value" AS value,
         |    sum(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END) AS a,
@@ -2574,8 +2521,8 @@ private[operators] trait StatsSeqOps extends StatsOpsBase {
         |       FROM c, tot WHERE nextv IS NOT NULL)
         |SELECT n1, n2,
         |  round(CAST(sum(term) AS DOUBLE), 6) + 0.0 AS w1_dist
-        |FROM tm GROUP BY 1, 2""".stripMargin,
-    "stats_mann_kendall" -> (duckDailyTyped +
+        |FROM tm GROUP BY 1, 2""".stripMargin)),
+    Key("stats_mann_kendall", statsMannKendall, Some(duckDailyTyped +
       """s AS (SELECT a.event_type,
         |        CAST(sum(CASE WHEN b.revc > a.revc THEN 1
         |                      WHEN b.revc < a.revc THEN -1
@@ -2602,8 +2549,8 @@ private[operators] trait StatsSeqOps extends StatsOpsBase {
         |        WHEN s_stat < 0
         |          THEN CAST(s_stat + 1 AS DOUBLE) / sqrt(var_s)
         |        ELSE 0.0 END, 6) + 0.0 AS z
-        |FROM v ORDER BY event_type""".stripMargin),
-    "stats_pettitt" -> (duckDailyTyped +
+        |FROM v ORDER BY event_type""".stripMargin)),
+    Key("stats_pettitt", statsPettitt, Some(duckDailyTyped +
       """v AS (SELECT a.event_type, a.dayno,
         |        CAST(sum(CASE WHEN b.revc > a.revc THEN 1
         |                      WHEN b.revc < a.revc THEN -1
@@ -2629,8 +2576,8 @@ private[operators] trait StatsSeqOps extends StatsOpsBase {
         |       + CAST(n.n_days AS DOUBLE) * n.n_days)), 1.0), 6) + 0.0
         |    AS p_approx
         |FROM rk JOIN n USING (event_type) WHERE rk.rn = 1
-        |ORDER BY event_type""".stripMargin),
-    "stats_qq_normal" ->
+        |ORDER BY event_type""".stripMargin)),
+    Key("stats_qq_normal", statsQqNormal, Some(
       s"""WITH daily AS (
          |  SELECT CAST(CAST(ts AS TIMESTAMP) AS DATE) AS day,
          |    CAST(sum(CAST("value" AS DECIMAL(18,2))) * 100 AS BIGINT)
@@ -2660,8 +2607,8 @@ private[operators] trait StatsSeqOps extends StatsOpsBase {
          |  round(zl.z_normal, 6) + 0.0 AS z_normal,
          |  round((q.q - mm.m) / mm.sd - zl.z_normal, 6) + 0.0 AS gap
          |FROM qs q JOIN zl ON q.decile = zl.decile CROSS JOIN mm
-         |ORDER BY decile""".stripMargin,
-    "stats_grubbs" ->
+         |ORDER BY decile""".stripMargin)),
+    Key("stats_grubbs", statsGrubbs, Some(
       """WITH daily AS (
         |  SELECT event_type, CAST(CAST(ts AS TIMESTAMP) AS DATE) AS day,
         |    CAST(CAST(ts AS TIMESTAMP) AS DATE) - DATE '1970-01-01'
@@ -2684,8 +2631,8 @@ private[operators] trait StatsSeqOps extends StatsOpsBase {
         |        ORDER BY dev DESC, dayno) AS rn FROM dv)
         |SELECT event_type, n AS n_days, round(dev, 6) + 0.0 AS g_stat,
         |  DATE '1970-01-01' + CAST(dayno AS INTEGER) AS outlier_day
-        |FROM rk WHERE rn = 1 ORDER BY event_type""".stripMargin,
-    "stats_breusch_pagan" ->
+        |FROM rk WHERE rn = 1 ORDER BY event_type""".stripMargin)),
+    Key("stats_breusch_pagan", statsBreuschPagan, Some(
       """WITH daily AS (
         |  SELECT event_type,
         |    epoch_us(CAST(ts AS TIMESTAMP)) // 86400000000 AS dayno,
@@ -2723,8 +2670,8 @@ private[operators] trait StatsSeqOps extends StatsOpsBase {
         |  FROM s)
         |SELECT event_type, n, round(n * r2, 6) + 0.0 AS lm_stat,
         |  n * r2 > 3.841459 AS heteroscedastic
-        |FROM r ORDER BY event_type""".stripMargin,
-    "stats_nelson_aalen" ->
+        |FROM r ORDER BY event_type""".stripMargin)),
+    Key("stats_nelson_aalen", statsNelsonAalen, Some(
       s"""$survCtes,
          |byt AS (SELECT t, CAST(sum(observed) AS BIGINT) AS d,
          |    CAST(sum(1 - observed) AS BIGINT) AS c
@@ -2742,8 +2689,8 @@ private[operators] trait StatsSeqOps extends StatsOpsBase {
          |SELECT t AS t_hours, n_risk, d AS d_events,
          |  round(CAST(ch AS DOUBLE), 6) + 0.0 AS cum_hazard,
          |  round(exp(-CAST(ch AS DOUBLE)), 6) + 0.0 AS s_breslow
-         |FROM cm WHERE d > 0 ORDER BY t_hours""".stripMargin,
-    "stats_overdispersion" ->
+         |FROM cm WHERE d > 0 ORDER BY t_hours""".stripMargin)),
+    Key("stats_overdispersion", statsOverdispersion, Some(
       """WITH c AS (SELECT user_id, CAST(count(*) AS BIGINT) AS k
         |           FROM events GROUP BY 1),
         |s AS (SELECT CAST(count(*) AS BIGINT) AS n,
@@ -2760,8 +2707,8 @@ private[operators] trait StatsSeqOps extends StatsOpsBase {
         |    AS nb_r,
         |  round(CASE WHEN s2 > m THEN m / s2 END, 6) + 0.0 AS nb_p,
         |  s2 <= 1.5 * m AS near_poisson
-        |FROM m""".stripMargin,
-    "stats_lincoln_petersen" ->
+        |FROM m""".stripMargin)),
+    Key("stats_lincoln_petersen", statsLincolnPetersen, Some(
       """WITH mn AS (SELECT min(CAST(CAST(ts AS TIMESTAMP) AS DATE)) AS d0
         |           FROM events),
         |f AS (
@@ -2786,8 +2733,8 @@ private[operators] trait StatsSeqOps extends StatsOpsBase {
         |  round(sqrt(CAST((n1 + 1) AS DOUBLE) * (n2 + 1) * (n1 - m)
         |    * (n2 - m) / (CAST((m + 1) AS DOUBLE) * (m + 1) * (m + 2))),
         |    6) + 0.0 AS se_chapman
-        |FROM s""".stripMargin,
-    "anomaly_pot" ->
+        |FROM s""".stripMargin)),
+    Key("anomaly_pot", anomalyPot, Some(
       """WITH top AS (SELECT o_totalprice AS x, o_orderkey FROM orders
         |             ORDER BY x DESC, o_orderkey LIMIT 51),
         |r AS (SELECT x,
@@ -2809,8 +2756,8 @@ private[operators] trait StatsSeqOps extends StatsOpsBase {
         |  round(m, 6) + 0.0 AS mean_excess,
         |  round(0.5 * (1.0 - rr), 6) + 0.0 AS xi,
         |  round(0.5 * m * (rr + 1.0), 6) + 0.0 AS sigma
-        |FROM f""".stripMargin,
-    "stats_hill_tail" ->
+        |FROM f""".stripMargin)),
+    Key("stats_hill_tail", statsHillTail, Some(
       """WITH top AS (SELECT o_totalprice AS x, o_orderkey FROM orders
         |             ORDER BY x DESC, o_orderkey LIMIT 101),
         |r AS (SELECT x,
@@ -2824,8 +2771,8 @@ private[operators] trait StatsSeqOps extends StatsOpsBase {
         |  round(CAST(sum(term) AS DOUBLE) / count(*), 6) + 0.0 AS hill_h,
         |  round(CAST(count(*) AS DOUBLE) / CAST(sum(term) AS DOUBLE), 6)
         |    + 0.0 AS alpha
-        |FROM t""".stripMargin,
-    "stats_page_trend" ->
+        |FROM t""".stripMargin)),
+    Key("stats_page_trend", statsPageTrend, Some(
       """WITH rev AS (
         |  SELECT CAST(CAST(ts AS TIMESTAMP) AS DATE) AS day, event_type,
         |    CAST(sum(CAST("value" AS DECIMAL(18,2))) * 100 AS BIGINT)
@@ -2856,8 +2803,8 @@ private[operators] trait StatsSeqOps extends StatsOpsBase {
         |      - CAST(n_blocks * k * (k + 1) * (k + 1) AS DOUBLE) / 4)
         |    / sqrt(CAST(n_blocks * k * k * (k + 1) AS DOUBLE)
         |      * (k * k - 1) / 144), 6) + 0.0 AS z
-        |FROM s""".stripMargin,
-    "stats_kaplan_meier" ->
+        |FROM s""".stripMargin)),
+    Key("stats_kaplan_meier", statsKaplanMeier, Some(
       s"""$survCtes,
          |byt AS (SELECT t, CAST(count(*) AS BIGINT) AS a,
          |    CAST(sum(observed) AS BIGINT) AS d,
@@ -2875,8 +2822,8 @@ private[operators] trait StatsSeqOps extends StatsOpsBase {
          |  d AS d_events, c AS c_censored,
          |  round(CASE WHEN d = n_risk THEN 0.0
          |    ELSE exp(CAST(cuml AS DOUBLE)) END, 6) + 0.0 AS survival
-         |FROM cm WHERE d > 0 ORDER BY t_hours""".stripMargin,
-    "stats_logrank" ->
+         |FROM cm WHERE d > 0 ORDER BY t_hours""".stripMargin)),
+    Key("stats_logrank", statsLogrank, Some(
       s"""$survCtes,
          |sg AS (SELECT *, ((user_id % 2147483648) * 2654435761
          |         % 2147483648) % 2 AS g FROM s),
@@ -2917,8 +2864,8 @@ private[operators] trait StatsSeqOps extends StatsOpsBase {
          |      CAST(sum(ome) AS DOUBLE) * CAST(sum(ome) AS DOUBLE)
          |      / CAST(sum(v) AS DOUBLE) END, 6) + 0.0 AS chi2
          |FROM tm CROSS JOIN grp
-         |GROUP BY n1_subj, n0_subj, o1, o0""".stripMargin,
-    "stats_circular" ->
+         |GROUP BY n1_subj, n0_subj, o1, o0""".stripMargin)),
+    Key("stats_circular", statsCircular, Some(
       """WITH e AS (SELECT event_type,
         |    (epoch_us(CAST(ts AS TIMESTAMP)) // 3600000000) % 24 AS hr
         |  FROM events),
@@ -2938,8 +2885,8 @@ private[operators] trait StatsSeqOps extends StatsOpsBase {
         |  round(sqrt(CAST(ss AS DOUBLE) * CAST(ss AS DOUBLE)
         |    + CAST(sc AS DOUBLE) * CAST(sc AS DOUBLE)) / n, 6) + 0.0
         |    AS r_bar
-        |FROM t ORDER BY event_type""".stripMargin,
-    "stats_influence" ->
+        |FROM t ORDER BY event_type""".stripMargin)),
+    Key("stats_influence", statsInfluence, Some(
       """WITH daily AS (
         |  SELECT CAST(CAST(ts AS TIMESTAMP) AS DATE) AS day,
         |    CAST(sum(CAST("value" AS DECIMAL(18,2))) * 100 AS BIGINT) AS y,
@@ -2974,8 +2921,8 @@ private[operators] trait StatsSeqOps extends StatsOpsBase {
         |  round(e2 * h / (2 * s2 * (1 - h) * (1 - h)), 6) + 0.0 AS cooks_d,
         |  e2 * h / (2 * s2 * (1 - h) * (1 - h)) > CAST(4 AS DOUBLE) / n
         |    AS influential
-        |FROM g ORDER BY day""".stripMargin,
-    "stats_ols_multi" ->
+        |FROM g ORDER BY day""".stripMargin)),
+    Key("stats_ols_multi", statsOlsMulti, Some(
       """WITH daily AS (
         |  SELECT CAST(CAST(ts AS TIMESTAMP) AS DATE) AS day,
         |    count(CASE WHEN event_type = 'click' THEN 1 END) AS x1,
@@ -3018,8 +2965,8 @@ private[operators] trait StatsSeqOps extends StatsOpsBase {
         |    + ((CAST(c2y AS DOUBLE) * c11 - CAST(c1y AS DOUBLE) * c12)
         |       / (CAST(c11 AS DOUBLE) * c22 - CAST(c12 AS DOUBLE) * c12))
         |      * c2y) / CAST(cyy AS DOUBLE), 6) + 0.0 AS r2
-        |FROM c""".stripMargin,
-    "stats_jarque_bera" ->
+        |FROM c""".stripMargin)),
+    Key("stats_jarque_bera", statsJarqueBera, Some(
       s"""WITH m AS ($MomentsSql)
          |SELECT event_type, n,
          |  round(CAST(n AS DOUBLE) / 6
@@ -3028,10 +2975,10 @@ private[operators] trait StatsSeqOps extends StatsOpsBase {
          |  CAST(n AS DOUBLE) / 6
          |      * (skewness * skewness + kurtosis * kurtosis / 4) > 5.991
          |    AS reject_normal
-         |FROM m ORDER BY event_type""".stripMargin,
+         |FROM m ORDER BY event_type""".stripMargin)),
     // residuals snapped to 6 dp then DECIMAL-summed — order-free; the
     // regr_* builtins agree cross-engine far inside the snap,
-    "stats_dw" ->
+    Key("stats_dw", statsDw, Some(
       """WITH daily AS (
         |  SELECT event_type,
         |    epoch_us(CAST(ts AS TIMESTAMP)) // 86400000000 AS dayno,
@@ -3052,9 +2999,9 @@ private[operators] trait StatsSeqOps extends StatsOpsBase {
         |SELECT event_type, CAST(max(n) AS BIGINT) AS n,
         |  round(CAST(sum(de * de) AS DOUBLE) / CAST(sum(e * e) AS DOUBLE),
         |    6) + 0.0 AS dw
-        |FROM x GROUP BY 1 ORDER BY event_type""".stripMargin,
+        |FROM x GROUP BY 1 ORDER BY event_type""".stripMargin)),
     // integer run/sign counts; one double division + sqrt at the end,
-    "stats_runs" ->
+    Key("stats_runs", statsRuns, Some(
       """WITH daily AS (
         |  SELECT event_type,
         |    epoch_us(CAST(ts AS TIMESTAMP)) // 86400000000 AS dayno,
@@ -3088,14 +3035,14 @@ private[operators] trait StatsSeqOps extends StatsOpsBase {
         |      / (CAST(n_plus + n_minus AS DOUBLE)
         |         * (n_plus + n_minus) * (n_plus + n_minus - 1))),
         |    6) + 0.0 AS z
-        |FROM g ORDER BY event_type""".stripMargin,
+        |FROM g ORDER BY event_type""".stripMargin)),
     // the naive per-group cumulative-weight scan; the banded refine
     // picks the same first-qualifying row because band cums decompose,
-    "stats_moments" -> MomentsSql,
+    Key("stats_moments", statsMoments, Some(MomentsSql)),
     // the identical Holt recursion replayed as a recursive CTE: same
     // init (l₁=y₁, b₁=y₂−y₁), same literals, same operation order — the
     // doubles stay bit-equal until the single boundary round,
-    "stats_theilsen" ->
+    Key("stats_theilsen", statsTheilSen, Some(
       """WITH d AS (
         |  SELECT event_type, CAST(CAST(ts AS TIMESTAMP) AS DATE) AS day,
         |    CAST(sum(CAST("value" AS DECIMAL(18,2))) AS DOUBLE) AS y
@@ -3136,8 +3083,8 @@ private[operators] trait StatsSeqOps extends StatsOpsBase {
         |  round(ic.icpt, 6) + 0.0 AS intercept
         |FROM n JOIN sl ON n.event_type = sl.event_type
         |  JOIN ic ON n.event_type = ic.event_type
-        |ORDER BY n.event_type""".stripMargin,
-    "stats_benford" ->
+        |ORDER BY n.event_type""".stripMargin)),
+    Key("stats_benford", statsBenford, Some(
       """WITH c AS (
         |  SELECT CAST(CAST(abs("value") AS DECIMAL(18,2)) * 100 AS BIGINT)
         |    AS cents
@@ -3166,8 +3113,8 @@ private[operators] trait StatsSeqOps extends StatsOpsBase {
         |SELECT digit, n,
         |  round(CAST(n AS DOUBLE) / sum(n) OVER (), 6) + 0.0 AS share,
         |  round(ln(1 + 1.0 / digit) / ln(10), 6) + 0.0 AS benford
-        |FROM n ORDER BY digit""".stripMargin,
-    "stats_psi" -> {
+        |FROM n ORDER BY digit""".stripMargin)),
+    Key("stats_psi", statsPsi, Some {
       val edgeSel = (1 to 9)
         .map(i => s"round(quantile_cont(v, 0.$i), 6) AS e$i").mkString(",\n        |    ")
       val bucketSum = (1 to 9).map(i => s"CAST(v > e$i AS INT)").mkString(" + ")
@@ -3204,8 +3151,8 @@ private[operators] trait StatsSeqOps extends StatsOpsBase {
         |  FROM sh)
         |SELECT event_type, round(sum((p - q) * ln(p / q)), 6) + 0.0 AS psi
         |FROM pq GROUP BY event_type ORDER BY event_type""".stripMargin
-    },
-    "rolling_corr" ->
+    }),
+    Key("rolling_corr", rollingCorr, Some(
       """WITH daily AS (
         |  SELECT CAST(CAST(ts AS TIMESTAMP) AS DATE) AS day,
         |    CAST(sum(CASE WHEN event_type = 'view' THEN 1 ELSE 0 END)
@@ -3227,8 +3174,8 @@ private[operators] trait StatsSeqOps extends StatsOpsBase {
         |            sqrt(CAST((n * sxx - sx * sx) * (n * syy - sy * sy)
         |                 AS DOUBLE)), 6) + 0.0
         |  END AS r14
-        |FROM m WHERE n = 14 ORDER BY day""".stripMargin,
-    "stats_mutual_info" ->
+        |FROM m WHERE n = 14 ORDER BY day""".stripMargin)),
+    Key("stats_mutual_info", statsMutualInfo, Some(
       """WITH j AS (SELECT event_type,
         |    CAST(floor("value" / 100) AS BIGINT) AS vb, count(*) AS c
         |  FROM events GROUP BY 1, 2),
@@ -3251,8 +3198,8 @@ private[operators] trait StatsSeqOps extends StatsOpsBase {
         |SELECT n.n, n.n_cells, mi.mi_nats, ht.h_type, hb.h_bucket,
         |  round(mi.mi_nats / sqrt(ht.h_type * hb.h_bucket), 6) + 0.0
         |    AS nmi
-        |FROM n CROSS JOIN mi CROSS JOIN ht CROSS JOIN hb""".stripMargin,
-    "stats_granger" ->
+        |FROM n CROSS JOIN mi CROSS JOIN ht CROSS JOIN hb""".stripMargin)),
+    Key("stats_granger", statsGranger, Some(
       """WITH daily AS (
         |  SELECT CAST(CAST(ts AS TIMESTAMP) AS DATE) AS day, event_type,
         |    CAST(sum(CAST("value" AS DECIMAL(18,2))) AS DOUBLE) AS v
@@ -3279,8 +3226,8 @@ private[operators] trait StatsSeqOps extends StatsOpsBase {
         |  FROM p)
         |SELECT n, r_yx, r_yy, r_partial, f_stat,
         |  f_stat > 4.0 AS reject_5pct
-        |FROM q""".stripMargin,
-    "stats_ecdf" ->
+        |FROM q""".stripMargin)),
+    Key("stats_ecdf", statsEcdf, Some(
       """WITH st AS (SELECT CAST(min("value") AS DOUBLE) AS lo,
         |                   CAST(max("value") AS DOUBLE) AS hi
         |            FROM events),
@@ -3293,8 +3240,8 @@ private[operators] trait StatsSeqOps extends StatsOpsBase {
         |        / CAST(count(*) AS DOUBLE), 6) + 0.0 AS ecdf
         |FROM events CROSS JOIN grid
         |GROUP BY event_type, j, gx
-        |ORDER BY event_type, grid_id""".stripMargin,
-    "stats_partial_corr" ->
+        |ORDER BY event_type, grid_id""".stripMargin)),
+    Key("stats_partial_corr", statsPartialCorr, Some(
       """WITH m AS (SELECT
         |    round(corr(l_quantity, l_extendedprice), 6) + 0.0 AS r_qp,
         |    round(corr(l_quantity, l_tax), 6) + 0.0 AS r_qt,
@@ -3314,8 +3261,8 @@ private[operators] trait StatsSeqOps extends StatsOpsBase {
         |  round((r_xy - r_xz * r_yz) /
         |        sqrt((1.0 - r_xz * r_xz) * (1.0 - r_yz * r_yz)), 6) + 0.0
         |    AS r_partial
-        |FROM rows_ ORDER BY x, y""".stripMargin,
-    "stats_changepoint" ->
+        |FROM rows_ ORDER BY x, y""".stripMargin)),
+    Key("stats_changepoint", statsChangepoint, Some(
       """WITH daily AS (
         |  SELECT CAST(CAST(ts AS TIMESTAMP) AS DATE) AS day,
         |    sum(CAST("value" AS DECIMAL(18,2))) AS v
@@ -3333,8 +3280,8 @@ private[operators] trait StatsSeqOps extends StatsOpsBase {
         |    AS cusum_stat
         |FROM pre CROSS JOIN tot
         |WHERE t < n
-        |ORDER BY abs(st * n - sn * t) DESC, day LIMIT 1""".stripMargin,
-    "stats_qq" -> {
+        |ORDER BY abs(st * n - sn * t) DESC, day LIMIT 1""".stripMargin)),
+    Key("stats_qq", statsQq, Some {
       val sq = (1 to 9)
         .map(i => s"round(quantile_cont(\"value\", 0.$i), 6) + 0.0 AS q$i")
         .mkString(",\n        |    ")
@@ -3355,8 +3302,8 @@ private[operators] trait StatsSeqOps extends StatsOpsBase {
         |  round(ts.q_type - gs.q_global, 6) + 0.0 AS shift
         |FROM ts JOIN gs USING (decile)
         |ORDER BY event_type, decile""".stripMargin
-    },
-    "stats_jsd" ->
+    }),
+    Key("stats_jsd", statsJsd, Some(
       """WITH c AS (
         |  SELECT event_type,
         |    epoch_us(CAST(ts AS TIMESTAMP)) < 1705363200000000 AS is_ref,
@@ -3381,8 +3328,8 @@ private[operators] trait StatsSeqOps extends StatsOpsBase {
         |             ELSE 0.0 END / 2 +
         |        CASE WHEN q > 0 THEN q * ln(q / ((p + q) / 2))
         |             ELSE 0.0 END / 2, 6) + 0.0 AS jsd_term
-        |FROM s ORDER BY event_type""".stripMargin,
-    "stats_ljung_box" ->
+        |FROM s ORDER BY event_type""".stripMargin)),
+    Key("stats_ljung_box", statsLjungBox, Some(
       """WITH daily AS (
         |  SELECT CAST(CAST(ts AS TIMESTAMP) AS DATE) AS day,
         |    CAST(sum(CAST("value" AS DECIMAL(18,2))) AS DOUBLE) AS v
@@ -3414,8 +3361,8 @@ private[operators] trait StatsSeqOps extends StatsOpsBase {
         |  (round(CAST(n_days AS DOUBLE) * CAST(n_days + 2 AS DOUBLE) *
         |         sum(acf * acf / CAST(n_days - lag AS DOUBLE)), 6) + 0.0
         |   > 14.06714) AS reject_5pct
-        |FROM acf CROSS JOIN nd GROUP BY n_days""".stripMargin,
-    "stats_acf" ->
+        |FROM acf CROSS JOIN nd GROUP BY n_days""".stripMargin)),
+    Key("stats_acf", statsAcf, Some(
       """WITH daily AS (
         |  SELECT CAST(CAST(ts AS TIMESTAMP) AS DATE) AS day,
         |    CAST(sum(CAST("value" AS DECIMAL(18,2))) AS DOUBLE) AS v
@@ -3437,8 +3384,8 @@ private[operators] trait StatsSeqOps extends StatsOpsBase {
         |  round((CAST(n AS DOUBLE) * sxy - sx * sy) /
         |        sqrt((CAST(n AS DOUBLE) * sxx - sx * sx) *
         |             (CAST(n AS DOUBLE) * syy - sy * sy)), 6) + 0.0 AS acf
-        |FROM m ORDER BY lag""".stripMargin,
-    "stats_corr_matrix" -> {
+        |FROM m ORDER BY lag""".stripMargin)),
+    Key("stats_corr_matrix", statsCorrMatrix, Some {
       val pairs = for {
         i <- CorrCols.indices; j <- (i + 1) until CorrCols.length
       } yield
@@ -3446,8 +3393,8 @@ private[operators] trait StatsSeqOps extends StatsOpsBase {
            |  round(corr(${CorrCols(i)}, ${CorrCols(j)}), 6) + 0.0 AS r
            |FROM lineitem""".stripMargin
       pairs.mkString("", "\nUNION ALL\n", "\nORDER BY col_a, col_b")
-    },
-    "regr_trend" ->
+    }),
+    Key("regr_trend", regrTrend, Some(
       """SELECT event_type,
         |  round(regr_slope("value", x), 6) + 0.0 AS slope,
         |  round(regr_intercept("value", x), 6) + 0.0 AS intercept,
@@ -3457,8 +3404,8 @@ private[operators] trait StatsSeqOps extends StatsOpsBase {
         |        CAST(epoch_us(CAST(ts AS TIMESTAMP)) // 86400000000
         |             AS DOUBLE) AS x
         |      FROM events)
-        |GROUP BY event_type ORDER BY event_type""".stripMargin,
-    "resample_interp" ->
+        |GROUP BY event_type ORDER BY event_type""".stripMargin)),
+    Key("resample_interp", resampleInterp, Some(
       """WITH daily AS (
         |  SELECT user_id, CAST(ts AS DATE) AS day, avg("value") AS v
         |  FROM events GROUP BY 1, 2),
@@ -3490,6 +3437,6 @@ private[operators] trait StatsSeqOps extends StatsOpsBase {
         |         ((day - pd) / CAST(nd - pd AS DOUBLE)), 6) + 0.0
         |  END AS val,
         |  v IS NULL AS is_gap
-        |FROM f ORDER BY user_id, day_s""".stripMargin,
+        |FROM f ORDER BY user_id, day_s""".stripMargin)),
   )
 }

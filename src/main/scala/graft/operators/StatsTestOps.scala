@@ -2,6 +2,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.Key
 
 /** Hypothesis tests, effect sizes and confidence intervals — one of the [[StatsOps]] family traits (split from
   * the former single-file StatsOps with zero behavior change;
@@ -1447,49 +1448,8 @@ private[operators] trait StatsTestOps extends StatsOpsBase {
       .orderBy("event_type")
   }
 
-  protected val testQueries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "stats_sign_test" -> statsSignTest _,
-    "stats_mantel_haenszel" -> statsMantelHaenszel _,
-    "stats_woolf" -> statsWoolf _,
-    "stats_brunner_munzel" -> statsBrunnerMunzel _,
-    "stats_median_ci" -> statsMedianCi _,
-    "stats_poisson_rate" -> statsPoissonRate _,
-    "stats_mood_scale" -> statsMoodScale _,
-    "stats_quade" -> statsQuade _,
-    "stats_nemenyi" -> statsNemenyi _,
-    "stats_ordinal_assoc" -> statsOrdinalAssoc _,
-    "stats_trimmed_mean" -> statsTrimmedMean _,
-    "stats_iqr_fences" -> statsIqrFences _,
-    "stats_tost" -> statsTost _,
-    "ab_bayes_approx" -> abBayesApprox _,
-    "stats_welch_anova" -> statsWelchAnova _,
-    "stats_ansari_bradley" -> statsAnsariBradley _,
-    "stats_cliff_delta" -> statsCliffDelta _,
-    "stats_mood_median" -> statsMoodMedian _,
-    "stats_bartlett" -> statsBartlett _,
-    "stats_two_prop_ci" -> statsTwoPropCi _,
-    "stats_prop_trend" -> statsPropTrend _,
-    "stats_cochran_q" -> statsCochranQ _,
-    "stats_tukey" -> statsTukey _,
-    "stats_mcnemar" -> statsMcnemar _,
-    "stats_friedman" -> statsFriedman _,
-    "stats_wilson_ci" -> statsWilsonCi _,
-    "stats_kruskal" -> statsKruskal _,
-    "stats_cohens_d" -> statsCohensD _,
-    "stats_hodges_lehmann" -> statsHodgesLehmann _,
-    "stats_cramers_v" -> statsCramersV _,
-    "stats_levene" -> statsLevene _,
-    "stats_gini" -> statsGini _,
-    "stats_anova" -> statsAnova _,
-    "stats_ttest" -> statsTtest _,
-    "stats_chi2" -> statsChi2 _,
-    "stats_ks" -> statsKs _,
-    "stats_mannwhitney" -> statsMannWhitney _,
-    "stats_bootstrap" -> statsBootstrap _,
-  )
-
-  protected val testOracles: Map[String, String] = Map(
-    "stats_brunner_munzel" -> {
+  protected val testKeys: Seq[Key] = Seq(
+    Key("stats_brunner_munzel", statsBrunnerMunzel, Some {
       val pw = phiSql("aw")
       s"""WITH g AS (
          |  SELECT "value" AS v,
@@ -1548,8 +1508,8 @@ private[operators] trait StatsTestOps extends StatsOpsBase {
          |    + 0.0 AS df,
          |  p2 AS p_two, p2 < 0.05 AS significant
          |FROM d5""".stripMargin
-    },
-    "stats_quade" -> (duckFriedmanGrid +
+    }),
+    Key("stats_quade", statsQuade, Some(duckFriedmanGrid +
       """rng AS (SELECT day,
         |    CAST(max(revc) - min(revc) AS BIGINT) AS rng
         |  FROM rk GROUP BY 1),
@@ -1580,8 +1540,8 @@ private[operators] trait StatsTestOps extends StatsOpsBase {
         |  round((CAST(n_blocks AS DOUBLE) - 1) * bb
         |    / (CAST(a16 AS DOUBLE) - bb), 6) + 0.0 AS f_stat,
         |  k - 1 AS df1, (n_blocks - 1) * (k - 1) AS df2
-        |FROM g""".stripMargin),
-    "stats_nemenyi" -> (duckFriedmanGrid +
+        |FROM g""".stripMargin)),
+    Key("stats_nemenyi", statsNemenyi, Some(duckFriedmanGrid +
       s"""s AS (SELECT event_type, CAST(sum(r2x) AS BIGINT) AS s2,
          |    CAST(count(*) AS BIGINT) AS n
          |  FROM rk GROUP BY 1),
@@ -1606,8 +1566,8 @@ private[operators] trait StatsTestOps extends StatsOpsBase {
          |  round(rbar_b, 6) + 0.0 AS mean_rank_b,
          |  diff6 AS rank_diff, cd6 AS critical_dist,
          |  diff6 > cd6 AS significant
-         |FROM d ORDER BY type_a, type_b""".stripMargin),
-    "stats_mood_scale" -> {
+         |FROM d ORDER BY type_a, type_b""".stripMargin)),
+    Key("stats_mood_scale", statsMoodScale, Some {
       val pz = phiSql("az")
       s"""WITH g AS (
          |  SELECT "value" AS v,
@@ -1647,8 +1607,8 @@ private[operators] trait StatsTestOps extends StatsOpsBase {
          |  round(e4 / 4, 6) + 0.0 AS t_expected,
          |  round(z, 6) + 0.0 AS z, p2 AS p_two, p2 < 0.05 AS significant
          |FROM d4""".stripMargin
-    },
-    "stats_poisson_rate" -> {
+    }),
+    Key("stats_poisson_rate", statsPoissonRate, Some {
       val pz = phiSql("az")
       s"""WITH g AS (SELECT
          |    CAST(sum(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END)
@@ -1679,8 +1639,8 @@ private[operators] trait StatsTestOps extends StatsOpsBase {
          |  round(exp(lnrr + 1.959964 * se), 6) + 0.0 AS rr_ci_hi,
          |  p2 < 0.05 AS significant
          |FROM pp""".stripMargin
-    },
-    "stats_median_ci" ->
+    }),
+    Key("stats_median_ci", statsMedianCi, Some(
       """WITH daily AS (
         |  SELECT event_type, CAST(CAST(ts AS TIMESTAMP) AS DATE) AS day,
         |    CAST(sum(CAST("value" AS DECIMAL(18,2))) * 100 AS BIGINT)
@@ -1709,8 +1669,8 @@ private[operators] trait StatsTestOps extends StatsOpsBase {
         |  rank_lo, rank_hi,
         |  round(CAST(loc AS DOUBLE) / 100, 6) + 0.0 AS ci_lo,
         |  round(CAST(hic AS DOUBLE) / 100, 6) + 0.0 AS ci_hi
-        |FROM g ORDER BY event_type""".stripMargin,
-    "stats_mantel_haenszel" -> (duckStrataTables +
+        |FROM g ORDER BY event_type""".stripMargin)),
+    Key("stats_mantel_haenszel", statsMantelHaenszel, Some(duckStrataTables +
       """t AS (SELECT
         |    CAST(round(CAST(a AS DOUBLE) * d / n, 9) AS DECIMAL(28,9))
         |      AS adn,
@@ -1737,8 +1697,8 @@ private[operators] trait StatsTestOps extends StatsOpsBase {
         |  round(CAST(num AS DOUBLE) / CAST(den AS DOUBLE), 6) + 0.0
         |    AS or_mh,
         |  chi2r AS chi2_cmh, chi2r > 3.841 AS significant
-        |FROM f""".stripMargin),
-    "stats_woolf" -> (duckStrataTables +
+        |FROM f""".stripMargin)),
+    Key("stats_woolf", statsWoolf, Some(duckStrataTables +
       """per AS (SELECT dow,
         |    CAST(round(ln(((CAST(a AS DOUBLE) + 0.5)
         |      * (CAST(d AS DOUBLE) + 0.5))
@@ -1772,8 +1732,8 @@ private[operators] trait StatsTestOps extends StatsOpsBase {
         |  round(exp(pooled), 6) + 0.0 AS or_pooled,
         |  x2r AS x2_homogeneity, k_strata - 1 AS df,
         |  x2r <= 12.592 AS homogeneous
-        |FROM f""".stripMargin),
-    "stats_sign_test" -> {
+        |FROM f""".stripMargin)),
+    Key("stats_sign_test", statsSignTest, Some {
       val pz = phiSql("az")
       s"""WITH daily AS (
          |  SELECT event_type, CAST(CAST(ts AS TIMESTAMP) AS DATE) AS day,
@@ -1800,8 +1760,8 @@ private[operators] trait StatsTestOps extends StatsOpsBase {
          |  round(z, 6) + 0.0 AS z, p2 AS p_two, z > 0 AS shift_up,
          |  p2 < 0.05 AS significant
          |FROM pp ORDER BY event_type""".stripMargin
-    },
-    "stats_ordinal_assoc" ->
+    }),
+    Key("stats_ordinal_assoc", statsOrdinalAssoc, Some(
       """WITH cells AS (
         |  SELECT CAST(floor("value" / 100) AS BIGINT) AS xb,
         |    ((epoch_us(CAST(ts AS TIMESTAMP)) // 3600000000) % 24) // 6
@@ -1833,8 +1793,8 @@ private[operators] trait StatsTestOps extends StatsOpsBase {
         |    AS somers_d_xy,
         |  round(CAST(2 * (cp - dp) AS DOUBLE)
         |    / sqrt(CAST(dx AS DOUBLE) * dy), 6) + 0.0 AS tau_b
-        |FROM dd""".stripMargin,
-    "stats_trimmed_mean" ->
+        |FROM dd""".stripMargin)),
+    Key("stats_trimmed_mean", statsTrimmedMean, Some(
       """WITH g AS (
         |  SELECT event_type,
         |    CAST(CAST("value" AS DECIMAL(18,2)) * 100 AS BIGINT) AS vc,
@@ -1870,8 +1830,8 @@ private[operators] trait StatsTestOps extends StatsOpsBase {
         |    / (100 * n), 6) + 0.0 AS winsor_mean_10,
         |  round(CAST(v_lo AS DOUBLE) / 100, 6) + 0.0 AS clamp_lo,
         |  round(CAST(v_hi AS DOUBLE) / 100, 6) + 0.0 AS clamp_hi
-        |FROM a ORDER BY event_type""".stripMargin,
-    "stats_iqr_fences" ->
+        |FROM a ORDER BY event_type""".stripMargin)),
+    Key("stats_iqr_fences", statsIqrFences, Some(
       """WITH q AS (
         |  SELECT event_type,
         |    quantile_cont("value", 0.25) AS q1,
@@ -1893,8 +1853,8 @@ private[operators] trait StatsTestOps extends StatsOpsBase {
         |    OR e."value" > f.hi_out THEN 1 ELSE 0 END) AS BIGINT)
         |    AS n_extreme
         |FROM events e JOIN f USING (event_type)
-        |GROUP BY 1, 3, 4, 5, 6 ORDER BY e.event_type""".stripMargin,
-    "stats_tost" ->
+        |GROUP BY 1, 3, 4, 5, 6 ORDER BY e.event_type""".stripMargin)),
+    Key("stats_tost", statsTost, Some(
       s"""WITH g AS (
          |  SELECT event_type, CAST(count(*) AS BIGINT) AS n,
          |    CAST(sum(CAST("value" AS DECIMAL(18,2))) AS DOUBLE) AS s1,
@@ -1927,8 +1887,8 @@ private[operators] trait StatsTestOps extends StatsOpsBase {
          |  round(delta, 6) + 0.0 AS margin, round(se, 6) + 0.0 AS se,
          |  round(tl, 6) + 0.0 AS t_lower, round(tu, 6) + 0.0 AS t_upper,
          |  pmax6 AS p_max, pmax6 < 0.05 AS equivalent
-         |FROM p""".stripMargin,
-    "ab_bayes_approx" ->
+         |FROM p""".stripMargin)),
+    Key("ab_bayes_approx", abBayesApprox, Some(
       s"""WITH u AS (
          |  SELECT user_id,
          |    max(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END)
@@ -1960,8 +1920,8 @@ private[operators] trait StatsTestOps extends StatsOpsBase {
          |  round((CAST(x_b AS DOUBLE) / n_b)
          |    / (CAST(x_a AS DOUBLE) / n_a) - 1, 6) + 0.0 AS rel_lift,
          |  round(${phiSql("zs")}, 6) + 0.0 AS p_b_beats_a
-         |FROM z""".stripMargin,
-    "stats_welch_anova" ->
+         |FROM z""".stripMargin)),
+    Key("stats_welch_anova", statsWelchAnova, Some(
       """WITH g AS (
         |  SELECT event_type, CAST(count(*) AS BIGINT) AS n,
         |    CAST(sum(CAST("value" AS DECIMAL(18,2))) AS DOUBLE) AS s1,
@@ -1994,8 +1954,8 @@ private[operators] trait StatsTestOps extends StatsOpsBase {
         |  k - 1 AS df1,
         |  round((CAST(k AS DOUBLE) * k - 1)
         |    / (3 * CAST(lam AS DOUBLE)), 6) + 0.0 AS df2
-        |FROM agg""".stripMargin,
-    "stats_ansari_bradley" ->
+        |FROM agg""".stripMargin)),
+    Key("stats_ansari_bradley", statsAnsariBradley, Some(
       """WITH g AS (
         |  SELECT "value" AS value,
         |    sum(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END) AS a,
@@ -2040,8 +2000,8 @@ private[operators] trait StatsTestOps extends StatsOpsBase {
         |  round((CAST(t_a AS DOUBLE) - n1 * sbar)
         |    / sqrt(CAST(n1 AS DOUBLE) * n2
         |      / (CAST(nn AS DOUBLE) * (nn - 1)) * varsum), 6) + 0.0 AS z
-        |FROM f""".stripMargin,
-    "stats_cliff_delta" ->
+        |FROM f""".stripMargin)),
+    Key("stats_cliff_delta", statsCliffDelta, Some(
       """WITH g AS (
         |  SELECT "value" AS value,
         |    sum(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END) AS a,
@@ -2071,8 +2031,8 @@ private[operators] trait StatsTestOps extends StatsOpsBase {
         |       WHEN abs(delta) < 0.33 THEN 'small'
         |       WHEN abs(delta) < 0.474 THEN 'medium'
         |       ELSE 'large' END AS magnitude
-        |FROM f""".stripMargin,
-    "stats_mood_median" ->
+        |FROM f""".stripMargin)),
+    Key("stats_mood_median", statsMoodMedian, Some(
       """WITH g AS (SELECT "value" AS value, count(*) AS t
         |           FROM events GROUP BY 1),
         |c AS (SELECT value,
@@ -2106,8 +2066,8 @@ private[operators] trait StatsTestOps extends StatsOpsBase {
         |SELECT k, nn AS n, round(med.med, 6) + 0.0 AS grand_median,
         |  ta AS n_above, round(CAST(chi2d AS DOUBLE), 6) + 0.0 AS chi2,
         |  k - 1 AS df
-        |FROM x, med""".stripMargin,
-    "stats_bartlett" ->
+        |FROM x, med""".stripMargin)),
+    Key("stats_bartlett", statsBartlett, Some(
       """WITH g AS (
         |  SELECT event_type, CAST(count(*) AS BIGINT) AS n,
         |    CAST(sum(CAST("value" AS DECIMAL(18,2))) AS DOUBLE) AS s1,
@@ -2134,8 +2094,8 @@ private[operators] trait StatsTestOps extends StatsOpsBase {
         |  round(((nn - k) * ln(sp2) - CAST(t_lnv AS DOUBLE))
         |    / (1 + (CAST(c_sum AS DOUBLE) - CAST(1 AS DOUBLE) / (nn - k))
         |       / (3 * (k - 1))), 6) + 0.0 AS stat
-        |FROM s""".stripMargin,
-    "stats_two_prop_ci" ->
+        |FROM s""".stripMargin)),
+    Key("stats_two_prop_ci", statsTwoPropCi, Some(
       """WITH g AS (
         |  SELECT ((user_id % 2147483648) * 2654435761 % 2147483648) % 2
         |      AS g,
@@ -2178,8 +2138,8 @@ private[operators] trait StatsTestOps extends StatsOpsBase {
         |    + (w0u - p0) * (w0u - p0)), 6) + 0.0 AS newcombe_lo,
         |  round(p1 - p0 + sqrt((w1u - p1) * (w1u - p1)
         |    + (p0 - w0l) * (p0 - w0l)), 6) + 0.0 AS newcombe_hi
-        |FROM se""".stripMargin,
-    "stats_prop_trend" ->
+        |FROM se""".stripMargin)),
+    Key("stats_prop_trend", statsPropTrend, Some(
       """WITH g AS (
         |  SELECT ((CAST(CAST(ts AS TIMESTAMP) AS DATE)
         |       - DATE '1970-01-01') % 7 + 7) % 7 AS w,
@@ -2205,8 +2165,8 @@ private[operators] trait StatsTestOps extends StatsOpsBase {
         |  round(CAST(num AS DOUBLE) * CAST(num AS DOUBLE) * nt
         |    / (CAST(den1 AS DOUBLE) * CAST(den2 AS DOUBLE)), 6) + 0.0
         |    AS chi2_trend
-        |FROM t""".stripMargin,
-    "stats_cochran_q" ->
+        |FROM t""".stripMargin)),
+    Key("stats_cochran_q", statsCochranQ, Some(
       """WITH pres AS (SELECT DISTINCT user_id, event_type FROM events
         |             WHERE "value" > 150),
         |r AS (SELECT user_id, CAST(count(*) AS BIGINT) AS r
@@ -2222,8 +2182,8 @@ private[operators] trait StatsTestOps extends StatsOpsBase {
         |  round(CASE WHEN k * t - sr2 > 0 THEN
         |      CAST((k - 1) * (k * sc2 - t * t) AS DOUBLE)
         |      / (k * t - sr2) END, 6) + 0.0 AS q_stat
-        |FROM rs CROSS JOIN cs""".stripMargin,
-    "stats_tukey" ->
+        |FROM rs CROSS JOIN cs""".stripMargin)),
+    Key("stats_tukey", statsTukey, Some(
       """WITH q AS (
         |  SELECT event_type,
         |    round(quantile_cont("value", 0.25), 6) AS q1,
@@ -2244,8 +2204,8 @@ private[operators] trait StatsTestOps extends StatsOpsBase {
         |      THEN 1 ELSE 0 END) AS DOUBLE) / count(*), 6) + 0.0
         |    AS pct_outliers
         |FROM events e JOIN f ON e.event_type = f.event_type
-        |GROUP BY 1 ORDER BY e.event_type""".stripMargin,
-    "stats_mcnemar" ->
+        |GROUP BY 1 ORDER BY e.event_type""".stripMargin)),
+    Key("stats_mcnemar", statsMcnemar, Some(
       """WITH p AS (
         |  SELECT user_id,
         |    epoch_us(CAST(ts AS TIMESTAMP)) // 86400000000 AS dayno
@@ -2272,8 +2232,8 @@ private[operators] trait StatsTestOps extends StatsOpsBase {
         |  CASE WHEN b + c > 0 THEN
         |      CAST((b - c) * (b - c) AS DOUBLE) / (b + c) > 3.841
         |    ELSE false END AS significant
-        |FROM t""".stripMargin,
-    "stats_friedman" ->
+        |FROM t""".stripMargin)),
+    Key("stats_friedman", statsFriedman, Some(
       """WITH rev AS (
         |  SELECT CAST(CAST(ts AS TIMESTAMP) AS DATE) AS day, event_type,
         |    CAST(sum(CAST("value" AS DECIMAL(18,2))) * 100 AS BIGINT)
@@ -2299,8 +2259,8 @@ private[operators] trait StatsTestOps extends StatsOpsBase {
         |  round(CAST(3 * ss AS DOUBLE)
         |    / (CAST(n_blocks AS DOUBLE) * k * (k + 1))
         |    - CAST(3 * n_blocks * (k + 1) AS DOUBLE), 6) + 0.0 AS q
-        |FROM t""".stripMargin,
-    "stats_wilson_ci" ->
+        |FROM t""".stripMargin)),
+    Key("stats_wilson_ci", statsWilsonCi, Some(
       """WITH d AS (
         |  SELECT CAST(CAST(ts AS TIMESTAMP) AS DATE) AS day,
         |    CAST(count(*) AS BIGINT) AS n,
@@ -2325,8 +2285,8 @@ private[operators] trait StatsTestOps extends StatsOpsBase {
         |            / (4 * n * n)))
         |    / (1 + (CAST(1.96 AS DOUBLE) * CAST(1.96 AS DOUBLE)) / n), 6)
         |    + 0.0 AS ci_hi
-        |FROM d ORDER BY day""".stripMargin,
-    "stats_kruskal" ->
+        |FROM d ORDER BY day""".stripMargin)),
+    Key("stats_kruskal", statsKruskal, Some(
       """WITH j AS (SELECT event_type,
         |    CAST(CAST("value" AS DECIMAL(18,2)) * 100 AS BIGINT) AS cents,
         |    count(*) AS c
@@ -2357,8 +2317,8 @@ private[operators] trait StatsTestOps extends StatsOpsBase {
         |    / (CAST(n AS DOUBLE) * (n + 1)) - 3.0 * (n + 1))
         |    / (1.0 - CAST(tsum AS DOUBLE)
         |       / (CAST(n AS DOUBLE) * n * n - n)), 6) + 0.0 AS h_adj
-        |FROM tot, tc""".stripMargin,
-    "stats_cramers_v" ->
+        |FROM tot, tc""".stripMargin)),
+    Key("stats_cramers_v", statsCramersV, Some(
       """WITH e0 AS (
         |  SELECT event_type,
         |    ((CAST(ts AS DATE) - DATE '1970-01-01') % 7 + 7) % 7 AS dow
@@ -2382,10 +2342,10 @@ private[operators] trait StatsTestOps extends StatsOpsBase {
         |SELECT chi2, CAST(n AS BIGINT) AS n,
         |  round(sqrt(chi2 / (CAST(n AS DOUBLE) * least(r - 1, c - 1))), 6)
         |    + 0.0 AS v
-        |FROM t""".stripMargin,
+        |FROM t""".stripMargin)),
     // the identical grid-median + integer-deviation pipeline; HUGEINT
     // sums mirror DECIMAL(38,0),
-    "stats_levene" ->
+    Key("stats_levene", statsLevene, Some(
       """WITH b AS (
         |  SELECT event_type,
         |    CAST(CAST("value" AS DECIMAL(18,2)) * 100 AS BIGINT) AS iv
@@ -2424,8 +2384,8 @@ private[operators] trait StatsTestOps extends StatsOpsBase {
         |      - CAST(s AS DOUBLE) * CAST(s AS DOUBLE) / n) / (k - 1))
         |    / ((CAST(ss AS DOUBLE) - CAST(b1 AS DOUBLE)) / (n - k)),
         |    6) + 0.0 AS f_stat
-        |FROM t""".stripMargin,
-    "stats_gini" ->
+        |FROM t""".stripMargin)),
+    Key("stats_gini", statsGini, Some(
       """WITH spend AS (
         |  SELECT user_id, sum(CAST("value" AS DECIMAL(18,2))) AS x
         |  FROM events GROUP BY 1),
@@ -2436,8 +2396,8 @@ private[operators] trait StatsTestOps extends StatsOpsBase {
         |  round(2.0 * CAST(sum(i * x) AS DOUBLE) /
         |          (count(*) * CAST(sum(x) AS DOUBLE))
         |        - CAST(count(*) + 1 AS DOUBLE) / count(*), 6) + 0.0 AS gini
-        |FROM r""".stripMargin,
-    "stats_anova" ->
+        |FROM r""".stripMargin)),
+    Key("stats_anova", statsAnova, Some(
       """WITH g AS (
         |  SELECT event_type, count(*) AS n,
         |    CAST(sum(CAST("value" AS DECIMAL(18,2))) AS DOUBLE) AS s1,
@@ -2459,8 +2419,8 @@ private[operators] trait StatsTestOps extends StatsOpsBase {
         |  k - 1 AS df1, st.nn - k AS df2,
         |  round(((st.sg - st.t * st.t / st.nn) / (k - 1)) /
         |        ((st.ss2 - st.sg) / (st.nn - k)), 6) + 0.0 AS f_stat
-        |FROM f""".stripMargin,
-    "stats_cohens_d" ->
+        |FROM f""".stripMargin)),
+    Key("stats_cohens_d", statsCohensD, Some(
       """WITH m AS (
         |  SELECT event_type, count(*) AS n,
         |    CAST(sum(CAST("value" AS DECIMAL(18,2))) AS DOUBLE) AS sx,
@@ -2478,8 +2438,8 @@ private[operators] trait StatsTestOps extends StatsOpsBase {
         |        sqrt(((a.n - 1) * a.var + (b.n - 1) * b.var) /
         |             (a.n + b.n - 2)), 6) + 0.0 AS cohens_d
         |FROM s a JOIN s b ON a.event_type < b.event_type
-        |ORDER BY type_a, type_b""".stripMargin,
-    "stats_hodges_lehmann" ->
+        |ORDER BY type_a, type_b""".stripMargin)),
+    Key("stats_hodges_lehmann", statsHodgesLehmann, Some(
       """WITH daily AS (
         |  SELECT CAST(CAST(ts AS TIMESTAMP) AS DATE) AS day,
         |    CAST(sum(CAST("value" AS DECIMAL(18,2))) AS DOUBLE) AS v
@@ -2495,8 +2455,8 @@ private[operators] trait StatsTestOps extends StatsOpsBase {
         |               AS n_pairs
         |      FROM daily)
         |SELECT n_days, n_pairs, round(walsh, 6) + 0.0 AS hl_estimate
-        |FROM n CROSS JOIN med""".stripMargin,
-    "stats_ttest" ->
+        |FROM n CROSS JOIN med""".stripMargin)),
+    Key("stats_ttest", statsTtest, Some(
       """WITH m AS (
         |  SELECT event_type, CAST(count(*) AS DOUBLE) AS n,
         |    avg("value") AS m, var_samp("value") AS v
@@ -2508,8 +2468,8 @@ private[operators] trait StatsTestOps extends StatsOpsBase {
         |    ((a.v / a.n) * (a.v / a.n) / (a.n - 1) +
         |     (b.v / b.n) * (b.v / b.n) / (b.n - 1)), 6) + 0.0 AS df
         |FROM m a, m b WHERE a.event_type < b.event_type
-        |ORDER BY type_a, type_b""".stripMargin,
-    "stats_chi2" ->
+        |ORDER BY type_a, type_b""".stripMargin)),
+    Key("stats_chi2", statsChi2, Some(
       """WITH e0 AS (
         |  SELECT event_type,
         |    ((CAST(ts AS DATE) - DATE '1970-01-01') % 7 + 7) % 7 AS dow
@@ -2529,8 +2489,8 @@ private[operators] trait StatsTestOps extends StatsOpsBase {
         |  CAST((count(DISTINCT event_type) - 1) * (count(DISTINCT dow) - 1)
         |       AS BIGINT) AS df,
         |  any_value(n.n) AS n
-        |FROM grid, n""".stripMargin,
-    "stats_ks" ->
+        |FROM grid, n""".stripMargin)),
+    Key("stats_ks", statsKs, Some(
       """WITH g AS (
         |  SELECT "value" AS value,
         |    sum(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END) AS a,
@@ -2549,8 +2509,8 @@ private[operators] trait StatsTestOps extends StatsOpsBase {
         |SELECT n1, n2, round(d, 6) + 0.0 AS d_stat,
         |  round(d * sqrt(CAST(n1 AS DOUBLE) * n2 / (n1 + n2)), 6) + 0.0
         |    AS lambda
-        |FROM d""".stripMargin,
-    "stats_mannwhitney" ->
+        |FROM d""".stripMargin)),
+    Key("stats_mannwhitney", statsMannWhitney, Some(
       """WITH g AS (
         |  SELECT "value" AS value,
         |    sum(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END) AS a,
@@ -2578,8 +2538,8 @@ private[operators] trait StatsTestOps extends StatsOpsBase {
         |      (CAST(n1 + n2 + 1 AS DOUBLE) -
         |       CAST(tie3 AS DOUBLE) /
         |         (CAST(n1 + n2 AS DOUBLE) * (n1 + n2 - 1)))), 6) + 0.0 AS z
-        |FROM u""".stripMargin,
-    "stats_bootstrap" ->
+        |FROM u""".stripMargin)),
+    Key("stats_bootstrap", statsBootstrap, Some(
       """WITH e AS (
         |  SELECT event_id, CAST("value" AS DECIMAL(18,2)) AS v FROM events),
         |x AS (SELECT event_id, v, CAST(i AS BIGINT) AS b
@@ -2600,7 +2560,7 @@ private[operators] trait StatsTestOps extends StatsOpsBase {
         |  round(quantile_cont(m, 0.5), 6) + 0.0 AS ci_med,
         |  round(quantile_cont(m, 0.975), 6) + 0.0 AS ci_hi,
         |  round(min(m), 6) + 0.0 AS mn, round(max(m), 6) + 0.0 AS mx
-        |FROM m""".stripMargin,
+        |FROM m""".stripMargin)),
     // seasonal_decompose's residual pipeline + explicit middle-pair
     // median/MAD band; the flag compares the unrounded score exactly as
     // the Spark plan does,

@@ -2,6 +2,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.Key
 import graft.sources.Tables
 
 /** Windowed technical-analysis operators over the integer daily bars — one of the [[StatsOps]] family traits (split from
@@ -851,37 +852,8 @@ private[operators] trait StatsWindowOps extends StatsOpsBase {
       .orderBy("event_type", "day")
   }
 
-  protected val windowQueries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "window_williams_r" -> windowWilliamsR _,
-    "window_mfi" -> windowMfi _,
-    "window_keltner" -> windowKeltner _,
-    "window_heikin_ashi" -> windowHeikinAshi _,
-    "window_pivot_points" -> windowPivotPoints _,
-    "window_ichimoku" -> windowIchimoku _,
-    "window_chandelier_exit" -> windowChandelierExit _,
-    "window_cci" -> windowCci _,
-    "window_donchian" -> windowDonchian _,
-    "window_kama" -> windowKama _,
-    "window_obv" -> windowObv _,
-    "window_vwap" -> windowVwap _,
-    "window_atr" -> windowAtr _,
-    "window_aroon" -> windowAroon _,
-    "window_macd" -> windowMacd _,
-    "window_ewma_timedecay" -> windowEwmaTimedecay _,
-    "window_stochastic" -> windowStochastic _,
-    "window_ulcer" -> windowUlcer _,
-    "window_growth" -> windowGrowth _,
-    "window_rsi" -> windowRsi _,
-    "window_bollinger" -> windowBollinger _,
-    "window_drawdown" -> windowDrawdown _,
-    "window_rolling_zscore" -> windowRollingZscore _,
-    "window_ewma" -> windowEwma _,
-    "window_streaks" -> windowStreaks _,
-    "window_cusum" -> windowCusum _,
-  )
-
-  protected val windowOracles: Map[String, String] = Map(
-    "window_cci" -> (duckDailyTyped +
+  protected val windowKeys: Seq[Key] = Seq(
+    Key("window_cci", windowCci, Some(duckDailyTyped +
       """w AS (SELECT event_type, day, revc,
         |    row_number() OVER wt AS rn,
         |    CAST(sum(revc) OVER w20 AS BIGINT) AS s,
@@ -899,8 +871,8 @@ private[operators] trait StatsWindowOps extends StatsOpsBase {
         |  round(CAST(dv AS DOUBLE) / 40000, 6) + 0.0 AS mean_dev,
         |  round(CASE WHEN dv > 0 THEN CAST(20 * revc - s AS DOUBLE)
         |    * 20000 / (15 * dv) END, 6) + 0.0 AS cci
-        |FROM ag ORDER BY event_type, day""".stripMargin),
-    "window_donchian" -> (duckDailyTyped +
+        |FROM ag ORDER BY event_type, day""".stripMargin)),
+    Key("window_donchian", windowDonchian, Some(duckDailyTyped +
       """w AS (SELECT event_type, day, revc,
         |    row_number() OVER wt AS rn,
         |    max(revc) OVER w20 AS up, min(revc) OVER w20 AS lo
@@ -914,8 +886,8 @@ private[operators] trait StatsWindowOps extends StatsOpsBase {
         |  round(CAST(lo AS DOUBLE) / 100, 6) + 0.0 AS channel_lo,
         |  round(CAST(up - lo AS DOUBLE) / 100, 6) + 0.0 AS width,
         |  revc > up AS breakout_up, revc < lo AS breakout_dn
-        |FROM w WHERE rn >= 21 ORDER BY event_type, day""".stripMargin),
-    "window_kama" -> ("WITH RECURSIVE " + duckDailyTyped.drop(5) +
+        |FROM w WHERE rn >= 21 ORDER BY event_type, day""".stripMargin)),
+    Key("window_kama", windowKama, Some("WITH RECURSIVE " + duckDailyTyped.drop(5) +
       """s0 AS (SELECT event_type, day, revc AS yc,
         |    CAST(row_number() OVER w AS BIGINT) AS rn,
         |    CAST(count(*) OVER (PARTITION BY event_type) AS BIGINT)
@@ -951,8 +923,8 @@ private[operators] trait StatsWindowOps extends StatsOpsBase {
         |  round(rec.kama / 100.0, 6) + 0.0 AS kama
         |FROM rec JOIN lastbar USING (event_type)
         |WHERE rec.rn = rec.n AND rec.n >= 11
-        |ORDER BY event_type""".stripMargin),
-    "window_obv" ->
+        |ORDER BY event_type""".stripMargin)),
+    Key("window_obv", windowObv, Some(
       """WITH e AS (
         |  SELECT event_type, CAST(CAST(ts AS TIMESTAMP) AS DATE) AS day,
         |    epoch_us(CAST(ts AS TIMESTAMP)) AS us, event_id,
@@ -976,8 +948,8 @@ private[operators] trait StatsWindowOps extends StatsOpsBase {
         |  CAST(sum(flow) OVER (PARTITION BY event_type ORDER BY day
         |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)
         |    AS obv
-        |FROM f2 ORDER BY event_type, day""".stripMargin,
-    "window_vwap" ->
+        |FROM f2 ORDER BY event_type, day""".stripMargin)),
+    Key("window_vwap", windowVwap, Some(
       """WITH daily AS (
         |  SELECT event_type, CAST(CAST(ts AS TIMESTAMP) AS DATE) AS day,
         |    CAST(count(*) AS BIGINT) AS vol,
@@ -993,8 +965,8 @@ private[operators] trait StatsWindowOps extends StatsOpsBase {
         |  round(CAST(pv AS DOUBLE) / (100 * vol), 6) + 0.0 AS day_vwap,
         |  round(CAST(cum_pv AS DOUBLE) / (100 * cum_vol), 6) + 0.0
         |    AS cum_vwap
-        |FROM c ORDER BY event_type, day""".stripMargin,
-    "window_atr" ->
+        |FROM c ORDER BY event_type, day""".stripMargin)),
+    Key("window_atr", windowAtr, Some(
       """WITH e AS (
         |  SELECT event_type, CAST(CAST(ts AS TIMESTAMP) AS DATE) AS day,
         |    epoch_us(CAST(ts AS TIMESTAMP)) AS us, event_id,
@@ -1021,8 +993,8 @@ private[operators] trait StatsWindowOps extends StatsOpsBase {
         |  round(CAST(c AS DOUBLE) / 100, 6) + 0.0 AS close,
         |  round(CAST(tr AS DOUBLE) / 100, 6) + 0.0 AS true_range,
         |  round(CAST(atr_c AS DOUBLE) / 1400, 6) + 0.0 AS atr14
-        |FROM t3 WHERE rn >= 15 ORDER BY event_type, day""".stripMargin,
-    "window_ichimoku" ->
+        |FROM t3 WHERE rn >= 15 ORDER BY event_type, day""".stripMargin)),
+    Key("window_ichimoku", windowIchimoku, Some(
       """WITH e AS (
         |  SELECT event_type, CAST(CAST(ts AS TIMESTAMP) AS DATE) AS day,
         |    epoch_us(CAST(ts AS TIMESTAMP)) AS us, event_id,
@@ -1051,8 +1023,8 @@ private[operators] trait StatsWindowOps extends StatsOpsBase {
         |  round((CAST(th + tl AS DOUBLE) / 200
         |    + CAST(kh + kl AS DOUBLE) / 200) / 2, 6) + 0.0 AS senkou_a,
         |  t6 > k6 AS bullish_cross
-        |FROM f ORDER BY event_type, day""".stripMargin,
-    "window_chandelier_exit" ->
+        |FROM f ORDER BY event_type, day""".stripMargin)),
+    Key("window_chandelier_exit", windowChandelierExit, Some(
       """WITH e AS (
         |  SELECT event_type, CAST(CAST(ts AS TIMESTAMP) AS DATE) AS day,
         |    epoch_us(CAST(ts AS TIMESTAMP)) AS us, event_id,
@@ -1080,8 +1052,8 @@ private[operators] trait StatsWindowOps extends StatsOpsBase {
         |  round(CAST(atr_c AS DOUBLE) / 2200, 6) + 0.0 AS atr22,
         |  stop6 AS chandelier_stop,
         |  CAST(c AS DOUBLE) / 100 < stop6 AS exit_long
-        |FROM f ORDER BY event_type, day""".stripMargin,
-    "window_williams_r" ->
+        |FROM f ORDER BY event_type, day""".stripMargin)),
+    Key("window_williams_r", windowWilliamsR, Some(
       """WITH e AS (
         |  SELECT event_type, CAST(CAST(ts AS TIMESTAMP) AS DATE) AS day,
         |    epoch_us(CAST(ts AS TIMESTAMP)) AS us, event_id,
@@ -1105,8 +1077,8 @@ private[operators] trait StatsWindowOps extends StatsOpsBase {
         |  round(-100.0 * CAST(hh - c AS DOUBLE)
         |    / CAST(hh - ll AS DOUBLE), 6) + 0.0 AS williams_r
         |FROM w WHERE rn >= 14 AND hh > ll
-        |ORDER BY event_type, day""".stripMargin,
-    "window_mfi" ->
+        |ORDER BY event_type, day""".stripMargin)),
+    Key("window_mfi", windowMfi, Some(
       """WITH e AS (
         |  SELECT event_type, CAST(CAST(ts AS TIMESTAMP) AS DATE) AS day,
         |    epoch_us(CAST(ts AS TIMESTAMP)) AS us, event_id,
@@ -1141,8 +1113,8 @@ private[operators] trait StatsWindowOps extends StatsOpsBase {
         |  100.0 * CAST(p14 AS DOUBLE) / CAST(p14 + n14 AS DOUBLE) < 20.0
         |    AS oversold
         |FROM s WHERE rn >= 15 AND p14 + n14 > 0
-        |ORDER BY event_type, day""".stripMargin,
-    "window_aroon" -> (duckDailyTyped +
+        |ORDER BY event_type, day""".stripMargin)),
+    Key("window_aroon", windowAroon, Some(duckDailyTyped +
       """r AS (SELECT event_type, day, revc,
         |    CAST(row_number() OVER (PARTITION BY event_type
         |      ORDER BY day) AS BIGINT) AS rn
@@ -1164,8 +1136,8 @@ private[operators] trait StatsWindowOps extends StatsOpsBase {
         |  round(100 * (CAST(14 - (rn - hi.rn) AS DOUBLE) / 14
         |    - CAST(14 - (rn + lo.nrn) AS DOUBLE) / 14), 6) + 0.0
         |    AS aroon_osc
-        |FROM w WHERE rn >= 14 ORDER BY event_type, day""".stripMargin),
-    "window_macd" ->
+        |FROM w WHERE rn >= 14 ORDER BY event_type, day""".stripMargin)),
+    Key("window_macd", windowMacd, Some(
       s"""WITH daily AS (
          |  SELECT event_type, CAST(CAST(ts AS TIMESTAMP) AS DATE) AS day,
          |    CAST(sum(CAST("value" AS DECIMAL(18,2))) * 100 AS BIGINT)
@@ -1193,8 +1165,8 @@ private[operators] trait StatsWindowOps extends StatsOpsBase {
          |  FROM s)
          |SELECT event_type, day, macd, signal,
          |  round(macd - signal, 6) + 0.0 AS histogram
-         |FROM f ORDER BY event_type, day""".stripMargin,
-    "window_keltner" ->
+         |FROM f ORDER BY event_type, day""".stripMargin)),
+    Key("window_keltner", windowKeltner, Some(
       s"""WITH e AS (
          |  SELECT event_type, CAST(CAST(ts AS TIMESTAMP) AS DATE) AS day,
          |    epoch_us(CAST(ts AS TIMESTAMP)) AS us, event_id,
@@ -1230,8 +1202,8 @@ private[operators] trait StatsWindowOps extends StatsOpsBase {
          |  mid6 AS mid_ema20, atr6 AS atr10, up6 AS upper, lo6 AS lower,
          |  CAST(c AS DOUBLE) / 100 > up6 AS above_upper,
          |  CAST(c AS DOUBLE) / 100 < lo6 AS below_lower
-         |FROM t5 ORDER BY event_type, day""".stripMargin,
-    "window_heikin_ashi" ->
+         |FROM t5 ORDER BY event_type, day""".stripMargin)),
+    Key("window_heikin_ashi", windowHeikinAshi, Some(
       """WITH e AS (
         |  SELECT event_type, CAST(CAST(ts AS TIMESTAMP) AS DATE) AS day,
         |    epoch_us(CAST(ts AS TIMESTAMP)) AS us, event_id,
@@ -1270,8 +1242,8 @@ private[operators] trait StatsWindowOps extends StatsOpsBase {
         |  round(least(CAST(l AS DOUBLE), ho, hc) / 100, 6) + 0.0
         |    AS ha_low,
         |  hc6 > ho6 AS bullish
-        |FROM t5 ORDER BY event_type, day""".stripMargin,
-    "window_ewma_timedecay" ->
+        |FROM t5 ORDER BY event_type, day""".stripMargin)),
+    Key("window_ewma_timedecay", windowEwmaTimedecay, Some(
       """WITH e AS (SELECT user_id, "value",
         |    epoch_us(CAST(ts AS TIMESTAMP)) AS us FROM events),
         |w AS (SELECT *, max(us) OVER (PARTITION BY user_id) AS last_us
@@ -1283,8 +1255,8 @@ private[operators] trait StatsWindowOps extends StatsOpsBase {
         |  FROM w)
         |SELECT user_id, CAST(count(*) AS BIGINT) AS n_events,
         |  round(CAST(sum(term) AS DOUBLE), 6) + 0.0 AS decayed_score
-        |FROM t GROUP BY 1 ORDER BY user_id""".stripMargin,
-    "window_stochastic" ->
+        |FROM t GROUP BY 1 ORDER BY user_id""".stripMargin)),
+    Key("window_stochastic", windowStochastic, Some(
       """WITH daily AS (
         |  SELECT event_type, CAST(CAST(ts AS TIMESTAMP) AS DATE) AS day,
         |    CAST(sum(CAST("value" AS DECIMAL(18,2))) * 100 AS BIGINT)
@@ -1313,8 +1285,8 @@ private[operators] trait StatsWindowOps extends StatsOpsBase {
         |    AS pct_k,
         |  round(CASE WHEN kn > 0 THEN CAST(ks AS DOUBLE) / kn END, 6)
         |    + 0.0 AS pct_d
-        |FROM d WHERE rn >= 14 ORDER BY event_type, day""".stripMargin,
-    "window_ulcer" ->
+        |FROM d WHERE rn >= 14 ORDER BY event_type, day""".stripMargin)),
+    Key("window_ulcer", windowUlcer, Some(
       """WITH daily AS (
         |  SELECT event_type, CAST(CAST(ts AS TIMESTAMP) AS DATE) AS day,
         |    CAST(sum(CAST("value" AS DECIMAL(18,2))) * 100 AS BIGINT)
@@ -1332,8 +1304,8 @@ private[operators] trait StatsWindowOps extends StatsOpsBase {
         |  round(CAST(max(dd6) AS DOUBLE), 6) + 0.0 AS max_drawdown_pct,
         |  round(sqrt(CAST(sum(dd6 * dd6) AS DOUBLE) / count(*)), 6) + 0.0
         |    AS ulcer_index
-        |FROM d GROUP BY 1 ORDER BY event_type""".stripMargin,
-    "window_drawdown" ->
+        |FROM d GROUP BY 1 ORDER BY event_type""".stripMargin)),
+    Key("window_drawdown", windowDrawdown, Some(
       """WITH daily AS (
         |  SELECT CAST(o_orderdate AS DATE) AS day,
         |    sum(CAST(o_totalprice AS DECIMAL(18,2))) AS v
@@ -1345,8 +1317,8 @@ private[operators] trait StatsWindowOps extends StatsOpsBase {
         |SELECT day, CAST(v AS DOUBLE) AS revenue, CAST(peak AS DOUBLE) AS peak,
         |  round(CAST(peak - v AS DOUBLE) / CAST(peak AS DOUBLE), 6) + 0.0
         |    AS drawdown
-        |FROM r ORDER BY day""".stripMargin,
-    "window_growth" ->
+        |FROM r ORDER BY day""".stripMargin)),
+    Key("window_growth", windowGrowth, Some(
       """WITH daily AS (
         |  SELECT event_type, CAST(CAST(ts AS TIMESTAMP) AS DATE) AS day,
         |    CAST(sum(CAST("value" AS DECIMAL(18,2))) AS DOUBLE) AS v
@@ -1359,8 +1331,8 @@ private[operators] trait StatsWindowOps extends StatsOpsBase {
         |  AND b.day = a.day - 1
         |LEFT JOIN daily c ON a.event_type = c.event_type
         |  AND c.day = a.day - 7
-        |ORDER BY a.event_type, a.day""".stripMargin,
-    "window_rsi" ->
+        |ORDER BY a.event_type, a.day""".stripMargin)),
+    Key("window_rsi", windowRsi, Some(
       """WITH daily AS (
         |  SELECT event_type, CAST(CAST(ts AS TIMESTAMP) AS DATE) AS day,
         |    sum(CAST("value" AS DECIMAL(18,2))) AS v
@@ -1383,8 +1355,8 @@ private[operators] trait StatsWindowOps extends StatsOpsBase {
         |  round(100 * CAST(sg AS DOUBLE) / CAST(sg + sl AS DOUBLE), 6)
         |    + 0.0 AS rsi14
         |FROM r WHERE rn >= 14 AND sg + sl > 0
-        |ORDER BY event_type, day""".stripMargin,
-    "window_bollinger" ->
+        |ORDER BY event_type, day""".stripMargin)),
+    Key("window_bollinger", windowBollinger, Some(
       """WITH daily AS (
         |  SELECT event_type, CAST(CAST(ts AS TIMESTAMP) AS DATE) AS day,
         |    CAST(sum(CAST("value" AS DECIMAL(18,2))) AS DOUBLE) AS v
@@ -1404,8 +1376,8 @@ private[operators] trait StatsWindowOps extends StatsOpsBase {
         |  (v > round(m + 2 * s, 6) + 0.0 OR
         |   v < round(m - 2 * s, 6) + 0.0) AS is_break
         |FROM r WHERE rn >= 7 AND s > 0
-        |ORDER BY event_type, day""".stripMargin,
-    "window_rolling_zscore" ->
+        |ORDER BY event_type, day""".stripMargin)),
+    Key("window_rolling_zscore", windowRollingZscore, Some(
       """WITH e AS (
         |  SELECT event_id, user_id, "value" AS v,
         |    epoch_us(CAST(ts AS TIMESTAMP)) AS us
@@ -1423,8 +1395,8 @@ private[operators] trait StatsWindowOps extends StatsOpsBase {
         |        round((v - m) / s, 6) + 0.0 AS z
         |      FROM r WHERE rn >= 20 AND s > 0)
         |SELECT event_id, user_id, z, abs(z) > 3 AS is_out
-        |FROM z ORDER BY user_id, event_id""".stripMargin,
-    "window_ewma" ->
+        |FROM z ORDER BY user_id, event_id""".stripMargin)),
+    Key("window_ewma", windowEwma, Some(
       // same window-listed Horner fold as the engine (the earlier
       // join-GROUP BY form summed pow()-weighted terms in whatever
       // order the hash aggregate emitted — two float-determinism holes
@@ -1440,8 +1412,8 @@ private[operators] trait StatsWindowOps extends StatsOpsBase {
          |SELECT event_id, user_id,
          |  round(${duckEma("hist", EwmaDecay)}, 6) + 0.0 AS ewma
          |FROM r
-         |ORDER BY user_id, event_id""".stripMargin,
-    "window_streaks" ->
+         |ORDER BY user_id, event_id""".stripMargin)),
+    Key("window_streaks", windowStreaks, Some(
       """WITH d AS (
         |  SELECT DISTINCT user_id, CAST(ts AS DATE) AS day FROM events),
         |i AS (SELECT user_id,
@@ -1452,8 +1424,8 @@ private[operators] trait StatsWindowOps extends StatsOpsBase {
         |s AS (SELECT user_id, grp, count(*) AS len FROM i GROUP BY 1, 2)
         |SELECT user_id, max(len) AS longest_streak, count(*) AS n_streaks,
         |  CAST(sum(len) AS BIGINT) AS active_days
-        |FROM s GROUP BY user_id ORDER BY user_id""".stripMargin,
-    "window_cusum" ->
+        |FROM s GROUP BY user_id ORDER BY user_id""".stripMargin)),
+    Key("window_cusum", windowCusum, Some(
       """WITH e AS (
         |  SELECT event_id, user_id, epoch_us(CAST(ts AS TIMESTAMP)) AS us,
         |    CAST("value" AS DECIMAL(18,2)) AS v
@@ -1482,8 +1454,8 @@ private[operators] trait StatsWindowOps extends StatsOpsBase {
         |          AS DOUBLE) / CAST(sd6 AS DOUBLE), 6) + 0.0 AS s
         |      FROM p)
         |SELECT event_id, user_id, s, s > 5 AS alarm
-        |FROM s ORDER BY user_id, event_id""".stripMargin,
-    "window_pivot_points" ->
+        |FROM s ORDER BY user_id, event_id""".stripMargin)),
+    Key("window_pivot_points", windowPivotPoints, Some(
       """WITH e AS (
         |  SELECT event_type, CAST(CAST(ts AS TIMESTAMP) AS DATE) AS day,
         |    epoch_us(CAST(ts AS TIMESTAMP)) AS us, event_id,
@@ -1509,6 +1481,6 @@ private[operators] trait StatsWindowOps extends StatsOpsBase {
         |  round((p + (ph - pl)) / 100, 6) + 0.0 AS r2,
         |  round((p - (ph - pl)) / 100, 6) + 0.0 AS s2,
         |  CAST(c AS DOUBLE) / 100 > p6 AS above_pivot
-        |FROM p2 ORDER BY event_type, day""".stripMargin,
+        |FROM p2 ORDER BY event_type, day""".stripMargin)),
   )
 }

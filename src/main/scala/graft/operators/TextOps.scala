@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.Key
 import graft.sources.Tables
 
 /** Text-analysis operators for the LLM-training-data pipeline
@@ -1904,63 +1905,6 @@ object TextOps {
       .orderBy("doc_id")
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "pipeline_dataset_card" -> pipelineDatasetCard _,
-    "text_length_hist"      -> textLengthHist _,
-    "pack_greedy_bins"      -> packGreedyBins _,
-    "sample_token_budget"   -> sampleTokenBudget _,
-    "text_keyphrase_rake"   -> textKeyphraseRake _,
-    "text_oov_rate"         -> textOovRate _,
-    "decontaminate_near"    -> decontaminateNear _,
-    "decontaminate_report"  -> decontaminateReport _,
-    "text_readability"      -> textReadability _,
-    "text_hapax"            -> textHapax _,
-    "eval_nb_confusion"     -> evalNbConfusion _,
-    "eval_langid_mcc"       -> evalLangidMcc _,
-    "eval_cohen_kappa"      -> evalCohenKappa _,
-    "text_yule_k"           -> textYuleK _,
-    "text_burstiness"       -> textBurstiness _,
-    "text_cond_entropy"     -> textCondEntropy _,
-    "pipeline_mix_raking"   -> pipelineMixRaking _,
-    "text_freq_drift"       -> textFreqDrift _,
-    "text_sentences"        -> textSentences _,
-    "text_char_entropy"     -> textCharEntropy _,
-    "text_mattr"            -> textMattr _,
-    "text_quality_gopher"   -> textQualityGopher _,
-    "text_nb_lang"          -> textNbLang _,
-    "text_heaps_law"        -> textHeapsLaw _,
-    "text_chunk_overlap"    -> textChunkOverlap _,
-    "text_zipf_fit"         -> textZipfFit _,
-    "text_dup_ngram_coverage" -> textDupNgramCoverage _,
-    "text_bm25"             -> textBm25 _,
-    "text_lm_score"         -> textLmScore _,
-    "text_collocations"     -> textCollocations _,
-    "source_overlap"        -> sourceOverlap _,
-    "text_span_dedup"       -> textSpanDedup _,
-    "text_block_dedup"      -> textBlockDedup _,
-    "decontaminate"         -> decontaminate _,
-    "decontaminate_bloom"   -> decontaminateBloom _,
-    "text_repetition"       -> textRepetition _,
-    "text_ngram_novelty"    -> textNgramNovelty _,
-    "pipeline_training_corpus" -> pipelineTrainingCorpus _,
-    "heavy_hitters"         -> heavyHitters _,
-    "heavy_hitters_merge"   -> heavyHittersMerge _,
-    "count_min_freq"        -> countMinFreq _,
-    "pack_sequences"        -> packSequences _,
-    "text_scrub"            -> textScrub _,
-    "text_tfidf"            -> textTfidf _,
-    "pipeline_clean_corpus" -> pipelineCleanCorpus _,
-    "text_stats"            -> textStats _,
-    "text_tokens"           -> textTokens _,
-    "text_lang_id"          -> textLangId _,
-    "text_quality"          -> textQuality _,
-    "text_quality_buckets"  -> textQualityBuckets _,
-    "sample_quota"          -> sampleQuota _,
-    "text_token_count"      -> textTokenCount _,
-    "text_fingerprint"      -> textFingerprint _,
-    "text_fingerprint_fast" -> textFingerprintFast _,
-  )
-
   private val duckMarkers = EnMarkers.map(m => s"'$m'").mkString(", ")
 
   /** The quality-score SQL expression (over CTE columns toks / chars /
@@ -2068,8 +2012,8 @@ object TextOps {
   private val duckRakeStops: String =
     RakeStops.map(s => s"'$s'").mkString(", ")
 
-  val oracles: Map[String, String] = Map(
-    "text_keyphrase_rake" ->
+  val keys: Seq[Key] = Seq(
+    Key("text_keyphrase_rake", textKeyphraseRake, Some(
       s"""WITH t AS (SELECT doc_id,
          |    list_filter(string_split_regex(trim(lower(text)),
          |      '[^a-z0-9]+'), x -> x <> '') AS toks
@@ -2103,8 +2047,8 @@ object TextOps {
          |    max(CAST(sc.psc AS DOUBLE)) AS s
          |  FROM ph JOIN sc USING (doc_id, pid) GROUP BY 1)
          |SELECT phrase, n_occurrences, round(s, 6) + 0.0 AS score
-         |FROM f ORDER BY score DESC, phrase LIMIT 30""".stripMargin,
-    "text_oov_rate" ->
+         |FROM f ORDER BY score DESC, phrase LIMIT 30""".stripMargin)),
+    Key("text_oov_rate", textOovRate, Some(
       """WITH tk AS (SELECT doc_id,
         |    unnest(string_split_regex(trim(lower(text)), '\s+')) AS tok
         |  FROM documents),
@@ -2118,8 +2062,8 @@ object TextOps {
         |  round(CAST(sum(CASE WHEN v.tok IS NULL THEN 1 ELSE 0 END)
         |    AS DOUBLE) / count(*), 6) + 0.0 AS oov_rate
         |FROM f LEFT JOIN v ON f.tok = v.tok
-        |GROUP BY 1 ORDER BY doc_id""".stripMargin,
-    "decontaminate_near" -> (duckSh5 +
+        |GROUP BY 1 ORDER BY doc_id""".stripMargin)),
+    Key("decontaminate_near", decontaminateNear, Some(duckSh5 +
       """ts AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_sh
         |       FROM sht GROUP BY 1),
         |iv AS (SELECT a.doc_id, b.doc_id AS eval_id,
@@ -2135,8 +2079,8 @@ object TextOps {
         |       FROM sc WHERE cont6 >= 0.1)
         |SELECT doc_id, eval_id, n_shared, n_sh AS n_shingles,
         |  cont6 AS containment
-        |FROM rk WHERE rn = 1 ORDER BY doc_id""".stripMargin),
-    "decontaminate_report" -> (duckSh5 +
+        |FROM rk WHERE rn = 1 ORDER BY doc_id""".stripMargin)),
+    Key("decontaminate_report", decontaminateReport, Some(duckSh5 +
       """ex AS (SELECT DISTINCT doc_id FROM sht
         |       WHERE shingle IN (SELECT shingle FROM she)),
         |ts AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_sh
@@ -2161,8 +2105,8 @@ object TextOps {
         |FROM tr d
         |LEFT JOIN ex ON d.doc_id = ex.doc_id
         |LEFT JOIN nr ON d.doc_id = nr.doc_id
-        |GROUP BY 1 ORDER BY d.source""".stripMargin),
-    "text_readability" ->
+        |GROUP BY 1 ORDER BY d.source""".stripMargin)),
+    Key("text_readability", textReadability, Some(
       """WITH d AS (SELECT doc_id, text,
         |    list_filter(string_split_regex(trim(lower(text)), '\s+'),
         |      x -> x <> '') AS toks
@@ -2185,8 +2129,8 @@ object TextOps {
         |  round(0.39 * (CAST(n_words AS DOUBLE) / n_sentences)
         |    + 11.8 * (CAST(n_syllables AS DOUBLE) / n_words) - 15.59, 6)
         |    + 0.0 AS fk_grade
-        |FROM c WHERE n_words > 0 ORDER BY doc_id""".stripMargin,
-    "text_hapax" ->
+        |FROM c WHERE n_words > 0 ORDER BY doc_id""".stripMargin)),
+    Key("text_hapax", textHapax, Some(
       """WITH t AS (SELECT unnest(string_split_regex(trim(lower(text)),
         |    '\s+')) AS tok FROM documents),
         |f AS (SELECT tok, CAST(count(*) AS BIGINT) AS c FROM t
@@ -2204,8 +2148,8 @@ object TextOps {
         |  round(CAST(hapax AS DOUBLE) / n_tokens, 6) + 0.0
         |    AS hapax_token_share,
         |  round(CAST(dis AS DOUBLE) / vocab, 6) + 0.0 AS dis_vocab_share
-        |FROM g""".stripMargin,
-    "eval_langid_mcc" ->
+        |FROM g""".stripMargin)),
+    Key("eval_langid_mcc", evalLangidMcc, Some(
       s"""WITH t AS (SELECT doc_id, lang,
          |    string_split_regex(trim(lower(text)), '\\s+') AS toks
          |  FROM documents),
@@ -2233,8 +2177,8 @@ object TextOps {
          |  round(CASE WHEN den > 0 THEN
          |      (CAST(tp AS DOUBLE) * tn - CAST(fp AS DOUBLE) * fn) / den
          |    END, 6) + 0.0 AS mcc
-         |FROM d""".stripMargin,
-    "text_freq_drift" ->
+         |FROM d""".stripMargin)),
+    Key("text_freq_drift", textFreqDrift, Some(
       """WITH mid AS (SELECT CAST(floor(quantile_cont(doc_id, 0.5))
         |             AS BIGINT) AS mid FROM documents),
         |t AS (SELECT d.doc_id <= m.mid AS is_a,
@@ -2254,8 +2198,8 @@ object TextOps {
         |SELECT tok, ca, cb, round(share_a, 6) + 0.0 AS share_a,
         |  round(share_b, 6) + 0.0 AS share_b,
         |  round(share_b - share_a, 6) + 0.0 AS delta_share
-        |FROM s ORDER BY dppm DESC, tok LIMIT 20""".stripMargin,
-    "text_sentences" ->
+        |FROM s ORDER BY dppm DESC, tok LIMIT 20""".stripMargin)),
+    Key("text_sentences", textSentences, Some(
       """WITH s AS (
         |  SELECT doc_id,
         |    list_filter(
@@ -2275,8 +2219,8 @@ object TextOps {
         |    THEN CAST(tot_chars AS DOUBLE) / n_sentences END, 6) + 0.0
         |    AS avg_sent_chars,
         |  COALESCE(max_chars, 0) AS max_sent_chars
-        |FROM m ORDER BY doc_id""".stripMargin,
-    "text_char_entropy" ->
+        |FROM m ORDER BY doc_id""".stripMargin)),
+    Key("text_char_entropy", textCharEntropy, Some(
       """WITH d AS (SELECT doc_id, lower(text) AS txt FROM documents
         |           WHERE length(lower(text)) >= 2),
         |g AS (SELECT doc_id, length(txt) - 1 AS n,
@@ -2295,8 +2239,8 @@ object TextOps {
         |SELECT doc_id, n_bigrams, n_distinct,
         |  round(-CAST(s AS DOUBLE) / ln(CAST(2 AS DOUBLE)), 6) + 0.0
         |    AS entropy_bits
-        |FROM s ORDER BY doc_id""".stripMargin,
-    "text_mattr" ->
+        |FROM s ORDER BY doc_id""".stripMargin)),
+    Key("text_mattr", textMattr, Some(
       """WITH t AS (
         |  SELECT doc_id,
         |    string_split_regex(trim(lower(text)), '\s+') AS toks
@@ -2316,8 +2260,8 @@ object TextOps {
         |      THEN CAST(n_types AS DOUBLE) / n_words
         |      ELSE CAST(wsum AS DOUBLE) / (10 * (n_words - 9))
         |    END AS DOUBLE), 6) + 0.0 AS mattr
-        |FROM f ORDER BY doc_id""".stripMargin,
-    "text_quality_gopher" ->
+        |FROM f ORDER BY doc_id""".stripMargin)),
+    Key("text_quality_gopher", textQualityGopher, Some(
       s"""WITH t AS (
          |  SELECT doc_id, text,
          |    string_split_regex(trim(lower(text)), '\\s+') AS toks
@@ -2345,8 +2289,8 @@ object TextOps {
          |    AND mean_wl >= 2.0 AND mean_wl <= 12.0
          |    AND alpha_frac >= 0.8 AND sym_ratio < 0.1
          |    AND n_stop_distinct >= 2 AS pass
-         |FROM f ORDER BY doc_id""".stripMargin,
-    "text_lm_score" ->
+         |FROM f ORDER BY doc_id""".stripMargin)),
+    Key("text_lm_score", textLmScore, Some(
       """WITH t AS (
         |  SELECT doc_id, string_split_regex(trim(lower(text)), '\s+') AS toks
         |  FROM documents),
@@ -2369,8 +2313,8 @@ object TextOps {
         |  FROM s GROUP BY doc_id)
         |SELECT doc_id, n_bigrams, avg_logp,
         |  round(exp(-avg_logp), 6) + 0.0 AS ppl
-        |FROM m ORDER BY doc_id""".stripMargin,
-    "text_collocations" ->
+        |FROM m ORDER BY doc_id""".stripMargin)),
+    Key("text_collocations", textCollocations, Some(
       """WITH t AS (
         |  SELECT string_split_regex(trim(lower(text)), '\s+') AS toks
         |  FROM documents),
@@ -2394,8 +2338,8 @@ object TextOps {
         |JOIN uni ua ON ab.tok_a = ua.tok
         |JOIN uni ub ON ab.tok_b = ub.tok
         |CROSS JOIN nb CROSS JOIN nu
-        |ORDER BY tok_a, tok_b""".stripMargin,
-    "source_overlap" ->
+        |ORDER BY tok_a, tok_b""".stripMargin)),
+    Key("source_overlap", sourceOverlap, Some(
       """WITH st AS (
         |  SELECT DISTINCT source, token FROM (
         |    SELECT source,
@@ -2412,8 +2356,8 @@ object TextOps {
         |FROM inter i
         |JOIN sizes sa ON i.src_a = sa.source
         |JOIN sizes sb ON i.src_b = sb.source
-        |ORDER BY src_a, src_b""".stripMargin,
-    "text_span_dedup" ->
+        |ORDER BY src_a, src_b""".stripMargin)),
+    Key("text_span_dedup", textSpanDedup, Some(
       """WITH t AS (SELECT doc_id, string_split_regex(trim(lower(text)), '\s+') AS toks
         |           FROM documents),
         |sp AS (SELECT doc_id, array_to_string(toks[i:i+7], ' ') AS span
@@ -2430,8 +2374,8 @@ object TextOps {
         |       ELSE round(p.n_dup / CAST(p.n_spans AS DOUBLE), 6) + 0.0
         |  END AS dup_ratio
         |FROM documents d LEFT JOIN p USING (doc_id)
-        |ORDER BY d.doc_id""".stripMargin,
-    "text_block_dedup" ->
+        |ORDER BY d.doc_id""".stripMargin)),
+    Key("text_block_dedup", textBlockDedup, Some(
       """WITH t AS (SELECT doc_id, string_split_regex(trim(lower(text)), '\s+') AS toks
         |           FROM documents),
         |b AS (SELECT doc_id, i AS b,
@@ -2446,10 +2390,10 @@ object TextOps {
         |    AS kept_blocks,
         |  COALESCE(string_agg(blk, ' ' ORDER BY b) FILTER (WHERE rn = 1), '')
         |    AS new_text
-        |FROM r GROUP BY doc_id ORDER BY doc_id""".stripMargin,
+        |FROM r GROUP BY doc_id ORDER BY doc_id""".stripMargin)),
     // the four standalone-key fragments composed in dependency order —
     // gate → decontaminate → dedup → pack; see pipelineTrainingCorpus
-    "pipeline_training_corpus" ->
+    Key("pipeline_training_corpus", pipelineTrainingCorpus, Some(
       """WITH t AS (SELECT doc_id, text,
         |             string_split_regex(trim(lower(text)), '\s+') AS toks
         |           FROM documents),
@@ -2486,8 +2430,8 @@ object TextOps {
         |      FROM ded)
         |SELECT doc_id, n_toks, start_tok,
         |  start_tok // 512 AS chunk_id, start_tok % 512 AS off_in_chunk
-        |FROM c ORDER BY doc_id""".stripMargin,
-    "text_ngram_novelty" ->
+        |FROM c ORDER BY doc_id""".stripMargin)),
+    Key("text_ngram_novelty", textNgramNovelty, Some(
       """WITH t AS (SELECT doc_id,
         |  string_split_regex(trim(lower(text)), '\s+') AS toks FROM documents),
         |sh AS (SELECT DISTINCT doc_id,
@@ -2500,13 +2444,13 @@ object TextOps {
         |  round(CAST(sum(CASE WHEN d.df = 1 THEN 1 ELSE 0 END) AS DOUBLE)
         |        / count(*), 6) AS novelty
         |FROM sh s JOIN df d USING (shingle)
-        |GROUP BY s.doc_id ORDER BY s.doc_id""".stripMargin,
-    "text_nb_lang" -> (duckNbCtes +
+        |GROUP BY s.doc_id ORDER BY s.doc_id""".stripMargin)),
+    Key("text_nb_lang", textNbLang, Some(duckNbCtes +
       """
         |SELECT doc_id, lang AS true_lang, l AS pred_lang,
         |  l = lang AS correct, CAST(score AS DOUBLE) AS nb_score
-        |FROM r WHERE rn = 1 ORDER BY doc_id""".stripMargin),
-    "text_cond_entropy" ->
+        |FROM r WHERE rn = 1 ORDER BY doc_id""".stripMargin)),
+    Key("text_cond_entropy", textCondEntropy, Some(
       """WITH d AS (SELECT lang, lower(text) AS txt FROM documents
         |           WHERE length(lower(text)) >= 2),
         |g AS (SELECT lang,
@@ -2540,8 +2484,8 @@ object TextOps {
         |    6) + 0.0 AS redundancy
         |FROM nt JOIN hb USING (lang) JOIN hp USING (lang)
         |  JOIN v2 USING (lang)
-        |ORDER BY lang""".stripMargin,
-    "pipeline_mix_raking" ->
+        |ORDER BY lang""".stripMargin)),
+    Key("pipeline_mix_raking", pipelineMixRaking, Some(
       """WITH cells AS (SELECT source, lang, CAST(count(*) AS BIGINT) AS n
         |               FROM documents GROUP BY 1, 2),
         |tot AS (SELECT CAST(sum(n) AS BIGINT) AS nn,
@@ -2561,8 +2505,8 @@ object TextOps {
         |  round(rf * cf, 6) + 0.0 AS weight,
         |  round(n * rf * cf, 6) + 0.0 AS eff_rows
         |FROM sc JOIN cf USING (lang)
-        |ORDER BY source, lang""".stripMargin,
-    "text_yule_k" ->
+        |ORDER BY source, lang""".stripMargin)),
+    Key("text_yule_k", textYuleK, Some(
       """WITH t AS (SELECT
         |    unnest(string_split_regex(trim(lower(text)), '\s+')) AS tok
         |  FROM documents),
@@ -2580,8 +2524,8 @@ object TextOps {
         |    + 0.0 AS simpson_d,
         |  round(ln(CAST(v AS DOUBLE)) / ln(CAST(n AS DOUBLE)), 6) + 0.0
         |    AS herdan_c
-        |FROM s""".stripMargin,
-    "text_burstiness" ->
+        |FROM s""".stripMargin)),
+    Key("text_burstiness", textBurstiness, Some(
       """WITH t AS (SELECT doc_id,
         |    unnest(string_split_regex(trim(lower(text)), '\s+')) AS tok
         |  FROM documents),
@@ -2598,8 +2542,8 @@ object TextOps {
         |  round(CAST(cf AS DOUBLE) / df, 6) + 0.0 AS burst,
         |  round(CAST(df AS DOUBLE) / d, 6) + 0.0 AS doc_coverage
         |FROM ag CROSS JOIN dt
-        |ORDER BY cf DESC, tok LIMIT 20""".stripMargin,
-    "eval_cohen_kappa" -> (duckNbCtes +
+        |ORDER BY cf DESC, tok LIMIT 20""".stripMargin)),
+    Key("eval_cohen_kappa", evalCohenKappa, Some(duckNbCtes +
       """,
         |preds AS (SELECT lang AS true_lang, l AS pred_lang
         |          FROM r WHERE rn = 1),
@@ -2619,8 +2563,8 @@ object TextOps {
         |    AS p_expected,
         |  round(CAST(n * n_agree - e AS DOUBLE)
         |    / (CAST(n AS DOUBLE) * n - e), 6) + 0.0 AS kappa
-        |FROM ag CROSS JOIN ex""".stripMargin),
-    "eval_nb_confusion" -> (duckNbCtes +
+        |FROM ag CROSS JOIN ex""".stripMargin)),
+    Key("eval_nb_confusion", evalNbConfusion, Some(duckNbCtes +
       """,
         |preds AS (SELECT lang AS true_lang, l AS pred_lang
         |          FROM r WHERE rn = 1),
@@ -2644,8 +2588,8 @@ object TextOps {
         |  round(CASE WHEN p + r_ > 0 THEN 2.0 * p * r_ / (p + r_) END, 6)
         |    + 0.0 AS f1,
         |  round(acc, 6) + 0.0 AS overall_accuracy
-        |FROM j ORDER BY lang""".stripMargin),
-    "text_heaps_law" ->
+        |FROM j ORDER BY lang""".stripMargin)),
+    Key("text_heaps_law", textHeapsLaw, Some(
       """WITH t AS (SELECT doc_id,
         |  unnest(string_split_regex(trim(lower(text)), '\s+')) AS tok
         |  FROM documents),
@@ -2659,8 +2603,8 @@ object TextOps {
         |FROM nt LEFT JOIN nv USING (doc_id)
         |WINDOW w AS (ORDER BY nt.doc_id
         |             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-        |ORDER BY doc_id""".stripMargin,
-    "text_chunk_overlap" ->
+        |ORDER BY doc_id""".stripMargin)),
+    Key("text_chunk_overlap", textChunkOverlap, Some(
       """WITH t AS (SELECT doc_id,
         |  len(string_split_regex(trim(lower(text)), '\s+')) AS n
         |  FROM documents),
@@ -2670,8 +2614,8 @@ object TextOps {
         |SELECT doc_id, CAST(k AS INT) AS chunk_id,
         |  CAST(k * 24 AS BIGINT) AS start_tok,
         |  CAST(least(32, n - k * 24) AS BIGINT) AS chunk_len
-        |FROM c ORDER BY doc_id, chunk_id""".stripMargin,
-    "text_zipf_fit" ->
+        |FROM c ORDER BY doc_id, chunk_id""".stripMargin)),
+    Key("text_zipf_fit", textZipfFit, Some(
       """WITH tok AS (SELECT unnest(string_split_regex(trim(lower(text)), '\s+')) AS token
         |            FROM documents),
         |cnts AS (SELECT token, count(*) AS cnt FROM tok
@@ -2684,8 +2628,8 @@ object TextOps {
         |  round(regr_slope(y, x), 6) + 0.0 AS slope,
         |  round(regr_intercept(y, x), 6) + 0.0 AS intercept,
         |  round(regr_r2(y, x), 6) + 0.0 AS r2
-        |FROM top""".stripMargin,
-    "text_dup_ngram_coverage" ->
+        |FROM top""".stripMargin)),
+    Key("text_dup_ngram_coverage", textDupNgramCoverage, Some(
       """WITH t AS (SELECT doc_id,
         |  string_split_regex(trim(lower(text)), '\s+') AS toks FROM documents),
         |g AS (SELECT doc_id,
@@ -2698,13 +2642,13 @@ object TextOps {
         |    AS dup_occurrences,
         |  round(sum(CASE WHEN c > 1 THEN c ELSE 0 END)
         |        / CAST(sum(c) AS DOUBLE), 6) + 0.0 AS dup_frac
-        |FROM c GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-    "decontaminate" -> DecontaminateSql,
+        |FROM c GROUP BY doc_id ORDER BY doc_id""".stripMargin)),
+    Key("decontaminate", decontaminate, Some(DecontaminateSql)),
     // the Bloom form is exact by construction (no false negatives; every
     // positive re-verified), so it is held to the SAME oracle — the
     // strongest possible equivalence check for the prefilter.
-    "decontaminate_bloom" -> DecontaminateSql,
-    "text_repetition" ->
+    Key("decontaminate_bloom", decontaminateBloom, Some(DecontaminateSql)),
+    Key("text_repetition", textRepetition, Some(
       """WITH t AS (SELECT doc_id, string_split_regex(trim(lower(text)), '\s+') AS toks
         |           FROM documents),
         |base AS (SELECT doc_id, len(toks) AS n, len(list_distinct(toks)) AS nd FROM t),
@@ -2722,7 +2666,7 @@ object TextOps {
         |   round(COALESCE(topbg.top, 0) / CAST(GREATEST(base.n - 1, 1) AS DOUBLE), 6) <= 0.2)
         |    AS pass_gate
         |FROM base LEFT JOIN topbg ON base.doc_id = topbg.doc_id
-        |ORDER BY base.doc_id""".stripMargin,
+        |ORDER BY base.doc_id""".stripMargin)),
     // exact only because capacity ≥ vocabulary at test scale — the sketch
     // degenerates to a group-count (see heavyHitters scaladoc)
     // invariant oracles (round 11): exact top-10 verified exactly, MG's
@@ -2730,30 +2674,30 @@ object TextOps {
     // DuckDB asserts TRUE (the count_min_freq pattern — the former
     // "capacity > vocabulary ⇒ exact" oracle broke at sf≈1 where the
     // inflated vocabulary passes the capacity)
-    "heavy_hitters" ->
+    Key("heavy_hitters", heavyHitters, Some(
       """SELECT token AS term, CAST(count(*) AS BIGINT) AS exact_cnt,
         |  TRUE AS mg_ok FROM (
         |  SELECT unnest(string_split_regex(trim(lower(text)), '\s+')) AS token
         |  FROM documents) t
         |WHERE token <> '' GROUP BY token
-        |ORDER BY exact_cnt DESC, term LIMIT 10""".stripMargin,
-    "heavy_hitters_merge" ->
+        |ORDER BY exact_cnt DESC, term LIMIT 10""".stripMargin)),
+    Key("heavy_hitters_merge", heavyHittersMerge, Some(
       """SELECT token AS term, CAST(count(*) AS BIGINT) AS exact_cnt,
         |  TRUE AS mg_ok FROM (
         |  SELECT unnest(string_split_regex(trim(lower(text)), '\s+')) AS token
         |  FROM documents) t
         |WHERE token <> '' GROUP BY token
-        |ORDER BY exact_cnt DESC, term LIMIT 10""".stripMargin,
+        |ORDER BY exact_cnt DESC, term LIMIT 10""".stripMargin)),
     // invariant oracle (round 11): exact top-10 verified exactly; the CMS
     // estimate's one-sided εN bound is a boolean DuckDB asserts TRUE
-    "count_min_freq" ->
+    Key("count_min_freq", countMinFreq, Some(
       """SELECT token AS term, CAST(count(*) AS BIGINT) AS exact_cnt,
         |  TRUE AS cms_ok FROM (
         |  SELECT unnest(string_split_regex(trim(lower(text)), '\s+')) AS token
         |  FROM documents) t
         |WHERE token <> '' GROUP BY token
-        |ORDER BY exact_cnt DESC, term LIMIT 10""".stripMargin,
-    "sample_token_budget" ->
+        |ORDER BY exact_cnt DESC, term LIMIT 10""".stripMargin)),
+    Key("sample_token_budget", sampleTokenBudget, Some(
       """WITH d AS (
         |  SELECT doc_id, lang,
         |    CAST(len(string_split_regex(trim(lower(text)), '\s+'))
@@ -2775,8 +2719,8 @@ object TextOps {
         |SELECT lang, n_docs_taken, tokens_taken, slice_budget,
         |  round(CAST(tokens_taken AS DOUBLE) / slice_budget, 6) + 0.0
         |    AS utilization
-        |FROM g ORDER BY lang""".stripMargin,
-    "pack_greedy_bins" ->
+        |FROM g ORDER BY lang""".stripMargin)),
+    Key("pack_greedy_bins", packGreedyBins, Some(
       """WITH RECURSIVE t AS (
         |  SELECT doc_id,
         |    CAST(len(string_split_regex(trim(lower(text)), '\s+'))
@@ -2821,8 +2765,8 @@ object TextOps {
         |       ELSE round(CAST(af.tot_toks AS DOUBLE)
         |         / (af.bins * 512), 6) + 0.0 END AS utilization
         |FROM af FULL JOIN ov o ON o.bkt = af.bkt
-        |ORDER BY shard""".stripMargin,
-    "pack_sequences" ->
+        |ORDER BY shard""".stripMargin)),
+    Key("pack_sequences", packSequences, Some(
       """WITH t AS (
         |  SELECT doc_id,
         |    CAST(len(string_split_regex(trim(lower(text)), '\s+')) AS BIGINT) AS n_toks
@@ -2834,15 +2778,15 @@ object TextOps {
         |  FROM t)
         |SELECT doc_id, n_toks, start_tok,
         |  start_tok // 512 AS chunk_id, start_tok % 512 AS off_in_chunk
-        |FROM c ORDER BY doc_id""".stripMargin,
-    "text_scrub" ->
+        |FROM c ORDER BY doc_id""".stripMargin)),
+    Key("text_scrub", textScrub, Some(
       """SELECT doc_id,
         |  regexp_replace(text, '(?i)[a-z0-9._%+-]+@[a-z0-9.-]+\.[a-z]{2,}', '<EMAIL>', 'g') AS clean_text,
         |  CAST(len(string_split_regex(text, '(?i)[a-z0-9._%+-]+@[a-z0-9.-]+\.[a-z]{2,}')) - 1 AS INTEGER) AS n_redacted
-        |FROM documents ORDER BY doc_id""".stripMargin,
+        |FROM documents ORDER BY doc_id""".stripMargin)),
     // identical formula text, op for op; len()/list_filter() are the
     // tokenizer twins; ln agreement is inside the 1e-9 snap
-    "text_bm25" ->
+    Key("text_bm25", textBm25, Some(
       """WITH d AS (
         |  SELECT doc_id,
         |    len(string_split_regex(trim(lower(text)), '\s+')) AS dl,
@@ -2870,8 +2814,8 @@ object TextOps {
         |      * (tf_vector * 2.2) / (tf_vector + 1.2 * (0.25 + 0.75
         |      * (dl / (CAST(sum_dl AS DOUBLE) / n_docs)))),
         |  9) AS bm25
-        |FROM d, s ORDER BY bm25 DESC, doc_id LIMIT 20""".stripMargin,
-    "text_tfidf" ->
+        |FROM d, s ORDER BY bm25 DESC, doc_id LIMIT 20""".stripMargin)),
+    Key("text_tfidf", textTfidf, Some(
       """WITH tokens AS (
         |  SELECT doc_id, unnest(string_split_regex(trim(lower(text)), '\s+')) AS term
         |  FROM documents),
@@ -2886,8 +2830,8 @@ object TextOps {
         |          ORDER BY round(tf.tf * ln(CAST(n.n_docs AS DOUBLE) / df.df), 9) DESC,
         |                   tf.term) AS rn
         |      FROM tf JOIN df USING (term), n) t
-        |WHERE rn = 1 ORDER BY doc_id""".stripMargin,
-    "pipeline_clean_corpus" ->
+        |WHERE rn = 1 ORDER BY doc_id""".stripMargin)),
+    Key("pipeline_clean_corpus", pipelineCleanCorpus, Some(
       s"""WITH dedup AS (
          |  SELECT * FROM (
          |    SELECT doc_id, lang, text,
@@ -2904,8 +2848,8 @@ object TextOps {
          |  CAST(sum(n_toks) AS BIGINT) AS kept_tokens,
          |  round(CAST(sum(CAST(stop_ratio AS DECIMAL(18,6))) AS DOUBLE) / count(*), 6) AS avg_stop_ratio
          |FROM scored WHERE n_toks >= 8 AND stop_ratio >= 0.05
-         |GROUP BY lang ORDER BY lang""".stripMargin,
-    "pipeline_dataset_card" ->
+         |GROUP BY lang ORDER BY lang""".stripMargin)),
+    Key("pipeline_dataset_card", pipelineDatasetCard, Some(
       """WITH g AS (
         |  SELECT source, lang, CAST(count(*) AS BIGINT) AS n_docs,
         |    CAST(sum(n_chars) AS BIGINT) AS n_chars,
@@ -2919,8 +2863,8 @@ object TextOps {
         |  round(CAST(n_docs AS DOUBLE) / td, 6) + 0.0 AS doc_share,
         |  round(CAST(n_chars AS DOUBLE) / tc, 6) + 0.0 AS char_share,
         |  round(CAST(n_short AS DOUBLE) / n_docs, 6) + 0.0 AS pct_short
-        |FROM g CROSS JOIN t ORDER BY source, lang""".stripMargin,
-    "text_length_hist" ->
+        |FROM g CROSS JOIN t ORDER BY source, lang""".stripMargin)),
+    Key("text_length_hist", textLengthHist, Some(
       """WITH b AS (
         |  SELECT lang, CAST(length(bin(n_chars)) - 1 AS INTEGER)
         |      AS log2_bin,
@@ -2933,24 +2877,24 @@ object TextOps {
         |  round(CAST(n_docs AS DOUBLE)
         |    / sum(n_docs) OVER (PARTITION BY lang), 6) + 0.0
         |    AS share_in_lang
-        |FROM b ORDER BY lang, log2_bin""".stripMargin,
-    "text_stats" ->
+        |FROM b ORDER BY lang, log2_bin""".stripMargin)),
+    Key("text_stats", textStats, Some(
       """SELECT lang, count(*) AS cnt,
         |  CAST(sum(n_chars) AS DOUBLE) / count(n_chars) AS avg_chars
-        |FROM documents GROUP BY lang ORDER BY lang""".stripMargin,
-    "text_tokens" ->
+        |FROM documents GROUP BY lang ORDER BY lang""".stripMargin)),
+    Key("text_tokens", textTokens, Some(
       """SELECT token, count(*) AS cnt FROM (
         |  SELECT unnest(string_split_regex(trim(lower(text)), '\s+')) AS token
         |  FROM documents) t
-        |WHERE token <> '' GROUP BY token ORDER BY cnt DESC, token LIMIT 20""".stripMargin,
-    "text_lang_id" ->
+        |WHERE token <> '' GROUP BY token ORDER BY cnt DESC, token LIMIT 20""".stripMargin)),
+    Key("text_lang_id", textLangId, Some(
       s"""WITH t AS (SELECT doc_id, string_split_regex(trim(lower(text)), '\\s+') AS toks FROM documents)
          |SELECT doc_id,
          |  round(CAST(len(list_filter(toks, t -> t IN ($duckMarkers))) AS DOUBLE) / len(toks), 6) AS marker_ratio,
          |  CASE WHEN round(CAST(len(list_filter(toks, t -> t IN ($duckMarkers))) AS DOUBLE) / len(toks), 6) >= 0.10
          |       THEN 'en' ELSE 'und' END AS pred_lang
-         |FROM t ORDER BY doc_id""".stripMargin,
-    "text_quality" ->
+         |FROM t ORDER BY doc_id""".stripMargin)),
+    Key("text_quality", textQuality, Some(
       s"""WITH t AS (
          |  SELECT doc_id, text,
          |    string_split_regex(trim(lower(text)), '\\s+') AS toks,
@@ -2962,8 +2906,8 @@ object TextOps {
          |  round(CAST(len(list_filter(toks, x -> x IN ($duckMarkers))) AS DOUBLE) / len(toks), 6) AS stop_ratio,
          |  round(CAST(length(regexp_replace(text, '\\s', '', 'g')) AS DOUBLE) / len(toks), 6) AS avg_word_len,
          |  $duckQualityExpr
-         |FROM t ORDER BY doc_id""".stripMargin,
-    "sample_quota" ->
+         |FROM t ORDER BY doc_id""".stripMargin)),
+    Key("sample_quota", sampleQuota, Some(
       s"""WITH t AS (
          |  SELECT doc_id, source, text,
          |    string_split_regex(trim(lower(text)), '\\s+') AS toks,
@@ -2977,8 +2921,8 @@ object TextOps {
          |        PARTITION BY source ORDER BY quality DESC, doc_id) AS INTEGER) AS rn
          |      FROM q)
          |SELECT doc_id, source, quality, rn FROM r WHERE rn <= 20
-         |ORDER BY source, rn""".stripMargin,
-    "text_quality_buckets" ->
+         |ORDER BY source, rn""".stripMargin)),
+    Key("text_quality_buckets", textQualityBuckets, Some(
       s"""WITH t AS (
          |  SELECT doc_id, text,
          |    string_split_regex(trim(lower(text)), '\\s+') AS toks,
@@ -2995,13 +2939,13 @@ object TextOps {
          |            ELSE 'tail' END AS bucket,
          |  count(*) AS n_docs,
          |  round(CAST(sum(CAST(quality AS DECIMAL(18,6))) AS DOUBLE) / count(*), 6) AS avg_quality
-         |FROM q, th GROUP BY bucket ORDER BY bucket""".stripMargin,
-    "text_token_count" ->
+         |FROM q, th GROUP BY bucket ORDER BY bucket""".stripMargin)),
+    Key("text_token_count", textTokenCount, Some(
       """SELECT doc_id,
         |  CAST(len(string_split_regex(trim(lower(text)), '\s+')) AS INTEGER) AS ws_tokens,
         |  CAST(len(regexp_extract_all(text, '\w+|[^\w\s]')) AS INTEGER) AS re_tokens
-        |FROM documents ORDER BY doc_id""".stripMargin,
-    "text_fingerprint" ->
+        |FROM documents ORDER BY doc_id""".stripMargin)),
+    Key("text_fingerprint", textFingerprint, Some(
       """WITH t AS (SELECT doc_id, string_split_regex(trim(lower(text)), '\s+') AS toks FROM documents),
         |tok AS (SELECT doc_id, i, toks[i] AS tok
         |        FROM (SELECT doc_id, toks, unnest(range(1, len(toks)+1)) AS i FROM t)),
@@ -3014,6 +2958,7 @@ object TextOps {
         |SELECT doc_id,
         |  list_reduce(list_prepend(CAST(0 AS BIGINT), wids),
         |    (a, b) -> (a * 131 + b) % 1000000007) AS fp
-        |FROM seq ORDER BY doc_id""".stripMargin,
+        |FROM seq ORDER BY doc_id""".stripMargin)),
+    Key("text_fingerprint_fast", textFingerprintFast),
   )
 }

@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import graft.Key
 import graft.sources.Tables
 
 /** Structured-Streaming port of the reference's ingest chain
@@ -656,15 +657,8 @@ object IngestPipeline {
         col("n_events"), col("sum_value"))
       .orderBy("user_id", "sess_start_s")
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "stream_tumbling_avg" -> streamTumblingAvg _,
-    "stream_tumbling_users" -> streamTumblingUsers _,
-    "stream_hopping_users" -> streamHoppingUsers _,
-    "stream_session_window" -> streamSessionWindow _,
-  )
-
-  val oracles: Map[String, String] = Map(
-    "stream_session_window" ->
+  val keys: Seq[Key] = Seq(
+    Key("stream_session_window", streamSessionWindow, Some(
       """WITH seq AS (
         |  SELECT user_id, CAST(ts AS TIMESTAMP) AS ts, "value",
         |    epoch_us(CAST(ts AS TIMESTAMP)) AS us, event_id
@@ -687,8 +681,8 @@ object IngestPipeline {
         |  CAST(count(*) AS BIGINT) AS n_events,
         |  CAST(sum(CAST("value" AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
         |FROM sess GROUP BY user_id, sid
-        |ORDER BY user_id, sess_start_s""".stripMargin,
-    "stream_hopping_users" ->
+        |ORDER BY user_id, sess_start_s""".stripMargin)),
+    Key("stream_hopping_users", streamHoppingUsers, Some(
       """WITH e AS (SELECT date_trunc('hour', ts) AS h, user_id
         |           FROM events),
         |cov AS (SELECT h AS ws, user_id FROM e
@@ -696,16 +690,16 @@ object IngestPipeline {
         |        SELECT h - INTERVAL 1 HOUR AS ws, user_id FROM e)
         |SELECT strftime(ws, '%Y-%m-%d %H:%M:%S') AS win_start_s,
         |  count(DISTINCT user_id) AS users, count(*) AS cnt
-        |FROM cov GROUP BY 1 ORDER BY win_start_s""".stripMargin,
-    "stream_tumbling_users" ->
+        |FROM cov GROUP BY 1 ORDER BY win_start_s""".stripMargin)),
+    Key("stream_tumbling_users", streamTumblingUsers, Some(
       """SELECT strftime(date_trunc('hour', ts), '%Y-%m-%d %H:%M:%S')
         |    AS hour_s,
         |  count(DISTINCT user_id) AS users, count(*) AS cnt
-        |FROM events GROUP BY 1 ORDER BY hour_s""".stripMargin,
-    "stream_tumbling_avg" ->
+        |FROM events GROUP BY 1 ORDER BY hour_s""".stripMargin)),
+    Key("stream_tumbling_avg", streamTumblingAvg, Some(
       """SELECT strftime(date_trunc('hour', ts), '%Y-%m-%d %H:%M:%S') AS hour_s,
         |  event_type, count(*) AS cnt,
         |  CAST(sum(CAST("value" AS DECIMAL(18,2))) AS DOUBLE) / count("value") AS avg_value
-        |FROM events GROUP BY 1, 2 ORDER BY hour_s, event_type""".stripMargin,
+        |FROM events GROUP BY 1, 2 ORDER BY hour_s, event_type""".stripMargin)),
   )
 }

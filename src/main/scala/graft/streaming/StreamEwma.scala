@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout}
+import graft.Key
 import graft.sources.Tables
 
 /** Streaming EWMA with explicit keyed state — the incremental form of the
@@ -73,12 +74,8 @@ object StreamEwma {
       .orderBy("user_id")
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "stream_ewma" -> streamEwmaFinal _,
-  )
-
-  val oracles: Map[String, String] = Map(
-    "stream_ewma" ->
+  val keys: Seq[Key] = Seq(
+    Key("stream_ewma", streamEwmaFinal, Some(
       """WITH e AS (
         |  SELECT user_id, event_id, "value" AS v,
         |    epoch_us(CAST(ts AS TIMESTAMP)) AS us
@@ -92,6 +89,6 @@ object StreamEwma {
         |  round(sum(CASE WHEN rn = 1 THEN v * pow(0.9, n - 1)
         |                 ELSE 0.1 * v * pow(0.9, n - rn) END), 6) + 0.0
         |    AS ewma
-        |FROM r GROUP BY user_id ORDER BY user_id""".stripMargin,
+        |FROM r GROUP BY user_id ORDER BY user_id""".stripMargin)),
   )
 }

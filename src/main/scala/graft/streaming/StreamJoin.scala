@@ -2,6 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Key
 import graft.sources.Tables
 
 /** Stream-stream interval join: every purchase paired with the same user's
@@ -52,12 +53,8 @@ object StreamJoin {
       .orderBy("purchase_id", "click_id")
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "stream_interval_join" -> streamIntervalJoin _,
-  )
-
-  val oracles: Map[String, String] = Map(
-    "stream_interval_join" ->
+  val keys: Seq[Key] = Seq(
+    Key("stream_interval_join", streamIntervalJoin, Some(
       """WITH ev AS (
         |  SELECT event_id, user_id, event_type,
         |    epoch_us(CAST(ts AS TIMESTAMP)) AS us
@@ -68,6 +65,6 @@ object StreamJoin {
         |  ON p.user_id = c.user_id
         | AND c.us BETWEEN p.us - 1800000000 AND p.us
         |WHERE p.event_type = 'purchase' AND c.event_type = 'click'
-        |ORDER BY purchase_id, click_id""".stripMargin,
+        |ORDER BY purchase_id, click_id""".stripMargin)),
   )
 }

@@ -9,7 +9,8 @@ package graft.tools
   */
 object Profile {
   def main(args: Array[String]): Unit = {
-    val keys = args(0).split(",") // one key, or several in one JVM/session
+    // one key, or several in one JVM/session
+    val keys = graft.SparkEntry.lookup(args(0).split(",").toSeq)
     val iters = if (args.length > 1) args(1).toInt else 6
     val sfDir = if (args.length > 2) args(2) else "/root/testdata/sf0.1"
     val spark = graft.GraftSession.builder().getOrCreate()
@@ -39,14 +40,14 @@ object Profile {
       (1 to iters).foreach { i =>
         spark.catalog.clearCache()
         val t0 = System.nanoTime()
-        val df = graft.SparkEntry.queries(key)(spark, sfDir)
+        val df = key.run(spark, sfDir)
         df.queryExecution.analyzed // force analysis
         val t1 = System.nanoTime()
         df.queryExecution.executedPlan // optimize + plan
         val t2 = System.nanoTime()
         df.count()
         val t3 = System.nanoTime()
-        println(f"[profile] $key iter $i: analyze ${(t1 - t0) / 1e9}%.3f  " +
+        println(f"[profile] ${key.name} iter $i: analyze ${(t1 - t0) / 1e9}%.3f  " +
           f"plan ${(t2 - t1) / 1e9}%.3f  exec ${(t3 - t2) / 1e9}%.3f  " +
           f"total ${(t3 - t0) / 1e9}%.3f s")
       }

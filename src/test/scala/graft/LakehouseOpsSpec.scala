@@ -204,9 +204,9 @@ class LakehouseOpsSpec extends SparkSuite {
       .agg(sum(col("value").cast("decimal(18,2)")).cast("double").as("v"))
       .collect().map(r => (r.getString(0), r.getLong(1), r.getDouble(2)))
       .groupBy(_._1)
-    val dw = StatsOps.queries("stats_dw")(spark, sf0001).collect()
+    val dw = SparkEntry.queries("stats_dw")(spark, sf0001).collect()
       .map(r => r.getString(0) -> r.getDouble(2)).toMap
-    val runs = StatsOps.queries("stats_runs")(spark, sf0001).collect()
+    val runs = SparkEntry.queries("stats_runs")(spark, sf0001).collect()
       .map(r => r.getString(0) -> (r.getLong(1), r.getDouble(4))).toMap
     daily.foreach { case (et, rows) =>
       val s = rows.sortBy(_._2).map(x => (x._2.toDouble, x._3))
@@ -239,7 +239,7 @@ class LakehouseOpsSpec extends SparkSuite {
   }
 
   test("multimodal_audio_energy equals a direct byte-sampling computation") {
-    val got = graft.operators.MultimodalOps
+    val got = SparkEntry
       .queries("multimodal_audio_energy")(spark, sf0001).collect()
       .map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
     val docs = Tables.documents(spark, sf0001)
@@ -260,11 +260,11 @@ class LakehouseOpsSpec extends SparkSuite {
   }
 
   test("multimodal_scene_cut agrees with cuts recomputed from the energy profile") {
-    val energy = graft.operators.MultimodalOps
+    val energy = SparkEntry
       .queries("multimodal_audio_energy")(spark, sf0001).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
       .groupBy(_._1)
-    val got = graft.operators.MultimodalOps
+    val got = SparkEntry
       .queries("multimodal_scene_cut")(spark, sf0001).collect()
       .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
     energy.foreach { case (id, rows) =>
@@ -279,7 +279,7 @@ class LakehouseOpsSpec extends SparkSuite {
   }
 
   test("stats_levene matches a direct Brown-Forsythe computation") {
-    val r = StatsOps.queries("stats_levene")(spark, sf0001).collect().head
+    val r = SparkEntry.queries("stats_levene")(spark, sf0001).collect().head
     val vals = Tables.events(spark, sf0001)
       .select(col("event_type"),
         (col("value").cast("decimal(18,2)") * 100).cast("long"))
@@ -303,7 +303,7 @@ class LakehouseOpsSpec extends SparkSuite {
   }
 
   test("budget_waterfall funds greedily with exactly one straddling part") {
-    val rows = MiningOps.queries("budget_waterfall")(spark, sf0001)
+    val rows = SparkEntry.queries("budget_waterfall")(spark, sf0001)
       .collect().map(r => r.getString(0) ->
         (r.getLong(1), r.getDouble(2))).toMap
     assert(rows("partial")._1 === 1L)
@@ -314,7 +314,7 @@ class LakehouseOpsSpec extends SparkSuite {
   }
 
   test("stats_wilcoxon_signed matches a direct signed-rank computation") {
-    val r = AnalyticsOps.queries("stats_wilcoxon_signed")(spark, sf0001)
+    val r = SparkEntry.queries("stats_wilcoxon_signed")(spark, sf0001)
       .collect().head
     val daily = Tables.events(spark, sf0001)
       .groupBy(to_date(col("ts")).as("day"))
@@ -343,7 +343,7 @@ class LakehouseOpsSpec extends SparkSuite {
   }
 
   test("stats_kendall_tau matches a direct concordance count") {
-    val r = AnalyticsOps.queries("stats_kendall_tau")(spark, sf0001)
+    val r = SparkEntry.queries("stats_kendall_tau")(spark, sf0001)
       .collect().head
     val daily = Tables.events(spark, sf0001)
       .groupBy(to_date(col("ts")).as("day"))
@@ -367,7 +367,7 @@ class LakehouseOpsSpec extends SparkSuite {
   }
 
   test("stats_spearman matches a direct tie-averaged rank correlation") {
-    val r = AnalyticsOps.queries("stats_spearman")(spark, sf0001)
+    val r = SparkEntry.queries("stats_spearman")(spark, sf0001)
       .collect().head
     val daily = Tables.events(spark, sf0001)
       .groupBy(to_date(col("ts")).as("day"))
@@ -394,7 +394,7 @@ class LakehouseOpsSpec extends SparkSuite {
   }
 
   test("funnel_time_to_convert matches per-user first-view-to-purchase latencies") {
-    val r = AnalyticsOps.queries("funnel_time_to_convert")(spark, sf0001)
+    val r = SparkEntry.queries("funnel_time_to_convert")(spark, sf0001)
       .collect().head
     val evts = Tables.events(spark, sf0001)
       .select(col("user_id"), col("event_type"), unix_micros(col("ts")))
@@ -420,7 +420,7 @@ class LakehouseOpsSpec extends SparkSuite {
   }
 
   test("cohort_ltv is per-cohort monotone and normalizes by cohort size") {
-    val rows = AnalyticsOps.queries("cohort_ltv")(spark, sf0001).collect()
+    val rows = SparkEntry.queries("cohort_ltv")(spark, sf0001).collect()
       .map(r => (r.getDate(0).toString, r.getLong(1), r.getLong(2),
         r.getDouble(3), r.getDouble(4)))
     assert(rows.nonEmpty)
@@ -444,9 +444,9 @@ class LakehouseOpsSpec extends SparkSuite {
   }
 
   test("stats_cramers_v lies in [0,1] and derives from the chi2 output") {
-    val v = StatsOps.queries("stats_cramers_v")(spark, sf0001)
+    val v = SparkEntry.queries("stats_cramers_v")(spark, sf0001)
       .collect().head
-    val chi2 = StatsOps.queries("stats_chi2")(spark, sf0001)
+    val chi2 = SparkEntry.queries("stats_chi2")(spark, sf0001)
       .collect().head.getDouble(0)
     assert(v.getDouble(0) === chi2)
     val want = math.sqrt(chi2 / (v.getLong(1).toDouble * 4)) // min(5-1, 7-1)
@@ -458,7 +458,7 @@ class LakehouseOpsSpec extends SparkSuite {
     val m = StatsOps.statsMoments(spark, sf0001).collect()
       .map(r => r.getString(0) -> (r.getLong(1), r.getDouble(3),
         r.getDouble(4))).toMap
-    val jb = StatsOps.queries("stats_jarque_bera")(spark, sf0001).collect()
+    val jb = SparkEntry.queries("stats_jarque_bera")(spark, sf0001).collect()
     jb.foreach { r =>
       val (n, s, k) = m(r.getString(0))
       val want = n.toDouble / 6 * (s * s + k * k / 4)
@@ -468,7 +468,7 @@ class LakehouseOpsSpec extends SparkSuite {
   }
 
   test("graph_bfs hop counts match a driver-side BFS") {
-    val got = MiningOps.queries("graph_bfs")(spark, sf0001).collect()
+    val got = SparkEntry.queries("graph_bfs")(spark, sf0001).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     val li = Tables.lineitem(spark, sf0001)
       .select(col("l_orderkey"), col("l_partkey")).distinct()
@@ -530,7 +530,7 @@ class LakehouseOpsSpec extends SparkSuite {
   }
 
   test("text_bm25 matches a direct Scala computation of the Okapi formula") {
-    val got = graft.operators.TextOps.queries("text_bm25")(spark, sf0001)
+    val got = SparkEntry.queries("text_bm25")(spark, sf0001)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
     val docs = Tables.documents(spark, sf0001)
       .select(col("doc_id"), col("text")).collect()

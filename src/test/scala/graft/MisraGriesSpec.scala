@@ -70,7 +70,7 @@ class MisraGriesSpec extends SparkSuite {
       " in-bound)") {
     val direct = TextOps.heavyHitters(spark, sf0001)
       .as[(String, Long, Boolean)].collect().toSeq
-    val merged = TextOps.queries("heavy_hitters_merge")(spark, sf0001)
+    val merged = SparkEntry.queries("heavy_hitters_merge")(spark, sf0001)
       .as[(String, Long, Boolean)].collect().toSeq
     assert(merged.map(r => (r._1, r._2)) === direct.map(r => (r._1, r._2)))
     (direct ++ merged).foreach { case (t, _, ok) => assert(ok, t) }

@@ -532,6 +532,8 @@ class PlanShapeSpec extends SparkSuite {
       "sample_token_budget",  // 1-row language-count broadcast
       "stats_quade",          // 1-row A-statistic frame
       "stats_nemenyi")        // 1-row treatment-count broadcast
+    val stale = allowed -- SparkEntry.queries.keySet
+    assert(stale.isEmpty, s"allowlisted but not registered: $stale")
     // collect ALL offenders before asserting — a failure names every
     // key that needs auditing, not just the alphabetically first
     val offenders = SparkEntry.queries.toSeq.sortBy(_._1)
@@ -638,6 +640,8 @@ class PlanShapeSpec extends SparkSuite {
           f.relation.location.rootPaths.mkString(",").contains(s"$t.parquet"))
       case _ => false
     }
+    val stale = dupAllowed -- SparkEntry.queries.keySet
+    assert(stale.isEmpty, s"allowlisted but not registered: $stale")
     val offenders = dupAllowed.toSeq.sorted.flatMap { name =>
       val df = SparkEntry.queries(name)(spark, sf0001)
       df.collect() // materialize so the plan is the AQE-final one

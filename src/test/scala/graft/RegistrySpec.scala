@@ -1,52 +1,51 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+import com.fasterxml.jackson.databind.ObjectMapper
 import org.scalatest.funsuite.AnyFunSuite
-import graft.operators._
 
-/** Guards the SparkEntry registry merge: `Map ++` silently keeps the
-  * LAST binding for a duplicated key, so a name collision between two
-  * operator modules would shadow one implementation (and its oracle)
-  * without any compile- or run-time signal. This spec makes that
-  * failure loud. */
+/** Guards the SparkEntry registry. Its views are built with `toMap`,
+  * which silently keeps the LAST binding for a duplicated name, so two
+  * keys with one name would shadow one implementation (and its oracle)
+  * without any compile- or run-time signal. This spec makes that failure
+  * loud, pins which keys are rows-only, and checks the name lookup and
+  * the oracle dump the driver reads. */
 class RegistrySpec extends AnyFunSuite {
 
-  private val modules: Seq[(String, Map[String, _])] = Seq(
-    "CoreOps" -> CoreOps.queries,
-    "RelationalOps" -> RelationalOps.queries,
-    "TextOps" -> TextOps.queries,
-    "DedupOps" -> DedupOps.queries,
-    "SimilarityOps" -> SimilarityOps.queries,
-    "MultimodalOps" -> MultimodalOps.queries,
-    "AdvancedOps" -> AdvancedOps.queries,
-    "SqlSurfaceOps" -> SqlSurfaceOps.queries,
-    "AnalyticsOps" -> AnalyticsOps.queries,
-    "StatsOps" -> StatsOps.queries,
-    "MiningOps" -> MiningOps.queries,
-    "IngestPipeline" -> graft.streaming.IngestPipeline.queries,
-    "StreamJoin" -> graft.streaming.StreamJoin.queries,
-    "StreamEwma" -> graft.streaming.StreamEwma.queries,
-    "IvfIndex" -> graft.ml.IvfIndex.queries,
-    "PqIndex" -> graft.ml.PqIndex.queries,
-    "Pca" -> graft.ml.Pca.queries,
-    "LogReg" -> graft.ml.LogReg.queries,
-    "Bpe" -> graft.ml.Bpe.queries)
-
   test("no query key is defined by two modules (merge would shadow one)") {
-    val all = modules.flatMap { case (m, q) => q.keys.map(_ -> m) }
-    val dups = all.groupBy(_._1).filter(_._2.size > 1)
-    assert(dups.isEmpty,
-      s"duplicated keys: ${dups.map { case (k, ms) =>
-        s"$k in ${ms.map(_._2).mkString("+")}" }.mkString(", ")}")
-    assert(SparkEntry.queries.size == all.size)
+    val dups = SparkEntry.keys.groupBy(_.name).filter(_._2.size > 1).keys
+    assert(dups.isEmpty, s"duplicated keys: ${dups.toSeq.sorted.mkString(", ")}")
+    assert(SparkEntry.queries.size == SparkEntry.keys.size)
   }
 
-  test("every oracle belongs to a registered query key") {
-    val orphans = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
-    assert(orphans.isEmpty, s"oracles without a query: $orphans")
+  test("exactly the seven rows-only keys have no oracle") {
+    val rowsOnly = SparkEntry.keys.filter(_.oracle.isEmpty).map(_.name).toSet
+    assert(rowsOnly == Set("text_fingerprint_fast", "dedup_embed_ivf",
+      "dedup_minhash_fast", "embed_pca", "embed_whiten", "quality_lr_score",
+      "text_bpe"))
   }
 
   test("key names are lower_snake (driver-safe, shell-safe)") {
     val bad = SparkEntry.queries.keySet.filterNot(_.matches("[a-z0-9_]+"))
     assert(bad.isEmpty, s"non-snake keys: $bad")
+  }
+
+  test("lookup returns the named keys in order and names every unknown one") {
+    assert(SparkEntry.lookup(Seq("text_bm25", "flagship_revenue"))
+      .map(_.name) == Seq("text_bm25", "flagship_revenue"))
+    val e = intercept[IllegalArgumentException](
+      SparkEntry.lookup(Seq("typo_key", "text_bm25", "flagship_revnue")))
+    assert(e.getMessage == "unknown key(s): typo_key, flagship_revnue")
+  }
+
+  test("oracle_sql.json parses back to exactly SparkEntry.oracleSql, sorted") {
+    val fields = new ObjectMapper().readTree(Verify.oracleJson)
+      .properties().asScala.toSeq
+    val names = fields.map(_.getKey)
+    assert(names == names.sorted)
+    assert(fields.forall(_.getValue.isTextual))
+    assert(fields.map(f => f.getKey -> f.getValue.asText).toMap ==
+      SparkEntry.oracleSql)
+    assert(fields.size == 449)
   }
 }

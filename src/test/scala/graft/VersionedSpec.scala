@@ -92,7 +92,7 @@ class VersionedSpec extends SparkSuite {
   }
 
   test("scan_time_travel key: v2 aggregates strictly contain v1's") {
-    val byVersion = graft.operators.RelationalOps
+    val byVersion = SparkEntry
       .queries("scan_time_travel")(spark, sf0001)
       .select($"version", $"event_type", $"cnt")
       .as[(Long, String, Long)].collect()

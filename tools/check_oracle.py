@@ -60,9 +60,14 @@ def main(sf_dir, out_dir, only=None):
             path += "/*.parquet"
         con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{path}'")
     oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
-    if only:  # dev iteration: check only these comma-separated keys
-        oracle = {k: v for k, v in oracle.items() if k in only.split(",")}
     n_pass = n_fail = 0
+    if only:  # dev iteration: check only these comma-separated keys
+        # a name with neither an oracle nor a dump is a typo, not a pass
+        for k in only.split(","):
+            if k not in oracle and not os.path.isdir(f"{out_dir}/{k}"):
+                print(f"FAIL {k}: unknown key")
+                n_fail += 1
+        oracle = {k: v for k, v in oracle.items() if k in only.split(",")}
     no_oracle = []
     for name in sorted(oracle):
         sql = oracle[name]
