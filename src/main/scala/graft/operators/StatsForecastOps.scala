@@ -456,14 +456,12 @@ private[operators] trait StatsForecastOps extends StatsOpsBase {
   // (the forecast_holt shape — fact table reduces to a group-sized
   // series first). F(7) = ½(a + b(n+7)) + ½·l_n. ──
   def forecastTheta(spark: SparkSession, dir: String): DataFrame =
-    ev(spark, dir)
-      .groupBy(col("event_type"), col("day"))
-      .agg((sum(col("value").cast("decimal(18,2)")) * 100).cast("long")
-        .as("yc"))
+    dailyTyped(spark, dir)
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("n"),
-        sum(col("yc")).as("syc"),
-        sort_array(collect_list(struct(col("day"), col("yc")))).as("s"))
+        sum(col("revc")).as("syc"),
+        sort_array(collect_list(struct(col("day"), col("revc").as("yc"))))
+          .as("s"))
       .filter(col("n") >= 2)
       // Σt·yc via an indexed fold (the array is day-sorted, t = 1-based
       // position); Σt, Σt² in closed form — every moment exact int64
@@ -524,8 +522,8 @@ private[operators] trait StatsForecastOps extends StatsOpsBase {
   // autoregressive companion of forecast_holt's trend smoothing: φ₁/φ₂
   // capture "tomorrow echoes today AND the day before" (oscillation /
   // mean-reversion that exponential smoothing can't express). Lag
-  // correlations reuse stats_acf's exact-decimal lagged-pair device
-  // (calendar-day join, DECIMAL(18,2) moments cast once to double,
+  // correlations come from stats_acf's exact-decimal lagged-pair device,
+  // [[lagCorr]] (calendar-day join, DECIMAL(18,2) moments cast once to double,
   // r snapped to 6 dp), so the YW solve φ₁ = r₁(1−r₂)/(1−r₁²),
   // φ₂ = (r₂−r₁²)/(1−r₁²) runs on engine-identical inputs; the
   // one-step forecast reads the last two days via a window rank. The
@@ -534,25 +532,7 @@ private[operators] trait StatsForecastOps extends StatsOpsBase {
   def forecastAr2(spark: SparkSession, dir: String): DataFrame = {
     val daily = ev(spark, dir).groupBy(col("event_type"), col("day"))
       .agg(sum(col("value").cast("decimal(18,2)")).as("v"))
-    val lagged = daily
-      .withColumn("lag", explode(sequence(lit(1), lit(2))))
-      .withColumn("prev_day", date_sub(col("day"), col("lag")))
-      .join(daily.select(col("event_type"), col("day").as("prev_day"),
-        col("v").as("pv")), Seq("event_type", "prev_day"))
-    val x = col("v").cast("decimal(18,2)")
-    val y = col("pv").cast("decimal(18,2)")
-    val nD = col("n").cast("double")
-    val rk = lagged.groupBy(col("event_type"), col("lag"))
-      .agg(count(lit(1)).as("n"),
-        sum(x).cast("double").as("sx"), sum(y).cast("double").as("sy"),
-        sum(x * y).cast("double").as("sxy"),
-        sum(x * x).cast("double").as("sxx"),
-        sum(y * y).cast("double").as("syy"))
-      .select(col("event_type"), col("lag"),
-        r6((nD * col("sxy") - col("sx") * col("sy")) /
-          sqrt((nD * col("sxx") - col("sx") * col("sx")) *
-            (nD * col("syy") - col("sy") * col("sy")))).as("r"))
-    val rr = rk.groupBy(col("event_type"))
+    val rr = lagCorr(daily, 2, "event_type").groupBy(col("event_type"))
       .agg(max(when(col("lag") === 1, col("r"))).as("r1"),
         max(when(col("lag") === 2, col("r"))).as("r2"))
     val wOrd = Window.partitionBy(col("event_type")).orderBy(col("day"))

@@ -134,9 +134,7 @@ private[operators] trait StatsOpsBase {
     * doubled within-day midranks), shared by [[statsQuade]] and
     * [[statsNemenyi]] so the three blocked-rank keys rank identically. */
   protected def friedmanGrid(spark: SparkSession, dir: String): DataFrame = {
-    val rev = ev(spark, dir).groupBy(col("day"), col("event_type"))
-      .agg((sum(col("value").cast("decimal(18,2)")) * 100).cast("long")
-        .as("revc"))
+    val rev = dailyTyped(spark, dir)
     val days = rev.select(col("day")).distinct()
     val types = rev.select(col("event_type")).distinct()
     val grid = days.crossJoin(broadcast(types))
@@ -270,27 +268,15 @@ private[operators] trait StatsOpsBase {
   }
 
   /** Shared frame of the estimated-parameter normality tests
-    * ([[statsAndersonDarling]], [[statsCvm]]): per-type daily revenue in
-    * exact cents, z from int64 cents moments, Φ via the token-identical
-    * [[phiSql]] polynomial, ECDF rank over the (revc, day) total order.
-    * Identical to [[statsLilliefors]]'s frame so the three tests are
-    * directly comparable per type. */
-  protected def normalityFrame(spark: SparkSession, dir: String): DataFrame = {
-    val daily = ev(spark, dir).groupBy(col("event_type"), col("day"))
-      .agg((sum(col("value").cast("decimal(18,2)")) * 100).cast("long")
-        .as("yc"))
-    val mom = daily.groupBy(col("event_type"))
-      .agg(count(lit(1)).as("n"), sum(col("yc")).as("s1"),
-        sum(expr("CAST(yc AS DECIMAL(28,0)) * yc")).as("s2"))
-      .withColumn("mu", expr("cast(s1 as double) / n"))
-      .withColumn("sd", expr(
-        "sqrt(cast(n * s2 - CAST(s1 AS DECIMAL(28,0)) * s1 as double)" +
-          " / (cast(n as double) * (n - 1)))"))
-      .select(col("event_type"), col("n"), col("mu"), col("sd"))
-    daily.join(broadcast(mom), "event_type")
-      .withColumn("z", expr("(yc - mu) / sd"))
+    * ([[statsAndersonDarling]], [[statsCvm]]): [[dailyZ]] plus the ECDF
+    * rank over the (revc, day) total order and Φ(z) via the
+    * token-identical [[phiSql]] polynomial, clamped off {0, 1}.
+    * [[statsLilliefors]] ranks the same frame but keeps the unclamped Φ,
+    * so its D statistic differs from a clamped one only for |z| ≳ 8.5. */
+  protected def normalityFrame(spark: SparkSession, dir: String): DataFrame =
+    dailyZ(spark, dir)
       .withColumn("rn", row_number().over(Window
-        .partitionBy(col("event_type")).orderBy(col("yc"), col("day"))))
+        .partitionBy(col("event_type")).orderBy(col("revc"), col("day"))))
       // clamped off the exact {0,1} saturation points of the A–S
       // polynomial (|z| ≳ 8.5): one extreme-outlier day would otherwise
       // make AD's ln(phi)/ln(1−phi) a -Inf/NaN in BOTH engines — and
@@ -299,7 +285,6 @@ private[operators] trait StatsOpsBase {
       // only within 1e-15 of the endpoints; outputs snap at 6-9 dp).
       .withColumn("phi", expr(
         s"greatest(least(${phiSql("z")}, 1.0 - 1e-15), 1e-15)"))
-  }
 
   /** The stats_moments oracle, shared verbatim by stats_jarque_bera
     * (which derives JB from the rounded moments). */
@@ -407,9 +392,118 @@ private[operators] trait StatsOpsBase {
   protected val duckNormalDeciles: String = NormalDeciles
     .map { case (d, z) => s"($d, CAST('$z' AS DOUBLE))" }.mkString(", ")
 
-  /** Shared daily-cents-per-type oracle CTE for the trend/changepoint
-    * tests (mirrors the grouped frame in [[statsMannKendall]] /
-    * [[statsPettitt]]). */
+  // ── the shared base frames. Each is a lazy DataFrame (nothing runs
+  // until a key's plan does, so every Eager checkpoint stays at its key)
+  // and the Spark twin of the duck* CTE named in its doc. ──
+
+  /** Per-type daily revenue in exact int64 cents: (event_type, day, revc)
+    * plus any `extra` aggregates over the same groups. The fact table
+    * reduces here to ≤ |types|×|days| rows; every daily-series key runs
+    * on this frame. Twin of [[duckDailyTyped]]. */
+  private[graft] def dailyTyped(spark: SparkSession, dir: String,
+      extra: Column*): DataFrame =
+    ev(spark, dir).groupBy(col("event_type"), col("day"))
+      .agg((sum(col("value").cast("decimal(18,2)")) * 100).cast("long")
+        .as("revc"), extra: _*)
+
+  /** [[dailyTyped]] standardized per type: adds the day count n, mean mu
+    * and sample sd from exact int64/DECIMAL cents moments, and
+    * z = (revc − mu)/sd. Twin of [[duckZSeries]]' mo/mm/zs CTEs. */
+  private[graft] def dailyZ(spark: SparkSession, dir: String): DataFrame = {
+    val daily = dailyTyped(spark, dir)
+    val mom = daily.groupBy(col("event_type"))
+      .agg(count(lit(1)).as("n"), sum(col("revc")).as("s1"),
+        sum(expr("CAST(revc AS DECIMAL(28,0)) * revc")).as("s2"))
+      .withColumn("mu", expr("cast(s1 as double) / n"))
+      .withColumn("sd", expr(
+        "sqrt(cast(n * s2 - CAST(s1 AS DECIMAL(28,0)) * s1 as double)" +
+          " / (cast(n as double) * (n - 1)))"))
+      .select(col("event_type"), col("n"), col("mu"), col("sd"))
+    daily.join(broadcast(mom), "event_type")
+      .withColumn("z", expr("(revc - mu) / sd"))
+  }
+
+  /** Per-type daily bars in exact cents: high h, low l, close c (the
+    * day's last value by the unique (us, event_id) order, via struct-max
+    * — no argmax ambiguity) and the event count vol. Twin of
+    * [[duckBars]], which carries no vol. */
+  protected def ohlcBars(spark: SparkSession, dir: String): DataFrame =
+    ev(spark, dir)
+      .withColumn("vc",
+        expr("CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT)"))
+      .groupBy(col("event_type"), col("day"))
+      .agg(max(col("vc")).as("h"), min(col("vc")).as("l"),
+        max(struct(col("us"), col("event_id"), col("vc")))
+          .getField("vc").as("c"),
+        count(lit(1)).as("vol"))
+
+  /** Per-type (n, s1, s2) of `value`: count, Σv and Σv² as DECIMAL-exact
+    * sums cast once to double. */
+  protected def valueMoments(spark: SparkSession, dir: String): DataFrame =
+    ev(spark, dir).groupBy(col("event_type"))
+      .agg(count(lit(1)).as("n"),
+        sum(col("value").cast("decimal(18,2)")).cast("double").as("s1"),
+        sum(col("value").cast("decimal(18,2)") *
+          col("value").cast("decimal(18,2)")).cast("double").as("s2"))
+
+  /** The two-sample value grid of the [[KsTypeA]]/[[KsTypeB]] tests: one
+    * row per distinct value with its sample counts a, b and tie size
+    * t = a + b — ≤ |distinct values| rows, the 2-dp metric domain. */
+  protected def ksCounts(spark: SparkSession, dir: String): DataFrame =
+    ev(spark, dir)
+      .filter(col("event_type").isin(KsTypeA, KsTypeB))
+      .groupBy(col("value"))
+      .agg(sum(when(col("event_type") === KsTypeA, 1L).otherwise(0L)).as("a"),
+        sum(when(col("event_type") === KsTypeB, 1L).otherwise(0L)).as("b"))
+      .withColumn("t", col("a") + col("b"))
+
+  /** Lag-k Pearson r of a daily series `v` against itself k calendar days
+    * earlier, k = 1..maxLag, per `keys` group: (keys…, lag, n, r). Pairs
+    * come from a calendar-day self-join (gap days drop out of both sides
+    * identically); moments are DECIMAL(18,2) sums cast once to double,
+    * and r is snapped to 6 dp. */
+  protected def lagCorr(daily: DataFrame, maxLag: Int,
+      keys: String*): DataFrame = {
+    val lagged = daily
+      .withColumn("lag", explode(sequence(lit(1), lit(maxLag))))
+      .withColumn("prev_day", date_sub(col("day"), col("lag")))
+      .join(daily.select(keys.map(col) ++
+        Seq(col("day").as("prev_day"), col("v").as("pv")): _*),
+        keys :+ "prev_day")
+    // daily totals carry exactly 2 decimals: DECIMAL(18,2) is lossless and
+    // keeps products inside width 38 in BOTH engines (28,6)² would spill
+    // DuckDB to double and reintroduce order-dependence)
+    val x = col("v").cast("decimal(18,2)")
+    val y = col("pv").cast("decimal(18,2)")
+    val nD = col("n").cast("double")
+    lagged.groupBy(keys.map(col) :+ col("lag").cast("long").as("lag"): _*)
+      .agg(count(lit(1)).as("n"),
+        sum(x).cast("double").as("sx"), sum(y).cast("double").as("sy"),
+        sum(x * y).cast("double").as("sxy"),
+        sum(x * x).cast("double").as("sxx"),
+        sum(y * y).cast("double").as("syy"))
+      .select(keys.map(col) ++ Seq(col("lag"), col("n"),
+        r6((nD * col("sxy") - col("sx") * col("sy")) /
+          sqrt((nD * col("sxx") - col("sx") * col("sx")) *
+            (nD * col("syy") - col("sy") * col("sy")))).as("r")): _*)
+  }
+
+  /** Oracle CTEs `e` and `bars(event_type, day, h, l, c)` mirroring
+    * [[ohlcBars]]; comma-terminated. */
+  protected val duckBars: String =
+    """WITH e AS (
+      |  SELECT event_type, CAST(CAST(ts AS TIMESTAMP) AS DATE) AS day,
+      |    epoch_us(CAST(ts AS TIMESTAMP)) AS us, event_id,
+      |    CAST(CAST("value" AS DECIMAL(18,2)) * 100 AS BIGINT) AS vc
+      |  FROM events),
+      |bars AS (SELECT event_type, day,
+      |    CAST(max(vc) AS BIGINT) AS h, CAST(min(vc) AS BIGINT) AS l,
+      |    max({'us': us, 'event_id': event_id, 'vc': vc}).vc AS c
+      |  FROM e GROUP BY 1, 2),
+      |""".stripMargin
+
+  /** Shared daily-cents-per-type oracle CTE, the twin of [[dailyTyped]]
+    * (plus the integer day index dayno). */
   protected val duckDailyTyped: String =
     """WITH daily AS (
       |  SELECT event_type, CAST(CAST(ts AS TIMESTAMP) AS DATE) AS day,
@@ -463,29 +557,58 @@ private[operators] trait StatsOpsBase {
       |tn AS (SELECT *, a + b + c + d AS n FROM tbl),
       |""".stripMargin
 
+  /** Oracle CTE block appended to [[duckDailyTyped]]: int64 cents
+    * moments → z, plus the ECDF rank over the (revc, day) total order.
+    * Ends at `zz(event_type, n, z, rn)`, comma-terminated. The ranked
+    * z of [[statsLilliefors]] and [[duckNormalityFrame]]. */
+  protected val duckZRanked: String =
+    """mo AS (SELECT event_type, CAST(count(*) AS BIGINT) AS n,
+      |    CAST(sum(revc) AS BIGINT) AS s1,
+      |    sum(CAST(revc AS DECIMAL(28,0)) * revc) AS s2
+      |  FROM daily GROUP BY 1),
+      |mm AS (SELECT event_type, n, CAST(s1 AS DOUBLE) / n AS mu,
+      |    sqrt(CAST(n * s2 - CAST(s1 AS DECIMAL(28,0)) * s1 AS DOUBLE)
+      |      / (CAST(n AS DOUBLE) * (n - 1))) AS sd
+      |  FROM mo),
+      |zz AS (SELECT d.event_type, mm.n,
+      |    (d.revc - mm.mu) / mm.sd AS z,
+      |    CAST(row_number() OVER (PARTITION BY d.event_type
+      |      ORDER BY d.revc, d.day) AS BIGINT) AS rn
+      |  FROM daily d JOIN mm USING (event_type)),
+      |""".stripMargin
+
   /** Shared oracle CTE block of the estimated-parameter normality tests
-    * (appended to [[duckDailyTyped]]): mirrors [[normalityFrame]] — int64
-    * cents moments → z → Φ via the token-identical polynomial, ECDF rank
-    * over the (revc, day) total order. Ends at `pp(event_type, n, rn,
-    * phi)`, comma-terminated for the test-specific CTEs to follow. */
-  protected lazy val duckNormalityFrame: String =
-    s"""mo AS (SELECT event_type, CAST(count(*) AS BIGINT) AS n,
-       |    CAST(sum(revc) AS BIGINT) AS s1,
-       |    sum(CAST(revc AS DECIMAL(28,0)) * revc) AS s2
-       |  FROM daily GROUP BY 1),
-       |mm AS (SELECT event_type, n, CAST(s1 AS DOUBLE) / n AS mu,
-       |    sqrt(CAST(n * s2 - CAST(s1 AS DECIMAL(28,0)) * s1 AS DOUBLE)
-       |      / (CAST(n AS DOUBLE) * (n - 1))) AS sd
-       |  FROM mo),
-       |zz AS (SELECT d.event_type, mm.n,
-       |    (d.revc - mm.mu) / mm.sd AS z,
-       |    CAST(row_number() OVER (PARTITION BY d.event_type
-       |      ORDER BY d.revc, d.day) AS BIGINT) AS rn
-       |  FROM daily d JOIN mm USING (event_type)),
-       |pp AS (SELECT event_type, n, rn,
+    * (appended to [[duckDailyTyped]]): mirrors [[normalityFrame]] —
+    * [[duckZRanked]] plus Φ via the token-identical polynomial, clamped.
+    * Ends at `pp(event_type, n, rn, phi)`, comma-terminated for the
+    * test-specific CTEs to follow. */
+  protected lazy val duckNormalityFrame: String = duckZRanked +
+    s"""pp AS (SELECT event_type, n, rn,
        |    greatest(least(${phiSql("z")}, 1.0 - 1e-15), 1e-15) AS phi
        |  FROM zz),
        |""".stripMargin
+
+  /** Oracle CTE `g(value, a, b)` mirroring [[ksCounts]] (without t);
+    * comma-terminated. */
+  protected val duckKsCounts: String =
+    """WITH g AS (
+      |  SELECT "value" AS value,
+      |    sum(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END) AS a,
+      |    sum(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS b
+      |  FROM events WHERE event_type IN ('click', 'purchase')
+      |  GROUP BY 1),
+      |""".stripMargin
+
+  /** Oracle CTE `g(event_type, n, s1, s2)` mirroring [[valueMoments]];
+    * comma-terminated. */
+  protected val duckValueMoments: String =
+    """WITH g AS (
+      |  SELECT event_type, CAST(count(*) AS BIGINT) AS n,
+      |    CAST(sum(CAST("value" AS DECIMAL(18,2))) AS DOUBLE) AS s1,
+      |    CAST(sum(CAST("value" AS DECIMAL(18,2))
+      |             * CAST("value" AS DECIMAL(18,2))) AS DOUBLE) AS s2
+      |  FROM events GROUP BY 1),
+      |""".stripMargin
 
   /** Shared user-spend oracle CTE (mirrors [[userSpendPos]]). */
   protected val duckUserSpendPos: String =
@@ -502,7 +625,8 @@ private[operators] trait StatsOpsBase {
       |""".stripMargin
 
   /** Standardized daily series + row numbers for the sequential drift
-    * oracles (appended to the daily CTE, recursion-ready). */
+    * oracles (appended to the daily CTE, recursion-ready) — the twin of
+    * [[dailyZ]] plus a per-type day rank. */
   protected val duckZSeries: String =
     """mo AS (SELECT event_type, CAST(count(*) AS BIGINT) AS n,
       |    CAST(sum(revc) AS BIGINT) AS s1,

@@ -100,35 +100,16 @@ private[operators] trait StatsSeqOps extends StatsOpsBase {
   def statsAcf(spark: SparkSession, dir: String): DataFrame = {
     val daily = ev(spark, dir).groupBy(col("day"))
       .agg(sum(col("value").cast("decimal(18,2)")).cast("double").as("v"))
-    val lagged = daily
-      .withColumn("lag", explode(sequence(lit(1), lit(7))))
-      .withColumn("prev_day", date_sub(col("day"), col("lag")))
-      .join(daily.select(col("day").as("prev_day"), col("v").as("pv")),
-        "prev_day")
-    // daily totals carry exactly 2 decimals: DECIMAL(18,2) is lossless and
-    // keeps products inside width 38 in BOTH engines (28,6)² would spill
-    // DuckDB to double and reintroduce order-dependence)
-    val x = col("v").cast("decimal(18,2)")
-    val y = col("pv").cast("decimal(18,2)")
-    val nD = col("n").cast("double")
-    lagged.groupBy(col("lag").cast("long").as("lag"))
-      .agg(count(lit(1)).as("n"),
-        sum(x).cast("double").as("sx"), sum(y).cast("double").as("sy"),
-        sum(x * y).cast("double").as("sxy"),
-        sum(x * x).cast("double").as("sxx"),
-        sum(y * y).cast("double").as("syy"))
-      .select(col("lag"), col("n"),
-        r6((nD * col("sxy") - col("sx") * col("sy")) /
-          sqrt((nD * col("sxx") - col("sx") * col("sx")) *
-            (nD * col("syy") - col("sy") * col("sy")))).as("acf"))
+    lagCorr(daily, 7)
+      .select(col("lag"), col("n"), col("r").as("acf"))
       .orderBy("lag")
   }
 
   // ── partial autocorrelation of the same daily series at lags 1..3 —
   // the AR-order-selection companion of stats_acf: the ACF says "is
   // there memory", the PACF says "how many AR terms carry it" (φkk ≈ 0
-  // beyond the true order). Lag correlations reuse stats_acf's
-  // exact-decimal lagged-pair device verbatim (calendar join,
+  // beyond the true order). Lag correlations come from stats_acf's
+  // exact-decimal lagged-pair device, [[lagCorr]] (calendar join,
   // DECIMAL(18,2) moments, r snapped to 6 dp); the Durbin–Levinson
   // recursion through order 3 — φ11 = r1, φ22 = (r2−r1²)/(1−r1²),
   // φ21 = r1 − φ22·r1, φ33 = (r3 − φ21·r2 − φ22·r1)/(1 − φ21·r1 −
@@ -139,26 +120,8 @@ private[operators] trait StatsSeqOps extends StatsOpsBase {
   def statsPacf(spark: SparkSession, dir: String): DataFrame = {
     val daily = ev(spark, dir).groupBy(col("day"))
       .agg(sum(col("value").cast("decimal(18,2)")).cast("double").as("v"))
-    val lagged = daily
-      .withColumn("lag", explode(sequence(lit(1), lit(3))))
-      .withColumn("prev_day", date_sub(col("day"), col("lag")))
-      .join(daily.select(col("day").as("prev_day"), col("v").as("pv")),
-        "prev_day")
-    val x = col("v").cast("decimal(18,2)")
-    val y = col("pv").cast("decimal(18,2)")
-    val nD = col("n").cast("double")
-    val rk = lagged.groupBy(col("lag"))
-      .agg(count(lit(1)).as("n"),
-        sum(x).cast("double").as("sx"), sum(y).cast("double").as("sy"),
-        sum(x * y).cast("double").as("sxy"),
-        sum(x * x).cast("double").as("sxx"),
-        sum(y * y).cast("double").as("syy"))
-      .select(col("lag"),
-        r6((nD * col("sxy") - col("sx") * col("sy")) /
-          sqrt((nD * col("sxx") - col("sx") * col("sx")) *
-            (nD * col("syy") - col("sy") * col("sy")))).as("r"))
     val nDays = daily.agg(count(lit(1)).as("n_days"))
-    rk.agg(max(when(col("lag") === 1, col("r"))).as("r1"),
+    lagCorr(daily, 3).agg(max(when(col("lag") === 1, col("r"))).as("r1"),
         max(when(col("lag") === 2, col("r"))).as("r2"),
         max(when(col("lag") === 3, col("r"))).as("r3"))
       .crossJoin(broadcast(nDays))
@@ -485,36 +448,18 @@ private[operators] trait StatsSeqOps extends StatsOpsBase {
   // ── Ljung-Box portmanteau test: Q = n(n+2) Σ_{k=1..7} ρ_k²/(n−k) over
   // the daily-series ACF — "is there ANY autocorrelation structure",
   // the whiteness gate run before trusting i.i.d. assumptions in the
-  // other tests. ρ_k comes from the IDENTICAL decimal-moment pipeline
-  // as stats_acf and is ROUNDED before entering Q, so both engines sum
+  // other tests. ρ_k comes from the decimal-moment pipeline of
+  // stats_acf ([[lagCorr]]) and is ROUNDED before entering Q, so both engines sum
   // the same 6-dp terms; n is the day count (1-row broadcast — plan
   // audit). Reject at the χ²(7) 5% critical value on the rounded Q. ──
   def statsLjungBox(spark: SparkSession, dir: String): DataFrame = {
     val daily = ev(spark, dir).groupBy(col("day"))
       .agg(sum(col("value").cast("decimal(18,2)")).cast("double").as("v"))
     val nDays = daily.agg(count(lit(1)).as("n_days"))
-    val lagged = daily
-      .withColumn("lag", explode(sequence(lit(1), lit(7))))
-      .withColumn("prev_day", date_sub(col("day"), col("lag")))
-      .join(daily.select(col("day").as("prev_day"), col("v").as("pv")),
-        "prev_day")
-    val x = col("v").cast("decimal(18,2)")
-    val y = col("pv").cast("decimal(18,2)")
-    val nD = col("n").cast("double")
-    val acf = lagged.groupBy(col("lag").cast("long").as("lag"))
-      .agg(count(lit(1)).as("n"),
-        sum(x).cast("double").as("sx"), sum(y).cast("double").as("sy"),
-        sum(x * y).cast("double").as("sxy"),
-        sum(x * x).cast("double").as("sxx"),
-        sum(y * y).cast("double").as("syy"))
-      .select(col("lag"),
-        r6((nD * col("sxy") - col("sx") * col("sy")) /
-          sqrt((nD * col("sxx") - col("sx") * col("sx")) *
-            (nD * col("syy") - col("sy") * col("sy")))).as("acf"))
-    acf.crossJoin(broadcast(nDays))
+    lagCorr(daily, 7).crossJoin(broadcast(nDays))
       .groupBy(col("n_days"))
       .agg(count(lit(1)).as("df"),
-        sum(col("acf") * col("acf") /
+        sum(col("r") * col("r") /
           (col("n_days") - col("lag")).cast("double")).as("s"))
       .select(col("n_days"), col("df"),
         r6(col("n_days").cast("double") *
@@ -973,9 +918,7 @@ private[operators] trait StatsSeqOps extends StatsOpsBase {
   // make it conservative — documented, matched in the oracle). Block
   // grid is |days|×k — group-sized forever. ──
   def statsPageTrend(spark: SparkSession, dir: String): DataFrame = {
-    val rev = ev(spark, dir).groupBy(col("day"), col("event_type"))
-      .agg((sum(col("value").cast("decimal(18,2)")) * 100).cast("long")
-        .as("revc"))
+    val rev = dailyTyped(spark, dir)
     val days = rev.select(col("day")).distinct()
     val types = rev.select(col("event_type")).distinct()
       .withColumn("j", row_number().over(
@@ -1237,21 +1180,10 @@ private[operators] trait StatsSeqOps extends StatsOpsBase {
   // argmax (so the picked day is engine-identical even at a near-tie),
   // ties broken by earliest day via the (dev, −dayno) struct max.
   // Day-grid frames; one scan. ──
-  def statsGrubbs(spark: SparkSession, dir: String): DataFrame = {
-    val daily = ev(spark, dir).groupBy(col("event_type"), col("day"))
-      .agg((sum(col("value").cast("decimal(18,2)")) * 100).cast("long")
-        .as("revc"))
+  def statsGrubbs(spark: SparkSession, dir: String): DataFrame =
+    dailyZ(spark, dir)
       .withColumn("dayno", expr("datediff(day, DATE'1970-01-01')"))
-    val mom = daily.groupBy(col("event_type"))
-      .agg(count(lit(1)).as("n"), sum(col("revc")).as("s"),
-        sum(expr("CAST(revc AS DECIMAL(28,0)) * revc")).as("s2"))
-      .withColumn("m", expr("cast(s as double) / n"))
-      .withColumn("sd", expr(
-        "sqrt(cast(n * s2 - CAST(s AS DECIMAL(28,0)) * s as double)" +
-          " / (cast(n as double) * (n - 1)))"))
-    daily.join(broadcast(mom), Seq("event_type"))
-      .withColumn("dev", expr(
-        "round(abs(revc - m) / sd, 6)"))
+      .withColumn("dev", expr("round(abs(revc - mu) / sd, 6)"))
       .groupBy(col("event_type"))
       .agg(first(col("n")).as("n_days"),
         max(struct(col("dev"), (-col("dayno")).as("nd"))).as("mx"))
@@ -1260,7 +1192,6 @@ private[operators] trait StatsSeqOps extends StatsOpsBase {
         expr("date_add(DATE'1970-01-01', cast(-mx.nd as int))")
           .as("outlier_day"))
       .orderBy("event_type")
-  }
 
   // ── Mann–Kendall trend test per event type: S = Σ_{i<j} sign(xⱼ−xᵢ)
   // over the daily-revenue series, tie-corrected variance, and Kendall's
@@ -1271,9 +1202,7 @@ private[operators] trait StatsSeqOps extends StatsOpsBase {
   // table); S and the tie term are pure int64 (exact cents comparisons),
   // divided once in double for z and tau. ──
   def statsMannKendall(spark: SparkSession, dir: String): DataFrame = {
-    val daily = ev(spark, dir).groupBy(col("event_type"), col("day"))
-      .agg((sum(col("value").cast("decimal(18,2)")) * 100).cast("long")
-        .as("revc"))
+    val daily = dailyTyped(spark, dir)
       .withColumn("dayno", expr("datediff(day, DATE'1970-01-01')"))
       .transform(Eager(_))
     val a = daily.alias("a")
@@ -1288,7 +1217,7 @@ private[operators] trait StatsSeqOps extends StatsOpsBase {
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("n_distinct"), sum(col("t")).as("n_days"),
         sum(col("t") * (col("t") - 1) * (col("t") * 2 + 5)).as("tie_term"))
-    val out = s.join(ties, "event_type")
+    s.join(ties, "event_type")
       .withColumn("var_s", expr(
         "cast(n_days * (n_days - 1) * (2 * n_days + 5) - tie_term" +
           " as double) / 18"))
@@ -1302,8 +1231,6 @@ private[operators] trait StatsSeqOps extends StatsOpsBase {
           " THEN cast(s_stat + 1 as double) / sqrt(var_s)" +
           " ELSE 0.0D END")).as("z"))
       .orderBy("event_type")
-    daily.unpersist()
-    out
   }
 
   // ── Pettitt changepoint test per event type: the rank-based
@@ -1316,9 +1243,7 @@ private[operators] trait StatsSeqOps extends StatsOpsBase {
   // struct-max (the stats_grubbs tie discipline); the approximate
   // significance 2·exp(−6K²/(n³+n²)) is one closed-form double. ──
   def statsPettitt(spark: SparkSession, dir: String): DataFrame = {
-    val daily = ev(spark, dir).groupBy(col("event_type"), col("day"))
-      .agg((sum(col("value").cast("decimal(18,2)")) * 100).cast("long")
-        .as("revc"))
+    val daily = dailyTyped(spark, dir)
       .withColumn("dayno", expr("datediff(day, DATE'1970-01-01')"))
       .transform(Eager(_))
     val a = daily.alias("a")
@@ -1332,7 +1257,7 @@ private[operators] trait StatsSeqOps extends StatsOpsBase {
       .rowsBetween(Window.unboundedPreceding, 0)
     val u = v.withColumn("ut", sum(col("vt")).over(byDay))
     val n = daily.groupBy(col("event_type")).agg(count(lit(1)).as("n_days"))
-    val out = u.groupBy(col("event_type"))
+    u.groupBy(col("event_type"))
       .agg(max(struct(abs(col("ut")).as("k"), (-col("dayno")).as("nd")))
         .as("mx"))
       .join(n, "event_type")
@@ -1344,8 +1269,6 @@ private[operators] trait StatsSeqOps extends StatsOpsBase {
           " / (cast(n_days as double) * n_days * n_days" +
           " + cast(n_days as double) * n_days)), 1.0D)")).as("p_approx"))
       .orderBy("event_type")
-    daily.unpersist()
-    out
   }
 
   // ── 1-D Wasserstein (earth-mover) distance between the same two
@@ -1356,11 +1279,7 @@ private[operators] trait StatsSeqOps extends StatsOpsBase {
   // rows, each trapezoid term snapped to 9 dp DECIMAL so the grid-sized
   // sum is associative. ──
   def statsWasserstein(spark: SparkSession, dir: String): DataFrame = {
-    val g = ev(spark, dir)
-      .filter(col("event_type").isin(KsTypeA, KsTypeB))
-      .groupBy(col("value"))
-      .agg(sum(when(col("event_type") === KsTypeA, 1L).otherwise(0L)).as("a"),
-        sum(when(col("event_type") === KsTypeB, 1L).otherwise(0L)).as("b"))
+    val g = ksCounts(spark, dir)
     val byVal = Window.orderBy(col("value"))
     val cum = g
       .withColumn("ca", sum(col("a")).over(
@@ -1465,18 +1384,16 @@ private[operators] trait StatsSeqOps extends StatsOpsBase {
   // to 9-dp DECIMAL before the cross-block mean. Everything runs on
   // the grouped day grid. ──
   def statsHurst(spark: SparkSession, dir: String): DataFrame = {
-    val daily = ev(spark, dir).groupBy(col("event_type"), col("day"))
-      .agg((sum(col("value").cast("decimal(18,2)")) * 100).cast("long")
-        .as("yc"))
+    val daily = dailyTyped(spark, dir)
       .withColumn("rn", row_number().over(
         Window.partitionBy(col("event_type")).orderBy(col("day"))))
-    val sized = daily.select(col("event_type"), col("yc"), col("rn"),
+    val sized = daily.select(col("event_type"), col("revc"), col("rn"),
       explode(array(lit(8), lit(16))).as("sz"))
       .withColumn("b", expr("(rn - 1) div sz"))
       .withColumn("k", expr("(rn - 1) % sz + 1"))
     val blocks = sized.groupBy(col("event_type"), col("sz"), col("b"))
-      .agg(count(lit(1)).as("nb"), sum(col("yc")).as("s1"),
-        sum(expr("CAST(yc AS DECIMAL(28,0)) * yc")).as("s2"))
+      .agg(count(lit(1)).as("nb"), sum(col("revc")).as("s1"),
+        sum(expr("CAST(revc AS DECIMAL(28,0)) * revc")).as("s2"))
       .filter(col("nb") === col("sz"))
       .withColumn("mean", expr("cast(s1 as double) / sz"))
       .withColumn("sd", expr(
@@ -1484,7 +1401,7 @@ private[operators] trait StatsSeqOps extends StatsOpsBase {
           " / sz"))
     val withCum = sized.join(blocks.select(col("event_type"), col("sz"),
         col("b"), col("mean"), col("sd")), Seq("event_type", "sz", "b"))
-      .withColumn("cum", sum(col("yc")).over(
+      .withColumn("cum", sum(col("revc")).over(
         Window.partitionBy(col("event_type"), col("sz"), col("b"))
           .orderBy(col("k"))
           .rowsBetween(Window.unboundedPreceding, 0)))
@@ -1525,16 +1442,14 @@ private[operators] trait StatsSeqOps extends StatsOpsBase {
     // consumers (the tolerance moments and both sides of the template
     // self-join) — lazily each re-ran the fact scan + aggregation +
     // window; the concurrent self-join sides are Eager's race case
-    val daily = Eager(ev(spark, dir).groupBy(col("event_type"), col("day"))
-      .agg((sum(col("value").cast("decimal(18,2)")) * 100).cast("long")
-        .as("yc"))
+    val daily = Eager(dailyTyped(spark, dir)
       .withColumn("rn", row_number().over(wOrd))
-      .withColumn("y1", lead(col("yc"), 1).over(wOrd))
-      .withColumn("y2", lead(col("yc"), 2).over(wOrd))
+      .withColumn("y1", lead(col("revc"), 1).over(wOrd))
+      .withColumn("y2", lead(col("revc"), 2).over(wOrd))
       .filter(col("y2").isNotNull))
     val tol = daily.groupBy(col("event_type"))
-      .agg(count(lit(1)).as("n"), sum(col("yc")).as("s1"),
-        sum(expr("CAST(yc AS DECIMAL(28,0)) * yc")).as("s2"))
+      .agg(count(lit(1)).as("n"), sum(col("revc")).as("s1"),
+        sum(expr("CAST(revc AS DECIMAL(28,0)) * revc")).as("s2"))
       .withColumn("r_tol", expr(
         "round(0.2D * sqrt(cast(n * s2 - CAST(s1 AS DECIMAL(28,0)) * s1" +
           " as double)) / n, 6)"))
@@ -1546,7 +1461,7 @@ private[operators] trait StatsSeqOps extends StatsOpsBase {
       .join(broadcast(tol.select(col("event_type").as("tet"), col("r_tol"))),
         col("a.event_type") === col("tet"))
       .select(col("a.event_type").as("et"),
-        (abs(col("a.yc") - col("b.yc")) <= col("r_tol")).as("m0"),
+        (abs(col("a.revc") - col("b.revc")) <= col("r_tol")).as("m0"),
         (abs(col("a.y1") - col("b.y1")) <= col("r_tol")).as("m1"),
         (abs(col("a.y2") - col("b.y2")) <= col("r_tol")).as("m2"))
     pairs.groupBy(col("et").as("event_type"))
@@ -1571,11 +1486,7 @@ private[operators] trait StatsSeqOps extends StatsOpsBase {
   // moment arithmetic on the DECIMAL-exact group sums — one scan, one
   // k-row pass; the capability verdict branches on the 6-dp Cpk. ──
   def statsCpk(spark: SparkSession, dir: String): DataFrame =
-    ev(spark, dir).groupBy(col("event_type"))
-      .agg(count(lit(1)).as("n"),
-        sum(col("value").cast("decimal(18,2)")).cast("double").as("s1"),
-        sum(col("value").cast("decimal(18,2)") *
-          col("value").cast("decimal(18,2)")).cast("double").as("s2"))
+    valueMoments(spark, dir)
       .withColumn("m", expr("s1 / n"))
       .withColumn("sd", expr(
         "sqrt((n * s2 - s1 * s1) / (cast(n as double) * (n - 1)))"))
@@ -1597,21 +1508,14 @@ private[operators] trait StatsSeqOps extends StatsOpsBase {
   // 6-dp z so both engines flag identical days. Emits the full chart
   // with per-day flags plus each type's violation totals. ──
   def statsXbarChart(spark: SparkSession, dir: String): DataFrame = {
-    val daily = ev(spark, dir).groupBy(col("event_type"), col("day"))
-      .agg(count(lit(1)).as("nd"),
-        (sum(col("value").cast("decimal(18,2)")) * 100).cast("long")
-          .as("sc"))
-    val grand = ev(spark, dir).groupBy(col("event_type"))
-      .agg(count(lit(1)).as("n"),
-        sum(col("value").cast("decimal(18,2)")).cast("double").as("s1"),
-        sum(col("value").cast("decimal(18,2)") *
-          col("value").cast("decimal(18,2)")).cast("double").as("s2"))
+    val daily = dailyTyped(spark, dir, count(lit(1)).as("nd"))
+    val grand = valueMoments(spark, dir)
       .withColumn("gm", expr("s1 / n"))
       .withColumn("gsd", expr(
         "sqrt((n * s2 - s1 * s1) / (cast(n as double) * (n - 1)))"))
       .select(col("event_type"), col("gm"), col("gsd"))
     val z = daily.join(broadcast(grand), "event_type")
-      .withColumn("xbar", expr("cast(sc as double) / (100 * nd)"))
+      .withColumn("xbar", expr("cast(revc as double) / (100 * nd)"))
       .withColumn("z6", r6(expr(
         "(xbar - gm) / (gsd / sqrt(cast(nd as double)))")))
       .withColumn("violation", abs(col("z6")) > 3.0)
@@ -1635,20 +1539,8 @@ private[operators] trait StatsSeqOps extends StatsOpsBase {
   // (the forecast_holt shape); z comes from exact grand moments
   // broadcast into the fold. Emits each type's final state + alarm
   // count. ──
-  def statsCusumChart(spark: SparkSession, dir: String): DataFrame = {
-    val daily = ev(spark, dir).groupBy(col("event_type"), col("day"))
-      .agg((sum(col("value").cast("decimal(18,2)")) * 100).cast("long")
-        .as("yc"))
-    val mom = daily.groupBy(col("event_type"))
-      .agg(count(lit(1)).as("n"), sum(col("yc")).as("s1"),
-        sum(expr("CAST(yc AS DECIMAL(28,0)) * yc")).as("s2"))
-      .withColumn("mu", expr("cast(s1 as double) / n"))
-      .withColumn("sd", expr(
-        "sqrt(cast(n * s2 - CAST(s1 AS DECIMAL(28,0)) * s1 as double)" +
-          " / (cast(n as double) * (n - 1)))"))
-      .select(col("event_type"), col("mu"), col("sd"))
-    daily.join(broadcast(mom), "event_type")
-      .withColumn("z", expr("(yc - mu) / sd"))
+  def statsCusumChart(spark: SparkSession, dir: String): DataFrame =
+    dailyZ(spark, dir)
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("n_days"),
         sort_array(collect_list(struct(col("day"), col("z")))).as("s"))
@@ -1667,7 +1559,6 @@ private[operators] trait StatsSeqOps extends StatsOpsBase {
         r6(col("st.cn")).as("cusum_neg"),
         col("st.al").as("n_alarms"))
       .orderBy("event_type")
-  }
 
   // ── Page–Hinkley drift detector (δ=0.1, λ=5, standardized units) —
   // the ONLINE change detector a streaming ingest pipeline embeds
@@ -1677,20 +1568,8 @@ private[operators] trait StatsSeqOps extends StatsOpsBase {
   // (count, sum, m, min m, alarm) state advances in one sequential
   // fold per type; the recursion is replayed verbatim by the oracle's
   // recursive CTE. ──
-  def statsPageHinkley(spark: SparkSession, dir: String): DataFrame = {
-    val daily = ev(spark, dir).groupBy(col("event_type"), col("day"))
-      .agg((sum(col("value").cast("decimal(18,2)")) * 100).cast("long")
-        .as("yc"))
-    val mom = daily.groupBy(col("event_type"))
-      .agg(count(lit(1)).as("n"), sum(col("yc")).as("s1"),
-        sum(expr("CAST(yc AS DECIMAL(28,0)) * yc")).as("s2"))
-      .withColumn("mu", expr("cast(s1 as double) / n"))
-      .withColumn("sd", expr(
-        "sqrt(cast(n * s2 - CAST(s1 AS DECIMAL(28,0)) * s1 as double)" +
-          " / (cast(n as double) * (n - 1)))"))
-      .select(col("event_type"), col("mu"), col("sd"))
-    daily.join(broadcast(mom), "event_type")
-      .withColumn("z", expr("(yc - mu) / sd"))
+  def statsPageHinkley(spark: SparkSession, dir: String): DataFrame =
+    dailyZ(spark, dir)
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("n_days"),
         sort_array(collect_list(struct(col("day"), col("z")))).as("s"))
@@ -1715,7 +1594,6 @@ private[operators] trait StatsSeqOps extends StatsOpsBase {
           .as("drift_flag"),
         col("st.al").as("n_alarm_days"))
       .orderBy("event_type")
-  }
 
   // ── restricted mean survival time per hash arm — the censoring-robust
   // A/B effect measure when proportional hazards fails (stats_logrank
@@ -1824,9 +1702,7 @@ private[operators] trait StatsSeqOps extends StatsOpsBase {
   // reduces per (day, value) group. Both W and its χ² = m(k−1)·W are
   // ONE cast-first division from exact integers. ──
   def statsKendallW(spark: SparkSession, dir: String): DataFrame = {
-    val rev = ev(spark, dir).groupBy(col("day"), col("event_type"))
-      .agg((sum(col("value").cast("decimal(18,2)")) * 100).cast("long")
-        .as("revc"))
+    val rev = dailyTyped(spark, dir)
     val days = rev.select(col("day")).distinct()
     val types = rev.select(col("event_type")).distinct()
     val grid = days.crossJoin(broadcast(types))
@@ -1900,22 +1776,10 @@ private[operators] trait StatsSeqOps extends StatsOpsBase {
   // rank from a per-type (value, day) total order, so D⁺/D⁻ maxima
   // compare engine-identical doubles; the verdict compares 6-dp-snapped
   // D and critical value. Group-sized series frame, parallel by type. ──
-  def statsLilliefors(spark: SparkSession, dir: String): DataFrame = {
-    val daily = ev(spark, dir).groupBy(col("event_type"), col("day"))
-      .agg((sum(col("value").cast("decimal(18,2)")) * 100).cast("long")
-        .as("yc"))
-    val mom = daily.groupBy(col("event_type"))
-      .agg(count(lit(1)).as("n"), sum(col("yc")).as("s1"),
-        sum(expr("CAST(yc AS DECIMAL(28,0)) * yc")).as("s2"))
-      .withColumn("mu", expr("cast(s1 as double) / n"))
-      .withColumn("sd", expr(
-        "sqrt(cast(n * s2 - CAST(s1 AS DECIMAL(28,0)) * s1 as double)" +
-          " / (cast(n as double) * (n - 1)))"))
-      .select(col("event_type"), col("n"), col("mu"), col("sd"))
-    daily.join(broadcast(mom), "event_type")
-      .withColumn("z", expr("(yc - mu) / sd"))
+  def statsLilliefors(spark: SparkSession, dir: String): DataFrame =
+    dailyZ(spark, dir)
       .withColumn("rn", row_number().over(Window
-        .partitionBy(col("event_type")).orderBy(col("yc"), col("day"))))
+        .partitionBy(col("event_type")).orderBy(col("revc"), col("day"))))
       .withColumn("phi", expr(phiSql("z")))
       .groupBy(col("event_type"))
       .agg(first(col("n")).as("n_days"),
@@ -1929,7 +1793,6 @@ private[operators] trait StatsSeqOps extends StatsOpsBase {
         col("d6").as("d_stat"), col("crit6").as("crit_05"),
         (col("d6") > col("crit6")).as("normal_rejected"))
       .orderBy("event_type")
-  }
 
   // ── Anderson–Darling normality test per event type: the tail-weighted
   // companion of stats_lilliefors — AD integrates the squared ECDF−Φ gap
@@ -1985,21 +1848,9 @@ private[operators] trait StatsSeqOps extends StatsOpsBase {
       .orderBy("event_type")
 
   protected val seqKeys: Seq[Key] = Seq(
-    Key("stats_lilliefors", statsLilliefors, Some(duckDailyTyped +
-      s"""mo AS (SELECT event_type, CAST(count(*) AS BIGINT) AS n,
-         |    CAST(sum(revc) AS BIGINT) AS s1,
-         |    sum(CAST(revc AS DECIMAL(28,0)) * revc) AS s2
-         |  FROM daily GROUP BY 1),
-         |mm AS (SELECT event_type, n, CAST(s1 AS DOUBLE) / n AS mu,
-         |    sqrt(CAST(n * s2 - CAST(s1 AS DECIMAL(28,0)) * s1 AS DOUBLE)
-         |      / (CAST(n AS DOUBLE) * (n - 1))) AS sd
-         |  FROM mo),
-         |zz AS (SELECT d.event_type, mm.n,
-         |    (d.revc - mm.mu) / mm.sd AS z,
-         |    CAST(row_number() OVER (PARTITION BY d.event_type
-         |      ORDER BY d.revc, d.day) AS BIGINT) AS rn
-         |  FROM daily d JOIN mm USING (event_type)),
-         |pp AS (SELECT event_type, n, rn, ${phiSql("z")} AS phi FROM zz),
+    Key("stats_lilliefors", statsLilliefors, Some(
+      duckDailyTyped + duckZRanked +
+      s"""pp AS (SELECT event_type, n, rn, ${phiSql("z")} AS phi FROM zz),
          |ag AS (SELECT event_type, CAST(any_value(n) AS BIGINT) AS n_days,
          |    max(CAST(rn AS DOUBLE) / n - phi) AS d_plus,
          |    max(phi - CAST(rn - 1 AS DOUBLE) / n) AS d_minus
@@ -2296,14 +2147,8 @@ private[operators] trait StatsSeqOps extends StatsOpsBase {
         |  round(m - mn, 6) + 0.0 > 5.0 AS drift_flag,
         |  al AS n_alarm_days
         |FROM rec WHERE rn = n ORDER BY event_type""".stripMargin)),
-    Key("stats_cpk", statsCpk, Some(
-      """WITH g AS (
-        |  SELECT event_type, CAST(count(*) AS BIGINT) AS n,
-        |    CAST(sum(CAST("value" AS DECIMAL(18,2))) AS DOUBLE) AS s1,
-        |    CAST(sum(CAST("value" AS DECIMAL(18,2))
-        |             * CAST("value" AS DECIMAL(18,2))) AS DOUBLE) AS s2
-        |  FROM events GROUP BY 1),
-        |v AS (SELECT *, s1 / n AS m,
+    Key("stats_cpk", statsCpk, Some(duckValueMoments +
+      """v AS (SELECT *, s1 / n AS m,
         |        sqrt((n * s2 - s1 * s1)
         |          / (CAST(n AS DOUBLE) * (n - 1))) AS sd
         |      FROM g),
@@ -2498,14 +2343,8 @@ private[operators] trait StatsSeqOps extends StatsOpsBase {
         |    AS r_fit,
         |  round(CASE WHEN v > m THEN m / v END, 6) + 0.0 AS p_fit
         |FROM m ORDER BY event_type""".stripMargin)),
-    Key("stats_wasserstein", statsWasserstein, Some(
-      """WITH g AS (
-        |  SELECT "value" AS value,
-        |    sum(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END) AS a,
-        |    sum(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS b
-        |  FROM events WHERE event_type IN ('click', 'purchase')
-        |  GROUP BY 1),
-        |c AS (SELECT value,
+    Key("stats_wasserstein", statsWasserstein, Some(duckKsCounts +
+      """c AS (SELECT value,
         |        sum(a) OVER (ORDER BY value
         |          ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS ca,
         |        sum(b) OVER (ORDER BY value

@@ -75,11 +75,7 @@ private[operators] trait StatsTestOps extends StatsOpsBase {
   // one shuffle onto the value grid; the running counts parallelize per
   // range partition. ──
   def statsKs(spark: SparkSession, dir: String): DataFrame = {
-    val g = ev(spark, dir)
-      .filter(col("event_type").isin(KsTypeA, KsTypeB))
-      .groupBy(col("value"))
-      .agg(sum(when(col("event_type") === KsTypeA, 1L).otherwise(0L)).as("a"),
-        sum(when(col("event_type") === KsTypeB, 1L).otherwise(0L)).as("b"))
+    val g = ksCounts(spark, dir)
     // the cumulative pass runs over the GROUPED value grid (≤ |distinct
     // values| rows — the 2-dp metric domain), not the raw events; a
     // global ECDF over an unbounded domain would use the bucketed rank
@@ -109,12 +105,7 @@ private[operators] trait StatsTestOps extends StatsOpsBase {
   // are integer-or-dyadic (·.5) arithmetic — exact in both engines —
   // and rounded once at the boundary. ──
   def statsMannWhitney(spark: SparkSession, dir: String): DataFrame = {
-    val g = ev(spark, dir)
-      .filter(col("event_type").isin(KsTypeA, KsTypeB))
-      .groupBy(col("value"))
-      .agg(sum(when(col("event_type") === KsTypeA, 1L).otherwise(0L)).as("a"),
-        sum(when(col("event_type") === KsTypeB, 1L).otherwise(0L)).as("b"))
-      .withColumn("t", col("a") + col("b"))
+    val g = ksCounts(spark, dir)
     val byVal = Window.orderBy(col("value"))
       .rowsBetween(Window.unboundedPreceding, -1)
     val ranked = g.withColumn("cum_before",
@@ -153,17 +144,9 @@ private[operators] trait StatsTestOps extends StatsOpsBase {
   // two-sided p (df is reported so a reader can judge the t≈Φ step)
   // are single cast-first expressions. Only grid-sized windows run. ──
   def statsBrunnerMunzel(spark: SparkSession, dir: String): DataFrame = {
-    val g = ev(spark, dir)
-      .filter(col("event_type").isin(KsTypeA, KsTypeB))
-      .groupBy(col("value"))
-      .agg(sum(when(col("event_type") === KsTypeA, 1L).otherwise(0L))
-        .as("a"),
-        sum(when(col("event_type") === KsTypeB, 1L).otherwise(0L))
-          .as("b"))
-      .withColumn("t", col("a") + col("b"))
     val byVal = Window.orderBy(col("value"))
       .rowsBetween(Window.unboundedPreceding, -1)
-    val r = g
+    val r = ksCounts(spark, dir)
       .withColumn("f", coalesce(sum(col("t")).over(byVal), lit(0L)))
       .withColumn("fa", coalesce(sum(col("a")).over(byVal), lit(0L)))
       .withColumn("fb", coalesce(sum(col("b")).over(byVal), lit(0L)))
@@ -216,14 +199,7 @@ private[operators] trait StatsTestOps extends StatsOpsBase {
   // forms, the standard practical approximation, noted here). One
   // grid-sized window + one reduce; z and p are single expressions. ──
   def statsMoodScale(spark: SparkSession, dir: String): DataFrame = {
-    val g = ev(spark, dir)
-      .filter(col("event_type").isin(KsTypeA, KsTypeB))
-      .groupBy(col("value"))
-      .agg(sum(when(col("event_type") === KsTypeA, 1L).otherwise(0L))
-        .as("a"),
-        sum(when(col("event_type") === KsTypeB, 1L).otherwise(0L))
-          .as("b"))
-      .withColumn("t", col("a") + col("b"))
+    val g = ksCounts(spark, dir)
     val byVal = Window.orderBy(col("value"))
       .rowsBetween(Window.unboundedPreceding, -1)
     val r = g
@@ -295,12 +271,9 @@ private[operators] trait StatsTestOps extends StatsOpsBase {
   // explicit middle pair; endpoint picks are window-free argmax-by-
   // rank reads on the day-grid frame. ──
   def statsMedianCi(spark: SparkSession, dir: String): DataFrame = {
-    val daily = ev(spark, dir).groupBy(col("event_type"), col("day"))
-      .agg((sum(col("value").cast("decimal(18,2)")) * 100).cast("long")
-        .as("revc"))
     val wo = Window.partitionBy(col("event_type"))
       .orderBy(col("revc"), col("day"))
-    daily
+    dailyTyped(spark, dir)
       .withColumn("rn", row_number().over(wo).cast("long"))
       .withColumn("n",
         count(lit(1)).over(Window.partitionBy(col("event_type"))))
@@ -365,11 +338,6 @@ private[operators] trait StatsTestOps extends StatsOpsBase {
   // identical decimal sums, cast once to double, and run the same IEEE
   // arithmetic — r6 seals the boundary. ──
   def statsAnova(spark: SparkSession, dir: String): DataFrame = {
-    val g = ev(spark, dir).groupBy(col("event_type"))
-      .agg(count(lit(1)).as("n"),
-        sum(col("value").cast("decimal(18,2)")).cast("double").as("s1"),
-        sum(col("value").cast("decimal(18,2)") *
-          col("value").cast("decimal(18,2)")).cast("double").as("s2"))
     // The four cross-group reductions are DOUBLE sums over k rows, and
     // ss_between = sg − t²/nn cancels ~6 leading digits — an
     // engine-specific SUMMATION ORDER perturbs low bits that the
@@ -377,7 +345,7 @@ private[operators] trait StatsTestOps extends StatsOpsBase {
     // round-10 sf≈1 gate; the driver scales passed only by margin).
     // Fold the group rows in event_type order — the EMA device — so both
     // engines run the identical IEEE op sequence.
-    val folded = g.agg(sort_array(collect_list(struct(
+    val folded = valueMoments(spark, dir).agg(sort_array(collect_list(struct(
         col("event_type"), col("n"), col("s1"), col("s2")))).as("gs"))
       .select(size(col("gs")).cast("long").as("k"), expr(
         """aggregate(gs,
@@ -994,11 +962,7 @@ private[operators] trait StatsTestOps extends StatsOpsBase {
   // term to fixed-dp DECIMAL before summing, so the tiny cross-group sum
   // is associative too. χ²-distributed with k−1 df under H₀. ──
   def statsBartlett(spark: SparkSession, dir: String): DataFrame = {
-    val g = ev(spark, dir).groupBy(col("event_type"))
-      .agg(count(lit(1)).as("n"),
-        sum(col("value").cast("decimal(18,2)")).cast("double").as("s1"),
-        sum(col("value").cast("decimal(18,2)") *
-          col("value").cast("decimal(18,2)")).cast("double").as("s2"))
+    val g = valueMoments(spark, dir)
       .withColumn("vi",
         (col("n") * col("s2") - col("s1") * col("s1")) /
           (col("n").cast("double") * (col("n") - 1)))
@@ -1028,11 +992,7 @@ private[operators] trait StatsTestOps extends StatsOpsBase {
   // int64-exact; the single division and the standard
   // 0.147/0.33/0.474 magnitude fences branch on the 6-dp value. ──
   def statsCliffDelta(spark: SparkSession, dir: String): DataFrame = {
-    val g = ev(spark, dir)
-      .filter(col("event_type").isin(KsTypeA, KsTypeB))
-      .groupBy(col("value"))
-      .agg(sum(when(col("event_type") === KsTypeA, 1L).otherwise(0L)).as("a"),
-        sum(when(col("event_type") === KsTypeB, 1L).otherwise(0L)).as("b"))
+    val g = ksCounts(spark, dir)
     val byVal = Window.orderBy(col("value"))
       .rowsBetween(Window.unboundedPreceding, -1)
     val cum = g.withColumn("cb_before",
@@ -1121,11 +1081,7 @@ private[operators] trait StatsTestOps extends StatsOpsBase {
   // for the second pass. Welch–Satterthwaite df₂ comes from the same
   // Σ(1−wᵢ/W)²/(nᵢ−1) term as the denominator. ──
   def statsWelchAnova(spark: SparkSession, dir: String): DataFrame = {
-    val g = ev(spark, dir).groupBy(col("event_type"))
-      .agg(count(lit(1)).as("n"),
-        sum(col("value").cast("decimal(18,2)")).cast("double").as("s1"),
-        sum(col("value").cast("decimal(18,2)") *
-          col("value").cast("decimal(18,2)")).cast("double").as("s2"))
+    val g = valueMoments(spark, dir)
       .withColumn("xb", expr("s1 / n"))
       .withColumn("vi", expr(
         "(n * s2 - s1 * s1) / (cast(n as double) * (n - 1))"))
@@ -1165,12 +1121,7 @@ private[operators] trait StatsTestOps extends StatsOpsBase {
   // Var[T] = n₁n₂/(N(N−1))·Σ(sᵢ−s̄)², with Σsᵢ² = Σ S²/t per group.
   // One cumulative pass, grid-sized. ──
   def statsAnsariBradley(spark: SparkSession, dir: String): DataFrame = {
-    val g = ev(spark, dir)
-      .filter(col("event_type").isin(KsTypeA, KsTypeB))
-      .groupBy(col("value"))
-      .agg(sum(when(col("event_type") === KsTypeA, 1L).otherwise(0L)).as("a"),
-        sum(when(col("event_type") === KsTypeB, 1L).otherwise(0L)).as("b"))
-      .withColumn("t", col("a") + col("b"))
+    val g = ksCounts(spark, dir)
     val byVal = Window.orderBy(col("value"))
       .rowsBetween(Window.unboundedPreceding, -1)
     val tot = g.agg(sum(col("a")).as("n1"), sum(col("b")).as("n2"),
@@ -1219,13 +1170,8 @@ private[operators] trait StatsTestOps extends StatsOpsBase {
   // token-identical Φ polynomial, and the verdict branches on the 6-dp
   // p (both engines compare identical values). ──
   def statsTost(spark: SparkSession, dir: String): DataFrame = {
-    val g = ev(spark, dir)
+    val g = valueMoments(spark, dir)
       .filter(col("event_type").isin(KsTypeA, KsTypeB))
-      .groupBy(col("event_type"))
-      .agg(count(lit(1)).as("n"),
-        sum(col("value").cast("decimal(18,2)")).cast("double").as("s1"),
-        sum(col("value").cast("decimal(18,2)") *
-          col("value").cast("decimal(18,2)")).cast("double").as("s2"))
       .withColumn("m", expr("s1 / n"))
       .withColumn("vi", expr(
         "(n * s2 - s1 * s1) / (cast(n as double) * (n - 1))"))
@@ -1421,9 +1367,7 @@ private[operators] trait StatsTestOps extends StatsOpsBase {
   // two-sided p through the shared token-identical Φ polynomial are
   // single double expressions; the verdict compares the 6-dp p. ──
   def statsSignTest(spark: SparkSession, dir: String): DataFrame = {
-    val daily = ev(spark, dir).groupBy(col("event_type"), col("day"))
-      .agg((sum(col("value").cast("decimal(18,2)")) * 100).cast("long")
-        .as("revc"))
+    val daily = dailyTyped(spark, dir)
     daily.select(col("event_type"), col("day").as("d1"),
         col("revc").as("r1"))
       .join(daily.select(col("event_type"), col("day").as("d2"),
@@ -1921,14 +1865,8 @@ private[operators] trait StatsTestOps extends StatsOpsBase {
          |    / (CAST(x_a AS DOUBLE) / n_a) - 1, 6) + 0.0 AS rel_lift,
          |  round(${phiSql("zs")}, 6) + 0.0 AS p_b_beats_a
          |FROM z""".stripMargin)),
-    Key("stats_welch_anova", statsWelchAnova, Some(
-      """WITH g AS (
-        |  SELECT event_type, CAST(count(*) AS BIGINT) AS n,
-        |    CAST(sum(CAST("value" AS DECIMAL(18,2))) AS DOUBLE) AS s1,
-        |    CAST(sum(CAST("value" AS DECIMAL(18,2))
-        |             * CAST("value" AS DECIMAL(18,2))) AS DOUBLE) AS s2
-        |  FROM events GROUP BY 1),
-        |v AS (SELECT *, s1 / n AS xb,
+    Key("stats_welch_anova", statsWelchAnova, Some(duckValueMoments +
+      """v AS (SELECT *, s1 / n AS xb,
         |        (n * s2 - s1 * s1) / (CAST(n AS DOUBLE) * (n - 1)) AS vi
         |      FROM g),
         |w AS (SELECT *, CAST(CAST(round(n / vi, 9) AS DECIMAL(18,9))
@@ -1955,14 +1893,8 @@ private[operators] trait StatsTestOps extends StatsOpsBase {
         |  round((CAST(k AS DOUBLE) * k - 1)
         |    / (3 * CAST(lam AS DOUBLE)), 6) + 0.0 AS df2
         |FROM agg""".stripMargin)),
-    Key("stats_ansari_bradley", statsAnsariBradley, Some(
-      """WITH g AS (
-        |  SELECT "value" AS value,
-        |    sum(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END) AS a,
-        |    sum(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS b
-        |  FROM events WHERE event_type IN ('click', 'purchase')
-        |  GROUP BY 1),
-        |gt AS (SELECT *, a + b AS t FROM g),
+    Key("stats_ansari_bradley", statsAnsariBradley, Some(duckKsCounts +
+      """gt AS (SELECT *, a + b AS t FROM g),
         |tot AS (SELECT CAST(sum(a) AS BIGINT) AS n1,
         |          CAST(sum(b) AS BIGINT) AS n2,
         |          CAST(sum(a) + sum(b) AS BIGINT) AS nn FROM g),
@@ -2001,14 +1933,8 @@ private[operators] trait StatsTestOps extends StatsOpsBase {
         |    / sqrt(CAST(n1 AS DOUBLE) * n2
         |      / (CAST(nn AS DOUBLE) * (nn - 1)) * varsum), 6) + 0.0 AS z
         |FROM f""".stripMargin)),
-    Key("stats_cliff_delta", statsCliffDelta, Some(
-      """WITH g AS (
-        |  SELECT "value" AS value,
-        |    sum(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END) AS a,
-        |    sum(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS b
-        |  FROM events WHERE event_type IN ('click', 'purchase')
-        |  GROUP BY 1),
-        |c AS (SELECT *,
+    Key("stats_cliff_delta", statsCliffDelta, Some(duckKsCounts +
+      """c AS (SELECT *,
         |    COALESCE(sum(b) OVER (ORDER BY value
         |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
         |      AS cb_before,
@@ -2067,14 +1993,8 @@ private[operators] trait StatsTestOps extends StatsOpsBase {
         |  ta AS n_above, round(CAST(chi2d AS DOUBLE), 6) + 0.0 AS chi2,
         |  k - 1 AS df
         |FROM x, med""".stripMargin)),
-    Key("stats_bartlett", statsBartlett, Some(
-      """WITH g AS (
-        |  SELECT event_type, CAST(count(*) AS BIGINT) AS n,
-        |    CAST(sum(CAST("value" AS DECIMAL(18,2))) AS DOUBLE) AS s1,
-        |    CAST(sum(CAST("value" AS DECIMAL(18,2))
-        |             * CAST("value" AS DECIMAL(18,2))) AS DOUBLE) AS s2
-        |  FROM events GROUP BY 1),
-        |v AS (SELECT *, (n * s2 - s1 * s1)
+    Key("stats_bartlett", statsBartlett, Some(duckValueMoments +
+      """v AS (SELECT *, (n * s2 - s1 * s1)
         |        / (CAST(n AS DOUBLE) * (n - 1)) AS vi FROM g),
         |t AS (SELECT CAST(count(*) AS BIGINT) AS k,
         |        CAST(sum(n) AS BIGINT) AS nn,
@@ -2490,14 +2410,8 @@ private[operators] trait StatsTestOps extends StatsOpsBase {
         |       AS BIGINT) AS df,
         |  any_value(n.n) AS n
         |FROM grid, n""".stripMargin)),
-    Key("stats_ks", statsKs, Some(
-      """WITH g AS (
-        |  SELECT "value" AS value,
-        |    sum(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END) AS a,
-        |    sum(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS b
-        |  FROM events WHERE event_type IN ('click', 'purchase')
-        |  GROUP BY 1),
-        |c AS (SELECT *, sum(a) OVER w AS ca, sum(b) OVER w AS cb
+    Key("stats_ks", statsKs, Some(duckKsCounts +
+      """c AS (SELECT *, sum(a) OVER w AS ca, sum(b) OVER w AS cb
         |      FROM g WINDOW w AS (ORDER BY value
         |        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)),
         |t AS (SELECT CAST(sum(a) AS BIGINT) AS n1,
@@ -2510,14 +2424,8 @@ private[operators] trait StatsTestOps extends StatsOpsBase {
         |  round(d * sqrt(CAST(n1 AS DOUBLE) * n2 / (n1 + n2)), 6) + 0.0
         |    AS lambda
         |FROM d""".stripMargin)),
-    Key("stats_mannwhitney", statsMannWhitney, Some(
-      """WITH g AS (
-        |  SELECT "value" AS value,
-        |    sum(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END) AS a,
-        |    sum(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS b
-        |  FROM events WHERE event_type IN ('click', 'purchase')
-        |  GROUP BY 1),
-        |gt AS (SELECT *, a + b AS t FROM g),
+    Key("stats_mannwhitney", statsMannWhitney, Some(duckKsCounts +
+      """gt AS (SELECT *, a + b AS t FROM g),
         |r AS (SELECT *, COALESCE(sum(t) OVER (ORDER BY value
         |        ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
         |        AS cum_before

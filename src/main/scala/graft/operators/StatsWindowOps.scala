@@ -125,15 +125,8 @@ private[operators] trait StatsWindowOps extends StatsOpsBase {
   // Everything is integer cents until the /3-grid maps; the position
   // flag compares the close against the 6-dp pivot. ──
   def windowPivotPoints(spark: SparkSession, dir: String): DataFrame = {
-    val bars = ev(spark, dir)
-      .withColumn("vc",
-        expr("CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT)"))
-      .groupBy(col("event_type"), col("day"))
-      .agg(max(col("vc")).as("h"), min(col("vc")).as("l"),
-        max(struct(col("us"), col("event_id"), col("vc")))
-          .getField("vc").as("c"))
     val wOrd = Window.partitionBy(col("event_type")).orderBy(col("day"))
-    bars
+    ohlcBars(spark, dir)
       .withColumn("ph", lag(col("h"), 1).over(wOrd))
       .withColumn("pl", lag(col("l"), 1).over(wOrd))
       .withColumn("pc", lag(col("c"), 1).over(wOrd))
@@ -261,10 +254,7 @@ private[operators] trait StatsWindowOps extends StatsOpsBase {
   // 6 dp DECIMAL(12,6) and SQUARED IN DECIMAL so the mean is order-
   // independent; sqrt of one exact total closes it. ──
   def windowUlcer(spark: SparkSession, dir: String): DataFrame = {
-    val daily = ev(spark, dir).groupBy(col("event_type"), col("day"))
-      .agg((sum(col("value").cast("decimal(18,2)")) * 100).cast("long")
-        .as("revc"))
-    val peaked = daily.withColumn("peak",
+    val peaked = dailyTyped(spark, dir).withColumn("peak",
       max(col("revc")).over(Window.partitionBy(col("event_type"))
         .orderBy(col("day")).rowsBetween(Window.unboundedPreceding, 0)))
       .withColumn("dd6", expr("cast(round(100 * cast(peak - revc" +
@@ -291,13 +281,10 @@ private[operators] trait StatsWindowOps extends StatsOpsBase {
   // ranges (H = L) yield NULL, not 0/0. Per-type windows — parallel,
   // bounded state, the series frame is group-sized at any corpus. ──
   def windowStochastic(spark: SparkSession, dir: String): DataFrame = {
-    val daily = ev(spark, dir).groupBy(col("event_type"), col("day"))
-      .agg((sum(col("value").cast("decimal(18,2)")) * 100).cast("long")
-        .as("revc"))
     val wOrd = Window.partitionBy(col("event_type")).orderBy(col("day"))
     val w14 = wOrd.rowsBetween(-13, 0)
     val w3 = wOrd.rowsBetween(-2, 0)
-    daily
+    dailyTyped(spark, dir)
       .withColumn("rn", row_number().over(wOrd))
       .withColumn("l14", min(col("revc")).over(w14))
       .withColumn("h14", max(col("revc")).over(w14))
@@ -352,11 +339,8 @@ private[operators] trait StatsWindowOps extends StatsOpsBase {
   // provably identical inputs in both engines. Per-type windows; the
   // series frame is day-grid-sized at any corpus. ──
   def windowMacd(spark: SparkSession, dir: String): DataFrame = {
-    val daily = ev(spark, dir).groupBy(col("event_type"), col("day"))
-      .agg((sum(col("value").cast("decimal(18,2)")) * 100).cast("long")
-        .as("revc"))
     val wOrd = Window.partitionBy(col("event_type")).orderBy(col("day"))
-    val staged = daily
+    val staged = dailyTyped(spark, dir)
       .withColumn("h12",
         collect_list(col("revc").cast("double")).over(
           wOrd.rowsBetween(-11, 0)))
@@ -385,15 +369,8 @@ private[operators] trait StatsWindowOps extends StatsOpsBase {
   // integer true range. Bands and flags compare 6-dp-snapped values;
   // entity-partitioned, full frames only. ──
   def windowKeltner(spark: SparkSession, dir: String): DataFrame = {
-    val bars = ev(spark, dir)
-      .withColumn("vc",
-        expr("CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT)"))
-      .groupBy(col("event_type"), col("day"))
-      .agg(max(col("vc")).as("h"), min(col("vc")).as("l"),
-        max(struct(col("us"), col("event_id"), col("vc")))
-          .getField("vc").as("c"))
     val wOrd = Window.partitionBy(col("event_type")).orderBy(col("day"))
-    bars
+    ohlcBars(spark, dir)
       .withColumn("rn", row_number().over(wOrd))
       .withColumn("pc", lag(col("c"), 1).over(wOrd))
       .withColumn("tr", greatest(col("h") - col("l"),
@@ -428,15 +405,8 @@ private[operators] trait StatsWindowOps extends StatsOpsBase {
   // real series length. Open is the previous close (first bar: its own
   // close) since the bars carry no session open. ──
   def windowHeikinAshi(spark: SparkSession, dir: String): DataFrame = {
-    val bars = ev(spark, dir)
-      .withColumn("vc",
-        expr("CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT)"))
-      .groupBy(col("event_type"), col("day"))
-      .agg(max(col("vc")).as("h"), min(col("vc")).as("l"),
-        max(struct(col("us"), col("event_id"), col("vc")))
-          .getField("vc").as("c"))
     val wOrd = Window.partitionBy(col("event_type")).orderBy(col("day"))
-    bars
+    ohlcBars(spark, dir)
       .withColumn("rn", row_number().over(wOrd))
       .withColumn("o", coalesce(lag(col("c"), 1).over(wOrd), col("c")))
       .withColumn("hc", expr("cast(o + h + l + c as double) / 4"))
@@ -470,15 +440,8 @@ private[operators] trait StatsWindowOps extends StatsOpsBase {
   // 14-row mean is engine-identical. Entity-partitioned windows; only
   // full frames emit. ──
   def windowAtr(spark: SparkSession, dir: String): DataFrame = {
-    val bars = ev(spark, dir)
-      .withColumn("vc",
-        expr("CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT)"))
-      .groupBy(col("event_type"), col("day"))
-      .agg(max(col("vc")).as("h"), min(col("vc")).as("l"),
-        max(struct(col("us"), col("event_id"), col("vc")))
-          .getField("vc").as("c"))
     val wOrd = Window.partitionBy(col("event_type")).orderBy(col("day"))
-    val withTr = bars
+    val withTr = ohlcBars(spark, dir)
       .withColumn("rn", row_number().over(wOrd))
       .withColumn("pc", lag(col("c"), 1).over(wOrd))
       .withColumn("tr", greatest(col("h") - col("l"),
@@ -506,16 +469,9 @@ private[operators] trait StatsWindowOps extends StatsOpsBase {
   // channels (HH = LL) are skipped on the INTEGER compare, so both
   // engines drop identical rows. ──
   def windowWilliamsR(spark: SparkSession, dir: String): DataFrame = {
-    val bars = ev(spark, dir)
-      .withColumn("vc",
-        expr("CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT)"))
-      .groupBy(col("event_type"), col("day"))
-      .agg(max(col("vc")).as("h"), min(col("vc")).as("l"),
-        max(struct(col("us"), col("event_id"), col("vc")))
-          .getField("vc").as("c"))
     val wOrd = Window.partitionBy(col("event_type")).orderBy(col("day"))
     val w14 = wOrd.rowsBetween(-13, 0)
-    bars
+    ohlcBars(spark, dir)
       .withColumn("rn", row_number().over(wOrd))
       .withColumn("hh", max(col("h")).over(w14))
       .withColumn("ll", min(col("l")).over(w14))
@@ -540,17 +496,9 @@ private[operators] trait StatsWindowOps extends StatsOpsBase {
   // at the boundary. Unchanged-tpc bars feed neither pool (the
   // classical convention), and both engines decide that on integers. ──
   def windowMfi(spark: SparkSession, dir: String): DataFrame = {
-    val bars = ev(spark, dir)
-      .withColumn("vc",
-        expr("CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT)"))
-      .groupBy(col("event_type"), col("day"))
-      .agg(max(col("vc")).as("h"), min(col("vc")).as("l"),
-        max(struct(col("us"), col("event_id"), col("vc")))
-          .getField("vc").as("c"),
-        count(lit(1)).as("vol"))
     val wOrd = Window.partitionBy(col("event_type")).orderBy(col("day"))
     val w14 = wOrd.rowsBetween(-13, 0)
-    bars
+    ohlcBars(spark, dir)
       .withColumn("tpc", col("h") + col("l") + col("c"))
       .withColumn("rn", row_number().over(wOrd))
       .withColumn("ptpc", lag(col("tpc"), 1).over(wOrd))
@@ -583,17 +531,10 @@ private[operators] trait StatsWindowOps extends StatsOpsBase {
   // (tenkan vs kijun) compares 6-dp-snapped values. Entity-partitioned
   // windows, full 26-bar frames only. ──
   def windowIchimoku(spark: SparkSession, dir: String): DataFrame = {
-    val bars = ev(spark, dir)
-      .withColumn("vc",
-        expr("CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT)"))
-      .groupBy(col("event_type"), col("day"))
-      .agg(max(col("vc")).as("h"), min(col("vc")).as("l"),
-        max(struct(col("us"), col("event_id"), col("vc")))
-          .getField("vc").as("c"))
     val wOrd = Window.partitionBy(col("event_type")).orderBy(col("day"))
     val w9 = wOrd.rowsBetween(-8, 0)
     val w26 = wOrd.rowsBetween(-25, 0)
-    bars
+    ohlcBars(spark, dir)
       .withColumn("rn", row_number().over(wOrd))
       .withColumn("th", max(col("h")).over(w9))
       .withColumn("tl", min(col("l")).over(w9))
@@ -619,16 +560,9 @@ private[operators] trait StatsWindowOps extends StatsOpsBase {
   // map, and the exit flag compares the integer close against the
   // 6-dp-snapped stop. Entity-partitioned, full frames only. ──
   def windowChandelierExit(spark: SparkSession, dir: String): DataFrame = {
-    val bars = ev(spark, dir)
-      .withColumn("vc",
-        expr("CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT)"))
-      .groupBy(col("event_type"), col("day"))
-      .agg(max(col("vc")).as("h"), min(col("vc")).as("l"),
-        max(struct(col("us"), col("event_id"), col("vc")))
-          .getField("vc").as("c"))
     val wOrd = Window.partitionBy(col("event_type")).orderBy(col("day"))
     val w22 = wOrd.rowsBetween(-21, 0)
-    bars
+    ohlcBars(spark, dir)
       .withColumn("rn", row_number().over(wOrd))
       .withColumn("pc", lag(col("c"), 1).over(wOrd))
       .withColumn("tr", greatest(col("h") - col("l"),
@@ -657,12 +591,9 @@ private[operators] trait StatsWindowOps extends StatsOpsBase {
   // row arithmetic; the only doubles are the two final 100·(14−ps)/14
   // maps. Entity-partitioned, full frames only. ──
   def windowAroon(spark: SparkSession, dir: String): DataFrame = {
-    val daily = ev(spark, dir).groupBy(col("event_type"), col("day"))
-      .agg((sum(col("value").cast("decimal(18,2)")) * 100).cast("long")
-        .as("revc"))
     val wOrd = Window.partitionBy(col("event_type")).orderBy(col("day"))
     val w14 = wOrd.rowsBetween(-13, 0)
-    daily
+    dailyTyped(spark, dir)
       .withColumn("rn", row_number().over(wOrd).cast("long"))
       .withColumn("hi",
         max(struct(col("revc"), col("rn"))).over(w14))
@@ -693,15 +624,8 @@ private[operators] trait StatsWindowOps extends StatsOpsBase {
   // are exact integers, so the running sum is int64 end to end; one
   // keyed aggregation + one entity-partitioned window. ──
   def windowObv(spark: SparkSession, dir: String): DataFrame = {
-    val bars = ev(spark, dir)
-      .withColumn("vc",
-        expr("CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT)"))
-      .groupBy(col("event_type"), col("day"))
-      .agg(count(lit(1)).as("vol"),
-        max(struct(col("us"), col("event_id"), col("vc")))
-          .getField("vc").as("c"))
     val wOrd = Window.partitionBy(col("event_type")).orderBy(col("day"))
-    bars
+    ohlcBars(spark, dir)
       .withColumn("pc", lag(col("c"), 1).over(wOrd))
       .withColumn("flow",
         when(col("pc").isNull, 0L)
@@ -754,16 +678,14 @@ private[operators] trait StatsWindowOps extends StatsOpsBase {
   // sequential part). Emits the LAST bar per type with its full
   // adaptive state. ──
   def windowKama(spark: SparkSession, dir: String): DataFrame = {
-    val daily = ev(spark, dir).groupBy(col("event_type"), col("day"))
-      .agg((sum(col("value").cast("decimal(18,2)")) * 100).cast("long")
-        .as("yc"))
     val wOrd = Window.partitionBy(col("event_type")).orderBy(col("day"))
-    val er = daily
+    val er = dailyTyped(spark, dir)
       .withColumn("rn", row_number().over(wOrd))
       .withColumn("net",
-        abs(col("yc") - lag(col("yc"), 10).over(wOrd)))
-      .withColumn("vol", sum(abs(col("yc") - lag(col("yc"), 1).over(wOrd)))
-        .over(wOrd.rowsBetween(-9, 0)))
+        abs(col("revc") - lag(col("revc"), 10).over(wOrd)))
+      .withColumn("vol",
+        sum(abs(col("revc") - lag(col("revc"), 1).over(wOrd)))
+          .over(wOrd.rowsBetween(-9, 0)))
       // the smoothing constant is scb², squared by explicit multiply:
       // pow(x, 2) is a libm call whose low bit Java and C may disagree
       // on, x*x is a single IEEE multiply — bit-identical everywhere
@@ -774,16 +696,16 @@ private[operators] trait StatsWindowOps extends StatsOpsBase {
       .withColumn("sc", expr("scb * scb"))
     er.groupBy(col("event_type"))
       .agg(count(lit(1)).as("n_days"),
-        sort_array(collect_list(struct(col("day"), col("yc"), col("sc"),
+        sort_array(collect_list(struct(col("day"), col("revc"), col("sc"),
           col("rn")))).as("s"))
       .filter(col("n_days") >= 11)
       .withColumn("kama", expr(
         """aggregate(
           |  filter(s, x -> x.rn >= 12),
-          |  CAST(s[10].yc AS DOUBLE),
-          |  (k, x) -> k + x.sc * (x.yc - k))""".stripMargin))
+          |  CAST(s[10].revc AS DOUBLE),
+          |  (k, x) -> k + x.sc * (x.revc - k))""".stripMargin))
       .select(col("event_type"), col("n_days"),
-        r6(expr("element_at(s, -1).yc / 100.0D")).as("last_close"),
+        r6(expr("element_at(s, -1).revc / 100.0D")).as("last_close"),
         r6(expr("element_at(s, -1).sc")).as("last_sc"),
         r6(expr("kama / 100.0D")).as("kama"))
       .orderBy("event_type")
@@ -801,12 +723,9 @@ private[operators] trait StatsWindowOps extends StatsOpsBase {
   // on the CURRENT row's mean, not its own. Per-type windows
   // parallelize; the daily frame is group-sized at any corpus. ──
   def windowCci(spark: SparkSession, dir: String): DataFrame = {
-    val daily = ev(spark, dir).groupBy(col("event_type"), col("day"))
-      .agg((sum(col("value").cast("decimal(18,2)")) * 100).cast("long")
-        .as("revc"))
     val wOrd = Window.partitionBy(col("event_type")).orderBy(col("day"))
     val w20 = wOrd.rowsBetween(-19, 0)
-    daily
+    dailyTyped(spark, dir)
       .withColumn("rn", row_number().over(wOrd))
       .withColumn("s", sum(col("revc")).over(w20))
       .withColumn("h", collect_list(col("revc")).over(w20))
@@ -832,12 +751,9 @@ private[operators] trait StatsWindowOps extends StatsOpsBase {
   // min/max over cents, flags are integer comparisons, the two dollar
   // conversions are the only doubles. ──
   def windowDonchian(spark: SparkSession, dir: String): DataFrame = {
-    val daily = ev(spark, dir).groupBy(col("event_type"), col("day"))
-      .agg((sum(col("value").cast("decimal(18,2)")) * 100).cast("long")
-        .as("revc"))
     val wOrd = Window.partitionBy(col("event_type")).orderBy(col("day"))
     val w20x = wOrd.rowsBetween(-20, -1)
-    daily
+    dailyTyped(spark, dir)
       .withColumn("rn", row_number().over(wOrd))
       .withColumn("up", max(col("revc")).over(w20x))
       .withColumn("lo", min(col("revc")).over(w20x))
@@ -966,17 +882,8 @@ private[operators] trait StatsWindowOps extends StatsOpsBase {
         |  round(CAST(cum_pv AS DOUBLE) / (100 * cum_vol), 6) + 0.0
         |    AS cum_vwap
         |FROM c ORDER BY event_type, day""".stripMargin)),
-    Key("window_atr", windowAtr, Some(
-      """WITH e AS (
-        |  SELECT event_type, CAST(CAST(ts AS TIMESTAMP) AS DATE) AS day,
-        |    epoch_us(CAST(ts AS TIMESTAMP)) AS us, event_id,
-        |    CAST(CAST("value" AS DECIMAL(18,2)) * 100 AS BIGINT) AS vc
-        |  FROM events),
-        |bars AS (SELECT event_type, day,
-        |    CAST(max(vc) AS BIGINT) AS h, CAST(min(vc) AS BIGINT) AS l,
-        |    max({'us': us, 'event_id': event_id, 'vc': vc}).vc AS c
-        |  FROM e GROUP BY 1, 2),
-        |tr AS (SELECT *,
+    Key("window_atr", windowAtr, Some(duckBars +
+      """tr AS (SELECT *,
         |    row_number() OVER (PARTITION BY event_type ORDER BY day)
         |      AS rn,
         |    lag(c) OVER (PARTITION BY event_type ORDER BY day) AS pc
@@ -994,17 +901,8 @@ private[operators] trait StatsWindowOps extends StatsOpsBase {
         |  round(CAST(tr AS DOUBLE) / 100, 6) + 0.0 AS true_range,
         |  round(CAST(atr_c AS DOUBLE) / 1400, 6) + 0.0 AS atr14
         |FROM t3 WHERE rn >= 15 ORDER BY event_type, day""".stripMargin)),
-    Key("window_ichimoku", windowIchimoku, Some(
-      """WITH e AS (
-        |  SELECT event_type, CAST(CAST(ts AS TIMESTAMP) AS DATE) AS day,
-        |    epoch_us(CAST(ts AS TIMESTAMP)) AS us, event_id,
-        |    CAST(CAST("value" AS DECIMAL(18,2)) * 100 AS BIGINT) AS vc
-        |  FROM events),
-        |bars AS (SELECT event_type, day,
-        |    CAST(max(vc) AS BIGINT) AS h, CAST(min(vc) AS BIGINT) AS l,
-        |    max({'us': us, 'event_id': event_id, 'vc': vc}).vc AS c
-        |  FROM e GROUP BY 1, 2),
-        |w AS (SELECT *, row_number() OVER wo AS rn,
+    Key("window_ichimoku", windowIchimoku, Some(duckBars +
+      """w AS (SELECT *, row_number() OVER wo AS rn,
         |    max(h) OVER w9 AS th, min(l) OVER w9 AS tl,
         |    max(h) OVER w26 AS kh, min(l) OVER w26 AS kl
         |  FROM bars
@@ -1024,17 +922,8 @@ private[operators] trait StatsWindowOps extends StatsOpsBase {
         |    + CAST(kh + kl AS DOUBLE) / 200) / 2, 6) + 0.0 AS senkou_a,
         |  t6 > k6 AS bullish_cross
         |FROM f ORDER BY event_type, day""".stripMargin)),
-    Key("window_chandelier_exit", windowChandelierExit, Some(
-      """WITH e AS (
-        |  SELECT event_type, CAST(CAST(ts AS TIMESTAMP) AS DATE) AS day,
-        |    epoch_us(CAST(ts AS TIMESTAMP)) AS us, event_id,
-        |    CAST(CAST("value" AS DECIMAL(18,2)) * 100 AS BIGINT) AS vc
-        |  FROM events),
-        |bars AS (SELECT event_type, day,
-        |    CAST(max(vc) AS BIGINT) AS h, CAST(min(vc) AS BIGINT) AS l,
-        |    max({'us': us, 'event_id': event_id, 'vc': vc}).vc AS c
-        |  FROM e GROUP BY 1, 2),
-        |t1 AS (SELECT *, row_number() OVER wo AS rn, lag(c) OVER wo AS pc
+    Key("window_chandelier_exit", windowChandelierExit, Some(duckBars +
+      """t1 AS (SELECT *, row_number() OVER wo AS rn, lag(c) OVER wo AS pc
         |  FROM bars WINDOW wo AS (PARTITION BY event_type ORDER BY day)),
         |t2 AS (SELECT *,
         |    greatest(h - l, abs(h - pc), abs(l - pc)) AS tr FROM t1),
@@ -1053,17 +942,8 @@ private[operators] trait StatsWindowOps extends StatsOpsBase {
         |  stop6 AS chandelier_stop,
         |  CAST(c AS DOUBLE) / 100 < stop6 AS exit_long
         |FROM f ORDER BY event_type, day""".stripMargin)),
-    Key("window_williams_r", windowWilliamsR, Some(
-      """WITH e AS (
-        |  SELECT event_type, CAST(CAST(ts AS TIMESTAMP) AS DATE) AS day,
-        |    epoch_us(CAST(ts AS TIMESTAMP)) AS us, event_id,
-        |    CAST(CAST("value" AS DECIMAL(18,2)) * 100 AS BIGINT) AS vc
-        |  FROM events),
-        |bars AS (SELECT event_type, day,
-        |    CAST(max(vc) AS BIGINT) AS h, CAST(min(vc) AS BIGINT) AS l,
-        |    max({'us': us, 'event_id': event_id, 'vc': vc}).vc AS c
-        |  FROM e GROUP BY 1, 2),
-        |w AS (SELECT *,
+    Key("window_williams_r", windowWilliamsR, Some(duckBars +
+      """w AS (SELECT *,
         |    row_number() OVER wo AS rn,
         |    max(h) OVER w14 AS hh, min(l) OVER w14 AS ll
         |  FROM bars
@@ -1166,17 +1046,8 @@ private[operators] trait StatsWindowOps extends StatsOpsBase {
          |SELECT event_type, day, macd, signal,
          |  round(macd - signal, 6) + 0.0 AS histogram
          |FROM f ORDER BY event_type, day""".stripMargin)),
-    Key("window_keltner", windowKeltner, Some(
-      s"""WITH e AS (
-         |  SELECT event_type, CAST(CAST(ts AS TIMESTAMP) AS DATE) AS day,
-         |    epoch_us(CAST(ts AS TIMESTAMP)) AS us, event_id,
-         |    CAST(CAST("value" AS DECIMAL(18,2)) * 100 AS BIGINT) AS vc
-         |  FROM events),
-         |bars AS (SELECT event_type, day,
-         |    CAST(max(vc) AS BIGINT) AS h, CAST(min(vc) AS BIGINT) AS l,
-         |    max({'us': us, 'event_id': event_id, 'vc': vc}).vc AS c
-         |  FROM e GROUP BY 1, 2),
-         |t1 AS (SELECT *, row_number() OVER wo AS rn,
+    Key("window_keltner", windowKeltner, Some(duckBars +
+      s"""t1 AS (SELECT *, row_number() OVER wo AS rn,
          |    lag(c) OVER wo AS pc, CAST(h + l + c AS DOUBLE) / 3 AS tpd
          |  FROM bars
          |  WINDOW wo AS (PARTITION BY event_type ORDER BY day)),
@@ -1203,17 +1074,8 @@ private[operators] trait StatsWindowOps extends StatsOpsBase {
          |  CAST(c AS DOUBLE) / 100 > up6 AS above_upper,
          |  CAST(c AS DOUBLE) / 100 < lo6 AS below_lower
          |FROM t5 ORDER BY event_type, day""".stripMargin)),
-    Key("window_heikin_ashi", windowHeikinAshi, Some(
-      """WITH e AS (
-        |  SELECT event_type, CAST(CAST(ts AS TIMESTAMP) AS DATE) AS day,
-        |    epoch_us(CAST(ts AS TIMESTAMP)) AS us, event_id,
-        |    CAST(CAST("value" AS DECIMAL(18,2)) * 100 AS BIGINT) AS vc
-        |  FROM events),
-        |bars AS (SELECT event_type, day,
-        |    CAST(max(vc) AS BIGINT) AS h, CAST(min(vc) AS BIGINT) AS l,
-        |    max({'us': us, 'event_id': event_id, 'vc': vc}).vc AS c
-        |  FROM e GROUP BY 1, 2),
-        |t1 AS (SELECT *, row_number() OVER wo AS rn,
+    Key("window_heikin_ashi", windowHeikinAshi, Some(duckBars +
+      """t1 AS (SELECT *, row_number() OVER wo AS rn,
         |    COALESCE(lag(c) OVER wo, c) AS o,
         |    first_value(c) OVER wo2 AS c1
         |  FROM bars
@@ -1455,17 +1317,8 @@ private[operators] trait StatsWindowOps extends StatsOpsBase {
         |      FROM p)
         |SELECT event_id, user_id, s, s > 5 AS alarm
         |FROM s ORDER BY user_id, event_id""".stripMargin)),
-    Key("window_pivot_points", windowPivotPoints, Some(
-      """WITH e AS (
-        |  SELECT event_type, CAST(CAST(ts AS TIMESTAMP) AS DATE) AS day,
-        |    epoch_us(CAST(ts AS TIMESTAMP)) AS us, event_id,
-        |    CAST(CAST("value" AS DECIMAL(18,2)) * 100 AS BIGINT) AS vc
-        |  FROM events),
-        |bars AS (SELECT event_type, day,
-        |    CAST(max(vc) AS BIGINT) AS h, CAST(min(vc) AS BIGINT) AS l,
-        |    max({'us': us, 'event_id': event_id, 'vc': vc}).vc AS c
-        |  FROM e GROUP BY 1, 2),
-        |p0 AS (SELECT *,
+    Key("window_pivot_points", windowPivotPoints, Some(duckBars +
+      """p0 AS (SELECT *,
         |    lag(h) OVER wo AS ph, lag(l) OVER wo AS pl,
         |    lag(c) OVER wo AS pc
         |  FROM bars

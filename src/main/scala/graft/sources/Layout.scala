@@ -41,39 +41,59 @@ object Layout {
   def readEventsByDay(spark: SparkSession, path: String): DataFrame =
     spark.read.parquet(path)
 
+  /** The content-keyed ([[Fingerprint]]) warehouse path of `dir`'s
+    * events store `name`, written by `write(path)` unless complete —
+    * the offline-layout-job discipline of [[Bucketed.ensure]]: written
+    * once, read by every later query. Completion is the `_SUCCESS` of
+    * the LAST-written part (`last`, relative to the store root; empty
+    * for a one-part store), never the directory's existence: the
+    * committer creates the directory when the job STARTS, so a crash
+    * mid-write leaves a partial store that a bare-existence check would
+    * serve forever. Every `write` uses overwrite mode, so the retry
+    * replaces whatever the crash left. */
+  private def ensureStore(spark: SparkSession, dir: String, name: String,
+      last: String = "")(write: String => Unit): String = {
+    val wh = spark.conf.get("spark.sql.warehouse.dir")
+    val path = s"$wh/graft_events_${name}_${Fingerprint.tag(dir, "events")}"
+    val done = new org.apache.hadoop.fs.Path(
+      Seq(path, last, "_SUCCESS").filter(_.nonEmpty).mkString("/"))
+    val fs = done.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!fs.exists(done)) write(path)
+    path
+  }
+
+  /** Create `file` holding `bytes` unless it exists — the extra member
+    * a store fixture adds after its Spark write, checked on its own so a
+    * crash between the two cannot leave a store without it. */
+  private def addFileOnce(spark: SparkSession, file: String,
+      bytes: Array[Byte]): Unit = {
+    val p = new org.apache.hadoop.fs.Path(file)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!fs.exists(p)) {
+      val out = fs.create(p)
+      try out.write(bytes) finally out.close()
+    }
+  }
+
   /** Lazily materialize the day-partitioned events copy for `dir`
     * (content-keyed via [[Fingerprint]], same discipline as
     * [[Bucketed.ensure]]: an offline layout job writes once, every
     * subsequent query reads the pruned store); returns its path. */
-  def ensureEventsByDay(spark: SparkSession, dir: String): String = {
-    val tag = Fingerprint.tag(dir, "events")
-    val wh = spark.conf.get("spark.sql.warehouse.dir")
-    val path = s"$wh/graft_events_byday_$tag"
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) writeEventsByDay(Tables.events(spark, dir), path)
-    path
-  }
+  def ensureEventsByDay(spark: SparkSession, dir: String): String =
+    ensureStore(spark, dir, "byday")(
+      writeEventsByDay(Tables.events(spark, dir), _))
 
   /** Line-delimited-JSON twin of the events table (content-keyed derived
     * store, written once) — the interchange format text corpora actually
     * ship in. `ts` is serialized as the µs epoch long: JSON has no
     * timestamp type, and an explicit integer survives any reader without
     * parser/locale drift. */
-  def ensureEventsJsonl(spark: SparkSession, dir: String): String = {
-    val tag = Fingerprint.tag(dir, "events")
-    val wh = spark.conf.get("spark.sql.warehouse.dir")
-    val path = s"$wh/graft_events_jsonl_$tag"
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) {
-      import org.apache.spark.sql.functions.{col, unix_micros}
+  def ensureEventsJsonl(spark: SparkSession, dir: String): String =
+    ensureStore(spark, dir, "jsonl") { path =>
       Tables.events(spark, dir)
         .withColumn("ts", unix_micros(col("ts")))
-        .write.json(path)
+        .write.mode("overwrite").json(path)
     }
-    path
-  }
 
   /** Read the JSONL store with an EXPLICIT schema — at corpus scale,
     * schema inference is a full extra pass over the data and a
@@ -94,20 +114,12 @@ object Layout {
     * ORC source. `ts` ships as the µs epoch long (the
     * [[ensureEventsJsonl]] rationale: no timestamp-vintage or tz drift
     * across writers); content-keyed, written once. */
-  def ensureEventsOrc(spark: SparkSession, dir: String): String = {
-    val tag = Fingerprint.tag(dir, "events")
-    val wh = spark.conf.get("spark.sql.warehouse.dir")
-    val path = s"$wh/graft_events_orc_$tag"
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) {
-      import org.apache.spark.sql.functions.{col, unix_micros}
+  def ensureEventsOrc(spark: SparkSession, dir: String): String =
+    ensureStore(spark, dir, "orc") { path =>
       Tables.events(spark, dir)
         .withColumn("ts", unix_micros(col("ts")))
-        .write.orc(path)
+        .write.mode("overwrite").orc(path)
     }
-    path
-  }
 
   /** ORC is self-describing (schema in the file footer, like parquet),
     * so no explicit schema is needed — the format carries its types. */
@@ -143,13 +155,8 @@ object Layout {
     * Completion marker = the DELETES' _SUCCESS (written last): a crash
     * after `data/` but before `deletes/` must not serve an undeleted
     * store. */
-  def ensureEventsMor(spark: SparkSession, dir: String): String = {
-    val tag = Fingerprint.tag(dir, "events")
-    val wh = spark.conf.get("spark.sql.warehouse.dir")
-    val path = s"$wh/graft_events_mor_$tag"
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(new org.apache.hadoop.fs.Path(s"$path/deletes/_SUCCESS"))) {
+  def ensureEventsMor(spark: SparkSession, dir: String): String =
+    ensureStore(spark, dir, "mor", "deletes") { path =>
       Tables.events(spark, dir)
         .repartition(8, col("event_id"))
         .write.mode("overwrite").parquet(s"$path/data")
@@ -160,8 +167,6 @@ object Layout {
         .select(col("file"), col("pos"))
         .write.mode("overwrite").parquet(s"$path/deletes")
     }
-    path
-  }
 
   /** Bloom-index sizing for [[ensureEventsBloomIdx]]: 8192 bits / 4
     * probes per key. Files are clustered by `user_id` (hash
@@ -190,13 +195,8 @@ object Layout {
     * key's 4 probe bits against the index and opens ONLY passing files.
     * Index completion marker is written last, same rule as the MOR
     * store. */
-  def ensureEventsBloomIdx(spark: SparkSession, dir: String): String = {
-    val tag = Fingerprint.tag(dir, "events")
-    val wh = spark.conf.get("spark.sql.warehouse.dir")
-    val path = s"$wh/graft_events_bloomidx_$tag"
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(new org.apache.hadoop.fs.Path(s"$path/index/_SUCCESS"))) {
+  def ensureEventsBloomIdx(spark: SparkSession, dir: String): String =
+    ensureStore(spark, dir, "bloomidx", "index") { path =>
       Tables.events(spark, dir)
         .repartition(16, col("user_id"))
         .write.mode("overwrite").parquet(s"$path/data")
@@ -209,8 +209,6 @@ object Layout {
         .distinct()
         .write.mode("overwrite").parquet(s"$path/index")
     }
-    path
-  }
 
   /** MIN/MAX ZONE-MAP store: `data/` range-clustered by `value` into 16
     * files (range clustering is what makes per-file [min,max] narrow —
@@ -221,13 +219,8 @@ object Layout {
     * member of the skipping family (bloom = point, Z-order = 2-dim,
     * day-partition = time). Mergeable by append: a new file adds one
     * stats row. Stats written last = completion marker. */
-  def ensureEventsMinMax(spark: SparkSession, dir: String): String = {
-    val tag = Fingerprint.tag(dir, "events")
-    val wh = spark.conf.get("spark.sql.warehouse.dir")
-    val path = s"$wh/graft_events_minmax_$tag"
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(new org.apache.hadoop.fs.Path(s"$path/stats/_SUCCESS"))) {
+  def ensureEventsMinMax(spark: SparkSession, dir: String): String =
+    ensureStore(spark, dir, "minmax", "stats") { path =>
       Tables.events(spark, dir)
         .repartitionByRange(16, col("value"))
         .write.mode("overwrite").parquet(s"$path/data")
@@ -236,8 +229,6 @@ object Layout {
         .agg(min(col("value")).as("lo"), max(col("value")).as("hi"))
         .write.mode("overwrite").parquet(s"$path/stats")
     }
-    path
-  }
 
   /** PARTITION-EVOLUTION store: generation 1 (events before `splitUs`)
     * is day-partitioned, generation 2 (the rest) is MONTH-partitioned —
@@ -247,13 +238,8 @@ object Layout {
     * scheme ([[graft.operators.RelationalOps.scanPartitionEvolution]]).
     * Marker = gen2's _SUCCESS, written last. */
   def ensureEventsPartEvo(spark: SparkSession, dir: String,
-      splitUs: Long): String = {
-    val tag = Fingerprint.tag(dir, "events")
-    val wh = spark.conf.get("spark.sql.warehouse.dir")
-    val path = s"$wh/graft_events_partevo_$tag"
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(new org.apache.hadoop.fs.Path(s"$path/gen2/_SUCCESS"))) {
+      splitUs: Long): String =
+    ensureStore(spark, dir, "partevo", "gen2") { path =>
       val ev = Tables.events(spark, dir)
         .withColumn("us", unix_micros(col("ts")))
       ev.filter(col("us") < splitUs)
@@ -267,8 +253,6 @@ object Layout {
         .repartition(col("month"))
         .write.mode("overwrite").partitionBy("month").parquet(s"$path/gen2")
     }
-    path
-  }
 
   /** Store with one poisoned member: valid parquet files plus
     * `zz_corrupt.parquet` holding garbage bytes — the reality of any
@@ -278,51 +262,25 @@ object Layout {
     * is written AFTER the parquet commit and checked separately, like
     * the CSV store's bad lines. */
   def ensureEventsCorrupt(spark: SparkSession, dir: String): String = {
-    val tag = Fingerprint.tag(dir, "events")
-    val wh = spark.conf.get("spark.sql.warehouse.dir")
-    val path = s"$wh/graft_events_corrupt_$tag"
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(new org.apache.hadoop.fs.Path(s"$path/_SUCCESS")))
+    val path = ensureStore(spark, dir, "corrupt")(
       Tables.events(spark, dir)
         .repartition(4, col("event_id"))
-        .write.mode("overwrite").parquet(path)
-    val junk = new org.apache.hadoop.fs.Path(s"$path/zz_corrupt.parquet")
-    if (!fs.exists(junk)) {
-      val out = fs.create(junk)
-      // PAR1 magic then garbage: passes the extension check, fails the
-      // footer parse — the torn-write shape
-      try out.write(("PAR1" + "not a real parquet footer").getBytes("UTF-8"))
-      finally out.close()
-    }
+        .write.mode("overwrite").parquet(_))
+    // PAR1 magic then garbage: passes the extension check, fails the
+    // footer parse — the torn-write shape
+    addFileOnce(spark, s"$path/zz_corrupt.parquet",
+      ("PAR1" + "not a real parquet footer").getBytes("UTF-8"))
     path
   }
 
   def ensureEventsCsv(spark: SparkSession, dir: String): String = {
-    val tag = Fingerprint.tag(dir, "events")
-    val wh = spark.conf.get("spark.sql.warehouse.dir")
-    val path = s"$wh/graft_events_csv_$tag"
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val bad = new org.apache.hadoop.fs.Path(path + "/zz_bad.csv")
-    // completion is the _SUCCESS marker, not bare directory existence:
-    // the committer creates the directory at job START, so a crash
-    // mid-write leaves a partial store that a bare-existence check
-    // would silently serve forever; overwrite mode makes the retry safe
-    if (!fs.exists(new org.apache.hadoop.fs.Path(path + "/_SUCCESS")))
+    val path = ensureStore(spark, dir, "csv")(
       Tables.events(spark, dir)
         .withColumn("ts", unix_micros(col("ts")))
-        .write.mode("overwrite").option("header", "true").csv(path)
-    // checked separately from the marker: a crash between the Spark
-    // write and this append must not leave a store that silently reads
-    // with zero quarantined lines on every later run
-    if (!fs.exists(bad)) {
-      val out = fs.create(bad)
-      try out.write(
-        ("event_id,ts,user_id,event_type,value,props" +: CsvBadLines)
-          .mkString("", "\n", "\n").getBytes("UTF-8"))
-      finally out.close()
-    }
+        .write.mode("overwrite").option("header", "true").csv(_))
+    addFileOnce(spark, s"$path/zz_bad.csv",
+      ("event_id,ts,user_id,event_type,value,props" +: CsvBadLines)
+        .mkString("", "\n", "\n").getBytes("UTF-8"))
     path
   }
 
@@ -354,17 +312,8 @@ object Layout {
     * partition column); the read side must union the schemas, not pick
     * one footer. Written once, content-keyed. */
   def ensureEventsSchemaEvolution(spark: SparkSession, dir: String,
-      splitUs: Long): String = {
-    val tag = Fingerprint.tag(dir, "events")
-    val wh = spark.conf.get("spark.sql.warehouse.dir")
-    val path = s"$wh/graft_events_schemaevo_$tag"
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // completion marker = the LAST generation's _SUCCESS: a crash between
-    // the gen1 and gen2 writes must not leave a half store that a bare
-    // directory check would serve forever; overwrite mode makes the
-    // whole-store retry safe
-    if (!fs.exists(new org.apache.hadoop.fs.Path(s"$path/gen2/_SUCCESS"))) {
+      splitUs: Long): String =
+    ensureStore(spark, dir, "schemaevo", "gen2") { path =>
       val ev = Tables.events(spark, dir)
       ev.filter(unix_micros(col("ts")) < splitUs)
         .drop("props")
@@ -373,8 +322,6 @@ object Layout {
         .withColumn("ingest_rev", lit(2))
         .write.mode("overwrite").parquet(s"$path/gen2")
     }
-    path
-  }
 
   /** 32-bit Morton (Z-order) code interleaving two 16-bit dimensions —
     * a static expression tree of shifts and masks, fully codegen'd.
@@ -419,15 +366,9 @@ object Layout {
   /** Lazily materialize the Z-ordered events copy for `dir` (content-keyed
     * via [[Fingerprint]], same offline-layout-job discipline as
     * [[ensureEventsByDay]]); returns its path. */
-  def ensureEventsZOrdered(spark: SparkSession, dir: String): String = {
-    val tag = Fingerprint.tag(dir, "events")
-    val wh = spark.conf.get("spark.sql.warehouse.dir")
-    val path = s"$wh/graft_events_zorder_$tag"
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) writeEventsZOrdered(Tables.events(spark, dir), path)
-    path
-  }
+  def ensureEventsZOrdered(spark: SparkSession, dir: String): String =
+    ensureStore(spark, dir, "zorder")(
+      writeEventsZOrdered(Tables.events(spark, dir), _))
 
   /** Small-file compaction: rewrite a parquet directory into files of
     * ~`targetFileMB` each, preserving content exactly.

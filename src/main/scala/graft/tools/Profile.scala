@@ -1,7 +1,8 @@
 package graft.tools
 
 /** Dev profiler: split one key's wall time into DataFrame construction +
-  * analysis, optimize+physical-planning, and execution, per iteration.
+  * analysis, optimize+physical-planning, and execution, per iteration,
+  * and print each Spark job's run time and the driver gap before it.
   * The split tells a regression hunt whether time went to Catalyst (rule
   * count grows with the inventory) or to the executed stages (data/layout).
   *
@@ -14,27 +15,25 @@ object Profile {
     val iters = if (args.length > 1) args(1).toInt else 6
     val sfDir = if (args.length > 2) args(2) else "/root/testdata/sf0.1"
     val spark = graft.GraftSession.builder().getOrCreate()
-    // GRAFT_DEBUG_JOBS=1: per-job wall time + inter-job driver gap — the
-    // split that tells construction-time driver loops (fit/train/rounds)
-    // where their fixed cost per tiny job goes
-    if (sys.env.contains("GRAFT_DEBUG_JOBS")) {
-      spark.sparkContext.addSparkListener(
-        new org.apache.spark.scheduler.SparkListener {
-          @volatile private var lastEnd = 0L
-          private val starts =
-            new java.util.concurrent.ConcurrentHashMap[Int, Long]()
-          override def onJobStart(
-              js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-            starts.put(js.jobId, js.time)
-          override def onJobEnd(
-              je: org.apache.spark.scheduler.SparkListenerJobEnd): Unit = {
-            val st = starts.getOrDefault(je.jobId, je.time)
-            val gap = if (lastEnd == 0) 0L else st - lastEnd
-            lastEnd = je.time
-            println(f"[job] id ${je.jobId}%4d  run ${(je.time - st) / 1e3}%.3f s  gap-before ${gap / 1e3}%.3f s")
-          }
-        })
-    }
+    // per-job wall time + inter-job driver gap — the split that tells
+    // construction-time driver loops (fit/train/rounds) where their fixed
+    // cost per tiny job goes
+    spark.sparkContext.addSparkListener(
+      new org.apache.spark.scheduler.SparkListener {
+        @volatile private var lastEnd = 0L
+        private val starts =
+          new java.util.concurrent.ConcurrentHashMap[Int, Long]()
+        override def onJobStart(
+            js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+          starts.put(js.jobId, js.time)
+        override def onJobEnd(
+            je: org.apache.spark.scheduler.SparkListenerJobEnd): Unit = {
+          val st = starts.getOrDefault(je.jobId, je.time)
+          val gap = if (lastEnd == 0) 0L else st - lastEnd
+          lastEnd = je.time
+          println(f"[job] id ${je.jobId}%4d  run ${(je.time - st) / 1e3}%.3f s  gap-before ${gap / 1e3}%.3f s")
+        }
+      })
     spark.range(1000000).selectExpr("sum(id)").collect()
     keys.foreach { key =>
       (1 to iters).foreach { i =>

@@ -165,6 +165,29 @@ class LayoutSpec extends SparkSuite {
     assert(json.filter(col("event_id").isNull || col("ts").isNull).count() == 0)
   }
 
+  test("a store left with only _temporary/ by a crashed write is rebuilt, " +
+    "not served") {
+    // the committer creates the store directory when the job starts: a
+    // crash mid-write leaves it holding only _temporary/, which a
+    // directory-exists check would take for a finished store
+    val wh = spark.conf.get("spark.sql.warehouse.dir")
+    val tag = graft.sources.Fingerprint.tag(sf0001, "events")
+    val conf = spark.sparkContext.hadoopConfiguration
+    Seq("jsonl", "byday").foreach { name =>
+      val p = new org.apache.hadoop.fs.Path(s"$wh/graft_events_${name}_$tag")
+      val fs = p.getFileSystem(conf)
+      fs.delete(p, true)
+      assert(fs.mkdirs(new org.apache.hadoop.fs.Path(p, "_temporary/0")))
+    }
+    val n = Tables.events(spark, sf0001).count()
+    val jsonl = Layout.readEventsJsonl(spark,
+      Layout.ensureEventsJsonl(spark, sf0001))
+    assert(jsonl.count() === n)
+    val byDay = Layout.readEventsByDay(spark,
+      Layout.ensureEventsByDay(spark, sf0001))
+    assert(byDay.count() === n)
+  }
+
   test("schema evolution: mergeSchema unifies old and new file layouts") {
     // at 100 TB the store accumulates years of files; new columns arrive
     // without rewriting history — mergeSchema + null-backfill semantics

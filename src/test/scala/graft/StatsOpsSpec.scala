@@ -605,4 +605,32 @@ class StatsOpsSpec extends SparkSuite {
     // non-normal
     assert(r.getBoolean(r.fieldIndex("normal_rejected")))
   }
+
+  test("dailyTyped: per-(type, day) revenue equals a driver-side sum of " +
+    "each value's exact cents; dailyZ's z has mean 0 per type") {
+    val daily = StatsOps.dailyTyped(spark, sf0001)
+    assert(daily.columns.toSeq === Seq("event_type", "day", "revc"))
+    val got = daily.collect().map(r =>
+      (r.getString(0), r.getDate(1).toLocalDate) -> r.getLong(2)).toMap
+    val want = graft.sources.Tables.events(spark, sf0001)
+      .select(col("event_type"), to_date(col("ts")), col("value"))
+      .collect()
+      .groupBy(r => (r.getString(0), r.getDate(1).toLocalDate))
+      .map { case (k, rs) => k -> rs.map(r =>
+        (BigDecimal(r.getDouble(2))
+          .setScale(2, BigDecimal.RoundingMode.HALF_UP) * 100).toLongExact)
+        .sum }
+    assert(got.size > 50)
+    assert(got === want)
+    val z = StatsOps.dailyZ(spark, sf0001)
+      .groupBy(col("event_type"))
+      .agg(avg(col("z")).as("mz"), count(lit(1)).as("k"),
+        first(col("n")).as("n"))
+      .collect()
+    assert(z.map(_.getString(0)).toSet === want.keySet.map(_._1))
+    z.foreach { r =>
+      assert(math.abs(r.getDouble(1)) < 1e-9, r.toString)
+      assert(r.getLong(2) === r.getLong(3), r.toString)
+    }
+  }
 }
