@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Key
 import graft.operators.DedupOps.dot
+import graft.operators.SharedCorpus
 
 /** IVF (inverted-file) index over an embedding column: a deterministic
   * mini k-means trains the coarse quantizer, vectors are assigned to their
@@ -194,7 +195,7 @@ object IvfIndex {
     val emb = graft.sources.Tables.embeddings(spark, dir)
     val model = train(emb, k = 16, iters = 3)
     val path = modelPath(dir)
-    modelCache.remove(path)
+    SharedCorpus.forget(spark, "ivf_model", dir, "embeddings")
     model.centroids.toSeq.toDF("cell", "cvec")
       .coalesce(1).write.mode("overwrite").parquet(s"$path/model")
     assign(vecs(emb), model)
@@ -204,20 +205,19 @@ object IvfIndex {
     path
   }
 
-  /** Load a persisted quantizer (k rows → model-sized collect), memoized
-    * per store path: a serving tier keeps model state resident between
-    * queries — only the first query per JVM pays the k-row read.
-    * ([[persistModel]] invalidates, so rebuilds are picked up.) */
-  private val modelCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Model]()
-
+  /** Load a persisted quantizer (k rows → model-sized collect) as corpus
+    * state ([[SharedCorpus.value]]): a serving tier keeps model state
+    * resident between queries — only the first query per corpus pays the
+    * k-row read. ([[persistModel]] forgets it, so rebuilds are picked
+    * up.) */
   def loadModel(spark: SparkSession, dir: String): Model =
-    modelCache.computeIfAbsent(modelPath(dir), { path =>
-      val rows = spark.read.parquet(s"$path/model")
-        .select(col("cell"), col("cvec")).collect()
-      Model(rows.map(r => r.getInt(0) -> r.getSeq[Double](1).toArray)
-        .sortBy(_._1))
-    })
+    SharedCorpus.value(spark, "ivf_model", dir, "embeddings")(
+      readModel(spark, s"${modelPath(dir)}/model"))
+
+  /** A persisted (cell, cvec) centroid table, ordered by cell. */
+  private[ml] def readModel(spark: SparkSession, path: String): Model =
+    Model(spark.read.parquet(path).select(col("cell"), col("cvec")).collect()
+      .map(r => r.getInt(0) -> r.getSeq[Double](1).toArray).sortBy(_._1))
 
   /** Serving-path query: NO training and NO corpus-wide assignment
     * inside — loads the persisted centroids (building the index lazily on

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Key
 import graft.operators.DedupOps.dot
+import graft.operators.SharedCorpus
 
 /** Product quantization (PQ) over the embedding column — the memory-side
   * complement to [[IvfIndex]]'s scan-side pruning, completing the ANN
@@ -235,7 +236,7 @@ object PqIndex {
     val emb = graft.sources.Tables.embeddings(spark, dir)
     val cb = train(emb)
     val path = modelPath(dir)
-    bookCache.remove(path)
+    SharedCorpus.forget(spark, "pq_books", dir, "embeddings")
     cb.books.zipWithIndex.flatMap { case (model, m) =>
       model.centroids.map { case (code, cvec) => (m, code, cvec.toSeq) }
     }.toDF("m", "code", "cvec")
@@ -245,22 +246,23 @@ object PqIndex {
     path
   }
 
-  private val bookCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Codebooks]()
-
-  /** Load persisted codebooks (M·K rows — model-sized collect), memoized
-    * per store path like the IVF model cache. */
+  /** Load persisted codebooks (M·K rows — model-sized collect) as corpus
+    * state, like the IVF model ([[IvfIndex.loadModel]]). */
   def loadBooks(spark: SparkSession, dir: String): Codebooks =
-    bookCache.computeIfAbsent(modelPath(dir), { path =>
-      val rows = spark.read.parquet(s"$path/books")
-        .select(col("m"), col("code"), col("cvec")).collect()
-      val books = (0 until M).map { m =>
-        IvfIndex.Model(rows.filter(_.getInt(0) == m)
-          .map(r => r.getInt(1) -> r.getSeq[Double](2).toArray)
-          .sortBy(_._1))
-      }
-      Codebooks(books, books.head.centroids.head._2.length)
-    })
+    SharedCorpus.value(spark, "pq_books", dir, "embeddings")(
+      readBooks(spark, s"${modelPath(dir)}/books"))
+
+  /** M codebooks from a persisted (m, code, cvec) table. */
+  private def readBooks(spark: SparkSession, path: String): Codebooks = {
+    val rows = spark.read.parquet(path)
+      .select(col("m"), col("code"), col("cvec")).collect()
+    val books = (0 until M).map { m =>
+      IvfIndex.Model(rows.filter(_.getInt(0) == m)
+        .map(r => r.getInt(1) -> r.getSeq[Double](2).toArray)
+        .sortBy(_._1))
+    }
+    Codebooks(books, books.head.centroids.head._2.length)
+  }
 
   /** Serving-path query: NO training and NO full-width corpus scan —
     * ADC over the persisted codes store, then an id-pruned exact re-rank
@@ -410,7 +412,7 @@ object PqIndex {
     val unit = withUnit(emb).cache()
     val (coarse, cb, codes) = trainIvfPq(unit, d)
     val path = ivfPqModelPath(dir)
-    ivfPqCache.remove(path)
+    SharedCorpus.forget(spark, "ivfpq_model", dir, "embeddings")
     coarse.centroids.toSeq.map { case (cell, cvec) => (cell, cvec.toSeq) }
       .toDF("cell", "cvec")
       .coalesce(1).write.mode("overwrite").parquet(s"$path/coarse")
@@ -423,27 +425,14 @@ object PqIndex {
     path
   }
 
-  private val ivfPqCache = new java.util.concurrent.ConcurrentHashMap[
-    String, (IvfIndex.Model, Codebooks)]()
-
   /** Load persisted coarse centroids + residual codebooks (model-sized
-    * collects), memoized per store path. */
+    * collects) as corpus state. */
   def loadIvfPq(spark: SparkSession, dir: String): (IvfIndex.Model, Codebooks) =
-    ivfPqCache.computeIfAbsent(ivfPqModelPath(dir), { path =>
-      val coarse = IvfIndex.Model(
-        spark.read.parquet(s"$path/coarse").select(col("cell"), col("cvec"))
-          .collect()
-          .map(r => r.getInt(0) -> r.getSeq[Double](1).toArray)
-          .sortBy(_._1))
-      val rows = spark.read.parquet(s"$path/books")
-        .select(col("m"), col("code"), col("cvec")).collect()
-      val books = (0 until M).map { m =>
-        IvfIndex.Model(rows.filter(_.getInt(0) == m)
-          .map(r => r.getInt(1) -> r.getSeq[Double](2).toArray)
-          .sortBy(_._1))
-      }
-      (coarse, Codebooks(books, books.head.centroids.head._2.length))
-    })
+    SharedCorpus.value(spark, "ivfpq_model", dir, "embeddings") {
+      val path = ivfPqModelPath(dir)
+      (IvfIndex.readModel(spark, s"$path/coarse"),
+        readBooks(spark, s"$path/books"))
+    }
 
   /** Serving-path query: NO training and NO corpus-wide scan — the
     * probe's nprobe cells prune the partitioned codes store at the scan,

@@ -46,7 +46,7 @@ object AdvancedOps {
       val order =
         Window.partitionBy(col("user_id")).orderBy(col("us"), col("event_id"))
       val running = order.rowsBetween(Window.unboundedPreceding, 0)
-      Eager(seq(spark, dir)
+      seq(spark, dir)
         .withColumn("prev_us", lag(col("us"), 1).over(order))
         .withColumn("is_new",
           when(col("prev_us").isNull || col("us") - col("prev_us") > GapUs, 1)
@@ -62,7 +62,7 @@ object AdvancedOps {
           min(struct(col("us"), col("event_id"), col("event_type")))
             .as("f"),
           max(struct(col("us"), col("event_id"), col("event_type")))
-            .as("l")))
+            .as("l"))
     }
 
   def sessionize(spark: SparkSession, dir: String): DataFrame =

@@ -182,19 +182,18 @@ object AnalyticsOps {
       // edge frame never reshuffles; only the dst-keyed partial-agg moves
       // data. (On a graph whose node vector outgrows broadcast, drop the
       // hint: the same plan degrades to a co-partitioned shuffle join.)
-      ranks = adj.join(broadcast(ranks), adj("src") === ranks("node"))
+      // materialize + truncate lineage NOW: each iteration's broadcast
+      // otherwise re-executes every prior iteration from scratch
+      // (nothing below the broadcast is cached), turning k iterations
+      // into O(k²) iteration-executions. Checkpointing the |nodes|-sized
+      // vector keeps the loop linear; integer ranks make the result
+      // bit-identical either way.
+      ranks = Eager(adj.join(broadcast(ranks), adj("src") === ranks("node"))
         .select(col("dst"), expr("r div d").as("contrib"))
         .groupBy(col("dst"))
         .agg((lit(PrScale * 15L / 100L) +
           expr("sum(contrib) * 85 div 100")).as("r"))
-        .select(col("dst").as("node"), col("r"))
-        // materialize + truncate lineage NOW: each iteration's broadcast
-        // otherwise re-executes every prior iteration from scratch
-        // (nothing below the broadcast is cached), turning k iterations
-        // into O(k²) iteration-executions. An eager localCheckpoint of
-        // the |nodes|-sized vector keeps the loop linear; integer ranks
-        // make the result bit-identical either way.
-        .localCheckpoint()
+        .select(col("dst").as("node"), col("r")))
     }
     ranks.orderBy("node")
   }
@@ -231,13 +230,12 @@ object AnalyticsOps {
       val raw = adj.join(broadcast(x), adj("src") === x("node"))
         .groupBy(col("dst")).agg(sum(col("r")).as("s"))
       val mx = raw.agg(max(col("s")).as("mx"))
-      x = raw.crossJoin(broadcast(mx))
+      // truncate lineage per round (the pagerank lesson): the broadcast
+      // otherwise re-executes every prior round — O(k²)
+      x = Eager(raw.crossJoin(broadcast(mx))
         .select(col("dst").as("node"), expr(
           s"CAST((CAST(s AS DECIMAL(38,0)) * $EcScale) div mx AS BIGINT)")
-          .as("r"))
-        // truncate lineage per round (the pagerank lesson): the broadcast
-        // otherwise re-executes every prior round — O(k²)
-        .localCheckpoint()
+          .as("r")))
     }
     x.select(col("node"), col("r").as("centrality")).orderBy("node")
   }
@@ -277,23 +275,23 @@ object AnalyticsOps {
       // per-src argmax's clustered distributions (partitioning exprs ⊆
       // grouping exprs), so after this one-time shuffle every round is
       // exchange-free — broadcast label join, two in-partition aggregations
-      Eager(e
+      e
         .select(explode(array(struct(col("src"), col("dst")),
           struct(col("dst").as("src"), col("src").as("dst")))).as("ed"))
         .select(col("ed.src").as("src"), col("ed.dst").as("dst"))
-        .repartition(col("src")))
+        .repartition(col("src"))
     }
     val fin = SharedCorpus.memo(spark, "lp_labels", dir, "lineitem",
       "orders") {
       var labels = und.select(col("src").as("node")).distinct()
         .select(col("node"), col("node").as("lbl"))
       for (_ <- 1 to LpIters) {
-        labels = und.join(broadcast(labels), und("dst") === labels("node"))
+        labels = Eager(und.join(broadcast(labels),
+            und("dst") === labels("node"))
           .groupBy(col("src"), col("lbl")).agg(count(lit(1)).as("c"))
           .groupBy(col("src"))
           .agg(min(struct((-col("c")).as("nc"), col("lbl").as("l"))).as("m"))
-          .select(col("src").as("node"), col("m").getField("l").as("lbl"))
-          .localCheckpoint()
+          .select(col("src").as("node"), col("m").getField("l").as("lbl")))
       }
       labels
     }
@@ -898,14 +896,12 @@ object AnalyticsOps {
     for (_ <- 1 to HitsIters) {
       val araw = e.join(broadcast(h), "cust")
         .groupBy(col("supp")).agg(sum(col("h")).as("ar"))
-      a = araw.crossJoin(broadcast(araw.agg(max(col("ar")).as("mx"))))
-        .select(col("supp"), expr(s"ar * $HitsScale div mx").as("a"))
-        .localCheckpoint()
+      a = Eager(araw.crossJoin(broadcast(araw.agg(max(col("ar")).as("mx"))))
+        .select(col("supp"), expr(s"ar * $HitsScale div mx").as("a")))
       val hraw = e.join(broadcast(a), "supp")
         .groupBy(col("cust")).agg(sum(col("a")).as("hr"))
-      h = hraw.crossJoin(broadcast(hraw.agg(max(col("hr")).as("mx"))))
-        .select(col("cust"), expr(s"hr * $HitsScale div mx").as("h"))
-        .localCheckpoint()
+      h = Eager(hraw.crossJoin(broadcast(hraw.agg(max(col("hr")).as("mx"))))
+        .select(col("cust"), expr(s"hr * $HitsScale div mx").as("h")))
     }
     val both = h.select(lit("hub").as("side"), col("cust").as("node"),
         col("h").as("score"))

@@ -30,11 +30,6 @@ object DedupOps {
 
   private val P = 2147483647L // 2^31-1, Mersenne prime for affine hashes
 
-  /** See [[Eager]] — every shared shingle/pair stage in this file fans out
-    * to concurrent consumers of one action, the exact shape `.cache()`
-    * mishandles. */
-  private def eager(df: DataFrame): DataFrame = Eager(df)
-
   // ── exact dedup, window form (SURVEY §2.10 dedup_exact):
   // keep the lowest doc_id per identical text. groupBy-style shuffle on the
   // (hashed) text key; at 100 TB one would pre-hash text to a 128-bit key
@@ -182,9 +177,9 @@ object DedupOps {
     * checkpoint serves the whole family. */
   private def sharedShingles(spark: SparkSession, dir: String): DataFrame =
     SharedCorpus.memo(spark, "dedup_shingles", dir, "documents")(
-      Eager(shingleDocs(Tables.documents(spark, dir))
+      shingleDocs(Tables.documents(spark, dir))
         .select(pmod(xxhash64(col("shingle")), lit(P)).as("xsid"),
-          sidExpr.as("sid"), explode(col("docs")).as("doc_id"))))
+          sidExpr.as("sid"), explode(col("docs")).as("doc_id")))
 
   /** The (doc_id, sid) view every md5-keyed consumer reads. */
   private def sharedSid(spark: SparkSession, dir: String): DataFrame =
@@ -199,14 +194,14 @@ object DedupOps {
     SharedCorpus.memo(spark, "dedup_pairstats", dir, "documents") {
       val ws = sharedSid(spark, dir)
       val sizes = ws.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
-      Eager(ws.as("a").join(ws.as("b"),
+      ws.as("a").join(ws.as("b"),
           col("a.sid") === col("b.sid") && col("a.doc_id") < col("b.doc_id"))
         .groupBy(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
         .agg(count(lit(1)).as("inter"))
         .join(sizes.as("za"), col("doc_a") === col("za.doc_id"))
         .join(sizes.as("zb"), col("doc_b") === col("zb.doc_id"))
         .select(col("doc_a"), col("doc_b"), col("inter"),
-          col("za.n").as("na"), col("zb.n").as("nb")))
+          col("za.n").as("na"), col("zb.n").as("nb"))
     }
 
   /** Verified n-gram Jaccard pairs over [[sharedPairStats]] — identical
@@ -224,7 +219,7 @@ object DedupOps {
     * harnesses, the S-curve audit and the composite pipeline). */
   private def sharedMhCands(spark: SparkSession, dir: String): DataFrame =
     SharedCorpus.memo(spark, "dedup_mhcands", dir, "documents")(
-      Eager(minhashCandidates(sharedSid(spark, dir))))
+      minhashCandidates(sharedSid(spark, dir)))
 
   /** Shingle → integer id, the first 60 bits of md5 reduced mod P —
     * computed INLINE per (doc_id, shingle) row: no dictionary relation
@@ -376,7 +371,7 @@ object DedupOps {
   /** [[evalDedupPr]] on the hash-admitted sample — same production
     * candidate generator, same exact truth, ~1/10 the pair work. */
   def evalDedupPrSampled(spark: SparkSession, dir: String): DataFrame = {
-    val ws = eager(sidShinglesFrom(
+    val ws = Eager(sidShinglesFrom(
       Tables.documents(spark, dir).filter(expr(SampleAdmissionSpark))))
     prReport(minhashCandidates(ws),
       ngramPairs(ws).select(col("doc_a"), col("doc_b")))
@@ -525,10 +520,10 @@ object DedupOps {
     // self-join) — shared lazily, each consumer re-runs the 32-min-hash
     // signature aggregation over the full shingle table (measured: the
     // candidate stage more than halves when shared; was a `.cache()`,
-    // promoted to [[eager]] so the three concurrent consumers can never
+    // promoted to [[Eager]] so the three concurrent consumers can never
     // race a cold cache into 3× recomputes). doc×band rows, ~13× smaller
     // than the shingle table feeding them.
-    val bands = eager(sig.select(col("doc_id"),
+    val bands = Eager(sig.select(col("doc_id"),
         explode(array(bandStructs: _*)).as("bs"))
       .select(col("doc_id"), col("bs.band").as("band"),
         col("bs.m0").as("m0"), col("bs.m1").as("m1")))
@@ -555,7 +550,7 @@ object DedupOps {
     * the composite pipeline (pair-set-sized: ids + hamming). */
   private def sharedSimhashPairs(spark: SparkSession, dir: String): DataFrame =
     SharedCorpus.memo(spark, "dedup_simhash_pairs", dir, "documents")(
-      Eager(simhashPairs(sharedSid(spark, dir))))
+      simhashPairs(sharedSid(spark, dir)))
 
   /** SimHash pair core over (doc_id, sid) rows (shared by [[dedupSimhash]]
     * and the composite [[dedupPipeline]]). */
@@ -690,8 +685,8 @@ object DedupOps {
   // shuffle join + ONE groupBy — the GraphX-free formulation that runs
   // anywhere DataFrames run. The driver holds only an 8-byte convergence
   // checksum per round (sum of labels, monotone decreasing — unchanged ⇔
-  // no label moved). AT 100 TB: same loop, with per-round
-  // `localCheckpoint()` to truncate lineage; edge count is bounded by the
+  // no label moved). AT 100 TB: same loop, with a per-round [[Eager]]
+  // checkpoint to truncate lineage; edge count is bounded by the
   // candidate caps upstream. cluster_id = min doc_id of the group;
   // singletons keep their own id. ──
   def dedupCluster(spark: SparkSession, dir: String): DataFrame =
@@ -714,7 +709,7 @@ object DedupOps {
     val labels: DataFrame =
       if (smallCap == SmallGraphEdgeCap)
         SharedCorpus.memo(spark, "dedup_cc_labels", dir, "documents")(
-          Eager(ccLabels(spark, dir, smallCap)))
+          ccLabels(spark, dir, smallCap))
       else ccLabels(spark, dir, smallCap)
     Tables.documents(spark, dir).select(col("doc_id"))
       .join(labels, col("doc_id") === col("node"), "left")
@@ -776,7 +771,7 @@ object DedupOps {
     * jumping (path halving) — O(log diameter) rounds, each ONE shuffle
     * join + ONE groupBy + ONE jump join, convergence detected by an
     * 8-byte monotone checksum on the driver. At 100 TB add a per-round
-    * `localCheckpoint()` to truncate lineage. */
+    * [[Eager]] checkpoint to truncate lineage. */
   /** Rounds the last [[distributedMinLabel]] run took to reach its
     * fixpoint — instrumentation for the scale proof (BASELINE.md records
     * it); written only by the distributed path. */
@@ -816,7 +811,7 @@ object DedupOps {
   }
 
   // ── the dedup family as ONE pipeline: the shingle stage computed ONCE
-  // (eagerly, [[eager]]), feeding n-gram Jaccard, MinHash-LSH and SimHash
+  // (eagerly, [[Eager]]), feeding n-gram Jaccard, MinHash-LSH and SimHash
   // in parallel, results unioned per pair with the set of methods that
   // flagged it. This is the plan a real corpus-dedup job runs — the
   // standalone keys re-derive shingles per invocation only because the

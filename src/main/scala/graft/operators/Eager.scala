@@ -2,36 +2,31 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 
-/** Eagerly materialize a frame that MULTIPLE downstream branches of one
-  * action consume.
+/** The per-action scope of the materialization layer: run a frame that
+  * several branches (or loop rounds) of one action consume ONCE, NOW,
+  * and hand every consumer the same blocks. Corpus-scoped state goes
+  * through [[SharedCorpus.memo]], which applies this to its build.
   *
   * `.cache()` alone is the wrong tool for intra-action sharing, for two
-  * reasons this repo has now measured:
+  * measured reasons:
   *
   *  1. **Cold-cache race.** A cached-but-unmaterialized partition is
   *     computed independently by every concurrent stage that needs it —
-  *     the block manager dedups only AFTER one writer finishes. Three
-  *     branches fanning out from one shared frame inside a single action
-  *     can each recompute the whole subplan.
-  *  2. **Eviction fragility.** A long multi-tenant session (the driver's
-  *     full 455-key bench refresh) can evict the entry between branches:
-  *     round 8's `dedup_pipeline` ran at 5.05 s on an idle box and 32.6 s
-  *     (6.5×) under the driver's refresh for exactly this reason — the
-  *     plan was right, its cost depended on cache residency.
+  *     the block manager dedups only AFTER one writer finishes.
+  *  2. **Eviction fragility.** A long multi-tenant session can evict the
+  *     entry between branches: round 8's `dedup_pipeline` ran 6.5× slower
+  *     under the full bench refresh for exactly this reason.
   *
-  * `localCheckpoint(eager = true)` runs the subplan ONCE, NOW, pins the
-  * result MEMORY_AND_DISK (spills to disk under pressure instead of
-  * silently degrading into a recompute) and truncates lineage, so every
-  * consumer — concurrent or not, early or late in the session — reads the
-  * same materialized blocks. The blocks are GC-managed via the
-  * ContextCleaner: repeated invocations don't accumulate session-lifetime
-  * cache entries the way un-unpersisted `cache()` does.
+  * `localCheckpoint(eager = true)` pins the result MEMORY_AND_DISK and
+  * truncates lineage (an iterative loop stays linear instead of
+  * re-executing every earlier round); the blocks are reclaimed by the
+  * ContextCleaner once the frame is unreachable. A local checkpoint is
+  * not fault-tolerant: executor loss costs a stage re-run, and lost
+  * blocks of a corpus-scoped frame are rebuilt by [[SharedCorpus]].
   *
-  * Cluster trade-off: a local checkpoint is not fault-tolerant — executor
-  * loss costs a stage re-run. That is the standard iterative-Spark trade
-  * (the BFS/label-propagation loops in [[MiningOps]]/[[AnalyticsOps]]
-  * already make it); for a composite measured in seconds it is strictly
-  * better than a recompute the scheduler performs silently per branch.
+  * This is the ONLY place the codebase checkpoints; a frame that is
+  * already an Eager leaf is returned unchanged, so a build whose last
+  * loop round checkpointed runs no extra job when memoized.
   */
 private[graft] object Eager {
 
@@ -45,22 +40,31 @@ private[graft] object Eager {
       Int, org.apache.spark.sql.catalyst.plans.logical.LogicalPlan]()
   private val ProvenanceMax = 8192
 
-  def apply(df: DataFrame): DataFrame = {
-    val pre = df.queryExecution.optimizedPlan
-    // strip originConstraints from the checkpoint leaf: they carry
-    // pre-checkpoint exprIds and break Union constraint rewriting when
-    // the frame is self-unioned (see GraftSqlBridge for the full story);
-    // the pre-checkpoint plan's stats are re-attached so size-based
-    // broadcast decisions over the checkpointed frame stay intact
-    val (clean, rddId) = org.apache.spark.sql.GraftSqlBridge
-      .stripCheckpointConstraints(df.localCheckpoint(true),
-        Some(pre.stats))
-    rddId.foreach { id =>
-      if (provenance.size() >= ProvenanceMax) provenance.clear()
-      provenance.put(id, pre)
+  def apply(df: DataFrame): DataFrame =
+    if (planBehind(df.queryExecution.analyzed).isDefined) df
+    else {
+      val pre = df.queryExecution.optimizedPlan
+      // strip originConstraints from the checkpoint leaf: they carry
+      // pre-checkpoint exprIds and break Union constraint rewriting when
+      // the frame is self-unioned (see GraftSqlBridge for the full story);
+      // the pre-checkpoint plan's stats are re-attached so size-based
+      // broadcast decisions over the checkpointed frame stay intact
+      val (clean, rddId) = org.apache.spark.sql.GraftSqlBridge
+        .stripCheckpointConstraints(df.localCheckpoint(true),
+          Some(pre.stats))
+      rddId.foreach { id =>
+        if (provenance.size() >= ProvenanceMax) provenance.clear()
+        provenance.put(id, pre)
+      }
+      clean
     }
-    clean
-  }
+
+  /** Whether an Eager frame's checkpoint blocks are still registered
+    * with the SparkContext (false once they were unpersisted). */
+  private[graft] def registered(df: DataFrame): Boolean =
+    org.apache.spark.sql.GraftSqlBridge
+      .checkpointRddId(df.queryExecution.analyzed)
+      .forall(df.sparkSession.sparkContext.getPersistentRDDs.contains)
 
   /** The plan a checkpointed leaf materialized, if `p` is one. */
   private[graft] def planBehind(

@@ -285,13 +285,12 @@ object MiningOps {
       val survivors = cur.filter(col("d") >= k).select(col("node"))
       val remain = survivors.count()
       rounds += ((r.toLong, k, prev - remain, remain))
-      edges = edges
+      edges = Eager(edges
         .join(survivors.withColumnRenamed("node", "u"), "u")
         .join(survivors.withColumnRenamed("node", "v"), "v")
-        .select(col("u"), col("v")).localCheckpoint(true)
-      cur = survivors.join(degreesOf(edges), Seq("node"), "left")
-        .select(col("node"), coalesce(col("d"), lit(0L)).as("d"))
-        .localCheckpoint(true)
+        .select(col("u"), col("v")))
+      cur = Eager(survivors.join(degreesOf(edges), Seq("node"), "left")
+        .select(col("node"), coalesce(col("d"), lit(0L)).as("d")))
       prev = remain
     }
     spark.createDataFrame(rounds.result())
@@ -375,40 +374,37 @@ object MiningOps {
     // memoized (round 12): pareto_abc and budget_waterfall both read this
     // distributed prefix-sum frame (|parts| rows) — corpus state per the
     // [[SharedCorpus]] discipline; consumers only re-aggregate it
-    SharedCorpus.memo(spark, "banded_revcum", dir, "lineitem")(
-      Eager(bandedRevCumBuild(spark, dir)))
-
-  private def bandedRevCumBuild(spark: SparkSession, dir: String): DataFrame = {
-    val rev = Tables.lineitem(spark, dir)
-      .groupBy(col("l_partkey"))
-      .agg(sum(Exact.revenueTerm(col("l_extendedprice"), col("l_discount")))
-        .as("rev"))
-      // integer micro-units: the revenue term has scale 6, so ×10⁶ is
-      // integral and the long cast carries NO fraction — truncate-vs-
-      // round cast semantics can never diverge between engines
-      .withColumn("revc", (col("rev") * 1000000).cast("long"))
-    val width = rev.agg(greatest(lit(1L),
-        floor(max(col("revc")) / 1024).cast("long")).as("w"),
-      sum(col("revc")).cast("decimal(38,0)").as("total"))
-    val banded = rev.crossJoin(broadcast(width))
-      .withColumn("band", (col("revc") / col("w")).cast("long"))
-    // level 1: per-band totals, cum-summed over the ≤ ~1025 band rows
-    val bandCum = banded.groupBy(col("band"))
-      .agg(sum(col("revc").cast("decimal(38,0)")).as("bsum"))
-      .withColumn("boff",
-        coalesce(sum(col("bsum")).over(
-          Window.orderBy(desc("band"))
-            .rowsBetween(Window.unboundedPreceding, -1)),
-          lit(0).cast("decimal(38,0)")))
-      .select(col("band"), col("boff"))
-    // level 2: within-band windows, partitioned (parallel at any scale)
-    val wIn = Window.partitionBy(col("band"))
-      .orderBy(desc("revc"), col("l_partkey"))
-    banded.join(broadcast(bandCum), Seq("band"))
-      .withColumn("cum",
-        col("boff") + sum(col("revc").cast("decimal(38,0)")).over(wIn))
-      .select(col("l_partkey"), col("revc"), col("total"), col("cum"))
-  }
+    SharedCorpus.memo(spark, "banded_revcum", dir, "lineitem") {
+      val rev = Tables.lineitem(spark, dir)
+        .groupBy(col("l_partkey"))
+        .agg(sum(Exact.revenueTerm(col("l_extendedprice"), col("l_discount")))
+          .as("rev"))
+        // integer micro-units: the revenue term has scale 6, so ×10⁶ is
+        // integral and the long cast carries NO fraction — truncate-vs-
+        // round cast semantics can never diverge between engines
+        .withColumn("revc", (col("rev") * 1000000).cast("long"))
+      val width = rev.agg(greatest(lit(1L),
+          floor(max(col("revc")) / 1024).cast("long")).as("w"),
+        sum(col("revc")).cast("decimal(38,0)").as("total"))
+      val banded = rev.crossJoin(broadcast(width))
+        .withColumn("band", (col("revc") / col("w")).cast("long"))
+      // level 1: per-band totals, cum-summed over the ≤ ~1025 band rows
+      val bandCum = banded.groupBy(col("band"))
+        .agg(sum(col("revc").cast("decimal(38,0)")).as("bsum"))
+        .withColumn("boff",
+          coalesce(sum(col("bsum")).over(
+            Window.orderBy(desc("band"))
+              .rowsBetween(Window.unboundedPreceding, -1)),
+            lit(0).cast("decimal(38,0)")))
+        .select(col("band"), col("boff"))
+      // level 2: within-band windows, partitioned (parallel at any scale)
+      val wIn = Window.partitionBy(col("band"))
+        .orderBy(desc("revc"), col("l_partkey"))
+      banded.join(broadcast(bandCum), Seq("band"))
+        .withColumn("cum",
+          col("boff") + sum(col("revc").cast("decimal(38,0)")).over(wIn))
+        .select(col("l_partkey"), col("revc"), col("total"), col("cum"))
+    }
 
   def paretoAbc(spark: SparkSession, dir: String): DataFrame =
     bandedRevCum(spark, dir)
@@ -673,9 +669,9 @@ object MiningOps {
             sqrt((col("nu") * col("nv")).cast("double"))))
       val w = Window.partitionBy(col("u"))
         .orderBy(col("cos").desc, col("v"))
-      Eager(scored.withColumn("rn", row_number().over(w))
+      scored.withColumn("rn", row_number().over(w))
         .filter(col("rn") <= 3)
-        .select(col("u"), col("rn"), col("v"), col("c"), col("cos")))
+        .select(col("u"), col("rn"), col("v"), col("c"), col("cos"))
     }
 
   def recsysItemKnn(spark: SparkSession, dir: String): DataFrame =
@@ -894,7 +890,7 @@ object MiningOps {
       val nw = cand
         .join(state.select(col("node")), Seq("node"), "left_anti")
         .select(col("node"), lit(k.toLong).as("hop"), col("sigma"))
-      state = state.unionByName(nw).localCheckpoint(true)
+      state = Eager(state.unionByName(nw))
     }
     state.groupBy(col("hop"))
       .agg(count(lit(1)).as("n_nodes"), sum(col("sigma")).as("n_paths"),

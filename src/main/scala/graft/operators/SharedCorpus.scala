@@ -2,83 +2,93 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** JVM-memoized shared corpus-state frames (round 12) — the generic form
-  * of [[SharedGraph]]'s per-corpus memo, reused by the dedup, NB-eval,
-  * recsys and ANN-invariant families.
+/** The per-corpus scope of the materialization layer: state that many
+  * keys of one family derive from — shingle posting lists, the NB
+  * verdict table, the co-purchase graph ([[SharedGraph]]), the ANN
+  * models — built once per corpus and served to every consumer, the way
+  * a production analytics session runs many analytics against one
+  * corpus. [[Eager]] is the per-action scope.
   *
-  * Rationale (same as SharedGraph): several keys of one family derive
-  * from an identical base computation — the shingle posting lists behind
-  * every exact-Jaccard dedup key, the scored verdict table behind the NB
-  * classifier and both of its eval summaries, the item-kNN top-3 lists
-  * behind the recommender and its coverage report, the brute-force
-  * reference every ANN invariant grades against. A production analytics
-  * session builds that state once per corpus and runs many analytics
-  * against it; until round 12 each key rebuilt it per invocation.
+  * Two entry kinds share one key space and one residency policy:
+  *  - [[memo]] holds a frame. It applies [[Eager]] to the plan it is
+  *    given, so a value is always checkpointed MEMORY_AND_DISK blocks
+  *    with constraints stripped and provenance recorded. A hit whose
+  *    checkpoint blocks are no longer registered with the SparkContext
+  *    (unpersisted) is dropped and rebuilt once.
+  *  - [[value]] holds a driver-side object (an ANN model read from its
+  *    store); [[forget]] invalidates one when its store is rewritten.
   *
-  * The memo key is (applicationId, frame tag, corpus fingerprint):
+  * The key is (applicationId, kind, corpus fingerprint):
   *  - `applicationId` scopes entries to the live SparkContext — a
   *    restarted context in the same JVM never serves RDD blocks of a dead
-  *    one, and a fresh bench/verify process always computes from the
-  *    parquet inputs (nothing is persisted across JVMs);
+  *    one, and nothing is persisted across JVMs;
   *  - [[graft.sources.Fingerprint.tag]] digests the source files'
   *    (name, length, mtime), so regenerated or swapped data yields a new
-  *    key and a stale frame is never looked up again.
+  *    key and a stale entry is never looked up again; re-memoizing a kind
+  *    under a new fingerprint drops the stale entry instead of stranding
+  *    it.
   *
-  * Values are [[Eager]] frames: checkpointed MEMORY_AND_DISK blocks,
-  * GC-managed. `spark.catalog.clearCache()` (the bench's per-rep hermetic
-  * reset) does not evict them — deliberately: the shared BUILD is corpus
-  * state, not per-query work (the `IvfIndex.modelCache` / [[SharedGraph]]
-  * discipline).
+  * Residency: an LRU over CORPORA, (appId, dir) pairs. When a new corpus
+  * would exceed [[MaxCorpora]], every entry of the least-recently-used
+  * corpus is dropped — releasing the only strong reference to its frames,
+  * so the ContextCleaner reclaims their blocks. An evicted corpus is
+  * rebuilt from parquet on next touch; correctness never depends on
+  * residency. `spark.catalog.clearCache()` (the bench's per-rep reset)
+  * does not touch entries: the shared build is corpus state, not
+  * per-query work.
   *
-  * Unlike SharedGraph's original `computeIfAbsent` form, the build runs
-  * OUTSIDE the map update: a build that recursively memoizes another
-  * frame (pair stats build → shingle frame, edges build → baskets) would
-  * otherwise be a recursive update into the same ConcurrentHashMap — a
-  * documented deadlock/IllegalStateException hazard when the keys land in
-  * one bin. The benign cost is that two racing threads may both build;
-  * `putIfAbsent` keeps exactly one and the loser's checkpoint blocks are
-  * GC-reclaimed.
+  * Builds run OUTSIDE every lock: a build may memoize another entry
+  * (the pair stats build reads the shingle frame), and a recursive
+  * `computeIfAbsent` into one ConcurrentHashMap is a deadlock hazard.
+  * Two racing threads may both build; `putIfAbsent` keeps one and the
+  * loser's blocks are reclaimed.
   */
 private[graft] object SharedCorpus {
 
   private val cache =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
+    new java.util.concurrent.ConcurrentHashMap[String, AnyRef]()
 
-  /** LRU bound over CORPORA (round 13 — the round-12 verdict's leak):
-    * the memo previously held strong refs to every corpus ever touched
-    * for the life of the SparkContext, so a long multi-corpus session
-    * accumulated checkpoint blocks the ContextCleaner could never
-    * reclaim. Entries are now bookkept per (appId, corpus dir), access
-    * ordered; when a new corpus would exceed [[MaxCorpora]] the
-    * least-recently-used corpus's entries are dropped from the map —
-    * releasing the only strong reference to those frames, which lets the
-    * ContextCleaner GC-reclaim their checkpoint blocks. Within one
-    * corpus, re-memoizing a `kind` under a NEW fingerprint (the store
-    * was rewritten in place) likewise drops the stale-fingerprint entry
-    * instead of stranding it. A handful of live corpora is the working
-    * set the scaladoc's production session actually needs; an evicted
-    * corpus is rebuilt from parquet on next touch — correctness never
-    * depends on residency. */
+  /** Most corpora held at once; see the object doc. */
   private[graft] val MaxCorpora = 4
 
   /** (appId|dir) → kind → full cache key, in access order. All mutation
-    * of the bookkeeping is under this map's lock; frame BUILDS stay
-    * outside every lock (see object doc — recursive builds). */
+    * of the bookkeeping is under this map's lock. */
   private val groups =
     new java.util.LinkedHashMap[String, java.util.HashMap[String, String]](
       16, 0.75f, true)
 
+  /** The corpus-scoped frame `kind` of `dir`, checkpointed from `plan` on
+    * first use. `tables` are the source tables the fingerprint covers. */
   def memo(spark: SparkSession, kind: String, dir: String, tables: String*)(
-      build: => DataFrame): DataFrame = {
-    val appId = spark.sparkContext.applicationId
-    val group = appId + "|" + dir
-    val key = appId + "|" + kind + "|" +
+      plan: => DataFrame): DataFrame =
+    lookup(spark, kind, dir, tables, Eager(plan))(Eager.registered)
+
+  /** The corpus-scoped driver-side object `kind` of `dir`, loaded once. */
+  def value[T <: AnyRef](spark: SparkSession, kind: String, dir: String,
+      tables: String*)(load: => T): T =
+    lookup(spark, kind, dir, tables, load)(_ => true)
+
+  /** Drop the `kind` entry of `dir`, so the next call loads it afresh. */
+  def forget(spark: SparkSession, kind: String, dir: String,
+      tables: String*): Unit =
+    cache.remove(keyOf(spark, kind, dir, tables))
+
+  private def keyOf(spark: SparkSession, kind: String, dir: String,
+      tables: Seq[String]): String =
+    spark.sparkContext.applicationId + "|" + kind + "|" +
       graft.sources.Fingerprint.tag(dir, tables: _*)
-    val got = cache.get(key)
-    if (got != null) { touch(group); got }
+
+  private def lookup[T <: AnyRef](spark: SparkSession, kind: String,
+      dir: String, tables: Seq[String], build: => T)(
+      live: T => Boolean): T = {
+    val group = spark.sparkContext.applicationId + "|" + dir
+    val key = keyOf(spark, kind, dir, tables)
+    val got = cache.get(key).asInstanceOf[T]
+    if (got != null && live(got)) { touch(group); got }
     else {
+      if (got != null) cache.remove(key, got) // blocks lost: rebuild once
       val v = build // outside all locks — may recursively memoize
-      val prev = cache.putIfAbsent(key, v)
+      val prev = cache.putIfAbsent(key, v).asInstanceOf[T]
       register(group, kind, key)
       if (prev != null) prev else v
     }
@@ -108,11 +118,12 @@ private[graft] object SharedCorpus {
     evicted.foreach(cache.remove)
   }
 
-  /** Test hook: live entry count (frames currently strongly held). */
-  private[graft] def liveEntries: Int = cache.size()
-  /** Test hook: whether a (kind, corpus) frame is currently resident. */
+  /** Live frame entries (driver-side values not counted). */
+  private[graft] def liveEntries: Int =
+    cache.values().stream()
+      .filter(_.isInstanceOf[org.apache.spark.sql.Dataset[_]]).count().toInt
+  /** Test hook: whether a (kind, corpus) entry is currently resident. */
   private[graft] def resident(spark: SparkSession, kind: String, dir: String,
       tables: String*): Boolean =
-    cache.containsKey(spark.sparkContext.applicationId + "|" + kind + "|" +
-      graft.sources.Fingerprint.tag(dir, tables: _*))
+    cache.containsKey(keyOf(spark, kind, dir, tables))
 }

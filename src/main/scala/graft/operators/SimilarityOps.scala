@@ -139,8 +139,8 @@ object SimilarityOps {
     // per key. Eager inside the memo also serves both consumers here
     // (the overlap join and the top-1 scalar) from one materialization.
     val b = SharedCorpus.memo(spark, "ann_brute_ref", dir, "embeddings")(
-      Eager(simSearch(spark, dir)
-        .select(col("vec_id").as("b_id"), col("cos_sim").as("b_cos"))))
+      simSearch(spark, dir)
+        .select(col("vec_id").as("b_id"), col("cos_sim").as("b_cos")))
     val bTop1 = b.agg(max(col("b_cos")).as("b_top1"))
     results
       .join(broadcast(b.select(col("b_id"))),
@@ -450,26 +450,23 @@ object SimilarityOps {
     * frame is bit-identical to each key's own derivation. |vectors|-row
     * (vec_id, y, cos6) metadata. */
   private def centroidScored(spark: SparkSession, dir: String): DataFrame =
-    SharedCorpus.memo(spark, "centroid_scored", dir, "embeddings")(
-      Eager(centroidScoredBuild(spark, dir)))
-
-  private def centroidScoredBuild(spark: SparkSession, dir: String): DataFrame = {
-    val e = vecs(spark, dir)
-    val cent = e.filter(col("label") === 0)
-      .select(posexplode(col("v")).as(Seq("pos", "x")))
-      .groupBy(col("pos"))
-      .agg((sum(col("x").cast("decimal(18,9)")).cast("double") /
-        count(col("x"))).as("c"))
-      .agg(transform(array_sort(collect_list(struct(col("pos"), col("c")))),
-        s => s.getField("c")).as("cv"))
-      .select(col("cv"), sqrt(DedupOps.dot(col("cv"), col("cv")))
-        .as("c_norm"))
-    e.crossJoin(broadcast(cent))
-      .select(col("vec_id"),
-        when(col("label") === 0, 1L).otherwise(0L).as("y"),
-        (round(DedupOps.dot(col("v"), col("cv")) /
-          (col("norm") * col("c_norm")), 6) + lit(0.0d)).as("cos6"))
-  }
+    SharedCorpus.memo(spark, "centroid_scored", dir, "embeddings") {
+      val e = vecs(spark, dir)
+      val cent = e.filter(col("label") === 0)
+        .select(posexplode(col("v")).as(Seq("pos", "x")))
+        .groupBy(col("pos"))
+        .agg((sum(col("x").cast("decimal(18,9)")).cast("double") /
+          count(col("x"))).as("c"))
+        .agg(transform(array_sort(collect_list(struct(col("pos"), col("c")))),
+          s => s.getField("c")).as("cv"))
+        .select(col("cv"), sqrt(DedupOps.dot(col("cv"), col("cv")))
+          .as("c_norm"))
+      e.crossJoin(broadcast(cent))
+        .select(col("vec_id"),
+          when(col("label") === 0, 1L).otherwise(0L).as("y"),
+          (round(DedupOps.dot(col("v"), col("cv")) /
+            (col("norm") * col("c_norm")), 6) + lit(0.0d)).as("cos6"))
+    }
 
   // ── ROC AUC + Brier score of the class-0 centroid scorer — the
   // threshold-free "is this ranking any good" metric for a probe

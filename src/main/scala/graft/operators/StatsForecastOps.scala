@@ -36,10 +36,10 @@ private[operators] trait StatsForecastOps extends StatsOpsBase {
       val seasonal = trended.groupBy(col("dow"))
         .agg((round(sum(col("det")).cast("double") / count(lit(1)), 6) + lit(0.0d))
           .as("seasonal"))
-      Eager(trended.join(broadcast(seasonal), "dow")
+      trended.join(broadcast(seasonal), "dow")
         .select(col("day"), col("vd").cast("double").as("v"),
           col("trend6").cast("double").as("trend"), col("seasonal"),
-          r6(col("det").cast("double") - col("seasonal")).as("resid")))
+          r6(col("det").cast("double") - col("seasonal")).as("resid"))
     }
 
   def seasonalDecompose(spark: SparkSession, dir: String): DataFrame =
@@ -310,13 +310,13 @@ private[operators] trait StatsForecastOps extends StatsOpsBase {
     * cast (bit-identical to casting inline in the aggregate). */
   private def partDayDemand(spark: SparkSession, dir: String): DataFrame =
     SharedCorpus.memo(spark, "forecast_demand", dir, "lineitem", "orders")(
-      Eager(Tables.lineitem(spark, dir)
+      Tables.lineitem(spark, dir)
         .join(Tables.orders(spark, dir),
           col("o_orderkey") === col("l_orderkey"))
         .groupBy(col("l_partkey").as("part"),
           expr("datediff(to_date(o_orderdate), DATE'1970-01-01')")
             .cast("long").as("dayno"))
-        .agg(sum(col("l_quantity").cast("decimal(18,2)")).as("dd"))))
+        .agg(sum(col("l_quantity").cast("decimal(18,2)")).as("dd")))
 
   def forecastCroston(spark: SparkSession, dir: String): DataFrame = {
     val dem = partDayDemand(spark, dir)
@@ -666,11 +666,8 @@ private[operators] trait StatsForecastOps extends StatsOpsBase {
         |    AS forecast_7
         |FROM rec WHERE t = n ORDER BY event_type""".stripMargin)),
     Key("forecast_damped", forecastDamped, Some(
-      s"""WITH RECURSIVE d AS (
-        |  SELECT event_type, CAST(CAST(ts AS TIMESTAMP) AS DATE) AS day,
-        |    CAST(sum(CAST("value" AS DECIMAL(18,2))) AS DOUBLE) AS y
-        |  FROM events GROUP BY 1, 2),
-        |s AS (
+      "WITH RECURSIVE " + duckDailyY.drop(5) +
+      s"""s AS (
         |  SELECT event_type, y,
         |    row_number() OVER (PARTITION BY event_type ORDER BY day) AS t,
         |    count(*) OVER (PARTITION BY event_type) AS n
@@ -853,11 +850,8 @@ private[operators] trait StatsForecastOps extends StatsOpsBase {
         |SELECT alpha, n_days, level, rmse, rn = 1 AS is_best
         |FROM rk ORDER BY alpha""".stripMargin)),
     Key("forecast_holt", forecastHolt, Some(
-      """WITH RECURSIVE d AS (
-        |  SELECT event_type, CAST(CAST(ts AS TIMESTAMP) AS DATE) AS day,
-        |    CAST(sum(CAST("value" AS DECIMAL(18,2))) AS DOUBLE) AS y
-        |  FROM events GROUP BY 1, 2),
-        |s AS (
+      "WITH RECURSIVE " + duckDailyY.drop(5) +
+      """s AS (
         |  SELECT event_type, y,
         |    row_number() OVER (PARTITION BY event_type ORDER BY day) AS t,
         |    count(*) OVER (PARTITION BY event_type) AS n
@@ -887,11 +881,8 @@ private[operators] trait StatsForecastOps extends StatsOpsBase {
     // left-associates the first-week mean exactly like the Spark fold,
     // arg_min pins the first-week slot value to the FIRST observation,
     Key("forecast_holt_winters", forecastHoltWinters, Some(
-      """WITH RECURSIVE d AS (
-        |  SELECT event_type, CAST(CAST(ts AS TIMESTAMP) AS DATE) AS day,
-        |    CAST(sum(CAST("value" AS DECIMAL(18,2))) AS DOUBLE) AS y
-        |  FROM events GROUP BY 1, 2),
-        |s AS (
+      "WITH RECURSIVE " + duckDailyY.drop(5) +
+      """s AS (
         |  SELECT event_type, y,
         |    CAST(day - DATE '1970-01-01' AS INT) % 7 + 1 AS dw,
         |    row_number() OVER (PARTITION BY event_type ORDER BY day) AS t,

@@ -514,20 +514,24 @@ private[operators] trait StatsOpsBase {
       |  FROM events GROUP BY 1, 2, 3),
       |""".stripMargin
 
+  /** [[duckDailyTyped]] plus `d(event_type, day, y)`, the day's revenue
+    * as a double in currency units — the series the Holt recursions and
+    * Theil–Sen fold. revc is an integer far below 2^53, so revc / 100 in
+    * double is the correctly rounded decimal sum. */
+  protected val duckDailyY: String = duckDailyTyped +
+    """d AS (SELECT event_type, day, CAST(revc AS DOUBLE) / 100 AS y
+      |  FROM daily),
+      |""".stripMargin
+
   /** Shared oracle CTE block mirroring [[friedmanGrid]]: zero-filled
     * day×type grid with doubled within-day midranks. Ends at
     * `rk(day, event_type, revc, r2x)`, comma-terminated. */
-  protected val duckFriedmanGrid: String =
-    """WITH rev AS (
-      |  SELECT CAST(CAST(ts AS TIMESTAMP) AS DATE) AS day, event_type,
-      |    CAST(sum(CAST("value" AS DECIMAL(18,2))) * 100 AS BIGINT)
-      |      AS revc
-      |  FROM events GROUP BY 1, 2),
-      |grid AS (
+  protected val duckFriedmanGrid: String = duckDailyTyped +
+    """grid AS (
       |  SELECT d.day, t.event_type, COALESCE(r.revc, 0) AS revc
-      |  FROM (SELECT DISTINCT day FROM rev) d
-      |  CROSS JOIN (SELECT DISTINCT event_type FROM rev) t
-      |  LEFT JOIN rev r ON r.day = d.day AND r.event_type = t.event_type),
+      |  FROM (SELECT DISTINCT day FROM daily) d
+      |  CROSS JOIN (SELECT DISTINCT event_type FROM daily) t
+      |  LEFT JOIN daily r ON r.day = d.day AND r.event_type = t.event_type),
       |rk AS (SELECT day, event_type, revc,
       |    rank() OVER (PARTITION BY day ORDER BY revc) * 2
       |      + count(*) OVER (PARTITION BY day, revc) - 1 AS r2x

@@ -1958,22 +1958,8 @@ private[operators] trait StatsSeqOps extends StatsOpsBase {
         |SELECT lag, n_days, acf, pacf, band AS band_95,
         |  abs(pacf) > band AS significant
         |FROM rows3 ORDER BY lag""".stripMargin)),
-    Key("stats_kendall_w", statsKendallW, Some(
-      """WITH rev AS (
-        |  SELECT CAST(CAST(ts AS TIMESTAMP) AS DATE) AS day, event_type,
-        |    CAST(sum(CAST("value" AS DECIMAL(18,2))) * 100 AS BIGINT)
-        |      AS revc
-        |  FROM events GROUP BY 1, 2),
-        |grid AS (
-        |  SELECT d.day, t.event_type, COALESCE(r.revc, 0) AS revc
-        |  FROM (SELECT DISTINCT day FROM rev) d
-        |  CROSS JOIN (SELECT DISTINCT event_type FROM rev) t
-        |  LEFT JOIN rev r ON r.day = d.day AND r.event_type = t.event_type),
-        |rk AS (SELECT event_type,
-        |    rank() OVER (PARTITION BY day ORDER BY revc) * 2
-        |      + count(*) OVER (PARTITION BY day, revc) - 1 AS r2x
-        |  FROM grid),
-        |rs AS (SELECT event_type, CAST(sum(r2x) AS BIGINT) AS r2,
+    Key("stats_kendall_w", statsKendallW, Some(duckFriedmanGrid +
+      """rs AS (SELECT event_type, CAST(sum(r2x) AS BIGINT) AS r2,
         |    CAST(count(*) AS BIGINT) AS m
         |  FROM rk GROUP BY 1),
         |km AS (SELECT CAST(count(*) AS BIGINT) AS k,
@@ -2447,15 +2433,8 @@ private[operators] trait StatsSeqOps extends StatsOpsBase {
          |  round((q.q - mm.m) / mm.sd - zl.z_normal, 6) + 0.0 AS gap
          |FROM qs q JOIN zl ON q.decile = zl.decile CROSS JOIN mm
          |ORDER BY decile""".stripMargin)),
-    Key("stats_grubbs", statsGrubbs, Some(
-      """WITH daily AS (
-        |  SELECT event_type, CAST(CAST(ts AS TIMESTAMP) AS DATE) AS day,
-        |    CAST(CAST(ts AS TIMESTAMP) AS DATE) - DATE '1970-01-01'
-        |      AS dayno,
-        |    CAST(sum(CAST("value" AS DECIMAL(18,2))) * 100 AS BIGINT)
-        |      AS revc
-        |  FROM events GROUP BY 1, 2, 3),
-        |mo AS (SELECT event_type, CAST(count(*) AS BIGINT) AS n,
+    Key("stats_grubbs", statsGrubbs, Some(duckDailyTyped +
+      """mo AS (SELECT event_type, CAST(count(*) AS BIGINT) AS n,
         |    CAST(sum(revc) AS BIGINT) AS s,
         |    sum(CAST(revc AS DECIMAL(28,0)) * revc) AS s2
         |  FROM daily GROUP BY 1),
@@ -2611,20 +2590,15 @@ private[operators] trait StatsSeqOps extends StatsOpsBase {
         |  round(CAST(count(*) AS DOUBLE) / CAST(sum(term) AS DOUBLE), 6)
         |    + 0.0 AS alpha
         |FROM t""".stripMargin)),
-    Key("stats_page_trend", statsPageTrend, Some(
-      """WITH rev AS (
-        |  SELECT CAST(CAST(ts AS TIMESTAMP) AS DATE) AS day, event_type,
-        |    CAST(sum(CAST("value" AS DECIMAL(18,2))) * 100 AS BIGINT)
-        |      AS revc
-        |  FROM events GROUP BY 1, 2),
-        |days AS (SELECT DISTINCT day FROM rev),
+    Key("stats_page_trend", statsPageTrend, Some(duckDailyTyped +
+      """days AS (SELECT DISTINCT day FROM daily),
         |types AS (SELECT event_type,
         |    CAST(row_number() OVER (ORDER BY event_type) AS BIGINT) AS j
-        |  FROM (SELECT DISTINCT event_type FROM rev)),
+        |  FROM (SELECT DISTINCT event_type FROM daily)),
         |grid AS (SELECT d.day, t.event_type, t.j,
         |    COALESCE(r.revc, 0) AS revc
         |  FROM days d CROSS JOIN types t
-        |  LEFT JOIN rev r ON r.day = d.day AND r.event_type = t.event_type),
+        |  LEFT JOIN daily r ON r.day = d.day AND r.event_type = t.event_type),
         |ranked AS (SELECT j,
         |    CAST(rank() OVER (PARTITION BY day ORDER BY revc) * 2
         |      + count(*) OVER (PARTITION BY day, revc) - 1 AS BIGINT)
@@ -2881,12 +2855,8 @@ private[operators] trait StatsSeqOps extends StatsOpsBase {
     // the identical Holt recursion replayed as a recursive CTE: same
     // init (l₁=y₁, b₁=y₂−y₁), same literals, same operation order — the
     // doubles stay bit-equal until the single boundary round,
-    Key("stats_theilsen", statsTheilSen, Some(
-      """WITH d AS (
-        |  SELECT event_type, CAST(CAST(ts AS TIMESTAMP) AS DATE) AS day,
-        |    CAST(sum(CAST("value" AS DECIMAL(18,2))) AS DOUBLE) AS y
-        |  FROM events GROUP BY 1, 2),
-        |xy AS (
+    Key("stats_theilsen", statsTheilSen, Some(duckDailyY +
+      """xy AS (
         |  SELECT event_type,
         |    CAST(day - DATE '1970-01-01' AS DOUBLE) AS x, y
         |  FROM d),

@@ -1584,13 +1584,8 @@ private[operators] trait StatsTestOps extends StatsOpsBase {
          |  p2 < 0.05 AS significant
          |FROM pp""".stripMargin
     }),
-    Key("stats_median_ci", statsMedianCi, Some(
-      """WITH daily AS (
-        |  SELECT event_type, CAST(CAST(ts AS TIMESTAMP) AS DATE) AS day,
-        |    CAST(sum(CAST("value" AS DECIMAL(18,2))) * 100 AS BIGINT)
-        |      AS revc
-        |  FROM events GROUP BY 1, 2),
-        |r AS (SELECT *,
+    Key("stats_median_ci", statsMedianCi, Some(duckDailyTyped +
+      """r AS (SELECT *,
         |    CAST(row_number() OVER (PARTITION BY event_type
         |      ORDER BY revc, day) AS BIGINT) AS rn,
         |    CAST(count(*) OVER (PARTITION BY event_type) AS BIGINT) AS n
@@ -1679,12 +1674,8 @@ private[operators] trait StatsTestOps extends StatsOpsBase {
         |FROM f""".stripMargin)),
     Key("stats_sign_test", statsSignTest, Some {
       val pz = phiSql("az")
-      s"""WITH daily AS (
-         |  SELECT event_type, CAST(CAST(ts AS TIMESTAMP) AS DATE) AS day,
-         |    CAST(sum(CAST("value" AS DECIMAL(18,2))) * 100 AS BIGINT)
-         |      AS revc
-         |  FROM events GROUP BY 1, 2),
-         |p AS (SELECT a.event_type, b.revc - a.revc AS diff
+      duckDailyTyped +
+      s"""p AS (SELECT a.event_type, b.revc - a.revc AS diff
          |      FROM daily a JOIN daily b
          |        ON b.event_type = a.event_type
          |        AND b.day = a.day + 7
@@ -2153,22 +2144,8 @@ private[operators] trait StatsTestOps extends StatsOpsBase {
         |      CAST((b - c) * (b - c) AS DOUBLE) / (b + c) > 3.841
         |    ELSE false END AS significant
         |FROM t""".stripMargin)),
-    Key("stats_friedman", statsFriedman, Some(
-      """WITH rev AS (
-        |  SELECT CAST(CAST(ts AS TIMESTAMP) AS DATE) AS day, event_type,
-        |    CAST(sum(CAST("value" AS DECIMAL(18,2))) * 100 AS BIGINT)
-        |      AS revc
-        |  FROM events GROUP BY 1, 2),
-        |grid AS (
-        |  SELECT d.day, t.event_type, COALESCE(r.revc, 0) AS revc
-        |  FROM (SELECT DISTINCT day FROM rev) d
-        |  CROSS JOIN (SELECT DISTINCT event_type FROM rev) t
-        |  LEFT JOIN rev r ON r.day = d.day AND r.event_type = t.event_type),
-        |rk AS (SELECT event_type,
-        |    rank() OVER (PARTITION BY day ORDER BY revc) * 2
-        |      + count(*) OVER (PARTITION BY day, revc) - 1 AS r2x
-        |  FROM grid),
-        |s AS (SELECT event_type, CAST(sum(r2x) AS BIGINT) AS s2,
+    Key("stats_friedman", statsFriedman, Some(duckFriedmanGrid +
+      """s AS (SELECT event_type, CAST(sum(r2x) AS BIGINT) AS s2,
         |    CAST(count(*) AS BIGINT) AS n
         |  FROM rk GROUP BY 1),
         |t AS (SELECT CAST(count(*) AS BIGINT) AS k,

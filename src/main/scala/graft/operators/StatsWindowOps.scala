@@ -1017,13 +1017,8 @@ private[operators] trait StatsWindowOps extends StatsOpsBase {
         |    - CAST(14 - (rn + lo.nrn) AS DOUBLE) / 14), 6) + 0.0
         |    AS aroon_osc
         |FROM w WHERE rn >= 14 ORDER BY event_type, day""".stripMargin)),
-    Key("window_macd", windowMacd, Some(
-      s"""WITH daily AS (
-         |  SELECT event_type, CAST(CAST(ts AS TIMESTAMP) AS DATE) AS day,
-         |    CAST(sum(CAST("value" AS DECIMAL(18,2))) * 100 AS BIGINT)
-         |      AS revc
-         |  FROM events GROUP BY 1, 2),
-         |h AS (SELECT event_type, day,
+    Key("window_macd", windowMacd, Some(duckDailyTyped +
+      s"""h AS (SELECT event_type, day,
          |    list(CAST(revc AS DOUBLE))
          |      OVER (wo ROWS BETWEEN 11 PRECEDING AND CURRENT ROW)
          |      AS h12,
@@ -1118,13 +1113,8 @@ private[operators] trait StatsWindowOps extends StatsOpsBase {
         |SELECT user_id, CAST(count(*) AS BIGINT) AS n_events,
         |  round(CAST(sum(term) AS DOUBLE), 6) + 0.0 AS decayed_score
         |FROM t GROUP BY 1 ORDER BY user_id""".stripMargin)),
-    Key("window_stochastic", windowStochastic, Some(
-      """WITH daily AS (
-        |  SELECT event_type, CAST(CAST(ts AS TIMESTAMP) AS DATE) AS day,
-        |    CAST(sum(CAST("value" AS DECIMAL(18,2))) * 100 AS BIGINT)
-        |      AS revc
-        |  FROM events GROUP BY 1, 2),
-        |w AS (SELECT event_type, day, revc,
+    Key("window_stochastic", windowStochastic, Some(duckDailyTyped +
+      """w AS (SELECT event_type, day, revc,
         |    row_number() OVER wo AS rn,
         |    min(revc) OVER (wo ROWS BETWEEN 13 PRECEDING AND CURRENT ROW)
         |      AS l14,
@@ -1148,13 +1138,8 @@ private[operators] trait StatsWindowOps extends StatsOpsBase {
         |  round(CASE WHEN kn > 0 THEN CAST(ks AS DOUBLE) / kn END, 6)
         |    + 0.0 AS pct_d
         |FROM d WHERE rn >= 14 ORDER BY event_type, day""".stripMargin)),
-    Key("window_ulcer", windowUlcer, Some(
-      """WITH daily AS (
-        |  SELECT event_type, CAST(CAST(ts AS TIMESTAMP) AS DATE) AS day,
-        |    CAST(sum(CAST("value" AS DECIMAL(18,2))) * 100 AS BIGINT)
-        |      AS revc
-        |  FROM events GROUP BY 1, 2),
-        |p AS (SELECT event_type, day, revc,
+    Key("window_ulcer", windowUlcer, Some(duckDailyTyped +
+      """p AS (SELECT event_type, day, revc,
         |    max(revc) OVER (PARTITION BY event_type ORDER BY day
         |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS peak
         |  FROM daily),
@@ -1180,18 +1165,15 @@ private[operators] trait StatsWindowOps extends StatsOpsBase {
         |  round(CAST(peak - v AS DOUBLE) / CAST(peak AS DOUBLE), 6) + 0.0
         |    AS drawdown
         |FROM r ORDER BY day""".stripMargin)),
-    Key("window_growth", windowGrowth, Some(
-      """WITH daily AS (
-        |  SELECT event_type, CAST(CAST(ts AS TIMESTAMP) AS DATE) AS day,
-        |    CAST(sum(CAST("value" AS DECIMAL(18,2))) AS DOUBLE) AS v
-        |  FROM events GROUP BY 1, 2)
-        |SELECT a.event_type, a.day, a.v AS rev,
-        |  round((a.v - b.v) / b.v * 100, 6) + 0.0 AS dod_pct,
-        |  round((a.v - c.v) / c.v * 100, 6) + 0.0 AS wow_pct
-        |FROM daily a
-        |LEFT JOIN daily b ON a.event_type = b.event_type
+    Key("window_growth", windowGrowth, Some(duckDailyY.dropRight(2) +
+      """
+        |SELECT a.event_type, a.day, a.y AS rev,
+        |  round((a.y - b.y) / b.y * 100, 6) + 0.0 AS dod_pct,
+        |  round((a.y - c.y) / c.y * 100, 6) + 0.0 AS wow_pct
+        |FROM d a
+        |LEFT JOIN d b ON a.event_type = b.event_type
         |  AND b.day = a.day - 1
-        |LEFT JOIN daily c ON a.event_type = c.event_type
+        |LEFT JOIN d c ON a.event_type = c.event_type
         |  AND c.day = a.day - 7
         |ORDER BY a.event_type, a.day""".stripMargin)),
     Key("window_rsi", windowRsi, Some(
@@ -1218,25 +1200,21 @@ private[operators] trait StatsWindowOps extends StatsOpsBase {
         |    + 0.0 AS rsi14
         |FROM r WHERE rn >= 14 AND sg + sl > 0
         |ORDER BY event_type, day""".stripMargin)),
-    Key("window_bollinger", windowBollinger, Some(
-      """WITH daily AS (
-        |  SELECT event_type, CAST(CAST(ts AS TIMESTAMP) AS DATE) AS day,
-        |    CAST(sum(CAST("value" AS DECIMAL(18,2))) AS DOUBLE) AS v
-        |  FROM events GROUP BY 1, 2),
-        |r AS (SELECT *,
+    Key("window_bollinger", windowBollinger, Some(duckDailyY +
+      """r AS (SELECT *,
         |    row_number() OVER wo AS rn,
-        |    avg(v) OVER w AS m,
-        |    stddev_samp(v) OVER w AS s
-        |  FROM daily
+        |    avg(y) OVER w AS m,
+        |    stddev_samp(y) OVER w AS s
+        |  FROM d
         |  WINDOW wo AS (PARTITION BY event_type ORDER BY day),
         |    w AS (PARTITION BY event_type ORDER BY day
         |          ROWS BETWEEN 6 PRECEDING AND CURRENT ROW))
-        |SELECT event_type, day, v,
+        |SELECT event_type, day, y AS v,
         |  round(m, 6) + 0.0 AS ma7, round(s, 6) + 0.0 AS sd7,
         |  round(m + 2 * s, 6) + 0.0 AS upper,
         |  round(m - 2 * s, 6) + 0.0 AS lower,
-        |  (v > round(m + 2 * s, 6) + 0.0 OR
-        |   v < round(m - 2 * s, 6) + 0.0) AS is_break
+        |  (y > round(m + 2 * s, 6) + 0.0 OR
+        |   y < round(m - 2 * s, 6) + 0.0) AS is_break
         |FROM r WHERE rn >= 7 AND s > 0
         |ORDER BY event_type, day""".stripMargin)),
     Key("window_rolling_zscore", windowRollingZscore, Some(

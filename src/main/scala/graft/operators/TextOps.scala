@@ -100,16 +100,16 @@ object TextOps {
     * text_lm_score's vocabulary size. Exact integer counts over the same
     * tokenization — value-identical to each key's own derivation. */
   private def unigramCounts(spark: SparkSession, dir: String): DataFrame =
-    SharedCorpus.memo(spark, "unigram_counts", dir, "documents")(Eager(
+    SharedCorpus.memo(spark, "unigram_counts", dir, "documents")(
       Tables.documents(spark, dir)
         .select(explode(toksCol).as("t"))
-        .groupBy(col("t")).agg(count(lit(1)).as("cnt"))))
+        .groupBy(col("t")).agg(count(lit(1)).as("cnt")))
 
   /** Adjacent word bigrams (doc_id, w1, w2) — per-corpus memoized state
     * (round 13) shared by text_lm_score (which previously paid its own
     * per-invocation Eager of this exact frame) and text_collocation. */
   private def wordBigrams(spark: SparkSession, dir: String): DataFrame =
-    SharedCorpus.memo(spark, "word_bigrams", dir, "documents")(Eager(
+    SharedCorpus.memo(spark, "word_bigrams", dir, "documents")(
       Tables.documents(spark, dir)
         .select(col("doc_id"), toksCol.as("toks"))
         .select(col("doc_id"), col("toks"),
@@ -118,7 +118,7 @@ object TextOps {
           explode(arrays_zip(col("toks"), col("shifted"))).as("z"))
         .select(col("doc_id"), col("z.toks").as("w1"),
           col("z.shifted").as("w2"))
-        .filter(col("w2").isNotNull)))
+        .filter(col("w2").isNotNull))
 
   /** Per-(doc_id, tok) exact token counts, empty token filtered —
     * per-corpus memoized state (round 13, session 3) shared by
@@ -129,11 +129,11 @@ object TextOps {
     * (sums of c ≡ occurrence counts), so values are identical to the
     * former per-key derivations. */
   private def docTermCounts(spark: SparkSession, dir: String): DataFrame =
-    SharedCorpus.memo(spark, "doc_term_counts", dir, "documents")(Eager(
+    SharedCorpus.memo(spark, "doc_term_counts", dir, "documents")(
       Tables.documents(spark, dir)
         .select(col("doc_id"), explode(toksCol).as("tok"))
         .filter(col("tok") =!= "")
-        .groupBy(col("doc_id"), col("tok")).agg(count(lit(1)).as("c"))))
+        .groupBy(col("doc_id"), col("tok")).agg(count(lit(1)).as("c")))
 
   def textTokens(spark: SparkSession, dir: String): DataFrame =
     unigramCounts(spark, dir)
@@ -172,29 +172,26 @@ object TextOps {
     * integer counts, so the memoized frame is bit-identical to each
     * key's own derivation. |docs|-row doc-level metadata, never text. */
   private def qualityScored(spark: SparkSession, dir: String): DataFrame =
-    SharedCorpus.memo(spark, "quality_scored", dir, "documents")(
-      Eager(qualityScoredBuild(spark, dir)))
-
-  private def qualityScoredBuild(spark: SparkSession, dir: String): DataFrame = {
-    Tables.documents(spark, dir)
-      .withColumn("toks", toksCol)
-      .withColumn("n_toks", size(col("toks")))
-      .withColumn("chars", length(col("text")))
-      .withColumn("alnum_chars",
-        length(regexp_replace(col("text"), "[^a-zA-Z0-9 ]", "")))
-      .withColumn("punct_ratio",
-        round((col("chars") - col("alnum_chars")).cast("double") / col("chars"), 6))
-      .withColumn("stop_ratio", stopRatioCol)
-      .withColumn("avg_word_len",
-        round(length(regexp_replace(col("text"), "\\s", "")).cast("double") /
-          col("n_toks"), 6))
-      .withColumn("quality",
-        round(lit(0.4) * col("stop_ratio") +
-          lit(0.3) * least(lit(1.0), col("n_toks") / lit(20.0)) +
-          lit(0.3) * (lit(1.0) - col("punct_ratio")), 6))
-      .select(col("doc_id"), col("source"), col("n_toks"), col("punct_ratio"),
-        col("stop_ratio"), col("avg_word_len"), col("quality"))
-  }
+    SharedCorpus.memo(spark, "quality_scored", dir, "documents") {
+      Tables.documents(spark, dir)
+        .withColumn("toks", toksCol)
+        .withColumn("n_toks", size(col("toks")))
+        .withColumn("chars", length(col("text")))
+        .withColumn("alnum_chars",
+          length(regexp_replace(col("text"), "[^a-zA-Z0-9 ]", "")))
+        .withColumn("punct_ratio",
+          round((col("chars") - col("alnum_chars")).cast("double") / col("chars"), 6))
+        .withColumn("stop_ratio", stopRatioCol)
+        .withColumn("avg_word_len",
+          round(length(regexp_replace(col("text"), "\\s", "")).cast("double") /
+            col("n_toks"), 6))
+        .withColumn("quality",
+          round(lit(0.4) * col("stop_ratio") +
+            lit(0.3) * least(lit(1.0), col("n_toks") / lit(20.0)) +
+            lit(0.3) * (lit(1.0) - col("punct_ratio")), 6))
+        .select(col("doc_id"), col("source"), col("n_toks"), col("punct_ratio"),
+          col("stop_ratio"), col("avg_word_len"), col("quality"))
+    }
 
   // ── per-source quota sampling: cap every SOURCE at its 20
   // highest-quality docs — the corpus-mixing step that stops one
@@ -731,10 +728,10 @@ object TextOps {
         .select(col("doc_id"), explode(expr(FiveGrams)).as("shingle"))
       val evalSet = sh.filter(col("doc_id") % 97 === 0)
         .select("shingle").distinct()
-      Eager(sh.filter(col("doc_id") % 97 =!= 0)
+      sh.filter(col("doc_id") % 97 =!= 0)
         .join(broadcast(evalSet), "shingle")
         .select("doc_id").distinct()
-        .withColumn("contaminated", lit(true)))
+        .withColumn("contaminated", lit(true))
     }
 
   def decontaminate(spark: SparkSession, dir: String): DataFrame = {
@@ -833,7 +830,7 @@ object TextOps {
           |    IF(x = acc.prev, acc.run + 1, CAST(1 AS BIGINT)) AS run,
           |    GREATEST(acc.best, IF(x = acc.prev, acc.run + 1, CAST(1 AS BIGINT))) AS best),
           |  acc -> acc.best)""".stripMargin
-      Eager(Tables.documents(spark, dir)
+      Tables.documents(spark, dir)
         .withColumn("toks", toksCol)
         .withColumn("n", size(col("toks")))
         .withColumn("bgs", expr(bigrams))
@@ -844,7 +841,7 @@ object TextOps {
             greatest(col("n") - 1, lit(1)).cast("double"), 6))
         .select(col("doc_id"), col("dup_tok_frac"), col("top_bigram_frac"),
           (col("dup_tok_frac") <= 0.3 && col("top_bigram_frac") <= 0.2)
-            .as("pass_gate")))
+            .as("pass_gate"))
     }
 
   def textRepetition(spark: SparkSession, dir: String): DataFrame =
@@ -1185,52 +1182,49 @@ object TextOps {
     * corpus once and derives every report from the same prediction
     * table. */
   private def nbVerdicts(spark: SparkSession, dir: String): DataFrame =
-    SharedCorpus.memo(spark, "nb_verdicts", dir, "documents")(
-      Eager(nbScoreAll(spark, dir)))
-
-  private def nbScoreAll(spark: SparkSession, dir: String): DataFrame = {
-    // the token frame feeds FOUR consumers (vocab, totals, counts and the
-    // scoring join) inside one action — materialized once via [[Eager]] so
-    // concurrent stages can never race the explode into 4 recomputes
-    val f = Eager(Tables.documents(spark, dir)
-      .select(col("doc_id"), col("lang"), explode(toksCol).as("tok"))
-      .filter(col("tok") =!= ""))
-    // priors feeds TWO consumers (the lang×vocab grid and the final
-    // logprior join) — Eager'd, or each re-scans documents for a
-    // |langs|-row frame (caught by the fixed checkpoint audit, round 10)
-    val priors = Eager(Tables.documents(spark, dir)
-      .groupBy(col("lang").as("l")).agg(count(lit(1)).as("nd"))
-      .withColumn("ntot",
-        sum(col("nd")).over(Window.partitionBy(lit(1))))
-      .withColumn("logprior",
-        round(log(col("nd").cast("double") / col("ntot")), 9)
-          .cast("decimal(18,9)")))
-    val vocab = f.agg(countDistinct(col("tok")).as("v"))
-    val totals = f.groupBy(col("lang").as("l"))
-      .agg(count(lit(1)).as("tl"))
-    val counts = f.groupBy(col("lang").as("l"), col("tok"))
-      .agg(count(lit(1)).as("c"))
-    val langs = priors.select(col("l")).crossJoin(broadcast(vocab))
-      .join(totals, "l")
-    val scored = f.select(col("doc_id"), col("lang"), col("tok"))
-      .crossJoin(broadcast(langs))
-      .join(broadcast(counts), Seq("l", "tok"), "left")
-      .withColumn("logp",
-        round(log((coalesce(col("c"), lit(0L)) + 1).cast("double") /
-          (col("tl") + col("v"))), 9).cast("decimal(18,9)"))
-      .groupBy(col("doc_id"), col("lang"), col("l"))
-      .agg(sum(col("logp")).as("s"))
-      .join(broadcast(priors.select(col("l"), col("logprior"))), "l")
-      .withColumn("score", col("s") + col("logprior"))
-    val w = Window.partitionBy(col("doc_id"))
-      .orderBy(col("score").desc, col("l"))
-    scored.withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1)
-      .select(col("doc_id"), col("lang").as("true_lang"),
-        col("l").as("pred_lang"),
-        (col("l") === col("lang")).as("correct"),
-        col("score").cast("double").as("nb_score"))
-  }
+    SharedCorpus.memo(spark, "nb_verdicts", dir, "documents") {
+      // the token frame feeds FOUR consumers (vocab, totals, counts and the
+      // scoring join) inside one action — materialized once via [[Eager]] so
+      // concurrent stages can never race the explode into 4 recomputes
+      val f = Eager(Tables.documents(spark, dir)
+        .select(col("doc_id"), col("lang"), explode(toksCol).as("tok"))
+        .filter(col("tok") =!= ""))
+      // priors feeds TWO consumers (the lang×vocab grid and the final
+      // logprior join) — Eager'd, or each re-scans documents for a
+      // |langs|-row frame (caught by the fixed checkpoint audit, round 10)
+      val priors = Eager(Tables.documents(spark, dir)
+        .groupBy(col("lang").as("l")).agg(count(lit(1)).as("nd"))
+        .withColumn("ntot",
+          sum(col("nd")).over(Window.partitionBy(lit(1))))
+        .withColumn("logprior",
+          round(log(col("nd").cast("double") / col("ntot")), 9)
+            .cast("decimal(18,9)")))
+      val vocab = f.agg(countDistinct(col("tok")).as("v"))
+      val totals = f.groupBy(col("lang").as("l"))
+        .agg(count(lit(1)).as("tl"))
+      val counts = f.groupBy(col("lang").as("l"), col("tok"))
+        .agg(count(lit(1)).as("c"))
+      val langs = priors.select(col("l")).crossJoin(broadcast(vocab))
+        .join(totals, "l")
+      val scored = f.select(col("doc_id"), col("lang"), col("tok"))
+        .crossJoin(broadcast(langs))
+        .join(broadcast(counts), Seq("l", "tok"), "left")
+        .withColumn("logp",
+          round(log((coalesce(col("c"), lit(0L)) + 1).cast("double") /
+            (col("tl") + col("v"))), 9).cast("decimal(18,9)"))
+        .groupBy(col("doc_id"), col("lang"), col("l"))
+        .agg(sum(col("logp")).as("s"))
+        .join(broadcast(priors.select(col("l"), col("logprior"))), "l")
+        .withColumn("score", col("s") + col("logprior"))
+      val w = Window.partitionBy(col("doc_id"))
+        .orderBy(col("score").desc, col("l"))
+      scored.withColumn("rn", row_number().over(w))
+        .filter(col("rn") === 1)
+        .select(col("doc_id"), col("lang").as("true_lang"),
+          col("l").as("pred_lang"),
+          (col("l") === col("lang")).as("correct"),
+          col("score").cast("double").as("nb_score"))
+    }
 
   // ── Gopher-style rule audit: the published heuristic quality FILTER
   // (Rae et al. 2021 §A1.1) as an explicit per-document rule table —
@@ -1319,7 +1313,7 @@ object TextOps {
     * (element_at is 1-based, so chars i, i+1 ARE substring(txt, i, 2)). */
   private def charBigramCounts(spark: SparkSession, dir: String): DataFrame =
     SharedCorpus.memo(spark, "char_bigram_counts", dir, "documents") {
-      Eager(Tables.documents(spark, dir)
+      Tables.documents(spark, dir)
         .select(col("doc_id"), col("lang"), lower(col("text")).as("txt"))
         .filter(length(col("txt")) >= 2)
         .withColumn("cs", split(col("txt"), ""))
@@ -1329,7 +1323,7 @@ object TextOps {
             " i -> concat(element_at(cs, i), element_at(cs, i + 1)))"))
             .as("bg"))
         .groupBy(col("doc_id"), col("lang"), col("n"), col("bg"))
-        .agg(count(lit(1)).as("c")))
+        .agg(count(lit(1)).as("c"))
     }
 
   def textCharEntropy(spark: SparkSession, dir: String): DataFrame = {
@@ -1756,7 +1750,7 @@ object TextOps {
           .select(col("doc_id").as("eval_id"), col("shingle"))), "shingle")
         .groupBy(col("doc_id"), col("eval_id"))
         .agg(count(lit(1)).as("n_shared"))
-      Eager(inter.join(trainSize, "doc_id"))
+      inter.join(trainSize, "doc_id")
     }
 
   def decontaminateNear(spark: SparkSession, dir: String): DataFrame = {

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.operators.Eager
+import scala.jdk.CollectionConverters._
 
 /** Pins the contract of [[graft.operators.Eager]] — the eager
   * checkpoint helper every multi-consumer composite leans on since
@@ -75,6 +76,50 @@ class EagerSpec extends SparkSuite {
       case l: org.apache.spark.sql.execution.datasources.LogicalRelation => l
     }
     assert(scans.isEmpty)
+  }
+
+  test("Eager is idempotent: Eager(Eager(x)) checkpoints once and " +
+      "returns the inner frame") {
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    val once = Eager(spark.range(40).select((col("id") % 7).as("k")))
+    val twice = Eager(once)
+    assert(twice eq once)
+    // every local checkpoint registers its RDD with the SparkContext;
+    // ContextCleaner can only remove ids, so new ids count checkpoints
+    assert((sc.getPersistentRDDs.keySet -- before).size === 1)
+  }
+
+  test("a memo value is an Eager leaf with provenance") {
+    val v = graft.operators.SharedCorpus.memo(spark, "eager_spec_leaf",
+      sf0001, "documents")(Tables0.docs(spark, sf0001).groupBy("lang")
+        .count())
+    val leaf = v.queryExecution.analyzed
+    assert(leaf.isInstanceOf[org.apache.spark.sql.execution.LogicalRDD],
+      leaf.getClass.toString)
+    val behind = Eager.planBehind(leaf)
+    assert(behind.exists(_.exists(
+      _.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.Aggregate])),
+      s"no provenance for:\n$leaf")
+  }
+
+  test("one materialization layer: `.localCheckpoint(` appears in " +
+      "src/main only inside Eager, and graft.ml keeps no model cache") {
+    def sources(root: String): Seq[java.nio.file.Path] = {
+      val s = java.nio.file.Files.walk(java.nio.file.Paths.get(root))
+      try s.iterator().asScala.filter(_.toString.endsWith(".scala")).toSeq
+      finally s.close()
+    }
+    def text(p: java.nio.file.Path) =
+      new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
+    val main = sources("src/main/scala")
+    assert(main.nonEmpty, "run from the repository root")
+    val checkpointing = main.filter(p => text(p).contains(".localCheckpoint("))
+      .map(_.getFileName.toString)
+    assert(checkpointing === Seq("Eager.scala"))
+    val mlCaches = sources("src/main/scala/graft/ml")
+      .filter(p => text(p).contains("ConcurrentHashMap"))
+    assert(mlCaches.isEmpty, mlCaches.mkString(", "))
   }
 
   private object Tables0 {

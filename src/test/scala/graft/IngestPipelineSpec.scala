@@ -868,7 +868,8 @@ class IngestPipelineSpec extends SparkSuite {
 
   test("streaming: dedup -> tumbling window CHAINED stateful pipeline " +
     "(watermark declared once, propagated; redelivery counted once)") {
-    // the StreamDemo composition: dedupedStream sets the watermark and
+    // the pipeline's third consumer (the `stream_ingest` benchmark
+    // workload runs it end to end): dedupedStream sets the watermark and
     // dropDuplicatesWithinWatermark; the window aggregate downstream
     // must NOT call withWatermark again (Spark rejects redefinition) —
     // this pins both the API shape and the end-to-end semantics: a

@@ -3,10 +3,11 @@ package graft
 import org.apache.spark.sql.functions._
 import graft.operators.SharedCorpus
 
-/** Pins the round-13 LRU bound of [[graft.operators.SharedCorpus]]: a
+/** Pins the residency policy of [[graft.operators.SharedCorpus]]: a
   * long multi-corpus session must not accumulate checkpointed frames
   * (strong refs = blocks the ContextCleaner can never reclaim) beyond
-  * [[SharedCorpus.MaxCorpora]] live corpora. */
+  * [[SharedCorpus.MaxCorpora]] live corpora, and a frame whose blocks are
+  * gone is rebuilt rather than served. */
 class SharedCorpusSpec extends SparkSuite {
 
   /** A throwaway single-table corpus directory: one tiny parquet store
@@ -25,9 +26,8 @@ class SharedCorpusSpec extends SparkSuite {
     def frame(dir: String) = SharedCorpus.memo(
       spark, "spec_frame", dir, "documents") {
       builds += 1
-      operators.Eager(
-        graft.sources.Tables.table(spark, dir, "documents").agg(
-          count(lit(1)).as("n")))
+      graft.sources.Tables.table(spark, dir, "documents").agg(
+        count(lit(1)).as("n"))
     }
     dirs.foreach(frame) // MaxCorpora + 1 distinct corpora
     assert(builds === SharedCorpus.MaxCorpora + 1)
@@ -47,10 +47,10 @@ class SharedCorpusSpec extends SparkSuite {
       "corpus evict together") {
     val a = mkCorpus("multiA")
     SharedCorpus.memo(spark, "spec_k1", a, "documents")(
-      operators.Eager(graft.sources.Tables.table(spark, a, "documents")))
+      graft.sources.Tables.table(spark, a, "documents"))
     SharedCorpus.memo(spark, "spec_k2", a, "documents")(
-      operators.Eager(graft.sources.Tables.table(spark, a, "documents")
-        .agg(count(lit(1)).as("n"))))
+      graft.sources.Tables.table(spark, a, "documents")
+        .agg(count(lit(1)).as("n")))
     assert(SharedCorpus.resident(spark, "spec_k1", a, "documents"))
     assert(SharedCorpus.resident(spark, "spec_k2", a, "documents"))
     // push MaxCorpora fresh corpora through: corpus `a` (now the LRU)
@@ -58,7 +58,7 @@ class SharedCorpusSpec extends SparkSuite {
     (1 to SharedCorpus.MaxCorpora).foreach { i =>
       val d = mkCorpus(s"multiB$i")
       SharedCorpus.memo(spark, "spec_k1", d, "documents")(
-        operators.Eager(graft.sources.Tables.table(spark, d, "documents")))
+        graft.sources.Tables.table(spark, d, "documents"))
     }
     assert(!SharedCorpus.resident(spark, "spec_k1", a, "documents"))
     assert(!SharedCorpus.resident(spark, "spec_k2", a, "documents"))
@@ -70,8 +70,8 @@ class SharedCorpusSpec extends SparkSuite {
     var builds = 0
     def frame() = SharedCorpus.memo(spark, "spec_rw", d, "documents") {
       builds += 1
-      operators.Eager(graft.sources.Tables.table(spark, d, "documents")
-        .agg(count(lit(1)).as("n")))
+      graft.sources.Tables.table(spark, d, "documents")
+        .agg(count(lit(1)).as("n"))
     }
     frame(); frame()
     assert(builds === 1) // memo hit on the unchanged store
@@ -84,5 +84,29 @@ class SharedCorpusSpec extends SparkSuite {
     assert(builds === 2) // rebuilt under the new fingerprint
     assert(SharedCorpus.liveEntries <= before,
       "stale-fingerprint entry was stranded after an in-place rewrite")
+  }
+
+  test("a memo hit whose checkpoint blocks are gone is rebuilt once, " +
+      "with the same rows") {
+    val d = mkCorpus("lost")
+    var builds = 0
+    def frame() = SharedCorpus.memo(spark, "spec_lost", d, "documents") {
+      builds += 1
+      graft.sources.Tables.table(spark, d, "documents")
+        .select((col("doc_id") * 3).as("x"))
+    }
+    val rows = frame().collect().map(_.getLong(0)).sorted.toSeq
+    assert(builds === 1)
+    // drop the checkpoint's blocks, as a lost executor or an eviction
+    // would: every read of the old frame now fails
+    val rddId = org.apache.spark.sql.GraftSqlBridge
+      .checkpointRddId(frame().queryExecution.analyzed)
+    assert(rddId.isDefined, "memo value is not a checkpointed leaf")
+    spark.sparkContext.getPersistentRDDs(rddId.get).unpersist(blocking = true)
+    val again = frame()
+    assert(builds === 2, "lost blocks were served instead of rebuilt")
+    assert(again.collect().map(_.getLong(0)).sorted.toSeq === rows)
+    frame()
+    assert(builds === 2) // the rebuilt entry is a plain hit
   }
 }
