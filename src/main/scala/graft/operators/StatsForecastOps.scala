@@ -565,16 +565,12 @@ private[operators] trait StatsForecastOps extends StatsOpsBase {
   }
 
   protected val forecastKeys: Seq[Key] = Seq(
-    Key("forecast_ar2", forecastAr2, Some(
-      """WITH daily AS (
-        |  SELECT event_type, CAST(CAST(ts AS TIMESTAMP) AS DATE) AS day,
-        |    sum(CAST("value" AS DECIMAL(18,2))) AS v
-        |  FROM events GROUP BY 1, 2),
-        |lg AS (
+    Key("forecast_ar2", forecastAr2, Some(duckDailyV +
+      """lg AS (
         |  SELECT a.event_type, l.lag, a.v, b.v AS pv
-        |  FROM daily a
+        |  FROM dv a
         |  CROSS JOIN (SELECT unnest(range(1, 3)) AS lag) l
-        |  JOIN daily b ON b.event_type = a.event_type
+        |  JOIN dv b ON b.event_type = a.event_type
         |    AND b.day = a.day - CAST(l.lag AS INTEGER)),
         |m AS (
         |  SELECT event_type, lag, count(*) AS n,
@@ -600,7 +596,7 @@ private[operators] trait StatsForecastOps extends StatsOpsBase {
         |    row_number() OVER (PARTITION BY event_type ORDER BY day)
         |      AS rn,
         |    count(*) OVER (PARTITION BY event_type) AS m
-        |  FROM daily),
+        |  FROM dv),
         |lastv AS (SELECT event_type, CAST(any_value(m) AS BIGINT)
         |      AS n_days,
         |    CAST(sum(CAST(v AS DECIMAL(18,2))) AS DOUBLE) AS sv,
@@ -625,17 +621,13 @@ private[operators] trait StatsForecastOps extends StatsOpsBase {
         |    AS stationary
         |FROM f ORDER BY event_type""".stripMargin)),
     Key("forecast_theta", forecastTheta, Some(
-      """WITH RECURSIVE d AS (
-        |  SELECT event_type, CAST(CAST(ts AS TIMESTAMP) AS DATE) AS day,
-        |    CAST(sum(CAST("value" AS DECIMAL(18,2))) * 100 AS BIGINT)
-        |      AS yc
-        |  FROM events GROUP BY 1, 2),
-        |s AS (
-        |  SELECT event_type, yc,
+      "WITH RECURSIVE " + duckDailyTyped.drop(5) +
+      """s AS (
+        |  SELECT event_type, revc AS yc,
         |    CAST(row_number() OVER (PARTITION BY event_type
         |      ORDER BY day) AS BIGINT) AS t,
         |    CAST(count(*) OVER (PARTITION BY event_type) AS BIGINT) AS n
-        |  FROM d),
+        |  FROM daily),
         |m AS (
         |  SELECT event_type, n, CAST(sum(yc) AS BIGINT) AS syc,
         |    CAST(sum(t * yc) AS BIGINT) AS styc,
@@ -788,14 +780,10 @@ private[operators] trait StatsForecastOps extends StatsOpsBase {
          |       WHEN mean_interval < 1.32 THEN 'erratic'
          |       ELSE 'lumpy' END AS demand_class
          |FROM fin ORDER BY n_points DESC, part LIMIT 50""".stripMargin)),
-    Key("forecast_drift", forecastDrift, Some(
-      """WITH daily AS (
-        |  SELECT event_type, CAST(CAST(ts AS TIMESTAMP) AS DATE) AS day,
-        |    sum(CAST("value" AS DECIMAL(18,2))) AS v
-        |  FROM events GROUP BY 1, 2),
-        |p AS (SELECT *, row_number() OVER wo AS t,
+    Key("forecast_drift", forecastDrift, Some(duckDailyV +
+      """p AS (SELECT *, row_number() OVER wo AS t,
         |    first_value(v) OVER wo2 AS v1
-        |  FROM daily
+        |  FROM dv
         |  WINDOW wo AS (PARTITION BY event_type ORDER BY day),
         |    wo2 AS (PARTITION BY event_type ORDER BY day
         |            ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)),
@@ -808,7 +796,7 @@ private[operators] trait StatsForecastOps extends StatsOpsBase {
         |    CAST(round(abs(CAST(d.v AS DOUBLE) - f.f), 9)
         |         AS DECIMAL(28,9)) AS ed,
         |    abs(d.v - f.vprev) AS en
-        |  FROM daily d JOIN f
+        |  FROM dv d JOIN f
         |    ON f.event_type = d.event_type AND f.day = d.day),
         |g AS (SELECT event_type, CAST(count(*) AS BIGINT) AS n_eval,
         |    sum(ed) AS sd, sum(en) AS sn
@@ -958,16 +946,12 @@ private[operators] trait StatsForecastOps extends StatsOpsBase {
     // explicit middle-pair median on both sides — no engine quantile
     // implementation in the loop; the intercept pass reuses the
     // UNROUNDED slope exactly as the Spark plan does,
-    Key("forecast_mase", forecastMase, Some(
-      """WITH daily AS (
-        |  SELECT event_type, CAST(CAST(ts AS TIMESTAMP) AS DATE) AS day,
-        |    sum(CAST("value" AS DECIMAL(18,2))) AS v
-        |  FROM events GROUP BY 1, 2),
-        |j AS (SELECT a.event_type, a.v, b.v AS v1, c.v AS v7
-        |      FROM daily a
-        |      JOIN daily b ON a.event_type = b.event_type
+    Key("forecast_mase", forecastMase, Some(duckDailyV +
+      """j AS (SELECT a.event_type, a.v, b.v AS v1, c.v AS v7
+        |      FROM dv a
+        |      JOIN dv b ON a.event_type = b.event_type
         |        AND b.day = a.day - 1
-        |      JOIN daily c ON a.event_type = c.event_type
+        |      JOIN dv c ON a.event_type = c.event_type
         |        AND c.day = a.day - 7)
         |SELECT event_type, count(*) AS n_eval,
         |  round(CAST(sum(abs(v - v1)) AS DOUBLE) / count(*), 6) + 0.0
@@ -1012,19 +996,15 @@ private[operators] trait StatsForecastOps extends StatsOpsBase {
         |  round(abs(resid - med) / nullif(mad, 0), 6) + 0.0 AS score,
         |  abs(resid - med) / nullif(mad, 0) > 3.5 AS is_anomaly
         |FROM r0, med, mad ORDER BY day""".stripMargin)),
-    Key("stats_stl_strength", statsStlStrength, Some(
-      """WITH daily AS (
-        |  SELECT event_type, CAST(CAST(ts AS TIMESTAMP) AS DATE) AS day,
-        |    sum(CAST("value" AS DECIMAL(18,2))) AS vd
-        |  FROM events GROUP BY 1, 2),
-        |t AS (SELECT *, count(*) OVER w7 AS cnt7,
-        |        CAST(round(CAST(sum(vd) OVER w7 AS DOUBLE) / 7, 6) + 0.0
+    Key("stats_stl_strength", statsStlStrength, Some(duckDailyV +
+      """t AS (SELECT *, count(*) OVER w7 AS cnt7,
+        |        CAST(round(CAST(sum(v) OVER w7 AS DOUBLE) / 7, 6) + 0.0
         |             AS DECIMAL(24,6)) AS trend6
-        |      FROM daily
+        |      FROM dv
         |      WINDOW w7 AS (PARTITION BY event_type ORDER BY day
         |        ROWS BETWEEN 3 PRECEDING AND 3 FOLLOWING)),
         |f AS (SELECT *, dayofweek(day) AS dow,
-        |        CAST(vd - trend6 AS DECIMAL(18,6)) AS det
+        |        CAST(v - trend6 AS DECIMAL(18,6)) AS det
         |      FROM t WHERE cnt7 = 7),
         |s AS (SELECT event_type, dow,
         |        CAST(round(CAST(sum(det) AS DOUBLE) / count(*), 6) + 0.0
@@ -1033,7 +1013,7 @@ private[operators] trait StatsForecastOps extends StatsOpsBase {
         |c AS (SELECT f.event_type,
         |        CAST(f.det - s.seas AS DECIMAL(18,6)) AS resid,
         |        f.det AS det,
-        |        CAST(f.vd - s.seas AS DECIMAL(18,6)) AS des
+        |        CAST(f.v - s.seas AS DECIMAL(18,6)) AS des
         |      FROM f JOIN s
         |        ON s.event_type = f.event_type AND s.dow = f.dow),
         |m AS (SELECT event_type, CAST(count(*) AS BIGINT) AS n,

@@ -503,16 +503,19 @@ private[operators] trait StatsOpsBase {
       |""".stripMargin
 
   /** Shared daily-cents-per-type oracle CTE, the twin of [[dailyTyped]]
-    * (plus the integer day index dayno). */
-  protected val duckDailyTyped: String =
-    """WITH daily AS (
+    * (plus the integer day index dayno), with any `extra` aggregates over
+    * the same groups. */
+  protected def duckDailyTypedWith(extra: String*): String =
+    s"""WITH daily AS (
       |  SELECT event_type, CAST(CAST(ts AS TIMESTAMP) AS DATE) AS day,
       |    CAST(CAST(ts AS TIMESTAMP) AS DATE) - DATE '1970-01-01'
       |      AS dayno,
       |    CAST(sum(CAST("value" AS DECIMAL(18,2))) * 100 AS BIGINT)
-      |      AS revc
+      |      AS revc${extra.map(",\n    " + _).mkString}
       |  FROM events GROUP BY 1, 2, 3),
       |""".stripMargin
+
+  protected val duckDailyTyped: String = duckDailyTypedWith()
 
   /** [[duckDailyTyped]] plus `d(event_type, day, y)`, the day's revenue
     * as a double in currency units — the series the Holt recursions and
@@ -520,6 +523,17 @@ private[operators] trait StatsOpsBase {
     * double is the correctly rounded decimal sum. */
   protected val duckDailyY: String = duckDailyTyped +
     """d AS (SELECT event_type, day, CAST(revc AS DOUBLE) / 100 AS y
+      |  FROM daily),
+      |""".stripMargin
+
+  /** [[duckDailyTyped]] plus `dv(event_type, day, v)`, the day's revenue
+    * as an exact DECIMAL in currency units — the series the lag moments,
+    * the drift and MASE errors, RSI's gains and the STL split keep in
+    * DECIMAL. revc times DECIMAL 0.01 is exact; DuckDB divides a DECIMAL
+    * in double. */
+  protected val duckDailyV: String = duckDailyTyped +
+    """dv AS (SELECT event_type, day,
+      |    CAST(revc AS DECIMAL(18,0)) * CAST('0.01' AS DECIMAL(3,2)) AS v
       |  FROM daily),
       |""".stripMargin
 

@@ -2148,13 +2148,8 @@ private[operators] trait StatsSeqOps extends StatsOpsBase {
         |  cpk6 AS cpk, cpk6 >= 1.33 AS capable
         |FROM c ORDER BY event_type""".stripMargin)),
     Key("stats_xbar_chart", statsXbarChart, Some(
-      """WITH daily AS (
-        |  SELECT event_type, CAST(CAST(ts AS TIMESTAMP) AS DATE) AS day,
-        |    CAST(count(*) AS BIGINT) AS nd,
-        |    CAST(sum(CAST("value" AS DECIMAL(18,2))) * 100 AS BIGINT)
-        |      AS sc
-        |  FROM events GROUP BY 1, 2),
-        |g AS (SELECT event_type, CAST(count(*) AS BIGINT) AS n,
+      duckDailyTypedWith("CAST(count(*) AS BIGINT) AS nd") +
+      """g AS (SELECT event_type, CAST(count(*) AS BIGINT) AS n,
         |    CAST(sum(CAST("value" AS DECIMAL(18,2))) AS DOUBLE) AS s1,
         |    CAST(sum(CAST("value" AS DECIMAL(18,2))
         |             * CAST("value" AS DECIMAL(18,2))) AS DOUBLE) AS s2
@@ -2164,8 +2159,8 @@ private[operators] trait StatsSeqOps extends StatsOpsBase {
         |      AS gsd
         |  FROM g),
         |z AS (SELECT d.*, gr.gm, gr.gsd,
-        |    CAST(d.sc AS DOUBLE) / (100 * d.nd) AS xbar,
-        |    round((CAST(d.sc AS DOUBLE) / (100 * d.nd) - gr.gm)
+        |    CAST(d.revc AS DOUBLE) / (100 * d.nd) AS xbar,
+        |    round((CAST(d.revc AS DOUBLE) / (100 * d.nd) - gr.gm)
         |      / (gr.gsd / sqrt(CAST(d.nd AS DOUBLE))), 6) + 0.0 AS z6
         |  FROM daily d JOIN gr USING (event_type)),
         |zz AS (SELECT *, abs(z6) > 3.0 AS violation FROM z),
@@ -2450,20 +2445,17 @@ private[operators] trait StatsSeqOps extends StatsOpsBase {
         |SELECT event_type, n AS n_days, round(dev, 6) + 0.0 AS g_stat,
         |  DATE '1970-01-01' + CAST(dayno AS INTEGER) AS outlier_day
         |FROM rk WHERE rn = 1 ORDER BY event_type""".stripMargin)),
-    Key("stats_breusch_pagan", statsBreuschPagan, Some(
-      """WITH daily AS (
-        |  SELECT event_type,
-        |    epoch_us(CAST(ts AS TIMESTAMP)) // 86400000000 AS dayno,
-        |    CAST(sum(CAST("value" AS DECIMAL(18,2))) AS DOUBLE) AS v
-        |  FROM events GROUP BY 1, 2),
+    Key("stats_breusch_pagan", statsBreuschPagan, Some(duckDailyTyped +
+      """dd AS (SELECT event_type, dayno, CAST(revc AS DOUBLE) / 100 AS v
+        |  FROM daily),
         |fit AS (SELECT event_type,
         |    regr_slope(v, CAST(dayno AS DOUBLE)) AS b,
         |    regr_intercept(v, CAST(dayno AS DOUBLE)) AS a
-        |  FROM daily GROUP BY 1),
+        |  FROM dd GROUP BY 1),
         |e AS (SELECT d.event_type, d.dayno,
         |    CAST(round(d.v - (f.a + f.b * CAST(d.dayno AS DOUBLE)), 6)
         |         AS DECIMAL(24,6)) AS e
-        |  FROM daily d JOIN fit f USING (event_type)),
+        |  FROM dd d JOIN fit f USING (event_type)),
         |m AS (SELECT event_type, dayno,
         |    CAST(round(CAST(e AS DOUBLE) * CAST(e AS DOUBLE) * 1000000,
         |               0) AS DECIMAL(18,0)) AS e2m
@@ -2791,21 +2783,18 @@ private[operators] trait StatsSeqOps extends StatsOpsBase {
          |FROM m ORDER BY event_type""".stripMargin)),
     // residuals snapped to 6 dp then DECIMAL-summed — order-free; the
     // regr_* builtins agree cross-engine far inside the snap,
-    Key("stats_dw", statsDw, Some(
-      """WITH daily AS (
-        |  SELECT event_type,
-        |    epoch_us(CAST(ts AS TIMESTAMP)) // 86400000000 AS dayno,
-        |    CAST(sum(CAST("value" AS DECIMAL(18,2))) AS DOUBLE) AS v
-        |  FROM events GROUP BY 1, 2),
+    Key("stats_dw", statsDw, Some(duckDailyTyped +
+      """dd AS (SELECT event_type, dayno, CAST(revc AS DOUBLE) / 100 AS v
+        |  FROM daily),
         |fit AS (SELECT event_type,
         |    regr_slope(v, CAST(dayno AS DOUBLE)) AS b,
         |    regr_intercept(v, CAST(dayno AS DOUBLE)) AS a,
         |    count(*) AS n
-        |  FROM daily GROUP BY 1),
+        |  FROM dd GROUP BY 1),
         |r AS (SELECT d.event_type, dayno, n,
         |    CAST(round(v - (a + b * CAST(dayno AS DOUBLE)), 6)
         |      AS DECIMAL(24,6)) AS e
-        |  FROM daily d JOIN fit USING (event_type)),
+        |  FROM dd d JOIN fit USING (event_type)),
         |x AS (SELECT event_type, n, e,
         |    e - lag(e) OVER (PARTITION BY event_type ORDER BY dayno) AS de
         |  FROM r)
@@ -2814,23 +2803,20 @@ private[operators] trait StatsSeqOps extends StatsOpsBase {
         |    6) + 0.0 AS dw
         |FROM x GROUP BY 1 ORDER BY event_type""".stripMargin)),
     // integer run/sign counts; one double division + sqrt at the end,
-    Key("stats_runs", statsRuns, Some(
-      """WITH daily AS (
-        |  SELECT event_type,
-        |    epoch_us(CAST(ts AS TIMESTAMP)) // 86400000000 AS dayno,
-        |    CAST(sum(CAST("value" AS DECIMAL(18,2))) AS DOUBLE) AS v
-        |  FROM events GROUP BY 1, 2),
+    Key("stats_runs", statsRuns, Some(duckDailyTyped +
+      """dd AS (SELECT event_type, dayno, CAST(revc AS DOUBLE) / 100 AS v
+        |  FROM daily),
         |med AS (
         |  SELECT event_type, avg(v) AS med FROM (
         |    SELECT event_type, v,
         |      row_number() OVER (PARTITION BY event_type ORDER BY v) AS rn,
         |      count(*) OVER (PARTITION BY event_type) AS m
-        |    FROM daily) t
+        |    FROM dd) t
         |  WHERE rn = (m + 1) // 2 OR rn = (m + 2) // 2
         |  GROUP BY 1),
         |f AS (SELECT d.event_type, dayno,
         |    CASE WHEN v > med THEN 1 ELSE 0 END AS s
-        |  FROM daily d JOIN med USING (event_type)
+        |  FROM dd d JOIN med USING (event_type)
         |  WHERE v <> med),
         |c AS (SELECT event_type, s,
         |    CASE WHEN lag(s) OVER w IS NULL OR lag(s) OVER w <> s

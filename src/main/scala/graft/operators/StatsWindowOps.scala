@@ -1176,12 +1176,8 @@ private[operators] trait StatsWindowOps extends StatsOpsBase {
         |LEFT JOIN d c ON a.event_type = c.event_type
         |  AND c.day = a.day - 7
         |ORDER BY a.event_type, a.day""".stripMargin)),
-    Key("window_rsi", windowRsi, Some(
-      """WITH daily AS (
-        |  SELECT event_type, CAST(CAST(ts AS TIMESTAMP) AS DATE) AS day,
-        |    sum(CAST("value" AS DECIMAL(18,2))) AS v
-        |  FROM events GROUP BY 1, 2),
-        |d AS (SELECT *, v - lag(v) OVER wo AS delta FROM daily
+    Key("window_rsi", windowRsi, Some(duckDailyV +
+      """d AS (SELECT *, v - lag(v) OVER wo AS delta FROM dv
         |      WINDOW wo AS (PARTITION BY event_type ORDER BY day)),
         |f AS (SELECT * FROM d WHERE delta IS NOT NULL),
         |r AS (SELECT event_type, day,

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -184,93 +185,95 @@ object IngestPipeline {
     *
     * INCREMENTAL: the store is laid out as `bucket=N` subdirectories keyed
     * by [[bucketOf]], and a micro-batch rewrites ONLY the buckets its rows
-    * hash into — O(batch), not O(store). (The previous form re-read and
-    * rewrote the whole store every batch: correct, but a scale-killer once
-    * the store dwarfs a micro-batch.) Each touched bucket does the
-    * read-union-dedupe-swap against its own directory with the two-rename
-    * crash-safety preserved PER BUCKET; untouched buckets are not opened,
-    * so their files stay byte-identical (pinned by IngestPipelineSpec).
-    * The window order is a TOTAL order over the stored columns:
-    * redelivered duplicates (same city+dt, possibly corrected values)
-    * resolve identically on every run. AT SCALE the same foreachBatch
-    * body targets a table format's MERGE (Delta/Iceberg) — this bucket
-    * layout is exactly the file-pruning that MERGE buys, hand-rolled on
-    * plain parquet. */
+    * hash into — O(batch), not O(store). One read of the touched bucket
+    * dirs that exist, unioned with the batch rows, keeps rank 1 per city
+    * and goes out in ONE partitioned write through [[rewritePartitions]],
+    * whose per-bucket swaps keep the two-rename crash safety; untouched
+    * buckets are not opened, so their files stay byte-identical (pinned
+    * by IngestPipelineSpec). The window order is a TOTAL order over the
+    * stored columns: redelivered duplicates (same city+dt, possibly
+    * corrected values) resolve identically on every run, and a retry
+    * after a crash at any rename re-merges to the same rows. AT SCALE the
+    * same foreachBatch body targets a table format's MERGE (Delta/Iceberg)
+    * — this bucket layout is exactly the file-pruning that MERGE buys,
+    * hand-rolled on plain parquet. */
   def upsertBatch(batch: DataFrame, store: String): Unit = {
-    val conf = batch.sparkSession.sparkContext.hadoopConfiguration
-    val fs = new org.apache.hadoop.fs.Path(store).getFileSystem(conf)
-    recoverBuckets(fs, store)
-    // persisted for the batch's lifetime: this function runs 1 + |touched
-    // buckets| actions over the micro-batch, and an UNcached batch frame
-    // re-reads the SOURCE per action — IngestPipelineSpec's wire test
-    // caught the source being read 4× per epoch via numInputRows, which
-    // against a real broker is 4 fetches of the same offsets. The collect
-    // below materializes the cache before the per-bucket consumers run
-    // (cache-then-action, so no cold-cache race), and the unpersist is
-    // safe because every action completes inside this call.
+    val spark = batch.sparkSession
+    val fs = fsOf(spark, store)
+    recoverDirs(fs, store, "bucket=")
+    // persisted for the batch's lifetime: the bucket collect and the write
+    // are two actions over the micro-batch, and an UNcached batch frame
+    // re-reads the SOURCE per action (against a real broker, a second
+    // fetch of the same offsets; IngestPipelineSpec's wire test counts
+    // numInputRows). Both actions complete inside this call, so the
+    // unpersist is safe.
     val slim = batch.select("city", "temperature", "humidity", "dt")
       .withColumn("bucket", bucketOf(col("city")))
       .persist()
     try {
       // ≤ StoreBuckets ids — bounded by construction (bucketOf is
       // pmod(hash, StoreBuckets)), and ENFORCED: a refactor that widens
-      // bucketOf without revisiting this driver-side loop must fail here,
-      // not OOM the driver. limit(+1) bounds the collect itself, so even
-      // the failing path never materializes an unbounded id set.
+      // bucketOf without revisiting this driver-side collect must fail
+      // here, not OOM the driver. limit(+1) bounds the collect itself.
       val touched = slim.select("bucket").distinct()
         .limit(StoreBuckets + 1)
-        .collect().map(_.getInt(0)).sorted
+        .collect().map(_.getInt(0))
       require(touched.length <= StoreBuckets,
         s"upsertBatch: > $StoreBuckets distinct bucket ids — bucketOf no " +
           "longer matches the StoreBuckets driver-side bound")
-      touched.foreach { b =>
-        mergeSwapBucket(slim.filter(col("bucket") === b).drop("bucket"),
-          fs, s"$store/bucket=$b", s"$store.tmp/bucket=$b",
-          s"$store.bak/bucket=$b")
-      }
+      val stored = touched.map(b => s"$store/bucket=$b")
+        .filter(d => fs.exists(new Path(d)))
+      val rows =
+        if (stored.isEmpty) slim
+        else spark.read.schema(slim.schema).option("basePath", store)
+          .parquet(stored.toSeq: _*).unionByName(slim)
+      // a city's rows share its bucket, so a window partitioned by
+      // (bucket, city) runs on the bucket partitioning the write needs:
+      // the merge and the write share one shuffle
+      val w = org.apache.spark.sql.expressions.Window
+        .partitionBy(col("bucket"), col("city")).orderBy(desc("dt"),
+          desc("temperature"), desc("humidity")) // total over stored cols
+      // an empty (no-data) micro-batch touches nothing and writes nothing
+      if (touched.nonEmpty)
+        rewritePartitions(fs, rows.repartition(col("bucket"))
+          .withColumn("rn", row_number().over(w))
+          .filter(col("rn") === 1).drop("rn"), store, "bucket")
     } finally slim.unpersist()
   }
 
-  /** Restore any bucket whose previous batch died between its two renames:
-    * the swap keeps a bucket's previous data in exactly one of
-    * {store/bucket=N, store.bak/bucket=N} at every instant, so a missing
-    * store-side dir with a surviving .bak twin is restored before anything
-    * reads the store. Runs over ALL buckets (one listing), not just the
-    * batch's — a crashed bucket must not stay invisible until its city
-    * happens to recur. */
-  private def recoverBuckets(fs: org.apache.hadoop.fs.FileSystem,
-      store: String): Unit = recoverDirs(fs, store, "bucket=")
+  private def fsOf(spark: SparkSession, path: String): FileSystem =
+    new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
   /** The all-partitions sweep shared by the bucket and day stores: any
     * `<prefix>X` dir stranded ONLY in `.bak` (crash between the two
-    * renames) is restored before anything reads or writes the store —
-    * including partitions no later batch will ever touch again. */
-  private def recoverDirs(fs: org.apache.hadoop.fs.FileSystem,
-      store: String, prefix: String): Unit = {
-    def p(s: String) = new org.apache.hadoop.fs.Path(s)
-    val bakRoot = p(store + ".bak")
+    * renames of [[swapDir]]) is restored before anything reads or writes
+    * the store. Runs over ALL partitions (one listing), not just the
+    * batch's — a crashed partition must not stay invisible until a later
+    * batch happens to touch it again, which may be never. */
+  private def recoverDirs(fs: FileSystem, store: String,
+      prefix: String): Unit = {
+    val bakRoot = new Path(store + ".bak")
     if (fs.exists(bakRoot)) {
-      fs.mkdirs(p(store))
+      fs.mkdirs(new Path(store))
       fs.listStatus(bakRoot).foreach { st =>
         val name = st.getPath.getName
-        if (name.startsWith(prefix) && !fs.exists(p(s"$store/$name")))
-          require(fs.rename(st.getPath, p(s"$store/$name")),
+        if (name.startsWith(prefix) && !fs.exists(new Path(s"$store/$name")))
+          require(fs.rename(st.getPath, new Path(s"$store/$name")),
             s"partition recovery rename $name failed")
       }
     }
   }
 
-  /** The two-rename crash-safe swap shared by the bucket store, the day
-    * stores, and [[compactStore]]: `tmp` (fully written) replaces `dir`,
-    * with the previous `dir` parked in `bak` for exactly the window
-    * between the two renames — so at every instant the partition's
-    * previous data exists in exactly one of {dir, bak} and
-    * [[recoverDirs]] can always restore it. Every rename result is
-    * CHECKED (a false return — cross-filesystem tmp, permissions — must
-    * fail the batch, not silently drop data). */
-  private def swapDir(fs: org.apache.hadoop.fs.FileSystem,
+  /** The two-rename crash-safe swap behind [[rewritePartitions]]: `tmp`
+    * (fully written) replaces `dir`, with the previous `dir` parked in
+    * `bak` for exactly the window between the two renames — so at every
+    * instant the partition's previous data exists in exactly one of
+    * {dir, bak} and [[recoverDirs]] can always restore it. Every rename
+    * result is CHECKED (a false return — cross-filesystem tmp,
+    * permissions — must fail the batch, not silently drop data). */
+  private def swapDir(fs: FileSystem,
       dir: String, tmp: String, bak: String): Unit = {
-    def p(s: String) = new org.apache.hadoop.fs.Path(s)
+    def p(s: String) = new Path(s)
     def mv(from: String, to: String): Unit =
       require(fs.rename(p(from), p(to)), s"rename $from -> $to failed")
     fs.delete(p(bak), true)
@@ -281,30 +284,23 @@ object IngestPipeline {
     fs.delete(p(bak), true)
   }
 
-  /** Read-union-dedupe-write-swap for ONE bucket directory. The bucket
-    * path is never read and written by the same job (the merge writes to
-    * `tmp`), so a lost cache block can never recompute against a
-    * half-truncated store; foreachBatch retries idempotently because the
-    * merge is deterministic over {recovered bucket ∪ batch rows}. */
-  private def mergeSwapBucket(rows: DataFrame,
-      fs: org.apache.hadoop.fs.FileSystem,
-      bdir: String, tmp: String, bak: String): Unit = {
-    val spark = rows.sparkSession
-    val merged0 =
-      if (fs.exists(new org.apache.hadoop.fs.Path(bdir)))
-        spark.read.parquet(bdir).unionByName(rows)
-      else rows
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("city")).orderBy(desc("dt"),
-        desc("temperature"), desc("humidity")) // total over stored cols
-    val merged = merged0
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1).drop("rn")
-    // one file per bucket: a bucket is sized to one task's rewrite budget
-    // (see StoreBuckets), so the shuffle's N output partitions would just
-    // seed the small-files problem compactStore exists to clean up
-    merged.coalesce(1).write.mode("overwrite").parquet(tmp)
-    swapDir(fs, bdir, tmp, bak)
+  /** The one store rewrite, shared by the bucket store, the day stores
+    * and [[compactStore]]: `parts` carries the partition column `p` and
+    * holds the full new content of every partition it names. It is
+    * written ONCE to `store.tmp`, hash-partitioned by `p` so each `p=v`
+    * dir gets one file, then each written dir replaces its store twin
+    * through [[swapDir]], in sorted order. The write never reads and
+    * writes the same path, so a lost cache block can never recompute
+    * against a half-swapped store, and partitions absent from `parts` are
+    * not opened. */
+  private def rewritePartitions(fs: FileSystem, parts: DataFrame,
+      store: String, p: String): Unit = {
+    val tmp = store + ".tmp"
+    parts.repartition(col(p)).write.partitionBy(p).mode("overwrite")
+      .parquet(tmp)
+    fs.listStatus(new Path(tmp)).map(_.getPath.getName)
+      .filter(_.startsWith(p + "=")).sorted
+      .foreach(n => swapDir(fs, s"$store/$n", s"$tmp/$n", s"$store.bak/$n"))
   }
 
   /** Small-files compaction for the partitioned stores (the bucket upsert
@@ -313,34 +309,29 @@ object IngestPipeline {
     * accumulates a small-files problem — more tasks, more open()s, more
     * namenode pressure at scale — even though each partition's LOGICAL
     * content is one city set or one sketch row. This maintenance pass
-    * rewrites each `<prefix>X` partition dir holding more than `maxFiles`
-    * data files into a single file via the same two-rename [[swapDir]]
-    * (readers never observe a partial partition; a crash mid-compaction
-    * is recovered by the stores' normal [[recoverDirs]] sweep). Content
-    * is unchanged by construction — read-coalesce-write of the same rows.
-    * O(oversized partitions) work; untouched partitions are not opened.
-    * Run out-of-band (a maintenance tick between batches), like a table
-    * format's OPTIMIZE. */
+    * rewrites every `<prefix>X` partition dir holding more than
+    * `maxFiles` data files into a single file, all in one
+    * [[rewritePartitions]] (readers never observe a partial partition; a
+    * crash mid-compaction is recovered by the stores' normal
+    * [[recoverDirs]] sweep). Content is unchanged by construction — the
+    * same rows, read with their partition value and written back under
+    * it. O(oversized partitions) work; untouched partitions are not
+    * opened. Run out-of-band (a maintenance tick between batches), like a
+    * table format's OPTIMIZE. */
   def compactStore(spark: SparkSession, store: String, prefix: String,
       maxFiles: Int = 1): Unit = {
-    val root = new org.apache.hadoop.fs.Path(store)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(root)) return
+    val fs = fsOf(spark, store)
+    if (!fs.exists(new Path(store))) return
     recoverDirs(fs, store, prefix)
-    fs.listStatus(root)
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith(prefix))
-      .foreach { st =>
-        val name = st.getPath.getName
-        val nData = fs.listStatus(st.getPath)
-          .count(_.getPath.getName.endsWith(".parquet"))
-        if (nData > maxFiles) {
-          val (dir, tmp, bak) =
-            (s"$store/$name", s"$store.tmp/$name", s"$store.bak/$name")
-          spark.read.parquet(dir).coalesce(1)
-            .write.mode("overwrite").parquet(tmp)
-          swapDir(fs, dir, tmp, bak)
-        }
-      }
+    val oversized = fs.listStatus(new Path(store))
+      .filter(st => st.isDirectory && st.getPath.getName.startsWith(prefix) &&
+        fs.listStatus(st.getPath)
+          .count(_.getPath.getName.endsWith(".parquet")) > maxFiles)
+      .map(st => s"$store/${st.getPath.getName}")
+    if (oversized.nonEmpty)
+      rewritePartitions(fs, spark.read.option("basePath", store)
+        .option("mergeSchema", "true").parquet(oversized.toSeq: _*),
+        store, prefix.stripSuffix("="))
   }
 
   /** Wire [[upsertBatch]] as a streaming sink. */
@@ -373,8 +364,8 @@ object IngestPipeline {
     mergeDayStore(
       batch.select(to_date(col("obs_ts")).as("day"), col("temperature")),
       store, batchId, queryId,
-      df => df.agg(QuantileSketchAgg(col("temperature"), SketchAlpha).as("sk")),
-      df => df.agg(QuantileMergeAgg(col("sk")).as("sk")))
+      QuantileSketchAgg(col("temperature"), SketchAlpha),
+      QuantileMergeAgg(col("sk")))
   }
 
   /** The stable identity of the streaming query that owns `checkpoint` —
@@ -389,7 +380,7 @@ object IngestPipeline {
     * counts.) Read lazily per batch — KB-sized file, OS-cached. */
   private[streaming] def checkpointQueryId(spark: SparkSession,
       checkpoint: String): String = {
-    val path = new org.apache.hadoop.fs.Path(checkpoint, "metadata")
+    val path = new Path(checkpoint, "metadata")
     val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(path)) "batch"
     else {
@@ -404,43 +395,43 @@ object IngestPipeline {
     }
   }
 
+  /** Most distinct days one micro-batch may touch before [[mergeDayStore]]
+    * refuses: 400 covers a full year plus watermark slop of late days,
+    * while keeping the per-batch day collect ≈10 KB and the guard read to
+    * 400 one-row files. Exceeding it means a batch is really a bulk
+    * backfill, which belongs in bounded slices. */
+  private[graft] val MaxDaysPerBatch = 400
+
   /** The per-day mergeable-sketch store discipline, shared by the
-    * quantile and Count-Min stores: for each day the batch touches, fold
-    * that day's rows into ONE sketch row (`sketchOf`), merge it with the
-    * stored row (`mergeOf` over their union), and swap the day dir with
-    * the two-rename crash-safe sequence of [[upsertBatch]]. Untouched
-    * day dirs are never rewritten — O(touched days), not O(store).
+    * quantile and Count-Min stores: fold the batch's rows into ONE sketch
+    * row per day (`sketch`), merge it with that day's stored row (`merge`
+    * over their union, grouped by day), and write every merged day in one
+    * [[rewritePartitions]], whose per-day swaps keep the two-rename crash
+    * safety. Untouched day dirs are never opened — O(touched days), not
+    * O(store).
     *
     * Two failure modes [[upsertBatch]]'s rank-1 dedupe absorbs for free
     * need explicit handling here, because counter ADDITION is not
     * idempotent:
-    *  - REPLAY: the stored row carries the (query_id, batch_id) of the
-    *    last batch merged into it; a foreachBatch retry of that same
-    *    batch (only the most recent uncommitted batch can replay) finds
-    *    its own pair and skips the day instead of double-counting. The
-    *    query id half ([[checkpointQueryId]]) is what makes the guard
-    *    safe against CHECKPOINT RESETS: a new checkpoint means new batch
-    *    ids from 0, and without the query id a colliding id would
-    *    silently drop the new query's first batches.
+    *  - REPLAY: each stored row carries the (query_id, batch_id) of the
+    *    last batch merged into it; one grouped read of the touched days
+    *    finds the days a foreachBatch retry of that same batch (only the
+    *    most recent uncommitted batch can replay) already merged, and
+    *    those days are skipped instead of double-counted — including a
+    *    retry after a crash between two days' swaps, which merges only
+    *    the days still missing. The query id half
+    *    ([[checkpointQueryId]]) is what makes the guard safe against
+    *    CHECKPOINT RESETS: a new checkpoint means new batch ids from 0,
+    *    and without the query id a colliding id would silently drop the
+    *    new query's first batches.
     *  - STRANDED .bak: the swap is recovered by an all-days sweep up
     *    front ([[recoverDirs]]), not per-touched-day — a crash on the
     *    LAST batch that would ever touch a day must not leave that day
     *    invisible to readers forever. */
-  /** Most distinct days one micro-batch may touch before [[mergeDayStore]]
-    * refuses: 400 covers a full year plus watermark slop of late days at
-    * one swap job each (~seconds of driver work), while keeping the
-    * per-batch day collect ≈10 KB. Exceeding it means a batch is really a
-    * bulk backfill, which belongs in bounded slices. */
-  private[graft] val MaxDaysPerBatch = 400
-
   private[graft] def mergeDayStore(withDay: DataFrame, store: String, batchId: Long,
-      queryId: String,
-      sketchOf: DataFrame => DataFrame,
-      mergeOf: DataFrame => DataFrame): Unit = {
+      queryId: String, sketch: Column, merge: Column): Unit = {
     val spark = withDay.sparkSession
-    val conf = spark.sparkContext.hadoopConfiguration
-    val fs = new org.apache.hadoop.fs.Path(store).getFileSystem(conf)
-    def p(s: String) = new org.apache.hadoop.fs.Path(s)
+    val fs = fsOf(spark, store)
     recoverDirs(fs, store, "day=")
     // Days-per-batch is watermark-bounded in steady state, but a
     // checkpoint-reset backfill (or a replay of months of broker backlog
@@ -448,47 +439,41 @@ object IngestPipeline {
     // DedupOps.SmallGraphEdgeCap caps the union-find collect. limit(+1)
     // bounds the collect itself; the failure tells the operator to split
     // the backfill (maxOffsetsPerTrigger / smaller source slices) rather
-    // than silently looping 10⁴ per-day swap jobs off one batch.
+    // than merging years of history off one batch.
     val days = withDay.select("day").distinct()
       .limit(MaxDaysPerBatch + 1)
-      .collect().map(_.getDate(0)).sortBy(_.toString)
+      .collect().map(_.getDate(0).toString)
     require(days.length <= MaxDaysPerBatch,
       s"mergeDayStore: one micro-batch spans > $MaxDaysPerBatch distinct " +
         "days — split the backfill (bound the source per trigger) instead " +
         "of merging years of history in a single batch")
-    days.foreach { d =>
-      val (dayDir, tmp, bak) = (s"$store/day=$d", s"$store.tmp/day=$d",
-        s"$store.bak/day=$d")
-      val batchSk = sketchOf(withDay.filter(col("day") === lit(d)))
-      val merged =
-        if (fs.exists(p(dayDir))) {
-          val stored = spark.read.parquet(dayDir)
-          // both halves must match: same batch id from a DIFFERENT query
-          // incarnation (reset checkpoint) is new data, not a replay.
-          // query_id missing = a pre-round-7 store; its batch_id-only
-          // guard semantics are preserved.
-          val alreadyMerged = stored.columns.contains("batch_id") && {
-            val head = stored
-              .select(max(col("batch_id")).as("b"),
-                if (stored.columns.contains("query_id"))
-                  max(col("query_id")).as("q") else lit(queryId).as("q"))
-              .head()
-            head.getLong(0) == batchId && head.getString(1) == queryId
-          }
-          if (alreadyMerged) {
-            // replayed batch: the merge is done, but the original attempt
-            // may have crashed between its final two steps — clear the
-            // leftover .bak so stale pre-merge data can't linger forever
-            fs.delete(p(bak), true)
-            None
-          } else Some(mergeOf(stored.select(col("sk")).unionByName(batchSk)))
-        } else Some(batchSk)
-      merged.foreach { out =>
-        out.withColumn("batch_id", lit(batchId))
-          .withColumn("query_id", lit(queryId))
-          .coalesce(1).write.mode("overwrite").parquet(tmp)
-        swapDir(fs, dayDir, tmp, bak)
-      }
+    val dirs = days.map(d => s"$store/day=$d").filter(d => fs.exists(new Path(d)))
+    // mergeSchema: a pre-round-7 day file has no query_id column
+    val stored = Option.when(dirs.nonEmpty)(spark.read.option("basePath", store)
+      .option("mergeSchema", "true").parquet(dirs.toSeq: _*))
+    // both halves must match: same batch id from a DIFFERENT query
+    // incarnation (reset checkpoint) is new data, not a replay. A missing
+    // query_id = a pre-round-7 store; its batch_id-only guard semantics
+    // are preserved.
+    val done = stored.filter(_.columns.contains("batch_id")).toSeq.flatMap { s =>
+      val q = if (s.columns.contains("query_id"))
+        coalesce(col("query_id"), lit(queryId)) else lit(queryId)
+      s.groupBy("day").agg(max(col("batch_id")).as("b"), max(q).as("q"))
+        .filter(col("b") === batchId && col("q") === queryId)
+        .collect().map(_.getDate(0).toString)
+    }
+    // replayed days: the merge is done, but the original attempt may have
+    // crashed between its final two steps — clear the leftover .bak so
+    // stale pre-merge data can't linger forever
+    done.foreach(d => fs.delete(new Path(s"$store.bak/day=$d"), true))
+    if (done.length < days.length) {
+      val todo = !col("day").cast("string").isin(done: _*)
+      val batchSk = withDay.filter(todo).groupBy("day").agg(sketch.as("sk"))
+      val merged = stored.fold(batchSk)(
+        _.filter(todo).select("day", "sk").unionByName(batchSk))
+        .groupBy("day").agg(merge.as("sk"))
+      rewritePartitions(fs, merged.withColumn("batch_id", lit(batchId))
+        .withColumn("query_id", lit(queryId)), store, "day")
     }
   }
 
@@ -503,8 +488,7 @@ object IngestPipeline {
     mergeDayStore(
       batch.select(to_date(col("obs_ts")).as("day"), col("city")),
       store, batchId, queryId,
-      df => df.agg(CountMinSketchAgg(col("city")).as("sk")),
-      df => df.agg(CountMinMergeAgg(col("sk")).as("sk")))
+      CountMinSketchAgg(col("city")), CountMinMergeAgg(col("sk")))
   }
 
   /** Wire [[cmStoreBatch]] as a streaming sink. */

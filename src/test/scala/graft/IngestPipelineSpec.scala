@@ -866,6 +866,137 @@ class IngestPipelineSpec extends SparkSuite {
     } finally q.stop()
   }
 
+  /** Call sites of the jobs `body` starts, read by a listener. The
+    * listener bus is asynchronous but delivers in order, so a fence job
+    * before `body` and one after it bound the list. */
+  private def jobsStartedBy(body: => Unit): Seq[String] = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val starts = new java.util.concurrent.LinkedBlockingQueue[String]()
+    def prop(js: SparkListenerJobStart, k: String) =
+      Option(js.properties).flatMap(p => Option(p.getProperty(k)))
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit =
+        starts.put(prop(js, "graft.fence").map("fence:" + _).getOrElse(
+          js.stageInfos.map(_.name).mkString(" + ")))
+    }
+    def fence(name: String): Unit = {
+      sc.setLocalProperty("graft.fence", name)
+      try spark.range(1).collect() finally sc.setLocalProperty("graft.fence", null)
+    }
+    def next(): String = Option(starts.poll(60,
+      java.util.concurrent.TimeUnit.SECONDS)).getOrElse(fail("listener bus stalled"))
+    sc.addSparkListener(listener)
+    try {
+      fence("begin")
+      body
+      fence("end")
+      while (next() != "fence:begin") {}
+      Iterator.continually(next()).takeWhile(_ != "fence:end")
+        .filterNot(_.startsWith("fence:")).toSeq
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("jobs per micro-batch do not grow with the partitions it touches") {
+    // the two batches of each pair have the same number of rows, so both
+    // are planned over the same input partitions; only the store
+    // partitions they touch differ
+    val root = java.nio.file.Files.createTempDirectory("graft_jobs")
+    // upsert store: two identical seeded stores, then one batch touching
+    // one bucket and one touching six
+    val cities = (0 until 64).map(i => s"city$i")
+    val bucketOf = cities.toDF("c")
+      .select($"c", IngestPipeline.bucketOf($"c"))
+      .as[(String, Int)].collect().toMap
+    val onePerBucket = cities.groupBy(bucketOf).values.map(_.head).toSeq.sorted
+    assert(onePerBucket.size >= 6)
+    def batchOf(rows: Seq[(String, Long)]) =
+      rows.map { case (c, dt) => (c, 20.0, dt) }.toDF("city", "temperature", "dt")
+        .select($"city", $"temperature", lit(1).as("humidity"), $"dt")
+    val Seq(s1, s6) = Seq("one", "six").map(n => root.resolve(n).toString)
+    Seq(s1, s6).foreach(IngestPipeline.upsertBatch(batchOf(cities.map(_ -> 100L)), _))
+    val upsert1 = jobsStartedBy(IngestPipeline.upsertBatch(
+      batchOf((200L until 206L).map(onePerBucket.head -> _)), s1))
+    val upsert6 = jobsStartedBy(IngestPipeline.upsertBatch(
+      batchOf(onePerBucket.take(6).map(_ -> 200L)), s6))
+    assert(upsert1.size === upsert6.size, s"upsertBatch jobs, 1 bucket $upsert1 vs 6 $upsert6")
+    assert(spark.read.parquet(s6).filter($"dt" === 200L).count() === 6)
+    // Count-Min day store: two identical stores seeded over five days,
+    // then one batch over one day and one over all five
+    val day1 = 1748515200L // 2025-05-29 UTC
+    def obsOn(days: Int, perDay: Int) = (0 until days).flatMap(d => (1 to perDay)
+      .map(i => ("A", day1 + d * 86400L + i * 60L))).toDF("city", "sec")
+      .select($"city", timestamp_seconds($"sec").as("obs_ts"))
+    val Seq(d1, d5) = Seq("day1", "day5").map(n => root.resolve(n).toString)
+    Seq(d1, d5).foreach(IngestPipeline.cmStoreBatch(obsOn(5, 6), _, batchId = 0))
+    val cm1 = jobsStartedBy(IngestPipeline.cmStoreBatch(obsOn(1, 30), d1, batchId = 1))
+    val cm5 = jobsStartedBy(IngestPipeline.cmStoreBatch(obsOn(5, 6), d5, batchId = 1))
+    assert(cm1.size === cm5.size, s"cmStoreBatch jobs, 1 day $cm1 vs 5 $cm5")
+    assert(IngestPipeline.cmStoreCounts(spark, d5, Seq("A")).as[Long].head() === 60)
+  }
+
+  test("day store: a replay after a crash between two days' swaps merges only the day still missing") {
+    // the per-day guard the grouped read must keep: batch 7 swapped day 1
+    // and crashed before day 2's swap; its replay covers both days
+    val store = java.nio.file.Files.createTempDirectory("graft_cmpart")
+      .resolve("store").toString
+    def batchDf(city: String, epoch: Long, n: Int) =
+      (1 to n).map(i => (city, epoch + i * 60L)).toDF("city", "sec")
+        .select($"city", timestamp_seconds($"sec").as("obs_ts"))
+    val day1 = 1748515200L // 2025-05-29 UTC
+    val day2 = day1 + 86400
+    def countOn(day: String) = IngestPipeline
+      .cmStoreCounts(spark, s"$store/day=$day", Seq("A")).as[Long].head()
+    IngestPipeline.cmStoreBatch(batchDf("A", day1, 10).union(batchDf("A", day2, 20)),
+      store, batchId = 6)
+    IngestPipeline.cmStoreBatch(batchDf("A", day1, 30), store, batchId = 7)
+    assert((countOn("2025-05-29"), countOn("2025-05-30")) === ((40L, 20L)))
+    IngestPipeline.cmStoreBatch(batchDf("A", day1, 30).union(batchDf("A", day2, 5)),
+      store, batchId = 7)
+    assert((countOn("2025-05-29"), countOn("2025-05-30")) === ((40L, 25L)))
+  }
+
+  test("upsert store after redelivered, late and incomplete payloads equals " +
+      "the batch latest valid payload per city") {
+    implicit val sqlCtx = spark.sqlContext
+    val store = java.nio.file.Files.createTempDirectory("graft_upsert_eq")
+      .resolve("store").toString
+    val ckpt = java.nio.file.Files.createTempDirectory("graft_upsert_eq_ck").toString
+    def rec(city: String, temp: Option[Double], hum: Int, dt: Long) =
+      s"""{"name":"$city","main":{${temp.fold("")(t => s""""temp":$t,""")}""" +
+        s""""humidity":$hum,"pressure":1},"dt":$dt,"timezone":0}"""
+    val batches = Seq(
+      Seq(rec("A", Some(10.0), 1, 100), rec("B", Some(20.0), 2, 100),
+        rec("C", Some(30.0), 3, 100),
+        rec("D", None, 4, 500)), // incomplete: never stored
+      Seq(rec("A", Some(10.0), 1, 100), // redelivered
+        rec("A", Some(11.0), 1, 200), rec("B", Some(19.0), 2, 50), // late
+        rec("C", None, 3, 300), // incomplete, newer than C's stored row
+        rec("E", Some(50.0), 5, 100)),
+      Seq(rec("A", Some(9.0), 1, 150), // late
+        rec("A", Some(11.0), 1, 200), // redelivered
+        rec("B", Some(21.0), 2, 300), rec("D", Some(40.0), 4, 50),
+        rec("E", Some(50.0), 6, 100))) // same dt, corrected humidity
+    val stream = MemoryStream[String]
+    def start() = IngestPipeline.upsertStream(
+      IngestPipeline.ingest(stream.toDF(), col("value")), store, ckpt)
+    // two micro-batches, a restart from the checkpoint, then the third
+    val q1 = start()
+    try batches.take(2).foreach { b => stream.addData(b: _*); q1.processAllAvailable() }
+    finally q1.stop()
+    val q2 = start()
+    try { stream.addData(batches(2): _*); q2.processAllAvailable() } finally q2.stop()
+    val latest = IngestPipeline.ingest(batches.flatten.toDF("raw"), col("raw"))
+      .select("city", "temperature", "humidity", "dt")
+      .as[(String, Double, Int, Long)].collect()
+      .groupBy(_._1).values.map(_.maxBy(r => (r._4, r._2, r._3))).toSeq.sortBy(_._1)
+    val got = spark.read.parquet(store)
+      .select("city", "temperature", "humidity", "dt")
+      .as[(String, Double, Int, Long)].collect().sortBy(_._1).toSeq
+    assert(got === latest)
+    assert(latest.map(_._1) === Seq("A", "B", "C", "D", "E"))
+  }
+
   test("streaming: dedup -> tumbling window CHAINED stateful pipeline " +
     "(watermark declared once, propagated; redelivery counted once)") {
     // the pipeline's third consumer (the `stream_ingest` benchmark
