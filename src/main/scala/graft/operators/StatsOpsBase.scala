@@ -526,6 +526,14 @@ private[operators] trait StatsOpsBase {
       |  FROM daily),
       |""".stripMargin
 
+  /** [[duckDailyTyped]] plus `dd(event_type, dayno, v)`: [[duckDailyY]]'s
+    * double revenue keyed by the integer day index, the regressor of the
+    * Breusch–Pagan, Durbin–Watson and runs keys. */
+  protected val duckDailyDayno: String = duckDailyTyped +
+    """dd AS (SELECT event_type, dayno, CAST(revc AS DOUBLE) / 100 AS v
+      |  FROM daily),
+      |""".stripMargin
+
   /** [[duckDailyTyped]] plus `dv(event_type, day, v)`, the day's revenue
     * as an exact DECIMAL in currency units — the series the lag moments,
     * the drift and MASE errors, RSI's gains and the STL split keep in

@@ -2445,10 +2445,8 @@ private[operators] trait StatsSeqOps extends StatsOpsBase {
         |SELECT event_type, n AS n_days, round(dev, 6) + 0.0 AS g_stat,
         |  DATE '1970-01-01' + CAST(dayno AS INTEGER) AS outlier_day
         |FROM rk WHERE rn = 1 ORDER BY event_type""".stripMargin)),
-    Key("stats_breusch_pagan", statsBreuschPagan, Some(duckDailyTyped +
-      """dd AS (SELECT event_type, dayno, CAST(revc AS DOUBLE) / 100 AS v
-        |  FROM daily),
-        |fit AS (SELECT event_type,
+    Key("stats_breusch_pagan", statsBreuschPagan, Some(duckDailyDayno +
+      """fit AS (SELECT event_type,
         |    regr_slope(v, CAST(dayno AS DOUBLE)) AS b,
         |    regr_intercept(v, CAST(dayno AS DOUBLE)) AS a
         |  FROM dd GROUP BY 1),
@@ -2783,10 +2781,8 @@ private[operators] trait StatsSeqOps extends StatsOpsBase {
          |FROM m ORDER BY event_type""".stripMargin)),
     // residuals snapped to 6 dp then DECIMAL-summed — order-free; the
     // regr_* builtins agree cross-engine far inside the snap,
-    Key("stats_dw", statsDw, Some(duckDailyTyped +
-      """dd AS (SELECT event_type, dayno, CAST(revc AS DOUBLE) / 100 AS v
-        |  FROM daily),
-        |fit AS (SELECT event_type,
+    Key("stats_dw", statsDw, Some(duckDailyDayno +
+      """fit AS (SELECT event_type,
         |    regr_slope(v, CAST(dayno AS DOUBLE)) AS b,
         |    regr_intercept(v, CAST(dayno AS DOUBLE)) AS a,
         |    count(*) AS n
@@ -2803,10 +2799,8 @@ private[operators] trait StatsSeqOps extends StatsOpsBase {
         |    6) + 0.0 AS dw
         |FROM x GROUP BY 1 ORDER BY event_type""".stripMargin)),
     // integer run/sign counts; one double division + sqrt at the end,
-    Key("stats_runs", statsRuns, Some(duckDailyTyped +
-      """dd AS (SELECT event_type, dayno, CAST(revc AS DOUBLE) / 100 AS v
-        |  FROM daily),
-        |med AS (
+    Key("stats_runs", statsRuns, Some(duckDailyDayno +
+      """med AS (
         |  SELECT event_type, avg(v) AS med FROM (
         |    SELECT event_type, v,
         |      row_number() OVER (PARTITION BY event_type ORDER BY v) AS rn,

@@ -227,16 +227,12 @@ object IngestPipeline {
         if (stored.isEmpty) slim
         else spark.read.schema(slim.schema).option("basePath", store)
           .parquet(stored.toSeq: _*).unionByName(slim)
-      // a city's rows share its bucket, so a window partitioned by
-      // (bucket, city) runs on the bucket partitioning the write needs:
-      // the merge and the write share one shuffle
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy(col("bucket"), col("city")).orderBy(desc("dt"),
           desc("temperature"), desc("humidity")) // total over stored cols
       // an empty (no-data) micro-batch touches nothing and writes nothing
       if (touched.nonEmpty)
-        rewritePartitions(fs, rows.repartition(col("bucket"))
-          .withColumn("rn", row_number().over(w))
+        rewritePartitions(fs, rows.withColumn("rn", row_number().over(w))
           .filter(col("rn") === 1).drop("rn"), store, "bucket")
     } finally slim.unpersist()
   }
@@ -287,17 +283,19 @@ object IngestPipeline {
   /** The one store rewrite, shared by the bucket store, the day stores
     * and [[compactStore]]: `parts` carries the partition column `p` and
     * holds the full new content of every partition it names. It is
-    * written ONCE to `store.tmp`, hash-partitioned by `p` so each `p=v`
-    * dir gets one file, then each written dir replaces its store twin
-    * through [[swapDir]], in sorted order. The write never reads and
+    * written ONCE to `store.tmp` by one task, so each `p=v` dir gets one
+    * file, then each written dir replaces its store twin through
+    * [[swapDir]], in sorted order. One task, as each per-partition write
+    * had before: a write stage as wide as the cores holds every core
+    * while it runs, and in `stream_ingest` that slowed the dashboard's
+    * concurrent refreshes (measured). The write never reads and
     * writes the same path, so a lost cache block can never recompute
     * against a half-swapped store, and partitions absent from `parts` are
     * not opened. */
   private def rewritePartitions(fs: FileSystem, parts: DataFrame,
       store: String, p: String): Unit = {
     val tmp = store + ".tmp"
-    parts.repartition(col(p)).write.partitionBy(p).mode("overwrite")
-      .parquet(tmp)
+    parts.coalesce(1).write.partitionBy(p).mode("overwrite").parquet(tmp)
     fs.listStatus(new Path(tmp)).map(_.getPath.getName)
       .filter(_.startsWith(p + "=")).sorted
       .foreach(n => swapDir(fs, s"$store/$n", s"$tmp/$n", s"$store.bak/$n"))
@@ -313,11 +311,15 @@ object IngestPipeline {
     * `maxFiles` data files into a single file, all in one
     * [[rewritePartitions]] (readers never observe a partial partition; a
     * crash mid-compaction is recovered by the stores' normal
-    * [[recoverDirs]] sweep). Content is unchanged by construction — the
-    * same rows, read with their partition value and written back under
-    * it. O(oversized partitions) work; untouched partitions are not
-    * opened. Run out-of-band (a maintenance tick between batches), like a
-    * table format's OPTIMIZE. */
+    * [[recoverDirs]] sweep). The rows are unchanged — read with their
+    * partition value and written back under it — but the oversized
+    * partitions are read together under one merged schema: a day file
+    * written before `query_id` existed comes back with a null
+    * `query_id`, which the day stores' replay guard reads as it reads a
+    * missing column, and partitions whose column types conflict fail the
+    * whole pass before anything is swapped. O(oversized partitions) work;
+    * untouched partitions are not opened. Run out-of-band (a maintenance
+    * tick between batches), like a table format's OPTIMIZE. */
   def compactStore(spark: SparkSession, store: String, prefix: String,
       maxFiles: Int = 1): Unit = {
     val fs = fsOf(spark, store)

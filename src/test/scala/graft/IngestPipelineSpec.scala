@@ -823,6 +823,51 @@ class IngestPipelineSpec extends SparkSuite {
     assert(dataFiles(0).head.lastModified === stamp0)
   }
 
+  test("compaction: a day store mixing files from before and after query_id " +
+      "keeps its counts and its replay guard") {
+    val store = java.nio.file.Files.createTempDirectory("graft_cmcompact")
+      .resolve("store").toString
+    def batchDf(city: String, epoch: Long, n: Int) =
+      (1 to n).map(i => (city, epoch + i * 60L)).toDF("city", "sec")
+        .select($"city", timestamp_seconds($"sec").as("obs_ts"))
+    val day1 = 1748515200L // 2025-05-29 UTC
+    val day2 = day1 + 86400
+    val (d1, d2) = ("2025-05-29", "2025-05-30")
+    def countOn(day: String) = IngestPipeline
+      .cmStoreCounts(spark, s"$store/day=$day", Seq("A")).as[Long].head()
+    def dataFiles(day: String) = new java.io.File(s"$store/day=$day")
+      .listFiles().count(_.getName.endsWith(".parquet"))
+    IngestPipeline.cmStoreBatch(batchDf("A", day1, 30).union(batchDf("A", day2, 20)),
+      store, batchId = 7, queryId = "q")
+    // grow each day to two files: day 1 in the layout written before
+    // query_id existed, day 2 in the current one
+    def grow(day: String, cols: String*): Unit = {
+      val (dir, copy) = (s"$store/day=$day", s"$store.copy/day=$day")
+      spark.read.parquet(dir).select(cols.map(col): _*).write.parquet(copy)
+      org.apache.hadoop.fs.FileUtil.fullyDelete(new java.io.File(dir))
+      spark.read.parquet(copy).coalesce(1).write.parquet(dir)
+      spark.read.parquet(copy).coalesce(1).write.mode("append").parquet(dir)
+    }
+    grow(d1, "sk", "batch_id")
+    grow(d2, "sk", "batch_id", "query_id")
+    assert((dataFiles(d1), dataFiles(d2)) === ((2, 2)))
+    assert((countOn(d1), countOn(d2)) === ((60L, 40L)))
+    IngestPipeline.compactStore(spark, store, "day=")
+    assert((dataFiles(d1), dataFiles(d2)) === ((1, 1)))
+    assert((countOn(d1), countOn(d2)) === ((60L, 40L)))
+    // the older day reads back with a null query_id
+    assert(spark.read.option("mergeSchema", "true").parquet(store)
+      .select($"day".cast("string"), $"query_id").as[(String, String)]
+      .collect().toSet === Set((d1, null), (d2, "q")))
+    // a replay of batch 7 still skips both days; batch 8 merges both
+    IngestPipeline.cmStoreBatch(batchDf("A", day1, 30).union(batchDf("A", day2, 20)),
+      store, batchId = 7, queryId = "q")
+    assert((countOn(d1), countOn(d2)) === ((60L, 40L)))
+    IngestPipeline.cmStoreBatch(batchDf("A", day1, 1).union(batchDf("A", day2, 1)),
+      store, batchId = 8, queryId = "q")
+    assert((countOn(d1), countOn(d2)) === ((61L, 41L)))
+  }
+
   test("streaming Count-Min store: per-day frequency sketches, O(batch) updates") {
     implicit val sqlCtx = spark.sqlContext
     val store = java.nio.file.Files.createTempDirectory("graft_cmsto")

@@ -3,13 +3,13 @@
 
 Usage (from the repository root):
   python3 tools/ab_pairs.py --parent REV --workloads corpus,stream_ingest \
-      --seeds 71-80 --seconds 12 --trace 0 [--metrics setup_s,...] \
-      [--scratch DIR]
+      --seeds 71-80 --trace 0 [--metrics setup_s,...] [--scratch DIR]
 
 The parent side is `git archive REV` unpacked under the scratch directory;
 the change side is this checkout as it stands. For every seed and workload
-both sides run `python3 perfbench/run.py` once, the parent first on odd
-seeds and the change first on even ones, each side with its own
+both sides run `python3 perfbench/run.py` once for BENCHMARK.json's
+`run_seconds`, the parent first on odd seeds and the change first on even
+ones, each side with its own
 CARGO_TARGET_DIR under the scratch directory, so nothing is written into
 perfbench/, .git or the checkout's build directory.
 
@@ -104,17 +104,15 @@ def main():
     ap.add_argument("--parent", required=True, help="parent revision")
     ap.add_argument("--workloads", required=True, help="comma-separated workloads")
     ap.add_argument("--seeds", required=True, help="e.g. 71-80 or 1,3,5")
-    ap.add_argument("--seconds", type=float, default=12)
     ap.add_argument("--trace", type=int, choices=[0, 1], default=0)
     ap.add_argument("--metrics", help="comma-separated metric names")
     ap.add_argument("--scratch", default=os.path.join(tempfile.gettempdir(), "ab_pairs"))
     a = ap.parse_args()
 
-    if a.metrics:
-        names = a.metrics.split(",")
-    else:
-        with open(os.path.join(ROOT, "BENCHMARK.json")) as fh:
-            names = [m["name"] for m in json.load(fh)["end_to_end"]]
+    with open(os.path.join(ROOT, "BENCHMARK.json")) as fh:
+        bench = json.load(fh)
+    seconds = bench["run_seconds"]
+    names = a.metrics.split(",") if a.metrics else [m["name"] for m in bench["end_to_end"]]
     workloads = a.workloads.split(",")
     scratch = os.path.abspath(a.scratch)
     os.makedirs(scratch, exist_ok=True)
@@ -132,7 +130,7 @@ def main():
             got = {}
             for side in order:
                 tree, target = sides[side]
-                ok, doc = run(tree, target, w, seed, a.seconds, a.trace)
+                ok, doc = run(tree, target, w, seed, seconds, a.trace)
                 runs += 1
                 bad += not ok
                 got[side] = {n: metric(doc, n) for n in names}
