@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.Key
 import graft.operators.DedupOps.dot
 import graft.operators.SharedCorpus
+import graft.sources.Layout
 
 /** IVF (inverted-file) index over an embedding column: a deterministic
   * mini k-means trains the coarse quantizer, vectors are assigned to their
@@ -173,46 +174,36 @@ object IvfIndex {
   // The model is k·dim doubles — persisted as a k-row parquet table, the
   // same way any ML model parameter ships to a serving tier.
 
-  /** Model store root; per-corpus subdir keyed by the data path AND a
-    * digest of the embeddings files (name/length/mtime) — regenerated or
-    * swapped source data yields a NEW path, so the serve path's exists()
-    * check can never hit a store built from different data (the stale
-    * store becomes an unreferenced orphan). Public so tests can scope
-    * assertions to this corpus's store rather than the shared root. */
-  def modelPath(dir: String): String =
-    // v2 = hash-sampled init (round 7): the path encodes the training
-    // recipe, so a store built under the old first-k-by-id init can never
-    // be served against codebooks trained the new way
-    s"/tmp/graft_models/ivf_v2_k16_i3_${graft.sources.Fingerprint.tag(dir, "embeddings")}"
-
   /** Train the quantizer AND build the serving index for `dir`'s
-    * embeddings table: centroids → `<path>/model` (k rows), the corpus
-    * assigned + norm-precomputed → `<path>/data` PARTITIONED BY cell —
-    * so a serve-time nprobe search prunes to nprobe/k of the files at
-    * the SCAN, the on-disk layout IVF exists for. */
-  def persistModel(spark: SparkSession, dir: String): String = {
-    import spark.implicits._
-    val emb = graft.sources.Tables.embeddings(spark, dir)
-    val model = train(emb, k = 16, iters = 3)
-    val path = modelPath(dir)
-    SharedCorpus.forget(spark, "ivf_model", dir, "embeddings")
-    model.centroids.toSeq.toDF("cell", "cvec")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/model")
-    assign(vecs(emb), model)
-      .withColumn("norm", sqrt(dot(col("v"), col("v"))))
-      .select(col("vec_id"), col("v"), col("norm"), col("cell"))
-      .write.partitionBy("cell").mode("overwrite").parquet(s"$path/data")
-    path
-  }
+    * embeddings table, once per content tag ([[Layout.ensureStore]]; the
+    * name encodes the training recipe — v2 = hash-sampled init, round
+    * 7 — so a store built under another recipe is never served):
+    * centroids → `<path>/model` (k rows), the corpus assigned +
+    * norm-precomputed → `<path>/data` PARTITIONED BY cell — so a
+    * serve-time nprobe search prunes to nprobe/k of the files at the
+    * SCAN, the on-disk layout IVF exists for. Returns the store path. */
+  def ensureModel(spark: SparkSession, dir: String): String =
+    Layout.ensureStore(spark, dir, "ivf_v2_k16_i3", "data/_SUCCESS",
+        "embeddings") { path =>
+      import spark.implicits._
+      val emb = graft.sources.Tables.embeddings(spark, dir)
+      val model = train(emb, k = 16, iters = 3)
+      model.centroids.toSeq.toDF("cell", "cvec")
+        .coalesce(1).write.mode("overwrite").parquet(s"$path/model")
+      assign(vecs(emb), model)
+        .withColumn("norm", sqrt(dot(col("v"), col("v"))))
+        .select(col("vec_id"), col("v"), col("norm"), col("cell"))
+        .write.partitionBy("cell").mode("overwrite").parquet(s"$path/data")
+    }
 
-  /** Load a persisted quantizer (k rows → model-sized collect) as corpus
-    * state ([[SharedCorpus.value]]): a serving tier keeps model state
-    * resident between queries — only the first query per corpus pays the
-    * k-row read. ([[persistModel]] forgets it, so rebuilds are picked
-    * up.) */
+  /** Load the persisted quantizer (k rows → model-sized collect) as
+    * corpus state ([[SharedCorpus.value]]): a serving tier keeps model
+    * state resident between queries — only the first query per corpus
+    * pays the k-row read. The store is written once per content tag,
+    * so a resident model never outlives its store. */
   def loadModel(spark: SparkSession, dir: String): Model =
     SharedCorpus.value(spark, "ivf_model", dir, "embeddings")(
-      readModel(spark, s"${modelPath(dir)}/model"))
+      readModel(spark, s"${ensureModel(spark, dir)}/model"))
 
   /** A persisted (cell, cvec) centroid table, ordered by cell. */
   private[ml] def readModel(spark: SparkSession, path: String): Model =
@@ -229,8 +220,7 @@ object IvfIndex {
     * rows-only key. The probe vector is fetched from the store by id here —
     * a deployed service receives it in the request. */
   def simSearchIvfServe(spark: SparkSession, dir: String): DataFrame = {
-    val path = modelPath(dir)
-    if (!new java.io.File(path).exists()) persistModel(spark, dir)
+    val path = ensureModel(spark, dir)
     val model = loadModel(spark, dir)
     val data = spark.read.parquet(s"$path/data")
     val probeId = 0L
@@ -266,6 +256,6 @@ object IvfIndex {
       graft.operators.SimilarityOps.annInvariant(s, d,
         simSearchIvfServe(s, d), minOverlap = 3),
       Some(graft.operators.SimilarityOps.annInvariantOracle),
-      prep = Some((s, d) => persistModel(s, d))),
+      prep = Some((s, d) => ensureModel(s, d))),
   )
 }

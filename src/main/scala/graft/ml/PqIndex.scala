@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.Key
 import graft.operators.DedupOps.dot
 import graft.operators.SharedCorpus
+import graft.sources.Layout
 
 /** Product quantization (PQ) over the embedding column — the memory-side
   * complement to [[IvfIndex]]'s scan-side pruning, completing the ANN
@@ -221,36 +222,30 @@ object PqIndex {
   // the wide vector column is read for ~100 rows, everything else rides
   // the 16× smaller codes store.
 
-  /** Model store root, digest-keyed by the embeddings files like the IVF
-    * store — regenerated data can never silently serve a stale index. */
-  def modelPath(dir: String): String =
-    // v2 = hash-sampled init (round 7) — recipe-keyed like the IVF store
-    s"/tmp/graft_models/pq_v2_m${M}_k${K}_i${Iters}_" +
-      graft.sources.Fingerprint.tag(dir, "embeddings")
-
-  /** Train + write `<path>/books` (M·K rows: m, code, cvec) and
-    * `<path>/codes` (vec_id, codes) — the vectors themselves stay ONLY
-    * in the source table. */
-  def persistModel(spark: SparkSession, dir: String): String = {
-    import spark.implicits._
-    val emb = graft.sources.Tables.embeddings(spark, dir)
-    val cb = train(emb)
-    val path = modelPath(dir)
-    SharedCorpus.forget(spark, "pq_books", dir, "embeddings")
-    cb.books.zipWithIndex.flatMap { case (model, m) =>
-      model.centroids.map { case (code, cvec) => (m, code, cvec.toSeq) }
-    }.toDF("m", "code", "cvec")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/books")
-    encode(emb, cb).select(col("vec_id"), col("codes"))
-      .write.mode("overwrite").parquet(s"$path/codes")
-    path
-  }
+  /** Train once per content tag ([[Layout.ensureStore]], recipe-keyed
+    * like the IVF store — v2 = hash-sampled init, round 7) and write
+    * `<path>/books` (M·K rows: m, code, cvec) and `<path>/codes`
+    * (vec_id, codes) — the vectors themselves stay ONLY in the source
+    * table. Returns the store path. */
+  def ensureModel(spark: SparkSession, dir: String): String =
+    Layout.ensureStore(spark, dir, s"pq_v2_m${M}_k${K}_i${Iters}",
+        "codes/_SUCCESS", "embeddings") { path =>
+      import spark.implicits._
+      val emb = graft.sources.Tables.embeddings(spark, dir)
+      val cb = train(emb)
+      cb.books.zipWithIndex.flatMap { case (model, m) =>
+        model.centroids.map { case (code, cvec) => (m, code, cvec.toSeq) }
+      }.toDF("m", "code", "cvec")
+        .coalesce(1).write.mode("overwrite").parquet(s"$path/books")
+      encode(emb, cb).select(col("vec_id"), col("codes"))
+        .write.mode("overwrite").parquet(s"$path/codes")
+    }
 
   /** Load persisted codebooks (M·K rows — model-sized collect) as corpus
     * state, like the IVF model ([[IvfIndex.loadModel]]). */
   def loadBooks(spark: SparkSession, dir: String): Codebooks =
     SharedCorpus.value(spark, "pq_books", dir, "embeddings")(
-      readBooks(spark, s"${modelPath(dir)}/books"))
+      readBooks(spark, s"${ensureModel(spark, dir)}/books"))
 
   /** M codebooks from a persisted (m, code, cvec) table. */
   private def readBooks(spark: SparkSession, path: String): Codebooks = {
@@ -269,8 +264,7 @@ object PqIndex {
     * against the source table. Result identical to [[simSearchPq]]
     * (training is deterministic); rows-only key. */
   def simSearchPqServe(spark: SparkSession, dir: String): DataFrame = {
-    val path = modelPath(dir)
-    if (!new java.io.File(path).exists()) persistModel(spark, dir)
+    val path = ensureModel(spark, dir)
     val cb = loadBooks(spark, dir)
     val emb = graft.sources.Tables.embeddings(spark, dir)
     val probeId = 0L
@@ -396,40 +390,36 @@ object PqIndex {
   // embeddings table is touched exactly twice, both id-pruned: the probe
   // fetch (1 row) and the 100-row exact re-rank.
 
-  /** Store root, recipe- and data-keyed like the PQ/IVF stores. */
-  def ivfPqModelPath(dir: String): String =
-    s"/tmp/graft_models/ivfpq_v2_m${M}_k${K}_i${Iters}" +
-      s"_c${CoarseK}_ci${CoarseIters}_" +
-      graft.sources.Fingerprint.tag(dir, "embeddings")
-
-  /** Train + write `<path>/coarse` (cell, cvec), `<path>/books`
-    * (m, code, cvec) and `<path>/codes` (vec_id, codes; partitioned by
-    * cell). Training is [[trainIvfPq]] — identical to the inline key. */
-  def persistIvfPqModel(spark: SparkSession, dir: String): String = {
-    import spark.implicits._
-    val emb = graft.sources.Tables.embeddings(spark, dir)
-    val d = emb.select(size(col("embedding"))).head().getInt(0)
-    val unit = withUnit(emb).cache()
-    val (coarse, cb, codes) = trainIvfPq(unit, d)
-    val path = ivfPqModelPath(dir)
-    SharedCorpus.forget(spark, "ivfpq_model", dir, "embeddings")
-    coarse.centroids.toSeq.map { case (cell, cvec) => (cell, cvec.toSeq) }
-      .toDF("cell", "cvec")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/coarse")
-    cb.books.zipWithIndex.flatMap { case (model, m) =>
-      model.centroids.map { case (code, cvec) => (m, code, cvec.toSeq) }
-    }.toDF("m", "code", "cvec")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/books")
-    codes.write.partitionBy("cell").mode("overwrite").parquet(s"$path/codes")
-    unit.unpersist()
-    path
-  }
+  /** Train once per content tag ([[Layout.ensureStore]], recipe-keyed
+    * like the PQ/IVF stores) and write `<path>/coarse` (cell, cvec),
+    * `<path>/books` (m, code, cvec) and `<path>/codes` (vec_id, codes;
+    * partitioned by cell). Training is [[trainIvfPq]] — identical to the
+    * inline key. Returns the store path. */
+  def ensureIvfPqModel(spark: SparkSession, dir: String): String =
+    Layout.ensureStore(spark, dir,
+        s"ivfpq_v2_m${M}_k${K}_i${Iters}_c${CoarseK}_ci${CoarseIters}",
+        "codes/_SUCCESS", "embeddings") { path =>
+      import spark.implicits._
+      val emb = graft.sources.Tables.embeddings(spark, dir)
+      val d = emb.select(size(col("embedding"))).head().getInt(0)
+      val unit = withUnit(emb).cache()
+      val (coarse, cb, codes) = trainIvfPq(unit, d)
+      coarse.centroids.toSeq.map { case (cell, cvec) => (cell, cvec.toSeq) }
+        .toDF("cell", "cvec")
+        .coalesce(1).write.mode("overwrite").parquet(s"$path/coarse")
+      cb.books.zipWithIndex.flatMap { case (model, m) =>
+        model.centroids.map { case (code, cvec) => (m, code, cvec.toSeq) }
+      }.toDF("m", "code", "cvec")
+        .coalesce(1).write.mode("overwrite").parquet(s"$path/books")
+      codes.write.partitionBy("cell").mode("overwrite").parquet(s"$path/codes")
+      unit.unpersist()
+    }
 
   /** Load persisted coarse centroids + residual codebooks (model-sized
     * collects) as corpus state. */
   def loadIvfPq(spark: SparkSession, dir: String): (IvfIndex.Model, Codebooks) =
     SharedCorpus.value(spark, "ivfpq_model", dir, "embeddings") {
-      val path = ivfPqModelPath(dir)
+      val path = ensureIvfPqModel(spark, dir)
       (IvfIndex.readModel(spark, s"$path/coarse"),
         readBooks(spark, s"$path/books"))
     }
@@ -440,8 +430,7 @@ object PqIndex {
     * probe fetch + exact re-rank. Result identical to [[simSearchIvfPq]]
     * (training is deterministic); rows-only key. */
   def simSearchIvfPqServe(spark: SparkSession, dir: String): DataFrame = {
-    val path = ivfPqModelPath(dir)
-    if (!new java.io.File(path).exists()) persistIvfPqModel(spark, dir)
+    val path = ensureIvfPqModel(spark, dir)
     val (coarse, cb) = loadIvfPq(spark, dir)
     val emb = graft.sources.Tables.embeddings(spark, dir)
     val probeId = 0L
@@ -471,9 +460,9 @@ object PqIndex {
     Seq(
       Key("sim_search_pq", ann(simSearchPq, 9), o),
       Key("sim_search_pq_serve", ann(simSearchPqServe, 9), o,
-        prep = Some((s, d) => persistModel(s, d))),
+        prep = Some((s, d) => ensureModel(s, d))),
       Key("sim_search_ivfpq", ann(simSearchIvfPq, 4), o),
       Key("sim_search_ivfpq_serve", ann(simSearchIvfPqServe, 4), o,
-        prep = Some((s, d) => persistIvfPqModel(s, d))))
+        prep = Some((s, d) => ensureIvfPqModel(s, d))))
   }
 }

@@ -93,7 +93,7 @@ object RelationalOps {
   // layout the write side (Layout.scala) exists for. ──
   def scanPrunedDay(spark: SparkSession, dir: String): DataFrame = {
     val path = graft.sources.Layout.ensureEventsByDay(spark, dir)
-    graft.sources.Layout.readEventsByDay(spark, path)
+    spark.read.parquet(path)
       .filter(col("day") === to_date(lit("2024-01-15")))
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("cnt"), avgMoney(col("value")).as("avg_value"))
@@ -270,21 +270,21 @@ object RelationalOps {
 
   /** Lazily commit the two-snapshot versioned events store (v1 = before
     * the split, v2 appends the rest); shared by the time-travel, diff,
-    * and IVM keys. Returns the store root. */
+    * and IVM keys. Complete once v2's manifest exists; a crash before
+    * that leaves a partial commit history, so the write clears the root
+    * and commits both snapshots afresh. Returns the store root. */
   private def ensureVersionedEvents(spark: SparkSession,
-      dir: String): String = {
-    val tag = graft.sources.Fingerprint.tag(dir, "events")
-    val wh = spark.conf.get("spark.sql.warehouse.dir")
-    val root = s"$wh/graft_events_versioned_$tag"
-    if (graft.sources.Versioned.currentVersion(spark, root) < 2) {
+      dir: String): String =
+    graft.sources.Layout.ensureStore(spark, dir, "events_versioned",
+        "manifest-v2.json", "events") { root =>
+      val p = new org.apache.hadoop.fs.Path(root)
+      p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
       val ev = Tables.events(spark, dir)
       graft.sources.Versioned.append(spark, root,
         ev.filter(unix_micros(col("ts")) < TtSplitUs))
       graft.sources.Versioned.append(spark, root,
         ev.filter(unix_micros(col("ts")) >= TtSplitUs))
     }
-    root
-  }
 
   def scanTimeTravel(spark: SparkSession, dir: String): DataFrame = {
     val root = ensureVersionedEvents(spark, dir)
@@ -323,7 +323,7 @@ object RelationalOps {
   // filters, pruned columns) carries over unchanged. ──
   def scanOrc(spark: SparkSession, dir: String): DataFrame = {
     val path = graft.sources.Layout.ensureEventsOrc(spark, dir)
-    graft.sources.Layout.readEventsOrc(spark, path)
+    spark.read.orc(path)
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("cnt"), avgMoney(col("value")).as("avg_value"),
         max(col("ts")).as("max_ts_us"))
@@ -433,19 +433,15 @@ object RelationalOps {
   // the increment's contribution per group. ──
   def ivmRefresh(spark: SparkSession, dir: String): DataFrame = {
     val root = ensureVersionedEvents(spark, dir)
-    val tag = graft.sources.Fingerprint.tag(dir, "events")
-    val wh = spark.conf.get("spark.sql.warehouse.dir")
-    val aggPath = s"$wh/graft_events_ivm_v1_$tag"
-    val fs = new org.apache.hadoop.fs.Path(aggPath)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
     // cnt_val (non-null values) is its own partial: the merged average
     // must divide by count(value), exactly as avgMoney and the oracle do
     def partials(df: DataFrame) = df.groupBy(col("event_type"))
       .agg(count(lit(1)).as("cnt"), count(col("value")).as("cnt_val"),
         sum(money(col("value"))).as("sum_val"))
-    if (!fs.exists(new org.apache.hadoop.fs.Path(s"$aggPath/_SUCCESS")))
+    val aggPath = graft.sources.Layout.ensureStore(spark, dir,
+        "events_ivm_v1", "_SUCCESS", "events")(
       partials(graft.sources.Versioned.readVersion(spark, root, 1))
-        .write.mode("overwrite").parquet(aggPath)
+        .write.mode("overwrite").parquet(_))
     val stored = spark.read.parquet(aggPath)
       .withColumn("cnt_new", lit(0L))
     val delta = partials(graft.sources.Versioned.readDiff(spark, root, 1, 2))
@@ -471,7 +467,7 @@ object RelationalOps {
   // selected days without the query author naming them. ──
   def scanPrunedDpp(spark: SparkSession, dir: String): DataFrame = {
     val path = graft.sources.Layout.ensureEventsByDay(spark, dir)
-    val fact = graft.sources.Layout.readEventsByDay(spark, path)
+    val fact = spark.read.parquet(path)
     // the calendar dim: at scale a real table; derived here from the
     // source events (NOT the partitioned store, so the dim subquery is
     // independent of the scan it prunes)

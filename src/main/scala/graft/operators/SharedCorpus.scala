@@ -16,7 +16,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *    checkpoint blocks are no longer registered with the SparkContext
   *    (unpersisted) is dropped and rebuilt once.
   *  - [[value]] holds a driver-side object (an ANN model read from its
-  *    store); [[forget]] invalidates one when its store is rewritten.
+  *    store). A model store is written once per content tag
+  *    ([[graft.sources.Layout.ensureStore]]), so the fingerprint in the
+  *    key below already names the store a value was read from.
   *
   * The key is (applicationId, kind, corpus fingerprint):
   *  - `applicationId` scopes entries to the live SparkContext — a
@@ -67,11 +69,6 @@ private[graft] object SharedCorpus {
   def value[T <: AnyRef](spark: SparkSession, kind: String, dir: String,
       tables: String*)(load: => T): T =
     lookup(spark, kind, dir, tables, load)(_ => true)
-
-  /** Drop the `kind` entry of `dir`, so the next call loads it afresh. */
-  def forget(spark: SparkSession, kind: String, dir: String,
-      tables: String*): Unit =
-    cache.remove(keyOf(spark, kind, dir, tables))
 
   private def keyOf(spark: SparkSession, kind: String, dir: String,
       tables: Seq[String]): String =

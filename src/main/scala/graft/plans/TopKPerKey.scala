@@ -2,7 +2,7 @@ package graft.plans
 
 import scala.collection.mutable
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Attribute, Expression, RowOrdering, SortOrder, UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, UnaryNode}
@@ -308,23 +308,6 @@ object TopKStrategy extends SparkStrategy {
 
 /** User-facing entry point. */
 object TopK {
-  /** Ensure the strategy is installed in this session (idempotent). */
-  def register(spark: SparkSession): Unit = {
-    val cur = spark.experimental.extraStrategies
-    if (!cur.contains(TopKStrategy))
-      spark.experimental.extraStrategies = cur :+ TopKStrategy
-  }
-
-  /** Install the `row_number() <= k` → TopKPerKey optimizer rewrite (plus
-    * the strategy it needs) in a session built without
-    * `spark.sql.extensions=graft.GraftExtensions`. Idempotent. */
-  def enableRewrite(spark: SparkSession): Unit = {
-    register(spark)
-    val cur = spark.experimental.extraOptimizations
-    if (!cur.contains(TopKRewriteRule))
-      spark.experimental.extraOptimizations = cur :+ TopKRewriteRule
-  }
-
   /** Exact top-k rows per key, ordered by `order` (make the last sort key
     * unique for deterministic output). `mode` selects the retention rule:
     * RowNum keeps exactly k rows per key; Rank/DenseRank keep the rows
@@ -344,7 +327,6 @@ object TopK {
     import org.apache.spark.sql.catalyst.expressions.Alias
     import org.apache.spark.sql.catalyst.plans.logical.{Project, Sort}
     val spark = df.sparkSession
-    register(spark)
     val sortPlan = GraftSqlBridge.logicalPlan(df.sortWithinPartitions(orderCols: _*))
       .asInstanceOf[Sort]
     val keys: Seq[Expression] =

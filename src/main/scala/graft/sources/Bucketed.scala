@@ -40,10 +40,6 @@ object Bucketed {
   val MinBuckets = 16
   val MaxBuckets = 4096
 
-  /** Kept for source compatibility: the floor the derived count never
-    * goes below (all driver SFs land here). */
-  val NBuckets: Int = MinBuckets
-
   /** Derived counts, memoized per CONTENT FINGERPRINT (not per dir):
     * [[ensure]] runs on EVERY bucketed-key invocation, and without the
     * memo each query would pay a lineitem count() job just to compute

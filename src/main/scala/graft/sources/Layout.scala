@@ -2,6 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.hadoop.fs.{FileSystem, Path}
 
 /** Storage-layout utilities — the write-side half of the 100 TB story.
   *
@@ -35,30 +36,27 @@ object Layout {
       .partitionBy("day")
       .parquet(path)
 
-  /** Read a day-partitioned events store; `filter(col("day") === ...)`
-    * prunes directories before any IO (verify via explain:
-    * "PartitionFilters"). */
-  def readEventsByDay(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
-
-  /** The content-keyed ([[Fingerprint]]) warehouse path of `dir`'s
-    * events store `name`, written by `write(path)` unless complete —
-    * the offline-layout-job discipline of [[Bucketed.ensure]]: written
-    * once, read by every later query. Completion is the `_SUCCESS` of
-    * the LAST-written part (`last`, relative to the store root; empty
-    * for a one-part store), never the directory's existence: the
-    * committer creates the directory when the job STARTS, so a crash
-    * mid-write leaves a partial store that a bare-existence check would
-    * serve forever. Every `write` uses overwrite mode, so the retry
-    * replaces whatever the crash left. */
-  private def ensureStore(spark: SparkSession, dir: String, name: String,
-      last: String = "")(write: String => Unit): String = {
+  /** The content-keyed ([[Fingerprint]]) warehouse path
+    * `graft_<name>_<tag>` of a derived store built from `dir`'s `tables`,
+    * written by `write(path)` unless complete — the offline-layout-job
+    * discipline of [[Bucketed.ensure]]: written once per content tag,
+    * read by every later query. Every derived store (the events twins,
+    * the ANN models, the IVM partials, the versioned store) is ensured
+    * here. Completion is `marker` (relative to the store root: the
+    * `_SUCCESS` of the LAST-written part, or the last commit's
+    * manifest), never the directory's existence: the committer creates
+    * the directory when the job STARTS, so a crash mid-write leaves a
+    * partial store that a bare-existence check would serve forever.
+    * Every `write` replaces whatever a crash left (overwrite mode, or a
+    * cleared root). */
+  private[graft] def ensureStore(spark: SparkSession, dir: String,
+      name: String, marker: String, tables: String*)(
+      write: String => Unit): String = {
     val wh = spark.conf.get("spark.sql.warehouse.dir")
-    val path = s"$wh/graft_events_${name}_${Fingerprint.tag(dir, "events")}"
-    val done = new org.apache.hadoop.fs.Path(
-      Seq(path, last, "_SUCCESS").filter(_.nonEmpty).mkString("/"))
-    val fs = done.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(done)) write(path)
+    val path = s"$wh/graft_${name}_${Fingerprint.tag(dir, tables: _*)}"
+    val done = new Path(s"$path/$marker")
+    if (!done.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        .exists(done)) write(path)
     path
   }
 
@@ -67,7 +65,7 @@ object Layout {
     * crash between the two cannot leave a store without it. */
   private def addFileOnce(spark: SparkSession, file: String,
       bytes: Array[Byte]): Unit = {
-    val p = new org.apache.hadoop.fs.Path(file)
+    val p = new Path(file)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(p)) {
       val out = fs.create(p)
@@ -80,7 +78,7 @@ object Layout {
     * [[Bucketed.ensure]]: an offline layout job writes once, every
     * subsequent query reads the pruned store); returns its path. */
   def ensureEventsByDay(spark: SparkSession, dir: String): String =
-    ensureStore(spark, dir, "byday")(
+    ensureStore(spark, dir, "events_byday", "_SUCCESS", "events")(
       writeEventsByDay(Tables.events(spark, dir), _))
 
   /** Line-delimited-JSON twin of the events table (content-keyed derived
@@ -89,7 +87,7 @@ object Layout {
     * timestamp type, and an explicit integer survives any reader without
     * parser/locale drift. */
   def ensureEventsJsonl(spark: SparkSession, dir: String): String =
-    ensureStore(spark, dir, "jsonl") { path =>
+    ensureStore(spark, dir, "events_jsonl", "_SUCCESS", "events") { path =>
       Tables.events(spark, dir)
         .withColumn("ts", unix_micros(col("ts")))
         .write.mode("overwrite").json(path)
@@ -115,16 +113,11 @@ object Layout {
     * [[ensureEventsJsonl]] rationale: no timestamp-vintage or tz drift
     * across writers); content-keyed, written once. */
   def ensureEventsOrc(spark: SparkSession, dir: String): String =
-    ensureStore(spark, dir, "orc") { path =>
+    ensureStore(spark, dir, "events_orc", "_SUCCESS", "events") { path =>
       Tables.events(spark, dir)
         .withColumn("ts", unix_micros(col("ts")))
         .write.mode("overwrite").orc(path)
     }
-
-  /** ORC is self-describing (schema in the file footer, like parquet),
-    * so no explicit schema is needed — the format carries its types. */
-  def readEventsOrc(spark: SparkSession, path: String): DataFrame =
-    spark.read.orc(path)
 
   /** CSV twin of the events table (content-keyed derived store, written
     * once) — the lowest-common-denominator interchange format raw feeds
@@ -156,7 +149,8 @@ object Layout {
     * after `data/` but before `deletes/` must not serve an undeleted
     * store. */
   def ensureEventsMor(spark: SparkSession, dir: String): String =
-    ensureStore(spark, dir, "mor", "deletes") { path =>
+    ensureStore(spark, dir, "events_mor", "deletes/_SUCCESS",
+      "events") { path =>
       Tables.events(spark, dir)
         .repartition(8, col("event_id"))
         .write.mode("overwrite").parquet(s"$path/data")
@@ -196,7 +190,8 @@ object Layout {
     * Index completion marker is written last, same rule as the MOR
     * store. */
   def ensureEventsBloomIdx(spark: SparkSession, dir: String): String =
-    ensureStore(spark, dir, "bloomidx", "index") { path =>
+    ensureStore(spark, dir, "events_bloomidx", "index/_SUCCESS",
+      "events") { path =>
       Tables.events(spark, dir)
         .repartition(16, col("user_id"))
         .write.mode("overwrite").parquet(s"$path/data")
@@ -220,7 +215,8 @@ object Layout {
     * day-partition = time). Mergeable by append: a new file adds one
     * stats row. Stats written last = completion marker. */
   def ensureEventsMinMax(spark: SparkSession, dir: String): String =
-    ensureStore(spark, dir, "minmax", "stats") { path =>
+    ensureStore(spark, dir, "events_minmax", "stats/_SUCCESS",
+      "events") { path =>
       Tables.events(spark, dir)
         .repartitionByRange(16, col("value"))
         .write.mode("overwrite").parquet(s"$path/data")
@@ -239,7 +235,8 @@ object Layout {
     * Marker = gen2's _SUCCESS, written last. */
   def ensureEventsPartEvo(spark: SparkSession, dir: String,
       splitUs: Long): String =
-    ensureStore(spark, dir, "partevo", "gen2") { path =>
+    ensureStore(spark, dir, "events_partevo", "gen2/_SUCCESS",
+      "events") { path =>
       val ev = Tables.events(spark, dir)
         .withColumn("us", unix_micros(col("ts")))
       ev.filter(col("us") < splitUs)
@@ -262,7 +259,7 @@ object Layout {
     * is written AFTER the parquet commit and checked separately, like
     * the CSV store's bad lines. */
   def ensureEventsCorrupt(spark: SparkSession, dir: String): String = {
-    val path = ensureStore(spark, dir, "corrupt")(
+    val path = ensureStore(spark, dir, "events_corrupt", "_SUCCESS", "events")(
       Tables.events(spark, dir)
         .repartition(4, col("event_id"))
         .write.mode("overwrite").parquet(_))
@@ -274,7 +271,7 @@ object Layout {
   }
 
   def ensureEventsCsv(spark: SparkSession, dir: String): String = {
-    val path = ensureStore(spark, dir, "csv")(
+    val path = ensureStore(spark, dir, "events_csv", "_SUCCESS", "events")(
       Tables.events(spark, dir)
         .withColumn("ts", unix_micros(col("ts")))
         .write.mode("overwrite").option("header", "true").csv(_))
@@ -313,7 +310,8 @@ object Layout {
     * one footer. Written once, content-keyed. */
   def ensureEventsSchemaEvolution(spark: SparkSession, dir: String,
       splitUs: Long): String =
-    ensureStore(spark, dir, "schemaevo", "gen2") { path =>
+    ensureStore(spark, dir, "events_schemaevo", "gen2/_SUCCESS",
+      "events") { path =>
       val ev = Tables.events(spark, dir)
       ev.filter(unix_micros(col("ts")) < splitUs)
         .drop("props")
@@ -367,7 +365,7 @@ object Layout {
     * via [[Fingerprint]], same offline-layout-job discipline as
     * [[ensureEventsByDay]]); returns its path. */
   def ensureEventsZOrdered(spark: SparkSession, dir: String): String =
-    ensureStore(spark, dir, "zorder")(
+    ensureStore(spark, dir, "events_zorder", "_SUCCESS", "events")(
       writeEventsZOrdered(Tables.events(spark, dir), _))
 
   /** Small-file compaction: rewrite a parquet directory into files of
@@ -383,17 +381,16 @@ object Layout {
     * driver-side listing of row contents — just the file index Spark
     * already holds), coalesce — NOT repartition: no shuffle, adjacent
     * input files concatenate into output tasks — and atomically swap via
-    * the same checked two-rename protocol as the streaming upsert sink.
+    * [[swapDir]], the streaming stores' checked two-rename protocol.
     * Sorted layouts stay sorted per file because coalesce preserves
     * intra-partition order and concatenation only widens file boundaries.
     *
     * Returns (files_before, files_after). */
   def compact(spark: SparkSession, path: String,
       targetFileMB: Int = 128): (Int, Int) = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(conf)
-    def dataFiles(d: org.apache.hadoop.fs.Path) = {
+    val p = new Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def dataFiles(d: Path) = {
       val it = fs.listFiles(d, true)
       val b = Seq.newBuilder[org.apache.hadoop.fs.LocatedFileStatus]
       while (it.hasNext) {
@@ -402,15 +399,10 @@ object Layout {
       }
       b.result()
     }
-    // crash recovery, mirroring the upsert sink: the swap below keeps the
-    // previous store in exactly one of {path, path.compact_bak}; a prior
-    // run that died between its two renames left it in .bak — restore
-    // before reading
-    locally {
-      val bak0 = new org.apache.hadoop.fs.Path(path + ".compact_bak")
-      if (!fs.exists(p) && fs.exists(bak0))
-        require(fs.rename(bak0, p), s"recovery rename $bak0 -> $p failed")
-    }
+    val (tmp, bak) = (path + ".compact_tmp", path + ".compact_bak")
+    // a prior run that died between the swap's two renames left the
+    // previous store only in bak — restore it before reading
+    recoverDir(fs, path, bak)
     // a Hive-partitioned layout (name=value subdirectories) must be
     // compacted PER PARTITION directory: reading the root would re-infer
     // the partition columns as data (type-rewriting them) and the flat
@@ -424,17 +416,41 @@ object Layout {
     val totalBytes = before.map(_.getLen).sum
     val nOut = math.max(1, math.ceil(
       totalBytes.toDouble / (targetFileMB.toLong << 20)).toInt)
-    val tmp = new org.apache.hadoop.fs.Path(path + ".compact_tmp")
-    val bak = new org.apache.hadoop.fs.Path(path + ".compact_bak")
     spark.read.parquet(path).coalesce(nOut)
-      .write.mode("overwrite").parquet(tmp.toString)
-    val after = dataFiles(tmp).size
-    def mv(from: org.apache.hadoop.fs.Path, to: org.apache.hadoop.fs.Path): Unit =
-      require(fs.rename(from, to), s"rename $from -> $to failed")
-    fs.delete(bak, true)
-    mv(p, bak)
-    mv(tmp, p)
-    fs.delete(bak, true)
+      .write.mode("overwrite").parquet(tmp)
+    val after = dataFiles(new Path(tmp)).size
+    swapDir(fs, path, tmp, bak)
     (before.size, after)
   }
+
+  /** The two-rename crash-safe swap shared by [[compact]] and the
+    * streaming stores' partition rewrite: `tmp` (fully written) replaces
+    * `dir`, with the previous `dir` parked in `bak` for exactly the
+    * window between the two renames — so at every instant the previous
+    * data exists in exactly one of {dir, bak} and [[recoverDir]] can
+    * always restore it. Every rename result is CHECKED (a false return —
+    * cross-filesystem tmp, permissions — must fail the caller, not
+    * silently drop data). */
+  private[graft] def swapDir(fs: FileSystem,
+      dir: String, tmp: String, bak: String): Unit = {
+    def mv(from: String, to: String): Unit =
+      require(fs.rename(new Path(from), new Path(to)),
+        s"rename $from -> $to failed")
+    fs.delete(new Path(bak), true)
+    fs.mkdirs(new Path(bak).getParent)
+    fs.mkdirs(new Path(dir).getParent)
+    if (fs.exists(new Path(dir))) mv(dir, bak)
+    mv(tmp, dir)
+    fs.delete(new Path(bak), true)
+  }
+
+  /** Restore `dir` from `bak` when a crash between [[swapDir]]'s two
+    * renames left the previous data only there. */
+  private[graft] def recoverDir(fs: FileSystem, dir: String,
+      bak: String): Unit =
+    if (!fs.exists(new Path(dir)) && fs.exists(new Path(bak))) {
+      fs.mkdirs(new Path(dir).getParent)
+      require(fs.rename(new Path(bak), new Path(dir)),
+        s"recovery rename $bak -> $dir failed")
+    }
 }

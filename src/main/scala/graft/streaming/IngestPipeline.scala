@@ -5,7 +5,7 @@ import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.Key
-import graft.sources.Tables
+import graft.sources.{Layout, Tables}
 
 /** Structured-Streaming port of the reference's ingest chain
   * (`/root/reference/producer.py` → Kafka → `/root/reference/consumer.py` →
@@ -242,42 +242,18 @@ object IngestPipeline {
 
   /** The all-partitions sweep shared by the bucket and day stores: any
     * `<prefix>X` dir stranded ONLY in `.bak` (crash between the two
-    * renames of [[swapDir]]) is restored before anything reads or writes
-    * the store. Runs over ALL partitions (one listing), not just the
-    * batch's — a crashed partition must not stay invisible until a later
-    * batch happens to touch it again, which may be never. */
+    * renames of [[Layout.swapDir]]) is restored by [[Layout.recoverDir]]
+    * before anything reads or writes the store. Runs over ALL partitions
+    * (one listing), not just the batch's — a crashed partition must not
+    * stay invisible until a later batch happens to touch it again, which
+    * may be never. */
   private def recoverDirs(fs: FileSystem, store: String,
       prefix: String): Unit = {
     val bakRoot = new Path(store + ".bak")
-    if (fs.exists(bakRoot)) {
-      fs.mkdirs(new Path(store))
-      fs.listStatus(bakRoot).foreach { st =>
-        val name = st.getPath.getName
-        if (name.startsWith(prefix) && !fs.exists(new Path(s"$store/$name")))
-          require(fs.rename(st.getPath, new Path(s"$store/$name")),
-            s"partition recovery rename $name failed")
-      }
-    }
-  }
-
-  /** The two-rename crash-safe swap behind [[rewritePartitions]]: `tmp`
-    * (fully written) replaces `dir`, with the previous `dir` parked in
-    * `bak` for exactly the window between the two renames — so at every
-    * instant the partition's previous data exists in exactly one of
-    * {dir, bak} and [[recoverDirs]] can always restore it. Every rename
-    * result is CHECKED (a false return — cross-filesystem tmp,
-    * permissions — must fail the batch, not silently drop data). */
-  private def swapDir(fs: FileSystem,
-      dir: String, tmp: String, bak: String): Unit = {
-    def p(s: String) = new Path(s)
-    def mv(from: String, to: String): Unit =
-      require(fs.rename(p(from), p(to)), s"rename $from -> $to failed")
-    fs.delete(p(bak), true)
-    fs.mkdirs(p(bak).getParent)
-    fs.mkdirs(p(dir).getParent)
-    if (fs.exists(p(dir))) mv(dir, bak)
-    mv(tmp, dir)
-    fs.delete(p(bak), true)
+    if (fs.exists(bakRoot))
+      fs.listStatus(bakRoot).map(_.getPath.getName)
+        .filter(_.startsWith(prefix))
+        .foreach(n => Layout.recoverDir(fs, s"$store/$n", s"$store.bak/$n"))
   }
 
   /** The one store rewrite, shared by the bucket store, the day stores
@@ -285,8 +261,8 @@ object IngestPipeline {
     * holds the full new content of every partition it names. It is
     * written ONCE to `store.tmp` by one task, so each `p=v` dir gets one
     * file, then each written dir replaces its store twin through
-    * [[swapDir]], in sorted order. One task, as each per-partition write
-    * had before: a write stage as wide as the cores holds every core
+    * [[Layout.swapDir]], in sorted order. One task, as each per-partition
+    * write had before: a write stage as wide as the cores holds every core
     * while it runs, and in `stream_ingest` that slowed the dashboard's
     * concurrent refreshes (measured). The write never reads and
     * writes the same path, so a lost cache block can never recompute
@@ -298,7 +274,8 @@ object IngestPipeline {
     parts.coalesce(1).write.partitionBy(p).mode("overwrite").parquet(tmp)
     fs.listStatus(new Path(tmp)).map(_.getPath.getName)
       .filter(_.startsWith(p + "=")).sorted
-      .foreach(n => swapDir(fs, s"$store/$n", s"$tmp/$n", s"$store.bak/$n"))
+      .foreach(n =>
+        Layout.swapDir(fs, s"$store/$n", s"$tmp/$n", s"$store.bak/$n"))
   }
 
   /** Small-files compaction for the partitioned stores (the bucket upsert

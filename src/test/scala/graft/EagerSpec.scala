@@ -120,6 +120,15 @@ class EagerSpec extends SparkSuite {
     val mlCaches = sources("src/main/scala/graft/ml")
       .filter(p => text(p).contains("ConcurrentHashMap"))
     assert(mlCaches.isEmpty, mlCaches.mkString(", "))
+    // every derived store is ensured through Layout.ensureStore: none
+    // lives under a hard-coded /tmp root, and none is taken as complete
+    // because its directory exists
+    val exists = "File\\([^)]*\\)\\.exists".r
+    val bypass = main.filter { p =>
+      val t = text(p)
+      t.contains("\"/tmp") || exists.findFirstIn(t).nonEmpty
+    }.map(_.getFileName.toString)
+    assert(bypass.isEmpty, bypass.mkString(", "))
   }
 
   private object Tables0 {

@@ -72,13 +72,15 @@ class IvfIndexSpec extends SparkSuite {
       assert(la.toSeq === ma.toSeq)
     }
     // second serve call reuses the stored model: no file under THIS
-    // corpus's store may change (no retrain, no rewrite). Scoped to
-    // modelPath(sf0001), not the shared /tmp/graft_models root — another
-    // corpus's concurrent build must not flip this assertion.
+    // corpus's store may change (no retrain, no rewrite). Scoped to the
+    // path ensureModel returns for sf0001, not the whole warehouse —
+    // another corpus's concurrent build must not flip this assertion.
     def stampOf(f: java.io.File): Long =
       if (f.isDirectory) (f.lastModified() +: f.listFiles().map(stampOf)).max
       else f.lastModified()
-    val storeF = new java.io.File(IvfIndex.modelPath(sf0001))
+    val storeF = new java.io.File(
+      new java.net.URI(IvfIndex.ensureModel(spark, sf0001)).getPath)
+    assert(storeF.isDirectory, storeF)
     val stamp = stampOf(storeF)
     IvfIndex.simSearchIvfServe(spark, sf0001).collect()
     assert(stampOf(storeF) === stamp)

@@ -14,7 +14,7 @@ class LayoutSpec extends SparkSuite {
     val events = Tables.events(spark, sf0001)
     Layout.writeEventsByDay(events, dir)
 
-    val back = Layout.readEventsByDay(spark, dir)
+    val back = spark.read.parquet(dir)
     // content fidelity (modulo the derived partition column)
     assert(back.count() === events.count())
 
@@ -101,7 +101,7 @@ class LayoutSpec extends SparkSuite {
   test("dynamic partition pruning fires on a dim-filtered partition join") {
     val dir = Files.createTempDirectory("graft_dpp").toString
     Layout.writeEventsByDay(Tables.events(spark, sf0001), dir)
-    val fact = Layout.readEventsByDay(spark, dir)
+    val fact = spark.read.parquet(dir)
     // dim carrying a non-partition attribute, filtered at query time: the
     // fact side must receive a runtime (dynamicpruning) partition filter,
     // scanning only the dim-selected days
@@ -170,22 +170,49 @@ class LayoutSpec extends SparkSuite {
     // the committer creates the store directory when the job starts: a
     // crash mid-write leaves it holding only _temporary/, which a
     // directory-exists check would take for a finished store
-    val wh = spark.conf.get("spark.sql.warehouse.dir")
-    val tag = graft.sources.Fingerprint.tag(sf0001, "events")
     val conf = spark.sparkContext.hadoopConfiguration
-    Seq("jsonl", "byday").foreach { name =>
-      val p = new org.apache.hadoop.fs.Path(s"$wh/graft_events_${name}_$tag")
+    def crash(store: String): Unit = {
+      val p = new org.apache.hadoop.fs.Path(store)
       val fs = p.getFileSystem(conf)
       fs.delete(p, true)
       assert(fs.mkdirs(new org.apache.hadoop.fs.Path(p, "_temporary/0")))
     }
+    val wh = spark.conf.get("spark.sql.warehouse.dir")
+    val tag = graft.sources.Fingerprint.tag(sf0001, "events")
+    Seq("jsonl", "byday").foreach(n => crash(s"$wh/graft_events_${n}_$tag"))
     val n = Tables.events(spark, sf0001).count()
     val jsonl = Layout.readEventsJsonl(spark,
       Layout.ensureEventsJsonl(spark, sf0001))
     assert(jsonl.count() === n)
-    val byDay = Layout.readEventsByDay(spark,
-      Layout.ensureEventsByDay(spark, sf0001))
+    val byDay = spark.read.parquet(Layout.ensureEventsByDay(spark, sf0001))
     assert(byDay.count() === n)
+    // a model store whose LAST part crashed (the earlier parts are
+    // complete): the serve key retrains instead of reading the empty
+    // part, and answers exactly as train-and-search does
+    import graft.ml.{IvfIndex, PqIndex}
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().toSeq
+    crash(IvfIndex.ensureModel(spark, sf0001) + "/data")
+    def ivf(df: org.apache.spark.sql.DataFrame) =
+      rows(df.select("vec_id", "cell", "cos_sim"))
+    assert(ivf(IvfIndex.simSearchIvfServe(spark, sf0001)) ===
+      ivf(IvfIndex.simSearchIvf(spark, sf0001)))
+    crash(PqIndex.ensureModel(spark, sf0001) + "/codes")
+    assert(rows(PqIndex.simSearchPqServe(spark, sf0001)) ===
+      rows(PqIndex.simSearchPq(spark, sf0001)))
+    crash(PqIndex.ensureIvfPqModel(spark, sf0001) + "/codes")
+    assert(rows(PqIndex.simSearchIvfPqServe(spark, sf0001)) ===
+      rows(PqIndex.simSearchIvfPq(spark, sf0001)))
+    // a versioned store whose crash left only v1's commit is rebuilt to
+    // exactly two snapshots, not extended by two more appends
+    import graft.sources.Versioned
+    val root = s"$wh/graft_events_versioned_$tag"
+    val rootP = new org.apache.hadoop.fs.Path(root)
+    rootP.getFileSystem(conf).delete(rootP, true)
+    Versioned.append(spark, root, Tables.events(spark, sf0001)
+      .filter(unix_micros(col("ts")) < graft.operators.RelationalOps.TtSplitUs))
+    graft.operators.RelationalOps.scanTimeTravel(spark, sf0001).collect()
+    assert(Versioned.currentVersion(spark, root) === 2)
+    assert(Versioned.readVersion(spark, root, 2).count() === n)
   }
 
   test("schema evolution: mergeSchema unifies old and new file layouts") {

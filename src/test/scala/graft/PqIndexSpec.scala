@@ -137,7 +137,7 @@ class PqIndexSpec extends SparkSuite {
   }
 
   test("ivfpq serve: identical answer from the persisted store; cell-partitioned codes") {
-    val servePath = PqIndex.persistIvfPqModel(spark, sf0001)
+    val servePath = PqIndex.ensureIvfPqModel(spark, sf0001)
     val inline = PqIndex.simSearchIvfPq(spark, sf0001)
       .as[(Long, Double)].collect().toSeq
     val served = PqIndex.simSearchIvfPqServe(spark, sf0001)
@@ -149,7 +149,8 @@ class PqIndexSpec extends SparkSuite {
     val codesSchema = spark.read.parquet(s"$servePath/codes")
       .schema.fieldNames.toSet
     assert(codesSchema === Set("vec_id", "codes", "cell"))
-    val cellDirs = new java.io.File(s"$servePath/codes").listFiles()
+    val storeF = new java.io.File(new java.net.URI(servePath).getPath)
+    val cellDirs = new java.io.File(storeF, "codes").listFiles()
       .filter(_.getName.startsWith("cell="))
     assert(cellDirs.nonEmpty)
     assert(spark.read.parquet(s"$servePath/coarse").count() === PqIndex.CoarseK.toLong)
@@ -160,14 +161,13 @@ class PqIndexSpec extends SparkSuite {
     def stampOf(f: java.io.File): Long =
       if (f.isDirectory) (f.lastModified() +: f.listFiles().map(stampOf)).max
       else f.lastModified()
-    val storeF = new java.io.File(servePath)
     val stamp = stampOf(storeF)
     PqIndex.simSearchIvfPqServe(spark, sf0001).collect()
     assert(stampOf(storeF) === stamp)
   }
 
   test("serve path: identical answer from the persisted store; codes-only layout") {
-    val servePath = PqIndex.persistModel(spark, sf0001)
+    val servePath = PqIndex.ensureModel(spark, sf0001)
     val inline = PqIndex.simSearchPq(spark, sf0001)
       .as[(Long, Double)].collect().toSeq
     val served = PqIndex.simSearchPqServe(spark, sf0001)

@@ -38,7 +38,6 @@ class PropertySpec extends SparkSuite {
 
   test("∀ random data+k: TopK rewrite ≡ window row_number form") {
     import org.apache.spark.sql.expressions.Window
-    graft.plans.TopK.enableRewrite(spark)
     val rows = samples(for {
       key <- Gen.choose(0, 4)
       id  <- Gen.choose(0L, 10000L)

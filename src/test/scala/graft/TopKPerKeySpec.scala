@@ -92,7 +92,6 @@ class TopKPerKeySpec extends SparkSuite {
 
   test("optimizer rule rewrites the row_number idiom to the native operator") {
     import org.apache.spark.sql.expressions.Window
-    TopK.enableRewrite(spark)
     val w = Window.partitionBy($"event_type").orderBy(desc("value"), $"event_id")
     val idiom = events.withColumn("rn", row_number().over(w))
       .filter($"rn" <= 5).drop("rn")
@@ -110,7 +109,6 @@ class TopKPerKeySpec extends SparkSuite {
 
   test("rewrite fires even when the rank is in the result (rank emitted)") {
     import org.apache.spark.sql.expressions.Window
-    TopK.enableRewrite(spark)
     val w = Window.partitionBy($"event_type").orderBy(desc("value"), $"event_id")
     val keepsRank = events.withColumn("rn", row_number().over(w))
       .filter($"rn" <= 5) // rn survives into the output
@@ -130,7 +128,6 @@ class TopKPerKeySpec extends SparkSuite {
 
   test("rewrite handles rn < k and rn = 1 forms") {
     import org.apache.spark.sql.expressions.Window
-    TopK.enableRewrite(spark)
     val w = Window.partitionBy($"event_type").orderBy(desc("value"), $"event_id")
     val lt = events.withColumn("rn", row_number().over(w))
       .filter($"rn" < 4).drop("rn")
