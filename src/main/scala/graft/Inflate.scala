@@ -48,7 +48,7 @@ object Inflate {
       System.err.println(s"[inflate] $name done")
     }
 
-    def tbl(name: String) = spark.read.parquet(s"$src/$name.parquet")
+    def tbl(name: String) = graft.sources.Tables.table(spark, src, name)
     write(tbl("region"), "region")
     write(tbl("nation"), "nation")
     write(copies(tbl("customer"))(shifted(_, _, "c_custkey")), "customer")

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.Key
 import graft.operators.DedupOps.dot
 import graft.operators.SharedCorpus
-import graft.sources.Layout
+import graft.sources.{Layout, Tables}
 
 /** IVF (inverted-file) index over an embedding column: a deterministic
   * mini k-means trains the coarse quantizer, vectors are assigned to their
@@ -162,7 +162,7 @@ object IvfIndex {
     * cross-scale recall minimum high enough for a floor that binds
     * (see [[graft.operators.SimilarityOps.annInvariant]]). */
   def simSearchIvf(spark: SparkSession, dir: String): DataFrame = {
-    val emb = graft.sources.Tables.embeddings(spark, dir)
+    val emb = Tables.embeddings(spark, dir)
     val model = train(emb, k = 16, iters = 3)
     search(emb, model, probeId = 0L, k = 10, nprobe = 4)
   }
@@ -186,7 +186,7 @@ object IvfIndex {
     Layout.ensureStore(spark, dir, "ivf_v2_k16_i3", "data/_SUCCESS",
         "embeddings") { path =>
       import spark.implicits._
-      val emb = graft.sources.Tables.embeddings(spark, dir)
+      val emb = Tables.embeddings(spark, dir)
       val model = train(emb, k = 16, iters = 3)
       model.centroids.toSeq.toDF("cell", "cvec")
         .coalesce(1).write.mode("overwrite").parquet(s"$path/model")
@@ -207,7 +207,7 @@ object IvfIndex {
 
   /** A persisted (cell, cvec) centroid table, ordered by cell. */
   private[ml] def readModel(spark: SparkSession, path: String): Model =
-    Model(spark.read.parquet(path).select(col("cell"), col("cvec")).collect()
+    Model(Tables.parquet(spark, path).select(col("cell"), col("cvec")).collect()
       .map(r => r.getInt(0) -> r.getSeq[Double](1).toArray).sortBy(_._1))
 
   /** Serving-path query: NO training and NO corpus-wide assignment
@@ -222,7 +222,7 @@ object IvfIndex {
   def simSearchIvfServe(spark: SparkSession, dir: String): DataFrame = {
     val path = ensureModel(spark, dir)
     val model = loadModel(spark, dir)
-    val data = spark.read.parquet(s"$path/data")
+    val data = Tables.parquet(spark, s"$path/data")
     val probeId = 0L
     val probe = data.filter(col("vec_id") === probeId)
       .select(col("v").as("p_v"), col("norm").as("p_norm"))

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.Key
 import graft.operators.DedupOps.dot
 import graft.operators.SharedCorpus
-import graft.sources.Layout
+import graft.sources.{Layout, Tables}
 
 /** Product quantization (PQ) over the embedding column — the memory-side
   * complement to [[IvfIndex]]'s scan-side pruning, completing the ANN
@@ -194,7 +194,7 @@ object PqIndex {
   /** Driver-contract query: train, encode, ADC-scan for vec 0's top-100
     * short list, exact-cosine re-rank to 10. Rows-only key. */
   def simSearchPq(spark: SparkSession, dir: String): DataFrame = {
-    val emb = graft.sources.Tables.embeddings(spark, dir)
+    val emb = Tables.embeddings(spark, dir)
     val cb = train(emb)
     val probeId = 0L
     val pVec = emb.filter(col("vec_id") === probeId)
@@ -231,7 +231,7 @@ object PqIndex {
     Layout.ensureStore(spark, dir, s"pq_v2_m${M}_k${K}_i${Iters}",
         "codes/_SUCCESS", "embeddings") { path =>
       import spark.implicits._
-      val emb = graft.sources.Tables.embeddings(spark, dir)
+      val emb = Tables.embeddings(spark, dir)
       val cb = train(emb)
       cb.books.zipWithIndex.flatMap { case (model, m) =>
         model.centroids.map { case (code, cvec) => (m, code, cvec.toSeq) }
@@ -249,7 +249,7 @@ object PqIndex {
 
   /** M codebooks from a persisted (m, code, cvec) table. */
   private def readBooks(spark: SparkSession, path: String): Codebooks = {
-    val rows = spark.read.parquet(path)
+    val rows = Tables.parquet(spark, path)
       .select(col("m"), col("code"), col("cvec")).collect()
     val books = (0 until M).map { m =>
       IvfIndex.Model(rows.filter(_.getInt(0) == m)
@@ -266,14 +266,14 @@ object PqIndex {
   def simSearchPqServe(spark: SparkSession, dir: String): DataFrame = {
     val path = ensureModel(spark, dir)
     val cb = loadBooks(spark, dir)
-    val emb = graft.sources.Tables.embeddings(spark, dir)
+    val emb = Tables.embeddings(spark, dir)
     val probeId = 0L
     val pVec = emb.filter(col("vec_id") === probeId)
       .select(col("embedding").cast("array<double>"))
       .head().getSeq[Double](0).toArray
     val pNorm = math.sqrt(pVec.map(x => x * x).sum)
     val pUnit = pVec.map(_ / pNorm)
-    val shortIds = spark.read.parquet(s"$path/codes")
+    val shortIds = Tables.parquet(spark, s"$path/codes")
       .filter(col("vec_id") =!= probeId)
       .withColumn("adc_d2", adcColumn(adcTable(pUnit, cb)))
       .orderBy(col("adc_d2"), col("vec_id"))
@@ -356,7 +356,7 @@ object PqIndex {
   }
 
   def simSearchIvfPq(spark: SparkSession, dir: String): DataFrame = {
-    val emb = graft.sources.Tables.embeddings(spark, dir)
+    val emb = Tables.embeddings(spark, dir)
     val d = emb.select(size(col("embedding"))).head().getInt(0)
     val unit = withUnit(emb).cache()
     val (coarse, cb, codesDf) = trainIvfPq(unit, d)
@@ -400,7 +400,7 @@ object PqIndex {
         s"ivfpq_v2_m${M}_k${K}_i${Iters}_c${CoarseK}_ci${CoarseIters}",
         "codes/_SUCCESS", "embeddings") { path =>
       import spark.implicits._
-      val emb = graft.sources.Tables.embeddings(spark, dir)
+      val emb = Tables.embeddings(spark, dir)
       val d = emb.select(size(col("embedding"))).head().getInt(0)
       val unit = withUnit(emb).cache()
       val (coarse, cb, codes) = trainIvfPq(unit, d)
@@ -432,14 +432,14 @@ object PqIndex {
   def simSearchIvfPqServe(spark: SparkSession, dir: String): DataFrame = {
     val path = ensureIvfPqModel(spark, dir)
     val (coarse, cb) = loadIvfPq(spark, dir)
-    val emb = graft.sources.Tables.embeddings(spark, dir)
+    val emb = Tables.embeddings(spark, dir)
     val probeId = 0L
     val pRaw = emb.filter(col("vec_id") === probeId)
       .select(col("embedding").cast("array<double>"))
       .head().getSeq[Double](0).toArray
     val pNorm = math.sqrt(pRaw.map(x => x * x).sum)
     val pu = pRaw.map(_ / pNorm)
-    val codes = spark.read.parquet(s"$path/codes")
+    val codes = Tables.parquet(spark, s"$path/codes")
       .select(col("vec_id"), col("cell").cast("int").as("cell"), col("codes"))
     val shortIds = ivfPqShortList(codes, coarse, cb, pu, probeId)
     rerankByIds(emb, shortIds, pRaw) // 100-id point fetch

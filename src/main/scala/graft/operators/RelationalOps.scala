@@ -93,7 +93,7 @@ object RelationalOps {
   // layout the write side (Layout.scala) exists for. ──
   def scanPrunedDay(spark: SparkSession, dir: String): DataFrame = {
     val path = graft.sources.Layout.ensureEventsByDay(spark, dir)
-    spark.read.parquet(path)
+    Tables.parquet(spark, path)
       .filter(col("day") === to_date(lit("2024-01-15")))
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("cnt"), avgMoney(col("value")).as("avg_value"))
@@ -111,7 +111,7 @@ object RelationalOps {
   // (the oracle runs the same filter on the unsorted source). ──
   def scanZorder(spark: SparkSession, dir: String): DataFrame = {
     val path = graft.sources.Layout.ensureEventsZOrdered(spark, dir)
-    spark.read.parquet(path)
+    Tables.parquet(spark, path)
       // BOTH predicates compare raw columns (the time bound is a folded
       // timestamp literal, not unix_micros(ts) — a function over the
       // column would block parquet pushdown and with it the min/max
@@ -140,11 +140,11 @@ object RelationalOps {
   // to the raw table; the read path never sees that rule. ──
   def scanDeleteVectors(spark: SparkSession, dir: String): DataFrame = {
     val path = graft.sources.Layout.ensureEventsMor(spark, dir)
-    val data = spark.read.parquet(s"$path/data")
+    val data = Tables.parquet(spark, s"$path/data")
       .select(col("event_type"), col("value"),
         col("_metadata.file_path").as("file"),
         col("_metadata.row_index").as("pos"))
-    val deletes = spark.read.parquet(s"$path/deletes")
+    val deletes = Tables.parquet(spark, s"$path/deletes")
     data.join(broadcast(deletes), Seq("file", "pos"), "left_anti")
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("cnt"), sumMoney(col("value")).as("sum_value"))
@@ -172,15 +172,14 @@ object RelationalOps {
     val target = 7L
     val bits = graft.sources.Layout.BloomIdxSeeds
       .map(j => graft.sources.Layout.bloomIdxBit(target, j))
-    val files = spark.read.parquet(s"$path/index")
+    val files = Tables.parquet(spark, s"$path/index")
       .filter(col("bit").isin(bits: _*))
       .groupBy(col("file"))
       .agg(countDistinct(col("bit")).as("hits"))
       .filter(col("hits") === bits.distinct.length)
       .select(col("file")).collect().map(_.getString(0))
-    val data =
-      if (files.nonEmpty) spark.read.parquet(files.toIndexedSeq: _*)
-      else spark.read.parquet(s"$path/data")
+    val data = Tables.parquet(spark,
+      (if (files.nonEmpty) files.toSeq else Seq(s"$path/data")): _*)
     data.filter(col("user_id") === target)
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("cnt"), sumMoney(col("value")).as("sum_value"))
@@ -202,12 +201,11 @@ object RelationalOps {
   def scanMinMaxSkip(spark: SparkSession, dir: String): DataFrame = {
     val path = graft.sources.Layout.ensureEventsMinMax(spark, dir)
     val (lo, hi) = (250.0, 260.0)
-    val files = spark.read.parquet(s"$path/stats")
+    val files = Tables.parquet(spark, s"$path/stats")
       .filter(col("lo") < hi && col("hi") >= lo)
       .select(col("file")).collect().map(_.getString(0))
-    val data =
-      if (files.nonEmpty) spark.read.parquet(files.toIndexedSeq: _*)
-      else spark.read.parquet(s"$path/data")
+    val data = Tables.parquet(spark,
+      (if (files.nonEmpty) files.toSeq else Seq(s"$path/data")): _*)
     data.filter(col("value") >= lo && col("value") < hi)
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("cnt"), sumMoney(col("value")).as("sum_value"))
@@ -228,10 +226,10 @@ object RelationalOps {
     val path = graft.sources.Layout.ensureEventsPartEvo(spark, dir, TtSplitUs)
     val startUs = 1704844800000000L // 2024-01-10 UTC
     val endUs = 1706400000000000L // 2024-01-28 UTC
-    val g1 = spark.read.parquet(s"$path/gen1")
+    val g1 = Tables.parquet(spark, s"$path/gen1")
       .filter(col("day") >= "2024-01-10" && col("day") < "2024-01-28")
       .select(col("event_type"), col("value"))
-    val g2 = spark.read.parquet(s"$path/gen2")
+    val g2 = Tables.parquet(spark, s"$path/gen2")
       .filter(col("month") >= "2024-01" && col("month") <= "2024-01" &&
         col("ts") >= timestamp_micros(lit(startUs)) &&
         col("ts") < timestamp_micros(lit(endUs)))
@@ -442,7 +440,7 @@ object RelationalOps {
         "events_ivm_v1", "_SUCCESS", "events")(
       partials(graft.sources.Versioned.readVersion(spark, root, 1))
         .write.mode("overwrite").parquet(_))
-    val stored = spark.read.parquet(aggPath)
+    val stored = Tables.parquet(spark, aggPath)
       .withColumn("cnt_new", lit(0L))
     val delta = partials(graft.sources.Versioned.readDiff(spark, root, 1, 2))
       .withColumn("cnt_new", col("cnt"))
@@ -467,7 +465,7 @@ object RelationalOps {
   // selected days without the query author naming them. ──
   def scanPrunedDpp(spark: SparkSession, dir: String): DataFrame = {
     val path = graft.sources.Layout.ensureEventsByDay(spark, dir)
-    val fact = spark.read.parquet(path)
+    val fact = Tables.parquet(spark, path)
     // the calendar dim: at scale a real table; derived here from the
     // source events (NOT the partitioned store, so the dim subquery is
     // independent of the scan it prunes)

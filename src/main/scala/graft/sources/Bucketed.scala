@@ -22,11 +22,10 @@ import org.apache.spark.sql.SparkSession
   * 16 buckets held agg_bucketed to 16 tasks on 32 cores — ~20× instead
   * of 10× at 10× data). The count is therefore derived from the fact
   * table's size at layout time — constant per-bucket work, like the
-  * embedding cell count — with `spark.graft.bucketed.buckets` as the
-  * explicit override. Both tables always share one count (co-partitioning
-  * is the whole point), and the count is baked into the content-keyed
-  * table name so a resize builds a NEW layout instead of silently reusing
-  * the old one.
+  * embedding cell count. Both tables always share one count
+  * (co-partitioning is the whole point), and the count is baked into the
+  * content-keyed table name so a resize builds a NEW layout instead of
+  * silently reusing the old one.
   *
   * The reference has no analogue (pandas joins in memory); this is the
   * engine-level upgrade its workflow gains for free on Spark.
@@ -40,32 +39,15 @@ object Bucketed {
   val MinBuckets = 16
   val MaxBuckets = 4096
 
-  /** Derived counts, memoized per CONTENT FINGERPRINT (not per dir):
-    * [[ensure]] runs on EVERY bucketed-key invocation, and without the
-    * memo each query would pay a lineitem count() job just to compute
-    * the table name it is about to find in the catalog. Keying on the
-    * fingerprint keeps the memo honest when data is regenerated at the
-    * same path mid-JVM — the new files get a new tag, so the fresh
-    * layout is sized from a fresh count, matching ensure()'s own
-    * "regenerated data gets a distinct table" promise. The conf override
-    * is deliberately NOT memoized (reading a conf is free and tests flip
-    * it mid-session). */
-  private val countCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Integer]()
-
-  /** Bucket count for `dir`'s layout: an explicit
-    * `spark.graft.bucketed.buckets` wins; otherwise sized from the
-    * lineitem row count (one parquet-metadata count, paid once per
-    * data-content fingerprint per JVM — the build itself is the
-    * expensive part and runs once per layout). */
-  def bucketCount(spark: SparkSession, dir: String): Int =
-    spark.conf.getOption("spark.graft.bucketed.buckets").map(_.toInt)
-      .getOrElse(countCache.computeIfAbsent(
-        Fingerprint.tag(dir, "lineitem"), { _ =>
-          val rows = Tables.lineitem(spark, dir).count()
-          math.min(MaxBuckets, math.max(MinBuckets,
-            math.ceil(rows.toDouble / TargetRowsPerBucket).toInt))
-        }))
+  /** Bucket count for `dir`'s layout, sized from the lineitem row count.
+    * [[ensure]] runs on every bucketed-key invocation, so the count comes
+    * from the footers' row-group counts ([[Tables.rowCount]]): a driver-side
+    * metadata read, no Spark job. */
+  def bucketCount(spark: SparkSession, dir: String): Int = {
+    val rows = Tables.rowCount(spark, dir, "lineitem")
+    math.min(MaxBuckets, math.max(MinBuckets,
+      math.ceil(rows.toDouble / TargetRowsPerBucket).toInt))
+  }
 
   /** Lazily materialize the bucketed twins for `dir` (exactly once per
     * warehouse — a catalog lookup thereafter, like any table). A fresh

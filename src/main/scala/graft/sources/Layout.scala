@@ -48,7 +48,11 @@ object Layout {
     * the directory when the job STARTS, so a crash mid-write leaves a
     * partial store that a bare-existence check would serve forever.
     * Every `write` replaces whatever a crash left (overwrite mode, or a
-    * cleared root). */
+    * cleared root). One job writes each part of a store, so its readers
+    * take the schema from one footer ([[Tables.parquet]]); only
+    * [[ensureEventsCorrupt]]'s poisoned member and
+    * [[ensureEventsSchemaEvolution]]'s two schemas are read with Spark's
+    * inference. */
   private[graft] def ensureStore(spark: SparkSession, dir: String,
       name: String, marker: String, tables: String*)(
       write: String => Unit): String = {
@@ -154,7 +158,7 @@ object Layout {
       Tables.events(spark, dir)
         .repartition(8, col("event_id"))
         .write.mode("overwrite").parquet(s"$path/data")
-      spark.read.parquet(s"$path/data")
+      Tables.parquet(spark, s"$path/data")
         .select(col("_metadata.file_path").as("file"),
           col("_metadata.row_index").as("pos"), col("event_id"))
         .filter(col("event_id") % 13 === 0)
@@ -198,7 +202,7 @@ object Layout {
       val bits = BloomIdxSeeds.map(j =>
         pmod(pmod(col("user_id"), lit(2147483648L)) *
           lit(2654435761L + j * 40503L), lit(BloomIdxBits)))
-      spark.read.parquet(s"$path/data")
+      Tables.parquet(spark, s"$path/data")
         .select(col("_metadata.file_path").as("file"),
           explode(array(bits: _*)).as("bit"))
         .distinct()
@@ -220,7 +224,7 @@ object Layout {
       Tables.events(spark, dir)
         .repartitionByRange(16, col("value"))
         .write.mode("overwrite").parquet(s"$path/data")
-      spark.read.parquet(s"$path/data")
+      Tables.parquet(spark, s"$path/data")
         .groupBy(col("_metadata.file_path").as("file"))
         .agg(min(col("value")).as("lo"), max(col("value")).as("hi"))
         .write.mode("overwrite").parquet(s"$path/stats")
@@ -416,6 +420,8 @@ object Layout {
     val totalBytes = before.map(_.getLen).sum
     val nOut = math.max(1, math.ceil(
       totalBytes.toDouble / (targetFileMB.toLong << 20)).toInt)
+    // Spark's inference, not Tables.parquet: the input is any parquet
+    // directory, possibly appended to by writers with different schemas
     spark.read.parquet(path).coalesce(nOut)
       .write.mode("overwrite").parquet(tmp)
     val after = dataFiles(new Path(tmp)).size

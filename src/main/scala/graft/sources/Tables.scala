@@ -1,6 +1,15 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.parquet.format.converter.ParquetMetadataConverter.{
+  MetadataFilter, NO_FILTER, SKIP_ROW_GROUPS}
+import org.apache.parquet.hadoop.Footer
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.sql.{DataFrame, GraftSqlBridge, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat,
+  ParquetFooterReader, ParquetToSparkSchemaConverter}
+import org.apache.spark.sql.functions.{col, expr, timestamp_micros, unix_micros}
+import org.apache.spark.sql.types.LongType
 
 /** Loaders for the driver's test tables (`/root/testdata/<sf>/<name>.parquet`).
   *
@@ -10,69 +19,65 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * reach the scan (`PushedFilters` / `ReadSchema` in `.explain`). At 100 TB
   * the same loaders work against a partitioned parquet/iceberg layout —
   * nothing here assumes a single file.
+  *
+  * This is the one place a parquet schema comes from. Every source table,
+  * and every store one Spark job wrote, is read through [[parquet]] with
+  * the schema held in the footer of one of its data files, read on the
+  * driver; a bare `spark.read.parquet(path)` runs a Spark job per DataFrame
+  * to infer the same schema. Reads whose inputs hold several schemas by
+  * design (`mergeSchema`, a poisoned member, the streaming stores) keep
+  * Spark's inference.
   */
 object Tables {
   private def path(dir: String, name: String): String = s"$dir/$name.parquet"
 
-  /** Schema cache, keyed by the store's DATA-FILE listing (count, max
-    * mtime, total bytes over the non-hidden files inside a directory
-    * store; the file's own stat for a single-file store) so a rewritten
-    * store is re-inferred. Keying on the DIRECTORY stat alone is wrong
-    * for Spark-written parquet: dir mtime moves only when direct entries
-    * are created/renamed/deleted and dir length() is not content size, so
-    * an in-place rewrite of identically-named part files would serve a
-    * stale schema. On a cluster the catalog (metastore/iceberg) serves
-    * the schema and the per-query footer-inference read never happens; a
-    * bare `spark.read.parquet(path)` re-lists and re-infers on EVERY
-    * DataFrame construction, which profiled at 0.1-0.2 s of driver time
-    * per query — a fixed tax on all 455 bench keys. Caching the inferred
-    * schema and passing it explicitly restores catalog-like behavior
-    * without changing any result: the cached schema IS what inference
-    * produced under the session's parquet confs, and the listing stamp
-    * invalidates on any rewrite. Non-local paths (hdfs://, s3://) fail
-    * the java.io.File existence probe and fall through to the plain
-    * uncached read — graceful degradation; on a real cluster the catalog
-    * owns the schema and this cache is not the mechanism. Bounded: the
-    * key space is (test dirs × tables × rewrites), tiny by construction,
-    * but a defensive clear at 1024 entries stops unbounded growth if a
-    * caller loops over generated stores. */
-  private val schemaCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, Long, Long, Long),
-      org.apache.spark.sql.types.StructType]()
-  private val SchemaCacheMaxEntries = 1024
+  def table(spark: SparkSession, dir: String, name: String): DataFrame =
+    parquet(spark, path(dir, name))
 
-  /** (n_files, max mtime, total bytes) over a store's data files —
-    * the listing stamp that changes whenever any part file is added,
-    * removed, or rewritten in place (mtime moves even when the name and
-    * byte count don't). Hidden/metadata entries (`_SUCCESS`, `.crc`) are
-    * excluded so a metadata-only touch doesn't churn the cache. */
-  private def listingStamp(f: java.io.File): (Long, Long, Long) =
-    if (f.isFile) (1L, f.lastModified(), f.length())
-    else {
-      val files = Option(f.listFiles()).getOrElse(Array.empty)
-        .filter(c => c.isFile && !c.getName.startsWith("_") &&
-          !c.getName.startsWith("."))
-      if (files.isEmpty) (0L, f.lastModified(), 0L)
-      else (files.length.toLong, files.map(_.lastModified()).max,
-        files.map(_.length()).sum)
-    }
-
-  def table(spark: SparkSession, dir: String, name: String): DataFrame = {
-    val p = path(dir, name)
-    val f = new java.io.File(p)
-    if (!f.exists()) spark.read.parquet(p)
-    else {
-      val (n, mt, sz) = listingStamp(f)
-      val key = (p, n, mt, sz)
-      var s = schemaCache.get(key)
-      if (s == null) {
-        s = spark.read.parquet(p).schema
-        if (schemaCache.size() >= SchemaCacheMaxEntries) schemaCache.clear()
-        schemaCache.put(key, s)
-      }
-      spark.read.schema(s).parquet(p)
-    }
+  /** Rows of table `name`, summed from its footers' row-group counts —
+    * no Spark job. */
+  def rowCount(spark: SparkSession, dir: String, name: String): Long = {
+    val files = dataFiles(spark, path(dir, name)).toSeq
+    // no data file: the read raises Spark's own error
+    if (files.isEmpty) table(spark, dir, name).count()
+    else files.map(footer(spark, _, NO_FILTER).getBlocks.stream
+      .mapToLong(_.getRowCount).sum).sum
   }
+
+  /** `spark.read.parquet(paths*)` with the schema of the first data file's
+    * footer, converted under the reading session's parquet confs at call
+    * time (so [[events]]' conf switches apply). Partition columns are still
+    * discovered from the paths. Inputs must share one schema, as the files
+    * of one write do. With no data file (a missing path, an empty store)
+    * the plain read runs, so the error is Spark's own (`PATH_NOT_FOUND`,
+    * `UNABLE_TO_INFER_SCHEMA`). */
+  private[graft] def parquet(spark: SparkSession, paths: String*): DataFrame =
+    paths.iterator.flatMap(dataFiles(spark, _)).nextOption() match {
+      case Some(f) => spark.read.schema(ParquetFileFormat.readSchemaFromFooter(
+          new Footer(f.getPath, footer(spark, f, SKIP_ROW_GROUPS)),
+          new ParquetToSparkSchemaConverter(GraftSqlBridge.sqlConf(spark))))
+        .parquet(paths: _*)
+      case None => spark.read.parquet(paths: _*)
+    }
+
+  /** The data files under `path` (a file, a directory tree or a glob),
+    * listed lazily and skipping the names Spark's file index skips
+    * (`_SUCCESS`, `.crc`, `_temporary/`, but not `name=value` dirs). */
+  private def dataFiles(spark: SparkSession, path: String): Iterator[FileStatus] = {
+    val p = new Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def walk(s: FileStatus): Iterator[FileStatus] =
+      if (s.isFile) Iterator(s)
+      else fs.listStatus(s.getPath).iterator.filter { c =>
+        val n = c.getPath.getName
+        !n.startsWith(".") && !(n.startsWith("_") && !n.contains("="))
+      }.flatMap(walk)
+    Option(fs.globStatus(p)).iterator.flatMap(_.iterator).flatMap(walk)
+  }
+
+  private def footer(spark: SparkSession, f: FileStatus, filter: MetadataFilter) =
+    ParquetFooterReader.readFooter(HadoopInputFile.fromStatus(
+      f, spark.sparkContext.hadoopConfiguration), filter)
 
   def region(spark: SparkSession, dir: String): DataFrame   = table(spark, dir, "region")
   def nation(spark: SparkSession, dir: String): DataFrame   = table(spark, dir, "nation")
@@ -95,9 +100,7 @@ object Tables {
   def events(spark: SparkSession, dir: String): DataFrame = {
     val raw = eventsRaw(spark, dir)
     raw.schema("ts").dataType match {
-      case org.apache.spark.sql.types.LongType =>
-        raw.withColumn("ts", org.apache.spark.sql.functions.timestamp_micros(
-          org.apache.spark.sql.functions.expr("ts div 1000")))
+      case LongType => raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))
       case _ => raw
     }
   }
@@ -125,10 +128,8 @@ object Tables {
   def eventsRawNanos(spark: SparkSession, dir: String): DataFrame = {
     val raw = eventsRaw(spark, dir)
     raw.schema("ts").dataType match {
-      case org.apache.spark.sql.types.LongType => raw
-      case _ => raw.withColumn("ts",
-        org.apache.spark.sql.functions.unix_micros(
-          org.apache.spark.sql.functions.col("ts")) * 1000L)
+      case LongType => raw
+      case _ => raw.withColumn("ts", unix_micros(col("ts")) * 1000L)
     }
   }
   def documents(spark: SparkSession, dir: String): DataFrame  = table(spark, dir, "documents")

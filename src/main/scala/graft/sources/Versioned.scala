@@ -84,7 +84,7 @@ object Versioned {
   /** Read snapshot `v`: exactly the manifest's files, no directory listing
     * — concurrent appends are invisible by construction. */
   def readVersion(spark: SparkSession, root: String, v: Int): DataFrame =
-    spark.read.parquet(files(spark, root, v).toIndexedSeq: _*)
+    Tables.parquet(spark, files(spark, root, v).toIndexedSeq: _*)
 
   /** Incremental read: the files ADDED between snapshots `from` → `to`.
     * Data files are immutable and commits only add, so the snapshot diff
@@ -99,6 +99,6 @@ object Versioned {
     val before = if (from == 0) Array.empty[String] else files(spark, root, from)
     val added = files(spark, root, to).diff(before)
     require(added.nonEmpty, s"no files added between v$from and v$to")
-    spark.read.parquet(added.toIndexedSeq: _*)
+    Tables.parquet(spark, added.toIndexedSeq: _*)
   }
 }

@@ -16,6 +16,12 @@ object GraftSqlBridge {
   def ofRows(spark: SparkSession, plan: catalyst.plans.logical.LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
 
+  /** The session's live SQL conf: what the parquet schema converter of
+    * [[graft.sources.Tables.parquet]] is built from, as Spark's own
+    * schema inference builds it. */
+  def sqlConf(spark: SparkSession): internal.SQLConf =
+    spark.asInstanceOf[classic.SparkSession].sessionState.conf
+
   /** Rebuild a just-checkpointed Dataset's `LogicalRDD` leaf WITHOUT its
     * `originConstraints`, returning the checkpointed RDD's id alongside.
     *

@@ -52,8 +52,7 @@ class CountMinSketchSpec extends SparkSuite {
   }
 
   test("persisted shard sketches answer later lookups (parquet round-trip)") {
-    val store = java.nio.file.Files
-      .createTempDirectory("graft_cms").resolve("shards").toString
+    val store = tempDir("graft_cms").resolve("shards").toString
     val toks = graft.sources.Tables.documents(spark, sf0001)
       .select($"doc_id", explode(split(trim(lower($"text")), "\\s+")).as("t"))
       .filter($"t" =!= "")

@@ -26,7 +26,7 @@ class DedupSimilaritySpec extends SparkSuite {
     // (doc_id % 10 = 0) contains (a) an exact normalized-dup of a
     // HISTORY doc, (b) a within-shard dup pair, (c) a fresh doc, and pin
     // exactly who survives
-    val dir = java.nio.file.Files.createTempDirectory("graft_incdup").toString
+    val dir = tempDir("graft_incdup").toString
     Seq(
       // history (doc_id % 10 != 0)
       (1L, "Alpha beta gamma.", "en", "web", 17L),

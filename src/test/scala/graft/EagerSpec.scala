@@ -103,15 +103,16 @@ class EagerSpec extends SparkSuite {
       s"no provenance for:\n$leaf")
   }
 
+  private def sources(root: String): Seq[java.nio.file.Path] = {
+    val s = java.nio.file.Files.walk(java.nio.file.Paths.get(root))
+    try s.iterator().asScala.filter(_.toString.endsWith(".scala")).toSeq
+    finally s.close()
+  }
+  private def text(p: java.nio.file.Path) =
+    new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
+
   test("one materialization layer: `.localCheckpoint(` appears in " +
       "src/main only inside Eager, and graft.ml keeps no model cache") {
-    def sources(root: String): Seq[java.nio.file.Path] = {
-      val s = java.nio.file.Files.walk(java.nio.file.Paths.get(root))
-      try s.iterator().asScala.filter(_.toString.endsWith(".scala")).toSeq
-      finally s.close()
-    }
-    def text(p: java.nio.file.Path) =
-      new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
     val main = sources("src/main/scala")
     assert(main.nonEmpty, "run from the repository root")
     val checkpointing = main.filter(p => text(p).contains(".localCheckpoint("))
@@ -129,6 +130,28 @@ class EagerSpec extends SparkSuite {
       t.contains("\"/tmp") || exists.findFirstIn(t).nonEmpty
     }.map(_.getFileName.toString)
     assert(bypass.isEmpty, bypass.mkString(", "))
+  }
+
+  test("one schema source: outside Tables, src/main infers a parquet " +
+      "schema only where the input holds several schemas by design") {
+    // a `spark.read` chain without `.schema(` that ends in `.parquet(`,
+    // over the text with its whole-line comments removed
+    val inferring = """spark\.read((?:\s*\.\w+\([^()]*\))*)\s*\.parquet\(""".r
+    val counts = sources("src/main/scala")
+      .filterNot(_.getFileName.toString == "Tables.scala")
+      .map { p =>
+        val code = text(p).replaceAll("(?m)^\\s*//.*$", "")
+        p.getFileName.toString -> inferring.findAllMatchIn(code)
+          .count(m => !m.group(1).contains(".schema("))
+      }.filter(_._2 > 0).toMap
+    assert(counts === Map(
+      // scanCorruptTolerant (a poisoned member), scanSchemaEvolution
+      // (mergeSchema over two generations)
+      "RelationalOps.scala" -> 2,
+      // compact: any parquet directory
+      "Layout.scala" -> 1,
+      // the streaming stores, appended to across schema revisions
+      "IngestPipeline.scala" -> 4))
   }
 
   private object Tables0 {

@@ -97,8 +97,8 @@ class IngestPipelineSpec extends SparkSuite {
     // the checkpoint, the sink is idempotent per epoch — stop/restart must
     // neither lose nor duplicate
     implicit val sqlCtx = spark.sqlContext
-    val out = java.nio.file.Files.createTempDirectory("graft_sink").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_ckpt").toString
+    val out = tempDir("graft_sink").toString
+    val ckpt = tempDir("graft_ckpt").toString
     def rec(city: String, dt: Long) =
       s"""{"name":"$city","main":{"temp":1.0,"humidity":1,"pressure":1},"dt":$dt,"timezone":0}"""
     val stream = MemoryStream[String]
@@ -126,7 +126,7 @@ class IngestPipelineSpec extends SparkSuite {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     // FileStreamSource consumes a DIRECTORY of arriving files — stage the
     // table file into one (also what a real landing zone looks like)
-    val landing = java.nio.file.Files.createTempDirectory("graft_landing")
+    val landing = tempDir("graft_landing")
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(s"$sf0001/events.parquet"),
       landing.resolve("batch-000.parquet"))
@@ -164,7 +164,7 @@ class IngestPipelineSpec extends SparkSuite {
     // streaming form is dropDuplicates(hour, user) → windowed count.
     // This pins that rewrite equal to the batch countDistinct key.
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val landing = java.nio.file.Files.createTempDirectory("graft_landing_u")
+    val landing = tempDir("graft_landing_u")
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(s"$sf0001/events.parquet"),
       landing.resolve("batch-000.parquet"))
@@ -203,7 +203,7 @@ class IngestPipelineSpec extends SparkSuite {
     // a backfill via RelationalOps.windowHopping and the live stream must
     // produce identical frames (the claim the batch key's scaladoc makes)
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val landing = java.nio.file.Files.createTempDirectory("graft_hop")
+    val landing = tempDir("graft_hop")
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(s"$sf0001/events.parquet"),
       landing.resolve("batch-000.parquet"))
@@ -243,7 +243,7 @@ class IngestPipelineSpec extends SparkSuite {
     // batch key frame for frame — start, end (= last event + gap),
     // count and decimal-exact value sum
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val landing = java.nio.file.Files.createTempDirectory("graft_sess")
+    val landing = tempDir("graft_sess")
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(s"$sf0001/events.parquet"),
       landing.resolve("batch-000.parquet"))
@@ -356,9 +356,9 @@ class IngestPipelineSpec extends SparkSuite {
     // via numInputRows — replay would be masked by the idempotent store,
     // so the resume is asserted on the stream itself, not just the sink).
     implicit val sqlCtx = spark.sqlContext
-    val store = java.nio.file.Files.createTempDirectory("graft_wire_store")
+    val store = tempDir("graft_wire_store")
       .resolve("store").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_wire_ck").toString
+    val ckpt = tempDir("graft_wire_ck").toString
     // (offset, city, temp, dt): the typed producer-side payload
     val stream = MemoryStream[(Long, String, Double, Long)]
     def start() = {
@@ -408,9 +408,9 @@ class IngestPipelineSpec extends SparkSuite {
 
   test("foreachBatch upsert keeps exactly the latest row per city") {
     implicit val sqlCtx = spark.sqlContext
-    val store = java.nio.file.Files.createTempDirectory("graft_upsert")
+    val store = tempDir("graft_upsert")
       .resolve("store").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_upsert_ck").toString
+    val ckpt = tempDir("graft_upsert_ck").toString
     def rec(city: String, temp: Double, dt: Long) =
       s"""{"name":"$city","main":{"temp":$temp,"humidity":1,"pressure":1},"dt":$dt,"timezone":0}"""
     val stream = MemoryStream[String]
@@ -429,7 +429,7 @@ class IngestPipelineSpec extends SparkSuite {
   }
 
   test("incremental upsert rewrites ONLY touched buckets (others byte-identical)") {
-    val store = java.nio.file.Files.createTempDirectory("graft_upsert_inc")
+    val store = tempDir("graft_upsert_inc")
       .resolve("store").toString
     def batchOf(rows: (String, Double, Long)*) = {
       import spark.implicits._
@@ -468,7 +468,7 @@ class IngestPipelineSpec extends SparkSuite {
   }
 
   test("bucket crash recovery: a bucket stranded in .bak is restored") {
-    val store = java.nio.file.Files.createTempDirectory("graft_upsert_rec")
+    val store = tempDir("graft_upsert_rec")
       .resolve("store").toString
     def batchOf(rows: (String, Double, Long)*) = {
       import spark.implicits._
@@ -499,9 +499,9 @@ class IngestPipelineSpec extends SparkSuite {
 
   test("streaming quantile-sketch store: per-day sketches, O(batch) updates") {
     implicit val sqlCtx = spark.sqlContext
-    val store = java.nio.file.Files.createTempDirectory("graft_sksto")
+    val store = tempDir("graft_sksto")
       .resolve("store").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_sksto_ck").toString
+    val ckpt = tempDir("graft_sksto_ck").toString
     def rec(city: String, temp: Double, dt: Long) =
       s"""{"name":"$city","main":{"temp":$temp,"humidity":1,"pressure":1},"dt":$dt,"timezone":0}"""
     val day1 = 1748515200L // 2025-05-29 UTC
@@ -612,9 +612,9 @@ class IngestPipelineSpec extends SparkSuite {
 
   test("streaming quarantine: malformed payload lands beside the store, valid rows unaffected") {
     implicit val sqlCtx = spark.sqlContext
-    val store = java.nio.file.Files.createTempDirectory("graft_qstore").toString
-    val quar = java.nio.file.Files.createTempDirectory("graft_quar").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_qckpt").toString
+    val store = tempDir("graft_qstore").toString
+    val quar = tempDir("graft_quar").toString
+    val ckpt = tempDir("graft_qckpt").toString
     val stream = MemoryStream[String]
     val q = IngestPipeline.quarantineStream(
       stream.toDF(), col("value"), store, quar, ckpt)
@@ -632,7 +632,7 @@ class IngestPipelineSpec extends SparkSuite {
   }
 
   test("day store: replayed batch id is a no-op; stranded .bak day recovers") {
-    val store = java.nio.file.Files.createTempDirectory("graft_cmrep")
+    val store = tempDir("graft_cmrep")
       .resolve("store").toString
     def batchDf(city: String, epoch: Long, n: Int) =
       (1 to n).map(i => (city, epoch + i * 60L)).toDF("city", "sec")
@@ -668,7 +668,7 @@ class IngestPipelineSpec extends SparkSuite {
     // incarnation's id and be silently dropped. The (query_id, batch_id)
     // pair must treat it as new data, while a true replay (same pair)
     // still skips.
-    val store = java.nio.file.Files.createTempDirectory("graft_cmqid")
+    val store = tempDir("graft_cmqid")
       .resolve("store").toString
     def batchDf(city: String, epoch: Long, n: Int) =
       (1 to n).map(i => (city, epoch + i * 60L)).toDF("city", "sec")
@@ -698,7 +698,7 @@ class IngestPipelineSpec extends SparkSuite {
     // is watermark-bounded, but a checkpoint-reset backfill is not — the
     // cap must fail loudly instead of looping thousands of per-day swap
     // jobs (or collecting an unbounded day set).
-    val store = java.nio.file.Files.createTempDirectory("graft_cmcap")
+    val store = tempDir("graft_cmcap")
       .resolve("store").toString
     val day1 = 1748515200L // 2025-05-29 UTC
     val wide = (0 to IngestPipeline.MaxDaysPerBatch) // N+1 distinct days
@@ -723,7 +723,7 @@ class IngestPipelineSpec extends SparkSuite {
     // the store swap but before the checkpoint commit re-delivers the
     // SAME batch. The rank-1 latest-per-city merge must absorb the replay
     // byte-for-byte at the row level — no duplicates, no flips.
-    val store = java.nio.file.Files.createTempDirectory("graft_upsert_rep")
+    val store = tempDir("graft_upsert_rep")
       .resolve("store").toString
     def batchOf(rows: (String, Double, Long)*) =
       rows.toDF("city", "temperature", "dt")
@@ -791,7 +791,7 @@ class IngestPipelineSpec extends SparkSuite {
   }
 
   test("compaction: oversized partitions collapse to one file, contents identical") {
-    val store = java.nio.file.Files.createTempDirectory("graft_compact")
+    val store = tempDir("graft_compact")
       .resolve("store").toString
     // simulate a partition grown over many batches (append = extra files)
     val rows1 = Seq(("Jakarta", 31.0, 70, 100L), ("Medan", 30.0, 65, 100L))
@@ -825,7 +825,7 @@ class IngestPipelineSpec extends SparkSuite {
 
   test("compaction: a day store mixing files from before and after query_id " +
       "keeps its counts and its replay guard") {
-    val store = java.nio.file.Files.createTempDirectory("graft_cmcompact")
+    val store = tempDir("graft_cmcompact")
       .resolve("store").toString
     def batchDf(city: String, epoch: Long, n: Int) =
       (1 to n).map(i => (city, epoch + i * 60L)).toDF("city", "sec")
@@ -870,9 +870,9 @@ class IngestPipelineSpec extends SparkSuite {
 
   test("streaming Count-Min store: per-day frequency sketches, O(batch) updates") {
     implicit val sqlCtx = spark.sqlContext
-    val store = java.nio.file.Files.createTempDirectory("graft_cmsto")
+    val store = tempDir("graft_cmsto")
       .resolve("store").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_cmsto_ck").toString
+    val ckpt = tempDir("graft_cmsto_ck").toString
     def rec(city: String, dt: Long) =
       s"""{"name":"$city","main":{"temp":1.0,"humidity":1,"pressure":1},"dt":$dt,"timezone":0}"""
     val day1 = 1748515200L // 2025-05-29 UTC
@@ -911,42 +911,11 @@ class IngestPipelineSpec extends SparkSuite {
     } finally q.stop()
   }
 
-  /** Call sites of the jobs `body` starts, read by a listener. The
-    * listener bus is asynchronous but delivers in order, so a fence job
-    * before `body` and one after it bound the list. */
-  private def jobsStartedBy(body: => Unit): Seq[String] = {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val sc = spark.sparkContext
-    val starts = new java.util.concurrent.LinkedBlockingQueue[String]()
-    def prop(js: SparkListenerJobStart, k: String) =
-      Option(js.properties).flatMap(p => Option(p.getProperty(k)))
-    val listener = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit =
-        starts.put(prop(js, "graft.fence").map("fence:" + _).getOrElse(
-          js.stageInfos.map(_.name).mkString(" + ")))
-    }
-    def fence(name: String): Unit = {
-      sc.setLocalProperty("graft.fence", name)
-      try spark.range(1).collect() finally sc.setLocalProperty("graft.fence", null)
-    }
-    def next(): String = Option(starts.poll(60,
-      java.util.concurrent.TimeUnit.SECONDS)).getOrElse(fail("listener bus stalled"))
-    sc.addSparkListener(listener)
-    try {
-      fence("begin")
-      body
-      fence("end")
-      while (next() != "fence:begin") {}
-      Iterator.continually(next()).takeWhile(_ != "fence:end")
-        .filterNot(_.startsWith("fence:")).toSeq
-    } finally sc.removeSparkListener(listener)
-  }
-
   test("jobs per micro-batch do not grow with the partitions it touches") {
     // the two batches of each pair have the same number of rows, so both
     // are planned over the same input partitions; only the store
     // partitions they touch differ
-    val root = java.nio.file.Files.createTempDirectory("graft_jobs")
+    val root = tempDir("graft_jobs")
     // upsert store: two identical seeded stores, then one batch touching
     // one bucket and one touching six
     val cities = (0 until 64).map(i => s"city$i")
@@ -983,7 +952,7 @@ class IngestPipelineSpec extends SparkSuite {
   test("day store: a replay after a crash between two days' swaps merges only the day still missing") {
     // the per-day guard the grouped read must keep: batch 7 swapped day 1
     // and crashed before day 2's swap; its replay covers both days
-    val store = java.nio.file.Files.createTempDirectory("graft_cmpart")
+    val store = tempDir("graft_cmpart")
       .resolve("store").toString
     def batchDf(city: String, epoch: Long, n: Int) =
       (1 to n).map(i => (city, epoch + i * 60L)).toDF("city", "sec")
@@ -1004,9 +973,9 @@ class IngestPipelineSpec extends SparkSuite {
   test("upsert store after redelivered, late and incomplete payloads equals " +
       "the batch latest valid payload per city") {
     implicit val sqlCtx = spark.sqlContext
-    val store = java.nio.file.Files.createTempDirectory("graft_upsert_eq")
+    val store = tempDir("graft_upsert_eq")
       .resolve("store").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_upsert_eq_ck").toString
+    val ckpt = tempDir("graft_upsert_eq_ck").toString
     def rec(city: String, temp: Option[Double], hum: Int, dt: Long) =
       s"""{"name":"$city","main":{${temp.fold("")(t => s""""temp":$t,""")}""" +
         s""""humidity":$hum,"pressure":1},"dt":$dt,"timezone":0}"""

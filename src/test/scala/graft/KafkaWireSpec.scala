@@ -54,8 +54,8 @@ class KafkaWireSpec extends SparkSuite {
     // produce more, restart: old offsets are not re-ingested, new ones all
     // arrive, nothing is duplicated.
     implicit val sqlCtx = spark.sqlContext
-    val out = java.nio.file.Files.createTempDirectory("graft_kafka_out").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_kafka_ck").toString
+    val out = tempDir("graft_kafka_out").toString
+    val ckpt = tempDir("graft_kafka_ck").toString
     val stream = MemoryStream[(Long, String)]
     def start() = {
       val wire = KafkaWire.wrap(stream.toDF().toDF("off", "json"),

@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import graft.sources.{Layout, Tables}
 
@@ -10,7 +9,7 @@ class LayoutSpec extends SparkSuite {
   import spark.implicits._
 
   test("day-partitioned write prunes partitions on day-filtered reads") {
-    val dir = Files.createTempDirectory("graft_layout").toString
+    val dir = tempDir("graft_layout").toString
     val events = Tables.events(spark, sf0001)
     Layout.writeEventsByDay(events, dir)
 
@@ -31,7 +30,7 @@ class LayoutSpec extends SparkSuite {
   }
 
   test("day-partitioned write leaves exactly one parquet file per day") {
-    val dir = Files.createTempDirectory("graft_layout_files").toString
+    val dir = tempDir("graft_layout_files").toString
     Layout.writeEventsByDay(Tables.events(spark, sf0001), dir)
     val dayDirs = new java.io.File(dir).listFiles()
       .filter(f => f.isDirectory && f.getName.startsWith("day=")).toSeq
@@ -70,7 +69,7 @@ class LayoutSpec extends SparkSuite {
   }
 
   test("z-ordered files each cover a small rectangle of (user, time) space") {
-    val dir = Files.createTempDirectory("graft_zorder").toString
+    val dir = tempDir("graft_zorder").toString
     val events = Tables.events(spark, sf0001)
     Layout.writeEventsZOrdered(events, dir, nFiles = 8)
     val back = spark.read.parquet(dir)
@@ -99,7 +98,7 @@ class LayoutSpec extends SparkSuite {
   }
 
   test("dynamic partition pruning fires on a dim-filtered partition join") {
-    val dir = Files.createTempDirectory("graft_dpp").toString
+    val dir = tempDir("graft_dpp").toString
     Layout.writeEventsByDay(Tables.events(spark, sf0001), dir)
     val fact = spark.read.parquet(dir)
     // dim carrying a non-partition attribute, filtered at query time: the
@@ -218,7 +217,7 @@ class LayoutSpec extends SparkSuite {
   test("schema evolution: mergeSchema unifies old and new file layouts") {
     // at 100 TB the store accumulates years of files; new columns arrive
     // without rewriting history — mergeSchema + null-backfill semantics
-    val dir = java.nio.file.Files.createTempDirectory("graft_evolve").toString
+    val dir = tempDir("graft_evolve").toString
     Seq((1L, 10.0)).toDF("id", "v").write.parquet(s"$dir/d=1")
     Seq((2L, 20.0, "new")).toDF("id", "v", "tag").write.parquet(s"$dir/d=2")
     val merged = spark.read.option("mergeSchema", "true").parquet(dir)
@@ -230,7 +229,7 @@ class LayoutSpec extends SparkSuite {
   }
 
   test("compaction merges a fragmented store losslessly and atomically") {
-    val dir = Files.createTempDirectory("graft_compact").toString + "/events"
+    val dir = tempDir("graft_compact").toString + "/events"
     // simulate a week of micro-batch dribble: 64 tiny files
     Tables.events(spark, sf0001).repartition(64)
       .write.mode("overwrite").parquet(dir)
@@ -250,7 +249,7 @@ class LayoutSpec extends SparkSuite {
   }
 
   test("compaction refuses a Hive-partitioned root instead of flattening it") {
-    val dir = Files.createTempDirectory("graft_compact_part").toString + "/events"
+    val dir = tempDir("graft_compact_part").toString + "/events"
     Layout.writeEventsByDay(Tables.events(spark, sf0001), dir)
     val err = intercept[IllegalArgumentException] {
       Layout.compact(spark, dir)

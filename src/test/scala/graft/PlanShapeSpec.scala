@@ -133,25 +133,22 @@ class PlanShapeSpec extends SparkSuite {
     assert(df.count() === 10)
   }
 
-  test("bucket count is a sizing dial: derived floor, conf override, keyed name") {
+  test("bucket count is a sizing dial: derived floor, keyed name") {
     import graft.sources.Bucketed
+    val n = Bucketed.bucketCount(spark, sf0001)
     // every driver SF sits under TargetRowsPerBucket × MinBuckets → floor
-    assert(Bucketed.bucketCount(spark, sf0001) === Bucketed.MinBuckets)
+    assert(n === Bucketed.MinBuckets)
     // a 10× corpus would derive more buckets (the sf≈1 finding): simulate
     // the arithmetic the count implements
     assert(math.ceil(6000000.0 / Bucketed.TargetRowsPerBucket).toInt === 40)
-    // explicit override wins, flows into the layout, and the resized
-    // layout gets its OWN content-keyed tables — while keeping the
-    // zero-Exchange plan the bucketing exists for
-    spark.conf.set("spark.graft.bucketed.buckets", "8")
-    try {
-      assert(Bucketed.bucketCount(spark, sf0001) === 8)
-      val (ot, lt) = Bucketed.ensure(spark, sf0001)
-      assert(ot.startsWith("graft_orders_b8_") && lt.startsWith("graft_lineitem_b8_"))
-      val df = RelationalOps.joinBucketed(spark, sf0001)
-      assert(!planOf(df).contains("Exchange"))
-      assert(df.count() === 10)
-    } finally spark.conf.unset("spark.graft.bucketed.buckets")
+    // the count flows into the content-keyed layout names, and the layout
+    // keeps the zero-Exchange plan the bucketing exists for
+    val (ot, lt) = Bucketed.ensure(spark, sf0001)
+    assert(ot.startsWith(s"graft_orders_b${n}_") &&
+      lt.startsWith(s"graft_lineitem_b${n}_"), s"$ot, $lt")
+    val df = RelationalOps.joinBucketed(spark, sf0001)
+    assert(!planOf(df).contains("Exchange"))
+    assert(df.count() === 10)
   }
 
   test("scan_pruned_day prunes to one day directory via PartitionFilters") {

@@ -44,8 +44,7 @@ class QuantileSketchSpec extends SparkSuite {
   }
 
   test("persisted daily sketches answer later rollups (parquet round-trip)") {
-    val store = java.nio.file.Files
-      .createTempDirectory("graft_qsk").resolve("daily").toString
+    val store = tempDir("graft_qsk").resolve("daily").toString
     val events = graft.sources.Tables.events(spark, sf0001)
     // the store write an incremental pipeline would run per day
     events.groupBy(to_date($"ts").as("day"))

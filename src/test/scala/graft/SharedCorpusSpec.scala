@@ -13,7 +13,7 @@ class SharedCorpusSpec extends SparkSuite {
   /** A throwaway single-table corpus directory: one tiny parquet store
     * named like the memo's fingerprint tables expect. */
   private def mkCorpus(tag: String): String = {
-    val dir = java.nio.file.Files.createTempDirectory(s"sc_$tag").toString
+    val dir = tempDir(s"sc_$tag").toString
     spark.range(10).select(col("id").as("doc_id"))
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
     dir

@@ -13,7 +13,7 @@ class SourcesSpec extends SparkSuite {
   import spark.implicits._
 
   private def writeLines(lines: Seq[String], suffix: String): String = {
-    val dir = Files.createTempDirectory("graft_src")
+    val dir = tempDir("graft_src")
     Files.write(dir.resolve(s"data$suffix"),
       String.join("\n", lines: _*).getBytes)
     dir.toString
@@ -87,7 +87,7 @@ class SourcesSpec extends SparkSuite {
 
   test("CSV with declared schema round-trips the island dimension") {
     val dim = graft.streaming.IngestPipeline.islandDim(spark)
-    val dir = Files.createTempDirectory("graft_csv").toString + "/dim"
+    val dir = tempDir("graft_csv").toString + "/dim"
     dim.write.option("header", "true").csv(dir)
     val back = spark.read
       .schema(StructType(Seq(
@@ -109,19 +109,17 @@ class SourcesSpec extends SparkSuite {
     assert(out.select($"city").as[String].collect().toSeq === Seq("Medan"))
   }
 
-  test("Tables schema cache invalidates when the file is rewritten") {
-    // the cache is keyed by (path, mtime, size) — a store rewritten with
-    // a DIFFERENT schema at the same path must re-infer, not serve the
-    // stale schema (the one new failure class a schema cache introduces)
-    val dir = Files.createTempDirectory("graft_schemacache").toString
+  test("Tables reads a rewritten file with its new schema") {
+    // the schema comes from the file's footer on every read, so a store
+    // rewritten with a DIFFERENT schema at the same path is never read
+    // with the old one
+    val dir = tempDir("graft_rewrite").toString
     val p = s"$dir/documents.parquet"
     Seq((1L, "alpha")).toDF("doc_id", "text")
       .coalesce(1).write.parquet(p)
     val first = graft.sources.Tables.documents(spark, dir)
     assert(first.columns.toSeq === Seq("doc_id", "text"))
     assert(first.count() === 1)
-    // rewrite in place with an extra column and different mtime/size
-    Thread.sleep(1100) // mtime granularity on some filesystems is 1s
     Seq((2L, "beta", "en")).toDF("doc_id", "text", "lang")
       .coalesce(1).write.mode("overwrite").parquet(p)
     val second = graft.sources.Tables.documents(spark, dir)

@@ -1,5 +1,7 @@
 package graft
 
+import java.nio.file.{Files, Path}
+import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
@@ -12,9 +14,11 @@ trait SparkSuite extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = GraftSession.builder()
     .master("local[4]")
     .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.warehouse.dir",
-      java.nio.file.Files.createTempDirectory("graft_wh").toString)
+    .config("spark.sql.warehouse.dir", SparkSuite.root.resolve("warehouse").toString)
     .getOrCreate()
+
+  /** A fresh directory under the test JVM's temp root. */
+  def tempDir(prefix: String): Path = Files.createTempDirectory(SparkSuite.root, prefix)
 
   val sf0001 = "/root/testdata/sf0.001"
 
@@ -29,8 +33,50 @@ trait SparkSuite extends AnyFunSuite with BeforeAndAfterAll {
     df.collect()
   }
 
+  /** Call sites of the jobs `body` starts, read by a listener. The
+    * listener bus is asynchronous but delivers in order, so a fence job
+    * before `body` and one after it bound the list. */
+  def jobsStartedBy(body: => Unit): Seq[String] = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val starts = new java.util.concurrent.LinkedBlockingQueue[String]()
+    def prop(js: SparkListenerJobStart, k: String) =
+      Option(js.properties).flatMap(p => Option(p.getProperty(k)))
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit =
+        starts.put(prop(js, "graft.fence").map("fence:" + _).getOrElse(
+          js.stageInfos.map(_.name).mkString(" + ")))
+    }
+    def fence(name: String): Unit = {
+      sc.setLocalProperty("graft.fence", name)
+      try spark.range(1).collect() finally sc.setLocalProperty("graft.fence", null)
+    }
+    def next(): String = Option(starts.poll(60,
+      java.util.concurrent.TimeUnit.SECONDS)).getOrElse(fail("listener bus stalled"))
+    sc.addSparkListener(listener)
+    try {
+      fence("begin")
+      body
+      fence("end")
+      while (next() != "fence:begin") {}
+      Iterator.continually(next()).takeWhile(_ != "fence:end")
+        .filterNot(_.startsWith("fence:")).toSeq
+    } finally sc.removeSparkListener(listener)
+  }
+
   override def beforeAll(): Unit = {
     super.beforeAll()
     spark.catalog.clearCache()
+  }
+}
+
+object SparkSuite {
+  /** One temp root per test JVM, holding the shared warehouse and every
+    * spec's [[SparkSuite.tempDir]]s; deleted when the (forked) test JVM
+    * exits. */
+  lazy val root: Path = {
+    val r = Files.createTempDirectory("graft_test")
+    sys.addShutdownHook(FileUtils.deleteQuietly(r.toFile))
+    r
   }
 }

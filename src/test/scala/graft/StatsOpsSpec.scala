@@ -584,7 +584,7 @@ class StatsOpsSpec extends SparkSuite {
     // one day at 1e6 against 89 days at 1.00 puts the outlier's z at
     // ~sqrt(n-1) ≈ 9.4 — past the |z| ≈ 8.5 point where the A–S
     // polynomial saturates to exactly 1.0 and ln(1-phi) would be -Inf
-    val dir = java.nio.file.Files.createTempDirectory("graft_adclamp").toString
+    val dir = tempDir("graft_adclamp").toString
     val rows = (0 until 90).map { i =>
       val v = if (i == 89) 1000000.0 else 1.0
       val day = java.time.LocalDate.of(2026, 1, 1).plusDays(i.toLong)

@@ -213,7 +213,7 @@ class TextMultimodalSpec extends SparkSuite {
     // lo=1, span=2); doc 1 is 600 tokens — no 512-token bin can hold it,
     // so shard 1 has NO fitting docs and would vanish under a left join
     // driven from the folded (fit-only) side
-    val dir = java.nio.file.Files.createTempDirectory("graft_packover").toString
+    val dir = tempDir("graft_packover").toString
     Seq(
       (1L, (1 to 600).map(i => s"w$i").mkString(" "), "en", "web", 600L),
       (2L, "five little words right here", "en", "web", 29L),

@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import graft.sources.Versioned
 
@@ -10,7 +9,7 @@ class VersionedSpec extends SparkSuite {
   import spark.implicits._
 
   test("snapshot isolation: a v1 reader is blind to later appends") {
-    val root = Files.createTempDirectory("graft_versioned").toString
+    val root = tempDir("graft_versioned").toString
     assert(Versioned.currentVersion(spark, root) === 0)
 
     val v1 = Versioned.append(spark, root, Seq((1L, "a"), (2L, "b")).toDF("id", "s"))
@@ -35,7 +34,7 @@ class VersionedSpec extends SparkSuite {
 
   test("readDiff returns exactly the increment and composes to the full " +
     "snapshot") {
-    val root = Files.createTempDirectory("graft_diff").toString
+    val root = tempDir("graft_diff").toString
     Versioned.append(spark, root, Seq((1L, "a"), (2L, "b")).toDF("id", "s"))
     Versioned.append(spark, root, Seq((3L, "c"), (4L, "d")).toDF("id", "s"))
     Versioned.append(spark, root, Seq((5L, "e")).toDF("id", "s"))

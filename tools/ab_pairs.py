@@ -15,7 +15,9 @@ perfbench/, .git or the checkout's build directory.
 
 Each run prints its `correct` flag and the named metrics; the summary gives,
 per workload and metric, each side's median and quartiles and in how many
-pairs the change was lower. A metric name is looked up in the run's
+pairs the change was lower and in how many the two tied. For a metric that
+BENCHMARK.json lists with unit `count` it also says, per side, whether every
+run gave the same value. A metric name is looked up in the run's
 end-to-end metrics (e.g. `setup_s`, `drain_rows_per_s`, `freshness_p50_s`)
 and then in its per-layer metrics, which exist only with `--trace 1` (e.g.
 `cold.store.upsert_s`). The default metrics are BENCHMARK.json's
@@ -113,6 +115,7 @@ def main():
         bench = json.load(fh)
     seconds = bench["run_seconds"]
     names = a.metrics.split(",") if a.metrics else [m["name"] for m in bench["end_to_end"]]
+    counts = {m["name"] for m in bench["end_to_end"] + bench["per_layer"] if m["unit"] == "count"}
     workloads = a.workloads.split(",")
     scratch = os.path.abspath(a.scratch)
     os.makedirs(scratch, exist_ok=True)
@@ -154,8 +157,14 @@ def main():
                 cells.append(f"{side} {q2:.4g} ({q1:.4g}-{q3:.4g})")
             ps = pairs[(w, n)]
             lower = sum(c < p for p, c in ps)
-            print(f"{w} {n}: median (quartiles) {' / '.join(cells)}; "
-                  f"change lower in {lower}/{len(ps)} pairs")
+            tied = sum(c == p for p, c in ps)
+            line = (f"{w} {n}: median (quartiles) {' / '.join(cells)}; "
+                    f"change lower in {lower}/{len(ps)} pairs, tied in {tied}")
+            if n in counts:
+                same = [f"{side} {'yes' if len(set(values[(w, side, n)])) == 1 else 'no'}"
+                        for side in sides]
+                line += f"; every run the same: {', '.join(same)}"
+            print(line)
     sys.exit(1 if bad else 0)
 
 
