@@ -1,10 +1,11 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Key
 import graft.sources.Tables
+import graft.operators.OpsHelpers.{ev, r6}
 
 /** Event-analytics and data-management operators a production engine is
   * expected to ship beyond plain relational algebra: cohort retention,
@@ -28,13 +29,6 @@ import graft.sources.Tables
   *     engines round identically.
   */
 object AnalyticsOps {
-
-  /** Events with the µs epoch (`unix_micros` ≙ DuckDB `epoch_us` after the
-    * ns→µs truncation both sides perform — see [[Tables.events]]). */
-  private def ev(spark: SparkSession, dir: String): DataFrame =
-    Tables.events(spark, dir)
-      .select(col("event_id"), col("user_id"), col("event_type"),
-        col("value"), unix_micros(col("ts")).as("us"), to_date(col("ts")).as("day"))
 
   // ── cohort retention: users bucketed by their first active day; for each
   // (cohort, day-offset) cell, how many of the cohort were active. THE
@@ -437,8 +431,6 @@ object AnalyticsOps {
         "'documents_n_chars_mismatch', n_chars_mismatch) AS (check, bad_rows)")
       .orderBy("check")
   }
-
-  private def r6(c: Column): Column = round(c, 6) + lit(0.0d)
 
   // ── referential-integrity audit across the whole star schema —
   // dq_profile samples per-table value sanity; this sweeps every FK
@@ -1070,13 +1062,6 @@ object AnalyticsOps {
        |  CAST(sum(nx - mx) AS BIGINT) AS g3_rows
        |FROM k)""".stripMargin
 
-
-  // CTE materialization for graph oracles lives in [[OracleSql.matCtes]]
-  // (shared with MiningOps; see its scaladoc for the DuckDB inlining
-  // blowup it prevents and the RECURSIVE/WINDOW guard rails).
-  private[operators] def matCtes(sql: String): String =
-    OracleSql.matCtes(sql)
-
   val keys: Seq[Key] = Seq(
     Key("dq_fd_violations", dqFdViolations, Some(
       (s"""SELECT fd, n_keys, n_violating_keys, n_rows, g3_rows,
@@ -1622,9 +1607,10 @@ object AnalyticsOps {
         |ORDER BY o_orderkey, version""".stripMargin)),
   ).map { k =>
     // the graph family's unrolled iterative oracles must replay with
-    // materialized rounds (see matCtes) -- applied uniformly here so a
-    // future graph key cannot ship an inlining-vulnerable oracle
-    if (k.name.startsWith("graph_")) k.copy(oracle = k.oracle.map(matCtes))
+    // materialized rounds (see OracleSql.matCtes) -- applied uniformly
+    // here so a future graph key cannot ship an inlining-vulnerable oracle
+    if (k.name.startsWith("graph_"))
+      k.copy(oracle = k.oracle.map(OracleSql.matCtes))
     else k
   }
 }

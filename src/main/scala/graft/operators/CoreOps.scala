@@ -18,10 +18,10 @@ import graft.sources.Tables
   *
   * Determinism rules (SURVEY.md §5.1): every query ends in an explicit
   * total ORDER BY; float aggregates are decimal-exact (graft.functions.Exact)
-  * or rounded; timestamps are emitted as formatted strings because
-  * `events.ts` is nanosecond-precision parquet — Spark truncates to
-  * microseconds on read while DuckDB keeps nanoseconds, so raw timestamp
-  * output can never hash-match.
+  * or rounded; timestamps are emitted as formatted strings. The current
+  * testdata stores `events.ts` in microseconds, but an older vintage
+  * stores nanoseconds, which Spark truncates to microseconds on read while
+  * DuckDB keeps them, so raw timestamp output could not hash-match there.
   *
   * The trailing ORDER BY on row-level queries exists FOR THE ORACLE
   * HARNESS (hash compare needs a total order). Library users compose the

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.Key
 import graft.functions.Exact
 import graft.sources.Tables
+import graft.operators.OpsHelpers.{ev, r6}
 
 /** Pattern-mining operators: market-basket association rules, Markov
   * transition matrices, sequential path motifs, degree-oriented triangle
@@ -33,16 +34,6 @@ import graft.sources.Tables
   *     value sums (see [[graft.functions.Exact]]).
   */
 object MiningOps {
-
-  private def r6(c: Column): Column = round(c, 6) + lit(0.0d)
-
-  /** Events with µs epoch + calendar day (ns→µs truncation as in
-    * [[Tables.events]]; DuckDB mirrors via `epoch_us(CAST(ts AS ...))`). */
-  private def ev(spark: SparkSession, dir: String): DataFrame =
-    Tables.events(spark, dir)
-      .select(col("event_id"), col("user_id"), col("event_type"),
-        col("value"), unix_micros(col("ts")).as("us"),
-        to_date(col("ts")).as("day"))
 
   // ── market-basket association rules: for every part pair co-occurring
   // in ≥ 2 orders, support count, directional confidences, and lift.
@@ -1030,13 +1021,6 @@ object MiningOps {
           .as("perplexity"))
   }
 
-
-  // CTE materialization for graph oracles lives in [[OracleSql.matCtes]]
-  // (shared with AnalyticsOps; see its scaladoc for the DuckDB inlining
-  // blowup it prevents and the RECURSIVE/WINDOW guard rails).
-  private[operators] def matCtes(sql: String): String =
-    OracleSql.matCtes(sql)
-
   val keys: Seq[Key] = Seq(
     Key("graph_closeness", graphCloseness, Some(
       """WITH op AS (
@@ -1717,9 +1701,10 @@ object MiningOps {
         |FROM c ORDER BY event_type, dow""".stripMargin)),
   ).map { k =>
     // the graph family's unrolled iterative oracles must replay with
-    // materialized rounds (see matCtes) -- applied uniformly here so a
-    // future graph key cannot ship an inlining-vulnerable oracle
-    if (k.name.startsWith("graph_")) k.copy(oracle = k.oracle.map(matCtes))
+    // materialized rounds (see OracleSql.matCtes) -- applied uniformly
+    // here so a future graph key cannot ship an inlining-vulnerable oracle
+    if (k.name.startsWith("graph_"))
+      k.copy(oracle = k.oracle.map(OracleSql.matCtes))
     else k
   }
 }

@@ -24,8 +24,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *  - `applicationId` scopes entries to the live SparkContext — a
   *    restarted context in the same JVM never serves RDD blocks of a dead
   *    one, and nothing is persisted across JVMs;
-  *  - [[graft.sources.Fingerprint.tag]] digests the source files'
-  *    (name, length, mtime), so regenerated or swapped data yields a new
+  *  - [[graft.sources.Fingerprint.tag]] digests the source data files'
+  *    (path, length, mtime), so regenerated or swapped data yields a new
   *    key and a stale entry is never looked up again; re-memoizing a kind
   *    under a new fingerprint drops the stale entry instead of stranding
   *    it.
@@ -73,7 +73,7 @@ private[graft] object SharedCorpus {
   private def keyOf(spark: SparkSession, kind: String, dir: String,
       tables: Seq[String]): String =
     spark.sparkContext.applicationId + "|" + kind + "|" +
-      graft.sources.Fingerprint.tag(dir, tables: _*)
+      graft.sources.Fingerprint.tag(spark, dir, tables: _*)
 
   private def lookup[T <: AnyRef](spark: SparkSession, kind: String,
       dir: String, tables: Seq[String], build: => T)(

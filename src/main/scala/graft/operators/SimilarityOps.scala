@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Key
 import graft.sources.Tables
+import graft.operators.OpsHelpers.r6
 
 /** Similarity search over the `embeddings` table (SURVEY.md §2.10 + north
   * star): brute-force cosine top-k as the exact baseline, and a
@@ -502,10 +503,10 @@ object SimilarityOps {
         col("n_pos").cast("double") * (col("n_pos") + 1) / 2)
       .withColumn("auc0",
         col("u1") / (col("n_pos").cast("double") * col("n_neg")))
-      .select(col("n_pos"), col("n_neg"), r6c(col("u1")).as("u_stat"),
-        r6c(col("auc0")).as("auc"),
-        r6c(col("auc0") * 2 - 1).as("gini"),
-        r6c(expr("cast(brier_num as double)" +
+      .select(col("n_pos"), col("n_neg"), r6(col("u1")).as("u_stat"),
+        r6(col("auc0")).as("auc"),
+        r6(col("auc0") * 2 - 1).as("gini"),
+        r6(expr("cast(brier_num as double)" +
           " / (4 * (n_pos + n_neg))")).as("brier"))
   }
 
@@ -526,14 +527,13 @@ object SimilarityOps {
       .agg(count(lit(1)).as("n"), sum(col("y")).as("n_pos"),
         sum(col("m") + 1000000L).as("psum_micro"))
       .select(col("bin"), col("n"), col("n_pos"),
-        r6c(expr("cast(psum_micro as double) / (2000000 * n)"))
+        r6(expr("cast(psum_micro as double) / (2000000 * n)"))
           .as("avg_p"),
-        r6c(expr("cast(n_pos as double) / n")).as("frac_pos"),
-        r6c(expr("cast(psum_micro as double) / (2000000 * n)" +
+        r6(expr("cast(n_pos as double) / n")).as("frac_pos"),
+        r6(expr("cast(psum_micro as double) / (2000000 * n)" +
           " - cast(n_pos as double) / n")).as("gap"))
       .orderBy("bin")
 
-  private def r6c(c: org.apache.spark.sql.Column) = round(c, 6) + lit(0.0d)
 
   /** The eval_calibration 10-bin frame as a reusable input: per-bin
     * count / positives / exact micro-unit probability sum. Integer bin
@@ -578,11 +578,11 @@ object SimilarityOps {
       .agg(count(lit(1)).as("n_bins"),
         sum(col("rel_t")).as("rel_s"), sum(col("res_t")).as("res_s"))
       .select(col("n_bins"), col("nt").as("n"),
-        r6c(expr("cast(rel_s as double) / nt")).as("reliability"),
-        r6c(expr("cast(res_s as double) / nt")).as("resolution"),
-        r6c(expr("(cast(npt as double) / nt)" +
+        r6(expr("cast(rel_s as double) / nt")).as("reliability"),
+        r6(expr("cast(res_s as double) / nt")).as("resolution"),
+        r6(expr("(cast(npt as double) / nt)" +
           " * (1.0 - cast(npt as double) / nt)")).as("uncertainty"),
-        r6c(expr("(cast(rel_s as double) - cast(res_s as double)) / nt" +
+        r6(expr("(cast(rel_s as double) - cast(res_s as double)) / nt" +
           " + (cast(npt as double) / nt)" +
           " * (1.0 - cast(npt as double) / nt)")).as("brier_binned"))
   }
@@ -605,8 +605,8 @@ object SimilarityOps {
       .agg(count(lit(1)).as("n_bins"), sum(col("ece_t")).as("ece_s"),
         max(expr("abs(pbar - ybar)")).as("mx"))
       .select(col("n_bins"), col("nt").as("n"),
-        r6c(expr("cast(ece_s as double) / nt")).as("ece"),
-        r6c(col("mx")).as("mce"))
+        r6(expr("cast(ece_s as double) / nt")).as("ece"),
+        r6(col("mx")).as("mce"))
   }
 
   // ── ROC operating points at the 10 calibration-bin thresholds: the
@@ -635,10 +635,10 @@ object SimilarityOps {
     cum.crossJoin(broadcast(tot))
       .select(col("bin").as("threshold_bin"), col("tp"), col("fp"),
         (col("np") - col("tp")).as("fn"),
-        r6c(expr("cast(tp as double) / np")).as("tpr"),
-        r6c(expr("cast(fp as double) / nq")).as("fpr"),
-        r6c(expr("cast(tp as double) / (tp + fp)")).as("precision"),
-        r6c(expr("cast(2 * tp as double) / (2 * tp + fp + (np - tp))"))
+        r6(expr("cast(tp as double) / np")).as("tpr"),
+        r6(expr("cast(fp as double) / nq")).as("fpr"),
+        r6(expr("cast(tp as double) / (tp + fp)")).as("precision"),
+        r6(expr("cast(2 * tp as double) / (2 * tp + fp + (np - tp))"))
           .as("f1"))
       .orderBy(col("threshold_bin").desc)
   }
@@ -684,9 +684,9 @@ object SimilarityOps {
         Window.orderBy(col("d"))
           .rowsBetween(Window.unboundedPreceding, 0)))
       .select(col("d").as("decile"), col("n_rows"),
-        r6c(expr("cast(pos as double)")).as("n_pos"),
-        r6c(expr("cast(cum_pos as double) / np")).as("gain"),
-        r6c(expr("(cast(cum_pos as double) / np)" +
+        r6(expr("cast(pos as double)")).as("n_pos"),
+        r6(expr("cast(cum_pos as double) / np")).as("gain"),
+        r6(expr("(cast(cum_pos as double) / np)" +
           " / (cast(cum_rows as double) / n)")).as("lift"))
       .orderBy("decile")
   }
@@ -757,7 +757,7 @@ object SimilarityOps {
         sum((col("label") === col("a_label")).cast("long"))
           .as("n_correct"))
       .withColumn("accuracy",
-        r6c(expr("cast(n_correct as double) / n_anchors")))
+        r6(expr("cast(n_correct as double) / n_anchors")))
       .orderBy("k")
   }
 

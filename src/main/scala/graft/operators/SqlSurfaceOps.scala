@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.Key
 import graft.functions.Exact._
 import graft.sources.Tables
+import graft.operators.OpsHelpers.r6
 
 /** Second ring of declared relational completions (SURVEY.md §2.4–§2.7):
   * the ANSI-SQL surface a user coming from the reference's pandas workflow
@@ -462,9 +463,6 @@ object SqlSurfaceOps {
   // exact sum, so the estimate is engine-identical. True totals ride
   // along — the output row shows estimate vs truth and the achieved
   // sampling fraction in one glance. ──
-  private def r6(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    round(c, 6) + lit(0.0d)
-
   private val HtPpm: Map[String, Long] = Map(
     "purchase" -> 800000L, "signup" -> 400000L, "click" -> 200000L,
     "view" -> 100000L, "error" -> 50000L)

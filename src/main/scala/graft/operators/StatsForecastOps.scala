@@ -4,6 +4,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Key
 import graft.sources.Tables
+import graft.operators.OpsHelpers.{ev, r6}
 
 /** Forecasting, smoothing and seasonal decomposition — one of the [[StatsOps]] family traits (split from
   * the former single-file StatsOps with zero behavior change;

@@ -2,21 +2,14 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.sources.Tables
+import graft.operators.OpsHelpers.{ev, r6}
 
-/** Shared devices of the [[StatsOps]] family traits: table loaders,
-  * rounding discipline, median/grid/survival frames, the Φ polynomial,
-  * and the DuckDB CTE strings their oracles compose. `protected` — they
-  * are implementation details of the StatsOps object, not API. */
+/** Shared devices of the [[StatsOps]] family traits: median/grid/survival
+  * frames, the Φ polynomial, and the DuckDB CTE strings their oracles
+  * compose (the events loader and rounding are [[OpsHelpers]]').
+  * `protected` — they are implementation details of the StatsOps object,
+  * not API. */
 private[operators] trait StatsOpsBase {
-
-  protected def ev(spark: SparkSession, dir: String): DataFrame =
-    Tables.events(spark, dir)
-      .select(col("event_id"), col("user_id"), col("event_type"),
-        col("value"), unix_micros(col("ts")).as("us"),
-        to_date(col("ts")).as("day"))
-
-  protected def r6(c: Column): Column = round(c, 6) + lit(0.0d)
 
   /** Explicit middle-pair median of `v`, one row per `keys` combination
     * (global when `keys` is empty): order, take rows (m+1)÷2 and

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.Key
 import graft.functions.GramMatrixAgg
 import graft.sources.Tables
+import graft.operators.OpsHelpers.{ev, r6}
 
 /** Time-series diagnostics, drift/changepoint monitors, process control and survival analysis — one of the [[StatsOps]] family traits (split from
   * the former single-file StatsOps with zero behavior change;

@@ -3,6 +3,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Key
+import graft.operators.OpsHelpers.{ev, r6}
 
 /** Hypothesis tests, effect sizes and confidence intervals — one of the [[StatsOps]] family traits (split from
   * the former single-file StatsOps with zero behavior change;

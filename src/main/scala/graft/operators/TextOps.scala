@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Key
 import graft.sources.Tables
+import graft.operators.OpsHelpers.r6
 
 /** Text-analysis operators for the LLM-training-data pipeline
   * (SURVEY.md §2.10 + north star): per-language stats, token frequency,
@@ -21,8 +22,6 @@ object TextOps {
 
   /** Lowercased whitespace tokens of `text`. */
   private def toksCol = split(trim(lower(col("text"))), "\\s+")
-
-  private def r6(c: Column): Column = round(c, 6) + lit(0.0d)
 
   /** Fraction of tokens (column `toks`) that are English stopword markers,
     * rounded to 6 dp — the ONE definition shared by lang-ID, quality

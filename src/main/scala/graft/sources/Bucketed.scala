@@ -59,7 +59,7 @@ object Bucketed {
     // content-keyed name: distinct dirs (and regenerated data at the SAME
     // dir) get distinct tables — see [[Fingerprint]]; the bucket count is
     // part of the key so a resized layout never aliases the old one
-    val tag = Fingerprint.tag(dir, "orders", "lineitem")
+    val tag = Fingerprint.tag(spark, dir, "orders", "lineitem")
     val (ot, lt) = (s"graft_orders_b${n}_$tag", s"graft_lineitem_b${n}_$tag")
     def build(name: String, keyCol: String, src: SparkSession => org.apache.spark.sql.DataFrame): Unit =
       if (!spark.catalog.tableExists(name)) {

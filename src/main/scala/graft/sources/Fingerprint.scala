@@ -1,6 +1,6 @@
 package graft.sources
 
-import java.io.File
+import org.apache.spark.sql.SparkSession
 
 /** Content-keyed naming for DERIVED stores (bucketed table twins, the IVF
   * model+index) so a derived artifact can never be served for data it was
@@ -13,32 +13,30 @@ import java.io.File
   *   2. A path-only key goes stale silently: regenerate the fixtures at the
   *      same path and an `exists()` check happily serves the OLD store.
   *
-  * Embedding a digest of the source files' (name, length, mtime) into the
-  * derived name fixes both at once: distinct dirs get distinct names, and
-  * changed data gets a NEW name — the stale store is never looked up again
-  * (it lingers as an orphan, the standard cache-invalidation-by-rename).
-  * This mirrors how table formats version data files: identity follows
-  * content, not location.
+  * Embedding a digest of the source data files' (path, length, mtime) into
+  * the derived name fixes both at once: distinct dirs get distinct names,
+  * and changed data gets a NEW name — the stale store is never looked up
+  * again (it lingers as an orphan, the standard cache-invalidation-by-
+  * rename). This mirrors how table formats version data files: identity
+  * follows content, not location.
   */
 object Fingerprint {
 
   /** Digest-stamped identifier for `dir`'s tables: a readable sanitized
-    * prefix plus an 8-hex digest over every file of the named source
-    * tables (recursive, sorted — parquet "files" may be directories). */
-  def tag(dir: String, tables: String*): String = {
+    * prefix plus an 8-hex digest over the data files of the named source
+    * tables, as [[Tables.dataFiles]] lists them on any Hadoop file system
+    * (local, `file:`, `hdfs://`, `s3a://`), each table's sorted by path. */
+  def tag(spark: SparkSession, dir: String, tables: String*): String = {
     val md = java.security.MessageDigest.getInstance("MD5")
     md.update(dir.getBytes("UTF-8"))
     tables.sorted.foreach { t =>
-      walk(new File(dir, s"$t.parquet")).foreach { f =>
-        md.update(s"${f.getPath}|${f.length}|${f.lastModified}".getBytes("UTF-8"))
-      }
+      Tables.dataFiles(spark, Tables.path(dir, t)).toSeq
+        .sortBy(_.getPath.toString).foreach { f =>
+          md.update(s"${f.getPath}|${f.getLen}|${f.getModificationTime}"
+            .getBytes("UTF-8"))
+        }
     }
     val hex = md.digest().take(4).map(b => f"$b%02x").mkString
     s"${dir.replaceAll("[^A-Za-z0-9]", "_")}_$hex"
   }
-
-  private def walk(f: File): Seq[File] =
-    if (f.isDirectory) f.listFiles().sortBy(_.getName).toSeq.flatMap(walk)
-    else if (f.exists) Seq(f)
-    else Seq.empty
 }

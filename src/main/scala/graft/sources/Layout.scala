@@ -57,7 +57,7 @@ object Layout {
       name: String, marker: String, tables: String*)(
       write: String => Unit): String = {
     val wh = spark.conf.get("spark.sql.warehouse.dir")
-    val path = s"$wh/graft_${name}_${Fingerprint.tag(dir, tables: _*)}"
+    val path = s"$wh/graft_${name}_${Fingerprint.tag(spark, dir, tables: _*)}"
     val done = new Path(s"$path/$marker")
     if (!done.getFileSystem(spark.sparkContext.hadoopConfiguration)
         .exists(done)) write(path)
@@ -394,15 +394,6 @@ object Layout {
       targetFileMB: Int = 128): (Int, Int) = {
     val p = new Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def dataFiles(d: Path) = {
-      val it = fs.listFiles(d, true)
-      val b = Seq.newBuilder[org.apache.hadoop.fs.LocatedFileStatus]
-      while (it.hasNext) {
-        val f = it.next()
-        if (f.getPath.getName.endsWith(".parquet")) b += f
-      }
-      b.result()
-    }
     val (tmp, bak) = (path + ".compact_tmp", path + ".compact_bak")
     // a prior run that died between the swap's two renames left the
     // previous store only in bak — restore it before reading
@@ -416,7 +407,7 @@ object Layout {
         s.isDirectory && s.getPath.getName.contains("=")),
       s"$path is Hive-partitioned; compact each partition directory " +
         s"instead (e.g. compact(spark, \"$path/day=2026-01-01\"))")
-    val before = dataFiles(p)
+    val before = Tables.dataFiles(spark, path).toSeq
     val totalBytes = before.map(_.getLen).sum
     val nOut = math.max(1, math.ceil(
       totalBytes.toDouble / (targetFileMB.toLong << 20)).toInt)
@@ -424,7 +415,7 @@ object Layout {
     // directory, possibly appended to by writers with different schemas
     spark.read.parquet(path).coalesce(nOut)
       .write.mode("overwrite").parquet(tmp)
-    val after = dataFiles(new Path(tmp)).size
+    val after = Tables.dataFiles(spark, tmp).size
     swapDir(fs, path, tmp, bak)
     (before.size, after)
   }

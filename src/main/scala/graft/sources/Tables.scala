@@ -20,16 +20,18 @@ import org.apache.spark.sql.types.LongType
   * the same loaders work against a partitioned parquet/iceberg layout —
   * nothing here assumes a single file.
   *
-  * This is the one place a parquet schema comes from. Every source table,
-  * and every store one Spark job wrote, is read through [[parquet]] with
-  * the schema held in the footer of one of its data files, read on the
-  * driver; a bare `spark.read.parquet(path)` runs a Spark job per DataFrame
-  * to infer the same schema. Reads whose inputs hold several schemas by
-  * design (`mergeSchema`, a poisoned member, the streaming stores) keep
-  * Spark's inference.
+  * This is the one place a parquet schema comes from, and the one place
+  * that lists which files are a table's data ([[dataFiles]]). Every source
+  * table, and every store one Spark job wrote, is read through [[parquet]]
+  * with the schema held in the footer of one of its data files, read on
+  * the driver; a bare `spark.read.parquet(path)` runs a Spark job per
+  * DataFrame to infer the same schema. Neither the listing nor the schema
+  * depends on session state, and no read writes the session conf. Reads
+  * whose inputs hold several schemas by design (`mergeSchema`, a poisoned
+  * member, the streaming stores) keep Spark's inference.
   */
 object Tables {
-  private def path(dir: String, name: String): String = s"$dir/$name.parquet"
+  private[sources] def path(dir: String, name: String): String = s"$dir/$name.parquet"
 
   def table(spark: SparkSession, dir: String, name: String): DataFrame =
     parquet(spark, path(dir, name))
@@ -45,25 +47,43 @@ object Tables {
   }
 
   /** `spark.read.parquet(paths*)` with the schema of the first data file's
-    * footer, converted under the reading session's parquet confs at call
-    * time (so [[events]]' conf switches apply). Partition columns are still
-    * discovered from the paths. Inputs must share one schema, as the files
-    * of one write do. With no data file (a missing path, an empty store)
-    * the plain read runs, so the error is Spark's own (`PATH_NOT_FOUND`,
-    * `UNABLE_TO_INFER_SCHEMA`). */
+    * footer. Partition columns are still discovered from the paths. Inputs
+    * must share one schema, as the files of one write do. With no data file
+    * (a missing path, an empty store) the plain read runs, so the error is
+    * Spark's own (`PATH_NOT_FOUND`, `UNABLE_TO_INFER_SCHEMA`).
+    *
+    * The footer converts under a copy of the session's SQL conf with the
+    * two timestamp flags pinned, so a schema depends on the file alone,
+    * never on what an earlier read did to the session:
+    *   - `inferTimestampNTZ=false`: µs timestamps written
+    *     isAdjustedToUTC=false (`events.ts`, `lineitem.l_shipdate`) read as
+    *     `timestamp`, not `timestamp_ntz`, which would break every
+    *     `unix_micros`/time-zone-aware consumer. With the repo-wide UTC
+    *     session the wall values mean the same instants, and select the
+    *     same rows as the DuckDB oracle's naive timestamps;
+    *   - `nanosAsLong=true`: a `TIMESTAMP(NANOS)` column, which Spark's µs
+    *     `TimestampType` cannot hold, reads as its raw long ([[events]]
+    *     truncates it). Every session sets the same key
+    *     ([[graft.GraftSession]]), which the scan itself needs. */
   private[graft] def parquet(spark: SparkSession, paths: String*): DataFrame =
     paths.iterator.flatMap(dataFiles(spark, _)).nextOption() match {
       case Some(f) => spark.read.schema(ParquetFileFormat.readSchemaFromFooter(
           new Footer(f.getPath, footer(spark, f, SKIP_ROW_GROUPS)),
-          new ParquetToSparkSchemaConverter(GraftSqlBridge.sqlConf(spark))))
+          new ParquetToSparkSchemaConverter(GraftSqlBridge.sqlConf(spark,
+            "spark.sql.parquet.inferTimestampNTZ.enabled" -> "false",
+            "spark.sql.legacy.parquet.nanosAsLong" -> "true"))))
         .parquet(paths: _*)
       case None => spark.read.parquet(paths: _*)
     }
 
   /** The data files under `path` (a file, a directory tree or a glob),
-    * listed lazily and skipping the names Spark's file index skips
-    * (`_SUCCESS`, `.crc`, `_temporary/`, but not `name=value` dirs). */
-  private def dataFiles(spark: SparkSession, path: String): Iterator[FileStatus] = {
+    * listed lazily through the path's Hadoop `FileSystem` and skipping the
+    * names Spark's file index skips (`_SUCCESS`, `.crc`, `_temporary/`, but
+    * not `name=value` dirs). The one listing of what a table's or a store's
+    * data is: the schema read, the row count, the content tag
+    * ([[Fingerprint]]) and the store maintenance ([[Layout.compact]],
+    * [[Versioned.append]], the streaming stores' compaction) all use it. */
+  private[graft] def dataFiles(spark: SparkSession, path: String): Iterator[FileStatus] = {
     val p = new Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     def walk(s: FileStatus): Iterator[FileStatus] =
@@ -87,34 +107,19 @@ object Tables {
   def orders(spark: SparkSession, dir: String): DataFrame   = table(spark, dir, "orders")
   def lineitem(spark: SparkSession, dir: String): DataFrame = table(spark, dir, "lineitem")
   /** `events.ts` arrives in either of two parquet encodings depending on
-    * the generator vintage: µs `TimestampType` (current testdata), or
-    * `TIMESTAMP(NANOS)`, which Spark's TimestampType (µs) cannot hold —
-    * the vectorized reader rejects it outright, so that vintage is read
-    * as raw longs (`spark.sql.legacy.parquet.nanosAsLong`) and truncated
-    * to µs ourselves: `ts div 1000` in integer arithmetic (a double
-    * division would lose precision above 2^53 ns ≈ 1970+104 days). The
-    * loader sniffs the footer schema and normalizes BOTH to µs
-    * TimestampType, so every operator sees one shape; ns→µs truncation is
-    * oracle-safe by the repo discipline of half-open range predicates and
-    * second-level formatted output. */
+    * the generator vintage: µs timestamps (every current testdata scale),
+    * or `TIMESTAMP(NANOS)`, which [[parquet]] reads as the raw long. That
+    * long is truncated to µs here: `ts div 1000` in integer arithmetic (a
+    * double division would lose precision above 2^53 ns ≈ 1970+104 days).
+    * BOTH normalize to µs TimestampType, so every operator sees one shape;
+    * ns→µs truncation is oracle-safe by the repo discipline of half-open
+    * range predicates and second-level formatted output. */
   def events(spark: SparkSession, dir: String): DataFrame = {
-    val raw = eventsRaw(spark, dir)
+    val raw = table(spark, dir, "events")
     raw.schema("ts").dataType match {
       case LongType => raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))
       case _ => raw
     }
-  }
-
-  private def eventsRaw(spark: SparkSession, dir: String): DataFrame = {
-    // harmless when the file is µs-encoded; required to open a ns file
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    // µs files are written isAdjustedToUTC=false; inferred as NTZ they
-    // break every unix_micros/time-zone-aware consumer, so read them as
-    // plain TimestampType — with the repo-wide UTC session the wall
-    // values mean the same instants (and the same rows the DuckDB
-    // oracle's naive timestamps select)
-    spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-    table(spark, dir, "events")
   }
 
   /** Events with `ts` as the raw nanosecond epoch long, whatever the disk
@@ -126,7 +131,7 @@ object Tables {
     * pushdown on modern files should instead filter [[events]]' timestamp
     * column with timestamp literals. */
   def eventsRawNanos(spark: SparkSession, dir: String): DataFrame = {
-    val raw = eventsRaw(spark, dir)
+    val raw = table(spark, dir, "events")
     raw.schema("ts").dataType match {
       case LongType => raw
       case _ => raw.withColumn("ts", unix_micros(col("ts")) * 1000L)

@@ -50,8 +50,8 @@ object Versioned {
     val prev = currentVersion(spark, root)
     val commitDir = new Path(s"$root/data/commit-${prev + 1}")
     df.write.mode("overwrite").parquet(commitDir.toString)
-    val newFiles = f.listStatus(commitDir)
-      .map(_.getPath.toString).filter(_.endsWith(".parquet")).sorted
+    val newFiles = Tables.dataFiles(spark, commitDir.toString)
+      .map(_.getPath.toString).toArray.sorted
     val carried = if (prev == 0) Array.empty[String] else files(spark, root, prev)
     val all = (carried ++ newFiles).map(p => "\"" + p + "\"")
       .mkString("[", ",", "]")

@@ -304,8 +304,7 @@ object IngestPipeline {
     recoverDirs(fs, store, prefix)
     val oversized = fs.listStatus(new Path(store))
       .filter(st => st.isDirectory && st.getPath.getName.startsWith(prefix) &&
-        fs.listStatus(st.getPath)
-          .count(_.getPath.getName.endsWith(".parquet")) > maxFiles)
+        Tables.dataFiles(spark, st.getPath.toString).size > maxFiles)
       .map(st => s"$store/${st.getPath.getName}")
     if (oversized.nonEmpty)
       rewritePartitions(fs, spark.read.option("basePath", store)

@@ -16,11 +16,14 @@ object GraftSqlBridge {
   def ofRows(spark: SparkSession, plan: catalyst.plans.logical.LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
 
-  /** The session's live SQL conf: what the parquet schema converter of
-    * [[graft.sources.Tables.parquet]] is built from, as Spark's own
-    * schema inference builds it. */
-  def sqlConf(spark: SparkSession): internal.SQLConf =
-    spark.asInstanceOf[classic.SparkSession].sessionState.conf
+  /** A copy of the session's SQL conf with `pins` set: what the parquet
+    * schema converter of [[graft.sources.Tables.parquet]] is built from.
+    * The session's own conf is left as it was. */
+  def sqlConf(spark: SparkSession, pins: (String, String)*): internal.SQLConf = {
+    val conf = spark.asInstanceOf[classic.SparkSession].sessionState.conf.clone()
+    pins.foreach { case (k, v) => conf.setConfString(k, v) }
+    conf
+  }
 
   /** Rebuild a just-checkpointed Dataset's `LogicalRDD` leaf WITHOUT its
     * `originConstraints`, returning the checkpointed RDD's id alongside.

@@ -154,6 +154,20 @@ class EagerSpec extends SparkSuite {
       "IngestPipeline.scala" -> 4))
   }
 
+  test("source reads without side effects: src/main never writes the " +
+      "session conf, lists data files only in Tables, and graft.sources " +
+      "never uses java.io.File") {
+    val main = sources("src/main/scala")
+    assert(main.nonEmpty, "run from the repository root")
+    def mentioning(ps: Seq[java.nio.file.Path], s: String) =
+      ps.filter(p => text(p).contains(s)).map(_.getFileName.toString)
+    assert(mentioning(main, "spark.conf.set(").isEmpty)
+    // a hand-rolled data-file listing filters by the part files' suffix
+    assert(mentioning(main, "endsWith(\".parquet\")").isEmpty)
+    assert(mentioning(sources("src/main/scala/graft/sources"), "java.io.File")
+      .isEmpty)
+  }
+
   private object Tables0 {
     def docs(spark: org.apache.spark.sql.SparkSession, dir: String) =
       graft.sources.Tables.documents(spark, dir)

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.OutputMode
+import graft.sources.Tables
 import graft.streaming.{IngestPipeline, KafkaWire}
 
 /** The consumer.py ingest semantics (SURVEY §5.2/§5.3/§5.5): golden 5-row
@@ -123,14 +124,13 @@ class IngestPipelineSpec extends SparkSuite {
   test("file-stream over the real events table equals the batch hour-window") {
     // the dashboard's 5-min rescan (app.py:80-101) as an actual stream:
     // readStream over the parquet store, one file per micro-batch
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     // FileStreamSource consumes a DIRECTORY of arriving files — stage the
     // table file into one (also what a real landing zone looks like)
     val landing = tempDir("graft_landing")
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(s"$sf0001/events.parquet"),
       landing.resolve("batch-000.parquet"))
-    val schema = spark.read.parquet(s"$sf0001/events.parquet").schema
+    val schema = Tables.table(spark, sf0001, "events").schema
     val stream0 = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", 1)
       .parquet(landing.toString)
@@ -163,12 +163,11 @@ class IngestPipelineSpec extends SparkSuite {
     // countDistinct is unsupported in a streaming aggregation; the
     // streaming form is dropDuplicates(hour, user) → windowed count.
     // This pins that rewrite equal to the batch countDistinct key.
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val landing = tempDir("graft_landing_u")
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(s"$sf0001/events.parquet"),
       landing.resolve("batch-000.parquet"))
-    val schema = spark.read.parquet(s"$sf0001/events.parquet").schema
+    val schema = Tables.table(spark, sf0001, "events").schema
     val stream0 = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", 1)
       .parquet(landing.toString)
@@ -202,12 +201,11 @@ class IngestPipelineSpec extends SparkSuite {
     // window(ts, 15m, 5m) is the SAME generator in both execution modes —
     // a backfill via RelationalOps.windowHopping and the live stream must
     // produce identical frames (the claim the batch key's scaladoc makes)
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val landing = tempDir("graft_hop")
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(s"$sf0001/events.parquet"),
       landing.resolve("batch-000.parquet"))
-    val schema = spark.read.parquet(s"$sf0001/events.parquet").schema
+    val schema = Tables.table(spark, sf0001, "events").schema
     val stream0 = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", 1)
       .parquet(landing.toString)
@@ -242,12 +240,11 @@ class IngestPipelineSpec extends SparkSuite {
     // file-streamed per-user 30-min gap sessions must reproduce the
     // batch key frame for frame — start, end (= last event + gap),
     // count and decimal-exact value sum
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val landing = tempDir("graft_sess")
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(s"$sf0001/events.parquet"),
       landing.resolve("batch-000.parquet"))
-    val schema = spark.read.parquet(s"$sf0001/events.parquet").schema
+    val schema = Tables.table(spark, sf0001, "events").schema
     val stream0 = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", 1)
       .parquet(landing.toString)

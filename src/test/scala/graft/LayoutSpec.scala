@@ -177,7 +177,7 @@ class LayoutSpec extends SparkSuite {
       assert(fs.mkdirs(new org.apache.hadoop.fs.Path(p, "_temporary/0")))
     }
     val wh = spark.conf.get("spark.sql.warehouse.dir")
-    val tag = graft.sources.Fingerprint.tag(sf0001, "events")
+    val tag = graft.sources.Fingerprint.tag(spark, sf0001, "events")
     Seq("jsonl", "byday").foreach(n => crash(s"$wh/graft_events_${n}_$tag"))
     val n = Tables.events(spark, sf0001).count()
     val jsonl = Layout.readEventsJsonl(spark,

@@ -6,29 +6,49 @@ import org.apache.parquet.hadoop.example.ExampleParquetWriter
 import org.apache.parquet.hadoop.util.HadoopOutputFile
 import org.apache.parquet.schema.MessageTypeParser
 import org.apache.spark.sql.{AnalysisException, DataFrame}
+import org.apache.spark.sql.functions.{col, count, lit, sum, xxhash64}
 import org.apache.spark.sql.types.{DateType, LongType, TimestampType}
-import graft.sources.{Bucketed, Layout, Tables}
+import graft.sources.{Bucketed, Fingerprint, Layout, Tables}
 
 /** `Tables` is the one place a parquet schema comes from: a source table,
   * or a store one Spark job wrote, is read with the schema in one data
-  * file's footer. Spark's own inference is the reference; the read runs no
-  * Spark job, and a path with no data file keeps Spark's error. */
+  * file's footer. Spark's own inference with timestamp-NTZ inference off
+  * is the reference, whatever the session's setting; the read runs no
+  * Spark job and writes no session conf, and a path with no data file
+  * keeps Spark's error. `Tables.dataFiles` is also what the content tag
+  * ([[Fingerprint]]) digests. */
 class TablesSpec extends SparkSuite {
   private val scales = Seq("sf0.001", "sf0.01", "sf0.1")
     .map(sf => s"${new java.io.File(sf0001).getParent}/$sf")
   private val names = Seq("region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
   private val ntz = "spark.sql.parquet.inferTimestampNTZ.enabled"
+  private val nanos = "spark.sql.legacy.parquet.nanosAsLong"
+
+  /** `body` with the session's NTZ inference set to `on` (`None`: unset),
+    * restoring the previous setting after it. */
+  private def withNtz[T](on: Option[String])(body: => T): T = {
+    val before = spark.conf.getOption(ntz)
+    on.fold(spark.conf.unset(ntz))(spark.conf.set(ntz, _))
+    try body finally before.fold(spark.conf.unset(ntz))(spark.conf.set(ntz, _))
+  }
 
   /** The frame `read` builds, once it has run no Spark job and has the
-    * schema Spark infers for `path`. */
+    * schema Spark infers for `path` with NTZ inference off. */
   private def footerRead(path: String)(read: => DataFrame): DataFrame = {
     var df: DataFrame = null
     val jobs = jobsStartedBy { df = read }
     assert(jobs.isEmpty, s"$path: $jobs")
-    assert(df.schema === spark.read.parquet(path).schema, path)
+    assert(df.schema === withNtz(Some("false"))(spark.read.parquet(path).schema),
+      path)
     df
   }
+
+  /** Row count and the sum of the rows' 64-bit hashes: equal for two
+    * frames of one schema that hold the same multiset of rows. */
+  private def digest(df: DataFrame) =
+    df.select(count(lit(1)), sum(xxhash64(df.columns.map(col): _*)
+      .cast("decimal(38,0)"))).head()
 
   private def sameRows(a: DataFrame, b: DataFrame): Unit = {
     assert(a.exceptAll(b).isEmpty)
@@ -38,16 +58,32 @@ class TablesSpec extends SparkSuite {
   private def errorOf(read: => Any): String =
     intercept[AnalysisException](read).getCondition
 
-  test("every table at sf0.001, sf0.01 and sf0.1: the footer schema is " +
-      "Spark's, under either timestamp-NTZ setting, and no job runs") {
-    // Tables.events switches NTZ inference off for the session; the
-    // lineitem and events µs timestamps read as timestamp_ntz before that
-    val before = spark.conf.getOption(ntz)
-    try for (on <- Seq("true", "false")) {
-      spark.conf.set(ntz, on)
-      for (dir <- scales; name <- names)
-        footerRead(s"$dir/$name.parquet")(Tables.table(spark, dir, name))
-    } finally before.fold(spark.conf.unset(ntz))(spark.conf.set(ntz, _))
+  test("every table at sf0.001, sf0.01 and sf0.1: under either " +
+      "timestamp-NTZ setting, the footer schema is Spark's with NTZ " +
+      "inference off, the rows are Spark's, and no job runs") {
+    // with NTZ inference on, Spark reads the lineitem and events µs
+    // timestamps as timestamp_ntz; Tables reads them as timestamp
+    val tables = for (dir <- scales; name <- names) yield (dir, name)
+    val reference = withNtz(Some("false"))(tables.map { case (dir, name) =>
+      digest(spark.read.parquet(s"$dir/$name.parquet")) })
+    for (on <- Seq("true", "false")) withNtz(Some(on)) {
+      tables.zip(reference).foreach { case ((dir, name), rows) =>
+        val df = footerRead(s"$dir/$name.parquet")(Tables.table(spark, dir, name))
+        assert(digest(df) === rows, s"$dir/$name with NTZ inference $on")
+      }
+    }
+  }
+
+  test("a source read writes no session conf: lineitem has one schema " +
+      "before and after an events read") {
+    withNtz(None) {
+      val confs = Seq(ntz, nanos).map(spark.conf.getOption)
+      val before = Tables.lineitem(spark, sf0001).schema
+      Tables.events(spark, sf0001)
+      assert(Seq(ntz, nanos).map(spark.conf.getOption) === confs)
+      assert(Tables.lineitem(spark, sf0001).schema === before)
+      assert(before("l_shipdate").dataType === TimestampType)
+    }
   }
 
   test("a Spark-written multi-file table: same schema and rows; its row " +
@@ -96,7 +132,6 @@ class TablesSpec extends SparkSuite {
       .append("user_id", 7L).append("event_type", "click")
       .append("value", 1.5 * i))
     finally w.close()
-    Tables.events(spark, dir) // sets the confs every events read runs under
     val raw = footerRead(s"$dir/events.parquet")(Tables.table(spark, dir, "events"))
     assert(raw.schema("ts").dataType === LongType)
     val events = Tables.events(spark, dir)
@@ -115,5 +150,23 @@ class TablesSpec extends SparkSuite {
     assert(errorOf(Tables.lineitem(spark, dir)) === "UNABLE_TO_INFER_SCHEMA")
     assert(errorOf(Tables.parquet(spark, s"$dir/lineitem.parquet")) ===
       "UNABLE_TO_INFER_SCHEMA")
+  }
+
+  test("Fingerprint.tag digests the data files of a file: URI table: a " +
+      "rewrite changes it, a _SUCCESS or .crc file does not") {
+    val local = tempDir("graft_fp")
+    val dir = s"file://$local"
+    val part = local.resolve("events.parquet/part-00000.parquet")
+    java.nio.file.Files.createDirectories(part.getParent)
+    def put(sf: String): Unit = java.nio.file.Files.copy(
+      java.nio.file.Paths.get(s"${new java.io.File(sf0001).getParent}/$sf/events.parquet"),
+      part, java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    put("sf0.001")
+    val tag = Fingerprint.tag(spark, dir, "events")
+    Seq("_SUCCESS", ".part-00000.parquet.crc").foreach(n =>
+      java.nio.file.Files.write(part.resolveSibling(n), Array[Byte](1, 2, 3)))
+    assert(Fingerprint.tag(spark, dir, "events") === tag)
+    put("sf0.01")
+    assert(Fingerprint.tag(spark, dir, "events") !== tag)
   }
 }

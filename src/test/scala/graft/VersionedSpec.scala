@@ -78,7 +78,7 @@ class VersionedSpec extends SparkSuite {
     }
     // THE IVM property: the refresh plan's input files are the stored
     // aggregate plus the diff's files — v1's data files are not touched
-    val tag = graft.sources.Fingerprint.tag(sf0001, "events")
+    val tag = graft.sources.Fingerprint.tag(spark, sf0001, "events")
     val wh = spark.conf.get("spark.sql.warehouse.dir")
     val root = s"$wh/graft_events_versioned_$tag"
     val v1Files = Versioned.readVersion(spark, root, 1).inputFiles.toSet
