@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DoubleType, FloatType}
 
 /** Round-3's only red row was a signed zero: DuckDB emitted `-0.0` for a
   * covariance that rounds to zero, Spark `+0.0` — every comparison
@@ -9,32 +8,40 @@ import org.apache.spark.sql.types.{DoubleType, FloatType}
   * disagrees. The fix is `round(...) + 0.0` on BOTH engines (IEEE 754:
   * `-0.0 + 0.0 = +0.0`). This spec pins the class of bug, not the
   * instance: no inventory key may emit a negative zero in any top-level
-  * double/float column. Detection casts to string — `-0.0` keeps its sign
-  * in Spark's formatting — so it needs no UDF and stays inside codegen
-  * (IEEE `1/x` would also work but ANSI mode throws on the +0.0 rows).
+  * double/float column.
   *
-  * Runs at sf0.001 for suite speed; the sf0.01 surface is covered by the
-  * bit-exact `tools/check_oracle.py` gate (floats compared as packed
-  * little-endian bytes, mirroring the driver's hash discipline). */
+  * The counts come from the one [[InventorySweep]]: after each key's frame
+  * has run, the sweep counts the collected values whose raw bits are
+  * `-0.0` (`Long.MinValue` for a double, `Int.MinValue` for a float), per
+  * top-level double/float column. Runs at sf0.001 for suite speed; the
+  * sf0.01 surface is covered by the bit-exact `tools/check_oracle.py` gate
+  * (floats compared as packed little-endian bytes, mirroring the driver's
+  * hash discipline). */
 class NegativeZeroSpec extends SparkSuite {
 
-  test("no inventory key emits -0.0 in any double/float output column") {
-    SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
-      val df = fn(spark, sf0001)
-      val doubleCols = df.schema.fields.collect {
-        case f if f.dataType == DoubleType || f.dataType == FloatType => f.name
-      }
-      if (doubleCols.nonEmpty) {
-        val negZeroCounts = doubleCols.map { c =>
-          sum(when(col(c).cast("string") === "-0.0", 1)
-            .otherwise(0)).as(c)
-        }
-        val counts = df.agg(negZeroCounts.head, negZeroCounts.tail: _*).head()
-        doubleCols.zipWithIndex.foreach { case (c, i) =>
-          val n = if (counts.isNullAt(i)) 0L else counts.getLong(i)
-          assert(n == 0L, s"$name column '$c' contains $n negative zero(s)")
-        }
-      }
+  private def negativeZeros(r: InventorySweep.Record): Option[String] = {
+    val cols = r.negativeZeros.collect {
+      case (c, n) if n > 0 => s"${r.name} column '$c' contains $n negative zero(s)"
     }
+    Option.when(cols.nonEmpty)(cols.mkString("; "))
+  }
+
+  test("no inventory key emits -0.0 in any double/float output column") {
+    val offenders = InventorySweep(spark).offenders(negativeZeros)
+    assert(offenders.isEmpty, offenders.mkString("\n"))
+  }
+
+  test("the negative-zero count flags a -0.0 double and float column, not +0.0") {
+    val ids = spark.range(3).select(col("id").cast("double").as("x"))
+    val planted = InventorySweep.record("planted",
+      ids.select((col("x") * -0.0).as("d"), (col("x") * -0.0).cast("float").as("f")))
+    assert(planted.error.isEmpty, planted.error)
+    assert(planted.negativeZeros === Seq("d" -> 3L, "f" -> 3L))
+    assert(negativeZeros(planted).exists(_.contains("column 'd' contains 3")))
+    val clean = InventorySweep.record("clean",
+      ids.select((col("x") * -0.0 + 0.0).as("d")))
+    assert(clean.error.isEmpty, clean.error)
+    assert(clean.negativeZeros === Seq("d" -> 0L))
+    assert(negativeZeros(clean).isEmpty)
   }
 }

@@ -1,51 +1,47 @@
 package graft
 
-import graft.operators.{CoreOps, RelationalOps}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.functions._
+import graft.operators.{CoreOps, Eager, RelationalOps}
+import graft.sources.Tables
 
 /** Plan-shape regression tests: pin the scale-discipline facts that
   * `.explain` audits found, so a refactor that silently loses pushdown or
-  * a broadcast shows up as a red test, not a slow cluster. */
+  * a broadcast shows up as a red test, not a slow cluster.
+  *
+  * The targeted tests build their one frame here. The inventory-wide
+  * checks (partitionless window, multi-consumer composites,
+  * text_quality_buckets, cartesian, nested-loop join, fleet sweep and the
+  * allowlist audit) read the one [[InventorySweep]] record per key: the
+  * window, scan, checkpoint-leaf and duplicated-subtree facts come from the
+  * optimized plan, the cartesian and nested-loop facts from the physical
+  * plan before execution, and the duplicated-exchange facts from the
+  * AQE-final plan after the run. Each check lists every offender and every
+  * key whose build or run failed. Each sweep predicate also has a
+  * planted-offender test that feeds a hand-built offender and a clean frame
+  * through [[InventorySweep.record]], so a predicate that stops firing
+  * fails here instead of passing vacuously. */
 class PlanShapeSpec extends SparkSuite {
 
-  private def planOf(df: org.apache.spark.sql.DataFrame): String =
+  private def planOf(df: DataFrame): String =
     df.queryExecution.executedPlan.toString
 
-  /** The scan's source paths. `LogicalRelation.relation.toString` is just
-    * "parquet" — matching a table name against it NEVER fires (the round-9
-    * audit was silently vacuous because of this); the real identity lives
-    * in the HadoopFsRelation's FileIndex root paths. */
-  private def scanPathsOf(
-      l: org.apache.spark.sql.execution.datasources.LogicalRelation): String =
-    l.relation match {
-      case h: org.apache.spark.sql.execution.datasources.HadoopFsRelation =>
-        h.location.rootPaths.mkString(",")
-      case _ => ""
-    }
-
-  private val facts =
-    Seq("lineitem", "orders", "events", "documents", "embeddings")
-
-  private def isFactScan(
-      p: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): Boolean =
-    p match {
-      case l: org.apache.spark.sql.execution.datasources.LogicalRelation =>
-        facts.exists(t => scanPathsOf(l).contains(s"$t.parquet"))
-      case _ => false
-    }
-
-  private def shuffley(
-      p: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): Boolean = {
-    import org.apache.spark.sql.catalyst.plans.logical._
-    p match {
-      case _: Aggregate | _: Join | _: Window | _: Deduplicate => true
-      case _ => false
-    }
+  /** `body` with the session conf `key` set to `value`, restored after. */
+  private def withConf[T](key: String, value: String)(body: => T): T = {
+    val old = spark.conf.getOption(key)
+    spark.conf.set(key, value)
+    try body finally old.fold(spark.conf.unset(key))(spark.conf.set(key, _))
   }
+
+  private def events: DataFrame = Tables.events(spark, sf0001)
+
+  private def sweep = InventorySweep(spark)
 
   /** Keys where the fleet sweep's duplicated fact-bearing shuffle subtree
     * is ARGUED acceptable. Membership is NOT a blanket exemption: the
-    * allowlist-audit test re-runs each key and asserts the verified
-    * property — the bit-equal logical copies collapse physically
+    * allowlist-audit test reads each key's run in the sweep and asserts
+    * the verified property — the bit-equal logical copies collapse physically
     * (ReusedExchange) or are eliminated at runtime (AQE empty-relation
     * propagation), i.e. no two canonically-equal materialized
     * fact-bearing exchanges ever both execute. */
@@ -197,64 +193,43 @@ class PlanShapeSpec extends SparkSuite {
     // one task — the single-task scale cliff window_ntile's bucketed
     // rewrite exists to avoid. A partitionless Window is legitimate ONLY
     // when its input is already group-sized: every path from the Window
-    // down to a scan must pass through an Aggregate (e.g. stats_ks's
-    // grouped value grid, seasonal_decompose's daily frame — bounded by
-    // the group domain, not the fact cardinality). Assert NO inventory
-    // key runs a partitionless Window directly over fact-sized input.
-    import org.apache.spark.sql.catalyst.plans.logical
-    // the physical twin of the logical walk below, for looking THROUGH
-    // InMemoryRelation: same rule — every path to a leaf must pass an
-    // aggregate node (a per-node name test, not a whole-tree substring
-    // match, so a cached fact-sized crossJoin that merely CONTAINS an
-    // aggregate branch does not sneak past)
-    def groupSizedPhys(p: org.apache.spark.sql.execution.SparkPlan): Boolean =
-      p match {
-        case a if a.nodeName.contains("Aggregate") => true
-        // a Limit bounds its output by construction (top-k order
-        // statistics: anomaly_pot / stats_hill_tail window over ≤101
-        // rows) — as group-sized as an Aggregate
-        case l if l.nodeName.contains("Limit") => true
-        // AQE wraps the real plan as a childless node; unwrap it
-        case aqe: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-          groupSizedPhys(aqe.executedPlan)
-        // a cached frame built over ANOTHER cached frame (e.g.
-        // anomaly_seasonal's dev over dec): recurse into its build plan
-        case s: org.apache.spark.sql.execution.columnar.InMemoryTableScanExec =>
-          groupSizedPhys(s.relation.cachedPlan)
-        // an eager checkpoint (Eager/localCheckpoint) is group-sized iff
-        // the plan it MATERIALIZED is — Eager records that plan in its
-        // provenance map precisely so this audit can look through the
-        // otherwise-opaque RDD leaf
-        case r if graft.operators.Eager.planBehindPhys(r).isDefined =>
-          groupSized(graft.operators.Eager.planBehindPhys(r).get)
-        case l if l.children.isEmpty => false
-        case l => l.children.forall(groupSizedPhys)
-      }
-    def groupSized(p: logical.LogicalPlan): Boolean = p match {
-      case _: logical.Aggregate => true
-      // the logical twin of the physical Limit rule above
-      case _: logical.GlobalLimit => true
-      case _: logical.LocalLimit => true
-      // a cached frame is group-sized iff the plan it materializes is —
-      // the relation itself is a leaf, so walk its build plan
-      // (anomaly_seasonal caches its |days|-row residual frame)
-      case m: org.apache.spark.sql.execution.columnar.InMemoryRelation =>
-        groupSizedPhys(m.cachedPlan)
-      // checkpointed leaf: recurse into the pre-checkpoint plan (e.g.
-      // anomaly_seasonal's |days|-row dev frame, now Eager-materialized)
-      case l if graft.operators.Eager.planBehind(l).isDefined =>
-        groupSized(graft.operators.Eager.planBehind(l).get)
-      case l if l.children.isEmpty => false
-      case l => l.children.forall(groupSized)
+    // down to a scan must pass through an Aggregate or a Limit (e.g.
+    // stats_ks's grouped value grid, seasonal_decompose's daily frame —
+    // bounded by the group domain, not the fact cardinality), looking
+    // through cached and checkpointed leaves. Assert NO inventory key runs
+    // a partitionless Window directly over fact-sized input.
+    val offenders = sweep.offenders { r =>
+      Option.when(r.partitionlessWindows > 0)(
+        s"${r.name} has a partitionless Window over fact-sized input")
     }
-    SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
-      val global = fn(spark, sf0001).queryExecution.optimizedPlan.collect {
-        case w: logical.Window
-            if w.partitionSpec.isEmpty && !groupSized(w.child) => w
-      }
-      assert(global.isEmpty,
-        s"$name has a partitionless Window over fact-sized input")
-    }
+    assert(offenders.isEmpty, offenders.mkString("\n"))
+  }
+
+  test("a key whose build or run throws is listed by name in every inventory check") {
+    val broken = InventorySweep.record("broken", throw new IllegalStateException("boom"))
+    assert(broken.error.exists(_.contains("boom")), broken)
+    val failsOnRun = InventorySweep.record("fails_on_run",
+      spark.range(1).select(raise_error(lit("boom"))))
+    assert(failsOnRun.error.exists(_.contains("boom")), failsOnRun)
+    val ok = InventorySweep.record("ok", spark.range(1).toDF())
+    val s = new InventorySweep.Sweep(IndexedSeq(broken, failsOnRun, ok))
+    assert(s.offenders(_ => None) === Seq(
+      s"broken failed: ${broken.error.get}",
+      s"fails_on_run failed: ${failsOnRun.error.get}"))
+    assert(s.offenders(r => Some(r.name)).last === "ok")
+  }
+
+  test("the partitionless-window fact flags a window over the events scan," +
+      " not one over an aggregate") {
+    val planted = InventorySweep.record("planted",
+      events.withColumn("rn", row_number().over(Window.orderBy("ts"))))
+    assert(planted.error.isEmpty, planted.error)
+    assert(planted.partitionlessWindows === 1)
+    val clean = InventorySweep.record("clean",
+      events.groupBy("event_type").count()
+        .withColumn("r", rank().over(Window.orderBy("count"))))
+    assert(clean.error.isEmpty, clean.error)
+    assert(clean.partitionlessWindows === 0)
   }
 
   test("text_quality_buckets scans documents ONCE (shared eager subplan)") {
@@ -264,15 +239,11 @@ class PlanShapeSpec extends SparkSuite {
     // not two independent documents scans re-running the regexes. Both
     // consumers must read checkpointed leaves; no branch may go back to
     // parquet.
-    val df = graft.operators.TextOps.textQualityBuckets(spark, sf0001)
-    val lp = df.queryExecution.optimizedPlan
-    val checkpointReads = lp.collect {
-      case r: org.apache.spark.sql.execution.LogicalRDD => r }
-    val directScans = lp.collect {
-      case l: org.apache.spark.sql.execution.datasources.LogicalRelation => l }
-    assert(checkpointReads.size === 2, lp.toString.take(2000))
-    assert(directScans.isEmpty,
-      s"documents scanned outside the shared eager frame:\n${lp.toString.take(2000)}")
+    assert(sweep.failed.isEmpty, sweep.failed.mkString("\n"))
+    val r = sweep("text_quality_buckets")
+    assert(r.checkpointReads === 2, r)
+    assert(r.scanPaths.isEmpty,
+      s"documents scanned outside the shared eager frame: ${r.scanPaths}")
   }
 
   test("multi-consumer composites read their shared stage from checkpointed" +
@@ -289,7 +260,6 @@ class PlanShapeSpec extends SparkSuite {
     // there is no lineage left to re-execute. Entries map key → max
     // allowed direct fact-table scans (non-zero where a branch
     // legitimately takes its own single pass, e.g. a corpus row count).
-    import org.apache.spark.sql.execution.datasources.LogicalRelation
     val expected: Seq[(String, String, Int)] = Seq(
       // NOTE round 10: this audit was VACUOUS as originally written —
       // `l.relation.toString` is just "parquet" (no path), so the
@@ -339,15 +309,9 @@ class PlanShapeSpec extends SparkSuite {
       ("text_cond_entropy", "documents", 0),
       ("text_quality_buckets", "documents", 0),
       ("text_keyphrase_rake", "documents", 0))
-    val violations = expected.flatMap { case (key, fact, maxScans) =>
-      val lp = SparkEntry.queries(key)(spark, sf0001)
-        .queryExecution.optimizedPlan
-      val factScans = lp.collect {
-        case l: LogicalRelation if scanPathsOf(l).contains(s"$fact.parquet") => l
-      }
-      if (factScans.size > maxScans)
-        Some(s"$key re-scans $fact ${factScans.size}x (allowed $maxScans)")
-      else None
+    val violations = sweep.failed ++ expected.flatMap { case (key, fact, maxScans) =>
+      val n = sweep(key).scans(fact)
+      Option.when(n > maxScans)(s"$key re-scans $fact ${n}x (allowed $maxScans)")
     }
     assert(violations.isEmpty,
       "shared stages lost their eager materialization:\n" +
@@ -376,9 +340,22 @@ class PlanShapeSpec extends SparkSuite {
   }
 
   test("no key in the whole inventory plans a cartesian product") {
-    SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
-      val plan = planOf(fn(spark, sf0001))
-      assert(!plan.contains("CartesianProduct"), s"$name:\n${plan.take(1500)}")
+    val offenders = sweep.offenders(r =>
+      Option.when(r.cartesian)(s"${r.name} plans a CartesianProduct"))
+    assert(offenders.isEmpty, offenders.mkString("\n"))
+  }
+
+  test("the cartesian fact flags a cross join planned without broadcast," +
+      " not an equi-join") {
+    withConf("spark.sql.autoBroadcastJoinThreshold", "-1") {
+      val planted = InventorySweep.record("planted",
+        spark.range(3).crossJoin(spark.range(4).withColumnRenamed("id", "j")))
+      assert(planted.error.isEmpty, planted.error)
+      assert(planted.cartesian)
+      val clean = InventorySweep.record("clean",
+        spark.range(3).join(spark.range(4), "id"))
+      assert(clean.error.isEmpty, clean.error)
+      assert(!clean.cartesian)
     }
   }
 
@@ -533,18 +510,28 @@ class PlanShapeSpec extends SparkSuite {
     assert(stale.isEmpty, s"allowlisted but not registered: $stale")
     // collect ALL offenders before asserting — a failure names every
     // key that needs auditing, not just the alphabetically first
-    val offenders = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filterNot(kv => allowed(kv._1))
-      .flatMap { case (name, fn) =>
-        val plan = planOf(fn(spark, sf0001))
-        if (plan.contains("BroadcastNestedLoopJoin")) Some(name) else None
-      }
+    val offenders = sweep.offenders(r =>
+      Option.when(r.nestedLoop && !allowed(r.name))(r.name))
     assert(offenders.isEmpty, s"BNLJ outside the audited allowlist: " +
       offenders.mkString(", "))
   }
 
+  test("the nested-loop fact flags a broadcast non-equi join, not an equi-join") {
+    val right = spark.range(4).withColumnRenamed("id", "j")
+    val planted = InventorySweep.record("planted",
+      spark.range(3).join(right, col("id") < col("j")))
+    assert(planted.error.isEmpty, planted.error)
+    assert(planted.nestedLoop)
+    val clean = InventorySweep.record("clean",
+      spark.range(3).join(right, col("id") === col("j")))
+    assert(clean.error.isEmpty, clean.error)
+    assert(!clean.nestedLoop)
+  }
+
   test("fleet sweep: no key re-executes a duplicated fact-bearing shuffle" +
       " subplan (self-extending checkpoint audit)") {
+    // The duplicated subtrees are the sweep record's `dupShuffles`, taken
+    // from each key's optimized plan right after its build, before it runs.
     // The per-key checkpoint audit above is hand-maintained, and
     // text_keyphrase_rake proved it can lag: a new composite shipped with
     // a lazy multi-consumer frame and nobody added the entry. This sweep
@@ -589,18 +576,10 @@ class PlanShapeSpec extends SparkSuite {
     // allowlist-audit test below re-verifies the reuse property per key
     // instead of treating membership as a blanket exemption.)
     val allowed: Set[String] = dupAllowed
-    val offenders = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filterNot(kv => allowed(kv._1))
-      .flatMap { case (name, fn) =>
-        val lp = fn(spark, sf0001).queryExecution.optimizedPlan
-        val dupGroups = lp.collect {
-          case p if shuffley(p) && p.exists(isFactScan) => p
-        }.groupBy(_.canonicalized).filter(_._2.size >= 2)
-        if (dupGroups.nonEmpty)
-          Some(s"$name (${dupGroups.size} duplicated subtree shapes, e.g. " +
-            s"${dupGroups.head._2.head.nodeName})")
-        else None
-      }
+    val offenders = sweep.offenders(r =>
+      Option.when(r.dupShuffles.nonEmpty && !allowed(r.name))(
+        s"${r.name} (${r.dupShuffles.size} duplicated subtree shapes, e.g. " +
+          s"${r.dupShuffles.head})"))
     assert(offenders.isEmpty,
       "duplicated fact-bearing shuffle subplans — a shared stage is " +
         "re-executed per consumer; Eager it (or justify in the allowlist):\n" +
@@ -619,43 +598,39 @@ class PlanShapeSpec extends SparkSuite {
     // materialized exchanges whose subtree reads a fact table: a
     // collapsed duplicate shows up as ReusedExchange (a leaf, not an
     // Exchange), and a runtime-eliminated branch (empty-relation
-    // propagation — pack_greedy_bins at sf0.001) vanishes entirely.
-    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-    import org.apache.spark.sql.execution.exchange.Exchange
-    def walk(p: SparkPlan): Seq[SparkPlan] = {
-      val nested = p match {
-        case q: QueryStageExec => Seq(q.plan)
-        case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
-        case _ => Seq.empty[SparkPlan]
-      }
-      p +: (p.children ++ p.subqueries ++ nested).flatMap(walk)
-    }
-    def readsFact(root: SparkPlan): Boolean = walk(root).exists {
-      case f: FileSourceScanExec =>
-        facts.exists(t =>
-          f.relation.location.rootPaths.mkString(",").contains(s"$t.parquet"))
-      case _ => false
-    }
+    // propagation — pack_greedy_bins at sf0.001) vanishes entirely. The
+    // equal exchanges are the sweep record's `dupExchanges`, taken from
+    // the AQE-final plan after the sweep ran the key.
     val stale = dupAllowed -- SparkEntry.queries.keySet
     assert(stale.isEmpty, s"allowlisted but not registered: $stale")
-    val offenders = dupAllowed.toSeq.sorted.flatMap { name =>
-      val df = SparkEntry.queries(name)(spark, sf0001)
-      df.collect() // materialize so the plan is the AQE-final one
-      val exchanges = walk(df.queryExecution.executedPlan)
-        .collect { case e: Exchange => e }
-      val dups = exchanges.groupBy(_.canonicalized)
-        .filter { case (_, copies) =>
-          copies.size >= 2 && copies.exists(readsFact)
-        }
-      if (dups.nonEmpty)
-        Some(s"$name (${dups.size} equal fact-bearing exchanges executed " +
-          s"twice, e.g. ${dups.head._2.head.nodeName})")
-      else None
-    }
+    val offenders = sweep.offenders(r =>
+      Option.when(r.dupExchanges.nonEmpty && dupAllowed(r.name))(
+        s"${r.name} (${r.dupExchanges.size} equal fact-bearing exchanges " +
+          s"executed twice, e.g. ${r.dupExchanges.head})"))
     assert(offenders.isEmpty,
       "allowlisted key regressed into a really-re-executed shuffle — fix " +
         "the plan (Eager the shared frame) or remove the key from " +
         "dupAllowed:\n" + offenders.mkString("\n"))
+  }
+
+  test("the duplicated-subtree facts flag one events aggregate consumed twice" +
+      " without Eager, not with it") {
+    def twice(agg: DataFrame): DataFrame =
+      agg.join(agg.withColumnRenamed("n", "m"), "event_type")
+    val agg = events.groupBy("event_type").agg(count(lit(1)).as("n"))
+    val planted = InventorySweep.record("planted", twice(agg))
+    assert(planted.error.isEmpty, planted.error)
+    assert(planted.dupShuffles.nonEmpty)
+    // exchange reuse collapses the two copies at run time; with it off
+    // both equal fact-bearing exchanges execute
+    assert(planted.dupExchanges.isEmpty)
+    val rerun = withConf("spark.sql.exchange.reuse", "false") {
+      InventorySweep.record("planted", twice(agg))
+    }
+    assert(rerun.error.isEmpty, rerun.error)
+    assert(rerun.dupExchanges.nonEmpty)
+    val clean = InventorySweep.record("clean", twice(Eager(agg)))
+    assert(clean.error.isEmpty, clean.error)
+    assert(clean.dupShuffles.isEmpty && clean.dupExchanges.isEmpty)
   }
 }

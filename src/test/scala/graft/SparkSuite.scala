@@ -20,7 +20,7 @@ trait SparkSuite extends AnyFunSuite with BeforeAndAfterAll {
   /** A fresh directory under the test JVM's temp root. */
   def tempDir(prefix: String): Path = Files.createTempDirectory(SparkSuite.root, prefix)
 
-  val sf0001 = "/root/testdata/sf0.001"
+  val sf0001: String = SparkSuite.sf0001
 
   /** Collects a window-form reference after asserting that the TopKPerKey
     * rewrite left its plan alone, so a test never checks the native
@@ -71,6 +71,8 @@ trait SparkSuite extends AnyFunSuite with BeforeAndAfterAll {
 }
 
 object SparkSuite {
+  val sf0001 = "/root/testdata/sf0.001"
+
   /** One temp root per test JVM, holding the shared warehouse and every
     * spec's [[SparkSuite.tempDir]]s; deleted when the (forked) test JVM
     * exits. */
