@@ -1,270 +1,141 @@
 package graft
 
-import org.apache.spark.sql.SparkSessionExtensions
+import org.apache.spark.sql.{GraftSqlBridge, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
-import graft.functions.DotProduct
+import org.apache.spark.sql.catalyst.expressions.{Cast, Divide, Expression, ExpressionInfo, Multiply, Sqrt}
+import org.apache.spark.sql.types.{Decimal, DoubleType, NumericType}
+import graft.functions._
 
-/** Session-extension entry point: registers graft's native expressions into
-  * the SQL function registry, so `SELECT graft_dot(a, b)` works in
-  * `spark.sql(...)` exactly like a built-in — the standard plugin path for
-  * a cluster-wide deployment:
+/** Session-extension entry point, the standard plugin path for a
+  * cluster-wide deployment. It installs:
+  *
+  *  - every `graft_*` function of [[GraftExtensions.functions]] into the
+  *    SQL function registry, so `SELECT graft_dot(a, b)` works in
+  *    `spark.sql(...)` exactly like a built-in;
+  *  - the window-top-k rewrite ([[graft.plans.TopKRewriteRule]]) and the
+  *    strategy that plans its node ([[graft.plans.TopKStrategy]]);
+  *  - on the active SparkContext's Hadoop conf, the `file:` file systems
+  *    of [[graft.sources.LocalFileSystems]], which start no `chmod` or
+  *    `readlink` child process per file.
+  *
+  * The file systems go in only while `fs.file.impl` and
+  * `fs.AbstractFileSystem.file.impl` still hold Hadoop's defaults, and
+  * Hadoop caches a `FileSystem` per scheme: a caller who created a `file:`
+  * `FileSystem` before the session existed keeps Hadoop's. Such a caller
+  * can set both keys explicitly, as the spark-submit line below does.
   *
   * {{{
-  *   spark-submit --conf spark.sql.extensions=graft.GraftExtensions ...
+  *   spark-submit --conf spark.sql.extensions=graft.GraftExtensions \
+  *     --conf spark.hadoop.fs.file.impl=graft.sources.NioLocalFileSystem \
+  *     --conf spark.hadoop.fs.AbstractFileSystem.file.impl=graft.sources.NioLocalFs ...
   *   // or, in process: graft.GraftSession.builder().getOrCreate()
   * }}}
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
   override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction(GraftExtensions.dotFunction)
-    ext.injectFunction(GraftExtensions.cosineFunction)
-    ext.injectFunction(GraftExtensions.simhashFunction)
-    ext.injectFunction(GraftExtensions.heavyHittersFunction)
-    ext.injectFunction(GraftExtensions.heavyHittersMergeFunction)
-    ext.injectFunction(GraftExtensions.quantileSketchFunction)
-    ext.injectFunction(GraftExtensions.quantileMergeFunction)
-    ext.injectFunction(GraftExtensions.quantileEstimateFunction)
-    ext.injectFunction(GraftExtensions.cmSketchFunction)
-    ext.injectFunction(GraftExtensions.cmMergeFunction)
-    ext.injectFunction(GraftExtensions.cmEstimateFunction)
-    ext.injectFunction(GraftExtensions.gramFunction)
+    GraftExtensions.functions.foreach(f => ext.injectFunction(f.registration))
     // window-top-k → native TopKPerKey rewrite (+ the strategy that plans
     // the rewritten node): users keep the row_number() idiom, the engine
     // substitutes the partial-heap plan
     ext.injectOptimizerRule(_ => graft.plans.TopKRewriteRule)
     ext.injectPlannerStrategy(_ => graft.plans.TopKStrategy)
+    GraftSqlBridge.activeSparkContext
+      .foreach(sc => graft.sources.LocalFileSystems.install(sc.hadoopConfiguration))
   }
 }
 
 object GraftExtensions {
-  /** (name, info, builder) tuple for the `graft_dot` scalar function. */
-  val dotFunction: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("graft_dot"),
-    new ExpressionInfo(
-      classOf[DotProduct].getCanonicalName, null, "graft_dot",
-      "graft_dot(a, b) - dot product of two array<double> columns " +
-        "(codegen'd; sequential fold).",
-      "", "", "", "", "", "", "built-in"),
-    (children: Seq[Expression]) => {
-      require(children.length == 2,
-        s"graft_dot requires exactly 2 arguments, got ${children.length}")
-      DotProduct(children(0), children(1))
-    })
 
-  /** cosine(a,b) = dot/(√na·√nb) as an expression tree over [[DotProduct]]. */
-  val cosineFunction: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("graft_cosine"),
-    new ExpressionInfo(
-      classOf[DotProduct].getCanonicalName, null, "graft_cosine",
-      "graft_cosine(a, b) - cosine similarity of two array<double> columns.",
-      "", "", "", "", "", "", "built-in"),
-    (children: Seq[Expression]) => {
-      import org.apache.spark.sql.catalyst.expressions.{Divide, Multiply, Sqrt}
-      require(children.length == 2,
-        s"graft_cosine requires exactly 2 arguments, got ${children.length}")
-      val (a, b) = (children(0), children(1))
-      Divide(DotProduct(a, b),
-        Multiply(Sqrt(DotProduct(a, a)), Sqrt(DotProduct(b, b))))
-    })
+  /** One registered function: its SQL name, usage text, implementing
+    * class and argument count, and the builder over exactly that many
+    * arguments. */
+  final case class Fn(name: String, usage: String, cls: Class[_], arity: Int)(
+      build: Seq[Expression] => Expression) {
+    def registration: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
+      FunctionIdentifier(name),
+      new ExpressionInfo(cls.getCanonicalName, null, name, usage,
+        "", "", "", "", "", "", "built-in"),
+      (children: Seq[Expression]) => {
+        require(children.length == arity, s"$name requires exactly $arity " +
+          s"argument${if (arity == 1) "" else "s"}, got ${children.length}")
+        build(children)
+      })
+  }
 
-  /** `graft_simhash(hash_col)` aggregate — the analyzer wraps a bare
-    * AggregateFunction from a registry builder itself. */
-  val simhashFunction: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("graft_simhash"),
-    new ExpressionInfo(
-      classOf[graft.functions.SimhashAgg].getCanonicalName, null, "graft_simhash",
-      "graft_simhash(h) - SimHash fingerprint (long) of a group of 31-bit hashes.",
-      "", "", "", "", "", "", "built-in"),
-    (children: Seq[Expression]) => {
-      require(children.length == 1,
-        s"graft_simhash requires exactly 1 argument, got ${children.length}")
-      graft.functions.SimhashAgg(children.head)
-    })
-
-  /** `graft_heavy_hitters(col, capacity)` aggregate; capacity must fold
-    * to an integer literal (it sizes the aggregation state). */
-  val heavyHittersFunction: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("graft_heavy_hitters"),
-    new ExpressionInfo(
-      classOf[graft.functions.MisraGriesAgg].getCanonicalName, null, "graft_heavy_hitters",
-      "graft_heavy_hitters(s, capacity) - Misra-Gries frequent-items summary " +
-        "of a string column: array<struct<term,cnt>> sorted by count desc.",
-      "", "", "", "", "", "", "built-in"),
-    (children: Seq[Expression]) => {
-      require(children.length == 2,
-        s"graft_heavy_hitters requires exactly 2 arguments, got ${children.length}")
-      require(children(1).foldable,
-        "graft_heavy_hitters capacity must be a literal")
-      val cap = children(1).eval() match {
-        case b: Byte => b.toInt
-        case s: Short => s.toInt
-        case i: Int => i
-        case l: Long => l.toInt
-        case other => throw new IllegalArgumentException(
-          s"graft_heavy_hitters capacity must be integral, got $other")
-      }
-      require(cap > 0,
-        s"graft_heavy_hitters capacity must be positive, got $cap")
-      graft.functions.MisraGriesAgg(children.head, cap)
-    })
-
-  /** `graft_heavy_hitters_merge(summary, capacity)` aggregate — rolls up
-    * persisted graft_heavy_hitters summaries (mergeable-summaries rule);
-    * capacity must fold to an integer literal. */
-  val heavyHittersMergeFunction: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("graft_heavy_hitters_merge"),
-    new ExpressionInfo(
-      classOf[graft.functions.MisraGriesMergeAgg].getCanonicalName, null,
-      "graft_heavy_hitters_merge",
-      "graft_heavy_hitters_merge(summary, capacity) - merge persisted " +
-        "Misra-Gries summaries (array<struct<term,cnt>>) into one.",
-      "", "", "", "", "", "", "built-in"),
-    (children: Seq[Expression]) => {
-      require(children.length == 2,
-        s"graft_heavy_hitters_merge requires exactly 2 arguments, got ${children.length}")
-      require(children(1).foldable,
-        "graft_heavy_hitters_merge capacity must be a literal")
-      val cap = children(1).eval() match {
-        case b: Byte => b.toInt
-        case s: Short => s.toInt
-        case i: Int => i
-        case l: Long => l.toInt
-        case other => throw new IllegalArgumentException(
-          s"graft_heavy_hitters_merge capacity must be integral, got $other")
-      }
-      require(cap > 0,
-        s"graft_heavy_hitters_merge capacity must be positive, got $cap")
-      graft.functions.MisraGriesMergeAgg(children.head, cap)
-    })
-
-  /** Shared literal-extraction for registry builders whose argument sizes
-    * or parameterizes aggregation state. */
-  private def litDouble(e: Expression, what: String): Double = {
+  /** The value of literal argument `e`, named `what` in errors, for a
+    * builder whose argument sizes or parameterizes aggregation state: an
+    * integer type as an Int if `integral`, else any number as a Double. */
+  private def literal(e: Expression, what: String, integral: Boolean): Any = {
     require(e.foldable, s"$what must be a literal")
-    e.eval() match {
-      case d: Double => d
-      case f: Float => f.toDouble
-      case de: org.apache.spark.sql.types.Decimal => de.toDouble
-      case i: Int => i.toDouble
-      case l: Long => l.toDouble
-      case other => throw new IllegalArgumentException(
-        s"$what must be numeric, got $other")
+    (e.eval(), integral) match {
+      case (n @ (_: Byte | _: Short | _: Int | _: Long), true) =>
+        n.asInstanceOf[Number].intValue
+      case (n @ (_: Int | _: Long | _: Float | _: Double), false) =>
+        n.asInstanceOf[Number].doubleValue
+      case (d: Decimal, false) => d.toDouble
+      case (other, _) => throw new IllegalArgumentException(
+        s"$what must be ${if (integral) "integral" else "numeric"}, got $other")
     }
   }
 
-  /** `graft_quantile_sketch(v, alpha)` aggregate → binary DDSketch. */
-  val quantileSketchFunction: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("graft_quantile_sketch"),
-    new ExpressionInfo(
-      classOf[graft.functions.QuantileSketchAgg].getCanonicalName, null,
-      "graft_quantile_sketch",
-      "graft_quantile_sketch(v, alpha) - mergeable relative-error quantile " +
-        "sketch (binary) of a double column.",
-      "", "", "", "", "", "", "built-in"),
-    (children: Seq[Expression]) => {
-      require(children.length == 2,
-        s"graft_quantile_sketch requires exactly 2 arguments, got ${children.length}")
-      graft.functions.QuantileSketchAgg(children.head,
-        litDouble(children(1), "graft_quantile_sketch alpha"))
-    })
+  private def litDouble(e: Expression, what: String): Double =
+    literal(e, what, integral = false).asInstanceOf[Double]
 
-  /** `graft_quantile_merge(sk)` aggregate — union stored sketches. */
-  val quantileMergeFunction: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("graft_quantile_merge"),
-    new ExpressionInfo(
-      classOf[graft.functions.QuantileMergeAgg].getCanonicalName, null,
-      "graft_quantile_merge",
-      "graft_quantile_merge(sk) - merge stored quantile sketches (binary).",
-      "", "", "", "", "", "", "built-in"),
-    (children: Seq[Expression]) => {
-      require(children.length == 1,
-        s"graft_quantile_merge requires exactly 1 argument, got ${children.length}")
-      graft.functions.QuantileMergeAgg(children.head)
-    })
+  /** A Misra-Gries capacity: a positive integral literal. */
+  private def capacity(name: String, e: Expression): Int = {
+    val cap = literal(e, s"$name capacity", integral = true).asInstanceOf[Int]
+    require(cap > 0, s"$name capacity must be positive, got $cap")
+    cap
+  }
 
-  /** `graft_quantile_estimate(sk, q)` scalar — read a quantile out. */
-  val quantileEstimateFunction: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("graft_quantile_estimate"),
-    new ExpressionInfo(
-      classOf[graft.functions.QuantileEstimate].getCanonicalName, null,
-      "graft_quantile_estimate",
-      "graft_quantile_estimate(sk, q) - quantile q from a (merged) sketch.",
-      "", "", "", "", "", "", "built-in"),
-    (children: Seq[Expression]) => {
-      require(children.length == 2,
-        s"graft_quantile_estimate requires exactly 2 arguments, got ${children.length}")
+  val functions: Seq[Fn] = Seq(
+    Fn("graft_dot", "graft_dot(a, b) - dot product of two array<double> columns " +
+      "(codegen'd; sequential fold).", classOf[DotProduct], 2)(c => DotProduct(c(0), c(1))),
+    // cosine(a,b) = dot/(√na·√nb) as an expression tree over DotProduct
+    Fn("graft_cosine", "graft_cosine(a, b) - cosine similarity of two " +
+      "array<double> columns.", classOf[DotProduct], 2) { case Seq(a, b) =>
+      Divide(DotProduct(a, b), Multiply(Sqrt(DotProduct(a, a)), Sqrt(DotProduct(b, b))))
+    },
+    // an aggregate: the analyzer wraps a bare AggregateFunction itself
+    Fn("graft_simhash", "graft_simhash(h) - SimHash fingerprint (long) of a " +
+      "group of 31-bit hashes.", classOf[SimhashAgg], 1)(c => SimhashAgg(c(0))),
+    Fn("graft_heavy_hitters", "graft_heavy_hitters(s, capacity) - Misra-Gries " +
+      "frequent-items summary of a string column: array<struct<term,cnt>> " +
+      "sorted by count desc.", classOf[SummaryAgg[_]], 2)(c =>
+      SummaryAgg(c(0), MisraGries(capacity("graft_heavy_hitters", c(1))), stored = false)),
+    Fn("graft_heavy_hitters_merge", "graft_heavy_hitters_merge(summary, capacity) - " +
+      "merge persisted Misra-Gries summaries (array<struct<term,cnt>>) into one.",
+      classOf[SummaryAgg[_]], 2)(c =>
+      SummaryAgg(c(0), MisraGries(capacity("graft_heavy_hitters_merge", c(1))), stored = true)),
+    Fn("graft_quantile_sketch", "graft_quantile_sketch(v, alpha) - mergeable " +
+      "relative-error quantile sketch (binary) of a double column.",
+      classOf[SummaryAgg[_]], 2)(c => SummaryAgg(c(0),
+      DDSketch(Some(litDouble(c(1), "graft_quantile_sketch alpha"))), stored = false)),
+    Fn("graft_quantile_merge", "graft_quantile_merge(sk) - merge stored quantile " +
+      "sketches (binary).", classOf[SummaryAgg[_]], 1)(c =>
+      SummaryAgg(c(0), DDSketch(None), stored = true)),
+    Fn("graft_quantile_estimate", "graft_quantile_estimate(sk, q) - quantile q " +
+      "from a (merged) sketch.", classOf[QuantileEstimate], 2) { case Seq(sk, q) =>
       // `0.5` parses as DECIMAL(1,1) and QuantileEstimate demands exact
       // DoubleType; coerce numeric q so callers don't need the 0.5D suffix
-      import org.apache.spark.sql.catalyst.expressions.Cast
-      import org.apache.spark.sql.types.{DoubleType, NumericType}
-      val q = children(1).dataType match {
-        case DoubleType => children(1)
-        case _: NumericType => Cast(children(1), DoubleType)
-        case _ => children(1) // let checkInputDataTypes report it
-      }
-      graft.functions.QuantileEstimate(children(0), q)
-    })
-
-  /** `graft_cm_sketch(key)` aggregate → binary Count-Min sketch. */
-  val cmSketchFunction: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("graft_cm_sketch"),
-    new ExpressionInfo(
-      classOf[graft.functions.CountMinSketchAgg].getCanonicalName, null,
-      "graft_cm_sketch",
-      "graft_cm_sketch(key) - mergeable Count-Min frequency sketch (binary) " +
-        "of a string column.",
-      "", "", "", "", "", "", "built-in"),
-    (children: Seq[Expression]) => {
-      require(children.length == 1,
-        s"graft_cm_sketch requires exactly 1 argument, got ${children.length}")
-      graft.functions.CountMinSketchAgg(children.head)
-    })
-
-  /** `graft_cm_merge(sk)` aggregate — union stored sketches. */
-  val cmMergeFunction: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("graft_cm_merge"),
-    new ExpressionInfo(
-      classOf[graft.functions.CountMinMergeAgg].getCanonicalName, null,
-      "graft_cm_merge",
-      "graft_cm_merge(sk) - merge stored Count-Min sketches (binary).",
-      "", "", "", "", "", "", "built-in"),
-    (children: Seq[Expression]) => {
-      require(children.length == 1,
-        s"graft_cm_merge requires exactly 1 argument, got ${children.length}")
-      graft.functions.CountMinMergeAgg(children.head)
-    })
-
-  /** `graft_cm_estimate(sk, key)` scalar — point-frequency lookup. */
-  val cmEstimateFunction: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("graft_cm_estimate"),
-    new ExpressionInfo(
-      classOf[graft.functions.CountMinEstimate].getCanonicalName, null,
-      "graft_cm_estimate",
-      "graft_cm_estimate(sk, key) - estimated count of key in a (merged) " +
-        "sketch; never underestimates.",
-      "", "", "", "", "", "", "built-in"),
-    (children: Seq[Expression]) => {
-      require(children.length == 2,
-        s"graft_cm_estimate requires exactly 2 arguments, got ${children.length}")
-      graft.functions.CountMinEstimate(children(0), children(1))
-    })
-
-  /** `graft_gram(v, d)` aggregate — one-pass second-moment matrix of an
-    * array<double> column; d must be a literal (it sizes the state). */
-  val gramFunction: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("graft_gram"),
-    new ExpressionInfo(
-      classOf[graft.functions.GramMatrixAgg].getCanonicalName, null,
-      "graft_gram",
-      "graft_gram(v, d) - mergeable count/sums/upper-triangle-gram summary " +
-        "of a d-dim array<double> column (the covariance/PCA input).",
-      "", "", "", "", "", "", "built-in"),
-    (children: Seq[Expression]) => {
-      require(children.length == 2,
-        s"graft_gram requires exactly 2 arguments, got ${children.length}")
-      val dim = math.round(litDouble(children(1), "graft_gram dim")).toInt
-      graft.functions.GramMatrixAgg(children.head, dim)
-    })
+      QuantileEstimate(sk, q.dataType match {
+        case DoubleType => q
+        case _: NumericType => Cast(q, DoubleType)
+        case _ => q // let checkInputDataTypes report it
+      })
+    },
+    Fn("graft_cm_sketch", "graft_cm_sketch(key) - mergeable Count-Min frequency " +
+      "sketch (binary) of a string column.", classOf[SummaryAgg[_]], 1)(c =>
+      SummaryAgg(c(0), CountMin, stored = false)),
+    Fn("graft_cm_merge", "graft_cm_merge(sk) - merge stored Count-Min sketches " +
+      "(binary).", classOf[SummaryAgg[_]], 1)(c => SummaryAgg(c(0), CountMin, stored = true)),
+    Fn("graft_cm_estimate", "graft_cm_estimate(sk, key) - estimated count of key " +
+      "in a (merged) sketch; never underestimates.", classOf[CountMinEstimate], 2)(c =>
+      CountMinEstimate(c(0), c(1))),
+    // d sizes the aggregation state
+    Fn("graft_gram", "graft_gram(v, d) - mergeable count/sums/upper-triangle-gram " +
+      "summary of a d-dim array<double> column (the covariance/PCA input).",
+      classOf[GramMatrixAgg], 2)(c =>
+      GramMatrixAgg(c(0), math.round(litDouble(c(1), "graft_gram dim")).toInt)))
 }

@@ -23,7 +23,8 @@ object GraftSession {
 
   /** `local[cpus]` with one shuffle partition per core (`cpus` is
     * `SPARK_GRAFT_CPUS`, else the JVM's available processors), the graft
-    * extensions (TopKPerKey rewrite + graft_* functions), the sized codegen
+    * extensions (graft_* functions, the TopKPerKey rewrite and the `file:`
+    * file systems; [[GraftExtensions]] says what each does), the sized codegen
     * cache, UTC session time (NTZ wall values in `events` must not shift),
     * nanosecond parquet timestamps read as longs (see
     * [[graft.sources.Tables.events]]), no UI and WARN logging. */

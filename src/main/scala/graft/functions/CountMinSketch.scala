@@ -3,10 +3,8 @@ package graft.functions
 import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, DataOutputStream}
 import scala.util.hashing.MurmurHash3
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -33,7 +31,7 @@ import org.apache.spark.unsafe.types.UTF8String
   *    and associative, so (unlike a sampled or pruned summary) the merged
   *    sketch is BIT-identical however the input was partitioned, the
   *    repo's determinism house rule.
-  *  - One pass, partial-aggregated: TypedImperativeAggregate lowers to
+  *  - One pass, partial-aggregated: [[SummaryAgg]] lowers to
   *    ObjectHashAggregate with map-side partials — only 64 KB sketches
   *    shuffle, never the token stream, which is what makes a vocabulary
   *    census of a 100 TB corpus a single scan plus a constant-size merge.
@@ -98,106 +96,27 @@ object CMSketch {
   }
 }
 
-/** `cm_sketch(key)` → binary sketch (store it; merge later). */
-case class CountMinSketchAgg(
-    child: Expression,
-    override val mutableAggBufferOffset: Int = 0,
-    override val inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[CMSketch.Buf] {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"graft_cm_sketch requires a STRING column, got ${child.dataType.sql}")
-
-  override def createAggregationBuffer(): CMSketch.Buf = new CMSketch.Buf
-  override def update(buf: CMSketch.Buf, input: InternalRow): CMSketch.Buf = {
-    val v = child.eval(input)
-    if (v != null) buf.insert(v.asInstanceOf[UTF8String])
-    buf
-  }
-  override def merge(a: CMSketch.Buf, b: CMSketch.Buf): CMSketch.Buf =
-    a.merge(b)
-  override def eval(buf: CMSketch.Buf): Any = CMSketch.serialize(buf)
-  override def serialize(buf: CMSketch.Buf): Array[Byte] =
-    CMSketch.serialize(buf)
-  override def deserialize(bytes: Array[Byte]): CMSketch.Buf =
-    CMSketch.deserialize(bytes)
-
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = false
-  override def children: Seq[Expression] = Seq(child)
-  override def prettyName: String = "graft_cm_sketch"
-  override def withNewMutableAggBufferOffset(off: Int): CountMinSketchAgg =
-    copy(mutableAggBufferOffset = off)
-  override def withNewInputAggBufferOffset(off: Int): CountMinSketchAgg =
-    copy(inputAggBufferOffset = off)
-  override protected def withNewChildrenInternal(
-      newChildren: IndexedSeq[Expression]): CountMinSketchAgg =
-    copy(child = newChildren.head)
+/** The [[CMSketch]] family: `graft_cm_sketch(key)` builds a binary
+  * sketch (store it; merge later), `graft_cm_merge(sketch)` unions stored
+  * sketches (elementwise counter addition: order-independent,
+  * bit-deterministic) and returns null over no sketch. */
+case object CountMin extends BinarySummary[CMSketch.Buf] {
+  def buildName: String = "graft_cm_sketch"
+  def mergeName: String = "graft_cm_merge"
+  def inputType: DataType = StringType
+  def empty: CMSketch.Buf = new CMSketch.Buf
+  def add(b: CMSketch.Buf, v: Any): Unit = b.insert(v.asInstanceOf[UTF8String])
+  def merge(a: CMSketch.Buf, b: CMSketch.Buf): CMSketch.Buf = a.merge(b)
+  def toBytes(b: CMSketch.Buf): Array[Byte] = CMSketch.serialize(b)
+  def fromBytes(bytes: Array[Byte]): CMSketch.Buf = CMSketch.deserialize(bytes)
 }
 
 object CountMinSketchAgg {
-  import org.apache.spark.sql.GraftSqlBridge
-  def apply(c: Column): Column =
-    GraftSqlBridge.column(
-      CountMinSketchAgg(GraftSqlBridge.expression(c)).toAggregateExpression())
-}
-
-/** `cm_merge(sketch)` — union previously-stored sketches (elementwise
-  * counter addition: order-independent, bit-deterministic). */
-case class CountMinMergeAgg(
-    child: Expression,
-    override val mutableAggBufferOffset: Int = 0,
-    override val inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[Option[CMSketch.Buf]] {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == BinaryType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"graft_cm_merge requires a BINARY sketch column, got ${child.dataType.sql}")
-
-  override def createAggregationBuffer(): Option[CMSketch.Buf] = None
-  override def update(buf: Option[CMSketch.Buf],
-      input: InternalRow): Option[CMSketch.Buf] = {
-    val v = child.eval(input)
-    if (v == null) buf
-    else {
-      val sk = CMSketch.deserialize(v.asInstanceOf[Array[Byte]])
-      buf match { case Some(b) => Some(b.merge(sk)); case None => Some(sk) }
-    }
-  }
-  override def merge(a: Option[CMSketch.Buf],
-      b: Option[CMSketch.Buf]): Option[CMSketch.Buf] = (a, b) match {
-    case (Some(x), Some(y)) => Some(x.merge(y))
-    case (x, None) => x
-    case (None, y) => y
-  }
-  override def eval(buf: Option[CMSketch.Buf]): Any =
-    buf.map(CMSketch.serialize).orNull
-  override def serialize(buf: Option[CMSketch.Buf]): Array[Byte] =
-    buf.map(CMSketch.serialize).getOrElse(Array.emptyByteArray)
-  override def deserialize(bytes: Array[Byte]): Option[CMSketch.Buf] =
-    if (bytes.isEmpty) None else Some(CMSketch.deserialize(bytes))
-
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = true
-  override def children: Seq[Expression] = Seq(child)
-  override def prettyName: String = "graft_cm_merge"
-  override def withNewMutableAggBufferOffset(off: Int): CountMinMergeAgg =
-    copy(mutableAggBufferOffset = off)
-  override def withNewInputAggBufferOffset(off: Int): CountMinMergeAgg =
-    copy(inputAggBufferOffset = off)
-  override protected def withNewChildrenInternal(
-      newChildren: IndexedSeq[Expression]): CountMinMergeAgg =
-    copy(child = newChildren.head)
+  def apply(c: Column): Column = SummaryAgg.column(c, CountMin, stored = false)
 }
 
 object CountMinMergeAgg {
-  import org.apache.spark.sql.GraftSqlBridge
-  def apply(c: Column): Column =
-    GraftSqlBridge.column(
-      CountMinMergeAgg(GraftSqlBridge.expression(c)).toAggregateExpression())
+  def apply(c: Column): Column = SummaryAgg.column(c, CountMin, stored = true)
 }
 
 /** `cm_estimate(sketch, key)` — point-frequency lookup in a (merged)

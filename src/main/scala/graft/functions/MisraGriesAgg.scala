@@ -3,20 +3,17 @@ package graft.functions
 import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, DataOutputStream}
 import scala.collection.mutable
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow}
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.catalyst.util.GenericArrayData
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Misra-Gries heavy-hitters summary: the frequent items of a string
   * column in ONE pass with a FIXED `capacity`-sized state, as a
-  * TypedImperativeAggregate so partial aggregation applies — each task
-  * summarizes its partition map-side and only `capacity`-sized summaries
-  * shuffle, the property that makes "top tokens of a 100 TB corpus"
-  * feasible without grouping every (token, 1) pair.
+  * [[Summary]] so partial aggregation applies — each task summarizes its
+  * partition map-side and only `capacity`-sized summaries shuffle, the
+  * property that makes "top tokens of a 100 TB corpus" feasible without
+  * grouping every (token, 1) pair.
   *
   * Guarantees (the classic bounds):
   *   - counts are underestimates by at most N/(capacity+1) (N = input
@@ -29,64 +26,66 @@ import org.apache.spark.unsafe.types.UTF8String
   *     At 100 TB the same operator runs with capacity ≪ vocabulary and
   *     returns the guaranteed-superset sketch instead.
   *
-  * update: counted item +1; new item inserted while space remains;
+  * add: counted item +1; new item inserted while space remains;
   * otherwise EVERY counter decrements by 1 (zeros evicted) — the
   * pigeonhole step that caps undercounting. merge: counters add, then if
   * over capacity the (capacity+1)-largest count is subtracted from all
-  * (the standard merge that preserves the error bound; a plain top-k
-  * truncation would not). eval: (term, cnt) structs sorted by count
-  * descending then term — deterministic output for a deterministic input.
+  * (the published mergeable-summaries rule of Agarwal et al., which
+  * preserves the error bound; a plain top-k truncation would not). The
+  * stored form is `array<struct<term, cnt>>` sorted by count descending
+  * then term — deterministic output for a deterministic input. Its merge,
+  * `graft_heavy_hitters_merge`, rolls persisted per-shard summaries up
+  * (per-day → per-month → global) without re-reading the corpus, and
+  * returns `[]` over none.
   */
-case class MisraGriesAgg(
-    child: Expression,
-    capacity: Int,
-    override val mutableAggBufferOffset: Int = 0,
-    override val inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[mutable.HashMap[String, Long]] {
+final case class MisraGries(capacity: Int)
+    extends Summary[mutable.HashMap[String, Long]] {
 
   // capacity = 0 would silently return an empty summary for every group
-  // (update can never insert) — a wrong answer, not an error; reject early
+  // (add can never insert) — a wrong answer, not an error; reject early
   require(capacity > 0, s"capacity must be positive, got $capacity")
 
-  // analysis-time type check: a non-string column must fail in the
-  // analyzer (this function is SQL-registered — any query can reach it),
-  // not as an executor-side ClassCastException mid-job
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"graft_heavy_hitters requires a STRING column, got ${child.dataType.sql}")
+  def buildName: String = "graft_heavy_hitters"
+  def mergeName: String = "graft_heavy_hitters_merge"
+  def inputType: DataType = StringType
+  def empty: mutable.HashMap[String, Long] = mutable.HashMap.empty
+  override def mergesFromEmpty: Boolean = true
 
-  override def createAggregationBuffer(): mutable.HashMap[String, Long] =
-    mutable.HashMap.empty
+  def add(buf: mutable.HashMap[String, Long], v: Any): Unit = {
+    val s = v.asInstanceOf[UTF8String].toString
+    buf.get(s) match {
+      case Some(c) => buf(s) = c + 1
+      case None if buf.size < capacity => buf(s) = 1L
+      case None =>
+        // decrement-all eviction; O(capacity), amortized O(1) per input
+        buf.keysIterator.toArray.foreach { k =>
+          val n = buf(k) - 1
+          if (n == 0) buf.remove(k) else buf(k) = n
+        }
+    }
+  }
 
-  override def update(buf: mutable.HashMap[String, Long],
-      input: InternalRow): mutable.HashMap[String, Long] = {
-    val v = child.eval(input)
-    if (v != null) {
-      val s = v.asInstanceOf[UTF8String].toString
-      buf.get(s) match {
-        case Some(c) => buf(s) = c + 1
-        case None if buf.size < capacity => buf(s) = 1L
-        case None =>
-          // decrement-all eviction; O(capacity), amortized O(1) per input
-          buf.keysIterator.toArray.foreach { k =>
-            val n = buf(k) - 1
-            if (n == 0) buf.remove(k) else buf(k) = n
-          }
-      }
+  def load(stored: Any): mutable.HashMap[String, Long] = {
+    val arr = stored.asInstanceOf[ArrayData]
+    val buf = mutable.HashMap.empty[String, Long]
+    var i = 0
+    while (i < arr.numElements()) {
+      val row = arr.getStruct(i, 2)
+      val term = row.getUTF8String(0).toString
+      buf(term) = buf.getOrElse(term, 0L) + row.getLong(1)
+      i += 1
     }
     buf
   }
 
-  override def merge(a: mutable.HashMap[String, Long],
+  def merge(a: mutable.HashMap[String, Long],
       b: mutable.HashMap[String, Long]): mutable.HashMap[String, Long] = {
     b.foreach { case (k, c) => a(k) = a.getOrElse(k, 0L) + c }
-    // subtract the (capacity+1)-th largest count from every counter
     MisraGriesAgg.recap(a, capacity)
     a
   }
 
-  override def eval(buf: mutable.HashMap[String, Long]): Any = {
+  def store(buf: mutable.HashMap[String, Long]): Any = {
     val rows: Array[Any] = buf.toArray
       .sortBy { case (t, c) => (-c, t) }
       .map { case (t, c) =>
@@ -94,136 +93,39 @@ case class MisraGriesAgg(
       }
     new GenericArrayData(rows)
   }
+
+  def storedType: DataType = ArrayType(
+    StructType(Seq(StructField("term", StringType, nullable = false),
+      StructField("cnt", LongType, nullable = false))),
+    containsNull = false)
+
+  override def storedOk(dt: DataType): Boolean = dt match {
+    case ArrayType(StructType(Array(
+        StructField(_, StringType, _, _), StructField(_, LongType, _, _))), _) => true
+    case _ => false
+  }
+  def storedWanted: String =
+    "array<struct<string,bigint>> (a graft_heavy_hitters summary)"
 
   // length-prefixed raw UTF-8, NOT writeUTF: modified-UTF-8 caps a string
   // at 65535 bytes and a whitespace-free document (minified JSON, base64)
   // tokenizes to one giant term — the summary must survive it
-  override def serialize(buf: mutable.HashMap[String, Long]): Array[Byte] =
+  def toBytes(buf: mutable.HashMap[String, Long]): Array[Byte] =
     MisraGriesAgg.serializeBuf(buf)
-
-  override def deserialize(bytes: Array[Byte]): mutable.HashMap[String, Long] =
+  def fromBytes(bytes: Array[Byte]): mutable.HashMap[String, Long] =
     MisraGriesAgg.deserializeBuf(bytes)
-
-  override def dataType: DataType = ArrayType(
-    StructType(Seq(StructField("term", StringType, nullable = false),
-      StructField("cnt", LongType, nullable = false))),
-    containsNull = false)
-  override def nullable: Boolean = false
-  override def children: Seq[Expression] = Seq(child)
-  override def prettyName: String = "graft_heavy_hitters"
-
-  override def withNewMutableAggBufferOffset(off: Int): MisraGriesAgg =
-    copy(mutableAggBufferOffset = off)
-  override def withNewInputAggBufferOffset(off: Int): MisraGriesAgg =
-    copy(inputAggBufferOffset = off)
-  override protected def withNewChildrenInternal(
-      newChildren: IndexedSeq[Expression]): MisraGriesAgg =
-    copy(child = newChildren.head)
-}
-
-/** Rollup of PERSISTED Misra-Gries summaries (the `array<struct<term,
-  * cnt>>` rows [[MisraGriesAgg]] emits): the store-merge member of the
-  * sketch family, completing the symmetry with `approx_distinct_merge` /
-  * `percentile_store_merge` / Count-Min — per-shard summaries are written
-  * once by the ingest job and ANY rollup (per-day → per-month → global)
-  * is pure summary merging, the raw corpus never re-read.
-  *
-  * Merging uses the published mergeable-summaries rule (Agarwal et al.):
-  * counters add, then the (capacity+1)-largest count is subtracted from
-  * all — NOT a plain top-k truncation, which would break the N/(k+1)
-  * error bound. Same buffer, spill format and deterministic eval as the
-  * raw-input aggregate. */
-case class MisraGriesMergeAgg(
-    child: Expression,
-    capacity: Int,
-    override val mutableAggBufferOffset: Int = 0,
-    override val inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[mutable.HashMap[String, Long]] {
-
-  require(capacity > 0, s"capacity must be positive, got $capacity")
-
-  private val summaryType: DataType = ArrayType(
-    StructType(Seq(StructField("term", StringType, nullable = false),
-      StructField("cnt", LongType, nullable = false))),
-    containsNull = false)
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StructType(Array(
-        StructField(_, StringType, _, _), StructField(_, LongType, _, _))), _) =>
-      TypeCheckResult.TypeCheckSuccess
-    case dt => TypeCheckResult.TypeCheckFailure(
-      s"graft_heavy_hitters_merge requires array<struct<string,bigint>> " +
-        s"(a graft_heavy_hitters summary), got ${dt.sql}")
-  }
-
-  override def createAggregationBuffer(): mutable.HashMap[String, Long] =
-    mutable.HashMap.empty
-
-  override def update(buf: mutable.HashMap[String, Long],
-      input: InternalRow): mutable.HashMap[String, Long] = {
-    val v = child.eval(input)
-    if (v != null) {
-      val arr = v.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
-      var i = 0
-      while (i < arr.numElements()) {
-        val row = arr.getStruct(i, 2)
-        val term = row.getUTF8String(0).toString
-        buf(term) = buf.getOrElse(term, 0L) + row.getLong(1)
-        i += 1
-      }
-      MisraGriesAgg.recap(buf, capacity)
-    }
-    buf
-  }
-
-  override def merge(a: mutable.HashMap[String, Long],
-      b: mutable.HashMap[String, Long]): mutable.HashMap[String, Long] = {
-    b.foreach { case (k, c) => a(k) = a.getOrElse(k, 0L) + c }
-    MisraGriesAgg.recap(a, capacity)
-    a
-  }
-
-  override def eval(buf: mutable.HashMap[String, Long]): Any = {
-    val rows: Array[Any] = buf.toArray
-      .sortBy { case (t, c) => (-c, t) }
-      .map { case (t, c) =>
-        new GenericInternalRow(Array[Any](UTF8String.fromString(t), c))
-      }
-    new GenericArrayData(rows)
-  }
-
-  override def serialize(buf: mutable.HashMap[String, Long]): Array[Byte] =
-    MisraGriesAgg.serializeBuf(buf)
-  override def deserialize(bytes: Array[Byte]): mutable.HashMap[String, Long] =
-    MisraGriesAgg.deserializeBuf(bytes)
-
-  override def dataType: DataType = summaryType
-  override def nullable: Boolean = false
-  override def children: Seq[Expression] = Seq(child)
-  override def prettyName: String = "graft_heavy_hitters_merge"
-
-  override def withNewMutableAggBufferOffset(off: Int): MisraGriesMergeAgg =
-    copy(mutableAggBufferOffset = off)
-  override def withNewInputAggBufferOffset(off: Int): MisraGriesMergeAgg =
-    copy(inputAggBufferOffset = off)
-  override protected def withNewChildrenInternal(
-      newChildren: IndexedSeq[Expression]): MisraGriesMergeAgg =
-    copy(child = newChildren.head)
 }
 
 object MisraGriesMergeAgg {
-  import org.apache.spark.sql.GraftSqlBridge
   def apply(c: Column, capacity: Int): Column =
-    GraftSqlBridge.column(
-      MisraGriesMergeAgg(GraftSqlBridge.expression(c), capacity)
-        .toAggregateExpression())
+    SummaryAgg.column(c, MisraGries(capacity), stored = true)
 }
 
 object MisraGriesAgg {
 
-  /** The mergeable-summaries capacity reduction, shared by both
-    * aggregates: if over capacity, subtract the (capacity+1)-th largest
-    * count from every counter and drop the non-positive. */
+  /** The mergeable-summaries capacity reduction of [[MisraGries.merge]]:
+    * if over capacity, subtract the (capacity+1)-th largest count from
+    * every counter and drop the non-positive. */
   private[functions] def recap(a: mutable.HashMap[String, Long],
       capacity: Int): Unit =
     if (a.size > capacity) {
@@ -259,11 +161,7 @@ object MisraGriesAgg {
     buf
   }
 
-  import org.apache.spark.sql.GraftSqlBridge
-
   /** Column-API entry point: `heavy_hitters(col, capacity)` aggregate. */
   def apply(c: Column, capacity: Int): Column =
-    GraftSqlBridge.column(
-      MisraGriesAgg(GraftSqlBridge.expression(c), capacity)
-        .toAggregateExpression())
+    SummaryAgg.column(c, MisraGries(capacity), stored = false)
 }

@@ -3,10 +3,8 @@ package graft.functions
 import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, DataOutputStream}
 import scala.collection.mutable
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.types._
 
@@ -31,7 +29,7 @@ import org.apache.spark.sql.types._
   *  - Bounded state: bucket count is capped; on overflow the
   *    lowest-magnitude buckets collapse together (the paper's collapsing
   *    variant), degrading accuracy only at the distribution's low tail.
-  *  - One pass, partial-aggregated: TypedImperativeAggregate lowers to
+  *  - One pass, partial-aggregated: [[SummaryAgg]] lowers to
   *    ObjectHashAggregate with map-side partials — only sketches shuffle,
   *    never values, the property that makes per-group percentiles of a
   *    100 TB fact table a single scan.
@@ -130,108 +128,33 @@ object QSketch {
   }
 }
 
-/** `quantile_sketch(value, α)` → binary sketch (store it; merge later). */
-case class QuantileSketchAgg(
-    child: Expression,
-    alpha: Double,
-    override val mutableAggBufferOffset: Int = 0,
-    override val inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[QSketch.Buf] {
+/** The [[QSketch]] family: `graft_quantile_sketch(value, α)` builds a
+  * binary sketch (store it; merge later), `graft_quantile_merge(sketch)`
+  * unions stored sketches (the hll_union_agg twin: pure bucket addition,
+  * order-independent). `alpha` is the build's relative accuracy; a merge
+  * has none (`None`): it takes alpha from its input, refuses to mix two,
+  * and returns null over no sketch. */
+final case class DDSketch(alpha: Option[Double]) extends BinarySummary[QSketch.Buf] {
+  alpha.foreach(a => require(a > 0 && a < 1, s"alpha must be in (0,1), got $a"))
 
-  require(alpha > 0 && alpha < 1, s"alpha must be in (0,1), got $alpha")
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == DoubleType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"graft_quantile_sketch requires a DOUBLE column, got ${child.dataType.sql}")
-
-  override def createAggregationBuffer(): QSketch.Buf = new QSketch.Buf(alpha)
-  override def update(buf: QSketch.Buf, input: InternalRow): QSketch.Buf = {
-    val v = child.eval(input)
-    if (v != null) buf.insert(v.asInstanceOf[Double])
-    buf
-  }
-  override def merge(a: QSketch.Buf, b: QSketch.Buf): QSketch.Buf = a.merge(b)
-  override def eval(buf: QSketch.Buf): Any = QSketch.serialize(buf)
-  override def serialize(buf: QSketch.Buf): Array[Byte] = QSketch.serialize(buf)
-  override def deserialize(bytes: Array[Byte]): QSketch.Buf =
-    QSketch.deserialize(bytes)
-
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = false
-  override def children: Seq[Expression] = Seq(child)
-  override def prettyName: String = "graft_quantile_sketch"
-  override def withNewMutableAggBufferOffset(off: Int): QuantileSketchAgg =
-    copy(mutableAggBufferOffset = off)
-  override def withNewInputAggBufferOffset(off: Int): QuantileSketchAgg =
-    copy(inputAggBufferOffset = off)
-  override protected def withNewChildrenInternal(
-      newChildren: IndexedSeq[Expression]): QuantileSketchAgg =
-    copy(child = newChildren.head)
+  def buildName: String = "graft_quantile_sketch"
+  def mergeName: String = "graft_quantile_merge"
+  def inputType: DataType = DoubleType
+  // only a build starts from an empty sketch, and a build has alpha
+  def empty: QSketch.Buf = new QSketch.Buf(alpha.get)
+  def add(b: QSketch.Buf, v: Any): Unit = b.insert(v.asInstanceOf[Double])
+  def merge(a: QSketch.Buf, b: QSketch.Buf): QSketch.Buf = a.merge(b)
+  def toBytes(b: QSketch.Buf): Array[Byte] = QSketch.serialize(b)
+  def fromBytes(bytes: Array[Byte]): QSketch.Buf = QSketch.deserialize(bytes)
 }
 
 object QuantileSketchAgg {
-  import org.apache.spark.sql.GraftSqlBridge
   def apply(c: Column, alpha: Double): Column =
-    GraftSqlBridge.column(
-      QuantileSketchAgg(GraftSqlBridge.expression(c), alpha)
-        .toAggregateExpression())
-}
-
-/** `quantile_merge(sketch)` — union previously-stored sketches (the
-  * hll_union_agg twin). Pure bucket addition: order-independent. */
-case class QuantileMergeAgg(
-    child: Expression,
-    override val mutableAggBufferOffset: Int = 0,
-    override val inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[Option[QSketch.Buf]] {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == BinaryType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"graft_quantile_merge requires a BINARY sketch column, got ${child.dataType.sql}")
-
-  override def createAggregationBuffer(): Option[QSketch.Buf] = None
-  override def update(buf: Option[QSketch.Buf],
-      input: InternalRow): Option[QSketch.Buf] = {
-    val v = child.eval(input)
-    if (v == null) buf
-    else {
-      val sk = QSketch.deserialize(v.asInstanceOf[Array[Byte]])
-      buf match { case Some(b) => Some(b.merge(sk)); case None => Some(sk) }
-    }
-  }
-  override def merge(a: Option[QSketch.Buf],
-      b: Option[QSketch.Buf]): Option[QSketch.Buf] = (a, b) match {
-    case (Some(x), Some(y)) => Some(x.merge(y))
-    case (x, None) => x
-    case (None, y) => y
-  }
-  override def eval(buf: Option[QSketch.Buf]): Any =
-    buf.map(QSketch.serialize).orNull
-  override def serialize(buf: Option[QSketch.Buf]): Array[Byte] =
-    buf.map(QSketch.serialize).getOrElse(Array.emptyByteArray)
-  override def deserialize(bytes: Array[Byte]): Option[QSketch.Buf] =
-    if (bytes.isEmpty) None else Some(QSketch.deserialize(bytes))
-
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = true
-  override def children: Seq[Expression] = Seq(child)
-  override def prettyName: String = "graft_quantile_merge"
-  override def withNewMutableAggBufferOffset(off: Int): QuantileMergeAgg =
-    copy(mutableAggBufferOffset = off)
-  override def withNewInputAggBufferOffset(off: Int): QuantileMergeAgg =
-    copy(inputAggBufferOffset = off)
-  override protected def withNewChildrenInternal(
-      newChildren: IndexedSeq[Expression]): QuantileMergeAgg =
-    copy(child = newChildren.head)
+    SummaryAgg.column(c, DDSketch(Some(alpha)), stored = false)
 }
 
 object QuantileMergeAgg {
-  import org.apache.spark.sql.GraftSqlBridge
-  def apply(c: Column): Column =
-    GraftSqlBridge.column(
-      QuantileMergeAgg(GraftSqlBridge.expression(c)).toAggregateExpression())
+  def apply(c: Column): Column = SummaryAgg.column(c, DDSketch(None), stored = true)
 }
 
 /** `quantile_estimate(sketch, q)` — read a quantile out of a (merged)

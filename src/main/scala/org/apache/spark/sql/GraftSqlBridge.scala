@@ -1,14 +1,18 @@
 package org.apache.spark.sql
 
+import org.apache.spark.SparkContext
 import org.apache.spark.sql.catalyst.expressions.Expression
 
 /** Minimal bridge into `private[sql]` Column↔Expression plumbing, the
   * established pattern for libraries contributing custom Catalyst
-  * expressions (cf. the public Qbeast/Spark-extension projects). Nothing
-  * else from the private surface is touched. */
+  * expressions (cf. the public Qbeast/Spark-extension projects), plus the
+  * few private members listed here. */
 object GraftSqlBridge {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
   def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
+
+  /** The running SparkContext, if any; never starts one. */
+  def activeSparkContext: Option[SparkContext] = SparkContext.getActive
 
   def logicalPlan(df: DataFrame): catalyst.plans.logical.LogicalPlan =
     df.queryExecution.analyzed

@@ -1,6 +1,8 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{BinaryType, StringType}
+import org.apache.spark.unsafe.types.UTF8String
 import graft.functions.{CMSketch, CountMinEstimate, CountMinMergeAgg, CountMinSketchAgg}
 
 /** Count-Min sketch invariants: the never-underestimate guarantee, the
@@ -84,5 +86,37 @@ class CountMinSketchSpec extends SparkSuite {
     }
     // rows arrive in exact-count order (desc, term tiebreak)
     assert(rows.map(r => (-r._2, r._1)).sorted === rows.map(r => (-r._2, r._1)).toSeq)
+  }
+
+  test("no input and all-null groups: an empty sketch from a build, null" +
+      " from a merge; nullability; the buffer survives its spill bytes") {
+    val emptySketch = CMSketch.serialize(new CMSketch.Buf)
+    val none = Seq.empty[Option[String]].toDF("t")
+    val nulls = Seq[(Int, Option[String])]((1, None), (1, None)).toDF("g", "t")
+    val built = none.agg(CountMinSketchAgg($"t").as("sk"))
+    assert(!built.schema("sk").nullable)
+    assert(built.as[Array[Byte]].head() === emptySketch)
+    assert(nulls.groupBy($"g").agg(CountMinSketchAgg($"t").as("sk"))
+      .select($"sk").as[Array[Byte]].head() === emptySketch)
+
+    val noSketch = Seq.empty[Option[Array[Byte]]].toDF("sk")
+    val nullSketches = Seq[(Int, Option[Array[Byte]])]((1, None), (1, None))
+      .toDF("g", "sk")
+    val merged = noSketch.agg(CountMinMergeAgg($"sk").as("m"))
+    assert(merged.schema("m").nullable)
+    assert(merged.head().isNullAt(0))
+    assert(nullSketches.groupBy($"g").agg(CountMinMergeAgg($"sk").as("m"))
+      .select($"m").head().isNullAt(0))
+
+    val (sk, skBack) = AggBuffer.roundTrip(CountMinSketchAgg($"t"), StringType,
+      Seq("a", null, "b", "a").map(s => if (s == null) null else UTF8String.fromString(s)))
+    assert(sk === skBack)
+    val (m, mBack) = AggBuffer.roundTrip(CountMinMergeAgg($"sk"), BinaryType,
+      Seq(null, sk, emptySketch, sk))
+    assert(m === mBack)
+    val msk = CMSketch.deserialize(m.asInstanceOf[Array[Byte]])
+    assert(msk.total === 6L && msk.estimate(UTF8String.fromString("a")) >= 4L)
+    assert(AggBuffer.roundTrip(CountMinMergeAgg($"sk"), BinaryType, Seq(null)) ===
+      ((null, null)))
   }
 }

@@ -1,7 +1,9 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.functions.MisraGriesAgg
+import org.apache.spark.sql.types.StringType
+import org.apache.spark.unsafe.types.UTF8String
+import graft.functions.{MisraGriesAgg, MisraGriesMergeAgg}
 import graft.operators.TextOps
 
 /** Invariants of the Misra-Gries heavy-hitters sketch — the properties
@@ -98,5 +100,39 @@ class MisraGriesSpec extends SparkSuite {
     // counts only ever undercount, by at most N/(cap+1)
     assert(got("dominant") <= 180L)
     assert(got("dominant") >= 180L - n / (cap + 1))
+  }
+
+  test("no input and all-null groups give [] from a build and from a" +
+      " merge; neither is nullable; the buffer survives its spill bytes") {
+    val none = Seq.empty[Option[String]].toDF("t")
+    val nulls = Seq[(Int, Option[String])]((1, None), (1, None)).toDF("g", "t")
+    val built = none.agg(MisraGriesAgg($"t", 4).as("hh"))
+    assert(!built.schema("hh").nullable)
+    assert(built.head().getSeq[Any](0).isEmpty)
+    assert(nulls.groupBy($"g").agg(MisraGriesAgg($"t", 4).as("hh"))
+      .select($"hh").head().getSeq[Any](0).isEmpty)
+
+    val summaries = built.select($"hh").filter(lit(false))
+    val merged = summaries.agg(MisraGriesMergeAgg($"hh", 4).as("m"))
+    assert(!merged.schema("m").nullable)
+    assert(merged.head().getSeq[Any](0).isEmpty)
+    val nullSummaries = built.select(lit(1).as("g"), $"hh")
+      .union(built.select(lit(1).as("g"), $"hh"))
+      .select($"g", when(lit(false), $"hh").as("hh"))
+    assert(nullSummaries.groupBy($"g").agg(MisraGriesMergeAgg($"hh", 4).as("m"))
+      .select($"m").head().getSeq[Any](0).isEmpty)
+
+    val tokens = Seq("b", "a", null, "b", "c", "a", "b")
+      .map(s => if (s == null) null else UTF8String.fromString(s))
+    val (hh, hhBack) = AggBuffer.roundTrip(MisraGriesAgg($"t", 4), StringType, tokens)
+    assert(AggBuffer.terms(hh) === Seq(("b", 3L), ("a", 2L), ("c", 1L)))
+    assert(AggBuffer.terms(hhBack) === AggBuffer.terms(hh))
+    val (m, mBack) = AggBuffer.roundTrip(MisraGriesMergeAgg($"hh", 4),
+      built.schema("hh").dataType, Seq(null, hh, hh))
+    assert(AggBuffer.terms(m) === Seq(("b", 6L), ("a", 4L), ("c", 2L)))
+    assert(AggBuffer.terms(mBack) === AggBuffer.terms(m))
+    val (e, eBack) = AggBuffer.roundTrip(MisraGriesMergeAgg($"hh", 4),
+      built.schema("hh").dataType, Seq(null))
+    assert(AggBuffer.terms(e).isEmpty && AggBuffer.terms(eBack).isEmpty)
   }
 }

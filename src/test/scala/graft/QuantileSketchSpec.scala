@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{BinaryType, DoubleType}
 import graft.functions.{QSketch, QuantileEstimate, QuantileMergeAgg, QuantileSketchAgg}
 
 /** Mergeable quantile sketch invariants: α error bound vs exact
@@ -105,5 +106,37 @@ class QuantileSketchSpec extends SparkSuite {
       .agg(QuantileEstimate(QuantileSketchAgg($"v", 0.01), 1.0))
       .as[Double].head()
     assert(math.abs(est - 3.0) / 3.0 <= 0.01 + 1e-9) // max of {1, 3}
+  }
+
+  test("no input and all-null groups: an empty sketch from a build, null" +
+      " from a merge; nullability; the buffer survives its spill bytes") {
+    val emptySketch = QSketch.serialize(new QSketch.Buf(alpha))
+    val none = Seq.empty[Option[Double]].toDF("v")
+    val nulls = Seq[(Int, Option[Double])]((1, None), (1, None)).toDF("g", "v")
+    val built = none.agg(QuantileSketchAgg($"v", alpha).as("sk"))
+    assert(!built.schema("sk").nullable)
+    assert(built.as[Array[Byte]].head() === emptySketch)
+    assert(nulls.groupBy($"g").agg(QuantileSketchAgg($"v", alpha).as("sk"))
+      .select($"sk").as[Array[Byte]].head() === emptySketch)
+
+    val noSketch = Seq.empty[Option[Array[Byte]]].toDF("sk")
+    val nullSketches = Seq[(Int, Option[Array[Byte]])]((1, None), (1, None))
+      .toDF("g", "sk")
+    val merged = noSketch.agg(QuantileMergeAgg($"sk").as("m"))
+    assert(merged.schema("m").nullable)
+    assert(merged.head().isNullAt(0))
+    assert(nullSketches.groupBy($"g").agg(QuantileMergeAgg($"sk").as("m"))
+      .select($"m").head().isNullAt(0))
+
+    val (sk, skBack) = AggBuffer.roundTrip(QuantileSketchAgg($"v", alpha),
+      DoubleType, Seq(1.0, null, -2.5, 0.0, 1e6, Double.NaN))
+    assert(sk === skBack)
+    assert(QSketch.deserialize(sk.asInstanceOf[Array[Byte]]).count === 4L)
+    val (m, mBack) = AggBuffer.roundTrip(QuantileMergeAgg($"sk"), BinaryType,
+      Seq(null, sk, emptySketch))
+    assert(m === mBack)
+    assert(QSketch.deserialize(m.asInstanceOf[Array[Byte]]).count === 4L)
+    assert(AggBuffer.roundTrip(QuantileMergeAgg($"sk"), BinaryType, Seq(null)) ===
+      ((null, null)))
   }
 }

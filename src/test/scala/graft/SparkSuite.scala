@@ -11,11 +11,20 @@ import org.scalatest.funsuite.AnyFunSuite
   * Every suite in the JVM shares it; each suite starts with an empty cache,
   * so a frame another suite left cached cannot change its plans. */
 trait SparkSuite extends AnyFunSuite with BeforeAndAfterAll {
-  lazy val spark: SparkSession = GraftSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.warehouse.dir", SparkSuite.root.resolve("warehouse").toString)
-    .getOrCreate()
+  lazy val spark: SparkSession = {
+    val s = GraftSession.builder()
+      .master("local[4]")
+      .config("spark.sql.shuffle.partitions", "4")
+      .config("spark.sql.warehouse.dir", SparkSuite.root.resolve("warehouse").toString)
+      .getOrCreate()
+    // windows over group-sized inputs warn "No Partition Defined" on every
+    // execution, about a thousand lines per run that bury the rest of the
+    // log; PlanShapeSpec's partitionless-window check gates that condition
+    org.apache.logging.log4j.core.config.Configurator.setLevel(
+      "org.apache.spark.sql.execution.window.WindowExec",
+      org.apache.logging.log4j.Level.ERROR)
+    s
+  }
 
   /** A fresh directory under the test JVM's temp root. */
   def tempDir(prefix: String): Path = Files.createTempDirectory(SparkSuite.root, prefix)
