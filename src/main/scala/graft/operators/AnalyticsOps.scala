@@ -257,24 +257,20 @@ object AnalyticsOps {
     * callers need no unpersist. */
   private def lpLabels(spark: SparkSession, dir: String)
       : (DataFrame, DataFrame) = {
-    // both frames memoized per corpus (round 12): graph_label_prop and
+    // the labels are memoized per corpus (round 12): graph_label_prop and
     // graph_modularity each re-ran the 3 synchronous rounds for the SAME
     // partition — LP state is corpus state ([[SharedCorpus]]); the
     // modularity key scores exactly the partition the community key
-    // reports, by construction AND by sharing the frame
-    val und = SharedCorpus.memo(spark, "lp_und", dir, "lineitem", "orders") {
-      val e = SharedGraph.tradeEdges(spark, dir)
-      // cached PRE-PARTITIONED ON src, the key every round aggregates on:
-      // HashPartitioning(src) satisfies both the (src, lbl) count's and the
-      // per-src argmax's clustered distributions (partitioning exprs ⊆
-      // grouping exprs), so after this one-time shuffle every round is
-      // exchange-free — broadcast label join, two in-partition aggregations
-      e
-        .select(explode(array(struct(col("src"), col("dst")),
-          struct(col("dst").as("src"), col("src").as("dst")))).as("ed"))
-        .select(col("ed.src").as("src"), col("ed.dst").as("dst"))
-        .repartition(col("src"))
-    }
+    // reports, by construction AND by sharing the frame.
+    // The edge frame is the trade graph's undirected memo: the graph is
+    // symmetric, so swapping the endpoints of the dst-partitioned frame
+    // gives the same rows PRE-PARTITIONED ON src, the key every round
+    // aggregates on: HashPartitioning(src) satisfies both the (src, lbl)
+    // count's and the per-src argmax's clustered distributions
+    // (partitioning exprs ⊆ grouping exprs), so every round is
+    // exchange-free — broadcast label join, two in-partition aggregations
+    val und = SharedGraph.tradeUndByDst(spark, dir)
+      .select(col("dst").as("src"), col("src").as("dst"))
     val fin = SharedCorpus.memo(spark, "lp_labels", dir, "lineitem",
       "orders") {
       var labels = und.select(col("src").as("node")).distinct()

@@ -2,6 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 import org.apache.hadoop.fs.{FileSystem, Path}
 
 /** Storage-layout utilities — the write-side half of the 100 TB story.
@@ -91,25 +92,27 @@ object Layout {
     * timestamp type, and an explicit integer survives any reader without
     * parser/locale drift. */
   def ensureEventsJsonl(spark: SparkSession, dir: String): String =
-    ensureStore(spark, dir, "events_jsonl", "_SUCCESS", "events") { path =>
-      Tables.events(spark, dir)
-        .withColumn("ts", unix_micros(col("ts")))
-        .write.mode("overwrite").json(path)
-    }
+    ensureStore(spark, dir, "events_jsonl", "_SUCCESS", "events")(
+      eventsUs(spark, dir).write.mode("overwrite").json(_))
+
+  /** The events table with `ts` as the µs epoch long: what the JSONL, ORC
+    * and CSV twins hold. */
+  private def eventsUs(spark: SparkSession, dir: String): DataFrame =
+    Tables.events(spark, dir).withColumn("ts", unix_micros(col("ts")))
+
+  /** The schema [[eventsUs]] is read back with from the text twins. */
+  private val EventsUsSchema = StructType(Seq(
+    StructField("event_id", LongType), StructField("ts", LongType),
+    StructField("user_id", LongType), StructField("event_type", StringType),
+    StructField("value", DoubleType), StructField("props", StringType)))
 
   /** Read the JSONL store with an EXPLICIT schema — at corpus scale,
     * schema inference is a full extra pass over the data and a
     * corruption vector (one malformed line re-types a column for every
     * reader); production JSONL reads always pin the schema and route
     * non-conforming lines to a corrupt-record column instead. */
-  def readEventsJsonl(spark: SparkSession, path: String): DataFrame = {
-    import org.apache.spark.sql.types._
-    val schema = StructType(Seq(
-      StructField("event_id", LongType), StructField("ts", LongType),
-      StructField("user_id", LongType), StructField("event_type", StringType),
-      StructField("value", DoubleType), StructField("props", StringType)))
-    spark.read.schema(schema).json(path)
-  }
+  def readEventsJsonl(spark: SparkSession, path: String): DataFrame =
+    spark.read.schema(EventsUsSchema).json(path)
 
   /** ORC twin of the events table — the OTHER columnar interchange
     * format (Hive/Trino ecosystems), exercised through Spark's built-in
@@ -117,11 +120,8 @@ object Layout {
     * [[ensureEventsJsonl]] rationale: no timestamp-vintage or tz drift
     * across writers); content-keyed, written once. */
   def ensureEventsOrc(spark: SparkSession, dir: String): String =
-    ensureStore(spark, dir, "events_orc", "_SUCCESS", "events") { path =>
-      Tables.events(spark, dir)
-        .withColumn("ts", unix_micros(col("ts")))
-        .write.mode("overwrite").orc(path)
-    }
+    ensureStore(spark, dir, "events_orc", "_SUCCESS", "events")(
+      eventsUs(spark, dir).write.mode("overwrite").orc(_))
 
   /** CSV twin of the events table (content-keyed derived store, written
     * once) — the lowest-common-denominator interchange format raw feeds
@@ -276,9 +276,8 @@ object Layout {
 
   def ensureEventsCsv(spark: SparkSession, dir: String): String = {
     val path = ensureStore(spark, dir, "events_csv", "_SUCCESS", "events")(
-      Tables.events(spark, dir)
-        .withColumn("ts", unix_micros(col("ts")))
-        .write.mode("overwrite").option("header", "true").csv(_))
+      eventsUs(spark, dir).write.mode("overwrite").option("header", "true")
+        .csv(_))
     addFileOnce(spark, s"$path/zz_bad.csv",
       ("event_id,ts,user_id,event_type,value,props" +: CsvBadLines)
         .mkString("", "\n", "\n").getBytes("UTF-8"))
@@ -292,18 +291,11 @@ object Layout {
     * extra pass at corpus scale). Unparseable numeric fields null out,
     * so a poisoned line never contributes to an aggregate; the caller
     * counts `_corrupt_record` to surface the quarantine volume. */
-  def readEventsCsv(spark: SparkSession, path: String): DataFrame = {
-    import org.apache.spark.sql.types._
-    val schema = StructType(Seq(
-      StructField("event_id", LongType), StructField("ts", LongType),
-      StructField("user_id", LongType), StructField("event_type", StringType),
-      StructField("value", DoubleType), StructField("props", StringType),
-      StructField("_corrupt_record", StringType)))
-    spark.read.schema(schema)
+  def readEventsCsv(spark: SparkSession, path: String): DataFrame =
+    spark.read.schema(EventsUsSchema.add("_corrupt_record", StringType))
       .option("header", "true").option("mode", "PERMISSIVE")
       .option("columnNameOfCorruptRecord", "_corrupt_record")
       .csv(path)
-  }
 
   /** Two-generation parquet store with DIFFERENT schemas — the drift
     * every long-lived 100 TB store accumulates: generation 1 (events
@@ -372,64 +364,131 @@ object Layout {
     ensureStore(spark, dir, "events_zorder", "_SUCCESS", "events")(
       writeEventsZOrdered(Tables.events(spark, dir), _))
 
-  /** Small-file compaction: rewrite a parquet directory into files of
-    * ~`targetFileMB` each, preserving content exactly.
+  /** Small-file compaction: rewrite a parquet store into fewer files,
+    * preserving content exactly.
     *
     * The operational half of every streaming/partitioned ingest: each
     * micro-batch (or each of 1000 writer tasks) leaves its own files, and
     * after a week the store is a million 1 MB files — listing dominates
     * planning, every scan task reads one tiny file, and the NameNode/
     * object-store metadata budget is the real limit. Compaction is the
-    * standard fix (OPTIMIZE in table formats); this is the engine-level
-    * form: size the output file count from the ACTUAL on-disk bytes (no
-    * driver-side listing of row contents — just the file index Spark
-    * already holds), coalesce — NOT repartition: no shuffle, adjacent
-    * input files concatenate into output tasks — and atomically swap via
-    * [[swapDir]], the streaming stores' checked two-rename protocol.
-    * Sorted layouts stay sorted per file because coalesce preserves
-    * intra-partition order and concatenation only widens file boundaries.
+    * standard fix (OPTIMIZE in table formats), partition-aware here:
+    *  - a FLAT directory is rewritten into files of ~`targetFileMB` each,
+    *    the count sized from the ACTUAL on-disk bytes (the file listing,
+    *    no row contents), through coalesce — NOT repartition: no shuffle,
+    *    adjacent input files concatenate into output tasks, so sorted
+    *    layouts stay sorted per file — and swapped in whole;
+    *  - a `name=value`-PARTITIONED store (the streaming bucket and day
+    *    stores, [[writeEventsByDay]]) is compacted per partition: every
+    *    partition holding more than one data file is rewritten into one
+    *    file, all in one [[rewritePartitions]]. Reading the root as a flat
+    *    directory would turn the partition column into data and the flat
+    *    rewrite would destroy pruning. Untouched partitions are not
+    *    opened, so their files stay byte-identical.
+    * Either input is read under one merged schema: a store appended to
+    * across schema revisions (a day file written before `query_id`
+    * existed) comes back with nulls in the newer columns, and conflicting
+    * column types fail the pass before anything is swapped. A swap a
+    * crash stranded is restored ([[recover]]) before anything is read.
+    * Run out-of-band (a maintenance tick between batches).
     *
     * Returns (files_before, files_after). */
   def compact(spark: SparkSession, path: String,
       targetFileMB: Int = 128): (Int, Int) = {
-    val p = new Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val (tmp, bak) = (path + ".compact_tmp", path + ".compact_bak")
-    // a prior run that died between the swap's two renames left the
-    // previous store only in bak — restore it before reading
-    recoverDir(fs, path, bak)
-    // a Hive-partitioned layout (name=value subdirectories) must be
-    // compacted PER PARTITION directory: reading the root would re-infer
-    // the partition columns as data (type-rewriting them) and the flat
-    // rewrite would destroy pruning. Refuse loudly instead of silently
-    // flattening.
-    require(!fs.listStatus(p).exists(s =>
-        s.isDirectory && s.getPath.getName.contains("=")),
-      s"$path is Hive-partitioned; compact each partition directory " +
-        s"instead (e.g. compact(spark, \"$path/day=2026-01-01\"))")
+    val fs = fsOf(spark, path)
+    recover(spark, path)
     val before = Tables.dataFiles(spark, path).toSeq
-    val totalBytes = before.map(_.getLen).sum
-    val nOut = math.max(1, math.ceil(
-      totalBytes.toDouble / (targetFileMB.toLong << 20)).toInt)
     // Spark's inference, not Tables.parquet: the input is any parquet
-    // directory, possibly appended to by writers with different schemas
-    spark.read.parquet(path).coalesce(nOut)
-      .write.mode("overwrite").parquet(tmp)
-    val after = Tables.dataFiles(spark, tmp).size
-    swapDir(fs, path, tmp, bak)
-    (before.size, after)
+    // store, possibly appended to by writers with different schemas
+    def read(dirs: Seq[String]) = spark.read.option("basePath", path)
+      .option("mergeSchema", "true").parquet(dirs: _*)
+    val parts = fs.listStatus(new Path(path)).collect {
+      case s if s.isDirectory && s.getPath.getName.contains("=") =>
+        s.getPath.getName
+    }.sorted
+    if (parts.isEmpty) {
+      val nOut = math.max(1, math.ceil(before.map(_.getLen).sum.toDouble /
+        (targetFileMB.toLong << 20)).toInt)
+      read(Seq(path)).coalesce(nOut)
+        .write.mode("overwrite").parquet(at(path, ".tmp"))
+      swapDir(fs, path, "")
+    } else {
+      val oversized = parts.map(n => s"$path/$n")
+        .filter(Tables.dataFiles(spark, _).size > 1)
+      if (oversized.nonEmpty)
+        rewritePartitions(read(oversized.toSeq), path,
+          parts.head.takeWhile(_ != '='))
+    }
+    (before.size, Tables.dataFiles(spark, path).size)
   }
 
-  /** The two-rename crash-safe swap shared by [[compact]] and the
-    * streaming stores' partition rewrite: `tmp` (fully written) replaces
-    * `dir`, with the previous `dir` parked in `bak` for exactly the
-    * window between the two renames — so at every instant the previous
-    * data exists in exactly one of {dir, bak} and [[recoverDir]] can
-    * always restore it. Every rename result is CHECKED (a false return —
-    * cross-filesystem tmp, permissions — must fail the caller, not
-    * silently drop data). */
-  private[graft] def swapDir(fs: FileSystem,
-      dir: String, tmp: String, bak: String): Unit = {
+  /** The one store rewrite, shared by the streaming bucket and day stores
+    * and [[compact]]: `parts` carries the partition column `p` and holds
+    * the full new content of every partition it names. It is written
+    * ONCE to the store's `.tmp` twin by one task, so each `p=v` dir gets
+    * one file, then each written dir replaces its store twin through the
+    * two-rename swap, in sorted order. One task, as each per-partition
+    * write had before: a write stage as wide as the cores holds every
+    * core while it runs, and in `stream_ingest` that slowed the
+    * dashboard's concurrent refreshes (measured). The write never reads
+    * and writes the same path, so a lost cache block can never recompute
+    * against a half-swapped store, and partitions absent from `parts` are
+    * not opened. */
+  private[graft] def rewritePartitions(parts: DataFrame, store: String,
+      p: String): Unit = {
+    val fs = fsOf(parts.sparkSession, store)
+    parts.coalesce(1).write.partitionBy(p).mode("overwrite")
+      .parquet(at(store, ".tmp"))
+    fs.listStatus(new Path(at(store, ".tmp"))).map(_.getPath.getName)
+      .filter(_.startsWith(p + "=")).sorted
+      .foreach(swapDir(fs, store, _))
+  }
+
+  /** Restore every unit of `store` that a crash between a swap's two
+    * renames left only in the `.bak` twin: the whole store (a flat
+    * [[compact]]) or any `name=value` partition. Runs over ALL partitions
+    * (one listing), not just the ones a caller is about to touch — a
+    * crashed partition must not stay invisible until a later batch
+    * happens to touch it again, which may be never. Every mutable store
+    * calls it before it reads or writes. */
+  private[graft] def recover(spark: SparkSession, store: String): Unit = {
+    val fs = fsOf(spark, store)
+    recoverDir(fs, store, "")
+    val bak = new Path(at(store, ".bak"))
+    if (fs.exists(bak))
+      fs.listStatus(bak).map(_.getPath.getName).filter(_.contains("="))
+        .foreach(recoverDir(fs, store, _))
+  }
+
+  /** Drop the parked copy of `partition` (`name=value`) that a swap left
+    * in the `.bak` twin when it crashed after both renames — for a
+    * store that finds the partition's rewrite already done (a replayed
+    * batch) and so will not swap it again. */
+  private[graft] def dropParked(spark: SparkSession, store: String,
+      partition: String): Unit =
+    fsOf(spark, store).delete(new Path(at(store, ".bak", partition)), true)
+
+  private[graft] def fsOf(spark: SparkSession, path: String): FileSystem =
+    new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
+
+  /** The one naming of a swap: unit `partition` of `store` (the whole
+    * store for "", else one `name=value` dir) is written under the
+    * store's `.tmp` twin and parked under its `.bak` twin, at the same
+    * relative path; `twin` "" names the unit itself. */
+  private def at(store: String, twin: String, partition: String = "") =
+    store + twin + (if (partition.isEmpty) "" else "/" + partition)
+
+  /** The two-rename crash-safe swap: the fully written `.tmp` unit
+    * replaces the store's unit, with the previous one parked in `.bak`
+    * for exactly the window between the two renames — so at every
+    * instant the previous data exists in exactly one of {unit, bak} and
+    * [[recover]] can always restore it. Every rename result is CHECKED
+    * (a false return — cross-filesystem tmp, permissions — must fail the
+    * caller, not silently drop data). */
+  private def swapDir(fs: FileSystem, store: String,
+      partition: String): Unit = {
+    val Array(dir, tmp, bak) =
+      Array("", ".tmp", ".bak").map(at(store, _, partition))
     def mv(from: String, to: String): Unit =
       require(fs.rename(new Path(from), new Path(to)),
         s"rename $from -> $to failed")
@@ -441,13 +500,15 @@ object Layout {
     fs.delete(new Path(bak), true)
   }
 
-  /** Restore `dir` from `bak` when a crash between [[swapDir]]'s two
-    * renames left the previous data only there. */
-  private[graft] def recoverDir(fs: FileSystem, dir: String,
-      bak: String): Unit =
-    if (!fs.exists(new Path(dir)) && fs.exists(new Path(bak))) {
-      fs.mkdirs(new Path(dir).getParent)
+  /** Restore a unit from `.bak` when a crash between [[swapDir]]'s two
+    * renames left the previous data only there. The unit's parent exists:
+    * the whole store's parent holds the `.bak` twin too, and a
+    * partition's parent is the store root, restored first by [[recover]]. */
+  private def recoverDir(fs: FileSystem, store: String,
+      partition: String): Unit = {
+    val Array(dir, bak) = Array("", ".bak").map(at(store, _, partition))
+    if (!fs.exists(new Path(dir)) && fs.exists(new Path(bak)))
       require(fs.rename(new Path(bak), new Path(dir)),
         s"recovery rename $bak -> $dir failed")
-    }
+  }
 }

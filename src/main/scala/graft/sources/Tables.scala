@@ -82,7 +82,7 @@ object Tables {
     * not `name=value` dirs). The one listing of what a table's or a store's
     * data is: the schema read, the row count, the content tag
     * ([[Fingerprint]]) and the store maintenance ([[Layout.compact]],
-    * [[Versioned.append]], the streaming stores' compaction) all use it. */
+    * [[Versioned.append]]) all use it. */
   private[graft] def dataFiles(spark: SparkSession, path: String): Iterator[FileStatus] = {
     val p = new Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)

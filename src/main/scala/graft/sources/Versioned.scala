@@ -1,7 +1,9 @@
 package graft.sources
 
+import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.jdk.CollectionConverters._
 
 /** Minimal snapshot-versioned parquet store: manifest-pointer time travel.
   *
@@ -23,6 +25,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * stats pruning in the manifest, multi-writer commit arbitration.
   */
 object Versioned {
+
+  private val Json = new ObjectMapper()
 
   private def fs(spark: SparkSession, p: Path) =
     p.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -53,13 +57,13 @@ object Versioned {
     val newFiles = Tables.dataFiles(spark, commitDir.toString)
       .map(_.getPath.toString).toArray.sorted
     val carried = if (prev == 0) Array.empty[String] else files(spark, root, prev)
-    val all = (carried ++ newFiles).map(p => "\"" + p + "\"")
-      .mkString("[", ",", "]")
-    val tmp = new Path(s"$root/.manifest-v${prev + 1}.tmp")
+    val m = Json.createObjectNode().put("version", prev + 1)
+    val listed = m.putArray("files")
+    (carried ++ newFiles).foreach(listed.add(_))
+    // the hidden twin of the manifest, renamed into place as the commit
+    val tmp = new Path(s"$root/.manifest-v${prev + 1}.json")
     val out = f.create(tmp, true)
-    out.write(s"""{"version":${prev + 1},"files":$all}"""
-      .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    out.close()
+    try out.write(Json.writeValueAsBytes(m)) finally out.close()
     require(f.rename(tmp, manifest(root, prev + 1)),
       s"commit rename failed for v${prev + 1}")
     prev + 1
@@ -71,14 +75,8 @@ object Versioned {
     val f = fs(spark, m)
     require(f.exists(m), s"no snapshot v$v at $root")
     val in = f.open(m)
-    val bytes = new Array[Byte](f.getFileStatus(m).getLen.toInt)
-    in.readFully(bytes)
-    in.close()
-    val s = new String(bytes, java.nio.charset.StandardCharsets.UTF_8)
-    // fixed shape we wrote ourselves: {"version":N,"files":["...","..."]}
-    val body = s.substring(s.indexOf("[") + 1, s.lastIndexOf("]"))
-    if (body.trim.isEmpty) Array.empty
-    else body.split(",").map(_.trim.stripPrefix("\"").stripSuffix("\""))
+    try Json.readTree(in).path("files").elements.asScala.map(_.asText).toArray
+    finally in.close()
   }
 
   /** Read snapshot `v`: exactly the manifest's files, no directory listing

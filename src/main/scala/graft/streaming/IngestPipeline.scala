@@ -1,7 +1,9 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import com.fasterxml.jackson.databind.ObjectMapper
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.Key
@@ -22,6 +24,11 @@ import graft.sources.{Layout, Tables}
   * In this offline environment the Kafka source/sink are stood in by
   * MemoryStream (tests) / file sources — the plan from `from_json` onward
   * is identical to `readStream.format("kafka")`'s `value` column.
+  *
+  * The stores this consumer keeps (the bucketed latest-per-city store and
+  * the per-day sketch stores) are rewritten, crash-recovered and compacted
+  * through [[graft.sources.Layout]], the one module that names and swaps
+  * store directories; this object decides only what each batch writes.
   */
 object IngestPipeline {
 
@@ -161,8 +168,13 @@ object IngestPipeline {
     * every 5 — each event lands in 2 windows (window/slide overlap factor
     * bounds the state and row amplification). */
   def slidingAvg(obs: DataFrame): DataFrame =
+    windowAvg(obs, window(col("obs_ts"), "10 minutes", "5 minutes"))
+
+  /** Per-city average temperature over the `win` windows of `obs_ts`,
+    * with a 10-minute watermark bounding the state. */
+  private def windowAvg(obs: DataFrame, win: Column): DataFrame =
     obs.withWatermark("obs_ts", "10 minutes")
-      .groupBy(window(col("obs_ts"), "10 minutes", "5 minutes"), col("city"))
+      .groupBy(win, col("city"))
       .agg(avg(col("temperature")).as("avg_temp"), count(lit(1)).as("n_obs"))
       .select(col("window.start").as("win_start"), col("city"),
         col("avg_temp"), col("n_obs"))
@@ -187,20 +199,22 @@ object IngestPipeline {
     * by [[bucketOf]], and a micro-batch rewrites ONLY the buckets its rows
     * hash into — O(batch), not O(store). One read of the touched bucket
     * dirs that exist, unioned with the batch rows, keeps rank 1 per city
-    * and goes out in ONE partitioned write through [[rewritePartitions]],
-    * whose per-bucket swaps keep the two-rename crash safety; untouched
-    * buckets are not opened, so their files stay byte-identical (pinned
-    * by IngestPipelineSpec). The window order is a TOTAL order over the
-    * stored columns: redelivered duplicates (same city+dt, possibly
-    * corrected values) resolve identically on every run, and a retry
-    * after a crash at any rename re-merges to the same rows. AT SCALE the
+    * and goes out in ONE partitioned write through
+    * [[Layout.rewritePartitions]], whose per-bucket swaps keep the
+    * two-rename crash safety, after [[Layout.recover]] has restored any
+    * bucket a crash stranded; untouched buckets are not opened, so their
+    * files stay byte-identical (pinned by IngestPipelineSpec). The window
+    * order is a TOTAL order over the stored columns: redelivered
+    * duplicates (same city+dt, possibly corrected values) resolve
+    * identically on every run, and a retry after a crash at any rename
+    * re-merges to the same rows. AT SCALE the
     * same foreachBatch body targets a table format's MERGE (Delta/Iceberg)
     * — this bucket layout is exactly the file-pruning that MERGE buys,
     * hand-rolled on plain parquet. */
   def upsertBatch(batch: DataFrame, store: String): Unit = {
     val spark = batch.sparkSession
-    val fs = fsOf(spark, store)
-    recoverDirs(fs, store, "bucket=")
+    val fs = Layout.fsOf(spark, store)
+    Layout.recover(spark, store)
     // persisted for the batch's lifetime: the bucket collect and the write
     // are two actions over the micro-batch, and an UNcached batch frame
     // re-reads the SOURCE per action (against a real broker, a second
@@ -232,94 +246,24 @@ object IngestPipeline {
           desc("temperature"), desc("humidity")) // total over stored cols
       // an empty (no-data) micro-batch touches nothing and writes nothing
       if (touched.nonEmpty)
-        rewritePartitions(fs, rows.withColumn("rn", row_number().over(w))
+        Layout.rewritePartitions(rows.withColumn("rn", row_number().over(w))
           .filter(col("rn") === 1).drop("rn"), store, "bucket")
     } finally slim.unpersist()
   }
 
-  private def fsOf(spark: SparkSession, path: String): FileSystem =
-    new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  /** The all-partitions sweep shared by the bucket and day stores: any
-    * `<prefix>X` dir stranded ONLY in `.bak` (crash between the two
-    * renames of [[Layout.swapDir]]) is restored by [[Layout.recoverDir]]
-    * before anything reads or writes the store. Runs over ALL partitions
-    * (one listing), not just the batch's — a crashed partition must not
-    * stay invisible until a later batch happens to touch it again, which
-    * may be never. */
-  private def recoverDirs(fs: FileSystem, store: String,
-      prefix: String): Unit = {
-    val bakRoot = new Path(store + ".bak")
-    if (fs.exists(bakRoot))
-      fs.listStatus(bakRoot).map(_.getPath.getName)
-        .filter(_.startsWith(prefix))
-        .foreach(n => Layout.recoverDir(fs, s"$store/$n", s"$store.bak/$n"))
-  }
-
-  /** The one store rewrite, shared by the bucket store, the day stores
-    * and [[compactStore]]: `parts` carries the partition column `p` and
-    * holds the full new content of every partition it names. It is
-    * written ONCE to `store.tmp` by one task, so each `p=v` dir gets one
-    * file, then each written dir replaces its store twin through
-    * [[Layout.swapDir]], in sorted order. One task, as each per-partition
-    * write had before: a write stage as wide as the cores holds every core
-    * while it runs, and in `stream_ingest` that slowed the dashboard's
-    * concurrent refreshes (measured). The write never reads and
-    * writes the same path, so a lost cache block can never recompute
-    * against a half-swapped store, and partitions absent from `parts` are
-    * not opened. */
-  private def rewritePartitions(fs: FileSystem, parts: DataFrame,
-      store: String, p: String): Unit = {
-    val tmp = store + ".tmp"
-    parts.coalesce(1).write.partitionBy(p).mode("overwrite").parquet(tmp)
-    fs.listStatus(new Path(tmp)).map(_.getPath.getName)
-      .filter(_.startsWith(p + "=")).sorted
-      .foreach(n =>
-        Layout.swapDir(fs, s"$store/$n", s"$tmp/$n", s"$store.bak/$n"))
-  }
-
-  /** Small-files compaction for the partitioned stores (the bucket upsert
-    * store and the per-day sketch/CMS stores): every micro-batch rewrite
-    * and every new day adds files, and a store that has run for months
-    * accumulates a small-files problem — more tasks, more open()s, more
-    * namenode pressure at scale — even though each partition's LOGICAL
-    * content is one city set or one sketch row. This maintenance pass
-    * rewrites every `<prefix>X` partition dir holding more than
-    * `maxFiles` data files into a single file, all in one
-    * [[rewritePartitions]] (readers never observe a partial partition; a
-    * crash mid-compaction is recovered by the stores' normal
-    * [[recoverDirs]] sweep). The rows are unchanged — read with their
-    * partition value and written back under it — but the oversized
-    * partitions are read together under one merged schema: a day file
-    * written before `query_id` existed comes back with a null
-    * `query_id`, which the day stores' replay guard reads as it reads a
-    * missing column, and partitions whose column types conflict fail the
-    * whole pass before anything is swapped. O(oversized partitions) work;
-    * untouched partitions are not opened. Run out-of-band (a maintenance
-    * tick between batches), like a table format's OPTIMIZE. */
-  def compactStore(spark: SparkSession, store: String, prefix: String,
-      maxFiles: Int = 1): Unit = {
-    val fs = fsOf(spark, store)
-    if (!fs.exists(new Path(store))) return
-    recoverDirs(fs, store, prefix)
-    val oversized = fs.listStatus(new Path(store))
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith(prefix) &&
-        Tables.dataFiles(spark, st.getPath.toString).size > maxFiles)
-      .map(st => s"$store/${st.getPath.getName}")
-    if (oversized.nonEmpty)
-      rewritePartitions(fs, spark.read.option("basePath", store)
-        .option("mergeSchema", "true").parquet(oversized.toSeq: _*),
-        store, prefix.stripSuffix("="))
-  }
+  /** The one streaming sink chain: `body` runs on every micro-batch with
+    * its batch id, exactly once per id under `checkpoint`. */
+  private def sink(df: DataFrame, checkpoint: String)(
+      body: (DataFrame, Long) => Unit): StreamingQuery =
+    df.writeStream
+      .option("checkpointLocation", checkpoint)
+      .foreachBatch((b: Dataset[Row], id: Long) => body(b.toDF(), id))
+      .start()
 
   /** Wire [[upsertBatch]] as a streaming sink. */
   def upsertStream(obs: DataFrame, store: String, checkpoint: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    obs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch((b: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        upsertBatch(b.toDF(), store))
-      .start()
+      : StreamingQuery =
+    sink(obs, checkpoint)((b, _) => upsertBatch(b, store))
 
   /** Relative-error bound of the streaming percentile store's sketches. */
   val SketchAlpha = 0.01
@@ -359,17 +303,12 @@ object IngestPipeline {
   private[streaming] def checkpointQueryId(spark: SparkSession,
       checkpoint: String): String = {
     val path = new Path(checkpoint, "metadata")
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = Layout.fsOf(spark, checkpoint)
     if (!fs.exists(path)) "batch"
     else {
       val in = fs.open(path)
-      try {
-        val txt = scala.io.Source.fromInputStream(in, "UTF-8").mkString
-        // {"id":"<uuid>"} — extract without a JSON dependency
-        val m = java.util.regex.Pattern.compile("\"id\"\\s*:\\s*\"([^\"]+)\"")
-          .matcher(txt)
-        if (m.find()) m.group(1) else "batch"
-      } finally in.close()
+      try new ObjectMapper().readTree(in).path("id").asText("batch")
+      finally in.close()
     }
   }
 
@@ -384,8 +323,8 @@ object IngestPipeline {
     * quantile and Count-Min stores: fold the batch's rows into ONE sketch
     * row per day (`sketch`), merge it with that day's stored row (`merge`
     * over their union, grouped by day), and write every merged day in one
-    * [[rewritePartitions]], whose per-day swaps keep the two-rename crash
-    * safety. Untouched day dirs are never opened — O(touched days), not
+    * [[Layout.rewritePartitions]], whose per-day swaps keep the two-rename
+    * crash safety. Untouched day dirs are never opened — O(touched days), not
     * O(store).
     *
     * Two failure modes [[upsertBatch]]'s rank-1 dedupe absorbs for free
@@ -402,15 +341,16 @@ object IngestPipeline {
     *    CHECKPOINT RESETS: a new checkpoint means new batch ids from 0,
     *    and without the query id a colliding id would silently drop the
     *    new query's first batches.
-    *  - STRANDED .bak: the swap is recovered by an all-days sweep up
-    *    front ([[recoverDirs]]), not per-touched-day — a crash on the
-    *    LAST batch that would ever touch a day must not leave that day
-    *    invisible to readers forever. */
+    *  - STRANDED SWAP: a day a crash left only in the parked copy is
+    *    restored by [[Layout.recover]]'s all-partitions sweep up front,
+    *    not per touched day — a crash on the LAST batch that would ever
+    *    touch a day must not leave that day invisible to readers
+    *    forever. */
   private[graft] def mergeDayStore(withDay: DataFrame, store: String, batchId: Long,
       queryId: String, sketch: Column, merge: Column): Unit = {
     val spark = withDay.sparkSession
-    val fs = fsOf(spark, store)
-    recoverDirs(fs, store, "day=")
+    val fs = Layout.fsOf(spark, store)
+    Layout.recover(spark, store)
     // Days-per-batch is watermark-bounded in steady state, but a
     // checkpoint-reset backfill (or a replay of months of broker backlog
     // in one micro-batch) is not — cap the driver-side day spine the way
@@ -441,16 +381,16 @@ object IngestPipeline {
         .collect().map(_.getDate(0).toString)
     }
     // replayed days: the merge is done, but the original attempt may have
-    // crashed between its final two steps — clear the leftover .bak so
-    // stale pre-merge data can't linger forever
-    done.foreach(d => fs.delete(new Path(s"$store.bak/day=$d"), true))
+    // crashed between its final two steps — drop the parked copy so stale
+    // pre-merge data can't linger forever
+    done.foreach(d => Layout.dropParked(spark, store, s"day=$d"))
     if (done.length < days.length) {
       val todo = !col("day").cast("string").isin(done: _*)
       val batchSk = withDay.filter(todo).groupBy("day").agg(sketch.as("sk"))
       val merged = stored.fold(batchSk)(
         _.filter(todo).select("day", "sk").unionByName(batchSk))
         .groupBy("day").agg(merge.as("sk"))
-      rewritePartitions(fs, merged.withColumn("batch_id", lit(batchId))
+      Layout.rewritePartitions(merged.withColumn("batch_id", lit(batchId))
         .withColumn("query_id", lit(queryId)), store, "day")
     }
   }
@@ -471,13 +411,9 @@ object IngestPipeline {
 
   /** Wire [[cmStoreBatch]] as a streaming sink. */
   def cmStoreStream(obs: DataFrame, store: String, checkpoint: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    obs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch((b: Dataset[org.apache.spark.sql.Row], id: Long) =>
-        cmStoreBatch(b.toDF(), store, id,
-          checkpointQueryId(b.sparkSession, checkpoint)))
-      .start()
+      : StreamingQuery =
+    sink(obs, checkpoint)((b, id) => cmStoreBatch(b, store, id,
+      checkpointQueryId(b.sparkSession, checkpoint)))
 
   /** Query side of the frequency store: merge the stored per-day
     * sketches (a day-range read stays partition-pruned) and estimate
@@ -485,22 +421,16 @@ object IngestPipeline {
   def cmStoreCounts(spark: SparkSession, store: String,
       keys: Seq[String]): DataFrame = {
     import graft.functions.{CountMinEstimate, CountMinMergeAgg}
-    val merged = spark.read.parquet(store)
-      .agg(CountMinMergeAgg(col("sk")).as("msk"))
-    keys.foldLeft(merged) { (df, k) =>
-      df.withColumn(s"cnt_$k", CountMinEstimate(col("msk"), lit(k)))
-    }.drop("msk")
+    spark.read.parquet(store).agg(CountMinMergeAgg(col("sk")).as("msk"))
+      .select(keys.map(k =>
+        CountMinEstimate(col("msk"), lit(k)).as(s"cnt_$k")): _*)
   }
 
   /** Wire [[sketchStoreBatch]] as a streaming sink. */
   def sketchStoreStream(obs: DataFrame, store: String, checkpoint: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    obs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch((b: Dataset[org.apache.spark.sql.Row], id: Long) =>
-        sketchStoreBatch(b.toDF(), store, id,
-          checkpointQueryId(b.sparkSession, checkpoint)))
-      .start()
+      : StreamingQuery =
+    sink(obs, checkpoint)((b, id) => sketchStoreBatch(b, store, id,
+      checkpointQueryId(b.sparkSession, checkpoint)))
 
   /** Query side of the sketch store: merge the stored per-day sketches
     * (optionally a day range — partition pruning keeps the read to the
@@ -509,11 +439,9 @@ object IngestPipeline {
   def sketchStoreQuantiles(spark: SparkSession, store: String,
       qs: Seq[Double]): DataFrame = {
     import graft.functions.{QuantileEstimate, QuantileMergeAgg}
-    val merged = spark.read.parquet(store)
-      .agg(QuantileMergeAgg(col("sk")).as("msk"))
-    qs.foldLeft(merged) { (df, q) =>
-      df.withColumn(s"p${(q * 100).round}", QuantileEstimate(col("msk"), q))
-    }.drop("msk")
+    spark.read.parquet(store).agg(QuantileMergeAgg(col("sk")).as("msk"))
+      .select(qs.map(q =>
+        QuantileEstimate(col("msk"), q).as(s"p${(q * 100).round}")): _*)
   }
 
   /** Streaming form of the clean/quarantine split: per micro-batch, valid
@@ -523,25 +451,17 @@ object IngestPipeline {
     * flagged plan); exactly-once by checkpoint + idempotent-append per
     * epoch. */
   def quarantineStream(rawStream: DataFrame, json: Column, store: String,
-      quarPath: String, checkpoint: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    rawStream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (b: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        val (clean, quar) = ingestWithQuarantine(b.toDF(), json)
-        clean.write.mode("append").parquet(store)
-        quar.write.mode("append").parquet(quarPath)
-      }
-      .start()
+      quarPath: String, checkpoint: String): StreamingQuery =
+    sink(rawStream, checkpoint) { (b, _) =>
+      val (clean, quar) = ingestWithQuarantine(b, json)
+      clean.write.mode("append").parquet(store)
+      quar.write.mode("append").parquet(quarPath)
+    }
 
   /** Stateful extension (SURVEY §2.8): per-city tumbling-window average
     * temperature with a watermark bounding state. */
   def tumblingAvg(obs: DataFrame): DataFrame =
-    obs.withWatermark("obs_ts", "10 minutes")
-      .groupBy(window(col("obs_ts"), "5 minutes"), col("city"))
-      .agg(avg(col("temperature")).as("avg_temp"), count(lit(1)).as("n_obs"))
-      .select(col("window.start").as("win_start"), col("city"),
-        col("avg_temp"), col("n_obs"))
+    windowAvg(obs, window(col("obs_ts"), "5 minutes"))
 
   /** Batch-queryable equivalent of the tumbling window over the events
     * table (1-hour windows), for the driver's oracle. */
@@ -563,15 +483,21 @@ object IngestPipeline {
   // both must agree on. In production the stream carries a watermark so
   // the dedup state ages out with the window. ──
   def streamTumblingUsers(spark: SparkSession, dir: String): DataFrame =
+    windowUsers(spark, dir, window(col("ts"), "1 hour"), "hour_s")
+
+  /** Distinct users and events per `win` window of `ts`, keyed and
+    * ordered by the window start formatted as `startName`. */
+  private def windowUsers(spark: SparkSession, dir: String, win: Column,
+      startName: String): DataFrame =
     Tables.events(spark, dir)
-      .groupBy(window(col("ts"), "1 hour"))
+      .groupBy(win)
       .agg(countDistinct(col("user_id")).as("users"),
         count(lit(1)).as("cnt"))
       .select(
         date_format(col("window.start"), "yyyy-MM-dd HH:mm:ss")
-          .as("hour_s"),
+          .as(startName),
         col("users"), col("cnt"))
-      .orderBy("hour_s")
+      .orderBy(startName)
 
   // ── distinct users per 2-hour hopping window sliding hourly — the
   // overlapping-window twin of [[streamTumblingUsers]] (tumbling
@@ -582,15 +508,8 @@ object IngestPipeline {
   // oracle replays Spark's window cover rule exactly: starts = the
   // event's hour floor and the hour before. ──
   def streamHoppingUsers(spark: SparkSession, dir: String): DataFrame =
-    Tables.events(spark, dir)
-      .groupBy(window(col("ts"), "2 hours", "1 hour"))
-      .agg(countDistinct(col("user_id")).as("users"),
-        count(lit(1)).as("cnt"))
-      .select(
-        date_format(col("window.start"), "yyyy-MM-dd HH:mm:ss")
-          .as("win_start_s"),
-        col("users"), col("cnt"))
-      .orderBy("win_start_s")
+    windowUsers(spark, dir, window(col("ts"), "2 hours", "1 hour"),
+      "win_start_s")
 
   // ── per-user SESSION windows via the native `session_window`
   // generator — the third window family next to tumbling and hopping:

@@ -148,10 +148,10 @@ class EagerSpec extends SparkSuite {
       // scanCorruptTolerant (a poisoned member), scanSchemaEvolution
       // (mergeSchema over two generations)
       "RelationalOps.scala" -> 2,
-      // compact: any parquet directory
+      // compact: any parquet store, flat or partitioned
       "Layout.scala" -> 1,
-      // the streaming stores, appended to across schema revisions
-      "IngestPipeline.scala" -> 4))
+      // the streaming day stores, appended to across schema revisions
+      "IngestPipeline.scala" -> 3))
   }
 
   test("source reads without side effects: src/main never writes the " +
@@ -166,6 +166,22 @@ class EagerSpec extends SparkSuite {
     assert(mentioning(main, "endsWith(\".parquet\")").isEmpty)
     assert(mentioning(sources("src/main/scala/graft/sources"), "java.io.File")
       .isEmpty)
+  }
+
+  test("one store layer: outside Layout, src/main names no .tmp/.bak " +
+      "swap directory and calls no swapDir/recoverDir") {
+    val main = sources("src/main/scala")
+    assert(main.nonEmpty, "run from the repository root")
+    // a string literal (interpolated or not) holding `.tmp` or `.bak`, or
+    // a swap call, over the text with its whole-line comments removed
+    val naming = "\"[^\"\\n]*\\.(?:tmp|bak)\\b[^\"\\n]*\"".r
+    val swapping = "\\b(?:swapDir|recoverDir)\\(".r
+    val offenders = main.filterNot(_.endsWith("graft/sources/Layout.scala"))
+      .filter { p =>
+        val code = text(p).replaceAll("(?m)^\\s*(?://|\\*|/\\*).*$", "")
+        (naming.findFirstIn(code) ++ swapping.findFirstIn(code)).nonEmpty
+      }.map(_.getFileName.toString)
+    assert(offenders.isEmpty, offenders.mkString(", "))
   }
 
   private object Tables0 {

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.OutputMode
-import graft.sources.Tables
+import graft.sources.{Layout, Tables}
 import graft.streaming.{IngestPipeline, KafkaWire}
 
 /** The consumer.py ingest semantics (SURVEY §5.2/§5.3/§5.5): golden 5-row
@@ -808,7 +808,7 @@ class IngestPipelineSpec extends SparkSuite {
     assert(dataFiles(0).length === 2)
     val before = contents
     val coldStamps = dataFiles(1).map(f => f.getName -> f.lastModified).toSeq
-    IngestPipeline.compactStore(spark, store, "bucket=")
+    Layout.compact(spark, store)
     assert(dataFiles(0).length === 1, "oversized partition not compacted")
     assert(contents === before, "compaction changed store contents")
     // a partition already at the file budget is not opened or rewritten
@@ -816,7 +816,7 @@ class IngestPipelineSpec extends SparkSuite {
       === coldStamps)
     // idempotent: a second pass finds nothing to do
     val stamp0 = dataFiles(0).head.lastModified
-    IngestPipeline.compactStore(spark, store, "bucket=")
+    Layout.compact(spark, store)
     assert(dataFiles(0).head.lastModified === stamp0)
   }
 
@@ -849,7 +849,7 @@ class IngestPipelineSpec extends SparkSuite {
     grow(d2, "sk", "batch_id", "query_id")
     assert((dataFiles(d1), dataFiles(d2)) === ((2, 2)))
     assert((countOn(d1), countOn(d2)) === ((60L, 40L)))
-    IngestPipeline.compactStore(spark, store, "day=")
+    Layout.compact(spark, store)
     assert((dataFiles(d1), dataFiles(d2)) === ((1, 1)))
     assert((countOn(d1), countOn(d2)) === ((60L, 40L)))
     // the older day reads back with a null query_id

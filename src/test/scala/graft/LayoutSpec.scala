@@ -240,26 +240,89 @@ class LayoutSpec extends SparkSuite {
     // content exactly preserved, no leftover swap directories
     val compacted = spark.read.parquet(dir).orderBy("event_id").collect()
     assert(compacted.toSeq === originals.toSeq)
-    assert(!new java.io.File(dir + ".compact_tmp").exists())
-    assert(!new java.io.File(dir + ".compact_bak").exists())
+    assert(!new java.io.File(dir + ".tmp").exists())
+    assert(!new java.io.File(dir + ".bak").exists())
     // physical file count on disk matches the report
     val files = new java.io.File(dir).listFiles()
       .count(_.getName.endsWith(".parquet"))
     assert(files === 1)
   }
 
-  test("compaction refuses a Hive-partitioned root instead of flattening it") {
+  /** Day-partitioned events under `dir` whose `grown` days hold their
+    * rows twice, over more than one file each; returns the events. */
+  private def grownByDay(dir: String, grown: String*) = {
+    val events = Tables.events(spark, sf0001)
+    Layout.writeEventsByDay(events, dir)
+    events.withColumn("day", to_date(col("ts")))
+      .filter(col("day").cast("string").isin(grown: _*))
+      .repartition(3)
+      .write.mode("append").partitionBy("day").parquet(dir)
+    events
+  }
+  private def dataFiles(d: java.io.File) =
+    d.listFiles().filter(_.getName.endsWith(".parquet"))
+  private def sortedRows(dir: String) =
+    spark.read.parquet(dir).orderBy("event_id", "day").collect().toSeq
+
+  test("a partitioned root compacts per partition") {
     val dir = tempDir("graft_compact_part").toString + "/events"
-    Layout.writeEventsByDay(Tables.events(spark, sf0001), dir)
-    val err = intercept[IllegalArgumentException] {
-      Layout.compact(spark, dir)
-    }
-    assert(err.getMessage.contains("partition"))
-    // the per-partition call the error message prescribes works
-    val oneDay = new java.io.File(dir).listFiles()
-      .filter(f => f.isDirectory && f.getName.startsWith("day=")).head
-    val (before, after) = Layout.compact(spark, oneDay.toString)
-    assert(before >= after && after >= 1)
+    val grown = Seq("2024-01-05", "2024-01-06")
+    val events = grownByDay(dir, grown: _*)
+    val dayDirs = new java.io.File(dir).listFiles()
+      .filter(_.getName.startsWith("day=")).sortBy(_.getName).toSeq
+    val (touched, untouched) =
+      dayDirs.partition(d => grown.exists(g => d.getName == s"day=$g"))
+    assert(touched.forall(dataFiles(_).length > 1))
+    def bytes(ds: Seq[java.io.File]) = ds.map(d => d.getName ->
+      dataFiles(d).map(f => f.getName ->
+        java.nio.file.Files.readAllBytes(f.toPath).toSeq).toMap)
+    val (coldBytes, schema, rows) =
+      (bytes(untouched), spark.read.parquet(dir).schema, sortedRows(dir))
+    val filesBefore = dayDirs.map(dataFiles(_).length).sum
+    val (before, after) = Layout.compact(spark, dir)
+    assert((before, after) === ((filesBefore, untouched.size + 2)))
+    assert(touched.forall(dataFiles(_).length == 1))
+    // the same rows under the same schema, the day column included
+    assert(spark.read.parquet(dir).schema === schema)
+    assert(sortedRows(dir) === rows)
+    // untouched partitions are not opened, let alone rewritten
+    assert(bytes(untouched) === coldBytes)
+    // and a day filter still prunes to the day's directory
+    val oneDay = spark.read.parquet(dir).filter(col("day") === grown.head)
+    val plan = oneDay.queryExecution.executedPlan.toString
+    assert(plan.contains("PartitionFilters"), plan.take(2000))
+    assert(oneDay.count() ===
+      2 * events.filter(to_date(col("ts")) === grown.head).count())
+  }
+
+  test("compaction restores a flat store a crash stranded in .bak " +
+      "before it reads") {
+    val dir = tempDir("graft_compact_crash").toString + "/events"
+    Tables.events(spark, sf0001).repartition(8)
+      .write.mode("overwrite").parquet(dir)
+    val originals = spark.read.parquet(dir).orderBy("event_id").collect()
+    // a crash between the swap's two renames: the store only in .bak
+    assert(new java.io.File(dir).renameTo(new java.io.File(dir + ".bak")))
+    assert(Layout.compact(spark, dir) === ((8, 1)))
+    assert(spark.read.parquet(dir).orderBy("event_id").collect().toSeq ===
+      originals.toSeq)
+    assert(!new java.io.File(dir + ".bak").exists())
+  }
+
+  test("compaction restores a partition a crash stranded in .bak " +
+      "before it reads") {
+    val dir = tempDir("graft_compact_part_crash").toString + "/events"
+    val day = "2024-01-05"
+    grownByDay(dir, day)
+    val rows = sortedRows(dir)
+    // a crash between the day's two renames: the day only in .bak
+    val (dayDir, parked) = (new java.io.File(dir, s"day=$day"),
+      new java.io.File(dir + ".bak", s"day=$day"))
+    assert(parked.getParentFile.mkdirs() && dayDir.renameTo(parked))
+    Layout.compact(spark, dir)
+    // restored, and compacted with the rest, because it was restored first
+    assert(!parked.exists() && dataFiles(dayDir).length === 1)
+    assert(sortedRows(dir) === rows)
   }
 
   test("exact distinct agrees with HLL within its error bound") {

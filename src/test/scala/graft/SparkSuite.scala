@@ -6,25 +6,11 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared test harness: the engine's session ([[GraftSession]]) with the
-  * core count pinned to 4, so test behaviour does not depend on the box.
-  * Every suite in the JVM shares it; each suite starts with an empty cache,
-  * so a frame another suite left cached cannot change its plans. */
+/** Shared test harness: the test JVM's one session ([[SparkSuite.spark]]).
+  * Each suite starts with an empty cache, so a frame another suite left
+  * cached cannot change its plans. */
 trait SparkSuite extends AnyFunSuite with BeforeAndAfterAll {
-  lazy val spark: SparkSession = {
-    val s = GraftSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.warehouse.dir", SparkSuite.root.resolve("warehouse").toString)
-      .getOrCreate()
-    // windows over group-sized inputs warn "No Partition Defined" on every
-    // execution, about a thousand lines per run that bury the rest of the
-    // log; PlanShapeSpec's partitionless-window check gates that condition
-    org.apache.logging.log4j.core.config.Configurator.setLevel(
-      "org.apache.spark.sql.execution.window.WindowExec",
-      org.apache.logging.log4j.Level.ERROR)
-    s
-  }
+  lazy val spark: SparkSession = SparkSuite.spark
 
   /** A fresh directory under the test JVM's temp root. */
   def tempDir(prefix: String): Path = Files.createTempDirectory(SparkSuite.root, prefix)
@@ -81,6 +67,24 @@ trait SparkSuite extends AnyFunSuite with BeforeAndAfterAll {
 
 object SparkSuite {
   val sf0001 = "/root/testdata/sf0.001"
+
+  /** The engine's session ([[GraftSession]]) with the core count pinned
+    * to 4, so test behaviour does not depend on the box; built once per
+    * test JVM and shared by every suite (none stops it). */
+  lazy val spark: SparkSession = {
+    val s = GraftSession.builder()
+      .master("local[4]")
+      .config("spark.sql.shuffle.partitions", "4")
+      .config("spark.sql.warehouse.dir", root.resolve("warehouse").toString)
+      .getOrCreate()
+    // windows over group-sized inputs warn "No Partition Defined" on every
+    // execution, about a thousand lines per run that bury the rest of the
+    // log; PlanShapeSpec's partitionless-window check gates that condition
+    org.apache.logging.log4j.core.config.Configurator.setLevel(
+      "org.apache.spark.sql.execution.window.WindowExec",
+      org.apache.logging.log4j.Level.ERROR)
+    s
+  }
 
   /** One temp root per test JVM, holding the shared warehouse and every
     * spec's [[SparkSuite.tempDir]]s; deleted when the (forked) test JVM

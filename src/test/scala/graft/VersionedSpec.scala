@@ -32,6 +32,17 @@ class VersionedSpec extends SparkSuite {
     }
   }
 
+  test("a root holding a comma and a quote commits and reads its " +
+      "snapshots") {
+    val root = tempDir("graft_versioned").resolve("v,\"1").toString
+    Versioned.append(spark, root, Seq((1L, "a")).toDF("id", "s"))
+    Versioned.append(spark, root, Seq((2L, "b")).toDF("id", "s"))
+    assert(Versioned.readVersion(spark, root, 2).as[(Long, String)]
+      .collect().sorted.toSeq === Seq((1L, "a"), (2L, "b")))
+    assert(Versioned.readDiff(spark, root, 1, 2).as[(Long, String)]
+      .collect().toSeq === Seq((2L, "b")))
+  }
+
   test("readDiff returns exactly the increment and composes to the full " +
     "snapshot") {
     val root = tempDir("graft_diff").toString
