@@ -1,11 +1,8 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext
 
 /** Native Catalyst expression for `Σ (aᵢ−bᵢ)²` over two `array<double>`
   * columns — the k-means assignment inner loop ([[graft.ml.IvfIndex]]
@@ -24,53 +21,20 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
   * are dense) and read as 0.0 per ArrayData.getDouble semantics.
   */
 case class Dist2(left: Expression, right: Expression)
-    extends BinaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = {
-    def ok(dt: DataType): Boolean = dt match {
-      case ArrayType(DoubleType, _) => true
-      case _ => false
-    }
-    if (ok(left.dataType) && ok(right.dataType)) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires two array<double> arguments, " +
-        s"got ${left.dataType.sql} and ${right.dataType.sql}")
-  }
-
-  override def dataType: DataType = DoubleType
+    extends ArrayPairSum {
 
   override def prettyName: String = "graft_dist2"
 
-  override protected def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
-    val n = math.min(x.numElements(), y.numElements())
-    var s = 0.0
-    var i = 0
-    while (i < n) {
-      val d = x.getDouble(i) - y.getDouble(i)
-      s += d * d
-      i += 1
-    }
-    s
+  override protected def term(x: Double, y: Double): Double = {
+    val d = x - y
+    d * d
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val i = ctx.freshName("i")
-      val n = ctx.freshName("n")
-      val s = ctx.freshName("sum")
-      val d = ctx.freshName("d")
-      s"""
-         |int $n = java.lang.Math.min($a.numElements(), $b.numElements());
-         |double $s = 0.0;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  double $d = $a.getDouble($i) - $b.getDouble($i);
-         |  $s += $d * $d;
-         |}
-         |${ev.value} = $s;
-       """.stripMargin
-    })
+  override protected def termCode(ctx: CodegenContext, x: String, y: String,
+      s: String): String = {
+    val d = ctx.freshName("d")
+    s"double $d = $x - $y; $s += $d * $d;"
+  }
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): Dist2 =

@@ -25,7 +25,41 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
   * are dense) and read as 0.0 per ArrayData.getDouble semantics.
   */
 case class DotProduct(left: Expression, right: Expression)
-    extends BinaryExpression {
+    extends ArrayPairSum {
+
+  override def prettyName: String = "graft_dot"
+
+  override protected def term(x: Double, y: Double): Double = x * y
+
+  override protected def termCode(ctx: CodegenContext, x: String, y: String,
+      s: String): String = s"$s += $x * $y;"
+
+  override protected def withNewChildrenInternal(
+      newLeft: Expression, newRight: Expression): DotProduct =
+    copy(left = newLeft, right = newRight)
+}
+
+object DotProduct {
+  import org.apache.spark.sql.GraftSqlBridge
+
+  /** Column-API entry point: `dot(a, b)`. */
+  def apply(a: Column, b: Column): Column =
+    GraftSqlBridge.column(
+      DotProduct(GraftSqlBridge.expression(a), GraftSqlBridge.expression(b)))
+}
+
+/** The shared shape of [[DotProduct]] and [[Dist2]]: a double sum over
+  * two `array<double>` columns of one term per element pair, up to the
+  * shorter length, folded left to right in both the interpreted and the
+  * generated path. A subclass states its term once for each path. */
+private[functions] trait ArrayPairSum extends BinaryExpression {
+
+  /** The summand of elements `x` and `y`. */
+  protected def term(x: Double, y: Double): Double
+
+  /** Java statements adding the summand of `x` and `y` to `s`. */
+  protected def termCode(ctx: CodegenContext, x: String, y: String,
+      s: String): String
 
   override def checkInputDataTypes(): TypeCheckResult = {
     def ok(dt: DataType): Boolean = dt match {
@@ -40,15 +74,13 @@ case class DotProduct(left: Expression, right: Expression)
 
   override def dataType: DataType = DoubleType
 
-  override def prettyName: String = "graft_dot"
-
   override protected def nullSafeEval(a: Any, b: Any): Any = {
     val x = a.asInstanceOf[ArrayData]
     val y = b.asInstanceOf[ArrayData]
     val n = math.min(x.numElements(), y.numElements())
     var s = 0.0
     var i = 0
-    while (i < n) { s += x.getDouble(i) * y.getDouble(i); i += 1 }
+    while (i < n) { s += term(x.getDouble(i), y.getDouble(i)); i += 1 }
     s
   }
 
@@ -61,22 +93,9 @@ case class DotProduct(left: Expression, right: Expression)
          |int $n = java.lang.Math.min($a.numElements(), $b.numElements());
          |double $s = 0.0;
          |for (int $i = 0; $i < $n; $i++) {
-         |  $s += $a.getDouble($i) * $b.getDouble($i);
+         |  ${termCode(ctx, s"$a.getDouble($i)", s"$b.getDouble($i)", s)}
          |}
          |${ev.value} = $s;
        """.stripMargin
     })
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): DotProduct =
-    copy(left = newLeft, right = newRight)
-}
-
-object DotProduct {
-  import org.apache.spark.sql.GraftSqlBridge
-
-  /** Column-API entry point: `dot(a, b)`. */
-  def apply(a: Column, b: Column): Column =
-    GraftSqlBridge.column(
-      DotProduct(GraftSqlBridge.expression(a), GraftSqlBridge.expression(b)))
 }

@@ -3,6 +3,7 @@ package graft.ml
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Key
+import graft.operators.OpsHelpers.toksCol
 
 /** Byte-pair-encoding vocabulary training — the TRAIN half of the BPE
   * tokenizer (apply lives in [[graft.functions.BpeEncode]], a native
@@ -30,7 +31,7 @@ object Bpe {
   def train(docs: DataFrame, nMerges: Int,
       maxVocabWords: Int = 10000): Array[(String, String)] = {
     val dict: Array[(String, Long)] = docs
-      .select(explode(split(trim(lower(col("text"))), "\\s+")).as("w"))
+      .select(explode(toksCol).as("w"))
       .filter(length(col("w")) > 0)
       .groupBy(col("w")).agg(count(lit(1)).as("c"))
       .orderBy(desc("c"), asc("w"))

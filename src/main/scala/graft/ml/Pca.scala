@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Key
 import graft.operators.DedupOps.dot
+import graft.operators.OpsHelpers.r6
 
 /** Distributed PCA over the embedding column — the projection/whitening
   * step of an embedding pipeline (visualize a corpus, decorrelate before
@@ -172,16 +173,20 @@ object Pca {
     * Rows-only key (see object doc). */
   def embedPca(spark: SparkSession, dir: String): DataFrame = {
     val emb = graft.sources.Tables.embeddings(spark, dir)
-    val m = fit(emb)
+    top2Coords(emb, fit(emb))
+      .select(col("vec_id"), r6(col("p1")).as("pc1"), r6(col("p2")).as("pc2"))
+      .orderBy("vec_id")
+  }
+
+  /** Every embedding's (vec_id, p1, p2): its centered projection onto the
+    * top-2 principal axes of `m`, one codegen'd dot product each. */
+  private def top2Coords(emb: DataFrame, m: Model): DataFrame = {
     val meanLit = array(m.mean.map(lit).toIndexedSeq: _*)
     def proj(pc: Array[Double]) =
       dot(zip_with(col("v"), meanLit, (a, b) => a - b),
         array(pc.map(lit).toIndexedSeq: _*))
     emb.select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-      .select(col("vec_id"),
-        (round(proj(m.pc1), 6) + lit(0.0d)).as("pc1"),
-        (round(proj(m.pc2), 6) + lit(0.0d)).as("pc2"))
-      .orderBy("vec_id")
+      .select(col("vec_id"), proj(m.pc1).as("p1"), proj(m.pc2).as("p2"))
   }
 
   /** PCA whitening: the top-2 projection additionally scaled by 1/√λ per
@@ -196,14 +201,9 @@ object Pca {
     val m = fit(emb)
     require(m.l1 > 0 && m.l2 > 0, s"degenerate spectrum: λ=(${m.l1}, ${m.l2})")
     val (s1, s2) = (1.0 / math.sqrt(m.l1), 1.0 / math.sqrt(m.l2))
-    val meanLit = array(m.mean.map(lit).toIndexedSeq: _*)
-    def proj(pc: Array[Double]) =
-      dot(zip_with(col("v"), meanLit, (a, b) => a - b),
-        array(pc.map(lit).toIndexedSeq: _*))
-    emb.select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-      .select(col("vec_id"),
-        (round(proj(m.pc1) * lit(s1), 6) + lit(0.0d)).as("w1"),
-        (round(proj(m.pc2) * lit(s2), 6) + lit(0.0d)).as("w2"))
+    top2Coords(emb, m)
+      .select(col("vec_id"), r6(col("p1") * lit(s1)).as("w1"),
+        r6(col("p2") * lit(s2)).as("w2"))
       .orderBy("vec_id")
   }
 

@@ -196,19 +196,27 @@ object PqIndex {
   def simSearchPq(spark: SparkSession, dir: String): DataFrame = {
     val emb = Tables.embeddings(spark, dir)
     val cb = train(emb)
+    adcSearch(emb, encode(emb, cb), cb)
+  }
+
+  /** Vec 0's top-10: an ADC scan of `codes` (vec_id, codes) under the
+    * `cb` codebooks for the 100 nearest codes, then an exact-cosine
+    * re-rank of that short list against `emb`. */
+  private def adcSearch(emb: DataFrame, codes: DataFrame,
+      cb: Codebooks): DataFrame = {
     val probeId = 0L
     val pVec = emb.filter(col("vec_id") === probeId)
       .select(col("embedding").cast("array<double>"))
       .head().getSeq[Double](0).toArray
     val pNorm = math.sqrt(pVec.map(x => x * x).sum)
     val pUnit = pVec.map(_ / pNorm) // ADC probes on the sphere too
-    val shortIds = encode(emb, cb)
+    val shortIds = codes
       .filter(col("vec_id") =!= probeId)
       .withColumn("adc_d2", adcColumn(adcTable(pUnit, cb)))
       .orderBy(col("adc_d2"), col("vec_id")) // TakeOrderedAndProject
       .limit(100)
       .select(col("vec_id")).collect().map(_.getLong(0))
-    rerankByIds(emb, shortIds, pVec)
+    rerankByIds(emb, shortIds, pVec) // 100-id point fetch
   }
 
   // ── train / persist / serve split ──────────────────────────────────
@@ -230,16 +238,22 @@ object PqIndex {
   def ensureModel(spark: SparkSession, dir: String): String =
     Layout.ensureStore(spark, dir, s"pq_v2_m${M}_k${K}_i${Iters}",
         "codes/_SUCCESS", "embeddings") { path =>
-      import spark.implicits._
       val emb = Tables.embeddings(spark, dir)
       val cb = train(emb)
-      cb.books.zipWithIndex.flatMap { case (model, m) =>
-        model.centroids.map { case (code, cvec) => (m, code, cvec.toSeq) }
-      }.toDF("m", "code", "cvec")
-        .coalesce(1).write.mode("overwrite").parquet(s"$path/books")
+      writeBooks(spark, cb, path)
       encode(emb, cb).select(col("vec_id"), col("codes"))
         .write.mode("overwrite").parquet(s"$path/codes")
     }
+
+  /** Writes `cb` as `<path>/books` (m, code, cvec), one file. */
+  private def writeBooks(spark: SparkSession, cb: Codebooks,
+      path: String): Unit = {
+    import spark.implicits._
+    cb.books.zipWithIndex.flatMap { case (model, m) =>
+      model.centroids.map { case (code, cvec) => (m, code, cvec.toSeq) }
+    }.toDF("m", "code", "cvec")
+      .coalesce(1).write.mode("overwrite").parquet(s"$path/books")
+  }
 
   /** Load persisted codebooks (M·K rows — model-sized collect) as corpus
     * state, like the IVF model ([[IvfIndex.loadModel]]). */
@@ -266,20 +280,8 @@ object PqIndex {
   def simSearchPqServe(spark: SparkSession, dir: String): DataFrame = {
     val path = ensureModel(spark, dir)
     val cb = loadBooks(spark, dir)
-    val emb = Tables.embeddings(spark, dir)
-    val probeId = 0L
-    val pVec = emb.filter(col("vec_id") === probeId)
-      .select(col("embedding").cast("array<double>"))
-      .head().getSeq[Double](0).toArray
-    val pNorm = math.sqrt(pVec.map(x => x * x).sum)
-    val pUnit = pVec.map(_ / pNorm)
-    val shortIds = Tables.parquet(spark, s"$path/codes")
-      .filter(col("vec_id") =!= probeId)
-      .withColumn("adc_d2", adcColumn(adcTable(pUnit, cb)))
-      .orderBy(col("adc_d2"), col("vec_id"))
-      .limit(100)
-      .select(col("vec_id")).collect().map(_.getLong(0))
-    rerankByIds(emb, shortIds, pVec) // 100-id point fetch
+    adcSearch(Tables.embeddings(spark, dir),
+      Tables.parquet(spark, s"$path/codes"), cb)
   }
 
   /** Coarse cells and probes of [[simSearchIvfPq]]: 8 cells keep ≥ K
@@ -407,10 +409,7 @@ object PqIndex {
       coarse.centroids.toSeq.map { case (cell, cvec) => (cell, cvec.toSeq) }
         .toDF("cell", "cvec")
         .coalesce(1).write.mode("overwrite").parquet(s"$path/coarse")
-      cb.books.zipWithIndex.flatMap { case (model, m) =>
-        model.centroids.map { case (code, cvec) => (m, code, cvec.toSeq) }
-      }.toDF("m", "code", "cvec")
-        .coalesce(1).write.mode("overwrite").parquet(s"$path/books")
+      writeBooks(spark, cb, path)
       codes.write.partitionBy("cell").mode("overwrite").parquet(s"$path/codes")
       unit.unpersist()
     }

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Key
 import graft.sources.Tables
+import graft.operators.OpsHelpers.{flagStatusTotals, pearsonSums, userDayGrid}
 
 /** Operators beyond the reference and beyond plain relational algebra that
   * a production event/training-data pipeline needs: sessionization, as-of
@@ -173,7 +174,15 @@ object AdvancedOps {
   // per-user timeline — one shuffle, no range join, no point-in-time
   // subquery per row (the plan that survives 100×: state per user is one
   // value). ──
-  def asofJoin(spark: SparkSession, dir: String): DataFrame = {
+  def asofJoin(spark: SparkSession, dir: String): DataFrame =
+    lastClick(spark, dir)
+      .select(col("event_id").as("purchase_id"), col("user_id"),
+        col("last_click_us"))
+      .orderBy("purchase_id")
+
+  /** Purchases with `last_click_us`, the user's latest click at or before
+    * each: a running max over the per-user (us, event_id) timeline. */
+  private def lastClick(spark: SparkSession, dir: String): DataFrame = {
     val order = Window.partitionBy(col("user_id"))
       .orderBy(col("us"), col("event_id"))
       .rowsBetween(Window.unboundedPreceding, 0)
@@ -182,9 +191,6 @@ object AdvancedOps {
       .withColumn("last_click_us",
         max(when(col("event_type") === "click", col("us"))).over(order))
       .filter(col("event_type") === "purchase")
-      .select(col("event_id").as("purchase_id"), col("user_id"),
-        col("last_click_us"))
-      .orderBy("purchase_id")
   }
 
   private val DayUs = 86400L * 1000000
@@ -230,22 +236,14 @@ object AdvancedOps {
   // Same single running-max pass; the tolerance is a post-projection on
   // the matched timestamp, so the plan is identical to the untoleranced
   // form: one shuffle, per-user O(1) state. ──
-  def asofJoinTolerance(spark: SparkSession, dir: String): DataFrame = {
-    val order = Window.partitionBy(col("user_id"))
-      .orderBy(col("us"), col("event_id"))
-      .rowsBetween(Window.unboundedPreceding, 0)
-    seq(spark, dir)
-      .filter(col("event_type").isin("click", "purchase"))
-      .withColumn("last_click_us",
-        max(when(col("event_type") === "click", col("us"))).over(order))
-      .filter(col("event_type") === "purchase")
+  def asofJoinTolerance(spark: SparkSession, dir: String): DataFrame =
+    lastClick(spark, dir)
       .select(col("event_id").as("purchase_id"), col("user_id"),
         when(col("us") - col("last_click_us") <= AsofTolUs,
           col("last_click_us")).as("click_us_1h"),
         when(col("us") - col("last_click_us") <= AsofTolUs,
           col("us") - col("last_click_us")).as("lag_us"))
       .orderBy("purchase_id")
-  }
 
   // ── nearest-direction as-of join: each purchase matched to its CLOSEST
   // click in either direction, ties to the earlier one — pandas
@@ -292,10 +290,7 @@ object AdvancedOps {
       .select(col("user_id"), to_date(col("ts")).as("day"))
       .groupBy(col("user_id"), col("day"))
       .agg(count(lit(1)).as("cnt"))
-    val grid = daily.groupBy(col("user_id"))
-      .agg(min(col("day")).as("d0"), max(col("day")).as("d1"))
-      .select(col("user_id"),
-        explode(expr("sequence(d0, d1, interval 1 day)")).as("day"))
+    val grid = userDayGrid(daily)
     grid.join(daily, Seq("user_id", "day"), "left")
       .select(col("user_id"),
         date_format(col("day"), "yyyy-MM-dd").as("day_s"),
@@ -317,10 +312,7 @@ object AdvancedOps {
       .select(col("user_id"), to_date(col("ts")).as("day"), col("value"))
       .groupBy(col("user_id"), col("day"))
       .agg(Exact.avgMoney(col("value")).as("avg_v"))
-    val grid = daily.groupBy(col("user_id"))
-      .agg(min(col("day")).as("d0"), max(col("day")).as("d1"))
-      .select(col("user_id"),
-        explode(expr("sequence(d0, d1, interval 1 day)")).as("day"))
+    val grid = userDayGrid(daily)
     val w = Window.partitionBy(col("user_id")).orderBy(col("day"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     grid.join(daily, Seq("user_id", "day"), "left")
@@ -337,16 +329,8 @@ object AdvancedOps {
   // SURVEY §2.5 notes cube/rollup as the natural extension the reference
   // never had). ──
   def rollupAgg(spark: SparkSession, dir: String): DataFrame =
-    Tables.lineitem(spark, dir)
-      .rollup(col("l_returnflag"), col("l_linestatus"))
-      .agg(count(lit(1)).as("cnt"),
-        graft.functions.Exact.sumMoney(col("l_quantity")).as("sum_qty"),
-        grouping(col("l_returnflag")).cast("int").as("g_rf"),
-        grouping(col("l_linestatus")).cast("int").as("g_ls"))
-      .select(coalesce(col("l_returnflag"), lit("<all>")).as("returnflag"),
-        coalesce(col("l_linestatus"), lit("<all>")).as("linestatus"),
-        col("cnt"), col("sum_qty"), col("g_rf"), col("g_ls"))
-      .orderBy("g_rf", "g_ls", "returnflag", "linestatus")
+    flagStatusTotals(Tables.lineitem(spark, dir)
+      .rollup(col("l_returnflag"), col("l_linestatus")))
 
   // ── exact distinct-aggregate: users per event type. Spark plans this as
   // the two-phase expand/partial/final pipeline (dedup on (group, value)
@@ -483,6 +467,16 @@ object AdvancedOps {
         col("total_revenue"), col("n_items"))
   }
 
+  /** The (n_nationkey, n_name) nations of the region named `region`. */
+  private def regionNations(spark: SparkSession, dir: String,
+      region: String): DataFrame = {
+    val r = Tables.region(spark, dir)
+      .filter(col("r_name") === region).select(col("r_regionkey"))
+    Tables.nation(spark, dir)
+      .join(broadcast(r), col("n_regionkey") === col("r_regionkey"))
+      .select(col("n_nationkey"), col("n_name"))
+  }
+
   // ── TPC-H Q5 local-supplier revenue: the 6-table star+snowflake join —
   // the canonical join-ORDER showcase. Plan shape by size class: region
   // and nation prune FIRST (broadcast, region filter cuts nations 5×),
@@ -497,11 +491,7 @@ object AdvancedOps {
     import graft.functions.Exact
     val lo = lit(java.sql.Timestamp.valueOf("1996-01-01 00:00:00"))
     val hi = lit(java.sql.Timestamp.valueOf("1997-01-01 00:00:00"))
-    val r = Tables.region(spark, dir)
-      .filter(col("r_name") === "ASIA").select(col("r_regionkey"))
-    val n = Tables.nation(spark, dir)
-      .join(broadcast(r), col("n_regionkey") === col("r_regionkey"))
-      .select(col("n_nationkey"), col("n_name"))
+    val n = regionNations(spark, dir, "ASIA")
     val s = Tables.supplier(spark, dir)
       .select(col("s_suppkey"), col("s_nationkey"))
     val c = Tables.customer(spark, dir)
@@ -919,11 +909,7 @@ object AdvancedOps {
     val p = Tables.part(spark, dir)
       .filter(col("p_size").between(10, 20) && col("p_type") === "STANDARD")
       .select(col("p_partkey"), col("p_name"), col("p_size"))
-    val r = Tables.region(spark, dir)
-      .filter(col("r_name") === "EUROPE").select(col("r_regionkey"))
-    val n = Tables.nation(spark, dir)
-      .join(broadcast(r), col("n_regionkey") === col("r_regionkey"))
-      .select(col("n_nationkey"), col("n_name"))
+    val n = regionNations(spark, dir, "EUROPE")
     val s = Tables.supplier(spark, dir)
       .join(broadcast(n), col("s_nationkey") === col("n_nationkey"))
       .select(col("s_suppkey"), col("s_name"), col("s_acctbal"), col("n_name"))
@@ -1031,16 +1017,8 @@ object AdvancedOps {
   // ── cube: all grouping-set combinations (rollup's full-lattice sibling,
   // same Expand-based plan). ──
   def cubeAgg(spark: SparkSession, dir: String): DataFrame =
-    Tables.lineitem(spark, dir)
-      .cube(col("l_returnflag"), col("l_linestatus"))
-      .agg(count(lit(1)).as("cnt"),
-        graft.functions.Exact.sumMoney(col("l_quantity")).as("sum_qty"),
-        grouping(col("l_returnflag")).cast("int").as("g_rf"),
-        grouping(col("l_linestatus")).cast("int").as("g_ls"))
-      .select(coalesce(col("l_returnflag"), lit("<all>")).as("returnflag"),
-        coalesce(col("l_linestatus"), lit("<all>")).as("linestatus"),
-        col("cnt"), col("sum_qty"), col("g_rf"), col("g_ls"))
-      .orderBy("g_rf", "g_ls", "returnflag", "linestatus")
+    flagStatusTotals(Tables.lineitem(spark, dir)
+      .cube(col("l_returnflag"), col("l_linestatus")))
 
   // ── lead/lag: the remaining window family — previous/next value along
   // the per-user timeline (entity-partitioned, single shuffle). ──
@@ -1070,13 +1048,9 @@ object AdvancedOps {
     val nD = col("n").cast("double")
     Tables.lineitem(spark, dir)
       .groupBy(col("l_returnflag"))
-      .agg(count(lit(1)).as("n"),
-        sum(x).cast("double").as("sx"), sum(y).cast("double").as("sy"),
-        sum(x * y).cast("double").as("sxy"),
-        sum(x * x).cast("double").as("sxx"),
-        sum(y * y).cast("double").as("syy"),
+      .agg(count(lit(1)).as("n"), pearsonSums(x, y) ++ Seq(
         sum(u).cast("double").as("su"), sum(t).cast("double").as("sv"),
-        sum(u * t).cast("double").as("suv"))
+        sum(u * t).cast("double").as("suv")): _*)
       .select(col("l_returnflag"),
         // degenerate groups (n=1, or zero variance in either column) get
         // an EXPLICIT NULL, guarded the same way in the oracle SQL: left
@@ -1159,15 +1133,39 @@ object AdvancedOps {
       .orderBy("entry_type", "exit_type")
   }
 
+  /** Oracle CTEs mirroring [[userDayGrid]] over `daily(user_id, day,
+    * ..)`: each user's first and last day `spans` and the day spine
+    * `grid(user_id, day)`. Ends at its closing parenthesis. */
+  private val duckUserDayGrid: String =
+    """spans AS (SELECT user_id, min(day) AS d0, max(day) AS d1
+      |          FROM daily GROUP BY 1),
+      |grid AS (SELECT user_id,
+      |           CAST(unnest(generate_series(d0, d1, INTERVAL 1 DAY)) AS DATE) AS day
+      |         FROM spans)""".stripMargin
+
+  /** Oracle CTEs mirroring [[lastClick]] over clicks and purchases: the
+    * events `seq` and `marked`, each with the user's latest click at or
+    * before it as `alias`. Ends at that alias. */
+  private def duckLastClick(alias: String): String =
+    s"""WITH seq AS (
+       |  SELECT event_id, user_id, event_type,
+       |    epoch_us(CAST(ts AS TIMESTAMP)) AS us
+       |  FROM events WHERE event_type IN ('click', 'purchase')),
+       |marked AS (
+       |  SELECT *,
+       |    max(CASE WHEN event_type = 'click' THEN us END) OVER (
+       |      PARTITION BY user_id ORDER BY us, event_id
+       |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS $alias""".stripMargin
+
   val keys: Seq[Key] = Seq(
     Key("sessions_entry_exit", sessionsEntryExit, Some(
-      """WITH seq AS (
+      s"""WITH seq AS (
         |  SELECT event_id, user_id, event_type,
         |    epoch_us(CAST(ts AS TIMESTAMP)) AS us FROM events),
         |flags AS (
         |  SELECT user_id, us, event_id, event_type,
         |    CASE WHEN lag(us) OVER w IS NULL
-        |           OR us - lag(us) OVER w > 1800000000
+        |           OR ${OracleSql.SessionBreak}
         |         THEN 1 ELSE 0 END AS is_new
         |  FROM seq WINDOW w AS (PARTITION BY user_id ORDER BY us, event_id)),
         |sess AS (
@@ -1214,18 +1212,8 @@ object AdvancedOps {
     // the identical day-clamped sweep — integer µs arithmetic replays
     // bit-for-bit; unnest(generate_series) is Spark's explode(sequence)
     Key("sessions_coverage", sessionsCoverage, Some(
-      """WITH seq AS (
-        |  SELECT event_id, user_id, epoch_us(CAST(ts AS TIMESTAMP)) AS us FROM events),
-        |flags AS (
-        |  SELECT user_id, us, event_id,
-        |    CASE WHEN lag(us) OVER w IS NULL OR us - lag(us) OVER w > 1800000000
-        |         THEN 1 ELSE 0 END AS is_new
-        |  FROM seq WINDOW w AS (PARTITION BY user_id ORDER BY us, event_id)),
-        |sess0 AS (
-        |  SELECT user_id, us,
-        |    sum(is_new) OVER (PARTITION BY user_id ORDER BY us, event_id
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS session_id
-        |  FROM flags),
+      OracleSql.sessionIdCtes("sess0", cast = false) +
+      """,
         |sess AS (
         |  SELECT min(us) AS start_us, max(us) + 1 AS end_x
         |  FROM sess0 GROUP BY user_id, session_id),
@@ -1249,18 +1237,8 @@ object AdvancedOps {
         |  round(CAST(sum(c) AS DOUBLE) / 86400000000, 6) AS coverage
         |FROM cov GROUP BY dayno ORDER BY dayno""".stripMargin)),
     Key("sessionize", sessionize, Some(
-      """WITH seq AS (
-        |  SELECT event_id, user_id, epoch_us(CAST(ts AS TIMESTAMP)) AS us FROM events),
-        |flags AS (
-        |  SELECT user_id, us, event_id,
-        |    CASE WHEN lag(us) OVER w IS NULL OR us - lag(us) OVER w > 1800000000
-        |         THEN 1 ELSE 0 END AS is_new
-        |  FROM seq WINDOW w AS (PARTITION BY user_id ORDER BY us, event_id)),
-        |sess AS (
-        |  SELECT user_id, us,
-        |    CAST(sum(is_new) OVER (PARTITION BY user_id ORDER BY us, event_id
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS session_id
-        |  FROM flags)
+      OracleSql.sessionIdCtes("sess", cast = true) +
+      """
         |SELECT user_id, session_id, count(*) AS n_events,
         |  min(us) AS start_us, max(us) AS end_us
         |FROM sess GROUP BY user_id, session_id
@@ -1269,11 +1247,7 @@ object AdvancedOps {
       """WITH daily AS (
         |  SELECT user_id, CAST(ts AS DATE) AS day, count(*) AS cnt
         |  FROM events GROUP BY 1, 2),
-        |spans AS (SELECT user_id, min(day) AS d0, max(day) AS d1
-        |          FROM daily GROUP BY 1),
-        |grid AS (SELECT user_id,
-        |           CAST(unnest(generate_series(d0, d1, INTERVAL 1 DAY)) AS DATE) AS day
-        |         FROM spans)
+        |""".stripMargin + duckUserDayGrid + """
         |SELECT g.user_id AS user_id, strftime(g.day, '%Y-%m-%d') AS day_s,
         |  COALESCE(d.cnt, 0) AS cnt
         |FROM grid g LEFT JOIN daily d ON g.user_id = d.user_id AND g.day = d.day
@@ -1283,11 +1257,7 @@ object AdvancedOps {
         |  SELECT user_id, CAST(ts AS DATE) AS day,
         |    CAST(sum(CAST("value" AS DECIMAL(18,2))) AS DOUBLE) / count("value") AS avg_v
         |  FROM events GROUP BY 1, 2),
-        |spans AS (SELECT user_id, min(day) AS d0, max(day) AS d1
-        |          FROM daily GROUP BY 1),
-        |grid AS (SELECT user_id,
-        |           CAST(unnest(generate_series(d0, d1, INTERVAL 1 DAY)) AS DATE) AS day
-        |         FROM spans)
+        |""".stripMargin + duckUserDayGrid + """
         |SELECT g.user_id AS user_id, strftime(g.day, '%Y-%m-%d') AS day_s,
         |  round(last_value(d.avg_v IGNORE NULLS) OVER (
         |    PARTITION BY g.user_id ORDER BY g.day
@@ -1296,18 +1266,8 @@ object AdvancedOps {
         |FROM grid g LEFT JOIN daily d ON g.user_id = d.user_id AND g.day = d.day
         |ORDER BY user_id, day_s""".stripMargin)),
     Key("join_interval_overlap", joinIntervalOverlap, Some(
-      """WITH seq AS (
-        |  SELECT event_id, user_id, epoch_us(CAST(ts AS TIMESTAMP)) AS us FROM events),
-        |flags AS (
-        |  SELECT user_id, us, event_id,
-        |    CASE WHEN lag(us) OVER w IS NULL OR us - lag(us) OVER w > 1800000000
-        |         THEN 1 ELSE 0 END AS is_new
-        |  FROM seq WINDOW w AS (PARTITION BY user_id ORDER BY us, event_id)),
-        |sess AS (
-        |  SELECT user_id, us,
-        |    sum(is_new) OVER (PARTITION BY user_id ORDER BY us, event_id
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS session_id
-        |  FROM flags),
+      OracleSql.sessionIdCtes("sess", cast = false) +
+      """,
         |sa AS (
         |  SELECT user_id, session_id, min(us) AS start_us, max(us) AS end_us
         |  FROM sess GROUP BY 1, 2),
@@ -1323,15 +1283,7 @@ object AdvancedOps {
         |  ON sa.start_us < promos.p1 AND promos.p0 <= sa.end_us
         |GROUP BY 1 ORDER BY promo_day""".stripMargin)),
     Key("asof_join_tolerance", asofJoinTolerance, Some(
-      """WITH seq AS (
-        |  SELECT event_id, user_id, event_type,
-        |    epoch_us(CAST(ts AS TIMESTAMP)) AS us
-        |  FROM events WHERE event_type IN ('click', 'purchase')),
-        |marked AS (
-        |  SELECT *,
-        |    max(CASE WHEN event_type = 'click' THEN us END) OVER (
-        |      PARTITION BY user_id ORDER BY us, event_id
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS lc
+      duckLastClick("lc") + """
         |  FROM seq)
         |SELECT event_id AS purchase_id, user_id,
         |  CASE WHEN us - lc <= 3600000000 THEN lc END AS click_us_1h,
@@ -1342,18 +1294,8 @@ object AdvancedOps {
     // timeline — the affordable-at-oracle-scale form whose equality
     // proves the engine's day-partitioned prefix decomposition exact
     Key("sessions_concurrent", sessionsConcurrent, Some(
-      """WITH seq AS (
-        |  SELECT event_id, user_id, epoch_us(CAST(ts AS TIMESTAMP)) AS us FROM events),
-        |flags AS (
-        |  SELECT user_id, us, event_id,
-        |    CASE WHEN lag(us) OVER w IS NULL OR us - lag(us) OVER w > 1800000000
-        |         THEN 1 ELSE 0 END AS is_new
-        |  FROM seq WINDOW w AS (PARTITION BY user_id ORDER BY us, event_id)),
-        |s0 AS (
-        |  SELECT user_id, us,
-        |    CAST(sum(is_new) OVER (PARTITION BY user_id ORDER BY us, event_id
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS session_id
-        |  FROM flags),
+      OracleSql.sessionIdCtes("s0", cast = true) +
+      """,
         |sess AS (
         |  SELECT user_id, session_id, min(us) AS start_us, max(us) AS end_us
         |  FROM s0 GROUP BY user_id, session_id),
@@ -1378,15 +1320,7 @@ object AdvancedOps {
         |    AS sessions_started
         |FROM r GROUP BY day ORDER BY day""".stripMargin)),
     Key("asof_join_nearest", asofJoinNearest, Some(
-      """WITH seq AS (
-        |  SELECT event_id, user_id, event_type,
-        |    epoch_us(CAST(ts AS TIMESTAMP)) AS us
-        |  FROM events WHERE event_type IN ('click', 'purchase')),
-        |marked AS (
-        |  SELECT *,
-        |    max(CASE WHEN event_type = 'click' THEN us END) OVER (
-        |      PARTITION BY user_id ORDER BY us, event_id
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS back_us,
+      duckLastClick("back_us") + """,
         |    min(CASE WHEN event_type = 'click' THEN us END) OVER (
         |      PARTITION BY user_id ORDER BY us, event_id
         |      ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING) AS fwd_us
@@ -1402,15 +1336,7 @@ object AdvancedOps {
         |  us - click_us AS delta_us
         |FROM n ORDER BY purchase_id""".stripMargin)),
     Key("asof_join", asofJoin, Some(
-      """WITH seq AS (
-        |  SELECT event_id, user_id, event_type,
-        |    epoch_us(CAST(ts AS TIMESTAMP)) AS us
-        |  FROM events WHERE event_type IN ('click', 'purchase')),
-        |marked AS (
-        |  SELECT *,
-        |    max(CASE WHEN event_type = 'click' THEN us END) OVER (
-        |      PARTITION BY user_id ORDER BY us, event_id
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS last_click_us
+      duckLastClick("last_click_us") + """
         |  FROM seq)
         |SELECT event_id AS purchase_id, user_id, last_click_us
         |FROM marked WHERE event_type = 'purchase'
@@ -1438,14 +1364,7 @@ object AdvancedOps {
         |  FROM lineitem GROUP BY l_returnflag) t
         |ORDER BY l_returnflag""".stripMargin)),
     Key("cube_agg", cubeAgg, Some(
-      """SELECT COALESCE(l_returnflag, '<all>') AS returnflag,
-        |  COALESCE(l_linestatus, '<all>') AS linestatus,
-        |  count(*) AS cnt,
-        |  CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
-        |  CAST(grouping(l_returnflag) AS INTEGER) AS g_rf,
-        |  CAST(grouping(l_linestatus) AS INTEGER) AS g_ls
-        |FROM lineitem GROUP BY CUBE (l_returnflag, l_linestatus)
-        |ORDER BY g_rf, g_ls, returnflag, linestatus""".stripMargin)),
+      OracleSql.lineitemGrouping("CUBE (l_returnflag, l_linestatus)"))),
     Key("window_lead_lag", windowLeadLag, Some(
       """SELECT event_id, user_id, "value",
         |  lag("value", 1) OVER w AS prev_value,
@@ -1744,13 +1663,6 @@ object AdvancedOps {
         |  CAST(sum(CAST("value" AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
         |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin)),
     Key("rollup_agg", rollupAgg, Some(
-      """SELECT COALESCE(l_returnflag, '<all>') AS returnflag,
-        |  COALESCE(l_linestatus, '<all>') AS linestatus,
-        |  count(*) AS cnt,
-        |  CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
-        |  CAST(grouping(l_returnflag) AS INTEGER) AS g_rf,
-        |  CAST(grouping(l_linestatus) AS INTEGER) AS g_ls
-        |FROM lineitem GROUP BY ROLLUP (l_returnflag, l_linestatus)
-        |ORDER BY g_rf, g_ls, returnflag, linestatus""".stripMargin)),
+      OracleSql.lineitemGrouping("ROLLUP (l_returnflag, l_linestatus)"))),
   )
 }

@@ -610,6 +610,14 @@ object AnalyticsOps {
       round(expr("percentile(lat_us, 0.9) / 1000000"), 6).as("p90_s"))
   }
 
+  /** Each day's click count c and purchase count p: the paired daily
+    * series of the rank-correlation keys. */
+  private def clickPurchaseDaily(spark: SparkSession, dir: String): DataFrame =
+    ev(spark, dir)
+      .groupBy(col("day"))
+      .agg(count(when(col("event_type") === "click", 1)).as("c"),
+        count(when(col("event_type") === "purchase", 1)).as("p"))
+
   // ── Spearman rank correlation of the daily click vs purchase volume
   // series — the robust (monotone, outlier-tolerant) twin of
   // rolling_corr's Pearson. The engine-neutral device: DOUBLED average
@@ -620,10 +628,7 @@ object AnalyticsOps {
   // Scaling ranks by 2 leaves ρ unchanged (correlation is scale-
   // invariant). ──
   def statsSpearman(spark: SparkSession, dir: String): DataFrame = {
-    val daily = ev(spark, dir)
-      .groupBy(col("day"))
-      .agg(count(when(col("event_type") === "click", 1)).as("c"),
-        count(when(col("event_type") === "purchase", 1)).as("p"))
+    val daily = clickPurchaseDaily(spark, dir)
     val rc = daily
       .withColumn("rx",
         rank().over(Window.orderBy(col("c"))) * 2 +
@@ -651,10 +656,7 @@ object AnalyticsOps {
   // live on the aggregated series, never on facts. All counts integer;
   // one sqrt, cast-first. ──
   def statsKendallTau(spark: SparkSession, dir: String): DataFrame = {
-    val daily = ev(spark, dir)
-      .groupBy(col("day"))
-      .agg(count(when(col("event_type") === "click", 1)).as("c"),
-        count(when(col("event_type") === "purchase", 1)).as("p"))
+    val daily = clickPurchaseDaily(spark, dir)
     val a = daily.select(col("day").as("d1"), col("c").as("c1"),
       col("p").as("p1"))
     val b = daily.select(col("day").as("d2"), col("c").as("c2"),
@@ -945,6 +947,24 @@ object AnalyticsOps {
         Tables.customer(spark, dir), "c_nationkey", "c_mktsegment"))
       .orderBy("fd")
 
+  /** Oracle CTEs of the customer–supplier trade graph: the distinct
+    * edges `e(src, dst)` (customers even ids, suppliers odd) and `ue`,
+    * each edge both ways. Comma-terminated. */
+  private val duckTradeUe: String =
+    """WITH e AS (
+      |  SELECT DISTINCT o_custkey * 2 AS src, l_suppkey * 2 + 1 AS dst
+      |  FROM orders JOIN lineitem ON l_orderkey = o_orderkey),
+      |ue AS (SELECT src, dst FROM e UNION ALL SELECT dst, src FROM e),""".stripMargin
+
+  /** Oracle CTE mirroring [[clickPurchaseDaily]]: `daily(day, c, p)`.
+    * Comma-terminated. */
+  private val duckClickPurchaseDaily: String =
+    """WITH daily AS (
+      |  SELECT CAST(CAST(ts AS TIMESTAMP) AS DATE) AS day,
+      |    count(CASE WHEN event_type = 'click' THEN 1 END) AS c,
+      |    count(CASE WHEN event_type = 'purchase' THEN 1 END) AS p
+      |  FROM events GROUP BY 1),""".stripMargin
+
   private val prIterSql: String = {
     // unrolled iterations: it0 = uniform PrScale; it{k} from it{k-1}
     val iters = (1 to PrIters).map { k =>
@@ -957,10 +977,7 @@ object AnalyticsOps {
          |         JOIN deg ON ue.src = deg.src
          |  GROUP BY 1)""".stripMargin
     }.mkString(",\n")
-    s"""WITH e AS (
-       |  SELECT DISTINCT o_custkey * 2 AS src, l_suppkey * 2 + 1 AS dst
-       |  FROM orders JOIN lineitem ON l_orderkey = o_orderkey),
-       |ue AS (SELECT src, dst FROM e UNION ALL SELECT dst, src FROM e),
+    duckTradeUe + s"""
        |deg AS (SELECT src, count(*) AS d FROM ue GROUP BY 1),
        |r0 AS (SELECT src AS node, CAST($PrScale AS BIGINT) AS r FROM deg),
        |$iters
@@ -981,10 +998,7 @@ object AnalyticsOps {
          |    // (SELECT max(s) FROM it$k) AS BIGINT) AS r
          |  FROM it$k)""".stripMargin
     }.mkString(",\n")
-    s"""WITH e AS (
-       |  SELECT DISTINCT o_custkey * 2 AS src, l_suppkey * 2 + 1 AS dst
-       |  FROM orders JOIN lineitem ON l_orderkey = o_orderkey),
-       |ue AS (SELECT src, dst FROM e UNION ALL SELECT dst, src FROM e),
+    duckTradeUe + s"""
        |r0 AS (SELECT DISTINCT src AS node, CAST($EcScale AS BIGINT) AS r
        |       FROM ue),
        |$iters
@@ -1009,10 +1023,7 @@ object AnalyticsOps {
          |      row_number() OVER (PARTITION BY src ORDER BY c DESC, lbl) AS rn
          |    FROM c$k) WHERE rn = 1)""".stripMargin
     }.mkString(",\n")
-    s"""WITH e AS (
-       |  SELECT DISTINCT o_custkey * 2 AS src, l_suppkey * 2 + 1 AS dst
-       |  FROM orders JOIN lineitem ON l_orderkey = o_orderkey),
-       |ue AS (SELECT src, dst FROM e UNION ALL SELECT dst, src FROM e),
+    duckTradeUe + s"""
        |l0 AS (SELECT DISTINCT src AS node, src AS lbl FROM ue),
        |$iters""".stripMargin
   }
@@ -1190,11 +1201,7 @@ object AnalyticsOps {
         |    AS srm_flag
         |FROM c""".stripMargin)),
     Key("stats_wilcoxon_signed", statsWilcoxonSigned, Some(
-      """WITH daily AS (
-        |  SELECT CAST(CAST(ts AS TIMESTAMP) AS DATE) AS day,
-        |    CAST(sum(CAST("value" AS DECIMAL(18,2))) * 100 AS BIGINT)
-        |      AS revc
-        |  FROM events GROUP BY 1),
+      OracleSql.DayCents + """
         |p AS (
         |  SELECT b.revc - a.revc AS diff, abs(b.revc - a.revc) AS ad
         |  FROM daily a JOIN daily b ON b.day = a.day + 7
@@ -1214,11 +1221,7 @@ object AnalyticsOps {
         |    6) + 0.0 AS z
         |FROM w, tt""".stripMargin)),
     Key("stats_kendall_tau", statsKendallTau, Some(
-      """WITH daily AS (
-        |  SELECT CAST(CAST(ts AS TIMESTAMP) AS DATE) AS day,
-        |    count(CASE WHEN event_type = 'click' THEN 1 END) AS c,
-        |    count(CASE WHEN event_type = 'purchase' THEN 1 END) AS p
-        |  FROM events GROUP BY 1),
+      duckClickPurchaseDaily + """
         |pr AS (
         |  SELECT (a.c - b.c) * (a.p - b.p) AS prod,
         |    CASE WHEN a.c = b.c THEN 1 ELSE 0 END AS tie_c,
@@ -1252,11 +1255,7 @@ object AnalyticsOps {
         |FROM lat""".stripMargin)),
     // doubled average ranks are exact integers; ρ is Pearson on them
     Key("stats_spearman", statsSpearman, Some(
-      """WITH daily AS (
-        |  SELECT CAST(CAST(ts AS TIMESTAMP) AS DATE) AS day,
-        |    count(CASE WHEN event_type = 'click' THEN 1 END) AS c,
-        |    count(CASE WHEN event_type = 'purchase' THEN 1 END) AS p
-        |  FROM events GROUP BY 1),
+      duckClickPurchaseDaily + """
         |r AS (SELECT
         |    rank() OVER (ORDER BY c) * 2
         |      + count(*) OVER (PARTITION BY c) - 1 AS rx,

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Key
 import graft.sources.Tables
+import graft.operators.OpsHelpers.wordTrigrams
 
 /** Deduplication suite for the LLM-training-data pipeline (SURVEY.md §2.10
   * + north star): exact, normalized-key, MinHash+LSH, SimHash, n-gram
@@ -127,22 +128,11 @@ object DedupOps {
     * shingle even for a boilerplate shingle in 10^8 docs. The capped
     * universe applies UNIFORMLY — intersections AND set sizes — so
     * Jaccard stays a true Jaccard over informative shingles. */
-  private def shingleDocs(docs: DataFrame): DataFrame = {
-    val raw = docs
-      .withColumn("toks", split(trim(lower(col("text"))), "\\s+"))
-      .select(col("doc_id"),
-        // guard: sequence(1, 0) in Spark generates a DESCENDING sequence,
-        // so docs with <3 tokens must short-circuit to an empty array
-        explode(expr(
-          "CASE WHEN size(toks) >= 3 THEN transform(sequence(1, size(toks) - 2)," +
-            " i -> concat(toks[i-1], ' ', toks[i], ' ', toks[i+1]))" +
-            " ELSE CAST(array() AS ARRAY<STRING>) END"))
-          .as("shingle"))
-    raw.groupBy(col("shingle"))
+  private def shingleDocs(docs: DataFrame): DataFrame =
+    wordTrigrams(docs).groupBy(col("shingle"))
       .agg(graft.functions.BoundedDistinctAgg(col("doc_id"), ShingleDocFreqCap)
         .as("docs"))
       .filter(col("docs").isNotNull)
-  }
 
   /** Int-only shingle stage: (doc_id, sid) with the md5 sid computed ONCE
     * per vocabulary entry (on the grouped posting lists, before the doc
@@ -307,15 +297,7 @@ object DedupOps {
   // corpus, the knobs' input. Two keyed aggregations, integer output
   // plus two divisions. ──
   def textShingleStats(spark: SparkSession, dir: String): DataFrame = {
-    val raw = Tables.documents(spark, dir)
-      .withColumn("toks", split(trim(lower(col("text"))), "\\s+"))
-      .select(col("doc_id"),
-        explode(expr(
-          "CASE WHEN size(toks) >= 3 THEN transform(sequence(1, size(toks) - 2)," +
-            " i -> concat(toks[i-1], ' ', toks[i], ' ', toks[i+1]))" +
-            " ELSE CAST(array() AS ARRAY<STRING>) END"))
-          .as("shingle"))
-      .distinct()
+    val raw = wordTrigrams(Tables.documents(spark, dir)).distinct()
     val perSh = raw.groupBy(col("shingle")).agg(count(lit(1)).as("f"))
     val tot = raw.agg(countDistinct(col("doc_id")).as("n_docs"),
       count(lit(1)).as("n_rows"))
@@ -607,14 +589,18 @@ object DedupOps {
     // `a.label = b.label AND a.vec_id < b.vec_id` self-join, but a hot cell
     // is split into capped sub-blocks so no task exceeds ~cap² pairs
     // (SkewPairs doc; zero recall cost — the salt is exhaustive)
-    val pairs = SkewPairs.pairs(e, Seq("label"), "vec_id")
-    pairs.select(
-        col("a.vec_id").as("vec_a"), col("b.vec_id").as("vec_b"),
+    cosinePairs(e, "label")
+  }
+
+  /** The (vec_a, vec_b) pairs of one `block` cell of `e` (vec_id, v,
+    * norm) whose cosine is at least 0.4, paired through [[SkewPairs]]. */
+  private def cosinePairs(e: DataFrame, block: String): DataFrame =
+    SkewPairs.pairs(e, Seq(block), "vec_id")
+      .select(col("a.vec_id").as("vec_a"), col("b.vec_id").as("vec_b"),
         (dot(col("a.v"), col("b.v")) / (col("a.norm") * col("b.norm"))).as("cos"))
       .filter(col("cos") >= 0.4)
       .select(col("vec_a"), col("vec_b"), round(col("cos"), 6).as("cos_sim"))
       .orderBy("vec_a", "vec_b")
-  }
 
   /** The TRAINED-quantizer form of [[dedupEmbed]]: cells come from the IVF
     * coarse quantizer (deterministic mini k-means, `ml/IvfIndex.scala`)
@@ -634,12 +620,7 @@ object DedupOps {
     val model = graft.ml.IvfIndex.train(emb, k = 16, iters = 3)
     val e = graft.ml.IvfIndex.assignCells(emb, model)
       .withColumn("norm", sqrt(dot(col("v"), col("v"))))
-    SkewPairs.pairs(e, Seq("cell"), "vec_id")
-      .select(col("a.vec_id").as("vec_a"), col("b.vec_id").as("vec_b"),
-        (dot(col("a.v"), col("b.v")) / (col("a.norm") * col("b.norm"))).as("cos"))
-      .filter(col("cos") >= 0.4)
-      .select(col("vec_a"), col("vec_b"), round(col("cos"), 6).as("cos_sim"))
-      .orderBy("vec_a", "vec_b")
+    cosinePairs(e, "cell")
   }
 
   /** Sequential dot product (left-to-right, the order DuckDB's list
@@ -953,7 +934,7 @@ object DedupOps {
   /** [[duckShingles]] over an arbitrary documents source (subquery or
     * table) — the oracle twin of [[shinglesFrom]]. */
   private def duckShinglesFrom(src: String) =
-    s"""WITH RECURSIVE t AS (SELECT doc_id, string_split_regex(trim(lower(text)), '\\s+') AS toks FROM $src),""".stripMargin +
+    s"""WITH RECURSIVE t AS (SELECT doc_id, ${OracleSql.Toks} AS toks FROM $src),""".stripMargin +
     """
       |sh0 AS (SELECT DISTINCT doc_id, unnest(list_transform(range(1, greatest(len(toks) - 1, 1)),
       |         i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2])) AS shingle FROM t),
@@ -1009,25 +990,70 @@ object DedupOps {
       |cl AS (SELECT d.doc_id, COALESCE(c.cluster_id, d.doc_id) AS cluster_id
       |       FROM documents d LEFT JOIN comp c USING (doc_id))""".stripMargin
 
+  /** The final select of the Jaccard keys over `inter` and `sizes`: each
+    * pair's 6-dp Jaccard, kept from 0.3 up, in pair order. */
+  private val duckJaccardPairs: String =
+    """SELECT doc_a, doc_b,
+      |  round(CAST(i AS DOUBLE) / (za.n + zb.n - i), 6) AS jaccard
+      |FROM inter JOIN sizes za ON doc_a = za.doc_id JOIN sizes zb ON doc_b = zb.doc_id
+      |WHERE round(CAST(i AS DOUBLE) / (za.n + zb.n - i), 6) >= 0.3
+      |ORDER BY doc_a, doc_b""".stripMargin
+
+  /** MinHash LSH candidate CTEs over `ws`: 32 universal hashes, 16 bands
+    * of two, and the banded candidate pairs `cand(doc_a, doc_b)`, whose
+    * continuation lines align under its name. Comma-led. */
+  private def duckMinhashCand(cand: String): String = {
+    val in = " " * (cand.length + 5)
+    s""",
+       |hashed AS (SELECT doc_id, i, ((2*i + 1) * sid + 17*i + 7) % 2147483647 AS h
+       |           FROM ws, (SELECT unnest(range(0, 32)) AS i)),
+       |sig AS (SELECT doc_id, i, min(h) AS mh FROM hashed GROUP BY doc_id, i),
+       |bands AS (SELECT doc_id, i // 2 AS band,
+       |            min(CASE WHEN i % 2 = 0 THEN mh END) AS m0,
+       |            min(CASE WHEN i % 2 = 1 THEN mh END) AS m1
+       |          FROM sig GROUP BY doc_id, i // 2),
+       |$cand AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
+       |${in}FROM bands a JOIN bands b ON a.band = b.band AND a.m0 = b.m0
+       |$in     AND a.m1 = b.m1 AND a.doc_id < b.doc_id)""".stripMargin
+  }
+
+  /** SimHash candidate CTEs over `ws`: 32-bit fingerprints `fp`, their
+    * four byte chunks, and the chunk-sharing pairs `cand(doc_a, fp_a,
+    * doc_b, fp_b)`, whose continuation lines align under its name.
+    * Comma-led. */
+  private def duckSimhashCand(cand: String): String = {
+    val in = " " * (cand.length + 5)
+    s""",
+       |hb AS (SELECT doc_id, (sid * 1103515245 + 12345) % 2147483647 AS sh_hash FROM ws),
+       |bits AS (SELECT doc_id, b,
+       |           CASE WHEN (sh_hash >> b) % 2 = 1 THEN 1 ELSE -1 END AS bit_val
+       |         FROM hb, (SELECT unnest(range(0, 32)) AS b)),
+       |wsum AS (SELECT doc_id, b, sum(bit_val) AS w FROM bits GROUP BY doc_id, b),
+       |fp AS (SELECT doc_id, sum(CASE WHEN w > 0 THEN (CAST(1 AS BIGINT) << b) ELSE 0 END) AS fp
+       |       FROM wsum GROUP BY doc_id),
+       |chunks AS (SELECT doc_id, fp, c, (fp >> (c * 8)) % 256 AS chunk
+       |           FROM fp, (SELECT unnest(range(0, 4)) AS c)
+       |           QUALIFY count(*) OVER (PARTITION BY c, chunk) <= 1000),
+       |$cand AS (SELECT DISTINCT a.doc_id AS doc_a, a.fp AS fp_a, b.doc_id AS doc_b, b.fp AS fp_b
+       |${in}FROM chunks a JOIN chunks b ON a.c = b.c AND a.chunk = b.chunk
+       |$in     AND a.doc_id < b.doc_id)""".stripMargin
+  }
+
+  /** The LSH evaluation CTEs: [[duckMinhashCand]], then every pair's exact
+    * intersection `inter` and the exhaustive pair set `scand` the
+    * candidates are scored against. Comma-terminated. */
+  private val duckLshEval: String = duckMinhashCand("cand") +
+    """,
+      |inter AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS i
+      |          FROM ws a JOIN ws b ON a.sid = b.sid
+      |               AND a.doc_id < b.doc_id
+      |          GROUP BY doc_a, doc_b),
+      |scand AS (SELECT doc_a, doc_b FROM inter),""".stripMargin
+
   /** The eval_dedup_pr oracle over an arbitrary documents source — shared
     * by the exhaustive and hash-admitted-sample keys. */
   private def duckPr(src: String): String = duckShinglesFrom(src) +
-    """,
-        |hashed AS (SELECT doc_id, i, ((2*i + 1) * sid + 17*i + 7) % 2147483647 AS h
-        |           FROM ws, (SELECT unnest(range(0, 32)) AS i)),
-        |sig AS (SELECT doc_id, i, min(h) AS mh FROM hashed GROUP BY doc_id, i),
-        |bands AS (SELECT doc_id, i // 2 AS band,
-        |            min(CASE WHEN i % 2 = 0 THEN mh END) AS m0,
-        |            min(CASE WHEN i % 2 = 1 THEN mh END) AS m1
-        |          FROM sig GROUP BY doc_id, i // 2),
-        |cand AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-        |         FROM bands a JOIN bands b ON a.band = b.band AND a.m0 = b.m0
-        |              AND a.m1 = b.m1 AND a.doc_id < b.doc_id),
-        |inter AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS i
-        |          FROM ws a JOIN ws b ON a.sid = b.sid
-        |               AND a.doc_id < b.doc_id
-        |          GROUP BY doc_a, doc_b),
-        |scand AS (SELECT doc_a, doc_b FROM inter),
+    duckLshEval + """
         |truth AS (SELECT doc_a, doc_b
         |          FROM inter JOIN sizes za ON doc_a = za.doc_id
         |                     JOIN sizes zb ON doc_b = zb.doc_id
@@ -1114,36 +1140,15 @@ object DedupOps {
         |ng AS (SELECT doc_a, doc_b
         |       FROM inter JOIN sizes za ON doc_a = za.doc_id
         |                  JOIN sizes zb ON doc_b = zb.doc_id
-        |       WHERE round(CAST(i AS DOUBLE) / (za.n + zb.n - i), 6) >= 0.3),
-        |hashed AS (SELECT doc_id, i, ((2*i + 1) * sid + 17*i + 7) % 2147483647 AS h
-        |           FROM ws, (SELECT unnest(range(0, 32)) AS i)),
-        |sig AS (SELECT doc_id, i, min(h) AS mh FROM hashed GROUP BY doc_id, i),
-        |bands AS (SELECT doc_id, i // 2 AS band,
-        |            min(CASE WHEN i % 2 = 0 THEN mh END) AS m0,
-        |            min(CASE WHEN i % 2 = 1 THEN mh END) AS m1
-        |          FROM sig GROUP BY doc_id, i // 2),
-        |mcand AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-        |          FROM bands a JOIN bands b ON a.band = b.band AND a.m0 = b.m0
-        |               AND a.m1 = b.m1 AND a.doc_id < b.doc_id),
+        |       WHERE round(CAST(i AS DOUBLE) / (za.n + zb.n - i), 6) >= 0.3)""".stripMargin +
+      duckMinhashCand("mcand") + """,
         |minter AS (SELECT inter.doc_a, inter.doc_b, inter.i
         |           FROM inter JOIN mcand USING (doc_a, doc_b)),
         |mh2 AS (SELECT doc_a, doc_b
         |        FROM minter JOIN sizes za ON doc_a = za.doc_id
         |                   JOIN sizes zb ON doc_b = zb.doc_id
-        |        WHERE round(CAST(i AS DOUBLE) / (za.n + zb.n - i), 6) >= 0.3),
-        |hb AS (SELECT doc_id, (sid * 1103515245 + 12345) % 2147483647 AS sh_hash FROM ws),
-        |bits AS (SELECT doc_id, b,
-        |           CASE WHEN (sh_hash >> b) % 2 = 1 THEN 1 ELSE -1 END AS bit_val
-        |         FROM hb, (SELECT unnest(range(0, 32)) AS b)),
-        |wsum AS (SELECT doc_id, b, sum(bit_val) AS w FROM bits GROUP BY doc_id, b),
-        |fp AS (SELECT doc_id, sum(CASE WHEN w > 0 THEN (CAST(1 AS BIGINT) << b) ELSE 0 END) AS fp
-        |       FROM wsum GROUP BY doc_id),
-        |chunks AS (SELECT doc_id, fp, c, (fp >> (c * 8)) % 256 AS chunk
-        |           FROM fp, (SELECT unnest(range(0, 4)) AS c)
-        |           QUALIFY count(*) OVER (PARTITION BY c, chunk) <= 1000),
-        |scand AS (SELECT DISTINCT a.doc_id AS doc_a, a.fp AS fp_a, b.doc_id AS doc_b, b.fp AS fp_b
-        |          FROM chunks a JOIN chunks b ON a.c = b.c AND a.chunk = b.chunk
-        |               AND a.doc_id < b.doc_id),
+        |        WHERE round(CAST(i AS DOUBLE) / (za.n + zb.n - i), 6) >= 0.3)""".stripMargin +
+      duckSimhashCand("scand") + """,
         |sp AS (SELECT doc_a, doc_b FROM scand WHERE bit_count(xor(fp_a, fp_b)) <= 3),
         |lab AS (SELECT doc_a, doc_b, 'ngram' AS method FROM ng
         |        UNION ALL SELECT doc_a, doc_b, 'minhash' FROM mh2
@@ -1222,8 +1227,8 @@ object DedupOps {
         |    AS removal_rate
         |FROM g CROSS JOIN nd ORDER BY threshold""".stripMargin)),
     Key("text_shingle_stats", textShingleStats, Some(
-      """WITH t AS (SELECT doc_id,
-        |    string_split_regex(trim(lower(text)), '\s+') AS toks
+      s"""WITH t AS (SELECT doc_id,
+        |    ${OracleSql.Toks} AS toks
         |  FROM documents),
         |sh0 AS (SELECT DISTINCT doc_id,
         |    unnest(list_transform(range(1, greatest(len(toks) - 1, 1)),
@@ -1247,32 +1252,12 @@ object DedupOps {
         |    AS dup_factor
         |FROM a CROSS JOIN tt""".stripMargin)),
     Key("dedup_ngram", dedupNgram, Some(duckShingles + duckCandInter +
-      """
-        |SELECT doc_a, doc_b,
-        |  round(CAST(i AS DOUBLE) / (za.n + zb.n - i), 6) AS jaccard
-        |FROM inter JOIN sizes za ON doc_a = za.doc_id JOIN sizes zb ON doc_b = zb.doc_id
-        |WHERE round(CAST(i AS DOUBLE) / (za.n + zb.n - i), 6) >= 0.3
-        |ORDER BY doc_a, doc_b""".stripMargin)),
+      "\n" + duckJaccardPairs)),
     Key("eval_dedup_pr", evalDedupPr, Some(duckPr("documents"))),
     Key("eval_dedup_pr_sampled", evalDedupPrSampled, Some(duckPr(
       s"(SELECT * FROM documents WHERE $SampleAdmissionDuck)"))),
-    Key("eval_lsh_curve", evalLshCurve, Some(duckShingles +
-      """,
-        |hashed AS (SELECT doc_id, i, ((2*i + 1) * sid + 17*i + 7) % 2147483647 AS h
-        |           FROM ws, (SELECT unnest(range(0, 32)) AS i)),
-        |sig AS (SELECT doc_id, i, min(h) AS mh FROM hashed GROUP BY doc_id, i),
-        |bands AS (SELECT doc_id, i // 2 AS band,
-        |            min(CASE WHEN i % 2 = 0 THEN mh END) AS m0,
-        |            min(CASE WHEN i % 2 = 1 THEN mh END) AS m1
-        |          FROM sig GROUP BY doc_id, i // 2),
-        |cand AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-        |         FROM bands a JOIN bands b ON a.band = b.band AND a.m0 = b.m0
-        |              AND a.m1 = b.m1 AND a.doc_id < b.doc_id),
-        |inter AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS i
-        |          FROM ws a JOIN ws b ON a.sid = b.sid
-        |               AND a.doc_id < b.doc_id
-        |          GROUP BY doc_a, doc_b),
-        |scand AS (SELECT doc_a, doc_b FROM inter),
+    Key("eval_lsh_curve", evalLshCurve, Some(duckShingles + duckLshEval +
+      """
         |truth AS (SELECT doc_a, doc_b,
         |      round(CAST(i AS DOUBLE) / (za.n + zb.n - i), 6) AS jaccard
         |    FROM inter JOIN sizes za ON doc_a = za.doc_id
@@ -1294,43 +1279,16 @@ object DedupOps {
         |    AS theory_rate
         |FROM g ORDER BY bucket""".stripMargin)),
     Key("dedup_minhash", dedupMinhash, Some(duckShingles +
-      """,
-        |hashed AS (SELECT doc_id, i, ((2*i + 1) * sid + 17*i + 7) % 2147483647 AS h
-        |           FROM ws, (SELECT unnest(range(0, 32)) AS i)),
-        |sig AS (SELECT doc_id, i, min(h) AS mh FROM hashed GROUP BY doc_id, i),
-        |bands AS (SELECT doc_id, i // 2 AS band,
-        |            min(CASE WHEN i % 2 = 0 THEN mh END) AS m0,
-        |            min(CASE WHEN i % 2 = 1 THEN mh END) AS m1
-        |          FROM sig GROUP BY doc_id, i // 2),
-        |cand AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-        |         FROM bands a JOIN bands b ON a.band = b.band AND a.m0 = b.m0
-        |              AND a.m1 = b.m1 AND a.doc_id < b.doc_id),
+      duckMinhashCand("cand") + """,
         |shinter AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS i
         |            FROM ws a JOIN ws b ON a.sid = b.sid AND a.doc_id < b.doc_id
         |            GROUP BY doc_a, doc_b),
         |inter AS (SELECT shinter.doc_a, shinter.doc_b, shinter.i
         |          FROM shinter JOIN cand USING (doc_a, doc_b))
-        |SELECT doc_a, doc_b,
-        |  round(CAST(i AS DOUBLE) / (za.n + zb.n - i), 6) AS jaccard
-        |FROM inter JOIN sizes za ON doc_a = za.doc_id JOIN sizes zb ON doc_b = zb.doc_id
-        |WHERE round(CAST(i AS DOUBLE) / (za.n + zb.n - i), 6) >= 0.3
-        |ORDER BY doc_a, doc_b""".stripMargin)),
+        |""".stripMargin + duckJaccardPairs)),
     Key("dedup_minhash_fast", dedupMinhashFast),
     Key("dedup_simhash", dedupSimhash, Some(duckShingles +
-      """,
-        |hb AS (SELECT doc_id, (sid * 1103515245 + 12345) % 2147483647 AS sh_hash FROM ws),
-        |bits AS (SELECT doc_id, b,
-        |           CASE WHEN (sh_hash >> b) % 2 = 1 THEN 1 ELSE -1 END AS bit_val
-        |         FROM hb, (SELECT unnest(range(0, 32)) AS b)),
-        |wsum AS (SELECT doc_id, b, sum(bit_val) AS w FROM bits GROUP BY doc_id, b),
-        |fp AS (SELECT doc_id, sum(CASE WHEN w > 0 THEN (CAST(1 AS BIGINT) << b) ELSE 0 END) AS fp
-        |       FROM wsum GROUP BY doc_id),
-        |chunks AS (SELECT doc_id, fp, c, (fp >> (c * 8)) % 256 AS chunk
-        |           FROM fp, (SELECT unnest(range(0, 4)) AS c)
-        |           QUALIFY count(*) OVER (PARTITION BY c, chunk) <= 1000),
-        |cand AS (SELECT DISTINCT a.doc_id AS doc_a, a.fp AS fp_a, b.doc_id AS doc_b, b.fp AS fp_b
-        |         FROM chunks a JOIN chunks b ON a.c = b.c AND a.chunk = b.chunk
-        |              AND a.doc_id < b.doc_id)
+      duckSimhashCand("cand") + """
         |SELECT doc_a, doc_b, CAST(bit_count(xor(fp_a, fp_b)) AS INTEGER) AS hamming
         |FROM cand WHERE bit_count(xor(fp_a, fp_b)) <= 3
         |ORDER BY doc_a, doc_b""".stripMargin)),

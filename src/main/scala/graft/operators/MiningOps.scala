@@ -73,38 +73,44 @@ object MiningOps {
   // P(next = dst | current = src), from lead() over each user's timeline
   // (total order: event time, id tiebreak). The normalizing window runs
   // over the |types|² aggregate, not the raw events. ──
-  def markovTransitions(spark: SparkSession, dir: String): DataFrame = {
-    val tl = Window.partitionBy(col("user_id"))
-      .orderBy(col("us"), col("event_id"))
-    val trans = ev(spark, dir)
-      .select(col("user_id"), col("event_type"), col("us"), col("event_id"))
-      .withColumn("dst", lead(col("event_type"), 1).over(tl))
-      .filter(col("dst").isNotNull)
-      .groupBy(col("event_type").as("src"), col("dst"))
-      .agg(count(lit(1)).as("n"))
-    trans
+  def markovTransitions(spark: SparkSession, dir: String): DataFrame =
+    transitionCounts(spark, dir, "n")
       .withColumn("prob",
         r6(col("n").cast("double") /
           sum(col("n")).over(Window.partitionBy(col("src")))))
       .orderBy("src", "dst")
-  }
+
+  /** Per-user next-event transition counts (src, dst, `n`) over each
+    * user's (us, event_id) timeline. */
+  private def transitionCounts(spark: SparkSession, dir: String,
+      n: String): DataFrame =
+    timelineEvents(spark, dir)
+      .withColumn("dst", lead(col("event_type"), 1).over(UserTimeline))
+      .filter(col("dst").isNotNull)
+      .groupBy(col("event_type").as("src"), col("dst"))
+      .agg(count(lit(1)).as(n))
+
+  /** The per-user (us, event_id) order of [[timelineEvents]]. */
+  private val UserTimeline =
+    Window.partitionBy(col("user_id")).orderBy(col("us"), col("event_id"))
+
+  /** Each event's user, type and (us, event_id) position. */
+  private def timelineEvents(spark: SparkSession, dir: String): DataFrame =
+    ev(spark, dir)
+      .select(col("user_id"), col("event_type"), col("us"), col("event_id"))
 
   // ── sequential path motifs: every consecutive event-type TRIPLE on a
   // user timeline (the "what journey led here" query). Cardinality is
   // |types|³ ≤ 125; ordering is (count desc, path) so the result is a
   // stable ranking. ──
-  def sessionPaths(spark: SparkSession, dir: String): DataFrame = {
-    val tl = Window.partitionBy(col("user_id"))
-      .orderBy(col("us"), col("event_id"))
-    ev(spark, dir)
-      .select(col("user_id"), col("event_type"), col("us"), col("event_id"))
-      .withColumn("b", lead(col("event_type"), 1).over(tl))
-      .withColumn("c", lead(col("event_type"), 2).over(tl))
+  def sessionPaths(spark: SparkSession, dir: String): DataFrame =
+    timelineEvents(spark, dir)
+      .withColumn("b", lead(col("event_type"), 1).over(UserTimeline))
+      .withColumn("c", lead(col("event_type"), 2).over(UserTimeline))
       .filter(col("c").isNotNull)
       .select(concat_ws(">", col("event_type"), col("b"), col("c")).as("path"))
       .groupBy(col("path")).agg(count(lit(1)).as("n"))
       .orderBy(desc("n"), col("path"))
-  }
 
   // ── triangle counting on the part co-purchase graph (parts sharing an
   // order). Degree-ordered orientation: each undirected edge points from
@@ -122,7 +128,6 @@ object MiningOps {
     // rebuilt all three per invocation (degree count, two broadcast
     // joins, its own Eager checkpoint of the oriented frame)
     val deg = SharedGraph.coPurchaseDeg(spark, dir)
-    val dir2 = SharedGraph.coPurchaseOriented(spark, dir)
     // edge-iterator counting: per oriented base edge (u,v), the closing
     // vertices are exactly adj_out(u) ∩ adj_out(v), so each triangle is
     // counted once — at the edge whose endpoints are its two LOWEST
@@ -133,12 +138,7 @@ object MiningOps {
     // src; AQE broadcasts it while it fits). A sink dst has no adjacency
     // row and contributes 0 closings, which the inner join encodes by
     // dropping the edge.
-    val adj = SharedGraph.coPurchaseOutAdj(spark, dir)
-    val tri = dir2
-      .join(adj.select(col("src").as("u"), col("nbrs").as("nu")),
-        col("src") === col("u"))
-      .join(adj.select(col("src").as("v"), col("nbrs").as("nv")),
-        col("dst") === col("v"))
+    val tri = SharedGraph.closingNbrs(spark, dir)
       .select(size(array_intersect(col("nu"), col("nv"))).as("t"))
       .agg(sum(col("t")).cast("long").as("triangles"))
     val counts = und.agg(count(lit(1)).as("edges"))
@@ -531,10 +531,7 @@ object MiningOps {
         sum(lit(1.0) / log(col("dw").cast("double"))).as("aa"))
       .select(col("cu").as("u"), col("cv").as("v"), col("cn"), col("aa"))
       .join(und, Seq("u", "v"), "left_anti")
-      .join(broadcast(deg.select(col("node").as("u"), col("d").as("du"))),
-        "u")
-      .join(broadcast(deg.select(col("node").as("v"), col("d").as("dv"))),
-        "v")
+      .transform(SharedGraph.withDegrees(_, deg))
       .select(col("u"), col("v"), col("cn"),
         r6(col("cn").cast("double") /
           (col("du") + col("dv") - col("cn"))).as("jaccard"),
@@ -555,11 +552,7 @@ object MiningOps {
     // state (round 13) — previously rebuilt per invocation
     val adj = SharedGraph.coPurchaseAdjByU(spark, dir)
     val deg = SharedGraph.coPurchaseDeg(spark, dir)
-    val e = adj
-      .join(broadcast(deg.select(col("node").as("u"), col("d").as("du"))),
-        "u")
-      .join(broadcast(deg.select(col("node").as("v"), col("d").as("dv"))),
-        "v")
+    val e = SharedGraph.withDegrees(adj, deg)
     // DECIMAL(38,0) moments: du·dv is a degree product — it passes
     // int64 once max-degree reaches ~3e9, and the long sum would wrap
     // silently at corpus scale (same class as the tie-cube guard)
@@ -593,19 +586,13 @@ object MiningOps {
     // this key rebuilt all three per invocation, paying two Eager
     // checkpoints of its own
     val deg = SharedGraph.coPurchaseDeg(spark, dir)
-    val dir2 = SharedGraph.coPurchaseOriented(spark, dir)
-    val adj = SharedGraph.coPurchaseOutAdj(spark, dir)
     // every triangle credits its three members in ONE pass: the closing
     // vertices explode TOGETHER with the base edge's endpoints, so the
     // triangle-vertex frame has exactly one consumer and never needs
     // materializing (the previous 3-way union-of-projections read a
     // checkpointed copy of it three times — at sf≈1 that one frame was
     // 15 s of the key's 29 s)
-    val credits = dir2
-      .join(adj.select(col("src").as("u"), col("nbrs").as("nu")),
-        col("src") === col("u"))
-      .join(adj.select(col("src").as("v"), col("nbrs").as("nv")),
-        col("dst") === col("v"))
+    val credits = SharedGraph.closingNbrs(spark, dir)
       .select(col("src"), col("dst"),
         array_intersect(col("nu"), col("nv")).as("ws"))
       .filter(size(col("ws")) > 0)
@@ -649,21 +636,25 @@ object MiningOps {
     SharedCorpus.memo(spark, "recsys_top3", dir, "lineitem") {
       val op = SharedGraph.baskets(spark, dir)
       val cnt = op.groupBy(col("p").as("item")).agg(count(lit(1)).as("n"))
-      val pairs = SharedGraph.coPurchasePairCounts(spark, dir)
-      val scored = pairs
-        .join(broadcast(cnt.select(col("item").as("u"), col("n").as("nu"))),
-          "u")
-        .join(broadcast(cnt.select(col("item").as("v"), col("n").as("nv"))),
-          "v")
-        .withColumn("cos",
-          r6(col("c").cast("double") /
-            sqrt((col("nu") * col("nv")).cast("double"))))
-      val w = Window.partitionBy(col("u"))
-        .orderBy(col("cos").desc, col("v"))
-      scored.withColumn("rn", row_number().over(w))
-        .filter(col("rn") <= 3)
+      cosineTop3(SharedGraph.coPurchasePairCounts(spark, dir), cnt)
         .select(col("u"), col("rn"), col("v"), col("c"), col("cos"))
     }
+
+  /** Each item u's three nearest items v by the 6-dp cosine of their
+    * co-basket count c over the basket counts `cnt` (item, n), ties to
+    * the smaller v: `pairs` (u, v, c) plus cos and the rank rn. */
+  private def cosineTop3(pairs: DataFrame, cnt: DataFrame): DataFrame =
+    pairs
+      .join(broadcast(cnt.select(col("item").as("u"), col("n").as("nu"))),
+        "u")
+      .join(broadcast(cnt.select(col("item").as("v"), col("n").as("nv"))),
+        "v")
+      .withColumn("cos",
+        r6(col("c").cast("double") /
+          sqrt((col("nu") * col("nv")).cast("double"))))
+      .withColumn("rn", row_number().over(
+        Window.partitionBy(col("u")).orderBy(col("cos").desc, col("v"))))
+      .filter(col("rn") <= 3)
 
   def recsysItemKnn(spark: SparkSession, dir: String): DataFrame =
     itemKnnTop3(spark, dir)
@@ -696,17 +687,7 @@ object MiningOps {
       .join(train.select(col("o"), col("p").as("v")), "o")
       .filter(col("u") =!= col("v"))
       .groupBy(col("u"), col("v")).agg(count(lit(1)).as("c"))
-    val top3 = pairs
-      .join(broadcast(cnt.select(col("item").as("u"), col("n").as("nu"))),
-        "u")
-      .join(broadcast(cnt.select(col("item").as("v"), col("n").as("nv"))),
-        "v")
-      .withColumn("cos",
-        round(col("c").cast("double") /
-          sqrt((col("nu") * col("nv")).cast("double")), 6) + lit(0.0d))
-      .withColumn("rn", row_number().over(
-        Window.partitionBy(col("u")).orderBy(col("cos").desc, col("v"))))
-      .filter(col("rn") <= 3)
+    val top3 = cosineTop3(pairs, cnt)
     val kept = train.select(col("o"), col("p").as("kept"))
     val hits = held.join(kept, "o")
       .join(top3.select(col("u").as("t_u"), col("v").as("t_v")),
@@ -765,11 +746,7 @@ object MiningOps {
     val nk = deg.select(col("d"), kCol)
       .filter(col("d") > col("k"))
       .groupBy(col("k")).agg(count(lit(1)).as("n_club"))
-    val ek = und
-      .join(broadcast(deg.select(col("node").as("u"), col("d").as("du"))),
-        "u")
-      .join(broadcast(deg.select(col("node").as("v"), col("d").as("dv"))),
-        "v")
+    val ek = SharedGraph.withDegrees(und, deg)
       .select(col("du"), col("dv"), kCol)
       .filter(col("du") > col("k") && col("dv") > col("k"))
       .groupBy(col("k")).agg(count(lit(1)).as("e_club"))
@@ -1000,14 +977,7 @@ object MiningOps {
   // DECIMAL before the ≤|types|²-row sum (associative), one exp at the
   // boundary. ──
   def markovEntropy(spark: SparkSession, dir: String): DataFrame = {
-    val tl = Window.partitionBy(col("user_id"))
-      .orderBy(col("us"), col("event_id"))
-    val trans = ev(spark, dir)
-      .select(col("user_id"), col("event_type"), col("us"), col("event_id"))
-      .withColumn("dst", lead(col("event_type"), 1).over(tl))
-      .filter(col("dst").isNotNull)
-      .groupBy(col("event_type").as("src"), col("dst"))
-      .agg(count(lit(1)).as("c"))
+    val trans = transitionCounts(spark, dir, "c")
       .withColumn("crow",
         sum(col("c")).over(Window.partitionBy(col("src"))))
     trans.agg(sum(col("c")).as("n_transitions"),
@@ -1021,14 +991,77 @@ object MiningOps {
           .as("perplexity"))
   }
 
+  /** Oracle CTEs of the co-purchase graph: `op(o, p)`, the distinct
+    * (order, part) rows, and `und(u, v)`, each undirected edge once with
+    * u < v. Comma-terminated. */
+  private val duckUnd: String =
+    """WITH op AS (SELECT DISTINCT l_orderkey AS o, l_partkey AS p
+      |           FROM lineitem),
+      |und AS (SELECT DISTINCT a.p AS u, b.p AS v
+      |        FROM op a JOIN op b ON a.o = b.o AND a.p < b.p),""".stripMargin
+
+  /** `op` and `und` as [[duckUnd]] has them, then `edges(u, v)` both ways
+    * and the degrees `deg(u, d)`. Comma-terminated. */
+  private val duckEdgeDegrees: String =
+    """WITH op AS (
+      |  SELECT DISTINCT l_orderkey AS o, l_partkey AS p FROM lineitem),
+      |und AS (SELECT DISTINCT a.p AS u, b.p AS v
+      |        FROM op a JOIN op b ON a.o = b.o AND a.p < b.p),
+      |edges AS (SELECT u, v FROM und UNION ALL SELECT v, u FROM und),
+      |deg AS (SELECT u, count(*) AS d FROM edges GROUP BY 1),""".stripMargin
+
+  /** [[duckUnd]] plus the degrees `deg(node, d)`. Comma-terminated. */
+  private val duckUndDeg: String = duckUnd +
+    """
+      |adj AS (SELECT u FROM und UNION ALL SELECT v AS u FROM und),
+      |deg AS (SELECT u AS node, CAST(count(*) AS BIGINT) AS d
+      |        FROM adj GROUP BY 1),""".stripMargin
+
+  /** The degree-oriented edges `dir(src, dst)` over `und` and
+    * `deg(node, d)` (lower (degree, id) first) and `dr`, each edge with
+    * its dst degree dd. Comma-terminated, on its own lines. */
+  private val duckOrientedDr: String =
+    """dir AS (
+      |  SELECT CASE WHEN (du.d, und.u) < (dv.d, und.v)
+      |              THEN und.u ELSE und.v END AS src,
+      |         CASE WHEN (du.d, und.u) < (dv.d, und.v)
+      |              THEN und.v ELSE und.u END AS dst
+      |  FROM und
+      |  JOIN deg du ON und.u = du.node
+      |  JOIN deg dv ON und.v = dv.node),
+      |dr AS (SELECT dir.src, dir.dst, deg.d AS dd
+      |       FROM dir JOIN deg ON dir.dst = deg.node),""".stripMargin
+
+  /** Each part's exact revenue in micro-units `rev(l_partkey, revc)`, its
+    * total `t`, and `c`, the running revenue `cum` in (revc desc,
+    * l_partkey) order. */
+  private val duckPartRevCum: String =
+    """WITH rev AS (
+      |  SELECT l_partkey,
+      |    CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))
+      |      * (1 - CAST(l_discount AS DECIMAL(18,4)))) * 1000000
+      |      AS BIGINT) AS revc
+      |  FROM lineitem GROUP BY 1),
+      |t AS (SELECT sum(CAST(revc AS HUGEINT)) AS total FROM rev),
+      |c AS (SELECT l_partkey, revc,
+      |    sum(CAST(revc AS HUGEINT))
+      |      OVER (ORDER BY revc DESC, l_partkey) AS cum
+      |  FROM rev)""".stripMargin
+
+  /** [[duckUnd]]'s `op`, then each part's basket count `cnt(item, n)` and
+    * each ordered part pair's co-basket count `pairs(u, v, c)`.
+    * Comma-terminated. */
+  private val duckItemPairs: String =
+    """WITH op AS (SELECT DISTINCT l_orderkey AS o, l_partkey AS p
+      |           FROM lineitem),
+      |cnt AS (SELECT p AS item, count(*) AS n FROM op GROUP BY 1),
+      |pairs AS (SELECT a.p AS u, b.p AS v, count(*) AS c
+      |          FROM op a JOIN op b ON a.o = b.o AND a.p <> b.p
+      |          GROUP BY 1, 2),""".stripMargin
+
   val keys: Seq[Key] = Seq(
     Key("graph_closeness", graphCloseness, Some(
-      """WITH op AS (
-        |  SELECT DISTINCT l_orderkey AS o, l_partkey AS p FROM lineitem),
-        |und AS (SELECT DISTINCT a.p AS u, b.p AS v
-        |        FROM op a JOIN op b ON a.o = b.o AND a.p < b.p),
-        |edges AS (SELECT u, v FROM und UNION ALL SELECT v, u FROM und),
-        |deg AS (SELECT u, count(*) AS d FROM edges GROUP BY 1),
+      duckEdgeDegrees + """
         |nn AS (SELECT CAST(count(*) AS BIGINT) AS n_nodes FROM deg),
         |seeds AS (SELECT u AS seed FROM deg ORDER BY d DESC, u LIMIT 5),
         |d0 AS (SELECT seed, seed AS node, CAST(0 AS BIGINT) AS hop
@@ -1086,12 +1119,7 @@ object MiningOps {
         |    AS perplexity
         |FROM a""".stripMargin)),
     Key("eval_recsys_coverage", evalRecsysCoverage, Some(
-      """WITH op AS (SELECT DISTINCT l_orderkey AS o, l_partkey AS p
-        |           FROM lineitem),
-        |cnt AS (SELECT p AS item, count(*) AS n FROM op GROUP BY 1),
-        |pairs AS (SELECT a.p AS u, b.p AS v, count(*) AS c
-        |          FROM op a JOIN op b ON a.o = b.o AND a.p <> b.p
-        |          GROUP BY 1, 2),
+      duckItemPairs + """
         |sc AS (SELECT pairs.u, pairs.v,
         |    round(pairs.c / sqrt(CAST(cu.n * cv.n AS DOUBLE)), 6) + 0.0
         |      AS cos
@@ -1141,12 +1169,7 @@ object MiningOps {
         |FROM d WINDOW w AS (PARTITION BY user_id ORDER BY dayno)
         |ORDER BY user_id, day""".stripMargin)),
     Key("graph_path_counts", graphPathCounts, Some(
-      """WITH op AS (
-        |  SELECT DISTINCT l_orderkey AS o, l_partkey AS p FROM lineitem),
-        |und AS (SELECT DISTINCT a.p AS u, b.p AS v
-        |        FROM op a JOIN op b ON a.o = b.o AND a.p < b.p),
-        |edges AS (SELECT u, v FROM und UNION ALL SELECT v, u FROM und),
-        |deg AS (SELECT u, count(*) AS d FROM edges GROUP BY 1),
+      duckEdgeDegrees + """
         |seed AS (SELECT u FROM deg ORDER BY d DESC, u LIMIT 1),
         |s0 AS (SELECT u AS node, CAST(0 AS BIGINT) AS hop,
         |         CAST(1 AS BIGINT) AS sigma FROM seed),
@@ -1255,12 +1278,7 @@ object MiningOps {
         |  round(CAST(n_hits AS DOUBLE) / n_orders, 6) + 0.0 AS hit_rate
         |FROM g ORDER BY basket_size""".stripMargin)),
     Key("recsys_item_knn", recsysItemKnn, Some(
-      """WITH op AS (SELECT DISTINCT l_orderkey AS o, l_partkey AS p
-        |           FROM lineitem),
-        |cnt AS (SELECT p AS item, count(*) AS n FROM op GROUP BY 1),
-        |pairs AS (SELECT a.p AS u, b.p AS v, count(*) AS c
-        |          FROM op a JOIN op b ON a.o = b.o AND a.p <> b.p
-        |          GROUP BY 1, 2),
+      duckItemPairs + """
         |sc AS (SELECT pairs.u, pairs.v, pairs.c,
         |    round(pairs.c / sqrt(CAST(cu.n * cv.n AS DOUBLE)), 6) + 0.0
         |      AS cos
@@ -1273,23 +1291,11 @@ object MiningOps {
         |  CAST(c AS BIGINT) AS cooc, cos
         |FROM r WHERE rn <= 3 ORDER BY item, rn""".stripMargin)),
     Key("graph_clustering_coeff", graphClusteringCoeff, Some(
-      """WITH op AS (SELECT DISTINCT l_orderkey AS o, l_partkey AS p
-        |           FROM lineitem),
-        |und AS (SELECT DISTINCT a.p AS u, b.p AS v
-        |        FROM op a JOIN op b ON a.o = b.o AND a.p < b.p),
+      duckUnd + """
         |deg AS (SELECT node, count(*) AS d FROM (
         |          SELECT u AS node FROM und UNION ALL SELECT v FROM und)
         |        GROUP BY 1),
-        |dir AS (
-        |  SELECT CASE WHEN (du.d, und.u) < (dv.d, und.v)
-        |              THEN und.u ELSE und.v END AS src,
-        |         CASE WHEN (du.d, und.u) < (dv.d, und.v)
-        |              THEN und.v ELSE und.u END AS dst
-        |  FROM und
-        |  JOIN deg du ON und.u = du.node
-        |  JOIN deg dv ON und.v = dv.node),
-        |dr AS (SELECT dir.src, dir.dst, deg.d AS dd
-        |       FROM dir JOIN deg ON dir.dst = deg.node),
+        |""".stripMargin + duckOrientedDr + """
         |t AS (SELECT e1.src AS a, e1.dst AS b, e2.dst AS c
         |      FROM dr e1
         |      JOIN dr e2 ON e1.src = e2.src
@@ -1304,13 +1310,7 @@ object MiningOps {
         |FROM deg LEFT JOIN tc USING (node)
         |WHERE deg.d >= 2 ORDER BY node""".stripMargin)),
     Key("graph_rich_club", graphRichClub, Some(
-      """WITH op AS (SELECT DISTINCT l_orderkey AS o, l_partkey AS p
-        |           FROM lineitem),
-        |und AS (SELECT DISTINCT a.p AS u, b.p AS v
-        |        FROM op a JOIN op b ON a.o = b.o AND a.p < b.p),
-        |adj AS (SELECT u FROM und UNION ALL SELECT v AS u FROM und),
-        |deg AS (SELECT u AS node, CAST(count(*) AS BIGINT) AS d
-        |        FROM adj GROUP BY 1),
+      duckUndDeg + """
         |ks AS (SELECT unnest([4, 8, 16, 32]) AS k),
         |nk AS (SELECT k, CAST(count(*) AS BIGINT) AS n_club
         |       FROM deg CROSS JOIN ks WHERE d > k GROUP BY 1),
@@ -1326,13 +1326,7 @@ object MiningOps {
         |      / (n_club * (n_club - 1)) END, 6) + 0.0 AS phi
         |FROM nk LEFT JOIN ek ON nk.k = ek.k ORDER BY nk.k""".stripMargin)),
     Key("graph_degree_dist", graphDegreeDist, Some(
-      """WITH op AS (SELECT DISTINCT l_orderkey AS o, l_partkey AS p
-        |           FROM lineitem),
-        |und AS (SELECT DISTINCT a.p AS u, b.p AS v
-        |        FROM op a JOIN op b ON a.o = b.o AND a.p < b.p),
-        |adj AS (SELECT u FROM und UNION ALL SELECT v AS u FROM und),
-        |deg AS (SELECT u AS node, CAST(count(*) AS BIGINT) AS d
-        |        FROM adj GROUP BY 1),
+      duckUndDeg + """
         |b AS (SELECT CAST(length(bin(d)) - 1 AS INTEGER) AS log2_bin,
         |    CAST(count(*) AS BIGINT) AS n_nodes,
         |    CAST(min(d) AS BIGINT) AS min_deg,
@@ -1344,10 +1338,7 @@ object MiningOps {
         |  round(CAST(n_nodes AS DOUBLE) / total, 6) + 0.0 AS share
         |FROM b CROSS JOIN t ORDER BY log2_bin""".stripMargin)),
     Key("graph_assortativity", graphAssortativity, Some(
-      """WITH op AS (SELECT DISTINCT l_orderkey AS o, l_partkey AS p
-        |           FROM lineitem),
-        |und AS (SELECT DISTINCT a.p AS u, b.p AS v
-        |        FROM op a JOIN op b ON a.o = b.o AND a.p < b.p),
+      duckUnd + """
         |adj AS (SELECT u, v FROM und UNION ALL SELECT v, u FROM und),
         |deg AS (SELECT u AS node, count(*) AS d FROM adj GROUP BY 1),
         |e AS (SELECT du.d AS du, dv.d AS dv FROM adj
@@ -1366,10 +1357,7 @@ object MiningOps {
         |        6) + 0.0 AS assortativity
         |FROM m""".stripMargin)),
     Key("graph_common_neighbors", graphCommonNeighbors, Some(
-      """WITH op AS (SELECT DISTINCT l_orderkey AS o, l_partkey AS p
-        |           FROM lineitem),
-        |und AS (SELECT DISTINCT a.p AS u, b.p AS v
-        |        FROM op a JOIN op b ON a.o = b.o AND a.p < b.p),
+      duckUnd + """
         |adj AS (SELECT u AS node, v AS nbr FROM und
         |        UNION ALL SELECT v, u FROM und),
         |deg AS (SELECT node, count(*) AS d FROM adj GROUP BY 1),
@@ -1393,12 +1381,7 @@ object MiningOps {
     // the same 3 frontier rounds unrolled; min(hop) relaxation makes
     // every round partitioning-independent
     Key("graph_bfs", graphBfs, Some(
-      """WITH op AS (
-        |  SELECT DISTINCT l_orderkey AS o, l_partkey AS p FROM lineitem),
-        |und AS (SELECT DISTINCT a.p AS u, b.p AS v
-        |        FROM op a JOIN op b ON a.o = b.o AND a.p < b.p),
-        |edges AS (SELECT u, v FROM und UNION ALL SELECT v, u FROM und),
-        |deg AS (SELECT u, count(*) AS d FROM edges GROUP BY 1),
+      duckEdgeDegrees + """
         |seed AS (SELECT u FROM deg ORDER BY d DESC, u LIMIT 1),
         |d0 AS (SELECT u AS node, CAST(0 AS BIGINT) AS hop FROM seed),
         |d1 AS (SELECT node, min(hop) AS hop FROM (
@@ -1436,17 +1419,7 @@ object MiningOps {
         |FROM s WHERE pmax IS NULL OR qty > pmax
         |ORDER BY min_cost""".stripMargin)),
     Key("budget_waterfall", budgetWaterfall, Some(
-      """WITH rev AS (
-        |  SELECT l_partkey,
-        |    CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))
-        |      * (1 - CAST(l_discount AS DECIMAL(18,4)))) * 1000000
-        |      AS BIGINT) AS revc
-        |  FROM lineitem GROUP BY 1),
-        |t AS (SELECT sum(CAST(revc AS HUGEINT)) AS total FROM rev),
-        |c AS (SELECT l_partkey, revc,
-        |    sum(CAST(revc AS HUGEINT))
-        |      OVER (ORDER BY revc DESC, l_partkey) AS cum
-        |  FROM rev)
+      duckPartRevCum + """
         |SELECT CASE WHEN cum * 10 <= total THEN 'funded'
         |            WHEN (cum - revc) * 10 < total THEN 'partial'
         |            ELSE 'unfunded' END AS status,
@@ -1458,17 +1431,7 @@ object MiningOps {
     // equals it exactly (floor-banding is monotone, DECIMAL sums are
     // associative), which is the point of the oracle
     Key("pareto_abc", paretoAbc, Some(
-      """WITH rev AS (
-        |  SELECT l_partkey,
-        |    CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))
-        |      * (1 - CAST(l_discount AS DECIMAL(18,4)))) * 1000000
-        |      AS BIGINT) AS revc
-        |  FROM lineitem GROUP BY 1),
-        |t AS (SELECT sum(CAST(revc AS HUGEINT)) AS total FROM rev),
-        |c AS (SELECT l_partkey, revc,
-        |    sum(CAST(revc AS HUGEINT))
-        |      OVER (ORDER BY revc DESC, l_partkey) AS cum
-        |  FROM rev)
+      duckPartRevCum + """
         |SELECT CASE WHEN cum * 10 <= total * 8 THEN 'A'
         |            WHEN cum * 20 <= total * 19 THEN 'B'
         |            ELSE 'C' END AS cls,
@@ -1615,16 +1578,7 @@ object MiningOps {
         |  SELECT node, count(*) AS d FROM (
         |    SELECT u AS node FROM und UNION ALL SELECT v FROM und)
         |  GROUP BY 1),
-        |dir AS (
-        |  SELECT CASE WHEN (du.d, und.u) < (dv.d, und.v)
-        |              THEN und.u ELSE und.v END AS src,
-        |         CASE WHEN (du.d, und.u) < (dv.d, und.v)
-        |              THEN und.v ELSE und.u END AS dst
-        |  FROM und
-        |  JOIN deg du ON und.u = du.node
-        |  JOIN deg dv ON und.v = dv.node),
-        |dr AS (SELECT dir.src, dir.dst, deg.d AS dd
-        |       FROM dir JOIN deg ON dir.dst = deg.node),
+        |""".stripMargin + duckOrientedDr + """
         |tri AS (
         |  SELECT count(*) AS triangles
         |  FROM dr e1

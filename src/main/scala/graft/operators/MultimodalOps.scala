@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Key
 import graft.sources.Tables
+import graft.operators.OpsHelpers.toksCol
 
 /** Multimodal-column plumbing (north star: "treat image/audio/video as
   * opaque binary columns with typed metadata").
@@ -269,7 +270,7 @@ object MultimodalOps {
       dir: String): DataFrame = {
     val docs = Tables.documents(spark, dir)
       .select(col("doc_id"), col("lang"),
-        size(split(trim(lower(col("text"))), "\\s+")).as("n_toks"),
+        size(toksCol).as("n_toks"),
         expr("pmod(pmod(doc_id, 2147483648) * 2654435761, 2147483648)" +
           " % 1000000").as("u"))
       .withColumn("split",
@@ -381,6 +382,23 @@ object MultimodalOps {
       |  FROM documents WHERE length(text) >= 4),
       |""".stripMargin
 
+  /** Oracle CTEs of the audio-segment keys: the documents of at least 64
+    * characters `d`, their 8 segments `e`, and `g(doc_id, seg, energy)`,
+    * each segment's energy over 16 sampled bytes. Ends at `FROM e)`. */
+  private val duckSegmentEnergy: String =
+    """WITH d AS (
+      |  SELECT doc_id, text AS s, length(text) AS n FROM documents
+      |  WHERE length(text) >= 64),
+      |e AS (
+      |  SELECT doc_id, unnest(range(0, 8)) AS seg, s, n FROM d),
+      |g AS (
+      |  SELECT doc_id, seg,
+      |    CAST(list_sum(list_transform(range(0, 16), j ->
+      |      abs(ascii(substring(s,
+      |        CAST(1 + seg * (n // 8) + (j * ((n // 8) - 1)) // 15
+      |          AS BIGINT), 1)) - 96))) AS BIGINT) AS energy
+      |  FROM e)""".stripMargin
+
   val keys: Seq[Key] = Seq(
     Key("multimodal_res_buckets", multimodalResBuckets, Some(duckPseudoDims +
       """b AS (SELECT *, (100 * w) // h AS ar100,
@@ -426,9 +444,9 @@ object MultimodalOps {
         |FROM r WHERE reason IS NOT NULL GROUP BY 1
         |ORDER BY reason""".stripMargin)),
     Key("multimodal_caption_manifest", multimodalCaptionManifest, Some(
-      """WITH d AS (
+      s"""WITH d AS (
         |  SELECT doc_id, lang,
-        |    len(string_split_regex(trim(lower(text)), '\s+')) AS n_toks,
+        |    len(${OracleSql.Toks}) AS n_toks,
         |    ((doc_id % 2147483648) * 2654435761 % 2147483648) % 1000000
         |      AS u
         |  FROM documents),
@@ -447,34 +465,12 @@ object MultimodalOps {
     // the identical integer byte sampling; list_sum/list_transform are
     // the aggregate/sequence twins
     Key("multimodal_audio_energy", multimodalAudioEnergy, Some(
-      """WITH d AS (
-        |  SELECT doc_id, text AS s, length(text) AS n FROM documents
-        |  WHERE length(text) >= 64),
-        |e AS (
-        |  SELECT doc_id, unnest(range(0, 8)) AS seg, s, n FROM d),
-        |g AS (
-        |  SELECT doc_id, seg,
-        |    CAST(list_sum(list_transform(range(0, 16), j ->
-        |      abs(ascii(substring(s,
-        |        CAST(1 + seg * (n // 8) + (j * ((n // 8) - 1)) // 15
-        |          AS BIGINT), 1)) - 96))) AS BIGINT) AS energy
-        |  FROM e)
+      duckSegmentEnergy + """
         |SELECT doc_id, CAST(seg AS BIGINT) AS seg, energy,
         |  energy < 160 AS is_quiet
         |FROM g ORDER BY doc_id, seg""".stripMargin)),
     Key("multimodal_scene_cut", multimodalSceneCut, Some(
-      """WITH d AS (
-        |  SELECT doc_id, text AS s, length(text) AS n FROM documents
-        |  WHERE length(text) >= 64),
-        |e AS (
-        |  SELECT doc_id, unnest(range(0, 8)) AS seg, s, n FROM d),
-        |g AS (
-        |  SELECT doc_id, seg,
-        |    CAST(list_sum(list_transform(range(0, 16), j ->
-        |      abs(ascii(substring(s,
-        |        CAST(1 + seg * (n // 8) + (j * ((n // 8) - 1)) // 15
-        |          AS BIGINT), 1)) - 96))) AS BIGINT) AS energy
-        |  FROM e),
+      duckSegmentEnergy + """,
         |l AS (
         |  SELECT doc_id,
         |    abs(energy - lag(energy)

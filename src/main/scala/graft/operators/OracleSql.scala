@@ -1,10 +1,60 @@
 package graft.operators
 
-/** Shared oracle-SQL rewrite devices (DuckDB side only — never touches a
-  * Spark plan). Hoisted here from verbatim twins in [[MiningOps]] and
-  * [[AnalyticsOps]] so the two graph-oracle families cannot drift.
+/** Shared oracle-SQL text and rewrite devices (DuckDB side only — never
+  * touches a Spark plan). Each rule that several oracles state is written
+  * here once, and an oracle interpolates it only where the text it yields
+  * equals the text it replaces, so a refactor leaves every oracle
+  * byte-identical.
   */
 private[graft] object OracleSql {
+
+  /** DuckDB's whitespace tokenizer over a document's lowercased text. */
+  val Toks: String = """string_split_regex(trim(lower(text)), '\s+')"""
+
+  /** The session rule: an event opens a new session when the gap to the
+    * user's previous event exceeds 30 minutes (µs, window `w`). */
+  val SessionBreak = "us - lag(us) OVER w > 1800000000"
+
+  /** The `seq`/`flags` CTEs of the sessionization oracles, then a CTE
+    * `name(user_id, us, session_id)`: the running count of session
+    * starts over the per-user (us, event_id) order, as `BIGINT` when
+    * `cast`. Ends at `FROM flags)`. */
+  def sessionIdCtes(name: String, cast: Boolean): String = {
+    val (open, close) = if (cast) ("CAST(", " AS BIGINT)") else ("", "")
+    s"""WITH seq AS (
+       |  SELECT event_id, user_id, epoch_us(CAST(ts AS TIMESTAMP)) AS us FROM events),
+       |flags AS (
+       |  SELECT user_id, us, event_id,
+       |    CASE WHEN lag(us) OVER w IS NULL OR $SessionBreak
+       |         THEN 1 ELSE 0 END AS is_new
+       |  FROM seq WINDOW w AS (PARTITION BY user_id ORDER BY us, event_id)),
+       |$name AS (
+       |  SELECT user_id, us,
+       |    ${open}sum(is_new) OVER (PARTITION BY user_id ORDER BY us, event_id
+       |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)$close AS session_id
+       |  FROM flags)""".stripMargin
+  }
+
+  /** Oracle CTE `daily(day, revc)`: each day's total revenue in exact
+    * int64 cents. Comma-terminated. */
+  val DayCents: String =
+    """WITH daily AS (
+      |  SELECT CAST(CAST(ts AS TIMESTAMP) AS DATE) AS day,
+      |    CAST(sum(CAST("value" AS DECIMAL(18,2))) * 100 AS BIGINT)
+      |      AS revc
+      |  FROM events GROUP BY 1),""".stripMargin
+
+  /** The lineitem (returnflag, linestatus) subtotal oracle of the
+    * rollup, cube and grouping-sets keys, grouped by `groupBy`. */
+  def lineitemGrouping(groupBy: String): String =
+    s"""SELECT COALESCE(l_returnflag, '<all>') AS returnflag,
+       |  COALESCE(l_linestatus, '<all>') AS linestatus,
+       |  count(*) AS cnt,
+       |  CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
+       |  CAST(grouping(l_returnflag) AS INTEGER) AS g_rf,
+       |  CAST(grouping(l_linestatus) AS INTEGER) AS g_ls
+       |FROM lineitem GROUP BY $groupBy
+       |ORDER BY g_rf, g_ls, returnflag, linestatus""".stripMargin
 
   /** Force every CTE in an iterative graph oracle to `AS MATERIALIZED`.
     *

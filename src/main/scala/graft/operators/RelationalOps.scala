@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.Key
 import graft.functions.Exact._
 import graft.sources.{Bucketed, Layout, Tables}
+import graft.operators.OpsHelpers.bloomWords
 
 /** Declared relational completions (SURVEY.md §2.4, §2.6): the join
   * strategies, top-k, set ops and window functions the reference never
@@ -304,11 +305,7 @@ object RelationalOps {
   // format round-trip is lossless. ──
   def scanJsonl(spark: SparkSession, dir: String): DataFrame = {
     val path = graft.sources.Layout.ensureEventsJsonl(spark, dir)
-    graft.sources.Layout.readEventsJsonl(spark, path)
-      .groupBy(col("event_type"))
-      .agg(count(lit(1)).as("cnt"), avgMoney(col("value")).as("avg_value"),
-        max(col("ts")).as("max_ts_us"))
-      .orderBy("event_type")
+    typeSummary(graft.sources.Layout.readEventsJsonl(spark, path))
   }
 
   // ── ORC source surface: Spark's second built-in columnar format
@@ -321,12 +318,16 @@ object RelationalOps {
   // filters, pruned columns) carries over unchanged. ──
   def scanOrc(spark: SparkSession, dir: String): DataFrame = {
     val path = graft.sources.Layout.ensureEventsOrc(spark, dir)
-    spark.read.orc(path)
-      .groupBy(col("event_type"))
+    typeSummary(spark.read.orc(path))
+  }
+
+  /** The round-trip check of the format keys: per event_type the count,
+    * the exact average value and the latest µs timestamp of `events`. */
+  private def typeSummary(events: DataFrame): DataFrame =
+    events.groupBy(col("event_type"))
       .agg(count(lit(1)).as("cnt"), avgMoney(col("value")).as("avg_value"),
         max(col("ts")).as("max_ts_us"))
       .orderBy("event_type")
-  }
 
   // ── CSV source surface with a QUARANTINE path: the lowest-common-
   // denominator feed format, read with an explicit schema in PERMISSIVE
@@ -616,11 +617,7 @@ object RelationalOps {
     // slower HERE: a fact-wide crossJoin carries the whole map through
     // every row and element_at on a map is a linear scan; a broadcast hash
     // join probes O(1) per row and adds 8 bytes, staying codegen'd.)
-    val words = dim
-      .select(explode(array(positions: _*)).as("pos"))
-      .select(expr("CAST(pos div 64 AS INT)").as("word"),
-        expr("shiftleft(CAST(1 AS BIGINT), CAST(pos % 64 AS INT))").as("mask"))
-      .groupBy("word").agg(expr("bit_or(mask)").as("bits"))
+    val words = bloomWords(dim, positions)
 
     // one left broadcast-hash probe per seed; a missing word ⇒ bits NULL ⇒
     // coalesce 0 ⇒ the row can't pass that seed's bit test (exactly the
@@ -685,6 +682,14 @@ object RelationalOps {
     Layout.ensureEventsByDay(_, _)
   private val versionedEvents: (SparkSession, String) => Unit =
     scanTimeTravel(_, _).count()
+
+  /** Oracle twin of [[typeSummary]] over the parquet original. */
+  private val duckTypeSummary: String =
+    """SELECT event_type, count(*) AS cnt,
+      |  CAST(sum(CAST("value" AS DECIMAL(18,2))) AS DOUBLE) / count("value")
+      |    AS avg_value,
+      |  max(epoch_us(CAST(ts AS TIMESTAMP))) AS max_ts_us
+      |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin
 
   val keys: Seq[Key] = Seq(
     // the store's documented tombstone rule applied to the raw table —
@@ -785,19 +790,9 @@ object RelationalOps {
         |      BETWEEN 1705276800000000 AND 1705708800000000
         |GROUP BY event_type ORDER BY event_type""".stripMargin)),
     Key("scan_orc", scanOrc,
-      prep = Some(Layout.ensureEventsOrc(_, _)), oracle = Some(
-      """SELECT event_type, count(*) AS cnt,
-        |  CAST(sum(CAST("value" AS DECIMAL(18,2))) AS DOUBLE) / count("value")
-        |    AS avg_value,
-        |  max(epoch_us(CAST(ts AS TIMESTAMP))) AS max_ts_us
-        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin)),
+      prep = Some(Layout.ensureEventsOrc(_, _)), oracle = Some(duckTypeSummary)),
     Key("scan_jsonl", scanJsonl,
-      prep = Some(Layout.ensureEventsJsonl(_, _)), oracle = Some(
-      """SELECT event_type, count(*) AS cnt,
-        |  CAST(sum(CAST("value" AS DECIMAL(18,2))) AS DOUBLE) / count("value")
-        |    AS avg_value,
-        |  max(epoch_us(CAST(ts AS TIMESTAMP))) AS max_ts_us
-        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin)),
+      prep = Some(Layout.ensureEventsJsonl(_, _)), oracle = Some(duckTypeSummary)),
     // n_quarantined pins the CSV fixture's 3 poisoned lines
     // (graft.sources.Layout.CsvBadLines): the engine must catch and
     // exclude every one of them, and good rows must round-trip losslessly

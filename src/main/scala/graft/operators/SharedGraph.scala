@@ -157,16 +157,34 @@ private[graft] object SharedGraph {
     * both build (each previously paid the two degree joins plus its own
     * Eager checkpoint per invocation). The orientation is a deterministic
     * function of the integer degrees, so sharing it is value-identical. */
+  /** Each [[coPurchaseOriented]] edge (src, dst) with both endpoints'
+    * [[coPurchaseOutAdj]] lists as nu and nv: a triangle closes on each
+    * node the two lists share. A sink dst has no list and drops out. */
+  def closingNbrs(spark: SparkSession, dir: String): DataFrame = {
+    val oriented = coPurchaseOriented(spark, dir)
+    val adj = coPurchaseOutAdj(spark, dir)
+    oriented
+      .join(adj.select(col("src").as("u"), col("nbrs").as("nu")),
+        col("src") === col("u"))
+      .join(adj.select(col("src").as("v"), col("nbrs").as("nv")),
+        col("dst") === col("v"))
+  }
+
+  /** `edges` (u, v) with each endpoint's degree from `deg` (node, d) as
+    * du and dv, the small degree table broadcast to both sides. */
+  def withDegrees(edges: DataFrame, deg: DataFrame): DataFrame =
+    edges
+      .join(broadcast(deg.select(col("node").as("u"), col("d").as("du"))),
+        "u")
+      .join(broadcast(deg.select(col("node").as("v"), col("d").as("dv"))),
+        "v")
+
   def coPurchaseOriented(spark: SparkSession, dir: String): DataFrame =
     memo(spark, "copurchase_oriented", dir) {
       val deg = coPurchaseDeg(spark, dir)
       val lowFirst = col("du") < col("dv") ||
         (col("du") === col("dv") && col("u") < col("v"))
-      coPurchaseEdges(spark, dir)
-        .join(broadcast(deg.select(col("node").as("u"), col("d").as("du"))),
-          "u")
-        .join(broadcast(deg.select(col("node").as("v"), col("d").as("dv"))),
-          "v")
+      withDegrees(coPurchaseEdges(spark, dir), deg)
         .select(when(lowFirst, col("u")).otherwise(col("v")).as("src"),
           when(lowFirst, col("v")).otherwise(col("u")).as("dst"))
     }

@@ -175,15 +175,7 @@ object SimilarityOps {
   // identical rounding in both engines), making the sum associative →
   // bitwise-reproducible under any partitioning, then divided once. ──
   def embedCentroid(spark: SparkSession, dir: String): DataFrame =
-    Tables.embeddings(spark, dir)
-      .select(col("label"), posexplode(col("embedding").cast("array<double>"))
-        .as(Seq("pos", "x")))
-      .groupBy(col("label"), col("pos"))
-      // divide by count(x), not count(*): averages over the vectors that
-      // HAVE the position — identical for uniform-dim corpora, and the
-      // sane semantic for ragged ones (the oracle counts v[i] likewise)
-      .agg((sum(col("x").cast("decimal(18,9)")).cast("double") /
-        count(col("x"))).as("c"))
+    centroidComponents(spark, dir)
       .groupBy(col("label"))
       // output serialization: each component rounded to 6 dp, cast to
       // DECIMAL(18,6) (fixed-scale rendering — "0.500000" — identical in
@@ -195,6 +187,20 @@ object SimilarityOps {
           s => round(s.getField("c"), 6).cast("decimal(18,6)").cast("string")),
         ",").as("centroid"))
       .orderBy("label")
+
+  /** Each label's centroid component c at each position pos: the DECIMAL
+    * sum of the label's vectors' components there, divided once. */
+  private def centroidComponents(spark: SparkSession,
+      dir: String): DataFrame =
+    Tables.embeddings(spark, dir)
+      .select(col("label"), posexplode(col("embedding").cast("array<double>"))
+        .as(Seq("pos", "x")))
+      .groupBy(col("label"), col("pos"))
+      // divide by count(x), not count(*): averages over the vectors that
+      // HAVE the position — identical for uniform-dim corpora, and the
+      // sane semantic for ragged ones (the oracle counts v[i] likewise)
+      .agg((sum(col("x").cast("decimal(18,9)")).cast("double") /
+        count(col("x"))).as("c"))
 
   // ── symmetric int8 quantization: q[i] = round(v[i] · 127/max|v|) — the
   // storage-scale path for embedding corpora (4× smaller than float32,
@@ -290,12 +296,7 @@ object SimilarityOps {
   // TopKPerKey under GraftExtensions (TopKRewrite) — per-partition heaps,
   // not a full sort. ──
   def embedOutlier(spark: SparkSession, dir: String): DataFrame = {
-    val cent = Tables.embeddings(spark, dir)
-      .select(col("label"), posexplode(col("embedding").cast("array<double>"))
-        .as(Seq("pos", "x")))
-      .groupBy(col("label"), col("pos"))
-      .agg((sum(col("x").cast("decimal(18,9)")).cast("double") /
-        count(col("x"))).as("c"))
+    val cent = centroidComponents(spark, dir)
       .groupBy(col("label"))
       .agg(expr("transform(array_sort(collect_list(struct(pos, c)))," +
         " s -> s.c)").as("cv"))
@@ -352,19 +353,8 @@ object SimilarityOps {
   // products — the sim_search probe shape, linear at any corpus size.
   // Argmin/argmax via (rounded-cos, id) struct extrema — total order,
   // engine-independent. ──
-  def embedTripletMine(spark: SparkSession, dir: String): DataFrame = {
-    val anchors = vecs(spark, dir)
-      .orderBy(expr("pmod(pmod(vec_id, 2147483648) * 2654435761," +
-        " 2147483648)"), col("vec_id"))
-      .limit(20)
-      .select(col("vec_id").as("a_id"), col("label").as("a_label"),
-        col("v").as("a_v"), col("norm").as("a_norm"))
-    val scored = vecs(spark, dir)
-      .join(broadcast(anchors), col("vec_id") =!= col("a_id"))
-      .select(col("a_id"), col("a_label"), col("vec_id"), col("label"),
-        (round(DedupOps.dot(col("v"), col("a_v")) /
-          (col("norm") * col("a_norm")), 6) + lit(0.0d)).as("cos6"))
-    scored.groupBy(col("a_id"), col("a_label"))
+  def embedTripletMine(spark: SparkSession, dir: String): DataFrame =
+    anchorScores(spark, dir).groupBy(col("a_id"), col("a_label"))
       .agg(
         min(when(col("label") === col("a_label"),
           struct(col("cos6"), col("vec_id")))).as("hp"),
@@ -378,6 +368,23 @@ object SimilarityOps {
           .as("margin"),
         (col("hn.cos6") > col("hp.cos6")).as("is_violation"))
       .orderBy("anchor_id")
+
+  /** The 20 hash-sampled anchors (an unbiased yet replayable order) each
+    * scored against every other vector: (a_id, a_label, vec_id, label,
+    * cos6), the cosine snapped to 6 dp. The anchors broadcast, so this is
+    * one corpus scan of 20·N dot products. */
+  private def anchorScores(spark: SparkSession, dir: String): DataFrame = {
+    val anchors = vecs(spark, dir)
+      .orderBy(expr("pmod(pmod(vec_id, 2147483648) * 2654435761," +
+        " 2147483648)"), col("vec_id"))
+      .limit(20)
+      .select(col("vec_id").as("a_id"), col("label").as("a_label"),
+        col("v").as("a_v"), col("norm").as("a_norm"))
+    vecs(spark, dir)
+      .join(broadcast(anchors), col("vec_id") =!= col("a_id"))
+      .select(col("a_id"), col("a_label"), col("vec_id"), col("label"),
+        (round(DedupOps.dot(col("v"), col("a_v")) /
+          (col("norm") * col("a_norm")), 6) + lit(0.0d)).as("cos6"))
   }
 
   // ── ANN quality harness: recall@10 / MRR / nDCG@10 of the coarse-cell
@@ -393,17 +400,7 @@ object SimilarityOps {
   // 1e-9 grid before their DECIMAL sum (IDCG derived from the same
   // formula over 1..10, not a pasted constant). ──
   def evalAnnRecall(spark: SparkSession, dir: String): DataFrame = {
-    val anchors = vecs(spark, dir)
-      .orderBy(expr("pmod(pmod(vec_id, 2147483648) * 2654435761," +
-        " 2147483648)"), col("vec_id"))
-      .limit(20)
-      .select(col("vec_id").as("a_id"), col("label").as("a_label"),
-        col("v").as("a_v"), col("norm").as("a_norm"))
-    val scored = vecs(spark, dir)
-      .join(broadcast(anchors), col("vec_id") =!= col("a_id"))
-      .select(col("a_id"), col("a_label"), col("vec_id"), col("label"),
-        (round(DedupOps.dot(col("v"), col("a_v")) /
-          (col("norm") * col("a_norm")), 6) + lit(0.0d)).as("cos6"))
+    val scored = anchorScores(spark, dir)
       .withColumn("rn_ex", row_number().over(
         Window.partitionBy(col("a_id"))
           .orderBy(desc("cos6"), col("vec_id"))))
@@ -518,14 +515,7 @@ object SimilarityOps {
   // boundary can disagree between engines); per-bin means divide exact
   // integer/decimal sums once. Group-sized output. ──
   def evalCalibration(spark: SparkSession, dir: String): DataFrame =
-    centroidScored(spark, dir)
-      .withColumn("m",
-        expr("CAST(CAST(cos6 AS DECIMAL(9,6)) * 1000000 AS BIGINT)"))
-      .withColumn("bin",
-        least(expr("(m + 1000000) div 200000"), lit(9L)))
-      .groupBy(col("bin"))
-      .agg(count(lit(1)).as("n"), sum(col("y")).as("n_pos"),
-        sum(col("m") + 1000000L).as("psum_micro"))
+    calibrationBins(spark, dir)
       .select(col("bin"), col("n"), col("n_pos"),
         r6(expr("cast(psum_micro as double) / (2000000 * n)"))
           .as("avg_p"),
@@ -535,16 +525,22 @@ object SimilarityOps {
       .orderBy("bin")
 
 
-  /** The eval_calibration 10-bin frame as a reusable input: per-bin
-    * count / positives / exact micro-unit probability sum. Integer bin
-    * assignment on the 6-dp score — shared by [[evalBrierDecomp]] and
-    * [[evalEce]] so all three calibration reads bin identically. */
-  private def calibrationBins(spark: SparkSession, dir: String): DataFrame =
+  /** [[centroidScored]] with the 6-dp score in micro-units m and its
+    * bin of 0.2 in [-1, 1] (the top bin closed): integer arithmetic, so
+    * no float boundary can disagree between engines. */
+  private def scoreBins(spark: SparkSession, dir: String): DataFrame =
     centroidScored(spark, dir)
       .withColumn("m",
         expr("CAST(CAST(cos6 AS DECIMAL(9,6)) * 1000000 AS BIGINT)"))
       .withColumn("bin",
         least(expr("(m + 1000000) div 200000"), lit(9L)))
+
+  /** The eval_calibration 10-bin frame as a reusable input: per-bin
+    * count / positives / exact micro-unit probability sum. Integer bin
+    * assignment on the 6-dp score — shared by [[evalBrierDecomp]] and
+    * [[evalEce]] so all three calibration reads bin identically. */
+  private def calibrationBins(spark: SparkSession, dir: String): DataFrame =
+    scoreBins(spark, dir)
       .groupBy(col("bin"))
       .agg(count(lit(1)).as("n"), sum(col("y")).as("n_pos"),
         sum(col("m") + 1000000L).as("psum_micro"))
@@ -617,11 +613,7 @@ object SimilarityOps {
   // 10 corpus passes); threshold membership is integer arithmetic on
   // the 6-dp score, so the counts are engine-exact. ──
   def evalRocPoints(spark: SparkSession, dir: String): DataFrame = {
-    val binned = centroidScored(spark, dir)
-      .withColumn("m",
-        expr("CAST(CAST(cos6 AS DECIMAL(9,6)) * 1000000 AS BIGINT)"))
-      .withColumn("bin",
-        least(expr("(m + 1000000) div 200000"), lit(9L)))
+    val binned = scoreBins(spark, dir)
       .groupBy(col("bin"))
       .agg(sum(col("y")).as("p"), sum(lit(1L) - col("y")).as("q"))
     // cumulative from the TOP bin down: predictions at threshold b are
@@ -697,17 +689,7 @@ object SimilarityOps {
     * (cos6 desc, vec_id) total order and cut at 5. One broadcast-probe
     * corpus scan feeds both the k=5 classifier and the k-sweep. */
   private def knnRanked(spark: SparkSession, dir: String): DataFrame = {
-    val anchors = vecs(spark, dir)
-      .orderBy(expr("pmod(pmod(vec_id, 2147483648) * 2654435761," +
-        " 2147483648)"), col("vec_id"))
-      .limit(20)
-      .select(col("vec_id").as("a_id"), col("label").as("a_label"),
-        col("v").as("a_v"), col("norm").as("a_norm"))
-    vecs(spark, dir)
-      .join(broadcast(anchors), col("vec_id") =!= col("a_id"))
-      .select(col("a_id"), col("a_label"), col("vec_id"), col("label"),
-        (round(DedupOps.dot(col("v"), col("a_v")) /
-          (col("norm") * col("a_norm")), 6) + lit(0.0d)).as("cos6"))
+    anchorScores(spark, dir)
       .withColumn("rn", row_number().over(
         Window.partitionBy(col("a_id"))
           .orderBy(desc("cos6"), col("vec_id"))))
@@ -761,13 +743,11 @@ object SimilarityOps {
       .orderBy("k")
   }
 
-  /** Shared oracle prelude for the centroid-probe classifier keys: 6-dp
-    * class-0 centroid cosine + binary truth, mirroring
-    * [[centroidScored]]. */
-  /** Oracle CTE block mirroring [[knnRanked]]: 20 hash-ordered anchors,
-    * cosine to every other vector, rank cut at 5. Ends at
-    * `top5(a_id, a_label, vec_id, label, cos6, rn)`, comma-terminated. */
-  private val duckKnnTop5: String =
+  /** Oracle CTEs mirroring [[anchorScores]]: the vectors `e`, the 20
+    * hash-ordered anchors `a` and `sc(a_id, a_label, vec_id, label,
+    * cos6)`, each anchor's 6-dp cosine to every other vector.
+    * Comma-terminated. */
+  private val duckAnchorScores: String =
     """WITH e AS (SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS v
       |           FROM embeddings),
       |a AS (SELECT vec_id AS a_id, label AS a_label, v AS a_v FROM e
@@ -777,11 +757,20 @@ object SimilarityOps {
       |sc AS (SELECT a.a_id, a.a_label, e.vec_id, e.label,
       |    round(list_cosine_similarity(e.v, a.a_v), 6) + 0.0 AS cos6
       |  FROM e, a WHERE e.vec_id <> a.a_id),
-      |rk AS (SELECT *, row_number() OVER (PARTITION BY a_id
+      |""".stripMargin
+
+  /** Oracle CTE block mirroring [[knnRanked]]: [[duckAnchorScores]], rank
+    * cut at 5. Ends at `top5(a_id, a_label, vec_id, label, cos6, rn)`,
+    * comma-terminated. */
+  private val duckKnnTop5: String = duckAnchorScores +
+    """rk AS (SELECT *, row_number() OVER (PARTITION BY a_id
       |        ORDER BY cos6 DESC, vec_id) AS rn FROM sc),
       |top5 AS (SELECT * FROM rk WHERE rn <= 5),
       |""".stripMargin
 
+  /** Shared oracle prelude for the centroid-probe classifier keys: 6-dp
+    * class-0 centroid cosine + binary truth, mirroring
+    * [[centroidScored]]. */
   private val duckCentroidScored: String =
     """WITH e AS (SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS v
       |           FROM embeddings),
@@ -796,6 +785,36 @@ object SimilarityOps {
       |         CASE WHEN e.label = 0 THEN 1 ELSE 0 END AS y,
       |         round(list_cosine_similarity(e.v, cv.cv), 6) + 0.0 AS cos6
       |       FROM e, cv),
+      |""".stripMargin
+
+  /** Oracle CTEs mirroring [[centroidComponents]] over vectors
+    * `e(label, v)`: each label's centroid component `comp(label, pos,
+    * c)`. Ends at its closing parenthesis. */
+  private val duckCentroidComponents: String =
+    """ex AS (SELECT label, generate_subscripts(v, 1) - 1 AS pos, unnest(v) AS x FROM e),
+      |comp AS (
+      |  SELECT label, pos,
+      |    CAST(sum(CAST(x AS DECIMAL(18,9))) AS DOUBLE) / count(x) AS c
+      |  FROM ex GROUP BY label, pos)""".stripMargin
+
+  /** [[duckCentroidScored]] plus the eval_calibration bins: `mb(y, m)`,
+    * the score in micro-units, and `bb(bin, y, m)`. Ends at `FROM mb)`. */
+  private val duckScoreBins: String = duckCentroidScored +
+    """mb AS (SELECT y,
+      |         CAST(CAST(cos6 AS DECIMAL(9,6)) * 1000000 AS BIGINT)
+      |           AS m
+      |       FROM sc),
+      |bb AS (SELECT least((m + 1000000) // 200000, 9) AS bin, y, m
+      |       FROM mb)""".stripMargin
+
+  /** [[duckScoreBins]] aggregated to `g(bin, n, n_pos, psum)`, mirroring
+    * [[calibrationBins]]. Comma-terminated. */
+  private val duckCalibrationBins: String = duckScoreBins +
+    """,
+      |g AS (SELECT bin, CAST(count(*) AS BIGINT) AS n,
+      |        CAST(sum(y) AS BIGINT) AS n_pos,
+      |        CAST(sum(m + 1000000) AS BIGINT) AS psum
+      |      FROM bb GROUP BY 1),
       |""".stripMargin
 
   val keys: Seq[Key] = Seq(
@@ -898,13 +917,7 @@ object SimilarityOps {
         |  round(CAST(brier_num AS DOUBLE) / (4 * (n_pos + n_neg)), 6)
         |    + 0.0 AS brier
         |FROM u""".stripMargin)),
-    Key("eval_calibration", evalCalibration, Some(duckCentroidScored +
-      """mb AS (SELECT y,
-        |         CAST(CAST(cos6 AS DECIMAL(9,6)) * 1000000 AS BIGINT)
-        |           AS m
-        |       FROM sc),
-        |bb AS (SELECT least((m + 1000000) // 200000, 9) AS bin, y, m
-        |       FROM mb)
+    Key("eval_calibration", evalCalibration, Some(duckScoreBins + """
         |SELECT bin, CAST(count(*) AS BIGINT) AS n,
         |  CAST(sum(y) AS BIGINT) AS n_pos,
         |  round(CAST(sum(m + 1000000) AS DOUBLE) / (2000000 * count(*)),
@@ -913,18 +926,8 @@ object SimilarityOps {
         |  round(CAST(sum(m + 1000000) AS DOUBLE) / (2000000 * count(*))
         |    - CAST(sum(y) AS DOUBLE) / count(*), 6) + 0.0 AS gap
         |FROM bb GROUP BY 1 ORDER BY 1""".stripMargin)),
-    Key("eval_brier_decomp", evalBrierDecomp, Some(duckCentroidScored +
-      """mb AS (SELECT y,
-        |         CAST(CAST(cos6 AS DECIMAL(9,6)) * 1000000 AS BIGINT)
-        |           AS m
-        |       FROM sc),
-        |bb AS (SELECT least((m + 1000000) // 200000, 9) AS bin, y, m
-        |       FROM mb),
-        |g AS (SELECT bin, CAST(count(*) AS BIGINT) AS n,
-        |        CAST(sum(y) AS BIGINT) AS n_pos,
-        |        CAST(sum(m + 1000000) AS BIGINT) AS psum
-        |      FROM bb GROUP BY 1),
-        |t AS (SELECT CAST(sum(n) AS BIGINT) AS nt,
+    Key("eval_brier_decomp", evalBrierDecomp, Some(duckCalibrationBins +
+      """        |t AS (SELECT CAST(sum(n) AS BIGINT) AS nt,
         |        CAST(sum(n_pos) AS BIGINT) AS npt FROM g),
         |d AS (SELECT g.*, t.nt, t.npt,
         |        CAST(psum AS DOUBLE) / (2000000 * n) AS pbar,
@@ -948,18 +951,8 @@ object SimilarityOps {
         |    + (CAST(npt AS DOUBLE) / nt)
         |    * (1.0 - CAST(npt AS DOUBLE) / nt), 6) + 0.0 AS brier_binned
         |FROM s""".stripMargin)),
-    Key("eval_ece", evalEce, Some(duckCentroidScored +
-      """mb AS (SELECT y,
-        |         CAST(CAST(cos6 AS DECIMAL(9,6)) * 1000000 AS BIGINT)
-        |           AS m
-        |       FROM sc),
-        |bb AS (SELECT least((m + 1000000) // 200000, 9) AS bin, y, m
-        |       FROM mb),
-        |g AS (SELECT bin, CAST(count(*) AS BIGINT) AS n,
-        |        CAST(sum(y) AS BIGINT) AS n_pos,
-        |        CAST(sum(m + 1000000) AS BIGINT) AS psum
-        |      FROM bb GROUP BY 1),
-        |d AS (SELECT bin, n,
+    Key("eval_ece", evalEce, Some(duckCalibrationBins +
+      """        |d AS (SELECT bin, n,
         |        CAST(psum AS DOUBLE) / (2000000 * n) AS pbar,
         |        CAST(n_pos AS DOUBLE) / n AS ybar
         |      FROM g),
@@ -1002,17 +995,8 @@ object SimilarityOps {
         |  round(CAST(n_correct AS DOUBLE) / n_anchors, 6) + 0.0
         |    AS accuracy
         |FROM w ORDER BY k""".stripMargin)),
-    Key("eval_ann_recall", evalAnnRecall, Some(
-      """WITH e AS (SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS v
-        |           FROM embeddings),
-        |a AS (SELECT vec_id AS a_id, label AS a_label, v AS a_v FROM e
-        |      ORDER BY (vec_id % 2147483648) * 2654435761 % 2147483648,
-        |        vec_id
-        |      LIMIT 20),
-        |sc AS (SELECT a.a_id, a.a_label, e.vec_id, e.label,
-        |    round(list_cosine_similarity(e.v, a.a_v), 6) + 0.0 AS cos6
-        |  FROM e, a WHERE e.vec_id <> a.a_id),
-        |ex AS (SELECT *, row_number() OVER (PARTITION BY a_id
+    Key("eval_ann_recall", evalAnnRecall, Some(duckAnchorScores +
+      """        |ex AS (SELECT *, row_number() OVER (PARTITION BY a_id
         |        ORDER BY cos6 DESC, vec_id) AS rn_ex FROM sc),
         |ap AS (SELECT *, row_number() OVER (PARTITION BY a_id
         |        ORDER BY cos6 DESC, vec_id) AS rn_ap
@@ -1039,17 +1023,8 @@ object SimilarityOps {
         |  round(CAST(dcg AS DOUBLE) / CAST(idcg AS DOUBLE), 6) + 0.0
         |    AS ndcg_at_10
         |FROM g CROSS JOIN i ORDER BY anchor_id""".stripMargin)),
-    Key("embed_triplet_mine", embedTripletMine, Some(
-      """WITH e AS (SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS v
-        |           FROM embeddings),
-        |a AS (SELECT vec_id AS a_id, label AS a_label, v AS a_v FROM e
-        |      ORDER BY (vec_id % 2147483648) * 2654435761 % 2147483648,
-        |        vec_id
-        |      LIMIT 20),
-        |sc AS (SELECT a.a_id, a.a_label, e.vec_id, e.label,
-        |    round(list_cosine_similarity(e.v, a.a_v), 6) + 0.0 AS cos6
-        |  FROM e, a WHERE e.vec_id <> a.a_id),
-        |hp AS (SELECT a_id, vec_id AS pos_id, cos6 AS pos_cos,
+    Key("embed_triplet_mine", embedTripletMine, Some(duckAnchorScores +
+      """        |hp AS (SELECT a_id, vec_id AS pos_id, cos6 AS pos_cos,
         |    row_number() OVER (PARTITION BY a_id ORDER BY cos6, vec_id)
         |      AS rn
         |  FROM sc WHERE label = a_label),
@@ -1083,11 +1058,7 @@ object SimilarityOps {
         |FROM m ORDER BY pos""".stripMargin)),
     Key("embed_outlier", embedOutlier, Some(
       """WITH e AS (SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-        |ex AS (SELECT label, generate_subscripts(v, 1) - 1 AS pos, unnest(v) AS x FROM e),
-        |comp AS (
-        |  SELECT label, pos,
-        |    CAST(sum(CAST(x AS DECIMAL(18,9))) AS DOUBLE) / count(x) AS c
-        |  FROM ex GROUP BY label, pos),
+        |""".stripMargin + duckCentroidComponents + """,
         |cent AS (SELECT label, list(c ORDER BY pos) AS cv FROM comp GROUP BY label),
         |s AS (SELECT e.label, e.vec_id,
         |        round(list_cosine_similarity(e.v, cent.cv), 6) + 0.0 AS cos_sim
@@ -1123,11 +1094,7 @@ object SimilarityOps {
     // the ACTUAL vector length instead of hardcoding the fixture dimension
     Key("embed_centroid", embedCentroid, Some(
       """WITH e AS (SELECT label, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-        |ex AS (SELECT label, generate_subscripts(v, 1) - 1 AS pos, unnest(v) AS x FROM e),
-        |comp AS (
-        |  SELECT label, pos,
-        |    CAST(sum(CAST(x AS DECIMAL(18,9))) AS DOUBLE) / count(x) AS c
-        |  FROM ex GROUP BY label, pos)
+        |""".stripMargin + duckCentroidComponents + """
         |SELECT label,
         |  array_to_string(list(CAST(CAST(round(c, 6) AS DECIMAL(18,6)) AS VARCHAR) ORDER BY pos), ',') AS centroid
         |FROM comp GROUP BY label ORDER BY label""".stripMargin)),

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.Key
 import graft.functions.Exact._
 import graft.sources.Tables
-import graft.operators.OpsHelpers.r6
+import graft.operators.OpsHelpers.{flagStatusTotals, r6}
 
 /** Second ring of declared relational completions (SURVEY.md §2.4–§2.7):
   * the ANSI-SQL surface a user coming from the reference's pandas workflow
@@ -25,18 +25,10 @@ object SqlSurfaceOps {
   // nor cube produces. Spark plans one Expand + one hash aggregate: a
   // single pass over lineitem at any scale. ──
   def groupingSetsAgg(spark: SparkSession, dir: String): DataFrame =
-    Tables.lineitem(spark, dir)
+    flagStatusTotals(Tables.lineitem(spark, dir)
       .groupingSets(
         Seq(Seq(col("l_returnflag")), Seq(col("l_linestatus"))),
-        col("l_returnflag"), col("l_linestatus"))
-      .agg(count(lit(1)).as("cnt"),
-        sumMoney(col("l_quantity")).as("sum_qty"),
-        grouping(col("l_returnflag")).cast("int").as("g_rf"),
-        grouping(col("l_linestatus")).cast("int").as("g_ls"))
-      .select(coalesce(col("l_returnflag"), lit("<all>")).as("returnflag"),
-        coalesce(col("l_linestatus"), lit("<all>")).as("linestatus"),
-        col("cnt"), col("sum_qty"), col("g_rf"), col("g_ls"))
-      .orderBy("g_rf", "g_ls", "returnflag", "linestatus")
+        col("l_returnflag"), col("l_linestatus")))
 
   // ── INTERSECT (set semantics, distinct): users who both clicked and
   // purchased. Spark plans a left-semi join over distinct inputs — the
@@ -536,6 +528,15 @@ object SqlSurfaceOps {
       .select(col("lang"), col("available"), col("weight"),
         expr("weight * nfeas div 10").as("target_n"))
       .withColumn("accept_ppm", expr("target_n * 1000000 div available"))
+    sampleToTargets(docs, tgt, "weight")
+  }
+
+  /** Draws each language's sample from `docs` at its `tgt` accept rate
+    * (accept_ppm, by the portable hash-uniform ppm threshold) and reports
+    * per language the sizing row — available, the `weight` column,
+    * target_n, accept_ppm — with the kept count and characters. */
+  private def sampleToTargets(docs: DataFrame, tgt: DataFrame,
+      weight: String): DataFrame = {
     val kept = docs
       .join(broadcast(tgt.select(col("lang"), col("accept_ppm"))), "lang")
       .filter(expr("pmod(pmod(doc_id, 2147483648) * 2654435761, 2147483648)" +
@@ -543,7 +544,7 @@ object SqlSurfaceOps {
       .groupBy(col("lang"))
       .agg(count(lit(1)).as("kept_n"), sum(col("n_chars")).as("kept_chars"))
     tgt.join(broadcast(kept), Seq("lang"), "left")
-      .select(col("lang"), col("available"), col("weight"), col("target_n"),
+      .select(col("lang"), col("available"), col(weight), col("target_n"),
         col("accept_ppm"),
         coalesce(col("kept_n"), lit(0L)).as("kept_n"),
         coalesce(col("kept_chars"), lit(0L)).as("kept_chars"))
@@ -576,18 +577,7 @@ object SqlSurfaceOps {
       .select(col("lang"), col("available"), col("wppm"),
         least(expr("wppm * budget div wsum"), col("available")).as("target_n"))
       .withColumn("accept_ppm", expr("target_n * 1000000 div available"))
-    val kept = docs
-      .join(broadcast(tgt.select(col("lang"), col("accept_ppm"))), "lang")
-      .filter(expr("pmod(pmod(doc_id, 2147483648) * 2654435761, 2147483648)" +
-        " % 1000000") < col("accept_ppm"))
-      .groupBy(col("lang"))
-      .agg(count(lit(1)).as("kept_n"), sum(col("n_chars")).as("kept_chars"))
-    tgt.join(broadcast(kept), Seq("lang"), "left")
-      .select(col("lang"), col("available"), col("wppm"), col("target_n"),
-        col("accept_ppm"),
-        coalesce(col("kept_n"), lit(0L)).as("kept_n"),
-        coalesce(col("kept_chars"), lit(0L)).as("kept_chars"))
-      .orderBy("lang")
+    sampleToTargets(docs, tgt, "wppm")
   }
 
   // ── per-epoch training-data shuffle WITHOUT a global sort: each epoch
@@ -1255,15 +1245,7 @@ object SqlSurfaceOps {
         |SELECT c_custkey, p_partkey, neg_rank FROM r WHERE neg_rank <= 5
         |ORDER BY c_custkey, neg_rank""".stripMargin)),
     Key("window_rank_family_scaled", windowRankFamilyScaled, Some(rankFamilyOracle)),
-    Key("window_rank_family", windowRankFamily, Some(
-      """SELECT event_type, event_id, "value",
-        |  first("value") OVER (PARTITION BY event_type ORDER BY "value", event_id
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING) AS min_in_type,
-        |  last("value") OVER (PARTITION BY event_type ORDER BY "value", event_id
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING) AS max_in_type,
-        |  percent_rank() OVER (PARTITION BY event_type ORDER BY "value", event_id) AS pct_rank,
-        |  cume_dist() OVER (PARTITION BY event_type ORDER BY "value", event_id) AS cume
-        |FROM events ORDER BY event_type, event_id""".stripMargin)),
+    Key("window_rank_family", windowRankFamily, Some(rankFamilyOracle)),
     Key("array_funcs", arrayFuncs, Some(
       """WITH t AS (
         |  SELECT user_id, list_sort(list(DISTINCT event_type)) AS types_arr
@@ -1330,15 +1312,8 @@ object SqlSurfaceOps {
         |            ELSE CAST(floor(o_totalprice / 50000.0) AS BIGINT) + 1 END AS bucket,
         |  count(*) AS cnt
         |FROM orders GROUP BY bucket ORDER BY bucket""".stripMargin)),
-    Key("grouping_sets", groupingSetsAgg, Some(
-      """SELECT COALESCE(l_returnflag, '<all>') AS returnflag,
-        |  COALESCE(l_linestatus, '<all>') AS linestatus,
-        |  count(*) AS cnt,
-        |  CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
-        |  CAST(grouping(l_returnflag) AS INTEGER) AS g_rf,
-        |  CAST(grouping(l_linestatus) AS INTEGER) AS g_ls
-        |FROM lineitem GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus))
-        |ORDER BY g_rf, g_ls, returnflag, linestatus""".stripMargin)),
+    Key("grouping_sets", groupingSetsAgg, Some(OracleSql.lineitemGrouping(
+      "GROUPING SETS ((l_returnflag), (l_linestatus))"))),
     Key("set_except_all", setExceptAll, Some(
       """SELECT user_id, event_type, count(*) AS cnt FROM (
         |  SELECT user_id, event_type FROM events

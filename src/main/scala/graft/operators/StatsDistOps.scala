@@ -1,5 +1,5 @@
 package graft.operators
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Key
@@ -274,6 +274,34 @@ private[operators] trait StatsDistOps extends StatsOpsBase {
       .orderBy("day")
   }
 
+  /** Oracle CTEs mirroring [[rankedSpend]]: `spend(user_id, v)` and the
+    * start of `r(v, rn, m`, which each key closes. */
+  private val duckRankedSpend: String =
+    """WITH spend AS (SELECT user_id,
+      |    sum(CAST("value" AS DECIMAL(18,2))) AS v
+      |  FROM events GROUP BY 1),
+      |r AS (SELECT v, row_number() OVER (ORDER BY v, user_id) AS rn,
+      |        count(*) OVER () AS m""".stripMargin
+
+  /** Each user's exact DECIMAL spend v with rn, its rank in the (v,
+    * user_id) total order, and m, the user count: the explicit-rank
+    * device of the Lorenz, Palma and quintile keys. */
+  private def rankedSpend(spark: SparkSession, dir: String): DataFrame =
+    ev(spark, dir).groupBy(col("user_id"))
+      .agg(sum(col("value").cast("decimal(18,2)")).as("v"))
+      .withColumn("rn",
+        row_number().over(Window.orderBy(col("v"), col("user_id"))))
+      .withColumn("m", count(lit(1)).over(Window.partitionBy(lit(1))))
+
+  /** The band columns of the Lorenz and quintile tables: users, exact
+    * spend, and its share and cumulative share of the total. */
+  private def shareCols: Seq[Column] = Seq(col("n_users"),
+        col("spend").cast("double").as("spend"),
+        r6(col("spend").cast("double") / col("tot").cast("double"))
+          .as("share"),
+        r6(col("cum_spend").cast("double") / col("tot").cast("double"))
+          .as("cum_share"))
+
   // ── Lorenz curve of user spend: users ranked by (spend, id) into 10
   // explicit integer deciles — ((rn−1)·10) div m + 1, never ntile() —
   // each decile's user count and DECIMAL-exact spend, and the running
@@ -281,13 +309,8 @@ private[operators] trait StatsDistOps extends StatsOpsBase {
   // stats_gini waiver class: |users|, not |events|); everything until
   // the two share divisions is integer/decimal-exact. ──
   def distLorenz(spark: SparkSession, dir: String): DataFrame = {
-    val spend = ev(spark, dir).groupBy(col("user_id"))
-      .agg(sum(col("value").cast("decimal(18,2)")).as("v"))
-    val wo = Window.orderBy(col("v"), col("user_id"))
     val m = Window.partitionBy(lit(1))
-    val ranked = spend
-      .withColumn("rn", row_number().over(wo))
-      .withColumn("m", count(lit(1)).over(m))
+    val ranked = rankedSpend(spark, dir)
       .withColumn("tot", sum(col("v")).over(m))
       .withColumn("decile", expr("((rn - 1) * 10) div m + 1"))
     ranked.groupBy(col("decile"))
@@ -296,12 +319,7 @@ private[operators] trait StatsDistOps extends StatsOpsBase {
       .withColumn("cum_spend",
         sum(col("spend")).over(Window.orderBy(col("decile"))
           .rowsBetween(Window.unboundedPreceding, 0)))
-      .select(col("decile").cast("int").as("decile"), col("n_users"),
-        col("spend").cast("double").as("spend"),
-        r6(col("spend").cast("double") / col("tot").cast("double"))
-          .as("share"),
-        r6(col("cum_spend").cast("double") / col("tot").cast("double"))
-          .as("cum_share"))
+      .select(col("decile").cast("int").as("decile") +: shareCols: _*)
       .orderBy("decile")
   }
 
@@ -316,13 +334,7 @@ private[operators] trait StatsDistOps extends StatsOpsBase {
   // the explicit form — window_rank_family_scaled's bucketed rank
   // reconstruction is the drop-in when one panel outgrows a window. ──
   def distPalma(spark: SparkSession, dir: String): DataFrame = {
-    val spend = ev(spark, dir).groupBy(col("user_id"))
-      .agg(sum(col("value").cast("decimal(18,2)")).as("v"))
-    val wo = Window.orderBy(col("v"), col("user_id"))
-    val m = Window.partitionBy(lit(1))
-    spend
-      .withColumn("rn", row_number().over(wo))
-      .withColumn("m", count(lit(1)).over(m))
+    rankedSpend(spark, dir)
       .withColumn("decile", expr("((rn - 1) * 10) div m + 1"))
       .agg(count(lit(1)).as("n_users"), sum(col("v")).as("tot"),
         sum(when(col("decile") === 10, col("v"))).as("top10"),
@@ -342,13 +354,8 @@ private[operators] trait StatsDistOps extends StatsOpsBase {
   // at-risk-of-inequality format. Same explicit-rank device and exact
   // DECIMAL band sums; shares divide once at the boundary. ──
   def distQuintileShares(spark: SparkSession, dir: String): DataFrame = {
-    val spend = ev(spark, dir).groupBy(col("user_id"))
-      .agg(sum(col("value").cast("decimal(18,2)")).as("v"))
-    val wo = Window.orderBy(col("v"), col("user_id"))
     val m = Window.partitionBy(lit(1))
-    val ranked = spend
-      .withColumn("rn", row_number().over(wo))
-      .withColumn("m", count(lit(1)).over(m))
+    val ranked = rankedSpend(spark, dir)
       .withColumn("tot", sum(col("v")).over(m))
       .withColumn("quintile", expr("((rn - 1) * 5) div m + 1"))
     val byQ = ranked.groupBy(col("quintile"))
@@ -362,14 +369,9 @@ private[operators] trait StatsDistOps extends StatsOpsBase {
         .over(m))
       .withColumn("q5", sum(when(col("quintile") === 5, col("spend")))
         .over(m))
-      .select(col("quintile").cast("int").as("quintile"), col("n_users"),
-        col("spend").cast("double").as("spend"),
-        r6(col("spend").cast("double") / col("tot").cast("double"))
-          .as("share"),
-        r6(col("cum_spend").cast("double") / col("tot").cast("double"))
-          .as("cum_share"),
+      .select(col("quintile").cast("int").as("quintile") +: shareCols :+
         r6(col("q5").cast("double") / col("q1").cast("double"))
-          .as("s80_s20"))
+          .as("s80_s20"): _*)
       .orderBy("quintile")
   }
 
@@ -590,6 +592,15 @@ private[operators] trait StatsDistOps extends StatsOpsBase {
       .orderBy("event_type")
   }
 
+  /** [[userSpendPos]] with the user count n, the cents total s and the
+    * mean mu beside every row. */
+  private def spendWithMean(spark: SparkSession, dir: String): DataFrame = {
+    val spend = userSpendPos(spark, dir)
+    val tot = spend.agg(count(lit(1)).as("n"), sum(col("xc")).as("s"))
+      .withColumn("mu", expr("cast(s as double) / n"))
+    spend.crossJoin(broadcast(tot))
+  }
+
   // ── Theil T and L inequality indices of user spend — the
   // entropy-based decomposable cousins of dist_lorenz/stats_gini
   // (Theil is additive across subgroups, which Gini is not — the index
@@ -598,10 +609,7 @@ private[operators] trait StatsDistOps extends StatsOpsBase {
   // so the |users|-sized reduce is partitioning-invariant — with the
   // scalar mean broadcast (one scan + one model-sized agg). ──
   def distTheil(spark: SparkSession, dir: String): DataFrame = {
-    val spend = userSpendPos(spark, dir)
-    val tot = spend.agg(count(lit(1)).as("n"), sum(col("xc")).as("s"))
-      .withColumn("mu", expr("cast(s as double) / n"))
-    spend.crossJoin(broadcast(tot))
+    spendWithMean(spark, dir)
       .select(col("n"), col("mu"),
         expr("CAST(round(xc / mu * ln(xc / mu), 9)" +
           " AS DECIMAL(18,9))").as("tt"),
@@ -621,10 +629,7 @@ private[operators] trait StatsDistOps extends StatsOpsBase {
   // 9-dp snap). Same associative decimal-term discipline and broadcast
   // scalar mean as [[distTheil]]; one scan. ──
   def distAtkinson(spark: SparkSession, dir: String): DataFrame = {
-    val spend = userSpendPos(spark, dir)
-    val tot = spend.agg(count(lit(1)).as("n"), sum(col("xc")).as("s"))
-      .withColumn("mu", expr("cast(s as double) / n"))
-    spend.crossJoin(broadcast(tot))
+    spendWithMean(spark, dir)
       .select(col("n"), col("mu"),
         expr("CAST(round(sqrt(xc / mu), 9) AS DECIMAL(18,9))").as("th"),
         expr("CAST(round(ln(cast(xc as double)), 9)" +
@@ -1016,11 +1021,7 @@ private[operators] trait StatsDistOps extends StatsOpsBase {
     // HUGEINT power sums = Spark's DECIMAL(38,0) (both exact 128-bit);
     // the double combination below is op-for-op the Spark expression,
     Key("dist_lorenz", distLorenz, Some(
-      """WITH spend AS (SELECT user_id,
-        |    sum(CAST("value" AS DECIMAL(18,2))) AS v
-        |  FROM events GROUP BY 1),
-        |r AS (SELECT v, row_number() OVER (ORDER BY v, user_id) AS rn,
-        |        count(*) OVER () AS m, sum(v) OVER () AS tot
+      duckRankedSpend + """, sum(v) OVER () AS tot
         |      FROM spend),
         |d AS (SELECT ((rn - 1) * 10) // m + 1 AS decile, v, tot FROM r),
         |g AS (SELECT decile, count(*) AS n_users, sum(v) AS spend,
@@ -1035,11 +1036,7 @@ private[operators] trait StatsDistOps extends StatsOpsBase {
         |        AS DOUBLE) / CAST(tot AS DOUBLE), 6) + 0.0 AS cum_share
         |FROM g ORDER BY decile""".stripMargin)),
     Key("dist_palma", distPalma, Some(
-      """WITH spend AS (SELECT user_id,
-        |    sum(CAST("value" AS DECIMAL(18,2))) AS v
-        |  FROM events GROUP BY 1),
-        |r AS (SELECT v, row_number() OVER (ORDER BY v, user_id) AS rn,
-        |        count(*) OVER () AS m
+      duckRankedSpend + """
         |      FROM spend),
         |d AS (SELECT ((rn - 1) * 10) // m + 1 AS decile, v FROM r),
         |a AS (SELECT CAST(count(*) AS BIGINT) AS n_users, sum(v) AS tot,
@@ -1055,11 +1052,7 @@ private[operators] trait StatsDistOps extends StatsOpsBase {
         |    AS palma_ratio
         |FROM a""".stripMargin)),
     Key("dist_quintile_shares", distQuintileShares, Some(
-      """WITH spend AS (SELECT user_id,
-        |    sum(CAST("value" AS DECIMAL(18,2))) AS v
-        |  FROM events GROUP BY 1),
-        |r AS (SELECT v, row_number() OVER (ORDER BY v, user_id) AS rn,
-        |        count(*) OVER () AS m, sum(v) OVER () AS tot
+      duckRankedSpend + """, sum(v) OVER () AS tot
         |      FROM spend),
         |d AS (SELECT ((rn - 1) * 5) // m + 1 AS quintile, v, tot FROM r),
         |g AS (SELECT quintile, CAST(count(*) AS BIGINT) AS n_users,

@@ -107,11 +107,7 @@ private[operators] trait StatsForecastOps extends StatsOpsBase {
   }
 
   def forecastHolt(spark: SparkSession, dir: String): DataFrame =
-    ev(spark, dir)
-      .groupBy(col("event_type"), col("day"))
-      .agg(sum(col("value").cast("decimal(18,2)")).cast("double").as("y"))
-      .groupBy(col("event_type"))
-      .agg(sort_array(collect_list(struct(col("day"), col("y")))).as("s"))
+    dailyYArrays(spark, dir)
       // the init needs two observations; a 1-point series would index
       // past the array under ANSI mode AND vanish from the oracle's
       // recursion (base t=2 never equals n=1) — drop it on BOTH sides
@@ -229,12 +225,8 @@ private[operators] trait StatsForecastOps extends StatsOpsBase {
   def forecastMase(spark: SparkSession, dir: String): DataFrame = {
     val daily = ev(spark, dir).groupBy(col("event_type"), col("day"))
       .agg(sum(col("value").cast("decimal(18,2)")).as("v"))
-    val d1 = daily.select(col("event_type"),
-      date_add(col("day"), 1).as("day"), col("v").as("v1"))
-    val d7 = daily.select(col("event_type"),
-      date_add(col("day"), 7).as("day"), col("v").as("v7"))
-    daily.join(d1, Seq("event_type", "day"))
-      .join(d7, Seq("event_type", "day"))
+    daily.join(calendarLag(daily, 1), Seq("event_type", "day"))
+      .join(calendarLag(daily, 7), Seq("event_type", "day"))
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("n_eval"),
         sum(abs(col("v") - col("v1"))).as("sn"),
@@ -322,24 +314,7 @@ private[operators] trait StatsForecastOps extends StatsOpsBase {
   def forecastCroston(spark: SparkSession, dir: String): DataFrame = {
     val dem = partDayDemand(spark, dir)
       .select(col("part"), col("dayno"), col("dd").cast("double").as("d"))
-    val a = CrostonA
-    val folded = dem.groupBy(col("part"))
-      .agg(sort_array(collect_list(struct(col("dayno"), col("d"))))
-        .as("s"))
-      .filter(size(col("s")) >= 3)
-      .withColumn("st", expr(
-        s"""aggregate(
-           |  slice(s, 3, size(s) - 2),
-           |  named_struct(
-           |    'z', ${a}D * s[1].d + (1.0D - ${a}D) * s[0].d,
-           |    'p', CAST(s[1].dayno - s[0].dayno AS DOUBLE),
-           |    'pt', s[1].dayno),
-           |  (st, pp) -> named_struct(
-           |    'z', ${a}D * pp.d + (1.0D - ${a}D) * st.z,
-           |    'p', ${a}D * CAST(pp.dayno - st.pt AS DOUBLE)
-           |           + (1.0D - ${a}D) * st.p,
-           |    'pt', pp.dayno))""".stripMargin))
-    folded
+    crostonFold(dem)
       .select(col("part"), size(col("s")).cast("long").as("n_points"),
         r6(col("st.z")).as("z_size"), r6(col("st.p")).as("p_interval"),
         r6(expr("st.z / st.p")).as("rate_per_day"))
@@ -403,23 +378,7 @@ private[operators] trait StatsForecastOps extends StatsOpsBase {
     // size/interval moments (and the sibling croston key)
     val demD = partDayDemand(spark, dir)
     val dem = demD.withColumn("d", col("dd").cast("double"))
-    val a = CrostonA
-    val folded = dem.groupBy(col("part"))
-      .agg(sort_array(collect_list(struct(col("dayno"), col("d"))))
-        .as("s"))
-      .filter(size(col("s")) >= 3)
-      .withColumn("st", expr(
-        s"""aggregate(
-           |  slice(s, 3, size(s) - 2),
-           |  named_struct(
-           |    'z', ${a}D * s[1].d + (1.0D - ${a}D) * s[0].d,
-           |    'p', CAST(s[1].dayno - s[0].dayno AS DOUBLE),
-           |    'pt', s[1].dayno),
-           |  (st, pp) -> named_struct(
-           |    'z', ${a}D * pp.d + (1.0D - ${a}D) * st.z,
-           |    'p', ${a}D * CAST(pp.dayno - st.pt AS DOUBLE)
-           |           + (1.0D - ${a}D) * st.p,
-           |    'pt', pp.dayno))""".stripMargin))
+    val folded = crostonFold(dem)
     val mom = demD.groupBy(col("part"))
       .agg(count(lit(1)).as("n"), sum(col("dd")).as("s1"),
         // re-narrow before squaring: a widened decimal sum squared would
@@ -496,11 +455,7 @@ private[operators] trait StatsForecastOps extends StatsOpsBase {
   // group-sized shape as forecast_holt; F(7) sums the geometric
   // φ+φ²+…+φ⁷ in closed form, shared verbatim with the oracle. ──
   def forecastDamped(spark: SparkSession, dir: String): DataFrame =
-    ev(spark, dir)
-      .groupBy(col("event_type"), col("day"))
-      .agg(sum(col("value").cast("decimal(18,2)")).cast("double").as("y"))
-      .groupBy(col("event_type"))
-      .agg(sort_array(collect_list(struct(col("day"), col("y")))).as("s"))
+    dailyYArrays(spark, dir)
       .filter(size(col("s")) >= 2)
       .withColumn("st", expr(
         s"""aggregate(
@@ -565,9 +520,100 @@ private[operators] trait StatsForecastOps extends StatsOpsBase {
       .orderBy("event_type")
   }
 
+  /** Each type's daily revenue y as one (day, y) array `s` in day
+    * order: the series the Holt recursions fold. */
+  private def dailyYArrays(spark: SparkSession, dir: String): DataFrame =
+    ev(spark, dir)
+      .groupBy(col("event_type"), col("day"))
+      .agg(sum(col("value").cast("decimal(18,2)")).cast("double").as("y"))
+      .groupBy(col("event_type"))
+      .agg(sort_array(collect_list(struct(col("day"), col("y")))).as("s"))
+
+  /** The Croston recursion over each part's (dayno, d) demand days, as
+    * `st` (z size, p interval, pt last day) on the parts with at least
+    * three: the Spark twin of [[duckCrostonRec]]. */
+  private def crostonFold(dem: DataFrame): DataFrame = {
+    val a = CrostonA
+    dem.groupBy(col("part"))
+      .agg(sort_array(collect_list(struct(col("dayno"), col("d"))))
+        .as("s"))
+      .filter(size(col("s")) >= 3)
+      .withColumn("st", expr(
+        s"""aggregate(
+           |  slice(s, 3, size(s) - 2),
+           |  named_struct(
+           |    'z', ${a}D * s[1].d + (1.0D - ${a}D) * s[0].d,
+           |    'p', CAST(s[1].dayno - s[0].dayno AS DOUBLE),
+           |    'pt', s[1].dayno),
+           |  (st, pp) -> named_struct(
+           |    'z', ${a}D * pp.d + (1.0D - ${a}D) * st.z,
+           |    'p', ${a}D * CAST(pp.dayno - st.pt AS DOUBLE)
+           |           + (1.0D - ${a}D) * st.p,
+           |    'pt', pp.dayno))""".stripMargin))
+  }
+
+  /** [[duckDailyY]] opened as `WITH RECURSIVE`, then each type's day rank
+    * t and day count n in `s(event_type, y, t, n)`. Comma-terminated. */
+  private val duckHoltSeries: String =
+    "WITH RECURSIVE " + duckDailyY.drop(5) +
+    """s AS (
+      |  SELECT event_type, y,
+      |    row_number() OVER (PARTITION BY event_type ORDER BY day) AS t,
+      |    count(*) OVER (PARTITION BY event_type) AS n
+      |  FROM d),
+      |""".stripMargin
+
+  /** Oracle CTEs of the Croston recursion over `s(part, dayno, d, t, n)`:
+    * the parts with at least three demand days `el` and `rec(part, n, t,
+    * z, p, pt)`, the state after day t — the twin of [[crostonFold]].
+    * Comma-terminated. */
+  private val duckCrostonRec: String =
+    s"""el AS (SELECT * FROM s WHERE n >= 3),
+       |rec AS (
+       |  SELECT part, n, 2 AS t,
+       |    CAST('$CrostonA' AS DOUBLE) * max(CASE WHEN t = 2 THEN d END)
+       |      + (1.0 - CAST('$CrostonA' AS DOUBLE))
+       |        * max(CASE WHEN t = 1 THEN d END) AS z,
+       |    CAST(max(CASE WHEN t = 2 THEN dayno END)
+       |      - max(CASE WHEN t = 1 THEN dayno END) AS DOUBLE) AS p,
+       |    max(CASE WHEN t = 2 THEN dayno END) AS pt
+       |  FROM el GROUP BY part, n
+       |  UNION ALL
+       |  SELECT r.part, r.n, r.t + 1,
+       |    CAST('$CrostonA' AS DOUBLE) * pp.d
+       |      + (1.0 - CAST('$CrostonA' AS DOUBLE)) * r.z,
+       |    CAST('$CrostonA' AS DOUBLE) * CAST(pp.dayno - r.pt AS DOUBLE)
+       |      + (1.0 - CAST('$CrostonA' AS DOUBLE)) * r.p,
+       |    pp.dayno
+       |  FROM rec r JOIN el pp
+       |    ON pp.part = r.part AND pp.t = r.t + 1
+       |  WHERE r.t < r.n),""".stripMargin
+
+  /** The daily decomposition CTEs mirroring [[decomposedDaily]]: daily
+    * DECIMAL revenue `daily(day, vd)`, the centered 7-day trend `t` on
+    * full windows, the detrended `f(.., dow, det)` and the day-of-week
+    * seasonal `s(dow, seasonal)`. Ends at `FROM f GROUP BY 1)`. */
+  private val duckSeasonalSplit: String =
+    """WITH daily AS (
+      |  SELECT CAST(CAST(ts AS TIMESTAMP) AS DATE) AS day,
+      |    sum(CAST("value" AS DECIMAL(18,2))) AS vd
+      |  FROM events GROUP BY 1),
+      |t AS (SELECT *, count(*) OVER w7 AS cnt7,
+      |        CAST(round(CAST(sum(vd) OVER w7 AS DOUBLE) / 7, 6) + 0.0
+      |             AS DECIMAL(24,6)) AS trend6
+      |      FROM daily
+      |      WINDOW w7 AS (ORDER BY day
+      |        ROWS BETWEEN 3 PRECEDING AND 3 FOLLOWING)),
+      |f AS (SELECT *, dayofweek(day) AS dow, vd - trend6 AS det
+      |      FROM t WHERE cnt7 = 7),
+      |s AS (SELECT dow,
+      |        round(CAST(sum(det) AS DOUBLE) / count(*), 6) + 0.0
+      |          AS seasonal
+      |      FROM f GROUP BY 1)""".stripMargin
+
   protected val forecastKeys: Seq[Key] = Seq(
     Key("forecast_ar2", forecastAr2, Some(duckDailyV +
-      """lg AS (
+      s"""lg AS (
         |  SELECT a.event_type, l.lag, a.v, b.v AS pv
         |  FROM dv a
         |  CROSS JOIN (SELECT unnest(range(1, 3)) AS lag) l
@@ -575,19 +621,10 @@ private[operators] trait StatsForecastOps extends StatsOpsBase {
         |    AND b.day = a.day - CAST(l.lag AS INTEGER)),
         |m AS (
         |  SELECT event_type, lag, count(*) AS n,
-        |    CAST(sum(CAST(v AS DECIMAL(18,2))) AS DOUBLE) AS sx,
-        |    CAST(sum(CAST(pv AS DECIMAL(18,2))) AS DOUBLE) AS sy,
-        |    CAST(sum(CAST(v AS DECIMAL(18,2)) * CAST(pv AS DECIMAL(18,2)))
-        |      AS DOUBLE) AS sxy,
-        |    CAST(sum(CAST(v AS DECIMAL(18,2)) * CAST(v AS DECIMAL(18,2)))
-        |      AS DOUBLE) AS sxx,
-        |    CAST(sum(CAST(pv AS DECIMAL(18,2)) * CAST(pv AS DECIMAL(18,2)))
-        |      AS DOUBLE) AS syy
+        |$duckLagSums
         |  FROM lg GROUP BY 1, 2),
         |rk AS (SELECT event_type, lag,
-        |    round((CAST(n AS DOUBLE) * sxy - sx * sy) /
-        |      sqrt((CAST(n AS DOUBLE) * sxx - sx * sx) *
-        |           (CAST(n AS DOUBLE) * syy - sy * sy)), 6) + 0.0 AS r
+        |$duckLagR
         |  FROM m),
         |rr AS (SELECT event_type,
         |    max(CASE WHEN lag = 1 THEN r END) AS r1,
@@ -659,13 +696,8 @@ private[operators] trait StatsForecastOps extends StatsOpsBase {
         |    AS forecast_7
         |FROM rec WHERE t = n ORDER BY event_type""".stripMargin)),
     Key("forecast_damped", forecastDamped, Some(
-      "WITH RECURSIVE " + duckDailyY.drop(5) +
-      s"""s AS (
-        |  SELECT event_type, y,
-        |    row_number() OVER (PARTITION BY event_type ORDER BY day) AS t,
-        |    count(*) OVER (PARTITION BY event_type) AS n
-        |  FROM d),
-        |rec AS (
+      duckHoltSeries +
+      s"""rec AS (
         |  SELECT event_type, n, 2 AS t,
         |    max(CASE WHEN t = 1 THEN y END) AS l,
         |    max(CASE WHEN t = 2 THEN y END) -
@@ -696,26 +728,7 @@ private[operators] trait StatsForecastOps extends StatsOpsBase {
          |    row_number() OVER (PARTITION BY part ORDER BY dayno) AS t,
          |    count(*) OVER (PARTITION BY part) AS n
          |  FROM dem),
-         |el AS (SELECT * FROM s WHERE n >= 3),
-         |rec AS (
-         |  SELECT part, n, 2 AS t,
-         |    CAST('$CrostonA' AS DOUBLE) * max(CASE WHEN t = 2 THEN d END)
-         |      + (1.0 - CAST('$CrostonA' AS DOUBLE))
-         |        * max(CASE WHEN t = 1 THEN d END) AS z,
-         |    CAST(max(CASE WHEN t = 2 THEN dayno END)
-         |      - max(CASE WHEN t = 1 THEN dayno END) AS DOUBLE) AS p,
-         |    max(CASE WHEN t = 2 THEN dayno END) AS pt
-         |  FROM el GROUP BY part, n
-         |  UNION ALL
-         |  SELECT r.part, r.n, r.t + 1,
-         |    CAST('$CrostonA' AS DOUBLE) * pp.d
-         |      + (1.0 - CAST('$CrostonA' AS DOUBLE)) * r.z,
-         |    CAST('$CrostonA' AS DOUBLE) * CAST(pp.dayno - r.pt AS DOUBLE)
-         |      + (1.0 - CAST('$CrostonA' AS DOUBLE)) * r.p,
-         |    pp.dayno
-         |  FROM rec r JOIN el pp
-         |    ON pp.part = r.part AND pp.t = r.t + 1
-         |  WHERE r.t < r.n),
+         |$duckCrostonRec
          |fin AS (SELECT part, CAST(n AS BIGINT) AS n_points,
          |    round(z, 6) + 0.0 AS z_size, round(p, 6) + 0.0 AS p_interval,
          |    round(z / p, 6) + 0.0 AS rate_per_day
@@ -734,26 +747,7 @@ private[operators] trait StatsForecastOps extends StatsOpsBase {
          |    row_number() OVER (PARTITION BY part ORDER BY dayno) AS t,
          |    count(*) OVER (PARTITION BY part) AS n
          |  FROM dem),
-         |el AS (SELECT * FROM s WHERE n >= 3),
-         |rec AS (
-         |  SELECT part, n, 2 AS t,
-         |    CAST('$CrostonA' AS DOUBLE) * max(CASE WHEN t = 2 THEN d END)
-         |      + (1.0 - CAST('$CrostonA' AS DOUBLE))
-         |        * max(CASE WHEN t = 1 THEN d END) AS z,
-         |    CAST(max(CASE WHEN t = 2 THEN dayno END)
-         |      - max(CASE WHEN t = 1 THEN dayno END) AS DOUBLE) AS p,
-         |    max(CASE WHEN t = 2 THEN dayno END) AS pt
-         |  FROM el GROUP BY part, n
-         |  UNION ALL
-         |  SELECT r.part, r.n, r.t + 1,
-         |    CAST('$CrostonA' AS DOUBLE) * pp.d
-         |      + (1.0 - CAST('$CrostonA' AS DOUBLE)) * r.z,
-         |    CAST('$CrostonA' AS DOUBLE) * CAST(pp.dayno - r.pt AS DOUBLE)
-         |      + (1.0 - CAST('$CrostonA' AS DOUBLE)) * r.p,
-         |    pp.dayno
-         |  FROM rec r JOIN el pp
-         |    ON pp.part = r.part AND pp.t = r.t + 1
-         |  WHERE r.t < r.n),
+         |$duckCrostonRec
          |mom AS (SELECT part, CAST(count(*) AS BIGINT) AS n,
          |    sum(dd) AS s1,
          |    sum(CAST(dd AS DECIMAL(18,2)) * CAST(dd AS DECIMAL(18,2)))
@@ -839,13 +833,8 @@ private[operators] trait StatsForecastOps extends StatsOpsBase {
         |SELECT alpha, n_days, level, rmse, rn = 1 AS is_best
         |FROM rk ORDER BY alpha""".stripMargin)),
     Key("forecast_holt", forecastHolt, Some(
-      "WITH RECURSIVE " + duckDailyY.drop(5) +
-      """s AS (
-        |  SELECT event_type, y,
-        |    row_number() OVER (PARTITION BY event_type ORDER BY day) AS t,
-        |    count(*) OVER (PARTITION BY event_type) AS n
-        |  FROM d),
-        |rec AS (
+      duckHoltSeries +
+      """rec AS (
         |  -- base = the state AFTER the first two observations (they are
         |  -- consumed by the init), so the recursion's first update is y3
         |  SELECT event_type, n, 2 AS t,
@@ -963,22 +952,7 @@ private[operators] trait StatsForecastOps extends StatsOpsBase {
         |        CAST(sum(abs(v - v1)) AS DOUBLE), 6) + 0.0 AS mase
         |FROM j GROUP BY 1 ORDER BY 1""".stripMargin)),
     Key("anomaly_seasonal", anomalySeasonal, Some(
-      """WITH daily AS (
-        |  SELECT CAST(CAST(ts AS TIMESTAMP) AS DATE) AS day,
-        |    sum(CAST("value" AS DECIMAL(18,2))) AS vd
-        |  FROM events GROUP BY 1),
-        |t AS (SELECT *, count(*) OVER w7 AS cnt7,
-        |        CAST(round(CAST(sum(vd) OVER w7 AS DOUBLE) / 7, 6) + 0.0
-        |             AS DECIMAL(24,6)) AS trend6
-        |      FROM daily
-        |      WINDOW w7 AS (ORDER BY day
-        |        ROWS BETWEEN 3 PRECEDING AND 3 FOLLOWING)),
-        |f AS (SELECT *, dayofweek(day) AS dow, vd - trend6 AS det
-        |      FROM t WHERE cnt7 = 7),
-        |s AS (SELECT dow,
-        |        round(CAST(sum(det) AS DOUBLE) / count(*), 6) + 0.0
-        |          AS seasonal
-        |      FROM f GROUP BY 1),
+      duckSeasonalSplit + """,
         |r0 AS (
         |  SELECT day, CAST(vd AS DOUBLE) AS v,
         |    CAST(trend6 AS DOUBLE) AS trend, seasonal,
@@ -1063,22 +1037,7 @@ private[operators] trait StatsForecastOps extends StatsOpsBase {
         |    AS seasonal_strength
         |FROM m ORDER BY event_type""".stripMargin)),
     Key("seasonal_decompose", seasonalDecompose, Some(
-      """WITH daily AS (
-        |  SELECT CAST(CAST(ts AS TIMESTAMP) AS DATE) AS day,
-        |    sum(CAST("value" AS DECIMAL(18,2))) AS vd
-        |  FROM events GROUP BY 1),
-        |t AS (SELECT *, count(*) OVER w7 AS cnt7,
-        |        CAST(round(CAST(sum(vd) OVER w7 AS DOUBLE) / 7, 6) + 0.0
-        |             AS DECIMAL(24,6)) AS trend6
-        |      FROM daily
-        |      WINDOW w7 AS (ORDER BY day
-        |        ROWS BETWEEN 3 PRECEDING AND 3 FOLLOWING)),
-        |f AS (SELECT *, dayofweek(day) AS dow, vd - trend6 AS det
-        |      FROM t WHERE cnt7 = 7),
-        |s AS (SELECT dow,
-        |        round(CAST(sum(det) AS DOUBLE) / count(*), 6) + 0.0
-        |          AS seasonal
-        |      FROM f GROUP BY 1)
+      duckSeasonalSplit + """
         |SELECT day, CAST(vd AS DOUBLE) AS v, CAST(trend6 AS DOUBLE) AS trend,
         |  seasonal, round(CAST(det AS DOUBLE) - seasonal, 6) + 0.0 AS resid
         |FROM f JOIN s USING (dow) ORDER BY day""".stripMargin)),

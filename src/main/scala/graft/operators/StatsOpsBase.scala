@@ -2,7 +2,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.operators.OpsHelpers.{ev, r6}
+import graft.operators.OpsHelpers.{ev, pearsonSums, r6}
 
 /** Shared devices of the [[StatsOps]] family traits: median/grid/survival
   * frames, the Φ polynomial, and the DuckDB CTE strings their oracles
@@ -124,12 +124,17 @@ private[operators] trait StatsOpsBase {
       .agg(sum(col("value").cast("decimal(18,2)")).cast("double").as("v"))
 
   /** The stats_friedman block grid (zero-filled day×type cells with
-    * doubled within-day midranks), shared by [[statsQuade]] and
-    * [[statsNemenyi]] so the three blocked-rank keys rank identically. */
-  protected def friedmanGrid(spark: SparkSession, dir: String): DataFrame = {
+    * doubled within-day midranks), shared by [[statsQuade]],
+    * [[statsNemenyi]], [[statsKendallW]] and [[statsPageTrend]] so the
+    * blocked-rank keys rank identically. `typeIndex` adds j, each type's
+    * 1-based position in name order. */
+  protected def friedmanGrid(spark: SparkSession, dir: String,
+      typeIndex: Boolean = false): DataFrame = {
     val rev = dailyTyped(spark, dir)
     val days = rev.select(col("day")).distinct()
-    val types = rev.select(col("event_type")).distinct()
+    val names = rev.select(col("event_type")).distinct()
+    val types = if (!typeIndex) names else names.withColumn("j",
+      row_number().over(Window.partitionBy(lit(1)).orderBy(col("event_type"))))
     val grid = days.crossJoin(broadcast(types))
       .join(rev, Seq("day", "event_type"), "left")
       .withColumn("revc", coalesce(col("revc"), lit(0L)))
@@ -165,6 +170,27 @@ private[operators] trait StatsOpsBase {
       .select(col("user_id"),
         when(col("tp").isNotNull, 1L).otherwise(0L).as("observed"),
         expr("(coalesce(tp, mxus) - t0) div 3600000000").as("t"))
+  }
+
+  /** Kaplan–Meier steps of [[survSubjects]] rows `s` per `keys` group:
+    * the events d and censorings c at each t, the at-risk count n_risk,
+    * and cuml, the running DECIMAL sum of ln(1 − d/n_risk) snapped to
+    * 9 dp (its term is null where d is 0 or d = n_risk). */
+  protected def kmSteps(s: DataFrame, keys: String*): DataFrame = {
+    val w = Window.partitionBy(keys.map(col): _*).orderBy(col("t"))
+    s.groupBy(keys.map(col) :+ col("t"): _*)
+      .agg(sum(col("observed")).as("d"),
+        sum(lit(1L) - col("observed")).as("c"))
+      .withColumn("n_risk",
+        sum(col("d") + col("c")).over(
+          w.rowsBetween(Window.currentRow, Window.unboundedFollowing)))
+      .withColumn("term", expr(
+        """CASE WHEN d > 0 AND d < n_risk
+          |THEN CAST(round(ln(1.0 - cast(d as double) / n_risk), 9)
+          |          AS DECIMAL(18,9)) END""".stripMargin))
+      .withColumn("cuml",
+        sum(col("term")).over(w.rowsBetween(Window.unboundedPreceding,
+          Window.currentRow)))
   }
 
   // One shared set of smoothing constants, stringified from the SAME
@@ -430,6 +456,24 @@ private[operators] trait StatsOpsBase {
           .getField("vc").as("c"),
         count(lit(1)).as("vol"))
 
+  /** [[ohlcBars]] with each type's day rank rn, the previous close pc and
+    * the integer true range tr = max(h − l, |h − pc|, |l − pc|). */
+  protected def trueRangeBars(spark: SparkSession, dir: String): DataFrame = {
+    val wOrd = Window.partitionBy(col("event_type")).orderBy(col("day"))
+    ohlcBars(spark, dir)
+      .withColumn("rn", row_number().over(wOrd))
+      .withColumn("pc", lag(col("c"), 1).over(wOrd))
+      .withColumn("tr", greatest(col("h") - col("l"),
+        abs(col("h") - col("pc")), abs(col("l") - col("pc"))))
+  }
+
+  /** `daily` (event_type, day, v) moved `k` calendar days later, its v
+    * as v<k>: joined on (event_type, day) it pairs each day with the day
+    * k earlier, and a gap day drops out on both engines alike. */
+  protected def calendarLag(daily: DataFrame, k: Int): DataFrame =
+    daily.select(col("event_type"), date_add(col("day"), k).as("day"),
+      col("v").as(s"v$k"))
+
   /** Per-type (n, s1, s2) of `value`: count, Σv and Σv² as DECIMAL-exact
     * sums cast once to double. */
   protected def valueMoments(spark: SparkSession, dir: String): DataFrame =
@@ -470,26 +514,28 @@ private[operators] trait StatsOpsBase {
     val y = col("pv").cast("decimal(18,2)")
     val nD = col("n").cast("double")
     lagged.groupBy(keys.map(col) :+ col("lag").cast("long").as("lag"): _*)
-      .agg(count(lit(1)).as("n"),
-        sum(x).cast("double").as("sx"), sum(y).cast("double").as("sy"),
-        sum(x * y).cast("double").as("sxy"),
-        sum(x * x).cast("double").as("sxx"),
-        sum(y * y).cast("double").as("syy"))
+      .agg(count(lit(1)).as("n"), pearsonSums(x, y): _*)
       .select(keys.map(col) ++ Seq(col("lag"), col("n"),
         r6((nD * col("sxy") - col("sx") * col("sy")) /
           sqrt((nD * col("sxx") - col("sx") * col("sx")) *
             (nD * col("syy") - col("sy") * col("sy")))).as("r")): _*)
   }
 
-  /** Oracle CTEs `e` and `bars(event_type, day, h, l, c)` mirroring
-    * [[ohlcBars]]; comma-terminated. */
-  protected val duckBars: String =
+  /** Oracle CTE `e(event_type, day, us, event_id, vc)`: each event with
+    * its day and value in cents, the input of [[ohlcBars]]' twins;
+    * comma-terminated. */
+  protected val duckBarEvents: String =
     """WITH e AS (
       |  SELECT event_type, CAST(CAST(ts AS TIMESTAMP) AS DATE) AS day,
       |    epoch_us(CAST(ts AS TIMESTAMP)) AS us, event_id,
       |    CAST(CAST("value" AS DECIMAL(18,2)) * 100 AS BIGINT) AS vc
       |  FROM events),
-      |bars AS (SELECT event_type, day,
+      |""".stripMargin
+
+  /** Oracle CTEs `e` and `bars(event_type, day, h, l, c)` mirroring
+    * [[ohlcBars]]; comma-terminated. */
+  protected val duckBars: String = duckBarEvents +
+    """bars AS (SELECT event_type, day,
       |    CAST(max(vc) AS BIGINT) AS h, CAST(min(vc) AS BIGINT) AS l,
       |    max({'us': us, 'event_id': event_id, 'vc': vc}).vc AS c
       |  FROM e GROUP BY 1, 2),
@@ -538,6 +584,59 @@ private[operators] trait StatsOpsBase {
       |  FROM daily),
       |""".stripMargin
 
+  /** Oracle CTE `daily(day, v)`: each day's total revenue as a double,
+    * its DECIMAL sum cast once. Comma-terminated. */
+  protected val duckDayTotals: String =
+    """WITH daily AS (
+      |  SELECT CAST(CAST(ts AS TIMESTAMP) AS DATE) AS day,
+      |    CAST(sum(CAST("value" AS DECIMAL(18,2))) AS DOUBLE) AS v
+      |  FROM events GROUP BY 1),""".stripMargin
+
+  /** The lag-moment select items over (v, pv): DECIMAL(18,2) sums of v,
+    * pv, v·pv, v² and pv², each cast once to double, as sx, sy, sxy, sxx
+    * and syy on eight indented lines. */
+  protected val duckLagSums: String =
+    """    CAST(sum(CAST(v AS DECIMAL(18,2))) AS DOUBLE) AS sx,
+      |    CAST(sum(CAST(pv AS DECIMAL(18,2))) AS DOUBLE) AS sy,
+      |    CAST(sum(CAST(v AS DECIMAL(18,2)) * CAST(pv AS DECIMAL(18,2)))
+      |      AS DOUBLE) AS sxy,
+      |    CAST(sum(CAST(v AS DECIMAL(18,2)) * CAST(v AS DECIMAL(18,2)))
+      |      AS DOUBLE) AS sxx,
+      |    CAST(sum(CAST(pv AS DECIMAL(18,2)) * CAST(pv AS DECIMAL(18,2)))
+      |      AS DOUBLE) AS syy""".stripMargin
+
+  /** The 6-dp Pearson r over [[duckLagSums]] and the pair count n, on
+    * three indented lines. */
+  protected val duckLagR: String =
+    """    round((CAST(n AS DOUBLE) * sxy - sx * sy) /
+      |      sqrt((CAST(n AS DOUBLE) * sxx - sx * sx) *
+      |           (CAST(n AS DOUBLE) * syy - sy * sy)), 6) + 0.0 AS r""".stripMargin
+
+  /** [[duckDayTotals]] plus `lagged(lag, v, pv)`: each day's v with pv, the
+    * v of the day `lag` calendar days earlier, lag = 1..maxLag.
+    * Comma-terminated. */
+  protected def duckDayLags(maxLag: Int): String = duckDayTotals +
+    s"""
+       |lagged AS (
+       |  SELECT l.lag, a.v, b.v AS pv
+       |  FROM daily a
+       |  CROSS JOIN (SELECT unnest(range(1, ${maxLag + 1})) AS lag) l
+       |  JOIN daily b ON b.day = a.day - CAST(l.lag AS INTEGER)),""".stripMargin
+
+  /** [[duckDayLags]] over 7 lags plus the lag-k Pearson moments `m(lag,
+    * n, sx, sy, sxy, sxx, syy)` of the ACF keys. Ends at
+    * `FROM lagged GROUP BY 1)`. */
+  protected val duckAcfMoments: String = duckDayLags(7) +
+    """
+      |m AS (
+      |  SELECT CAST(lag AS BIGINT) AS lag, count(*) AS n,
+      |    CAST(sum(CAST(v AS DECIMAL(18,2))) AS DOUBLE) AS sx,
+      |    CAST(sum(CAST(pv AS DECIMAL(18,2))) AS DOUBLE) AS sy,
+      |    CAST(sum(CAST(v AS DECIMAL(18,2)) * CAST(pv AS DECIMAL(18,2))) AS DOUBLE) AS sxy,
+      |    CAST(sum(CAST(v AS DECIMAL(18,2)) * CAST(v AS DECIMAL(18,2))) AS DOUBLE) AS sxx,
+      |    CAST(sum(CAST(pv AS DECIMAL(18,2)) * CAST(pv AS DECIMAL(18,2))) AS DOUBLE) AS syy
+      |  FROM lagged GROUP BY 1)""".stripMargin
+
   /** Shared oracle CTE block mirroring [[friedmanGrid]]: zero-filled
     * day×type grid with doubled within-day midranks. Ends at
     * `rk(day, event_type, revc, r2x)`, comma-terminated. */
@@ -576,16 +675,30 @@ private[operators] trait StatsOpsBase {
       |tn AS (SELECT *, a + b + c + d AS n FROM tbl),
       |""".stripMargin
 
+  /** Oracle CTE `mm`: `mo`'s rows (n, s, s2 over cents) plus the mean m
+    * and the sample sd. Comma-terminated, on its own lines. */
+  protected val duckMeanSd: String =
+    """mm AS (SELECT *, CAST(s AS DOUBLE) / n AS m,
+      |    sqrt(CAST(n * s2 - CAST(s AS DECIMAL(28,0)) * s AS DOUBLE)
+      |      / (CAST(n AS DOUBLE) * (n - 1))) AS sd
+      |  FROM mo),""".stripMargin
+
+  /** Oracle CTE `mo(event_type, n, s1, s2)`: the count, sum and DECIMAL
+    * sum of squares of each type's daily cents in `daily`.
+    * Comma-terminated. */
+  protected val duckCentsMoments: String =
+    """mo AS (SELECT event_type, CAST(count(*) AS BIGINT) AS n,
+      |    CAST(sum(revc) AS BIGINT) AS s1,
+      |    sum(CAST(revc AS DECIMAL(28,0)) * revc) AS s2
+      |  FROM daily GROUP BY 1),
+      |""".stripMargin
+
   /** Oracle CTE block appended to [[duckDailyTyped]]: int64 cents
     * moments → z, plus the ECDF rank over the (revc, day) total order.
     * Ends at `zz(event_type, n, z, rn)`, comma-terminated. The ranked
     * z of [[statsLilliefors]] and [[duckNormalityFrame]]. */
   protected val duckZRanked: String =
-    """mo AS (SELECT event_type, CAST(count(*) AS BIGINT) AS n,
-      |    CAST(sum(revc) AS BIGINT) AS s1,
-      |    sum(CAST(revc AS DECIMAL(28,0)) * revc) AS s2
-      |  FROM daily GROUP BY 1),
-      |mm AS (SELECT event_type, n, CAST(s1 AS DOUBLE) / n AS mu,
+    duckCentsMoments + """mm AS (SELECT event_type, n, CAST(s1 AS DOUBLE) / n AS mu,
       |    sqrt(CAST(n * s2 - CAST(s1 AS DECIMAL(28,0)) * s1 AS DOUBLE)
       |      / (CAST(n AS DOUBLE) * (n - 1))) AS sd
       |  FROM mo),
@@ -618,14 +731,20 @@ private[operators] trait StatsOpsBase {
       |  GROUP BY 1),
       |""".stripMargin
 
+  /** The s1 and s2 select items of [[valueMoments]]' oracle twins: the
+    * DECIMAL sum and sum of squares of `value`, each cast once to double,
+    * on three indented lines. */
+  protected val duckValueSums: String =
+    """    CAST(sum(CAST("value" AS DECIMAL(18,2))) AS DOUBLE) AS s1,
+      |    CAST(sum(CAST("value" AS DECIMAL(18,2))
+      |             * CAST("value" AS DECIMAL(18,2))) AS DOUBLE) AS s2""".stripMargin
+
   /** Oracle CTE `g(event_type, n, s1, s2)` mirroring [[valueMoments]];
     * comma-terminated. */
   protected val duckValueMoments: String =
-    """WITH g AS (
-      |  SELECT event_type, CAST(count(*) AS BIGINT) AS n,
-      |    CAST(sum(CAST("value" AS DECIMAL(18,2))) AS DOUBLE) AS s1,
-      |    CAST(sum(CAST("value" AS DECIMAL(18,2))
-      |             * CAST("value" AS DECIMAL(18,2))) AS DOUBLE) AS s2
+    s"""WITH g AS (
+       |  SELECT event_type, CAST(count(*) AS BIGINT) AS n,
+       |$duckValueSums
       |  FROM events GROUP BY 1),
       |""".stripMargin
 
@@ -647,11 +766,7 @@ private[operators] trait StatsOpsBase {
     * oracles (appended to the daily CTE, recursion-ready) — the twin of
     * [[dailyZ]] plus a per-type day rank. */
   protected val duckZSeries: String =
-    """mo AS (SELECT event_type, CAST(count(*) AS BIGINT) AS n,
-      |    CAST(sum(revc) AS BIGINT) AS s1,
-      |    sum(CAST(revc AS DECIMAL(28,0)) * revc) AS s2
-      |  FROM daily GROUP BY 1),
-      |mm AS (SELECT event_type, CAST(s1 AS DOUBLE) / n AS mu,
+    duckCentsMoments + """mm AS (SELECT event_type, CAST(s1 AS DOUBLE) / n AS mu,
       |    sqrt(CAST(n * s2 - CAST(s1 AS DECIMAL(28,0)) * s1 AS DOUBLE)
       |      / (CAST(n AS DOUBLE) * (n - 1))) AS sd
       |  FROM mo),

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.Key
 import graft.functions.GramMatrixAgg
 import graft.sources.Tables
-import graft.operators.OpsHelpers.{ev, r6}
+import graft.operators.OpsHelpers.{ev, r6, userDayGrid}
 
 /** Time-series diagnostics, drift/changepoint monitors, process control and survival analysis — one of the [[StatsOps]] family traits (split from
   * the former single-file StatsOps with zero behavior change;
@@ -63,10 +63,7 @@ private[operators] trait StatsSeqOps extends StatsOpsBase {
     val daily = ev(spark, dir)
       .groupBy(col("user_id"), col("day"))
       .agg(avg(col("value")).as("v"))
-    val grid = daily.groupBy(col("user_id"))
-      .agg(min(col("day")).as("d0"), max(col("day")).as("d1"))
-      .select(col("user_id"),
-        explode(expr("sequence(d0, d1, interval 1 day)")).as("day"))
+    val grid = userDayGrid(daily)
     val byDay = Window.partitionBy(col("user_id")).orderBy(col("day"))
     val prevF = byDay.rowsBetween(Window.unboundedPreceding, -1)
     val nextF = byDay.rowsBetween(1, Window.unboundedFollowing)
@@ -837,21 +834,7 @@ private[operators] trait StatsSeqOps extends StatsOpsBase {
   // engines) short-circuits to exactly 0. ──
   def statsKaplanMeier(spark: SparkSession, dir: String): DataFrame = {
     val s = survSubjects(spark, dir)
-    val byT = s.groupBy(col("t"))
-      .agg(sum(col("observed")).as("d"),
-        sum(lit(1L) - col("observed")).as("c"))
-    val w = Window.orderBy(col("t"))
-    val curve = byT
-      .withColumn("n_risk",
-        sum(col("d") + col("c")).over(
-          w.rowsBetween(Window.currentRow, Window.unboundedFollowing)))
-      .withColumn("term", expr(
-        """CASE WHEN d > 0 AND d < n_risk
-          |THEN CAST(round(ln(1.0 - cast(d as double) / n_risk), 9)
-          |          AS DECIMAL(18,9)) END""".stripMargin))
-      .withColumn("cuml",
-        sum(col("term")).over(w.rowsBetween(Window.unboundedPreceding,
-          Window.currentRow)))
+    val curve = kmSteps(s)
       .filter(col("d") > 0)
     curve.select(col("t").as("t_hours"), col("n_risk"),
         col("d").as("d_events"), col("c").as("c_censored"),
@@ -919,18 +902,7 @@ private[operators] trait StatsSeqOps extends StatsOpsBase {
   // make it conservative — documented, matched in the oracle). Block
   // grid is |days|×k — group-sized forever. ──
   def statsPageTrend(spark: SparkSession, dir: String): DataFrame = {
-    val rev = dailyTyped(spark, dir)
-    val days = rev.select(col("day")).distinct()
-    val types = rev.select(col("event_type")).distinct()
-      .withColumn("j", row_number().over(
-        Window.partitionBy(lit(1)).orderBy(col("event_type"))))
-    val grid = days.crossJoin(broadcast(types))
-      .join(rev, Seq("day", "event_type"), "left")
-      .withColumn("revc", coalesce(col("revc"), lit(0L)))
-    val ranked = grid.withColumn("r2x",
-      rank().over(Window.partitionBy(col("day")).orderBy(col("revc"))) * 2
-        + count(lit(1)).over(Window.partitionBy(col("day"), col("revc")))
-        - 1)
+    val ranked = friedmanGrid(spark, dir, typeIndex = true)
     val perType = ranked.groupBy(col("j"))
       .agg(sum(col("r2x")).as("r2"), count(lit(1)).as("n"))
     perType.agg(count(lit(1)).as("k"), first(col("n")).as("n_blocks"),
@@ -1312,21 +1284,7 @@ private[operators] trait StatsSeqOps extends StatsOpsBase {
   // the grid-sized curve. Points need 0 < S < 1 and t ≥ 1 h. ──
   def statsWeibullFit(spark: SparkSession, dir: String): DataFrame = {
     val s = survSubjects(spark, dir)
-    val byT = s.groupBy(col("t"))
-      .agg(sum(col("observed")).as("d"),
-        sum(lit(1L) - col("observed")).as("c"))
-    val w = Window.orderBy(col("t"))
-    val pts = byT
-      .withColumn("n_risk",
-        sum(col("d") + col("c")).over(
-          w.rowsBetween(Window.currentRow, Window.unboundedFollowing)))
-      .withColumn("term", expr(
-        """CASE WHEN d > 0 AND d < n_risk
-          |THEN CAST(round(ln(1.0 - cast(d as double) / n_risk), 9)
-          |          AS DECIMAL(18,9)) END""".stripMargin))
-      .withColumn("cuml",
-        sum(col("term")).over(w.rowsBetween(Window.unboundedPreceding,
-          Window.currentRow)))
+    val pts = kmSteps(s)
       .filter(col("d") > 0 && col("d") < col("n_risk") && col("t") >= 1)
       .withColumn("s6", r6(expr("exp(cast(cuml as double))")))
       .filter(col("s6") > 0 && col("s6") < 1)
@@ -1530,6 +1488,14 @@ private[operators] trait StatsSeqOps extends StatsOpsBase {
       .orderBy("event_type", "day")
   }
 
+  /** Each type's day count n_days and its [[dailyZ]] series as one (day, z)
+    * array `s` in day order: the input of the sequential drift folds. */
+  private def dailyZArrays(spark: SparkSession, dir: String): DataFrame =
+    dailyZ(spark, dir)
+      .groupBy(col("event_type"))
+      .agg(count(lit(1)).as("n_days"),
+        sort_array(collect_list(struct(col("day"), col("z")))).as("s"))
+
   // ── tabular two-sided CUSUM chart (k=0.5σ slack, h=4σ decision
   // interval, reset-on-alarm) on the standardized daily revenue —
   // window_cusum plots the raw cumulative deviation; THIS is the
@@ -1541,10 +1507,7 @@ private[operators] trait StatsSeqOps extends StatsOpsBase {
   // broadcast into the fold. Emits each type's final state + alarm
   // count. ──
   def statsCusumChart(spark: SparkSession, dir: String): DataFrame =
-    dailyZ(spark, dir)
-      .groupBy(col("event_type"))
-      .agg(count(lit(1)).as("n_days"),
-        sort_array(collect_list(struct(col("day"), col("z")))).as("s"))
+    dailyZArrays(spark, dir)
       .withColumn("st", expr(
         """aggregate(s,
           |  named_struct('cp', 0.0D, 'cn', 0.0D, 'al', 0L),
@@ -1570,10 +1533,7 @@ private[operators] trait StatsSeqOps extends StatsOpsBase {
   // fold per type; the recursion is replayed verbatim by the oracle's
   // recursive CTE. ──
   def statsPageHinkley(spark: SparkSession, dir: String): DataFrame =
-    dailyZ(spark, dir)
-      .groupBy(col("event_type"))
-      .agg(count(lit(1)).as("n_days"),
-        sort_array(collect_list(struct(col("day"), col("z")))).as("s"))
+    dailyZArrays(spark, dir)
       .withColumn("st", expr(
         """aggregate(s,
           |  named_struct('i', 0L, 'sm', 0.0D, 'm', 0.0D,
@@ -1614,19 +1574,8 @@ private[operators] trait StatsSeqOps extends StatsOpsBase {
       expr("pmod(pmod(user_id, 2147483648) * 2654435761, 2147483648) % 2"))
     val tau = s.groupBy(col("g")).agg(max(col("t")).as("mxt"))
       .agg(min(col("mxt")).as("tau"))
-    val byT = s.groupBy(col("g"), col("t"))
-      .agg(sum(col("observed")).as("d"),
-        sum(lit(1L) - col("observed")).as("c"))
     val w = Window.partitionBy(col("g")).orderBy(col("t"))
-    val curve = byT
-      .withColumn("n_risk", sum(col("d") + col("c")).over(
-        w.rowsBetween(Window.currentRow, Window.unboundedFollowing)))
-      .withColumn("term", expr(
-        """CASE WHEN d > 0 AND d < n_risk
-          |THEN CAST(round(ln(1.0 - cast(d as double) / n_risk), 9)
-          |          AS DECIMAL(18,9)) END""".stripMargin))
-      .withColumn("cuml", sum(col("term")).over(
-        w.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+    val curve = kmSteps(s, "g")
       .filter(col("d") > 0)
       .withColumn("s9", expr(
         """CASE WHEN d = n_risk THEN CAST(0 AS DECIMAL(18,9))
@@ -1703,23 +1652,14 @@ private[operators] trait StatsSeqOps extends StatsOpsBase {
   // reduces per (day, value) group. Both W and its χ² = m(k−1)·W are
   // ONE cast-first division from exact integers. ──
   def statsKendallW(spark: SparkSession, dir: String): DataFrame = {
-    val rev = dailyTyped(spark, dir)
-    val days = rev.select(col("day")).distinct()
-    val types = rev.select(col("event_type")).distinct()
-    val grid = days.crossJoin(broadcast(types))
-      .join(rev, Seq("day", "event_type"), "left")
-      .withColumn("revc", coalesce(col("revc"), lit(0L)))
-    val ranked = grid.withColumn("r2x",
-      rank().over(Window.partitionBy(col("day")).orderBy(col("revc"))) * 2
-        + count(lit(1)).over(Window.partitionBy(col("day"), col("revc")))
-        - 1)
+    val ranked = friedmanGrid(spark, dir)
     val rs = ranked.groupBy(col("event_type"))
       .agg(sum(col("r2x")).as("r2"), count(lit(1)).as("m"))
     val km = rs.agg(count(lit(1)).as("k"), first(col("m")).as("m0"))
     val s2 = rs.crossJoin(broadcast(km))
       .agg(first(col("k")).as("k"), first(col("m0")).as("m"),
         sum(expr("(r2 - m0 * (k + 1)) * (r2 - m0 * (k + 1))")).as("s2c"))
-    val ties = grid.groupBy(col("day"), col("revc"))
+    val ties = ranked.groupBy(col("day"), col("revc"))
       .agg(count(lit(1)).as("t"))
       .agg(sum(expr("t * t * t - t")).as("tt"))
     s2.crossJoin(broadcast(ties))
@@ -1907,30 +1847,13 @@ private[operators] trait StatsSeqOps extends StatsOpsBase {
          |    > CAST(0.126 AS DOUBLE) AS normal_rejected
          |FROM f ORDER BY event_type""".stripMargin)),
     Key("stats_pacf", statsPacf, Some(
-      """WITH daily AS (
-        |  SELECT CAST(CAST(ts AS TIMESTAMP) AS DATE) AS day,
-        |    CAST(sum(CAST("value" AS DECIMAL(18,2))) AS DOUBLE) AS v
-        |  FROM events GROUP BY 1),
-        |lagged AS (
-        |  SELECT l.lag, a.v, b.v AS pv
-        |  FROM daily a
-        |  CROSS JOIN (SELECT unnest(range(1, 4)) AS lag) l
-        |  JOIN daily b ON b.day = a.day - CAST(l.lag AS INTEGER)),
+      duckDayLags(3) + s"""
         |m AS (
         |  SELECT lag, count(*) AS n,
-        |    CAST(sum(CAST(v AS DECIMAL(18,2))) AS DOUBLE) AS sx,
-        |    CAST(sum(CAST(pv AS DECIMAL(18,2))) AS DOUBLE) AS sy,
-        |    CAST(sum(CAST(v AS DECIMAL(18,2)) * CAST(pv AS DECIMAL(18,2)))
-        |      AS DOUBLE) AS sxy,
-        |    CAST(sum(CAST(v AS DECIMAL(18,2)) * CAST(v AS DECIMAL(18,2)))
-        |      AS DOUBLE) AS sxx,
-        |    CAST(sum(CAST(pv AS DECIMAL(18,2)) * CAST(pv AS DECIMAL(18,2)))
-        |      AS DOUBLE) AS syy
+        |$duckLagSums
         |  FROM lagged GROUP BY 1),
         |rk AS (SELECT lag,
-        |    round((CAST(n AS DOUBLE) * sxy - sx * sy) /
-        |      sqrt((CAST(n AS DOUBLE) * sxx - sx * sx) *
-        |           (CAST(n AS DOUBLE) * syy - sy * sy)), 6) + 0.0 AS r
+        |$duckLagR
         |  FROM m),
         |rr AS (SELECT
         |    max(CASE WHEN lag = 1 THEN r END) AS r1,
@@ -2150,10 +2073,8 @@ private[operators] trait StatsSeqOps extends StatsOpsBase {
         |FROM c ORDER BY event_type""".stripMargin)),
     Key("stats_xbar_chart", statsXbarChart, Some(
       duckDailyTypedWith("CAST(count(*) AS BIGINT) AS nd") +
-      """g AS (SELECT event_type, CAST(count(*) AS BIGINT) AS n,
-        |    CAST(sum(CAST("value" AS DECIMAL(18,2))) AS DOUBLE) AS s1,
-        |    CAST(sum(CAST("value" AS DECIMAL(18,2))
-        |             * CAST("value" AS DECIMAL(18,2))) AS DOUBLE) AS s2
+      s"""g AS (SELECT event_type, CAST(count(*) AS BIGINT) AS n,
+        |$duckValueSums
         |  FROM events GROUP BY 1),
         |gr AS (SELECT event_type, s1 / n AS gm,
         |    sqrt((n * s2 - s1 * s1) / (CAST(n AS DOUBLE) * (n - 1)))
@@ -2399,19 +2320,12 @@ private[operators] trait StatsSeqOps extends StatsOpsBase {
         |FROM rk JOIN n USING (event_type) WHERE rk.rn = 1
         |ORDER BY event_type""".stripMargin)),
     Key("stats_qq_normal", statsQqNormal, Some(
-      s"""WITH daily AS (
-         |  SELECT CAST(CAST(ts AS TIMESTAMP) AS DATE) AS day,
-         |    CAST(sum(CAST("value" AS DECIMAL(18,2))) * 100 AS BIGINT)
-         |      AS revc
-         |  FROM events GROUP BY 1),
+      s"""${OracleSql.DayCents}
          |mo AS (SELECT CAST(count(*) AS BIGINT) AS n,
          |    CAST(sum(revc) AS BIGINT) AS s,
          |    sum(CAST(revc AS DECIMAL(28,0)) * revc) AS s2
          |  FROM daily),
-         |mm AS (SELECT *, CAST(s AS DOUBLE) / n AS m,
-         |    sqrt(CAST(n * s2 - CAST(s AS DECIMAL(28,0)) * s AS DOUBLE)
-         |      / (CAST(n AS DOUBLE) * (n - 1))) AS sd
-         |  FROM mo),
+         |$duckMeanSd
          |qs AS (SELECT 1 AS decile, quantile_cont(revc, 0.1) AS q FROM daily
          |  UNION ALL SELECT 2 AS decile, quantile_cont(revc, 0.2) AS q FROM daily
          |  UNION ALL SELECT 3 AS decile, quantile_cont(revc, 0.3) AS q FROM daily
@@ -2434,10 +2348,7 @@ private[operators] trait StatsSeqOps extends StatsOpsBase {
         |    CAST(sum(revc) AS BIGINT) AS s,
         |    sum(CAST(revc AS DECIMAL(28,0)) * revc) AS s2
         |  FROM daily GROUP BY 1),
-        |mm AS (SELECT *, CAST(s AS DOUBLE) / n AS m,
-        |    sqrt(CAST(n * s2 - CAST(s AS DECIMAL(28,0)) * s AS DOUBLE)
-        |      / (CAST(n AS DOUBLE) * (n - 1))) AS sd
-        |  FROM mo),
+        |""".stripMargin + duckMeanSd + """
         |dv AS (SELECT d.event_type, mm.n, d.dayno,
         |    round(abs(d.revc - mm.m) / mm.sd, 6) AS dev
         |  FROM daily d JOIN mm USING (event_type)),
@@ -3120,23 +3031,7 @@ private[operators] trait StatsSeqOps extends StatsOpsBase {
         |             ELSE 0.0 END / 2, 6) + 0.0 AS jsd_term
         |FROM s ORDER BY event_type""".stripMargin)),
     Key("stats_ljung_box", statsLjungBox, Some(
-      """WITH daily AS (
-        |  SELECT CAST(CAST(ts AS TIMESTAMP) AS DATE) AS day,
-        |    CAST(sum(CAST("value" AS DECIMAL(18,2))) AS DOUBLE) AS v
-        |  FROM events GROUP BY 1),
-        |lagged AS (
-        |  SELECT l.lag, a.v, b.v AS pv
-        |  FROM daily a
-        |  CROSS JOIN (SELECT unnest(range(1, 8)) AS lag) l
-        |  JOIN daily b ON b.day = a.day - CAST(l.lag AS INTEGER)),
-        |m AS (
-        |  SELECT CAST(lag AS BIGINT) AS lag, count(*) AS n,
-        |    CAST(sum(CAST(v AS DECIMAL(18,2))) AS DOUBLE) AS sx,
-        |    CAST(sum(CAST(pv AS DECIMAL(18,2))) AS DOUBLE) AS sy,
-        |    CAST(sum(CAST(v AS DECIMAL(18,2)) * CAST(pv AS DECIMAL(18,2))) AS DOUBLE) AS sxy,
-        |    CAST(sum(CAST(v AS DECIMAL(18,2)) * CAST(v AS DECIMAL(18,2))) AS DOUBLE) AS sxx,
-        |    CAST(sum(CAST(pv AS DECIMAL(18,2)) * CAST(pv AS DECIMAL(18,2))) AS DOUBLE) AS syy
-        |  FROM lagged GROUP BY 1),
+      duckAcfMoments + """,
         |acf AS (
         |  SELECT lag,
         |    round((CAST(n AS DOUBLE) * sxy - sx * sy) /
@@ -3153,23 +3048,7 @@ private[operators] trait StatsSeqOps extends StatsOpsBase {
         |   > 14.06714) AS reject_5pct
         |FROM acf CROSS JOIN nd GROUP BY n_days""".stripMargin)),
     Key("stats_acf", statsAcf, Some(
-      """WITH daily AS (
-        |  SELECT CAST(CAST(ts AS TIMESTAMP) AS DATE) AS day,
-        |    CAST(sum(CAST("value" AS DECIMAL(18,2))) AS DOUBLE) AS v
-        |  FROM events GROUP BY 1),
-        |lagged AS (
-        |  SELECT l.lag, a.v, b.v AS pv
-        |  FROM daily a
-        |  CROSS JOIN (SELECT unnest(range(1, 8)) AS lag) l
-        |  JOIN daily b ON b.day = a.day - CAST(l.lag AS INTEGER)),
-        |m AS (
-        |  SELECT CAST(lag AS BIGINT) AS lag, count(*) AS n,
-        |    CAST(sum(CAST(v AS DECIMAL(18,2))) AS DOUBLE) AS sx,
-        |    CAST(sum(CAST(pv AS DECIMAL(18,2))) AS DOUBLE) AS sy,
-        |    CAST(sum(CAST(v AS DECIMAL(18,2)) * CAST(pv AS DECIMAL(18,2))) AS DOUBLE) AS sxy,
-        |    CAST(sum(CAST(v AS DECIMAL(18,2)) * CAST(v AS DECIMAL(18,2))) AS DOUBLE) AS sxx,
-        |    CAST(sum(CAST(pv AS DECIMAL(18,2)) * CAST(pv AS DECIMAL(18,2))) AS DOUBLE) AS syy
-        |  FROM lagged GROUP BY 1)
+      duckAcfMoments + """
         |SELECT lag, n,
         |  round((CAST(n AS DOUBLE) * sxy - sx * sy) /
         |        sqrt((CAST(n AS DOUBLE) * sxx - sx * sx) *

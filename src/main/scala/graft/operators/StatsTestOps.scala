@@ -45,16 +45,7 @@ private[operators] trait StatsTestOps extends StatsOpsBase {
   // understate χ²). Everything after the one fact-table scan is
   // arithmetic on group-sized frames. ──
   def statsChi2(spark: SparkSession, dir: String): DataFrame = {
-    val o = ev(spark, dir)
-      .select(col("event_type"),
-        expr("pmod(datediff(day, DATE'1970-01-01'), 7)").as("dow"))
-      .groupBy(col("event_type"), col("dow"))
-      .agg(count(lit(1)).as("o"))
-    val rowT = o.groupBy(col("event_type")).agg(sum(col("o")).as("rt"))
-    val colT = o.groupBy(col("dow")).agg(sum(col("o")).as("ct"))
-    val n = o.agg(sum(col("o")).as("n"))
-    val grid = rowT.crossJoin(colT).crossJoin(broadcast(n))
-      .join(o, Seq("event_type", "dow"), "left")
+    val grid = typeDowCells(spark, dir)
       .select(col("event_type"), col("dow"),
         coalesce(col("o"), lit(0L)).as("o"),
         (col("rt").cast("double") * col("ct") / col("n")).as("e"),
@@ -438,16 +429,7 @@ private[operators] trait StatsTestOps extends StatsOpsBase {
   // observed/expected grid as stats_chi2; V derives from the ROUNDED
   // χ² (the jarque_bera discipline), one sqrt, cast-first division. ──
   def statsCramersV(spark: SparkSession, dir: String): DataFrame = {
-    val o = ev(spark, dir)
-      .select(col("event_type"),
-        expr("pmod(datediff(day, DATE'1970-01-01'), 7)").as("dow"))
-      .groupBy(col("event_type"), col("dow"))
-      .agg(count(lit(1)).as("o"))
-    val rowT = o.groupBy(col("event_type")).agg(sum(col("o")).as("rt"))
-    val colT = o.groupBy(col("dow")).agg(sum(col("o")).as("ct"))
-    val n = o.agg(sum(col("o")).as("n"))
-    val grid = rowT.crossJoin(colT).crossJoin(broadcast(n))
-      .join(o, Seq("event_type", "dow"), "left")
+    val grid = typeDowCells(spark, dir)
       .select(coalesce(col("o"), lit(0L)).as("o"),
         (col("rt").cast("double") * col("ct") / col("n")).as("e"),
         col("event_type"), col("dow"), col("n"))
@@ -1393,19 +1375,73 @@ private[operators] trait StatsTestOps extends StatsOpsBase {
       .orderBy("event_type")
   }
 
+  /** The event_type × weekday cells of the χ² keys: observed count o
+    * (null for an empty cell), the row and column totals rt and ct, and
+    * the grand total n — every cell, so expected counts cover the
+    * structural zeros too. */
+  private def typeDowCells(spark: SparkSession, dir: String): DataFrame = {
+    val o = ev(spark, dir)
+      .select(col("event_type"),
+        expr("pmod(datediff(day, DATE'1970-01-01'), 7)").as("dow"))
+      .groupBy(col("event_type"), col("dow"))
+      .agg(count(lit(1)).as("o"))
+    val rowT = o.groupBy(col("event_type")).agg(sum(col("o")).as("rt"))
+    val colT = o.groupBy(col("dow")).agg(sum(col("o")).as("ct"))
+    val n = o.agg(sum(col("o")).as("n"))
+    rowT.crossJoin(colT).crossJoin(broadcast(n))
+      .join(o, Seq("event_type", "dow"), "left")
+  }
+
+  /** Oracle CTEs mirroring [[typeDowCells]]: `grid(event_type, dow, o,
+    * e)` with the expected count e. Ends at its closing parenthesis. */
+  private val duckTypeDowGrid: String =
+    """WITH e0 AS (
+      |  SELECT event_type,
+      |    ((CAST(ts AS DATE) - DATE '1970-01-01') % 7 + 7) % 7 AS dow
+      |  FROM events),
+      |o AS (SELECT event_type, CAST(dow AS INTEGER) AS dow,
+      |        count(*) AS o FROM e0 GROUP BY 1, 2),
+      |rt AS (SELECT event_type, CAST(sum(o) AS BIGINT) AS rt FROM o GROUP BY 1),
+      |ct AS (SELECT dow, CAST(sum(o) AS BIGINT) AS ct FROM o GROUP BY 1),
+      |n AS (SELECT CAST(sum(o) AS BIGINT) AS n FROM o),
+      |grid AS (
+      |  SELECT rt.event_type, ct.dow,
+      |    CAST(COALESCE(o.o, 0) AS BIGINT) AS o,
+      |    CAST(rt.rt AS DOUBLE) * ct.ct / n.n AS e
+      |  FROM rt CROSS JOIN ct CROSS JOIN n
+      |  LEFT JOIN o ON o.event_type = rt.event_type AND o.dow = ct.dow)""".stripMargin
+
+  /** Oracle CTEs of the click-vs-purchase rank tests: `g(v, a, b)`, each
+    * distinct value's click and purchase counts, and `gt`, plus the tie
+    * size t = a + b. Comma-terminated. */
+  private val duckTiedCounts: String =
+    """WITH g AS (
+      |  SELECT "value" AS v,
+      |    CAST(sum(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END)
+      |      AS BIGINT) AS a,
+      |    CAST(sum(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0
+      |      END) AS BIGINT) AS b
+      |  FROM events WHERE event_type IN ('click', 'purchase')
+      |  GROUP BY 1),
+      |gt AS (SELECT *, a + b AS t FROM g),
+      |""".stripMargin
+
+  /** The Wilson 95% interval bound of k successes in n trials, the lower
+    * for `sign` "-" and the upper for "+", 6-dp snapped. */
+  private def duckWilsonBound(sign: String): String =
+    s"""  round((CAST(k AS DOUBLE) / n
+       |      + (CAST(1.96 AS DOUBLE) * CAST(1.96 AS DOUBLE)) / (2 * n)
+       |      $sign CAST(1.96 AS DOUBLE)
+       |        * sqrt((CAST(k AS DOUBLE) / n) * (1 - (CAST(k AS DOUBLE) / n)) / n
+       |          + (CAST(1.96 AS DOUBLE) * CAST(1.96 AS DOUBLE))
+       |            / (4 * n * n)))
+       |    / (1 + (CAST(1.96 AS DOUBLE) * CAST(1.96 AS DOUBLE)) / n), 6)
+       |    + 0.0""".stripMargin
+
   protected val testKeys: Seq[Key] = Seq(
     Key("stats_brunner_munzel", statsBrunnerMunzel, Some {
       val pw = phiSql("aw")
-      s"""WITH g AS (
-         |  SELECT "value" AS v,
-         |    CAST(sum(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END)
-         |      AS BIGINT) AS a,
-         |    CAST(sum(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0
-         |      END) AS BIGINT) AS b
-         |  FROM events WHERE event_type IN ('click', 'purchase')
-         |  GROUP BY 1),
-         |gt AS (SELECT *, a + b AS t FROM g),
-         |r AS (SELECT *,
+      s"""${duckTiedCounts}r AS (SELECT *,
          |    COALESCE(sum(t) OVER wb, 0) AS f,
          |    COALESCE(sum(a) OVER wb, 0) AS fa,
          |    COALESCE(sum(b) OVER wb, 0) AS fb
@@ -1514,16 +1550,7 @@ private[operators] trait StatsTestOps extends StatsOpsBase {
          |FROM d ORDER BY type_a, type_b""".stripMargin)),
     Key("stats_mood_scale", statsMoodScale, Some {
       val pz = phiSql("az")
-      s"""WITH g AS (
-         |  SELECT "value" AS v,
-         |    CAST(sum(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END)
-         |      AS BIGINT) AS a,
-         |    CAST(sum(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0
-         |      END) AS BIGINT) AS b
-         |  FROM events WHERE event_type IN ('click', 'purchase')
-         |  GROUP BY 1),
-         |gt AS (SELECT *, a + b AS t FROM g),
-         |r AS (SELECT *,
+      s"""${duckTiedCounts}r AS (SELECT *,
          |    CAST(COALESCE(sum(t) OVER (ORDER BY v
          |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
          |      AS BIGINT) AS f
@@ -1793,9 +1820,7 @@ private[operators] trait StatsTestOps extends StatsOpsBase {
     Key("stats_tost", statsTost, Some(
       s"""WITH g AS (
          |  SELECT event_type, CAST(count(*) AS BIGINT) AS n,
-         |    CAST(sum(CAST("value" AS DECIMAL(18,2))) AS DOUBLE) AS s1,
-         |    CAST(sum(CAST("value" AS DECIMAL(18,2))
-         |             * CAST("value" AS DECIMAL(18,2))) AS DOUBLE) AS s2
+         |$duckValueSums
          |  FROM events WHERE event_type IN ('click', 'purchase')
          |  GROUP BY 1),
          |v AS (SELECT *, s1 / n AS m,
@@ -2159,7 +2184,7 @@ private[operators] trait StatsTestOps extends StatsOpsBase {
         |    - CAST(3 * n_blocks * (k + 1) AS DOUBLE), 6) + 0.0 AS q
         |FROM t""".stripMargin)),
     Key("stats_wilson_ci", statsWilsonCi, Some(
-      """WITH d AS (
+      s"""WITH d AS (
         |  SELECT CAST(CAST(ts AS TIMESTAMP) AS DATE) AS day,
         |    CAST(count(*) AS BIGINT) AS n,
         |    CAST(count(CASE WHEN event_type = 'purchase' THEN 1 END)
@@ -2167,22 +2192,8 @@ private[operators] trait StatsTestOps extends StatsOpsBase {
         |  FROM events GROUP BY 1)
         |SELECT day, n, k,
         |  round(CAST(k AS DOUBLE) / n, 6) + 0.0 AS p_hat,
-        |  round((CAST(k AS DOUBLE) / n
-        |      + (CAST(1.96 AS DOUBLE) * CAST(1.96 AS DOUBLE)) / (2 * n)
-        |      - CAST(1.96 AS DOUBLE)
-        |        * sqrt((CAST(k AS DOUBLE) / n) * (1 - (CAST(k AS DOUBLE) / n)) / n
-        |          + (CAST(1.96 AS DOUBLE) * CAST(1.96 AS DOUBLE))
-        |            / (4 * n * n)))
-        |    / (1 + (CAST(1.96 AS DOUBLE) * CAST(1.96 AS DOUBLE)) / n), 6)
-        |    + 0.0 AS ci_lo,
-        |  round((CAST(k AS DOUBLE) / n
-        |      + (CAST(1.96 AS DOUBLE) * CAST(1.96 AS DOUBLE)) / (2 * n)
-        |      + CAST(1.96 AS DOUBLE)
-        |        * sqrt((CAST(k AS DOUBLE) / n) * (1 - (CAST(k AS DOUBLE) / n)) / n
-        |          + (CAST(1.96 AS DOUBLE) * CAST(1.96 AS DOUBLE))
-        |            / (4 * n * n)))
-        |    / (1 + (CAST(1.96 AS DOUBLE) * CAST(1.96 AS DOUBLE)) / n), 6)
-        |    + 0.0 AS ci_hi
+        |${duckWilsonBound("-")} AS ci_lo,
+        |${duckWilsonBound("+")} AS ci_hi
         |FROM d ORDER BY day""".stripMargin)),
     Key("stats_kruskal", statsKruskal, Some(
       """WITH j AS (SELECT event_type,
@@ -2217,21 +2228,7 @@ private[operators] trait StatsTestOps extends StatsOpsBase {
         |       / (CAST(n AS DOUBLE) * n * n - n)), 6) + 0.0 AS h_adj
         |FROM tot, tc""".stripMargin)),
     Key("stats_cramers_v", statsCramersV, Some(
-      """WITH e0 AS (
-        |  SELECT event_type,
-        |    ((CAST(ts AS DATE) - DATE '1970-01-01') % 7 + 7) % 7 AS dow
-        |  FROM events),
-        |o AS (SELECT event_type, CAST(dow AS INTEGER) AS dow,
-        |        count(*) AS o FROM e0 GROUP BY 1, 2),
-        |rt AS (SELECT event_type, CAST(sum(o) AS BIGINT) AS rt FROM o GROUP BY 1),
-        |ct AS (SELECT dow, CAST(sum(o) AS BIGINT) AS ct FROM o GROUP BY 1),
-        |n AS (SELECT CAST(sum(o) AS BIGINT) AS n FROM o),
-        |grid AS (
-        |  SELECT rt.event_type, ct.dow,
-        |    CAST(COALESCE(o.o, 0) AS BIGINT) AS o,
-        |    CAST(rt.rt AS DOUBLE) * ct.ct / n.n AS e
-        |  FROM rt CROSS JOIN ct CROSS JOIN n
-        |  LEFT JOIN o ON o.event_type = rt.event_type AND o.dow = ct.dow),
+      duckTypeDowGrid + """,
         |t AS (
         |  SELECT round(sum((o - e) * (o - e) / e), 6) + 0.0 AS chi2,
         |    count(DISTINCT event_type) AS r, count(DISTINCT dow) AS c,
@@ -2338,10 +2335,7 @@ private[operators] trait StatsTestOps extends StatsOpsBase {
         |FROM s a JOIN s b ON a.event_type < b.event_type
         |ORDER BY type_a, type_b""".stripMargin)),
     Key("stats_hodges_lehmann", statsHodgesLehmann, Some(
-      """WITH daily AS (
-        |  SELECT CAST(CAST(ts AS TIMESTAMP) AS DATE) AS day,
-        |    CAST(sum(CAST("value" AS DECIMAL(18,2))) AS DOUBLE) AS v
-        |  FROM events GROUP BY 1),
+      duckDayTotals + """
         |p AS (SELECT (a.v + b.v) / 2 AS walsh
         |      FROM daily a JOIN daily b ON a.day <= b.day),
         |pr AS (SELECT walsh, row_number() OVER (ORDER BY walsh) AS rn,
@@ -2368,21 +2362,7 @@ private[operators] trait StatsTestOps extends StatsOpsBase {
         |FROM m a, m b WHERE a.event_type < b.event_type
         |ORDER BY type_a, type_b""".stripMargin)),
     Key("stats_chi2", statsChi2, Some(
-      """WITH e0 AS (
-        |  SELECT event_type,
-        |    ((CAST(ts AS DATE) - DATE '1970-01-01') % 7 + 7) % 7 AS dow
-        |  FROM events),
-        |o AS (SELECT event_type, CAST(dow AS INTEGER) AS dow,
-        |        count(*) AS o FROM e0 GROUP BY 1, 2),
-        |rt AS (SELECT event_type, CAST(sum(o) AS BIGINT) AS rt FROM o GROUP BY 1),
-        |ct AS (SELECT dow, CAST(sum(o) AS BIGINT) AS ct FROM o GROUP BY 1),
-        |n AS (SELECT CAST(sum(o) AS BIGINT) AS n FROM o),
-        |grid AS (
-        |  SELECT rt.event_type, ct.dow,
-        |    CAST(COALESCE(o.o, 0) AS BIGINT) AS o,
-        |    CAST(rt.rt AS DOUBLE) * ct.ct / n.n AS e
-        |  FROM rt CROSS JOIN ct CROSS JOIN n
-        |  LEFT JOIN o ON o.event_type = rt.event_type AND o.dow = ct.dow)
+      duckTypeDowGrid + """
         |SELECT round(sum((o - e) * (o - e) / e), 6) + 0.0 AS chi2,
         |  CAST((count(DISTINCT event_type) - 1) * (count(DISTINCT dow) - 1)
         |       AS BIGINT) AS df,

@@ -233,12 +233,8 @@ private[operators] trait StatsWindowOps extends StatsOpsBase {
   def windowGrowth(spark: SparkSession, dir: String): DataFrame = {
     val daily = ev(spark, dir).groupBy(col("event_type"), col("day"))
       .agg(sum(col("value").cast("decimal(18,2)")).cast("double").as("v"))
-    val d1 = daily.select(col("event_type"),
-      date_add(col("day"), 1).as("day"), col("v").as("v1"))
-    val d7 = daily.select(col("event_type"),
-      date_add(col("day"), 7).as("day"), col("v").as("v7"))
-    daily.join(d1, Seq("event_type", "day"), "left")
-      .join(d7, Seq("event_type", "day"), "left")
+    daily.join(calendarLag(daily, 1), Seq("event_type", "day"), "left")
+      .join(calendarLag(daily, 7), Seq("event_type", "day"), "left")
       .select(col("event_type"), col("day"), col("v").as("rev"),
         r6((col("v") - col("v1")) / col("v1") * 100).as("dod_pct"),
         r6((col("v") - col("v7")) / col("v7") * 100).as("wow_pct"))
@@ -371,11 +367,7 @@ private[operators] trait StatsWindowOps extends StatsOpsBase {
   // entity-partitioned, full frames only. ──
   def windowKeltner(spark: SparkSession, dir: String): DataFrame = {
     val wOrd = Window.partitionBy(col("event_type")).orderBy(col("day"))
-    ohlcBars(spark, dir)
-      .withColumn("rn", row_number().over(wOrd))
-      .withColumn("pc", lag(col("c"), 1).over(wOrd))
-      .withColumn("tr", greatest(col("h") - col("l"),
-        abs(col("h") - col("pc")), abs(col("l") - col("pc"))))
+    trueRangeBars(spark, dir)
       .withColumn("tpd", expr("cast(h + l + c as double) / 3"))
       .withColumn("h20",
         collect_list(col("tpd")).over(wOrd.rowsBetween(-19, 0)))
@@ -442,11 +434,7 @@ private[operators] trait StatsWindowOps extends StatsOpsBase {
   // full frames emit. ──
   def windowAtr(spark: SparkSession, dir: String): DataFrame = {
     val wOrd = Window.partitionBy(col("event_type")).orderBy(col("day"))
-    val withTr = ohlcBars(spark, dir)
-      .withColumn("rn", row_number().over(wOrd))
-      .withColumn("pc", lag(col("c"), 1).over(wOrd))
-      .withColumn("tr", greatest(col("h") - col("l"),
-        abs(col("h") - col("pc")), abs(col("l") - col("pc"))))
+    val withTr = trueRangeBars(spark, dir)
     withTr
       .withColumn("atr_c",
         sum(col("tr")).over(wOrd.rowsBetween(-13, 0)))
@@ -563,11 +551,7 @@ private[operators] trait StatsWindowOps extends StatsOpsBase {
   def windowChandelierExit(spark: SparkSession, dir: String): DataFrame = {
     val wOrd = Window.partitionBy(col("event_type")).orderBy(col("day"))
     val w22 = wOrd.rowsBetween(-21, 0)
-    ohlcBars(spark, dir)
-      .withColumn("rn", row_number().over(wOrd))
-      .withColumn("pc", lag(col("c"), 1).over(wOrd))
-      .withColumn("tr", greatest(col("h") - col("l"),
-        abs(col("h") - col("pc")), abs(col("l") - col("pc"))))
+    trueRangeBars(spark, dir)
       .withColumn("hh", max(col("h")).over(w22))
       .withColumn("atr_c", sum(col("tr")).over(w22))
       .filter(col("rn") >= 23)
@@ -842,12 +826,7 @@ private[operators] trait StatsWindowOps extends StatsOpsBase {
         |WHERE rec.rn = rec.n AND rec.n >= 11
         |ORDER BY event_type""".stripMargin)),
     Key("window_obv", windowObv, Some(
-      """WITH e AS (
-        |  SELECT event_type, CAST(CAST(ts AS TIMESTAMP) AS DATE) AS day,
-        |    epoch_us(CAST(ts AS TIMESTAMP)) AS us, event_id,
-        |    CAST(CAST("value" AS DECIMAL(18,2)) * 100 AS BIGINT) AS vc
-        |  FROM events),
-        |bars AS (SELECT event_type, day,
+      duckBarEvents + """bars AS (SELECT event_type, day,
         |    CAST(count(*) AS BIGINT) AS vol,
         |    max({'us': us, 'event_id': event_id, 'vc': vc}).vc AS c
         |  FROM e GROUP BY 1, 2),
@@ -960,12 +939,7 @@ private[operators] trait StatsWindowOps extends StatsOpsBase {
         |FROM w WHERE rn >= 14 AND hh > ll
         |ORDER BY event_type, day""".stripMargin)),
     Key("window_mfi", windowMfi, Some(
-      """WITH e AS (
-        |  SELECT event_type, CAST(CAST(ts AS TIMESTAMP) AS DATE) AS day,
-        |    epoch_us(CAST(ts AS TIMESTAMP)) AS us, event_id,
-        |    CAST(CAST("value" AS DECIMAL(18,2)) * 100 AS BIGINT) AS vc
-        |  FROM events),
-        |bars AS (SELECT event_type, day,
+      duckBarEvents + """bars AS (SELECT event_type, day,
         |    CAST(max(vc) AS BIGINT) AS h, CAST(min(vc) AS BIGINT) AS l,
         |    max({'us': us, 'event_id': event_id, 'vc': vc}).vc AS c,
         |    CAST(count(*) AS BIGINT) AS vol

@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Key
 import graft.sources.Tables
-import graft.operators.OpsHelpers.r6
+import graft.operators.OpsHelpers.{bloomWords, r6, toksCol, wordTrigrams}
 
 /** Text-analysis operators for the LLM-training-data pipeline
   * (SURVEY.md §2.10 + north star): per-language stats, token frequency,
@@ -19,9 +19,6 @@ import graft.operators.OpsHelpers.r6
   * parallel; the only shuffles are the declared groupBys.
   */
 object TextOps {
-
-  /** Lowercased whitespace tokens of `text`. */
-  private def toksCol = split(trim(lower(col("text"))), "\\s+")
 
   /** Fraction of tokens (column `toks`) that are English stopword markers,
     * rounded to 6 dp — the ONE definition shared by lang-ID, quality
@@ -438,6 +435,13 @@ object TextOps {
     // exact arm reads the shared [[unigramCounts]] memo (round 13,
     // session 3) — the MG sketch still consumes the raw occurrence
     // stream (a sketch is defined over updates, not counts)
+    exactTop10(spark, dir, mg)
+  }
+
+  /** The exact top-10 tokens of [[unigramCounts]] beside the sketch row
+    * `mg` (hh, n_total), with mg_ok its bound check. */
+  private def exactTop10(spark: SparkSession, dir: String,
+      mg: DataFrame): DataFrame =
     unigramCounts(spark, dir).filter(col("t") =!= "")
       .select(col("t").as("token"), col("cnt").as("exact_cnt"))
       .orderBy(desc("exact_cnt"), col("token"))
@@ -445,7 +449,6 @@ object TextOps {
       .crossJoin(broadcast(mg))
       .select(col("token").as("term"), col("exact_cnt"), mgOkCol.as("mg_ok"))
       .orderBy(desc("exact_cnt"), col("term"))
-  }
 
   // ── heavy-hitters summary STORE rollup: per-source Misra-Gries
   // summaries (modeling the per-shard sketch store an ingest job
@@ -476,13 +479,7 @@ object TextOps {
         .agg(coalesce(sum(col("cnt")), lit(0L)).as("n_total"))))
     // exact arm reads the shared [[unigramCounts]] memo (round 13,
     // session 3), as in [[heavyHitters]]
-    unigramCounts(spark, dir).filter(col("t") =!= "")
-      .select(col("t").as("token"), col("cnt").as("exact_cnt"))
-      .orderBy(desc("exact_cnt"), col("token"))
-      .limit(10)
-      .crossJoin(broadcast(mg))
-      .select(col("token").as("term"), col("exact_cnt"), mgOkCol.as("mg_ok"))
-      .orderBy(desc("exact_cnt"), col("term"))
+    exactTop10(spark, dir, mg)
   }
 
   // ── point-frequency sketch store (Count-Min — the fourth member of the
@@ -716,15 +713,19 @@ object TextOps {
   // once, shuffled only for the final distinct on doc_id — and at scale
   // that distinct collapses into the per-partition dedup of a
   // already-doc-partitioned shingle stream. ──
+  /** (doc_id, shingle) for each word 5-gram of each document. */
+  private def docFiveGrams(spark: SparkSession, dir: String): DataFrame =
+    Tables.documents(spark, dir)
+      .withColumn("toks", toksCol)
+      .select(col("doc_id"), explode(expr(FiveGrams)).as("shingle"))
+
   /** Exact-shingle contamination hit set (doc_id, contaminated=true),
     * memoized per corpus (round 13): the doc-id-sized flag relation both
     * `decontaminate` and `pipeline_training_corpus` derive from — the
     * training-side shingle pass ran once per consumer before. */
   private def contamExactHits(spark: SparkSession, dir: String): DataFrame =
     SharedCorpus.memo(spark, "contam_exact_hits", dir, "documents") {
-      val sh = Tables.documents(spark, dir)
-        .withColumn("toks", toksCol)
-        .select(col("doc_id"), explode(expr(FiveGrams)).as("shingle"))
+      val sh = docFiveGrams(spark, dir)
       val evalSet = sh.filter(col("doc_id") % 97 === 0)
         .select("shingle").distinct()
       sh.filter(col("doc_id") % 97 =!= 0)
@@ -765,19 +766,13 @@ object TextOps {
   // against this tiny candidate stream. No false negatives by
   // construction, so candidates ∩ eval = exact hits. ──
   def decontaminateBloom(spark: SparkSession, dir: String): DataFrame = {
-    val sh = Tables.documents(spark, dir)
-      .withColumn("toks", toksCol)
-      .select(col("doc_id"), explode(expr(FiveGrams)).as("shingle"))
+    val sh = docFiveGrams(spark, dir)
     val evalSet = sh.filter(col("doc_id") % 97 === 0)
       .select("shingle").distinct()
 
     val positions = BloomSeeds.map(s =>
       expr(s"pmod(xxhash64(shingle, $s), ${BloomBits}L)"))
-    val bloom = evalSet
-      .select(explode(array(positions: _*)).as("pos"))
-      .select(expr("CAST(pos div 64 AS INT)").as("word"),
-        expr("shiftleft(CAST(1 AS BIGINT), CAST(pos % 64 AS INT))").as("mask"))
-      .groupBy("word").agg(expr("bit_or(mask)").as("bits"))
+    val bloom = bloomWords(evalSet, positions)
       .agg(map_from_entries(collect_list(struct(col("word"), col("bits"))))
         .as("bloom"))
 
@@ -855,14 +850,7 @@ object TextOps {
   // hierarchically), then shingle-keyed join back (AQE skew-split handles
   // the hot boilerplate keys). Per-doc state is one count pair. ──
   def textNgramNovelty(spark: SparkSession, dir: String): DataFrame = {
-    val trigrams =
-      "CASE WHEN size(toks) >= 3 THEN transform(sequence(1, size(toks) - 2)," +
-        " i -> concat(toks[i-1], ' ', toks[i], ' ', toks[i+1]))" +
-        " ELSE CAST(array() AS ARRAY<STRING>) END"
-    val sh = Tables.documents(spark, dir)
-      .withColumn("toks", toksCol)
-      .select(col("doc_id"), explode(expr(trigrams)).as("shingle"))
-      .distinct()
+    val sh = wordTrigrams(Tables.documents(spark, dir)).distinct()
     // no shingle-keyed join back (round 13): a df = 1 shingle belongs to
     // exactly ONE document, so min(doc_id) over the distinct pairs IS the
     // owner — per-doc unique counts come from the df frame directly and
@@ -1085,14 +1073,8 @@ object TextOps {
   // second groupBy reuses the same doc_id-clustered shuffle output, so
   // at 100 TB this is one pass over the corpus with no cross-doc joins. ──
   def textDupNgramCoverage(spark: SparkSession, dir: String): DataFrame = {
-    val trigrams =
-      "CASE WHEN size(toks) >= 3 THEN transform(sequence(1, size(toks) - 2)," +
-        " i -> concat(toks[i-1], ' ', toks[i], ' ', toks[i+1]))" +
-        " ELSE CAST(array() AS ARRAY<STRING>) END"
-    Tables.documents(spark, dir)
-      .withColumn("toks", toksCol)
-      .select(col("doc_id"), explode(expr(trigrams)).as("g"))
-      .groupBy(col("doc_id"), col("g"))
+    wordTrigrams(Tables.documents(spark, dir))
+      .groupBy(col("doc_id"), col("shingle"))
       .agg(count(lit(1)).as("c"))
       .groupBy(col("doc_id"))
       .agg(sum(col("c")).as("n_trigrams"),
@@ -1720,7 +1702,7 @@ object TextOps {
     val train = docs.filter(col("doc_id") % 97 =!= 0)
       .unionByName(planted)
     def sh5(d: DataFrame): DataFrame = d
-      .withColumn("toks", split(trim(lower(col("text"))), "\\s+"))
+      .withColumn("toks", toksCol)
       .select(col("doc_id"), explode(expr(FiveGrams)).as("shingle"))
       // value-wise a no-op (concat_ws never returns null) — but it makes
       // every consumer branch carry the SAME filter the shingle joins
@@ -1920,14 +1902,14 @@ object TextOps {
        |  SELECT doc_id,
        |    $duckQualityExpr
        |  FROM (SELECT doc_id,
-       |          string_split_regex(trim(lower(text)), '\\s+') AS toks,
+       |          ${OracleSql.Toks} AS toks,
        |          CAST(length(text) AS INTEGER) AS chars,
        |          CAST(length(regexp_replace(text, '[^a-zA-Z0-9 ]', '', 'g')) AS INTEGER) AS alnum_chars
        |        FROM documents) tq)""".stripMargin
 
   /** One oracle for both decontamination keys (exact and Bloom form). */
   private val DecontaminateSql =
-    """WITH t AS (SELECT doc_id, string_split_regex(trim(lower(text)), '\s+') AS toks
+    s"""WITH t AS (SELECT doc_id, ${OracleSql.Toks} AS toks
       |           FROM documents),
       |sh AS (SELECT doc_id, array_to_string(toks[i:i+4], ' ') AS shingle
       |       FROM (SELECT doc_id, toks, unnest(range(1, len(toks) - 3)) AS i
@@ -1943,9 +1925,9 @@ object TextOps {
     * reused verbatim by text_nb_lang and eval_nb_confusion so the
     * evaluated model IS the shipped model. */
   private val duckNbCtes: String =
-    """WITH f AS (
+    s"""WITH f AS (
       |  SELECT doc_id, lang,
-      |    unnest(string_split_regex(trim(lower(text)), '\s+')) AS tok
+      |    unnest(${OracleSql.Toks}) AS tok
       |  FROM documents),
       |ff AS (SELECT * FROM f WHERE tok <> ''),
       |pr AS (SELECT lang AS l, count(*) AS nd FROM documents GROUP BY 1),
@@ -1977,7 +1959,7 @@ object TextOps {
     * oracles — rebuilds the SAME planted half-copy twins as
     * [[contamFrames]]. */
   private val duckSh5: String =
-    """WITH ev AS (SELECT doc_id, text, source FROM documents
+    s"""WITH ev AS (SELECT doc_id, text, source FROM documents
       |            WHERE doc_id % 97 = 0),
       |tr AS (SELECT doc_id, text, source FROM documents
       |       WHERE doc_id % 97 <> 0
@@ -1989,21 +1971,63 @@ object TextOps {
       |sht AS (SELECT DISTINCT doc_id,
       |    array_to_string(toks[i:i+4], ' ') AS shingle
       |  FROM (SELECT doc_id,
-      |          string_split_regex(trim(lower(text)), '\s+') AS toks
+      |          ${OracleSql.Toks} AS toks
       |        FROM tr) x,
       |       LATERAL (SELECT unnest(range(1, len(toks) - 3)) AS i)
       |  WHERE len(toks) >= 5),
       |she AS (SELECT DISTINCT doc_id,
       |    array_to_string(toks[i:i+4], ' ') AS shingle
       |  FROM (SELECT doc_id,
-      |          string_split_regex(trim(lower(text)), '\s+') AS toks
+      |          ${OracleSql.Toks} AS toks
       |        FROM ev) x,
       |       LATERAL (SELECT unnest(range(1, len(toks) - 3)) AS i)
       |  WHERE len(toks) >= 5),
       |""".stripMargin
 
+  /** [[duckSh5]]'s overlap CTEs: each training doc's shingle count
+    * `ts(doc_id, n_sh)` and the shingles it shares with each eval doc
+    * `iv(doc_id, eval_id, n_shared)`. Comma-terminated. */
+  private val duckSh5Overlap: String =
+    """ts AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_sh
+      |       FROM sht GROUP BY 1),
+      |iv AS (SELECT a.doc_id, b.doc_id AS eval_id,
+      |         CAST(count(*) AS BIGINT) AS n_shared
+      |       FROM sht a JOIN she b ON a.shingle = b.shingle
+      |       GROUP BY 1, 2),""".stripMargin
+
+  /** The select items of the quality oracles' `t` CTE: a document's
+    * tokens, characters and alphanumeric characters, on three indented
+    * lines. */
+  private val duckQualityInputs: String =
+    s"""    ${OracleSql.Toks} AS toks,
+       |    CAST(length(text) AS INTEGER) AS chars,
+       |    CAST(length(regexp_replace(text, '[^a-zA-Z0-9 ]', '', 'g')) AS INTEGER) AS alnum_chars""".stripMargin
+
+  /** The repetition-gate CTEs over `t(doc_id, toks)`: each document's
+    * token and distinct-token counts `base(doc_id, n, nd)`, its bigrams
+    * `bg` and its most frequent bigram's count `topbg(doc_id, top)`. Ends
+    * at `GROUP BY 1)`. */
+  private val duckRepetitionCounts: String =
+    """base AS (SELECT doc_id, len(toks) AS n, len(list_distinct(toks)) AS nd FROM t),
+      |bg AS (SELECT doc_id, array_to_string(toks[i:i+1], ' ') AS b
+      |       FROM (SELECT doc_id, toks, unnest(range(1, len(toks))) AS i
+      |             FROM t WHERE len(toks) >= 2)),
+      |topbg AS (SELECT doc_id, max(c) AS top FROM
+      |            (SELECT doc_id, b, count(*) AS c FROM bg GROUP BY 1, 2)
+      |          GROUP BY 1)""".stripMargin
+
   private val duckRakeStops: String =
     RakeStops.map(s => s"'$s'").mkString(", ")
+
+  /** The exact top-10 token oracle of the sketch keys, with the bound
+    * the sketch must meet asserted TRUE as column `ok`. */
+  private def duckTopTokens(ok: String): String =
+    s"""SELECT token AS term, CAST(count(*) AS BIGINT) AS exact_cnt,
+       |  TRUE AS $ok FROM (
+       |  SELECT unnest(${OracleSql.Toks}) AS token
+       |  FROM documents) t
+       |WHERE token <> '' GROUP BY token
+       |ORDER BY exact_cnt DESC, term LIMIT 10""".stripMargin
 
   val keys: Seq[Key] = Seq(
     Key("text_keyphrase_rake", textKeyphraseRake, Some(
@@ -2042,8 +2066,8 @@ object TextOps {
          |SELECT phrase, n_occurrences, round(s, 6) + 0.0 AS score
          |FROM f ORDER BY score DESC, phrase LIMIT 30""".stripMargin)),
     Key("text_oov_rate", textOovRate, Some(
-      """WITH tk AS (SELECT doc_id,
-        |    unnest(string_split_regex(trim(lower(text)), '\s+')) AS tok
+      s"""WITH tk AS (SELECT doc_id,
+        |    unnest(${OracleSql.Toks}) AS tok
         |  FROM documents),
         |f AS (SELECT * FROM tk WHERE tok <> ''),
         |v AS (SELECT tok FROM
@@ -2057,12 +2081,7 @@ object TextOps {
         |FROM f LEFT JOIN v ON f.tok = v.tok
         |GROUP BY 1 ORDER BY doc_id""".stripMargin)),
     Key("decontaminate_near", decontaminateNear, Some(duckSh5 +
-      """ts AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_sh
-        |       FROM sht GROUP BY 1),
-        |iv AS (SELECT a.doc_id, b.doc_id AS eval_id,
-        |         CAST(count(*) AS BIGINT) AS n_shared
-        |       FROM sht a JOIN she b ON a.shingle = b.shingle
-        |       GROUP BY 1, 2),
+      duckSh5Overlap + """
         |sc AS (SELECT iv.doc_id, iv.eval_id, iv.n_shared, ts.n_sh,
         |         round(CAST(iv.n_shared AS DOUBLE) / ts.n_sh, 6) + 0.0
         |           AS cont6
@@ -2076,12 +2095,7 @@ object TextOps {
     Key("decontaminate_report", decontaminateReport, Some(duckSh5 +
       """ex AS (SELECT DISTINCT doc_id FROM sht
         |       WHERE shingle IN (SELECT shingle FROM she)),
-        |ts AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_sh
-        |       FROM sht GROUP BY 1),
-        |iv AS (SELECT a.doc_id, b.doc_id AS eval_id,
-        |         CAST(count(*) AS BIGINT) AS n_shared
-        |       FROM sht a JOIN she b ON a.shingle = b.shingle
-        |       GROUP BY 1, 2),
+        |""".stripMargin + duckSh5Overlap + """
         |nr AS (SELECT DISTINCT iv.doc_id
         |       FROM iv JOIN ts USING (doc_id)
         |       WHERE round(CAST(iv.n_shared AS DOUBLE) / ts.n_sh, 6)
@@ -2100,8 +2114,8 @@ object TextOps {
         |LEFT JOIN nr ON d.doc_id = nr.doc_id
         |GROUP BY 1 ORDER BY d.source""".stripMargin)),
     Key("text_readability", textReadability, Some(
-      """WITH d AS (SELECT doc_id, text,
-        |    list_filter(string_split_regex(trim(lower(text)), '\s+'),
+      s"""WITH d AS (SELECT doc_id, text,
+        |    list_filter(${OracleSql.Toks},
         |      x -> x <> '') AS toks
         |  FROM documents),
         |c AS (SELECT doc_id,
@@ -2144,7 +2158,7 @@ object TextOps {
         |FROM g""".stripMargin)),
     Key("eval_langid_mcc", evalLangidMcc, Some(
       s"""WITH t AS (SELECT doc_id, lang,
-         |    string_split_regex(trim(lower(text)), '\\s+') AS toks
+         |    ${OracleSql.Toks} AS toks
          |  FROM documents),
          |p AS (SELECT lang = 'en' AS apos,
          |    round(CAST(len(list_filter(toks, x -> x IN ($duckMarkers)))
@@ -2172,10 +2186,10 @@ object TextOps {
          |    END, 6) + 0.0 AS mcc
          |FROM d""".stripMargin)),
     Key("text_freq_drift", textFreqDrift, Some(
-      """WITH mid AS (SELECT CAST(floor(quantile_cont(doc_id, 0.5))
+      s"""WITH mid AS (SELECT CAST(floor(quantile_cont(doc_id, 0.5))
         |             AS BIGINT) AS mid FROM documents),
         |t AS (SELECT d.doc_id <= m.mid AS is_a,
-        |    unnest(string_split_regex(trim(lower(text)), '\s+')) AS tok
+        |    unnest(${OracleSql.Toks}) AS tok
         |  FROM documents d CROSS JOIN mid m),
         |c AS (SELECT tok,
         |    CAST(sum(CASE WHEN is_a THEN 1 ELSE 0 END) AS BIGINT) AS ca,
@@ -2234,9 +2248,9 @@ object TextOps {
         |    AS entropy_bits
         |FROM s ORDER BY doc_id""".stripMargin)),
     Key("text_mattr", textMattr, Some(
-      """WITH t AS (
+      s"""WITH t AS (
         |  SELECT doc_id,
-        |    string_split_regex(trim(lower(text)), '\s+') AS toks
+        |    ${OracleSql.Toks} AS toks
         |  FROM documents),
         |f AS (SELECT doc_id,
         |    CAST(len(toks) AS INTEGER) AS n_words,
@@ -2257,7 +2271,7 @@ object TextOps {
     Key("text_quality_gopher", textQualityGopher, Some(
       s"""WITH t AS (
          |  SELECT doc_id, text,
-         |    string_split_regex(trim(lower(text)), '\\s+') AS toks
+         |    ${OracleSql.Toks} AS toks
          |  FROM documents),
          |f AS (SELECT doc_id,
          |    CAST(len(toks) AS INTEGER) AS n_words,
@@ -2284,8 +2298,8 @@ object TextOps {
          |    AND n_stop_distinct >= 2 AS pass
          |FROM f ORDER BY doc_id""".stripMargin)),
     Key("text_lm_score", textLmScore, Some(
-      """WITH t AS (
-        |  SELECT doc_id, string_split_regex(trim(lower(text)), '\s+') AS toks
+      s"""WITH t AS (
+        |  SELECT doc_id, ${OracleSql.Toks} AS toks
         |  FROM documents),
         |big AS (
         |  SELECT doc_id, z[1] AS w1, z[2] AS w2
@@ -2308,8 +2322,8 @@ object TextOps {
         |  round(exp(-avg_logp), 6) + 0.0 AS ppl
         |FROM m ORDER BY doc_id""".stripMargin)),
     Key("text_collocations", textCollocations, Some(
-      """WITH t AS (
-        |  SELECT string_split_regex(trim(lower(text)), '\s+') AS toks
+      s"""WITH t AS (
+        |  SELECT ${OracleSql.Toks} AS toks
         |  FROM documents),
         |uni AS (
         |  SELECT t AS tok, count(*) AS cnt
@@ -2333,10 +2347,10 @@ object TextOps {
         |CROSS JOIN nb CROSS JOIN nu
         |ORDER BY tok_a, tok_b""".stripMargin)),
     Key("source_overlap", sourceOverlap, Some(
-      """WITH st AS (
+      s"""WITH st AS (
         |  SELECT DISTINCT source, token FROM (
         |    SELECT source,
-        |      unnest(string_split_regex(trim(lower(text)), '\s+')) AS token
+        |      unnest(${OracleSql.Toks}) AS token
         |    FROM documents)),
         |sizes AS (SELECT source, count(*) AS sz FROM st GROUP BY 1),
         |inter AS (
@@ -2351,7 +2365,7 @@ object TextOps {
         |JOIN sizes sb ON i.src_b = sb.source
         |ORDER BY src_a, src_b""".stripMargin)),
     Key("text_span_dedup", textSpanDedup, Some(
-      """WITH t AS (SELECT doc_id, string_split_regex(trim(lower(text)), '\s+') AS toks
+      s"""WITH t AS (SELECT doc_id, ${OracleSql.Toks} AS toks
         |           FROM documents),
         |sp AS (SELECT doc_id, array_to_string(toks[i:i+7], ' ') AS span
         |       FROM (SELECT doc_id, toks, unnest(range(1, len(toks) - 6)) AS i
@@ -2369,7 +2383,7 @@ object TextOps {
         |FROM documents d LEFT JOIN p USING (doc_id)
         |ORDER BY d.doc_id""".stripMargin)),
     Key("text_block_dedup", textBlockDedup, Some(
-      """WITH t AS (SELECT doc_id, string_split_regex(trim(lower(text)), '\s+') AS toks
+      s"""WITH t AS (SELECT doc_id, ${OracleSql.Toks} AS toks
         |           FROM documents),
         |b AS (SELECT doc_id, i AS b,
         |        array_to_string(toks[i*8+1:i*8+8], ' ') AS blk
@@ -2387,16 +2401,10 @@ object TextOps {
     // the four standalone-key fragments composed in dependency order —
     // gate → decontaminate → dedup → pack; see pipelineTrainingCorpus
     Key("pipeline_training_corpus", pipelineTrainingCorpus, Some(
-      """WITH t AS (SELECT doc_id, text,
-        |             string_split_regex(trim(lower(text)), '\s+') AS toks
+      s"""WITH t AS (SELECT doc_id, text,
+        |             ${OracleSql.Toks} AS toks
         |           FROM documents),
-        |base AS (SELECT doc_id, len(toks) AS n, len(list_distinct(toks)) AS nd FROM t),
-        |bg AS (SELECT doc_id, array_to_string(toks[i:i+1], ' ') AS b
-        |       FROM (SELECT doc_id, toks, unnest(range(1, len(toks))) AS i
-        |             FROM t WHERE len(toks) >= 2)),
-        |topbg AS (SELECT doc_id, max(c) AS top FROM
-        |            (SELECT doc_id, b, count(*) AS c FROM bg GROUP BY 1, 2)
-        |          GROUP BY 1),
+        |$duckRepetitionCounts,
         |gate AS (SELECT base.doc_id
         |         FROM base LEFT JOIN topbg ON base.doc_id = topbg.doc_id
         |         WHERE round((base.n - base.nd) / CAST(base.n AS DOUBLE), 6) <= 0.3
@@ -2425,8 +2433,8 @@ object TextOps {
         |  start_tok // 512 AS chunk_id, start_tok % 512 AS off_in_chunk
         |FROM c ORDER BY doc_id""".stripMargin)),
     Key("text_ngram_novelty", textNgramNovelty, Some(
-      """WITH t AS (SELECT doc_id,
-        |  string_split_regex(trim(lower(text)), '\s+') AS toks FROM documents),
+      s"""WITH t AS (SELECT doc_id,
+        |  ${OracleSql.Toks} AS toks FROM documents),
         |sh AS (SELECT DISTINCT doc_id,
         |  unnest(list_transform(range(1, greatest(len(toks) - 1, 1)),
         |    i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2])) AS shingle
@@ -2500,8 +2508,8 @@ object TextOps {
         |FROM sc JOIN cf USING (lang)
         |ORDER BY source, lang""".stripMargin)),
     Key("text_yule_k", textYuleK, Some(
-      """WITH t AS (SELECT
-        |    unnest(string_split_regex(trim(lower(text)), '\s+')) AS tok
+      s"""WITH t AS (SELECT
+        |    unnest(${OracleSql.Toks}) AS tok
         |  FROM documents),
         |c AS (SELECT tok, CAST(count(*) AS BIGINT) AS c FROM t
         |      WHERE tok <> '' GROUP BY 1),
@@ -2519,8 +2527,8 @@ object TextOps {
         |    AS herdan_c
         |FROM s""".stripMargin)),
     Key("text_burstiness", textBurstiness, Some(
-      """WITH t AS (SELECT doc_id,
-        |    unnest(string_split_regex(trim(lower(text)), '\s+')) AS tok
+      s"""WITH t AS (SELECT doc_id,
+        |    unnest(${OracleSql.Toks}) AS tok
         |  FROM documents),
         |pd AS (SELECT tok, doc_id, CAST(count(*) AS BIGINT) AS c
         |       FROM t WHERE tok <> '' GROUP BY 1, 2),
@@ -2583,8 +2591,8 @@ object TextOps {
         |  round(acc, 6) + 0.0 AS overall_accuracy
         |FROM j ORDER BY lang""".stripMargin)),
     Key("text_heaps_law", textHeapsLaw, Some(
-      """WITH t AS (SELECT doc_id,
-        |  unnest(string_split_regex(trim(lower(text)), '\s+')) AS tok
+      s"""WITH t AS (SELECT doc_id,
+        |  unnest(${OracleSql.Toks}) AS tok
         |  FROM documents),
         |f AS (SELECT doc_id, tok FROM t WHERE tok <> ''),
         |fd AS (SELECT tok, min(doc_id) AS doc_id FROM f GROUP BY 1),
@@ -2598,8 +2606,8 @@ object TextOps {
         |             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
         |ORDER BY doc_id""".stripMargin)),
     Key("text_chunk_overlap", textChunkOverlap, Some(
-      """WITH t AS (SELECT doc_id,
-        |  len(string_split_regex(trim(lower(text)), '\s+')) AS n
+      s"""WITH t AS (SELECT doc_id,
+        |  len(${OracleSql.Toks}) AS n
         |  FROM documents),
         |f AS (SELECT doc_id, n, 1 + greatest(0, (n - 9) // 24) AS n_chunks
         |      FROM t WHERE n > 0),
@@ -2609,7 +2617,7 @@ object TextOps {
         |  CAST(least(32, n - k * 24) AS BIGINT) AS chunk_len
         |FROM c ORDER BY doc_id, chunk_id""".stripMargin)),
     Key("text_zipf_fit", textZipfFit, Some(
-      """WITH tok AS (SELECT unnest(string_split_regex(trim(lower(text)), '\s+')) AS token
+      s"""WITH tok AS (SELECT unnest(${OracleSql.Toks}) AS token
         |            FROM documents),
         |cnts AS (SELECT token, count(*) AS cnt FROM tok
         |         WHERE token <> '' GROUP BY 1),
@@ -2623,8 +2631,8 @@ object TextOps {
         |  round(regr_r2(y, x), 6) + 0.0 AS r2
         |FROM top""".stripMargin)),
     Key("text_dup_ngram_coverage", textDupNgramCoverage, Some(
-      """WITH t AS (SELECT doc_id,
-        |  string_split_regex(trim(lower(text)), '\s+') AS toks FROM documents),
+      s"""WITH t AS (SELECT doc_id,
+        |  ${OracleSql.Toks} AS toks FROM documents),
         |g AS (SELECT doc_id,
         |  unnest(list_transform(range(1, greatest(len(toks) - 1, 1)),
         |    i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2])) AS g
@@ -2642,15 +2650,9 @@ object TextOps {
     // strongest possible equivalence check for the prefilter.
     Key("decontaminate_bloom", decontaminateBloom, Some(DecontaminateSql)),
     Key("text_repetition", textRepetition, Some(
-      """WITH t AS (SELECT doc_id, string_split_regex(trim(lower(text)), '\s+') AS toks
+      s"""WITH t AS (SELECT doc_id, ${OracleSql.Toks} AS toks
         |           FROM documents),
-        |base AS (SELECT doc_id, len(toks) AS n, len(list_distinct(toks)) AS nd FROM t),
-        |bg AS (SELECT doc_id, array_to_string(toks[i:i+1], ' ') AS b
-        |       FROM (SELECT doc_id, toks, unnest(range(1, len(toks))) AS i
-        |             FROM t WHERE len(toks) >= 2)),
-        |topbg AS (SELECT doc_id, max(c) AS top FROM
-        |            (SELECT doc_id, b, count(*) AS c FROM bg GROUP BY 1, 2)
-        |          GROUP BY 1)
+        |$duckRepetitionCounts
         |SELECT base.doc_id,
         |  round((base.n - base.nd) / CAST(base.n AS DOUBLE), 6) AS dup_tok_frac,
         |  round(COALESCE(topbg.top, 0) / CAST(GREATEST(base.n - 1, 1) AS DOUBLE), 6)
@@ -2668,32 +2670,17 @@ object TextOps {
     // "capacity > vocabulary ⇒ exact" oracle broke at sf≈1 where the
     // inflated vocabulary passes the capacity)
     Key("heavy_hitters", heavyHitters, Some(
-      """SELECT token AS term, CAST(count(*) AS BIGINT) AS exact_cnt,
-        |  TRUE AS mg_ok FROM (
-        |  SELECT unnest(string_split_regex(trim(lower(text)), '\s+')) AS token
-        |  FROM documents) t
-        |WHERE token <> '' GROUP BY token
-        |ORDER BY exact_cnt DESC, term LIMIT 10""".stripMargin)),
+      duckTopTokens("mg_ok"))),
     Key("heavy_hitters_merge", heavyHittersMerge, Some(
-      """SELECT token AS term, CAST(count(*) AS BIGINT) AS exact_cnt,
-        |  TRUE AS mg_ok FROM (
-        |  SELECT unnest(string_split_regex(trim(lower(text)), '\s+')) AS token
-        |  FROM documents) t
-        |WHERE token <> '' GROUP BY token
-        |ORDER BY exact_cnt DESC, term LIMIT 10""".stripMargin)),
+      duckTopTokens("mg_ok"))),
     // invariant oracle (round 11): exact top-10 verified exactly; the CMS
     // estimate's one-sided εN bound is a boolean DuckDB asserts TRUE
     Key("count_min_freq", countMinFreq, Some(
-      """SELECT token AS term, CAST(count(*) AS BIGINT) AS exact_cnt,
-        |  TRUE AS cms_ok FROM (
-        |  SELECT unnest(string_split_regex(trim(lower(text)), '\s+')) AS token
-        |  FROM documents) t
-        |WHERE token <> '' GROUP BY token
-        |ORDER BY exact_cnt DESC, term LIMIT 10""".stripMargin)),
+      duckTopTokens("cms_ok"))),
     Key("sample_token_budget", sampleTokenBudget, Some(
-      """WITH d AS (
+      s"""WITH d AS (
         |  SELECT doc_id, lang,
-        |    CAST(len(string_split_regex(trim(lower(text)), '\s+'))
+        |    CAST(len(${OracleSql.Toks})
         |      AS BIGINT) AS n_toks
         |  FROM documents),
         |nl AS (SELECT CAST(count(DISTINCT lang) AS BIGINT) AS n_langs
@@ -2714,9 +2701,9 @@ object TextOps {
         |    AS utilization
         |FROM g ORDER BY lang""".stripMargin)),
     Key("pack_greedy_bins", packGreedyBins, Some(
-      """WITH RECURSIVE t AS (
+      s"""WITH RECURSIVE t AS (
         |  SELECT doc_id,
-        |    CAST(len(string_split_regex(trim(lower(text)), '\s+'))
+        |    CAST(len(${OracleSql.Toks})
         |      AS BIGINT) AS n_toks
         |  FROM documents),
         |bd AS (SELECT CAST(min(doc_id) AS BIGINT) AS lo,
@@ -2760,9 +2747,9 @@ object TextOps {
         |FROM af FULL JOIN ov o ON o.bkt = af.bkt
         |ORDER BY shard""".stripMargin)),
     Key("pack_sequences", packSequences, Some(
-      """WITH t AS (
+      s"""WITH t AS (
         |  SELECT doc_id,
-        |    CAST(len(string_split_regex(trim(lower(text)), '\s+')) AS BIGINT) AS n_toks
+        |    CAST(len(${OracleSql.Toks}) AS BIGINT) AS n_toks
         |  FROM documents),
         |c AS (
         |  SELECT doc_id, n_toks,
@@ -2780,14 +2767,14 @@ object TextOps {
     // identical formula text, op for op; len()/list_filter() are the
     // tokenizer twins; ln agreement is inside the 1e-9 snap
     Key("text_bm25", textBm25, Some(
-      """WITH d AS (
+      s"""WITH d AS (
         |  SELECT doc_id,
-        |    len(string_split_regex(trim(lower(text)), '\s+')) AS dl,
-        |    len(list_filter(string_split_regex(trim(lower(text)), '\s+'),
+        |    len(${OracleSql.Toks}) AS dl,
+        |    len(list_filter(${OracleSql.Toks},
         |        x -> x = 'spark')) AS tf_spark,
-        |    len(list_filter(string_split_regex(trim(lower(text)), '\s+'),
+        |    len(list_filter(${OracleSql.Toks},
         |        x -> x = 'join')) AS tf_join,
-        |    len(list_filter(string_split_regex(trim(lower(text)), '\s+'),
+        |    len(list_filter(${OracleSql.Toks},
         |        x -> x = 'vector')) AS tf_vector
         |  FROM documents),
         |s AS (SELECT count(*) AS n_docs, sum(dl) AS sum_dl,
@@ -2809,8 +2796,8 @@ object TextOps {
         |  9) AS bm25
         |FROM d, s ORDER BY bm25 DESC, doc_id LIMIT 20""".stripMargin)),
     Key("text_tfidf", textTfidf, Some(
-      """WITH tokens AS (
-        |  SELECT doc_id, unnest(string_split_regex(trim(lower(text)), '\s+')) AS term
+      s"""WITH tokens AS (
+        |  SELECT doc_id, unnest(${OracleSql.Toks}) AS term
         |  FROM documents),
         |tf AS (SELECT doc_id, term, count(*) AS tf FROM tokens
         |       WHERE term <> '' GROUP BY doc_id, term),
@@ -2832,10 +2819,10 @@ object TextOps {
          |    FROM documents) t WHERE rn = 1),
          |scored AS (
          |  SELECT lang,
-         |    CAST(len(string_split_regex(trim(lower(text)), '\\s+')) AS INTEGER) AS n_toks,
-         |    round(CAST(len(list_filter(string_split_regex(trim(lower(text)), '\\s+'),
+         |    CAST(len(${OracleSql.Toks}) AS INTEGER) AS n_toks,
+         |    round(CAST(len(list_filter(${OracleSql.Toks},
          |      x -> x IN ($duckMarkers))) AS DOUBLE) /
-         |      len(string_split_regex(trim(lower(text)), '\\s+')), 6) AS stop_ratio
+         |      len(${OracleSql.Toks}), 6) AS stop_ratio
          |  FROM dedup)
          |SELECT lang, count(*) AS kept_docs,
          |  CAST(sum(n_toks) AS BIGINT) AS kept_tokens,
@@ -2876,12 +2863,12 @@ object TextOps {
         |  CAST(sum(n_chars) AS DOUBLE) / count(n_chars) AS avg_chars
         |FROM documents GROUP BY lang ORDER BY lang""".stripMargin)),
     Key("text_tokens", textTokens, Some(
-      """SELECT token, count(*) AS cnt FROM (
-        |  SELECT unnest(string_split_regex(trim(lower(text)), '\s+')) AS token
+      s"""SELECT token, count(*) AS cnt FROM (
+        |  SELECT unnest(${OracleSql.Toks}) AS token
         |  FROM documents) t
         |WHERE token <> '' GROUP BY token ORDER BY cnt DESC, token LIMIT 20""".stripMargin)),
     Key("text_lang_id", textLangId, Some(
-      s"""WITH t AS (SELECT doc_id, string_split_regex(trim(lower(text)), '\\s+') AS toks FROM documents)
+      s"""WITH t AS (SELECT doc_id, ${OracleSql.Toks} AS toks FROM documents)
          |SELECT doc_id,
          |  round(CAST(len(list_filter(toks, t -> t IN ($duckMarkers))) AS DOUBLE) / len(toks), 6) AS marker_ratio,
          |  CASE WHEN round(CAST(len(list_filter(toks, t -> t IN ($duckMarkers))) AS DOUBLE) / len(toks), 6) >= 0.10
@@ -2890,9 +2877,7 @@ object TextOps {
     Key("text_quality", textQuality, Some(
       s"""WITH t AS (
          |  SELECT doc_id, text,
-         |    string_split_regex(trim(lower(text)), '\\s+') AS toks,
-         |    CAST(length(text) AS INTEGER) AS chars,
-         |    CAST(length(regexp_replace(text, '[^a-zA-Z0-9 ]', '', 'g')) AS INTEGER) AS alnum_chars
+         |$duckQualityInputs
          |  FROM documents)
          |SELECT doc_id, CAST(len(toks) AS INTEGER) AS n_toks,
          |  round(CAST(chars - alnum_chars AS DOUBLE) / chars, 6) AS punct_ratio,
@@ -2903,9 +2888,7 @@ object TextOps {
     Key("sample_quota", sampleQuota, Some(
       s"""WITH t AS (
          |  SELECT doc_id, source, text,
-         |    string_split_regex(trim(lower(text)), '\\s+') AS toks,
-         |    CAST(length(text) AS INTEGER) AS chars,
-         |    CAST(length(regexp_replace(text, '[^a-zA-Z0-9 ]', '', 'g')) AS INTEGER) AS alnum_chars
+         |$duckQualityInputs
          |  FROM documents),
          |q AS (SELECT doc_id, source,
          |  $duckQualityExpr
@@ -2918,9 +2901,7 @@ object TextOps {
     Key("text_quality_buckets", textQualityBuckets, Some(
       s"""WITH t AS (
          |  SELECT doc_id, text,
-         |    string_split_regex(trim(lower(text)), '\\s+') AS toks,
-         |    CAST(length(text) AS INTEGER) AS chars,
-         |    CAST(length(regexp_replace(text, '[^a-zA-Z0-9 ]', '', 'g')) AS INTEGER) AS alnum_chars
+         |$duckQualityInputs
          |  FROM documents),
          |q AS (SELECT doc_id,
          |  $duckQualityExpr
@@ -2934,12 +2915,12 @@ object TextOps {
          |  round(CAST(sum(CAST(quality AS DECIMAL(18,6))) AS DOUBLE) / count(*), 6) AS avg_quality
          |FROM q, th GROUP BY bucket ORDER BY bucket""".stripMargin)),
     Key("text_token_count", textTokenCount, Some(
-      """SELECT doc_id,
-        |  CAST(len(string_split_regex(trim(lower(text)), '\s+')) AS INTEGER) AS ws_tokens,
-        |  CAST(len(regexp_extract_all(text, '\w+|[^\w\s]')) AS INTEGER) AS re_tokens
+      s"""SELECT doc_id,
+        |  CAST(len(${OracleSql.Toks}) AS INTEGER) AS ws_tokens,
+        |  CAST(len(regexp_extract_all(text, '\\w+|[^\\w\\s]')) AS INTEGER) AS re_tokens
         |FROM documents ORDER BY doc_id""".stripMargin)),
     Key("text_fingerprint", textFingerprint, Some(
-      """WITH t AS (SELECT doc_id, string_split_regex(trim(lower(text)), '\s+') AS toks FROM documents),
+      s"""WITH t AS (SELECT doc_id, ${OracleSql.Toks} AS toks FROM documents),
         |tok AS (SELECT doc_id, i, toks[i] AS tok
         |        FROM (SELECT doc_id, toks, unnest(range(1, len(toks)+1)) AS i FROM t)),
         |dict AS (SELECT tok,

@@ -98,6 +98,17 @@ object TopKExec {
     heaps
   }
 
+  /** The top `k` rows per key of one partition under `mode`, unranked. */
+  def topKRows(iter: Iterator[InternalRow], keyProj: UnsafeProjection,
+      ordering: Ordering[InternalRow], k: Int,
+      mode: TopKMode): Iterator[InternalRow] = mode match {
+    case TopKMode.RowNum => topKIterator(iter, keyProj, ordering, k)
+    case TopKMode.Rank =>
+      topKClassesIterator(iter, keyProj, ordering, k, dense = false)
+    case TopKMode.DenseRank =>
+      topKClassesIterator(iter, keyProj, ordering, k, dense = true)
+  }
+
   def topKIterator(
       iter: Iterator[InternalRow],
       keyProj: UnsafeProjection,
@@ -236,13 +247,7 @@ case class PartialTopKExec(
     child.execute().mapPartitions { iter =>
       val (proj, ord) =
         (UnsafeProjection.create(ks, out), RowOrdering.create(os, out))
-      m match {
-        case TopKMode.RowNum => TopKExec.topKIterator(iter, proj, ord, kk)
-        case TopKMode.Rank =>
-          TopKExec.topKClassesIterator(iter, proj, ord, kk, dense = false)
-        case TopKMode.DenseRank =>
-          TopKExec.topKClassesIterator(iter, proj, ord, kk, dense = true)
-      }
+      TopKExec.topKRows(iter, proj, ord, kk, m)
     }
   }
   override protected def withNewChildInternal(c: SparkPlan): PartialTopKExec =
@@ -280,13 +285,7 @@ case class FinalTopKExec(
             TopKExec.topKClassesRankedIterator(iter, proj, ord, kk, dense = true)
         }
         it.map(toUnsafe)
-      } else m match {
-        case TopKMode.RowNum => TopKExec.topKIterator(iter, proj, ord, kk)
-        case TopKMode.Rank =>
-          TopKExec.topKClassesIterator(iter, proj, ord, kk, dense = false)
-        case TopKMode.DenseRank =>
-          TopKExec.topKClassesIterator(iter, proj, ord, kk, dense = true)
-      }
+      } else TopKExec.topKRows(iter, proj, ord, kk, m)
     }
   }
   override protected def withNewChildInternal(c: SparkPlan): FinalTopKExec =

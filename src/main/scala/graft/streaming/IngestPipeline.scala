@@ -7,6 +7,7 @@ import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.Key
+import graft.operators.OracleSql
 import graft.sources.{Layout, Tables}
 
 /** Structured-Streaming port of the reference's ingest chain
@@ -540,13 +541,13 @@ object IngestPipeline {
 
   val keys: Seq[Key] = Seq(
     Key("stream_session_window", streamSessionWindow, Some(
-      """WITH seq AS (
+      s"""WITH seq AS (
         |  SELECT user_id, CAST(ts AS TIMESTAMP) AS ts, "value",
         |    epoch_us(CAST(ts AS TIMESTAMP)) AS us, event_id
         |  FROM events),
         |flags AS (
         |  SELECT *, CASE WHEN lag(us) OVER w IS NULL
-        |      OR us - lag(us) OVER w > 1800000000 THEN 1 ELSE 0 END
+        |      OR ${OracleSql.SessionBreak} THEN 1 ELSE 0 END
         |      AS is_new
         |  FROM seq WINDOW w AS (PARTITION BY user_id ORDER BY us, event_id)),
         |sess AS (

@@ -184,6 +184,46 @@ class EagerSpec extends SparkSuite {
     assert(offenders.isEmpty, offenders.mkString(", "))
   }
 
+  test("one definition per shared rule: each rule several oracles or " +
+      "frames state is written once in src/main") {
+    val main = sources("src/main/scala")
+    assert(main.nonEmpty, "run from the repository root")
+    val code = main.map(p =>
+      text(p).replaceAll("(?m)^\\s*(?://|\\*|/\\*).*$", "")).mkString("\n")
+    def count(s: String) = s.r.findAllMatchIn(code).size
+    def quoted(s: String) = java.util.regex.Pattern.quote(s)
+    // the DuckDB tokenizer in either spelling: a plain literal's `\s`
+    // and an interpolated one's `\\s`
+    val rules = Map(
+      "the DuckDB tokenizer" ->
+        (quoted("string_split_regex(trim(lower(text)), '") + """\\{1,2}s\+'\)"""),
+      "the Spark tokenizer" -> quoted("split(trim(lower(col(\"text\"))), \"\\\\s+\")"),
+      "the session break" -> quoted("OVER w > 1800000000"),
+      "the latest-click as-of oracle" ->
+        quoted("max(CASE WHEN event_type = 'click' THEN us END) OVER ("),
+      "the subtotal oracle" -> quoted("CAST(grouping(l_returnflag) AS INTEGER)"),
+      "the subtotal frame" -> quoted("grouping(col(\"l_returnflag\")).cast(\"int\")"),
+      "the user day spine" -> quoted("sequence(d0, d1, interval 1 day)"),
+      "the trade-graph edges oracle" ->
+        quoted("SELECT DISTINCT o_custkey * 2 AS src, l_suppkey * 2 + 1 AS dst"),
+      "the MinHash oracle hash" -> quoted("((2*i + 1) * sid + 17*i + 7)"),
+      "the SimHash oracle hash" -> quoted("(sid * 1103515245 + 12345)"),
+      "the anchor sample oracle" ->
+        quoted("ORDER BY (vec_id % 2147483648) * 2654435761 % 2147483648"),
+      "the Croston oracle recursion" -> quoted("max(CASE WHEN t = 2 THEN d END)"),
+      "the weekday grid oracle" -> quoted("% 7 + 7) % 7 AS dow"),
+      "the Kaplan-Meier step" -> quoted("ln(1.0 - cast(d as double) / n_risk)"),
+      "the true range" -> quoted("abs(col(\"h\") - col(\"pc\"))"),
+      "the endpoint degree join" ->
+        quoted("deg.select(col(\"node\").as(\"u\"), col(\"d\").as(\"du\"))"),
+      "the word trigram" -> quoted("i -> concat(toks[i-1], ' ', toks[i], ' ', toks[i+1])"),
+      "the Bloom word mask" -> quoted("shiftleft(CAST(1 AS BIGINT), CAST(pos % 64 AS INT))"),
+      "the Pearson sums" -> quoted("sum(x * y).cast(\"double\").as(\"sxy\")"))
+    val restated = rules.map { case (rule, re) => rule -> count(re) }
+      .filter(_._2 != 1)
+    assert(restated.isEmpty, restated.mkString(", "))
+  }
+
   private object Tables0 {
     def docs(spark: org.apache.spark.sql.SparkSession, dir: String) =
       graft.sources.Tables.documents(spark, dir)

@@ -48,4 +48,17 @@ class RegistrySpec extends AnyFunSuite {
       SparkEntry.oracleSql)
     assert(fields.size == 449)
   }
+
+  // A change that means to alter an oracle updates this digest and says
+  // which oracles it changed; a refactor of the oracle text leaves it.
+  test("the oracle texts hash to the pinned SHA-256") {
+    val sha = java.security.MessageDigest.getInstance("SHA-256")
+    // each name and text in name order, each followed by a NUL byte
+    SparkEntry.oracleSql.toSeq.sorted.foreach { case (name, sql) =>
+      Seq(name, sql).foreach { t =>
+        sha.update(t.getBytes("UTF-8")); sha.update(0.toByte) }
+    }
+    assert(sha.digest().map(b => f"$b%02x").mkString ==
+      "c040799acd47d87d9e0bab5c2eb0828b4d7c165c2a4f00baf496b166714912bf")
+  }
 }
